@@ -192,12 +192,7 @@ object Hdfs2CassSpark {
             Console.err.println(s"[graft] rf=$declaredRf exceeds " +
               s"${nodes.length} ring nodes; planning streams at rf=$rf")
           val plan = LoaderPlan.planStreams(manifests, nodes, rf = rf)
-          val json = plan.map { case (f, hosts) =>
-            s""""$f": [${hosts.toSeq.sorted.map("\"" + _ + "\"").mkString(", ")}]"""
-          }.mkString("{", ", ", "}")
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(args.sinkDir, "_STREAM_PLAN.json"),
-            json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          LoaderPlan.writePlanJson(args.sinkDir, plan)
           Some(plan)
         case s: StaticClusterInfo if s.ring.nonEmpty =>
           // metadata was supplied but carries no Long token ring

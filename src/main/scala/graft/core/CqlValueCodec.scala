@@ -3,6 +3,10 @@ package graft.core
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.types._
+
 /**
  * Serialization of column values to Cassandra wire bytes — the rebuild of the
  * reference's polymorphic value -> ByteBuffer kernel. Semantics studied from
@@ -25,6 +29,8 @@ import java.nio.charset.StandardCharsets
  *
  * Kept OUT of the query plan until the sink or an explicit serialization
  * expression — values stay typed (Tungsten-friendly) as long as possible.
+ * At the sink, [[encoder]] and [[rowEncoder]] are the one mapping from
+ * Catalyst's internal values to these bytes; every bulk sink uses them.
  */
 object CqlValueCodec {
 
@@ -117,6 +123,82 @@ object CqlValueCodec {
   def partitionKey(values: IndexedSeq[Array[Byte]], keyIndexes: Array[Int]): Array[Byte] = {
     if (keyIndexes.length == 1) values(keyIndexes(0))
     else composite(keyIndexes.map(values(_)))
+  }
+
+  /** CQL bytes of the value at ordinal `i` of an internal row, array or
+    * struct. */
+  type Encoder = (SpecializedGetters, Int) => Array[Byte]
+
+  /**
+   * The CQL encoder for one Catalyst type, over internal values (no
+   * external Row conversion): null -> [[Empty]] at every level; scalars
+   * as above; date -> int days; timestamp and timestamp_ntz -> epoch
+   * millis, FLOORED from micros (the java.sql.Timestamp.getTime rule, so
+   * pre-1970 sub-millisecond values round toward the past); decimal ->
+   * [[serializeDecimal]]; array -> [[serializeCollection]], map ->
+   * [[serializeMap]] in the map's entry order, struct -> [[composite]],
+   * recursively. Every returned array is fresh (UnsafeRow hands out
+   * copies) or owned by an immutable value, so it may outlive a reused
+   * row. Unsupported types fail when the encoder is built.
+   */
+  def encoder(dt: DataType): Encoder = {
+    val enc: Encoder = dt match {
+      case StringType  => (g, i) => serializeString(g.getUTF8String(i).toString)
+      case LongType    => (g, i) => serializeLong(g.getLong(i))
+      case IntegerType => (g, i) => serializeInt(g.getInt(i))
+      case ShortType   => (g, i) => serializeShort(g.getShort(i))
+      case DoubleType  => (g, i) => serializeDouble(g.getDouble(i))
+      case FloatType   => (g, i) => serializeFloat(g.getFloat(i))
+      case BooleanType => (g, i) => serializeBoolean(g.getBoolean(i))
+      case BinaryType  => (g, i) => g.getBinary(i)
+      case DateType    => (g, i) => serializeInt(g.getInt(i))
+      case TimestampType | TimestampNTZType =>
+        (g, i) => serializeLong(Math.floorDiv(g.getLong(i), 1000L))
+      case d: DecimalType =>
+        (g, i) => serializeDecimal(g.getDecimal(i, d.precision, d.scale).toJavaBigDecimal)
+      case ArrayType(et, _) =>
+        val e = encoder(et)
+        (g, i) => {
+          val a = g.getArray(i)
+          serializeCollection(Array.tabulate(a.numElements())(j => e(a, j)))
+        }
+      case MapType(kt, vt, _) =>
+        val (ke, ve) = (encoder(kt), encoder(vt))
+        (g, i) => {
+          val m = g.getMap(i)
+          val (ks, vs) = (m.keyArray(), m.valueArray())
+          serializeMap(Array.tabulate(m.numElements())(j => (ke(ks, j), ve(vs, j))))
+        }
+      case st: StructType =>
+        val es = st.fields.map(f => encoder(f.dataType))
+        (g, i) => {
+          val r = g.getStruct(i, es.length)
+          composite(Array.tabulate(es.length)(j => es(j)(r, j)))
+        }
+      case other => throw new IllegalArgumentException(
+        s"cannot serialize type ${other.simpleString} to Cassandra wire bytes")
+    }
+    (g, i) => if (g.isNullAt(i)) Empty else enc(g, i)
+  }
+
+  /** A sorted-run record value: the CQL bytes of each `(ordinal, type)`
+    * column of a row, each behind a 4-byte big-endian length. */
+  def rowEncoder(columns: Seq[(Int, DataType)]): InternalRow => Array[Byte] = {
+    val ordinals = columns.map(_._1).toArray
+    val encoders = columns.map(c => encoder(c._2)).toArray
+    row => {
+      val parts = new Array[Array[Byte]](encoders.length)
+      var total = 0
+      var i = 0
+      while (i < encoders.length) {
+        parts(i) = encoders(i)(row, ordinals(i))
+        total += 4 + parts(i).length
+        i += 1
+      }
+      val bb = ByteBuffer.allocate(total)
+      parts.foreach(p => bb.putInt(p.length).put(p))
+      bb.array()
+    }
   }
 
   private val HexDigits = "0123456789ABCDEF".toCharArray

@@ -4,8 +4,10 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.Partitioner
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types._
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{CassandraTokens, CqlValueCodec}
 
@@ -116,8 +118,7 @@ object BulkSink {
 
   /** `bytes` is the LOGICAL record-stream size (what a re-parse yields);
     * `physicalBytes` is the on-disk size (what a transfer costs) — they
-    * differ only for compressed runs, whose `indexFile` is empty
-    * (sequential-only format, ADR 0001). -1 = written by a pre-r8 job.
+    * differ only for compressed runs. -1 = written by a pre-r8 job.
     * RandomPartitioner runs carry their md5 token range as 32-char hex in
     * `minTokenHex`/`maxTokenHex` (md5 tokens reach 2^127 and overflow the
     * Long fields, which such runs pin to the full range so Long-token
@@ -136,8 +137,9 @@ object BulkSink {
   /**
    * Write `df` as sorted per-token-range runs under `outDir`.
    * `keyCols` form the partition key (composite if 2+). Every column is
-   * serialized with the CQL wire codec. Returns per-partition manifests
-   * (also persisted as _MANIFEST.json).
+   * encoded by [[CqlValueCodec.rowEncoder]], the encoder the graft-bulk
+   * sink shares, so both sinks write the same bytes. Returns
+   * per-partition manifests (also persisted as _MANIFEST.json).
    */
   def writeSorted(df: DataFrame, keyCols: Seq[String], numBuckets: Int,
       outDir: String, indexInterval: Int = 128,
@@ -157,11 +159,6 @@ object BulkSink {
       case other => throw new IllegalArgumentException(
         s"unknown partitioner class: $other")
     }
-    val schema = df.schema
-    val keyIdx = keyCols.map(schema.fieldIndex).toArray
-    val serializers: Array[Row => Array[Byte]] =
-      schema.fields.map(f => rowSerializer(f, schema.fieldIndex(f.name)))
-
     Files.createDirectories(Paths.get(outDir))
 
     // distributerandomly changes ONLY the routing; the shuffle still sorts
@@ -173,11 +170,7 @@ object BulkSink {
       // are abs(md5(key)) carried as canonical 16-byte big-endian values,
       // bucketed by ceil(2^127/n) ranges, sorted unsigned-lexicographic
       // (= numeric md5 token order)
-      val keyed = df.rdd.map { row =>
-        val comps = keyIdx.map(i => serializers(i)(row))
-        val pk = if (comps.length == 1) comps(0) else CqlValueCodec.composite(comps)
-        ((CassandraTokens.md5TokenBytes(pk), pk), encodeRow(row, serializers))
-      }
+      val keyed = keyedRows(df, keyCols, CassandraTokens.md5TokenBytes)
       val partitioner: Partitioner =
         if (distributeRandomly) new RandomSpreadPartitioner(numBuckets)
         else new RandomRingPartitioner(numBuckets)
@@ -188,13 +181,7 @@ object BulkSink {
         Iterator.single(writeRandomPartition(outDir, pid, it, codec, chunkSize))
       }.collect().toSeq
     } else {
-      val keyed = df.rdd.map { row =>
-        val comps = keyIdx.map(i => serializers(i)(row))
-        val pk = if (comps.length == 1) comps(0) else CqlValueCodec.composite(comps)
-        val token = CassandraTokens.token(pk)
-        val value = encodeRow(row, serializers)
-        ((token, pk), value)
-      }
+      val keyed = keyedRows(df, keyCols, CassandraTokens.token)
       val partitioner: Partitioner =
         if (distributeRandomly) new RandomSpreadPartitioner(numBuckets)
         else new RingPartitioner(numBuckets)
@@ -286,10 +273,6 @@ object BulkSink {
     require(keyCols.nonEmpty)
     val codec = compression.map(SortedRunWriter.normalizeCodec)
     require(chunkSize >= 1024, s"chunkSize must be >= 1 KiB, got $chunkSize")
-    val schema = df.schema
-    val keyIdx = keyCols.map(schema.fieldIndex).toArray
-    val serializers: Array[Row => Array[Byte]] =
-      schema.fields.map(f => rowSerializer(f, schema.fieldIndex(f.name)))
     Files.createDirectories(Paths.get(outDir))
     val tmpPath = new java.io.File(outDir, "_salt-tmp").getAbsolutePath
     Files.createDirectories(Paths.get(tmpPath))
@@ -303,12 +286,8 @@ object BulkSink {
     val inv = new Array[Int](perm.length)
     perm.zipWithIndex.foreach { case (p, s) => inv(p) = s }
 
-    val keyed = df.rdd.map { row =>
-      val comps = keyIdx.map(i => serializers(i)(row))
-      val pk = if (comps.length == 1) comps(0) else CqlValueCodec.composite(comps)
-      ((CassandraTokens.token(pk), pk), encodeRow(row, serializers))
-    }
-    val aligned = keyed.repartitionAndSortWithinPartitions(partitioner)
+    val aligned = keyedRows(df, keyCols, CassandraTokens.token)
+      .repartitionAndSortWithinPartitions(partitioner)
     // staging is reclaimed on EVERY exit: a failed phase-1 task or merge
     // must not strand a hot range's worth of sub-run bytes under the
     // output dir across retries
@@ -381,52 +360,6 @@ object BulkSink {
     } finally rmTree(new java.io.File(tmpPath))
   }
 
-  /** Streaming cursor over one sub-run's record frames (2-byte key len +
-    * key + 4-byte value len + value); tokens recompute from the key —
-    * the run format stores none. EOF is clean ONLY at a record boundary:
-    * an EOF inside a record means a truncated sub-run (partial flush,
-    * partial visibility on a shared filesystem) and fails LOUDLY — a
-    * silent early stop would undercount the merged output. */
-  private final class RunCursor(file: java.io.File) {
-    private val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-      new java.io.FileInputStream(file), 1 << 16))
-    var token: Long = 0L
-    var key: Array[Byte] = _
-    var value: Array[Byte] = _
-    def advance(): Boolean = {
-      // the 2-byte key-length prefix is read byte-wise: readUnsignedShort
-      // throws the SAME EOFException whether 0 or 1 of its bytes remain,
-      // which would silently drop a record torn mid-prefix — only a clean
-      // EOF BEFORE the first byte is end-of-run
-      val b0 = in.read()
-      if (b0 < 0) { close(); return false }
-      val b1 = in.read()
-      if (b1 < 0) {
-        close()
-        throw new IllegalStateException(
-          s"sub-run $file is truncated mid-record (EOF inside the key-" +
-            "length prefix) — refusing to merge a partial run (the " +
-            "merged output would silently undercount)")
-      }
-      val klen = (b0 << 8) | b1
-      try {
-        key = new Array[Byte](klen); in.readFully(key)
-        val vlen = in.readInt()
-        value = new Array[Byte](vlen); in.readFully(value)
-      } catch {
-        case e: java.io.EOFException =>
-          close()
-          throw new IllegalStateException(
-            s"sub-run $file is truncated mid-record — refusing to merge " +
-              "a partial run (the merged output would silently " +
-              "undercount)", e)
-      }
-      token = CassandraTokens.token(key)
-      true
-    }
-    def close(): Unit = try in.close() catch { case _: Exception => () }
-  }
-
   /** K-way merge of one hot range's sorted sub-runs into its final
     * decorated-key-sorted run: a k-element min-heap streams the runs —
     * sequential reads, O(k) memory — and the writer's own sorted-input
@@ -440,17 +373,26 @@ object BulkSink {
       chunkSize: Int): PartitionManifest = {
     val writer = new SortedRunWriter(outDir, bucket, indexInterval, codec,
       chunkSize = chunkSize)
-    val cursors = dataFiles.map(f => new RunCursor(new java.io.File(tmpDir, f)))
+    val cursors = dataFiles.map { f =>
+      val file = new java.io.File(tmpDir, f)
+      new SortedRunWriter.RecordCursor(new java.io.BufferedInputStream(
+        new java.io.FileInputStream(file), 1 << 16), s"sub-run $file")
+    }
     try {
-      val heap = new java.util.PriorityQueue[RunCursor](
+      // heap entries carry each cursor's head token: the run format
+      // stores none, so it is recomputed once per record
+      type Head = (Long, SortedRunWriter.RecordCursor)
+      val heap = new java.util.PriorityQueue[Head](
         math.max(1, cursors.size),
-        (a: RunCursor, b: RunCursor) =>
-          CassandraTokens.compareDecorated(a.token, a.key, b.token, b.key))
-      cursors.foreach(c => if (c.advance()) { heap.add(c); () })
+        (a: Head, b: Head) =>
+          CassandraTokens.compareDecorated(a._1, a._2.key, b._1, b._2.key))
+      def push(c: SortedRunWriter.RecordCursor): Unit =
+        if (c.next()) { heap.add((CassandraTokens.token(c.key), c)); () }
+      cursors.foreach(push)
       while (!heap.isEmpty) {
-        val c = heap.poll()
-        writer.add(c.token, c.key, c.value)
-        if (c.advance()) { heap.add(c); () }
+        val (token, c) = heap.poll()
+        writer.add(token, c.key, c.value)
+        push(c)
       }
       val m = writer.close()
       require(m.rows == expectedRows,
@@ -474,18 +416,12 @@ object BulkSink {
       sampleFraction: Double = 0.01, hotFactor: Double = 2.0,
       maxSalt: Int = 16): Map[Int, Int] = {
     require(keyCols.nonEmpty)
-    val schema = df.schema
-    val keyIdx = keyCols.map(schema.fieldIndex).toArray
-    val serializers: Array[Row => Array[Byte]] =
-      schema.fields.map(f => rowSerializer(f, schema.fieldIndex(f.name)))
-    val counts = df.sample(withReplacement = false, sampleFraction,
-        seed = DefaultSlotSeed)
-      .rdd.map { row =>
-        val comps = keyIdx.map(i => serializers(i)(row))
-        val pk = if (comps.length == 1) comps(0)
-          else CqlValueCodec.composite(comps)
-        CassandraTokens.bucketOfToken(CassandraTokens.token(pk), numBuckets)
-      }.countByValue()
+    val sample = df.sample(withReplacement = false, sampleFraction,
+      seed = DefaultSlotSeed)
+    val keyOf = partitionKeyOf(sample.schema, keyCols)
+    val counts = sample.queryExecution.toRdd.map { row =>
+      CassandraTokens.bucketOfToken(CassandraTokens.token(keyOf(row)), numBuckets)
+    }.countByValue()
     val totalN = counts.values.sum.toDouble
     if (totalN == 0) return Map.empty
     val mean = totalN / numBuckets
@@ -569,72 +505,29 @@ object BulkSink {
     } catch { case e: Throwable => writer.abort(); throw e }
   }
 
-  /** Length-prefixed concatenation of all serialized column values. */
-  private def encodeRow(row: Row, serializers: Array[Row => Array[Byte]]): Array[Byte] = {
-    var total = 0
-    val parts = new Array[Array[Byte]](serializers.length)
-    var i = 0
-    while (i < serializers.length) {
-      parts(i) = serializers(i)(row)
-      total += 4 + parts(i).length
-      i += 1
+  /** The one keying pass of every write, over `df`'s internal rows:
+    * per row its partition key (one key column raw, 2+ composite), the
+    * key's token, and its record value (every column, CQL-encoded by
+    * [[CqlValueCodec.rowEncoder]]). Encoders are built driver-side, so an
+    * unsupported column type fails before any job runs. */
+  private def keyedRows[T](df: DataFrame, keyCols: Seq[String],
+      tokenOf: Array[Byte] => T): RDD[((T, Array[Byte]), Array[Byte])] = {
+    val schema = df.schema
+    val keyOf = partitionKeyOf(schema, keyCols)
+    val valueOf = CqlValueCodec.rowEncoder(schema.fields.indices.map(i => (i, schema(i).dataType)))
+    df.queryExecution.toRdd.map { row =>
+      val pk = keyOf(row)
+      ((tokenOf(pk), pk), valueOf(row))
     }
-    val bb = java.nio.ByteBuffer.allocate(total)
-    i = 0
-    while (i < serializers.length) {
-      bb.putInt(parts(i).length); bb.put(parts(i)); i += 1
-    }
-    bb.array()
   }
 
-  /** Per-field wire serializer (F1/F2 semantics, null -> empty buffer). */
-  private def rowSerializer(f: StructField, i: Int): Row => Array[Byte] = f.dataType match {
-    case StringType  => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeString(r.getString(i))
-    case LongType    => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeLong(r.getLong(i))
-    case IntegerType => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeInt(r.getInt(i))
-    case ShortType   => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeShort(r.getShort(i))
-    case DoubleType  => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeDouble(r.getDouble(i))
-    case FloatType   => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeFloat(r.getFloat(i))
-    case BooleanType => r => if (r.isNullAt(i)) CqlValueCodec.Empty else CqlValueCodec.serializeBoolean(r.getBoolean(i))
-    case BinaryType  => r => if (r.isNullAt(i)) CqlValueCodec.Empty else r.getAs[Array[Byte]](i)
-    case TimestampType => r => if (r.isNullAt(i)) CqlValueCodec.Empty
-      else CqlValueCodec.serializeLong(r.getAs[java.sql.Timestamp](i).getTime)
-    case TimestampNTZType => r => if (r.isNullAt(i)) CqlValueCodec.Empty
-      else CqlValueCodec.serializeLong(
-        r.getAs[java.time.LocalDateTime](i).toInstant(java.time.ZoneOffset.UTC).toEpochMilli)
-    case DateType => r => if (r.isNullAt(i)) CqlValueCodec.Empty
-      else CqlValueCodec.serializeInt(r.getAs[java.sql.Date](i).toLocalDate.toEpochDay.toInt)
-    case _: DecimalType => r => if (r.isNullAt(i)) CqlValueCodec.Empty
-      else CqlValueCodec.serializeDecimal(r.getAs[java.math.BigDecimal](i))
-    case ArrayType(el, _) => r => if (r.isNullAt(i)) CqlValueCodec.Empty else {
-      val seq = r.getSeq[Any](i)
-      CqlValueCodec.serializeCollection(seq.map(serializeAny(el, _)))
-    }
-    case MapType(kt, vt, _) => r => if (r.isNullAt(i)) CqlValueCodec.Empty else {
-      val m = r.getMap[Any, Any](i)
-      CqlValueCodec.serializeMap(m.toSeq.map { case (k, v) =>
-        (serializeAny(kt, k), serializeAny(vt, v)) })
-    }
-    case st: StructType => r => if (r.isNullAt(i)) CqlValueCodec.Empty else {
-      val nested = r.getStruct(i)
-      CqlValueCodec.composite(st.fields.zipWithIndex.map { case (nf, ni) =>
-        if (nested.isNullAt(ni)) CqlValueCodec.Empty else serializeAny(nf.dataType, nested.get(ni))
-      })
-    }
-    case other => throw new IllegalArgumentException(
-      s"cannot serialize column ${f.name} of type $other to Cassandra wire bytes")
+  /** Partition key bytes of an internal row: one key column's CQL bytes
+    * raw, 2+ key columns as a composite. */
+  private def partitionKeyOf(schema: StructType,
+      keyCols: Seq[String]): InternalRow => Array[Byte] = {
+    val idx = keyCols.map(schema.fieldIndex).toArray
+    val encoders = idx.map(i => CqlValueCodec.encoder(schema(i).dataType))
+    if (idx.length == 1) row => encoders(0)(row, idx(0))
+    else row => CqlValueCodec.composite(Array.tabulate(idx.length)(j => encoders(j)(row, idx(j))))
   }
-
-  private def serializeAny(dt: DataType, v: Any): Array[Byte] =
-    if (v == null) CqlValueCodec.Empty
-    else dt match {
-      case StringType  => CqlValueCodec.serializeString(v.toString)
-      case LongType    => CqlValueCodec.serializeLong(v.asInstanceOf[Long])
-      case IntegerType => CqlValueCodec.serializeInt(v.asInstanceOf[Int])
-      case DoubleType  => CqlValueCodec.serializeDouble(v.asInstanceOf[Double])
-      case FloatType   => CqlValueCodec.serializeFloat(v.asInstanceOf[Float])
-      case BooleanType => CqlValueCodec.serializeBoolean(v.asInstanceOf[Boolean])
-      case BinaryType  => v.asInstanceOf[Array[Byte]]
-      case other => throw new IllegalArgumentException(s"collection element type $other unsupported")
-    }
 }

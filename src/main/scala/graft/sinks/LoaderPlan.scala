@@ -68,6 +68,17 @@ object LoaderPlan {
     }.toMap
   }
 
+  /** Persist a plan as `_STREAM_PLAN.json` in `outDir`, next to the
+    * manifests. Files and each file's hosts are sorted, so equal plans
+    * write equal bytes. */
+  def writePlanJson(outDir: String, plan: Map[String, Set[String]]): Unit = {
+    val json = plan.toSeq.sortBy(_._1).map { case (f, hosts) =>
+      s""""$f": [${hosts.toSeq.sorted.map(h => s""""$h"""").mkString(", ")}]"""
+    }.mkString("{", ", ", "}")
+    java.nio.file.Files.write(java.nio.file.Paths.get(outDir, "_STREAM_PLAN.json"),
+      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
   private def intersects(lo: Long, hi: Long, r: TokenRange): Boolean = {
     if (r.start < r.end) !(hi <= r.start || lo > r.end)
     else lo <= r.end || hi > r.start // wraparound range

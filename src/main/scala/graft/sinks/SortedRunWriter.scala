@@ -5,10 +5,15 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayInputStream,
 import graft.core.CassandraTokens
 
 /**
- * Append-only sorted-run file writer shared by the RDD sink (BulkSink) and
- * the DSv2 sink: `graft-<pid>-Data.db` (2-byte key len + key + 4-byte value
- * len + value) plus a sparse `Index.db` (token, logical offset every
- * `indexInterval` rows). Enforces the decorated-key sorted-input contract.
+ * The GRFT sorted-run format, owned by this one module: the class is its
+ * only writer, the companion its only reader — [[SortedRunWriter.RecordCursor]]
+ * parses the record frame, [[SortedRunWriter.ChunkedInputStream]] chains
+ * compressed chunks, [[SortedRunWriter.openLogical]] opens a run at a
+ * logical offset. Both bulk sinks (BulkSink, graft-bulk) append records
+ * whose values [[graft.core.CqlValueCodec.rowEncoder]] encoded:
+ * `graft-<pid>-Data.db` (2-byte key len + key + 4-byte value len + value)
+ * plus a sparse `Index.db` (token, logical offset every `indexInterval`
+ * rows). Enforces the decorated-key sorted-input contract.
  *
  * `compression` takes the reference's `compressionclass` URI option
  * (CassandraParams.java:103-105 — short or fully-qualified Cassandra
@@ -85,8 +90,6 @@ final class SortedRunWriter(outDir: String, pid: Int, indexInterval: Int = 128,
   /** Running counters for live progress metrics (DSv2 CustomTaskMetric). */
   def rowsSoFar: Long = rows
   def bytesSoFar: Long = offset
-  def minTokenSoFar: Long = minToken
-  def maxTokenSoFar: Long = maxToken
 
   def add(token: Long, key: Array[Byte], value: Array[Byte]): Unit = {
     require(!randomTokens, "random-token writer: use addRandom(tokenBytes, ...)")
@@ -304,10 +307,8 @@ object SortedRunWriter {
   /**
    * Open a chunked compressed run as its LOGICAL stream starting at the
    * last chunk whose logical offset is <= `startLogical` — the caller
-   * still skips `startLogical - <returned logical start>` bytes. Chunks
-   * decompress independently and chain transparently; chunk k's physical
-   * extent is bounded by chunk k+1's physical offset (the file length for
-   * the last chunk). Reads only the physical bytes from the seek point on.
+   * still skips `startLogical - <returned logical start>` bytes. Reads
+   * only the physical bytes from the seek point on.
    */
   def openChunked(dataFile: File, codec: String, chunks: Array[(Long, Long)],
       startLogical: Long): (InputStream, Long) = {
@@ -316,48 +317,150 @@ object SortedRunWriter {
     while (k + 1 < chunks.length && chunks(k + 1)._1 <= startLogical) k += 1
     val raw = new FileInputStream(dataFile)
     raw.getChannel.position(chunks(k)._2)
-    val fileLen = dataFile.length()
-    val startChunk = k
-    val stream: InputStream = new InputStream {
-      private var cur: InputStream = _
-      private var chunkIdx = startChunk
-      private val buffered = new BufferedInputStream(raw, 1 << 16)
-      private def nextChunk(): Boolean = {
-        if (chunkIdx >= chunks.length) return false
-        val physStart = chunks(chunkIdx)._2
-        val physEnd = if (chunkIdx + 1 < chunks.length) chunks(chunkIdx + 1)._2 else fileLen
-        val len = (physEnd - physStart).toInt
-        val buf = new Array[Byte](len)
-        var read = 0
-        while (read < len) {
-          val n = buffered.read(buf, read, len - read)
-          if (n < 0) throw new EOFException(s"truncated chunk $chunkIdx in $dataFile")
-          read += n
-        }
-        cur = decompress(codec, new ByteArrayInputStream(buf))
-        chunkIdx += 1
-        true
+    (new ChunkedInputStream(new BufferedInputStream(raw, 1 << 16), codec, chunks,
+      dataFile.length(), k, dataFile.toString), chunks(k)._1)
+  }
+
+  /**
+   * A run's logical record stream, positioned at logical `offset`.
+   * Uncompressed runs seek straight to it. Compressed runs with a chunk
+   * map open at the chunk holding it (only the physical bytes from there
+   * on are read); a corrupt map fails like a missing one. Compressed runs
+   * without a chunk map are two distinct cases: the manifest says the run
+   * IS chunked (`chunked`) -> the sidecar was LOST (partial copy) and a
+   * sequential decompressor would stop at the first chunk boundary,
+   * silently returning ~one chunk of rows — fail loudly instead; the
+   * manifest predates the chunks field -> a legacy sequential run, which
+   * really is one compressed stream, read from byte zero.
+   */
+  def openLogical(dataFile: File, codec: String, chunked: Boolean,
+      offset: Long): InputStream = {
+    val chunksFile = chunksFileFor(dataFile)
+    val (in, start) =
+      if (codec != "none" && chunksFile.exists()) {
+        val chunks = readChunks(chunksFile)
+        validateChunks(chunksFile, chunks, dataFile.length())
+        openChunked(dataFile, codec, chunks, offset)
+      } else {
+        if (codec != "none" && chunked)
+          throw new IllegalStateException(
+            s"$dataFile is a chunked $codec run (manifest records a chunk map) but its " +
+              s"sidecar ${chunksFile.getName} is missing — refusing to decode " +
+              "sequentially, which would silently truncate to the first chunk; " +
+              "restore the sidecar or rewrite the run")
+        (new BufferedInputStream(decompress(codec, new FileInputStream(dataFile)), 1 << 16), 0L)
       }
-      override def read(): Int = {
-        while (true) {
-          if (cur == null && !nextChunk()) return -1
-          val b = cur.read()
-          if (b >= 0) return b
-          cur.close(); cur = null
-        }
-        -1 // unreachable
-      }
-      override def read(b: Array[Byte], off: Int, len: Int): Int = {
-        while (true) {
-          if (cur == null && !nextChunk()) return -1
-          val n = cur.read(b, off, len)
-          if (n > 0) return n
-          cur.close(); cur = null
-        }
-        -1 // unreachable
-      }
-      override def close(): Unit = { if (cur != null) cur.close(); buffered.close() }
+    in.skipNBytes(offset - start)
+    in
+  }
+
+  /**
+   * The logical record stream of a chunked compressed run, read from
+   * `src` positioned at chunk `from`'s physical offset. Each chunk's
+   * physical extent (up to the next chunk's physical offset, `physEnd`
+   * for the last) is read whole and decompressed independently, and the
+   * chunks chain transparently. Serves run files ([[openChunked]]) and
+   * the stream receiver's socket alike; callers validate the map first
+   * ([[chunkFramingError]]), which bounds every extent.
+   */
+  final class ChunkedInputStream(src: InputStream, codec: String,
+      chunks: Array[(Long, Long)], physEnd: Long, from: Int, source: String)
+      extends InputStream {
+    private var cur: InputStream = _
+    private var k = from
+    private def nextChunk(): Boolean = {
+      if (k >= chunks.length) return false
+      val end = if (k + 1 < chunks.length) chunks(k + 1)._2 else physEnd
+      val len = (end - chunks(k)._2).toInt
+      val buf = new Array[Byte](len)
+      if (src.readNBytes(buf, 0, len) < len)
+        throw new EOFException(s"truncated chunk $k in $source")
+      cur = decompress(codec, new ByteArrayInputStream(buf))
+      k += 1
+      true
     }
-    (stream, chunks(startChunk)._1)
+    private val one = new Array[Byte](1)
+    override def read(): Int = if (read(one, 0, 1) < 0) -1 else one(0) & 0xff
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      if (len == 0) return 0
+      while (true) {
+        if (cur == null && !nextChunk()) return -1
+        val n = cur.read(b, off, len)
+        if (n > 0) return n
+        cur.close(); cur = null
+      }
+      -1 // unreachable
+    }
+    override def close(): Unit = { if (cur != null) cur.close(); src.close() }
+  }
+
+  /**
+   * The one reader of the record frame (`u16 keylen, key, i32 vallen,
+   * value`) over a logical stream positioned at logical `startOffset`.
+   * `next()` returns false only at a clean end of stream on a record
+   * boundary. It throws on an end inside a record (a torn run must never
+   * read as a shorter valid one), on a negative value length, and — when
+   * `declaredBytes >= 0` — on a clean end at any other logical byte count
+   * than declared (short = truncated, long = records a stale manifest
+   * never promised). With `readValues = false` value payloads are skipped,
+   * never allocated, and `value` stays null.
+   */
+  final class RecordCursor(in: InputStream, source: String,
+      readValues: Boolean = true, declaredBytes: Long = -1L, startOffset: Long = 0L) {
+    private val data = new DataInputStream(in)
+    private lazy val scratch = new Array[Byte](8192)
+    var key: Array[Byte] = _
+    var value: Array[Byte] = _
+    /** Logical offset just past the last complete record. */
+    var consumed: Long = startOffset
+
+    def next(): Boolean = {
+      // the key-length prefix is read byte-wise: only an end BEFORE its
+      // first byte is a record boundary
+      val b0 = data.read()
+      if (b0 < 0) {
+        if (declaredBytes >= 0 && consumed != declaredBytes) throw refuse("ended", null)
+        return false
+      }
+      var part = "key-length prefix"
+      try {
+        val b1 = data.read()
+        if (b1 < 0) throw new EOFException()
+        val klen = (b0 << 8) | b1
+        part = "key"
+        key = new Array[Byte](klen)
+        data.readFully(key)
+        part = "value-length prefix"
+        val vlen = data.readInt()
+        if (vlen < 0) throw new IllegalStateException(
+          s"$source has a negative value length $vlen after $consumed logical bytes")
+        part = "value"
+        if (readValues) { value = new Array[Byte](vlen); data.readFully(value) }
+        else skipFully(vlen)
+        consumed += 6L + klen + vlen
+        true
+      } catch {
+        case e: EOFException =>
+          throw refuse(s"is truncated mid-record (EOF inside the $part)", e)
+      }
+    }
+
+    // skip by reading: FileInputStream.skip succeeds past end of file, so
+    // a skipped value torn at the end would otherwise pass as complete
+    private def skipFully(n: Int): Unit = {
+      var left = n
+      while (left > 0) {
+        val r = data.read(scratch, 0, math.min(left, scratch.length))
+        if (r < 0) throw new EOFException()
+        left -= r
+      }
+    }
+
+    private def refuse(what: String, cause: Throwable) = new IllegalStateException(
+      s"$source $what after $consumed logical bytes" +
+        (if (declaredBytes >= 0) s", $declaredBytes declared — truncated or stale-manifest run"
+         else "") + "; refusing a partial read", cause)
+
+    def close(): Unit = data.close()
   }
 }

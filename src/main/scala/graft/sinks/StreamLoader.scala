@@ -1,8 +1,7 @@
 package graft.sinks
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, File, FileInputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, File, FileInputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -29,8 +28,8 @@ import graft.core.CassandraTokens
  *     int32 chunk count, per chunk (int64 logicalOffset, int64 physicalOffset),
  *     int64 physical bytes total
  *   <payload: raw file bytes — the logical record stream when codec=none,
- *    the compressed chunk bytes otherwise; per row uint16 keylen, key,
- *    int32 vallen, value after decompression>
+ *    the compressed chunk bytes otherwise; the receiver reads it through
+ *    SortedRunWriter's ChunkedInputStream and RecordCursor>
  *   reply: uint8 status (0 ok), UTF message, int64 rows received
  *
  * In a cluster deployment `streamRun` is invoked from each task's commit
@@ -275,44 +274,14 @@ final class InProcessCluster(hosts: Seq[String],
           case Some(msg) => reply(out, 1, s"bad chunk framing: $msg", 0); return
           case None      => ()
         }
-        new java.io.InputStream {
-          private var cur: java.io.InputStream = _
-          private var k = 0
-          private def nextChunk(): Boolean = {
-            if (k >= chunks.length) return false
-            val physEnd = if (k + 1 < chunks.length) chunks(k + 1)._2 else physTotal
-            val len = (physEnd - chunks(k)._2).toInt
-            val buf = new Array[Byte](len)
-            in.readFully(buf)
-            cur = graft.sinks.SortedRunWriter.decompress(
-              codec, new java.io.ByteArrayInputStream(buf))
-            k += 1
-            true
-          }
-          override def read(): Int = {
-            while (true) {
-              if (cur == null && !nextChunk()) return -1
-              val b = cur.read()
-              if (b >= 0) return b
-              cur.close(); cur = null
-            }
-            -1 // unreachable
-          }
-          override def read(b: Array[Byte], off: Int, len: Int): Int = {
-            while (true) {
-              if (cur == null && !nextChunk()) return -1
-              val n = cur.read(b, off, len)
-              if (n > 0) return n
-              cur.close(); cur = null
-            }
-            -1 // unreachable
-          }
-        }
+        new SortedRunWriter.ChunkedInputStream(in, codec, chunks, physTotal, 0,
+          s"session $dataFile")
       }
-    val rec = new DataInputStream(logical)
+    // the socket stays open for the reply: the cursor is never closed here
+    val records = new SortedRunWriter.RecordCursor(logical, s"session $dataFile",
+      readValues = false, declaredBytes = declaredBytes)
 
     var rows = 0L
-    var bytes = 0L
     var sortedOk = true
     // the order check dispatches on the node's declared partitioner —
     // a RandomPartitioner ring sorts by md5-token decorated keys, not
@@ -323,41 +292,21 @@ final class InProcessCluster(hosts: Seq[String],
     var prevTok = Long.MinValue
     var prevKey: Array[Byte] = null
     try {
-      var eof = false
-      while (!eof) {
-        val first = rec.read()
-        if (first < 0) eof = true
-        else {
-          val keylen = (first << 8) | rec.readUnsignedByte()
-          val key = new Array[Byte](keylen)
-          rec.readFully(key)
-          val vallen = rec.readInt()
-          if (vallen < 0) throw new EOFException("negative value length")
-          // skipBytes may skip fewer bytes than asked on a socket stream —
-          // loop, falling back to a blocking read() to distinguish "not
-          // yet available" from EOF
-          var toSkip = vallen
-          while (toSkip > 0) {
-            val k = rec.skipBytes(toSkip)
-            if (k > 0) toSkip -= k
-            else if (rec.read() >= 0) toSkip -= 1
-            else throw new EOFException(s"truncated value ($toSkip of $vallen bytes missing)")
-          }
-          if (random) {
-            if (prevKey != null &&
-                CassandraTokens.compareRandomDecorated(prevKey, key) > 0)
-              sortedOk = false
-            prevKey = key
-          } else {
-            val tok = CassandraTokens.token(key)
-            if (prevKey != null &&
-                CassandraTokens.compareDecorated(prevTok, prevKey, tok, key) > 0)
-              sortedOk = false
-            prevTok = tok; prevKey = key
-          }
-          rows += 1
-          bytes += 2L + keylen + 4L + vallen
+      while (records.next()) {
+        val key = records.key
+        if (random) {
+          if (prevKey != null &&
+              CassandraTokens.compareRandomDecorated(prevKey, key) > 0)
+            sortedOk = false
+        } else {
+          val tok = CassandraTokens.token(key)
+          if (prevKey != null &&
+              CassandraTokens.compareDecorated(prevTok, prevKey, tok, key) > 0)
+            sortedOk = false
+          prevTok = tok
         }
+        prevKey = key
+        rows += 1
       }
     } catch {
       case e: Exception => reply(out, 1, s"stream parse error: ${e.getMessage}", rows); return
@@ -365,10 +314,9 @@ final class InProcessCluster(hosts: Seq[String],
 
     if (!sortedOk) reply(out, 1, "rows not in decorated-key order", rows)
     else if (rows != declaredRows) reply(out, 1, s"row count $rows != declared $declaredRows", rows)
-    else if (bytes != declaredBytes) reply(out, 1, s"byte count $bytes != declared $declaredBytes", rows)
     else {
       received.put(s"$host|$dataFile",
-        Received(host, dataFile, rows, bytes, sortedOk))
+        Received(host, dataFile, rows, records.consumed, sortedOk))
       reply(out, 0, "ok", rows)
     }
   }
@@ -391,13 +339,8 @@ final class InProcessCluster(hosts: Seq[String],
 }
 
 object InProcessCluster {
-  /** Persist the plan next to the manifests (the `_STREAM_PLAN.json`
-    * contract the CLI writes; here for loader-side reuse). */
-  def writePlanJson(outDir: String, plan: Map[String, Set[String]]): Unit = {
-    val json = plan.toSeq.sortBy(_._1).map { case (f, hosts) =>
-      s""""$f": [${hosts.toSeq.sorted.map(h => s""""$h"""").mkString(", ")}]"""
-    }.mkString("{", ", ", "}")
-    Files.write(Paths.get(outDir, "_STREAM_PLAN.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+  /** The plan writer loader-side callers know; [[LoaderPlan.writePlanJson]]
+    * owns the `_STREAM_PLAN.json` format. */
+  def writePlanJson(outDir: String, plan: Map[String, Set[String]]): Unit =
+    LoaderPlan.writePlanJson(outDir, plan)
 }

@@ -117,11 +117,13 @@ final class GraftBulkWriteBuilder(info: LogicalWriteInfo)
     // every generation wrap the previous one. Validated at plan time.
     private val rawPayload = "raw".equalsIgnoreCase(options.get("payload"))
     if (rawPayload) {
-      val aux = Set("_pk", "_token", "_bucket")
-      val nonAux = schema.fields.filterNot(f => aux(f.name))
-      require(nonAux.length == 1 && nonAux.head.dataType == BinaryType,
+      val nonAux = GraftBulkDataWriter.valueFields(schema)
+      require(nonAux.length == 1 && nonAux.head._2 == BinaryType,
         "payload=raw needs exactly one non-aux column of binary type " +
-          s"(got ${nonAux.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(", ")})")
+          s"(got ${nonAux.map(f => s"${schema(f._1).name}:${f._2.simpleString}").mkString(", ")})")
+    } else {
+      // built once here so an unsupported column type fails at plan time
+      CqlValueCodec.rowEncoder(GraftBulkDataWriter.valueFields(schema))
     }
 
     // G1/G2: cluster rows by ring bucket (each bucket fully inside one task)
@@ -223,9 +225,9 @@ final class GraftBulkWriterFactory(path: String, schema: StructType,
 }
 
 /**
- * Per-task sorted-run writer over InternalRow (no Row conversion — reads
- * Tungsten values directly). Aux columns (_pk/_token/_bucket) route; all
- * other columns serialize into the value payload with the CQL wire codec.
+ * Per-task sorted-run writer over InternalRow. Aux columns
+ * (_pk/_token/_bucket) route; all other columns encode into the record
+ * value with [[CqlValueCodec.rowEncoder]], the encoder BulkSink uses too.
  *
  * The `_token` column's TYPE selects the partitioner (the reference loads
  * the partitioner reflectively and handles both LongToken and
@@ -241,9 +243,6 @@ final class GraftBulkDataWriter(path: String, pid: Int, schema: StructType,
 
   private val pkIdx = schema.fieldIndex("_pk")
   private val tokenIdx = schema.fieldIndex("_token")
-  private val aux = Set(pkIdx, tokenIdx, schema.fieldIndex("_bucket"))
-  private val valueFields: Array[(Int, DataType)] = schema.fields.zipWithIndex
-    .collect { case (f, i) if !aux.contains(i) => (i, f.dataType) }
 
   private val randomTokens = schema.fields(tokenIdx).dataType match {
     case LongType   => false
@@ -252,50 +251,22 @@ final class GraftBulkDataWriter(path: String, pid: Int, schema: StructType,
       s"_token must be LongType (Murmur3) or BinaryType (RandomPartitioner md5), got $other")
   }
 
+  private val valueOf: InternalRow => Array[Byte] = {
+    val valueFields = GraftBulkDataWriter.valueFields(schema)
+    if (rawPayload) {
+      val i = valueFields.head._1
+      row => if (row.isNullAt(i)) Array.emptyByteArray else row.getBinary(i)
+    } else CqlValueCodec.rowEncoder(valueFields)
+  }
+
   private val writer = new SortedRunWriter(path, pid, compression = codec,
     randomTokens = randomTokens, chunkSize = chunkSize)
 
   override def write(row: InternalRow): Unit = {
     val pk = row.getBinary(pkIdx)
-    val value =
-      if (rawPayload) {
-        val i = valueFields(0)._1
-        if (row.isNullAt(i)) Array.emptyByteArray else row.getBinary(i)
-      } else encodeValues(row)
+    val value = valueOf(row)
     if (randomTokens) writer.addRandom(row.getBinary(tokenIdx), pk, value)
     else writer.add(row.getLong(tokenIdx), pk, value)
-  }
-
-  private def encodeValues(row: InternalRow): Array[Byte] = {
-    val parts = new Array[Array[Byte]](valueFields.length)
-    var total = 0
-    var i = 0
-    while (i < valueFields.length) {
-      val (idx, dt) = valueFields(i)
-      parts(i) = if (row.isNullAt(idx)) CqlValueCodec.Empty else serialize(row, idx, dt)
-      total += 4 + parts(i).length
-      i += 1
-    }
-    val bb = java.nio.ByteBuffer.allocate(total)
-    i = 0
-    while (i < valueFields.length) { bb.putInt(parts(i).length); bb.put(parts(i)); i += 1 }
-    bb.array()
-  }
-
-  private def serialize(row: InternalRow, i: Int, dt: DataType): Array[Byte] = dt match {
-    case StringType    => CqlValueCodec.serializeString(row.getUTF8String(i).toString)
-    case LongType      => CqlValueCodec.serializeLong(row.getLong(i))
-    case IntegerType   => CqlValueCodec.serializeInt(row.getInt(i))
-    case ShortType     => CqlValueCodec.serializeShort(row.getShort(i))
-    case DoubleType    => CqlValueCodec.serializeDouble(row.getDouble(i))
-    case FloatType     => CqlValueCodec.serializeFloat(row.getFloat(i))
-    case BooleanType   => CqlValueCodec.serializeBoolean(row.getBoolean(i))
-    case BinaryType    => row.getBinary(i)
-    case TimestampType | TimestampNTZType =>
-      CqlValueCodec.serializeLong(row.getLong(i) / 1000L) // micros -> millis
-    case DateType      => CqlValueCodec.serializeInt(row.getInt(i))
-    case other => throw new IllegalArgumentException(
-      s"graft-bulk cannot serialize type $other (pre-serialize to binary)")
   }
 
   override def commit(): WriterCommitMessage = {
@@ -315,16 +286,19 @@ final class GraftBulkDataWriter(path: String, pid: Int, schema: StructType,
 
   /** Live per-task progress, polled by the executor heartbeat into the
     * SQL UI (the reference kept a heartbeat thread for this; Spark's
-    * metric plumbing replaces it). Random-token writes skip the Long
-    * token-range metrics — md5 tokens don't fit them, and publishing the
-    * untouched sentinels would show an impossible inverted range. */
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
-    val base = Array[org.apache.spark.sql.connector.metric.CustomTaskMetric](
-      new TaskMetric(GraftWriteMetrics.RowsName, writer.rowsSoFar),
+    * metric plumbing replaces it). */
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(new TaskMetric(GraftWriteMetrics.RowsName, writer.rowsSoFar),
       new TaskMetric(GraftWriteMetrics.BytesName, writer.bytesSoFar))
-    if (randomTokens) base
-    else base ++ Array[org.apache.spark.sql.connector.metric.CustomTaskMetric](
-      new TaskMetric(GraftWriteMetrics.MinTokenName, writer.minTokenSoFar),
-      new TaskMetric(GraftWriteMetrics.MaxTokenName, writer.maxTokenSoFar))
+}
+
+object GraftBulkDataWriter {
+  /** The record-value columns of a graft-bulk input: all but the aux
+    * routing columns, as (ordinal, type). */
+  def valueFields(schema: StructType): Seq[(Int, DataType)] = {
+    val aux = Set("_pk", "_token", "_bucket")
+    schema.fields.toSeq.zipWithIndex.collect {
+      case (f, i) if !aux(f.name) => (i, f.dataType)
+    }
   }
 }

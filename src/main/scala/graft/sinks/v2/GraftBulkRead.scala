@@ -11,7 +11,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
 import graft.core.CassandraTokens
-import graft.sinks.BulkSink
+import graft.sinks.{BulkSink, SortedRunWriter}
 
 /**
  * Read path for the graft-bulk sorted-run format: each Data.db file is one
@@ -24,10 +24,11 @@ import graft.sinks.BulkSink
  * does with per-range file sections (ExternalSSTableLoaderClient.java:
  * 57-137 supplies ranges; streamSSTables sends only matching sections):
  *  - the manifest's [minToken, maxToken] prunes whole runs;
- *  - the sparse Index.db seeks past the leading bytes of an uncompressed
- *    run (offset of the last entry strictly below the bound);
+ *  - the sparse Index.db seeks past the leading bytes of a run (offset
+ *    of the last entry strictly below the bound; compressed runs resolve
+ *    it through their chunk map, ADR 0001);
  *  - runs are token-sorted, so every reader early-stops past the upper
- *    bound (compressed runs too — they just can't seek, ADR 0001).
+ *    bound.
  * Filters stay residual: Spark re-evaluates them, pruning is best-effort.
  *
  * Columns PRUNE too: value payloads (the bulk of every record) are skipped
@@ -460,91 +461,32 @@ final class GraftBulkPartitionReader(file: String, codec: String = "none",
     columns: Array[String] = GraftBulkRead.schema.fieldNames,
     bucket: Int = -1, chunked: Boolean = false, totalBytes: Long = -1L)
     extends PartitionReader[InternalRow] {
-  // uncompressed: seek straight to the logical offset. Compressed with a
-  // chunk map: open at the chunk containing the offset (only the physical
-  // bytes from there on are read) and skip the in-chunk remainder.
-  // Compressed without a chunk map, two distinct cases: the manifest says
-  // the run IS chunked (`chunked`) -> the sidecar was LOST (partial copy)
-  // and a sequential decompressor would stop at the first chunk boundary,
-  // silently returning ~one chunk of rows — fail loudly instead; the
-  // manifest predates the chunks field -> a legacy sequential run, which
-  // really is one compressed stream — sequential from byte zero
-  // (planSplits gives those no startOffset).
-  private val in: DataInputStream = {
-    val f = new java.io.File(file)
-    val chunksFile = graft.sinks.SortedRunWriter.chunksFileFor(f)
-    if (codec != "none" && chunked && !chunksFile.exists())
-      throw new IllegalStateException(
-        s"$file is a chunked $codec run (manifest records a chunk map) but its " +
-          s"sidecar ${chunksFile.getName} is missing — refusing to decode " +
-          "sequentially, which would silently truncate to the first chunk; " +
-          "restore the sidecar or rewrite the run")
-    if (codec != "none" && chunksFile.exists()) {
-      val chunks = graft.sinks.SortedRunWriter.readChunks(chunksFile)
-      // a corrupt sidecar must fail as loudly as a missing one (the
-      // StreamLoader wire-framing checks, applied to the disk load)
-      graft.sinks.SortedRunWriter.validateChunks(chunksFile, chunks, f.length())
-      val (s, logicalStart) =
-        graft.sinks.SortedRunWriter.openChunked(f, codec, chunks, startOffset)
-      val d = new DataInputStream(s)
-      if (startOffset > logicalStart) d.skipNBytes(startOffset - logicalStart)
-      d
-    } else {
-      val d = new DataInputStream(new BufferedInputStream(
-        graft.sinks.SortedRunWriter.decompress(codec, new FileInputStream(file)), 1 << 16))
-      if (startOffset > 0) d.skipNBytes(startOffset)
-      d
-    }
-  }
   // the value payload is the bulk of a record's bytes; when pruned away it
   // is SKIPPED in the stream, never allocated (the key must always be read
-  // to advance the frame, and it feeds the early-stop token anyway)
-  private val needValue = columns.contains("value")
+  // to advance the frame, and it feeds the early-stop token anyway). A
+  // natural end must land EXACTLY on the manifest's logical byte count,
+  // regardless of any early-stop bound: a bounded split that stops early
+  // never reaches the end of the stream.
+  private val records = new SortedRunWriter.RecordCursor(
+    SortedRunWriter.openLogical(new File(file), codec, chunked, startOffset), file,
+    readValues = columns.contains("value"), declaredBytes = totalBytes,
+    startOffset = startOffset)
   private var current: InternalRow = _
-  private var consumed: Long = startOffset
 
-  override def next(): Boolean = {
-    try {
-      val klen = in.readUnsignedShort()
-      val key = new Array[Byte](klen); in.readFully(key)
-      val vlen = in.readInt()
-      val value = if (needValue) {
-        val v = new Array[Byte](vlen); in.readFully(v); v
-      } else { in.skipNBytes(vlen.toLong); null }
-      consumed += 2L + klen + 4L + vlen
-      val token = CassandraTokens.token(key)
-      // runs are token-sorted: past the upper bound nothing else matches
-      if (token > hiBound) false
-      else {
-        current = new GenericInternalRow(columns.map[Any] {
-          case "token"  => token
-          case "pk"     => key
-          case "value"  => value
-          case "bucket" => bucket
-        })
-        true
-      }
-    } catch {
-      case _: EOFException =>
-        // a natural EOF must land EXACTLY on the manifest's logical byte
-        // count — REGARDLESS of any early-stop bound: a bounded split
-        // that stops early returns false from the token check and never
-        // reaches this handler, so arriving here means the stream itself
-        // ended. Short = a truncated Data.db (partial copy) or a
-        // compressed stream that ended early (e.g. a legacy-flagged file
-        // that was really chunked); long = extra trailing records a
-        // stale/foreign manifest never promised. Either way the scan
-        // would silently return a different row set than the manifest
-        // describes — refuse both.
-        if (totalBytes >= 0 && consumed != totalBytes)
-          throw new IllegalStateException(
-            s"$file ended after $consumed logical bytes, manifest says " +
-              s"$totalBytes — truncated or stale-manifest run; refusing the " +
-              "inconsistent scan")
-        false
+  override def next(): Boolean = records.next() && {
+    val token = CassandraTokens.token(records.key)
+    // runs are token-sorted: past the upper bound nothing else matches
+    token <= hiBound && {
+      current = new GenericInternalRow(columns.map[Any] {
+        case "token"  => token
+        case "pk"     => records.key
+        case "value"  => records.value
+        case "bucket" => bucket
+      })
+      true
     }
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = in.close()
+  override def close(): Unit = records.close()
 }

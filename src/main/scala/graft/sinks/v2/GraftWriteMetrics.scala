@@ -8,18 +8,15 @@ import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, Cus
  * Hadoop task alive and visible during long SSTable writes; a Spark task
  * reports liveness to the driver already, so what remains useful is
  * PROGRESS, surfaced here as SQL-UI metrics updated per task while the
- * write runs). Rows/bytes aggregate as sums; token bounds aggregate as
- * min/max so a glance at the UI shows the ring coverage of a load.
+ * write runs). Rows and bytes aggregate as sums. A load's exact token
+ * bounds are in its manifests: Spark's SQL metric aggregation drops
+ * negative task values, so no task metric can carry a Murmur3 token.
  */
 object GraftWriteMetrics {
   val RowsName = "graft_rows_written"
   val BytesName = "graft_bytes_written"
-  val MinTokenName = "graft_min_token"
-  val MaxTokenName = "graft_max_token"
 
-  def all: Array[CustomMetric] = Array(
-    new RowsWrittenMetric, new BytesWrittenMetric,
-    new MinTokenMetric, new MaxTokenMetric)
+  def all: Array[CustomMetric] = Array(new RowsWrittenMetric, new BytesWrittenMetric)
 }
 
 final class RowsWrittenMetric extends CustomSumMetric {
@@ -30,24 +27,6 @@ final class RowsWrittenMetric extends CustomSumMetric {
 final class BytesWrittenMetric extends CustomSumMetric {
   override def name(): String = GraftWriteMetrics.BytesName
   override def description(): String = "bytes written to sorted runs"
-}
-
-/** Min over tasks; empty tasks report Long.MaxValue and drop out unless
-  * ALL tasks were empty (then the sentinel shows as "none"). */
-final class MinTokenMetric extends CustomMetric {
-  override def name(): String = GraftWriteMetrics.MinTokenName
-  override def description(): String = "minimum Murmur3 token written"
-  override def aggregateTaskMetrics(taskMetrics: Array[Long]): String =
-    if (taskMetrics.isEmpty || taskMetrics.min == Long.MaxValue) "none"
-    else taskMetrics.min.toString
-}
-
-final class MaxTokenMetric extends CustomMetric {
-  override def name(): String = GraftWriteMetrics.MaxTokenName
-  override def description(): String = "maximum Murmur3 token written"
-  override def aggregateTaskMetrics(taskMetrics: Array[Long]): String =
-    if (taskMetrics.isEmpty || taskMetrics.max == Long.MinValue) "none"
-    else taskMetrics.max.toString
 }
 
 private[v2] final class TaskMetric(metricName: String, metricValue: Long)

@@ -925,6 +925,92 @@ class V2SinkSpec extends AnyFunSuite {
       s"expected the overlong guard, got: ${SparkSuite.causeMessages(e2).mkString(" | ")}")
   }
 
+  test("both sinks write identical value bytes for every column type") {
+    import graft.sinks.BulkSink
+    // pre-epoch timestamps with sub-millisecond digits: millis must floor
+    // on both sinks; decimal and the complex types go through the same
+    // encoder; every 7th row nulls each value column
+    val frame = spark.range(0, 64).select(col("id"),
+      concat(lit("k"), col("id").cast("string")).as("k"),
+      timestamp_micros(lit(-1500L) - col("id") * 1000003L).as("ts"),
+      timestamp_micros(lit(-2500L) - col("id") * 999L).cast("timestamp_ntz").as("ts_ntz"),
+      (col("id") * 1.234).cast("decimal(12,3)").as("dec"),
+      array(col("id").cast("float"), lit(null).cast("float"), lit(-0.5f)).as("arr"),
+      map(lit("a"), col("id").cast("int"), lit("b"), lit(null).cast("int")).as("m"),
+      struct(col("id").cast("int").as("x"), lit("y").as("y")).as("st"))
+    val valueCols = frame.columns.filterNot(Set("id", "k"))
+    val df = frame.select(col("k") +: valueCols.map(c =>
+      when(col("id") % 7 === 0, lit(null)).otherwise(col(c)).as(c)): _*)
+    def valuesByKey(dir: String): Map[String, String] =
+      spark.read.format("graft-bulk").option("path", dir).load().collect()
+        .map(r => graft.core.CqlValueCodec.toHex(r.getAs[Array[Byte]]("pk")) ->
+          graft.core.CqlValueCodec.toHex(r.getAs[Array[Byte]]("value"))).toMap
+
+    val rddOut = Files.createTempDirectory("graft-xsink-rdd").toString
+    BulkSink.writeSorted(df, Seq("k"), 2, rddOut)
+    val v2Out = Files.createTempDirectory("graft-xsink-v2").toString
+    df.withColumn("_pk", partition_key(col("k")))
+      .withColumn("_token", cassandra_token(col("_pk")))
+      .withColumn("_bucket", token_bucket(col("_token"), 2))
+      .write.format("graft-bulk").option("path", v2Out).option("buckets", "2")
+      .mode("append").save()
+    val (a, b) = (valuesByKey(rddOut), valuesByKey(v2Out))
+    assert(a.size === 64 && a.keySet === b.keySet)
+    a.foreach { case (k, v) => assert(b(k) === v, s"value bytes differ for key $k") }
+    // row 1's ts is -1001503 us: its millis floor to -1002, not -1001
+    val row1 = a(graft.core.CqlValueCodec.toHex("k1".getBytes("UTF-8")))
+    assert(row1.contains(graft.core.CqlValueCodec.toHex(
+      graft.core.CqlValueCodec.serializeLong(-1002L))), row1)
+  }
+
+  test("a manifest-less run torn inside a key-length prefix fails the scan") {
+    import graft.sinks.BulkSink
+    val out = Files.createTempDirectory("graft-v2-torn").toString
+    val Seq(m) = BulkSink.writeSorted(
+      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+        .select(col("o_orderkey"), col("o_orderpriority")),
+      Seq("o_orderkey"), 1, out)
+    // the second sparse-index entry's offset is a record boundary; keep
+    // one byte past it, so the run ends inside that record's prefix
+    val idx = new java.io.DataInputStream(new java.io.FileInputStream(
+      new java.io.File(out, m.indexFile)))
+    val boundary = try { idx.skipNBytes(24); idx.readLong() } finally idx.close()
+    val ch = java.nio.channels.FileChannel.open(
+      java.nio.file.Paths.get(out, m.dataFile), java.nio.file.StandardOpenOption.WRITE)
+    try ch.truncate(boundary + 1) finally ch.close()
+    Files.delete(java.nio.file.Paths.get(out, "_MANIFEST.json"))
+    val e = intercept[Exception] {
+      spark.read.format("graft-bulk").option("path", out).load().count()
+    }
+    assert(SparkSuite.causeMessages(e).exists(_.contains("key-length prefix")),
+      s"expected a torn-record failure, got: ${SparkSuite.causeMessages(e).mkString(" | ")}")
+  }
+
+  test("graft-bulk write metrics in the SQL status store equal the manifest sums") {
+    import graft.sinks.BulkSink
+    import graft.sinks.v2.{BytesWrittenMetric, RowsWrittenMetric}
+    val out = Files.createTempDirectory("graft-v2-metrics").toString
+    prepared(4).write.format("graft-bulk")
+      .option("path", out).option("buckets", "4").mode("append").save()
+    val ms = BulkSink.readManifests(new java.io.File(out))
+    val store = spark.sharedState.statusStore
+    // the store is fed by the listener bus: poll until the write's
+    // execution has its final metric values
+    def metric(cls: Class[_]): Option[Long] = store.executionsList()
+      .filter(_.metrics.exists(_.metricType.endsWith(cls.getName)))
+      .sortBy(_.executionId).lastOption.flatMap { ex =>
+        val values = store.executionMetrics(ex.executionId)
+        ex.metrics.find(_.metricType.endsWith(cls.getName))
+          .flatMap(pm => values.get(pm.accumulatorId)).map(_.trim.toLong)
+      }
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def rowsAndBytes = (metric(classOf[RowsWrittenMetric]), metric(classOf[BytesWrittenMetric]))
+    val expected = (Some(ms.map(_.rows).sum), Some(ms.map(_.bytes).sum))
+    while (rowsAndBytes != expected && System.nanoTime() < deadline) Thread.sleep(100)
+    assert(expected._1 === Some(1500L))
+    assert(rowsAndBytes === expected)
+  }
+
   test("v2 sink rejects input without routing columns") {
     val out = Files.createTempDirectory("graft-v2-bad").toString
     val e = intercept[Exception] {

@@ -105,4 +105,27 @@ object RunFormatPropertySpec extends Properties("SortedRunFormat") {
         ()
       }
     }
+
+  property("record cursor ends only on a record boundary and at the declared length") =
+    Prop.forAll(recordsGen, Gen.listOfN(16, Gen.choose(0.0, 1.0)), Gen.oneOf(true, false)) {
+      (records, fractions, readValues) =>
+        val stream = logicalBytes(records)
+        val boundaries = records.scanLeft(0L) { case (off, (k, v)) => off + 6 + k.length + v.length }
+        val cuts = (boundaries ++ fractions.map(f => (f * stream.length).toLong)).distinct
+        def cursor(cut: Long, declared: Long) = new SortedRunWriter.RecordCursor(
+          new java.io.ByteArrayInputStream(stream, 0, cut.toInt), s"cut-$cut",
+          readValues = readValues, declaredBytes = declared)
+        def drain(c: SortedRunWriter.RecordCursor): Either[String, Seq[Array[Byte]]] =
+          try Right(Iterator.continually(c.next()).takeWhile(identity).map(_ => c.key).toList)
+          catch { case e: IllegalStateException => Left(e.getMessage) }
+        cuts.forall { cut =>
+          val n = boundaries.indexOf(cut)
+          val undeclared = drain(cursor(cut, -1L))
+          val declared = drain(cursor(cut, stream.length.toLong))
+          if (n < 0) undeclared.isLeft && declared.isLeft
+          else undeclared.exists(keys => keys.length == n &&
+              keys.zip(records).forall { case (k, (rk, _)) => java.util.Arrays.equals(k, rk) }) &&
+            declared.isLeft == (cut != stream.length)
+        }
+    }
 }
