@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /**
  * Benchmark main: one JSON line with per-query wall times at the target
@@ -46,19 +45,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Engine defaults (AQE coalescing floor included) come from the ONE
-    // shared Sessions builder — the bench measures the engine's config,
-    // not its own (VERDICT r20 #2). Master/parallelism stay here: they
-    // are the bench's measurement parameters, not engine defaults.
-    val spark = Sessions.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // shared session factory — the bench measures the engine's config,
+    // not its own (VERDICT r20 #2).
+    val spark = Sessions.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // warm-up, not measured: parquet footer caches plus one full
@@ -96,7 +90,7 @@ object Bench {
     // only say "somewhere in these 85 seconds the box drifted".
     def probeOnce(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0, 32L * 1000 * 1000, 1, cpus.toInt)
+      spark.range(0, 32L * 1000 * 1000, 1, cpus)
         .selectExpr("sum(id * 3 + 1) as s").collect()
       (System.nanoTime() - t0) / 1e9
     }

@@ -3,14 +3,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /**
- * The engine's shared session defaults — applied by EVERY entry point
- * (Bench, Verify, cli.Hdfs2CassSpark) so the bench measures the engine's
- * configuration, not its own. One place on purpose: r20 set the AQE
- * coalescing floor in Bench only, which made round-over-round bench
- * deltas partly measure a harness-local config (VERDICT r20 "What's
- * wrong" #2).
+ * The engine's one session factory. Every session in the repo is built
+ * here: Bench, Verify, the soaks, `tools.Measure` and the test suites go
+ * through [[local]]; `cli.Hdfs2CassSpark` takes [[engine]], the same
+ * defaults without a master, because under spark-submit the launcher
+ * supplies it. `perfbench` applies [[withEngineDefaults]] itself.
+ * One place on purpose: r20 set the AQE coalescing floor in Bench only,
+ * and the r20-r21 A/B tools each built their own session without it, so
+ * their accept/reject decisions measured a config the bench never ran.
  */
 object Sessions {
+
+  /** Local parallelism for every local session: `SPARK_GRAFT_CPUS`,
+    * else all of this machine's cores. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /**
    * Engine defaults, each justified for the production shape (long-lived
@@ -20,20 +27,33 @@ object Sessions {
    *  - adaptive.enabled=true: Spark's default since 3.2, stated so a
    *    deployment's spark-defaults can't silently strip AQE coalescing/
    *    skew handling from the operators that rely on it.
-   *  - adaptive.coalescePartitions.minPartitionSize: AQE's coalescing
+   *  - adaptive.coalescePartitions.minPartitionSize=64k: AQE's coalescing
    *    floor (default 1m) assumes post-shuffle cost is proportional to
    *    bytes; explode-amplified stages (posting-list / pair expansion)
    *    and kernel-heavy aggregations violate that by 10-40x, and at
    *    small shuffle sizes the 1m floor coalesces their stages down to a
    *    handful of tasks regardless of core count (measured 0.76-0.88x
-   *    per-query wins at 64k, ABConf r20). At production shuffle sizes
+   *    per-query wins at 64k, r20). At production shuffle sizes
    *    (partitions >> advisory size) both floors are inert — this is a
-   *    small-shuffle parallelism floor, not a cluster tuning.
-   *    Env-overridable for deployments that want the stock floor.
+   *    small-shuffle parallelism floor, not a cluster tuning. It is a
+   *    runtime SQL conf, so a deployment that wants the stock floor sets
+   *    it with `spark.conf.set`.
    */
   def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+
+  /** A session builder under the engine defaults and no master — for
+    * the CLI, whose master spark-submit supplies. */
+  def engine(): SparkSession.Builder = withEngineDefaults(SparkSession.builder())
+
+  /** A `local[cpus]` session builder under the engine defaults: one
+    * shuffle partition per core, no UI. Callers add their own confs
+    * (a wider shuffle, extensions) on the returned builder. */
+  def local(cpus: Int): SparkSession.Builder =
+    engine()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
 }

@@ -31,7 +31,7 @@ object SparkEntry {
    * means one EFFECTIVE reader), so every per-row kernel and partial
    * aggregation before the first exchange runs ~single-threaded. When
    * the planned scan has fewer partitions than half the session
-   * parallelism, ONE round-robin exchange of the (column-pruned) rows
+   * parallelism, ONE hash exchange of the (column-pruned) rows on `key`
    * restores full width for the downstream kernels; the 10 MB shuffle
    * costs milliseconds against the serialized md5/shingle/percentile
    * work it parallelizes (measured per query in OPTIMIZATION_r20.md).
@@ -42,22 +42,15 @@ object SparkEntry {
    * Call it on a bare scan (optionally projected/filtered) only — the
    * partition probe reflects the file-split planning, and column
    * pruning/filter pushdown reach the scan through the repartition.
+   *
+   * `key`: a deterministic, well-distributed column (the row's id) —
+   * hash repartitioning by it avoids BOTH the per-partition input sort
+   * a round-robin repartition pays for retry determinism (SPARK-23207,
+   * single-threaded here by the same file-layout limit being fixed)
+   * and the duplicated/lost-rows-under-retry hazard of rand-derived
+   * keys (guide §2.5: derive the synthetic key deterministically).
    */
-  // A/B + opt-out knob (default on). Read PER CALL (system property
-  // first, then env) so a same-JVM harness can interleave off/on passes
-  // — the only A/B shape that survives this box's load oscillation.
-  private def widenEnabled: Boolean =
-    !sys.props.get("graft.widen")
-      .orElse(sys.env.get("SPARK_GRAFT_WIDEN")).contains("off")
-
-  /** `key`: a deterministic, well-distributed column (the row's id) —
-    * hash repartitioning by it avoids BOTH the per-partition input sort
-    * a round-robin repartition pays for retry determinism (SPARK-23207,
-    * single-threaded here by the same file-layout limit being fixed)
-    * and the duplicated/lost-rows-under-retry hazard of rand-derived
-    * keys (guide §2.5: derive the synthetic key deterministically). */
-  private def widenScan(df: DataFrame, key: Column): DataFrame = {
-    if (!widenEnabled) return df
+  private[graft] def widenScan(df: DataFrame, key: Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= math.max(2, target / 2)) df
     else df.repartition(target, key)
@@ -1933,7 +1926,7 @@ object SparkEntry {
     // c<k> -> 2k, s<k> -> 2k+1 (customer and supplier key spaces are
     // disjoint by parity) decodes back to the contract's string form
     // AFTER the loop, so the 5 iterations hash/compare/checkpoint 8-byte
-    // keys instead of strings (QProfile r20: the string-keyed loop
+    // keys instead of strings (job profile r20: the string-keyed loop
     // re-read a 121MB checkpoint per iteration; long keys shrink the
     // cached edge rows and every per-iteration exchange/probe with them)
     "graph_pagerank" -> ((s, dir) => {
@@ -1966,7 +1959,7 @@ object SparkEntry {
     // The widen keys on the GROUPING column, so the basket aggregation
     // reuses the widening exchange (zero added shuffles) — without it
     // the collect_set partials and the in-row pair explode run on the
-    // scan's 1-3 effective tasks (QProfile r20: 14s of the census's 19s)
+    // scan's 1-3 effective tasks (job profile r20: 14s of the census's 19s)
     "graph_triangles" -> ((s, dir) => {
       val edges = graft.operators.Graph.coOccurrenceEdges(
         widenScan(s.read.parquet(t(dir, "lineitem"))

@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shared engine defaults (timezone, AQE floor) — same session config
     // surface as Bench and the CLI, so correctness runs exercise the
     // exact configuration the bench times.
-    val spark = Sessions.withEngineDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // local-iteration subset (comma-separated names); driver never sets it

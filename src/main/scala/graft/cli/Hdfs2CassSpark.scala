@@ -229,8 +229,7 @@ object Hdfs2CassSpark {
 
   def main(argv: Array[String]): Unit = {
     val args = parseArgs(argv.toSeq)
-    val builder = graft.Sessions.withEngineDefaults(SparkSession.builder()
-      .appName("Hdfs2CassSpark"))
+    val builder = graft.Sessions.engine().appName("Hdfs2CassSpark")
     // under spark-submit the master comes from the launcher; standalone
     // invocations (tests, local runs) fall back to all local cores
     val spark = sys.props.get("spark.master")

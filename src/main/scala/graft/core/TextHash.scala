@@ -667,43 +667,56 @@ object TextHash {
     if (len == 0)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(
         Array.emptyLongArray)
+    val in = new VarintCursor(blob, "unpack_sorted_longs")
     // a blob ending mid-varint (continuation bit set on the last byte)
     // is truncated — the terminator-count pass below would silently
     // decode one element short instead of running off the end
-    if ((blob(len - 1) & 0x80) != 0)
-      throw new IllegalArgumentException(
-        "unpack_sorted_longs: malformed blob (truncated varint) — " +
-          "input must be pack_sorted_longs output")
-    try {
-      // pass 1: element count = number of varint terminator bytes
-      var n = 0
-      var i = 0
-      while (i < len) { if ((blob(i) & 0x80) == 0) n += 1; i += 1 }
-      val out = new Array[Long](n)
-      var pos = 0
-      var k = 0
-      var prev = 0L
-      while (k < n) {
-        var x = 0L; var s = 0; var m = 0L
-        while ({ m = blob(pos); pos += 1; (m & 0x80) != 0 }) {
-          x |= (m & 0x7fL) << s; s += 7
-        }
-        x |= (m & 0x7fL) << s
-        prev =
-          if (k == 0) (x >>> 1) ^ -(x & 1L) // zigzag: only the first value
-          else prev + x // wrapping add mirrors the encoder's wrapping delta
-        out(k) = prev
-        k += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    } catch {
-      // a truncated blob runs a varint off the array end — same loud
-      // malformed-input contract as packedIntersectCount
-      case _: ArrayIndexOutOfBoundsException =>
-        throw new IllegalArgumentException(
-          "unpack_sorted_longs: malformed blob (truncated varint) — " +
-            "input must be pack_sorted_longs output")
+    if ((blob(len - 1) & 0x80) != 0) throw in.malformed("truncated varint")
+    // pass 1: element count = number of varint terminator bytes
+    var n = 0
+    var i = 0
+    while (i < len) { if ((blob(i) & 0x80) == 0) n += 1; i += 1 }
+    val out = new Array[Long](n)
+    var k = 0
+    var prev = 0L
+    while (k < n) {
+      val x = in.next()
+      prev =
+        if (k == 0) (x >>> 1) ^ -(x & 1L) // zigzag: only the first value
+        else prev + x // wrapping add mirrors the encoder's wrapping delta
+      out(k) = prev
+      k += 1
     }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  /**
+   * The one reader of the [[packSortedLongs]] varint stream. `next()`
+   * decodes the unsigned varint at the cursor and rejects one that runs off
+   * the blob (truncated) or past 10 bytes (overlong: an 11th byte would
+   * shift past bit 63 and decode garbage). A final class with a plain
+   * field, not a nested def over local vars, so the merge loop's cursor
+   * is not boxed into a runtime ref. (A FOREIGN byte string that happens
+   * to parse as varints is not detectable — the format is header-free by
+   * design; the contract is pack_sorted_longs output.)
+   */
+  private final class VarintCursor(blob: Array[Byte], fn: String) {
+    private var pos = 0
+    def hasNext: Boolean = pos < blob.length
+    def next(): Long = {
+      var x = 0L; var s = 0; var m = 0L
+      while ({ m = nextByte(); (m & 0x80) != 0 }) {
+        x |= (m & 0x7fL) << s; s += 7
+        if (s == 70) throw malformed("overlong varint")
+      }
+      x | ((m & 0x7fL) << s)
+    }
+    private def nextByte(): Long = {
+      if (pos >= blob.length) throw malformed("truncated varint")
+      val b = blob(pos); pos += 1; b
+    }
+    def malformed(what: String) = new IllegalArgumentException(
+      s"$fn: malformed blob ($what) — input must be pack_sorted_longs output")
   }
 
   /**
@@ -713,35 +726,13 @@ object TextHash {
    * reconstructs an array. Distinct semantics match
    * [[sortedIntersectCountLong]] on the arrays that were packed.
    */
-  def packedIntersectCount(a: Array[Byte], b: Array[Byte]): Int =
-    try packedIntersectCountImpl(a, b)
-    catch {
-      // a truncated blob runs a varint off the array end — surface it as
-      // the same loud malformed-input error the bloom kernel raises, not
-      // a raw index crash. (A FOREIGN byte string that happens to parse
-      // as varints is not detectable — the format is header-free by
-      // design; this function's contract is pack_sorted_longs output.)
-      case _: ArrayIndexOutOfBoundsException =>
-        throw new IllegalArgumentException(
-          "packed_intersect_count: malformed blob (truncated varint) — " +
-            "inputs must be pack_sorted_longs output")
-    }
-
-  private def packedIntersectCountImpl(a: Array[Byte], b: Array[Byte]): Int = {
-    val la = a.length; val lb = b.length
-    if (la == 0 || lb == 0) return 0
-    // varint decode is inlined at each advance site (no nested defs:
-    // scalac would box the cursor vars into runtime refs inside the
-    // merge's hot loop)
-    var pa = 0; var pb = 0
-    var x = 0L; var s = 0; var m = 0L
-    while ({ m = a(pa); pa += 1; (m & 0x80) != 0 }) { x |= (m & 0x7fL) << s; s += 7 }
-    x |= (m & 0x7fL) << s
-    var va = (x >>> 1) ^ -(x & 1L) // zigzag: only the first value
-    x = 0L; s = 0
-    while ({ m = b(pb); pb += 1; (m & 0x80) != 0 }) { x |= (m & 0x7fL) << s; s += 7 }
-    x |= (m & 0x7fL) << s
-    var vb = (x >>> 1) ^ -(x & 1L)
+  def packedIntersectCount(a: Array[Byte], b: Array[Byte]): Int = {
+    if (a.length == 0 || b.length == 0) return 0
+    val ca = new VarintCursor(a, "packed_intersect_count")
+    val cb = new VarintCursor(b, "packed_intersect_count")
+    def unzig(x: Long) = (x >>> 1) ^ -(x & 1L) // zigzag: only the first value
+    var va = unzig(ca.next())
+    var vb = unzig(cb.next())
     var c = 0
     var prevSet = false
     var prev = 0L
@@ -749,29 +740,12 @@ object TextHash {
     while (!done) {
       if (va == vb) {
         if (!prevSet || prev != va) { c += 1; prev = va; prevSet = true }
-        if (pa >= la || pb >= lb) done = true
-        else {
-          x = 0L; s = 0
-          while ({ m = a(pa); pa += 1; (m & 0x80) != 0 }) { x |= (m & 0x7fL) << s; s += 7 }
-          va += x | ((m & 0x7fL) << s)
-          x = 0L; s = 0
-          while ({ m = b(pb); pb += 1; (m & 0x80) != 0 }) { x |= (m & 0x7fL) << s; s += 7 }
-          vb += x | ((m & 0x7fL) << s)
-        }
+        if (!ca.hasNext || !cb.hasNext) done = true
+        else { va += ca.next(); vb += cb.next() }
       } else if (va < vb) {
-        if (pa >= la) done = true
-        else {
-          x = 0L; s = 0
-          while ({ m = a(pa); pa += 1; (m & 0x80) != 0 }) { x |= (m & 0x7fL) << s; s += 7 }
-          va += x | ((m & 0x7fL) << s)
-        }
+        if (!ca.hasNext) done = true else va += ca.next()
       } else {
-        if (pb >= lb) done = true
-        else {
-          x = 0L; s = 0
-          while ({ m = b(pb); pb += 1; (m & 0x80) != 0 }) { x |= (m & 0x7fL) << s; s += 7 }
-          vb += x | ((m & 0x7fL) << s)
-        }
+        if (!cb.hasNext) done = true else vb += cb.next()
       }
     }
     c

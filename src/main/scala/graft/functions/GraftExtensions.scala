@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  * `spark.sql("SELECT cassandra_token(...)...")` works cluster-wide.
  *
  * Enable with either:
- *   SparkSession.builder().withExtensions(new GraftExtensions)
+ *   graft.Sessions.local(cpus).withExtensions(new GraftExtensions)
  * or the config (works with spark-submit, no code change):
  *   spark.sql.extensions=graft.functions.GraftExtensions
  */

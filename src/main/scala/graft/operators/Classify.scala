@@ -75,20 +75,12 @@ object Classify {
     // input); the #labels-row cache serves both
     val priors = train.groupBy(col(labelCol).as("_l"))
       .agg(count(lit(1)).as("_nd")).persist()
-    // restore scan width INTO the cache: on an under-split input the
-    // tokenized-corpus cache inherits the scan's 1-3 partitions and every
-    // consumer pass (evidence explode+join, per-doc lengths) runs
-    // single-task over it (QProfile r21). One keyed exchange inside the
-    // single cache build parallelizes all consumers; at a production
-    // layout (#partitions >= half the cores) this is the identity —
-    // widening the INPUT instead measured 1.37-1.39x loss (r20+r21): the
-    // exchange is then re-paid by each of the three persist builds.
-    // temporary A/B gate (graft.nbwide=off), removed once recorded.
-    val docTokBase = docs.select(col(idCol), toks.as("_toks"))
-    val target = docs.sparkSession.sparkContext.defaultParallelism
-    val docTok = (if (!sys.props.get("graft.nbwide").contains("off") &&
-        docTokBase.rdd.getNumPartitions < math.max(2, target / 2))
-      docTokBase.repartition(target, col(idCol)) else docTokBase).persist()
+    // The tokenized corpus keeps the scan's width: repartitioning it on
+    // an under-split input was no reproducible win under the engine
+    // session (plans/r22/classify_nb_nbwide_ab.txt), and widening the
+    // INPUT measured a 1.37-1.39x loss (r20+r21), the exchange re-paid
+    // by each of the three persists.
+    val docTok = docs.select(col(idCol), toks.as("_toks")).persist()
     try {
       val lTotals = lw.groupBy(col("_l")).agg(sum(col("_clw")).as("_cl"))
       // |V| and the training doc total: two count jobs, plan literals

@@ -152,7 +152,7 @@ object Graph {
       // both neighbor lists are sort_array'd: the codegen'd two-pointer
       // count replaces size(array_intersect(..)), which hash-built and
       // MATERIALIZED every per-edge intersection array just to size it —
-      // the O(E^1.5)-row hot loop of the census (QProfile r20: the probe
+      // the O(E^1.5)-row hot loop of the census (job profile r20: the probe
       // stage was 4.2s of the query's 9.5s before this swap). On the
       // packed path the same merge runs over the varint encoding.
       .select((if (packed)
@@ -236,7 +236,7 @@ object Graph {
     // extra exchange; the old form joined a separate degree aggregate
     // back onto the full edge list and checkpointed THAT). Each of the
     // `iterations` loop rounds then reads #nodes blob rows instead of
-    // #edges (src, dst, outdeg) rows — QProfile r20/r21: the per-
+    // #edges (src, dst, outdeg) rows — job profiles r20/r21: the per-
     // iteration read of the checkpointed edge blocks (~103 MB at sf0.1)
     // was the loop's dominant cost; the packed adjacency is ~3 MB.
     // Contributions fan back out IN-ROW (explode over the decoded blob)

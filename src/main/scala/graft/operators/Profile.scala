@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Data-card column profiling — the per-column fact sheet (row counts,
@@ -189,10 +190,11 @@ object Profile {
     // deterministically in the finally instead of pinning checkpoint
     // blocks for the session. A single RDD instance also guarantees both
     // passes see the SAME range-partition boundaries (they come from
-    // sampling).
+    // sampling). MEMORY_AND_DISK, the level of the localCheckpoint this
+    // replaced: an evicted partition is re-read, not re-sorted.
     val sorted = cnt.repartitionByRange(parts, col("_v"))
       .sortWithinPartitions(col("_v"))
-      .rdd.persist()
+      .rdd.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val masses = sorted.mapPartitionsWithIndex { (pid, it) =>
         var s = 0L

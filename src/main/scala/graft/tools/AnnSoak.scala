@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.Similarity
 
 /**
@@ -16,12 +16,7 @@ import graft.operators.Similarity
 object AnnSoak {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // clustered vectors: 1000 cluster centers, small per-vector noise —

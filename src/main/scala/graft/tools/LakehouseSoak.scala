@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.Lakehouse
 
 /**
@@ -21,12 +21,7 @@ object LakehouseSoak {
     val n = if (args.length > 0) args(0).toLong else 10000000L
     val appends = if (args.length > 1) args(1).toInt else 20
     val base = if (args.length > 2) args(2) else "/tmp/graft-lh-soak"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(

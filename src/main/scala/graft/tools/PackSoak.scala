@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.Curate
 
 /**
@@ -17,12 +18,7 @@ import graft.operators.Curate
 object PackSoak {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 5000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // variable-length docs: 5-104 words, content irrelevant to packing

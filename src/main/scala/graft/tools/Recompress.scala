@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+
+import graft.Sessions
 
 /**
  * No-shuffle rewrite of a graft-bulk directory — the compaction-style
@@ -29,12 +30,7 @@ object Recompress {
     val out = args(1)
     val codec = if (args.length > 2) Some(args(2)).filter(_ != "none") else None
     val chunkKiB = if (args.length > 3) args(3).toInt else 64
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.{Curate, Dedup, Similarity}
 
 /**
@@ -150,12 +151,7 @@ object ScaleCurve {
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0).toLong else 50000L
     val factor = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // identical shapes to the SparkEntry bench queries, corpus swapped

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.CqlPipeline
 import graft.operators.CqlPipeline.Projection
 import graft.sinks.BulkSink
@@ -19,11 +19,8 @@ object Soak {
     val n = if (args.length > 0) args(0).toLong else 10000000L
     val buckets = if (args.length > 1) args(1).toInt else 32
     val out = if (args.length > 2) args(2) else "/tmp/graft-soak"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Sessions.local(Sessions.cpus)
       .config("spark.sql.shuffle.partitions", buckets)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.operators.CqlPipeline
 import graft.operators.CqlPipeline.Projection
 import graft.sinks.{BulkSink, InProcessCluster, LoaderPlan, StreamLoader}
@@ -33,11 +33,8 @@ object StreamSoak {
     val rf = if (args.length > 4) args(4).toInt else 2
     val codec = if (args.length > 5) Some(args(5)).filter(_ != "none") else None
     require(rf >= 1 && rf <= 3, s"rf must be 1..3 (3-node soak ring), got $rf")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val spark = Sessions.local(Sessions.cpus)
       .config("spark.sql.shuffle.partitions", buckets)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

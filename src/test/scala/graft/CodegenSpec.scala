@@ -26,11 +26,7 @@ class CodegenSpec extends AnyFunSuite with BeforeAndAfterAll {
     val _ = SparkSuite.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    b(SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    b(Sessions.local(2)).getOrCreate()
   }
 
   override def afterAll(): Unit = {

@@ -29,13 +29,9 @@ class KernelEquivalenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val _ = SparkSuite.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "2")
+    Sessions.local(2)
       .config("spark.sql.codegen.fallback", "false")
       .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
 

@@ -11,12 +11,7 @@ import graft.operators.CqlPipeline.Projection
 import graft.sinks.BulkSink
 
 object SparkSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4).getOrCreate()
 
   /** Every message down the cause chain — Spark wraps task failures in
     * several layers, so asserts grep the whole chain, not just the top. */

@@ -578,4 +578,34 @@ class PlanSpec extends AnyFunSuite {
       s"event rows sort-merge against the tiny stats frame:\n${p.take(2000)}")
     assert(!p.contains("Window"), p.take(2000))
   }
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  private def exchanges(df: org.apache.spark.sql.DataFrame) =
+    Aqe.collect(df.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+
+  test("widenScan: an under-split scan gains exactly one hash exchange on the key") {
+    val d = spark.read.parquet(s"$sf/documents.parquet")
+    val target = spark.sparkContext.defaultParallelism
+    assert(d.rdd.getNumPartitions < math.max(2, target / 2), "fixture is not under-split")
+    assert(exchanges(d).isEmpty)
+    val added = exchanges(SparkEntry.widenScan(d, org.apache.spark.sql.functions.col("doc_id")))
+    assert(added.size === 1)
+    added.head.outputPartitioning match {
+      case org.apache.spark.sql.catalyst.plans.physical.HashPartitioning(Seq(
+          a: org.apache.spark.sql.catalyst.expressions.Attribute), n) =>
+        assert(a.name === "doc_id" && n === target)
+      case p => fail(s"not a hash exchange on doc_id: $p")
+    }
+  }
+
+  test("widenScan: a scan with at least half the session's parallelism gains no exchange") {
+    val target = spark.sparkContext.defaultParallelism
+    val dir = java.nio.file.Files.createTempDirectory("graft-widen").toString + "/t"
+    spark.range(0, 10000, 1, target).write.parquet(dir)
+    val d = spark.read.parquet(dir)
+    assert(d.rdd.getNumPartitions >= math.max(2, target / 2), "fixture is under-split")
+    assert(exchanges(SparkEntry.widenScan(d, org.apache.spark.sql.functions.col("id"))).isEmpty)
+  }
 }

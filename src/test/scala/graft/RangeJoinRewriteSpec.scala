@@ -17,11 +17,8 @@ class RangeJoinRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark: SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.session.timeZone", "UTC")
+    Sessions.local(2)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()
   }

@@ -112,4 +112,70 @@ object KernelPropertySpec extends Properties("TextHash") {
       val expected = xs.count(x => x != null && words.contains(x))
       TextHash.countIn(arr(xs), set) == expected
     }
+
+  // --- packed sorted-long sets: the one bounded varint reader ---
+
+  private val sortedLongs: Gen[Array[Long]] = Gen.listOf(Gen.oneOf(
+    Gen.choose(Long.MinValue, Long.MaxValue), Gen.choose(-300L, 300L),
+    Gen.oneOf(Long.MinValue, Long.MaxValue, 0L))).map(_.toArray.sorted)
+
+  private def pack(xs: Array[Long]): Array[Byte] =
+    TextHash.packSortedLongs(new GenericArrayData(xs))
+
+  /** One varint of 1..10 bytes: continuation bytes with random payloads. */
+  private def varint(bytes: Int): Gen[List[Byte]] =
+    Gen.listOfN(bytes, Gen.choose(0, 0x7f)).map { ps =>
+      ps.init.map(p => (p | 0x80).toByte) :+ ps.last.toByte
+    }
+
+  private val validBlob: Gen[Array[Byte]] =
+    Gen.nonEmptyListOf(Gen.choose(1, 10).flatMap(varint)).map(_.flatten.toArray)
+
+  /** The unbounded decode loop the kernels used before the bounded reader. */
+  private def referenceUnpack(blob: Array[Byte]): Array[Long] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var pos = 0
+    var prev = 0L
+    while (pos < blob.length) {
+      var x = 0L; var s = 0; var m = 0L
+      while ({ m = blob(pos); pos += 1; (m & 0x80) != 0 }) { x |= (m & 0x7fL) << s; s += 7 }
+      x |= (m & 0x7fL) << s
+      prev = if (out.isEmpty) (x >>> 1) ^ -(x & 1L) else prev + x
+      out += prev
+    }
+    out.toArray
+  }
+
+  /** 11+ bytes of one varint: 11..20 continuation bytes, then a terminator. */
+  private val overlong: Gen[Array[Byte]] = for {
+    n <- Gen.choose(11, 20)
+    ps <- Gen.listOfN(n, Gen.choose(0, 0x7f))
+    last <- Gen.choose(0, 0x7f)
+  } yield (ps.map(p => (p | 0x80).toByte) :+ last.toByte).toArray
+
+  private def rejectsOverlong(f: => Any): Boolean =
+    try { f; false }
+    catch { case e: IllegalArgumentException => e.getMessage.contains("overlong varint") }
+
+  property("unpackSortedLongs inverts packSortedLongs") = Prop.forAll(sortedLongs) { xs =>
+    TextHash.unpackSortedLongs(pack(xs)).toLongArray().sameElements(xs)
+  }
+
+  property("packedIntersectCount == distinct set intersection size") =
+    Prop.forAll(sortedLongs, sortedLongs) { (a, b) =>
+      TextHash.packedIntersectCount(pack(a), pack(b)) == (a.toSet & b.toSet).size
+    }
+
+  property("random valid blobs decode exactly as the unbounded loop did") =
+    Prop.forAll(validBlob) { blob =>
+      TextHash.unpackSortedLongs(blob).toLongArray().sameElements(referenceUnpack(blob))
+    }
+
+  property("an overlong varint throws in both kernels") =
+    Prop.forAll(overlong, validBlob, validBlob) { (bad, pre, post) =>
+      rejectsOverlong(TextHash.unpackSortedLongs(pre ++ bad ++ post)) &&
+        rejectsOverlong(TextHash.unpackSortedLongs(bad)) &&
+        rejectsOverlong(TextHash.packedIntersectCount(bad ++ post, pre)) &&
+        rejectsOverlong(TextHash.packedIntersectCount(pre, bad ++ post))
+    }
 }
