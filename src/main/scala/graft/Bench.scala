@@ -164,18 +164,20 @@ object Bench {
     }
     // The query count outgrew the tail window at r11 (84 entries ≈ 2.3k
     // chars — the line's HEAD was cut off and the driver parsed null). The
-    // stdout "queries" map now adaptively drops the CHEAPEST entries until
-    // the line fits, with a "queries_omitted" count; "value" stays the sum
-    // over ALL queries and the file copy always carries the full map.
+    // stdout "queries" map shows the sentinel, then queries in name order
+    // while the line fits, with a "queries_omitted" count; "value" stays
+    // the sum over ALL queries and the file copy always carries the full
+    // map. The cut is sized with every number at a fixed width, so the
+    // visible set depends on the query names alone and is the same every
+    // run: a query never looks dropped because another one got cheaper.
     val StdoutBudget = 1650
-    var kept = mins
-    var line = render(fmt, kept, mins.size - kept.size, withNorm = false)
-    while (line.length > StdoutBudget && kept.size > 1) {
-      val dropIdx = kept.zipWithIndex
-        .filter(_._1._1 != SentinelQuery).minBy(_._1._2)._2
-      kept = kept.patch(dropIdx, Nil, 1)
-      line = render(fmt, kept, mins.size - kept.size, withNorm = false)
-    }
+    val (sentinelEntry, others) = mins.partition(_._1 == SentinelQuery)
+    val ordered = sentinelEntry ++ others
+    val shown = (ordered.size to 1 by -1).find { n =>
+      render(_ => "99.999", ordered.take(n), mins.size - n,
+        withNorm = false).length <= StdoutBudget
+    }.getOrElse(ordered.size min 1)
+    val line = render(fmt, ordered.take(shown), mins.size - shown, withNorm = false)
     if (line.length > 1800)
       System.err.println(s"[bench] WARNING: JSON line ${line.length} chars — " +
         "may outgrow the driver's 2000-char tail capture")

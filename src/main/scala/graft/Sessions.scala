@@ -38,11 +38,19 @@ object Sessions {
    *    small-shuffle parallelism floor, not a cluster tuning. It is a
    *    runtime SQL conf, so a deployment that wants the stock floor sets
    *    it with `spark.conf.set`.
+   *  - optimizer.canChangeCachedPlanOutputPartitioning=true: lets AQE
+   *    coalesce the shuffle partitions of a plan under a `persist`. This
+   *    Spark build ships it false, which pins a cached post-shuffle frame
+   *    at the raw `shuffle.partitions` width: a probe of one ~2k-row
+   *    frame read 200 partitions cached against 1 uncached, and every
+   *    later stage over the cache paid 200 tiny tasks (the curation
+   *    pipeline's LSH chain ran 8 such stages per job).
    */
   def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
 
   /** A session builder under the engine defaults and no master — for
     * the CLI, whose master spark-submit supplies. */

@@ -137,7 +137,8 @@ object Similarity {
    * reaches `threshold` is dropped — each semantic group keeps its min-id
    * representative. Returns the KEPT rows of `df`, all columns intact.
    *
-   * Scale shape: training is bounded-sample (like IVF); assignment is one
+   * Scale shape: training is bounded-sample (like IVF: one pass draws
+   * it, [[graft.core.KMeans]] trains on the driver); assignment is one
    * scan; the within-cluster pair join is the only quadratic piece and it
    * is quadratic in CLUSTER size, not corpus size — size `nlist`
    * proportional to the corpus (the paper uses fixed-occupancy clusters)
@@ -157,25 +158,20 @@ object Similarity {
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nlist: Int = 16, seed: Long = 42L,
       maxTrainRows: Long = 100000L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
     // cluster L2-NORMALIZED embeddings (the paper's setup): the grouping
     // criterion is cosine, so same-direction vectors must be the same
     // point to k-means or a scale difference could split a dup group
     // across cells; zero vectors stay raw (no direction to normalize)
     val v = df.select(col(idCol).as("_sd_id"), col(vecCol).as("_sd_vec"))
       .withColumn("_sd_nrm0", norm(col("_sd_vec")))
-      .withColumn("features", array_to_vector(
+      .withColumn("_sd_unit",
         when(col("_sd_nrm0") > 0,
           transform(col("_sd_vec"), x => x.cast(DoubleType) / col("_sd_nrm0")))
-          .otherwise(col("_sd_vec").cast("array<double>"))))
-      .drop("_sd_nrm0")
-    val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(5)
-      .setFeaturesCol("features").setPredictionCol("_sd_cluster")
-      .fit(trainSample(v, maxTrainRows, seed))
-    val assigned = model.transform(v)
-      .select(col("_sd_id"), col("_sd_vec"), col("_sd_cluster"))
+          .otherwise(col("_sd_vec").cast("array<double>")))
+    val cents = graft.core.KMeans.train(
+      trainSample(v, col("_sd_unit"), maxTrainRows, seed), nlist, seed)
+    val assigned = v.select(col("_sd_id"), col("_sd_vec"),
+      cellOf(col("_sd_unit"), cents).as("_sd_cluster"))
     // collapse EXACT duplicates first (one linear hash aggregation): a
     // non-min member m of an exact group has its representative r < m at
     // cosine 1.0 >= threshold, so m is dropped under the contract no
@@ -185,7 +181,7 @@ object Similarity {
     // exactly the same survivor set. Mega-duplicate groups (the common
     // real-corpus shape) now cost one aggregation, not |group|^2 pairs.
     // reps feeds BOTH sides of the pair join AND the kept-set anti-join:
-    // left lazy, the k-means UDF + collapse aggregation would execute
+    // left lazy, the cell assignment + collapse aggregation would execute
     // three times (the r10 plan audit showed the pipeline planned 3x).
     // A LAZY localCheckpoint computes it once on first use and shares
     // the materialized partitions across the three scans — no extra
@@ -222,7 +218,8 @@ object Similarity {
    * cells; each query probes only the nprobe nearest cells. The classic
    * trade: train once (sampled at real scale), then every search touches
    * ~nprobe/nlist of the corpus. Centroids ride to executors as literal
-   * arrays (nlist is small); assignment is one MLlib transform.
+   * arrays (nlist is small); assignment is one scan through the
+   * codegen'd `pq_encode` kernel with the centroids as its one subspace.
    */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
@@ -242,42 +239,38 @@ object Similarity {
    *   - `centroids`: `(bucket, centroid array<double>)` — `nlist` rows.
    * Few k-means iterations suffice: cells only gate the candidate set,
    * exact cosine re-ranks inside them — centroid quality is not
-   * precision. Training reads a BOUNDED sample so the iterative job
-   * never scans the full corpus.
+   * precision. Training reads a BOUNDED sample ([[trainSample]], one
+   * pass over the corpus) and iterates on the driver, never on the corpus.
    */
   def ivfIndexFrames(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, seed: Long = 42L,
-      maxTrainRows: Long = 100000L): (DataFrame, DataFrame) =
-    ivfIndexFramesSampled(corpus, None, idCol, vecCol, nlist, seed, maxTrainRows)
-
-  /** [[ivfIndexFrames]] with an optional PRE-DRAWN training sample (the
-    * (idCol, vecCol) projection of `trainSample(corpus)`) so compositions
-    * training several models over one corpus ([[ivfPqIndexFrames]]) pay
-    * the sample's count-probe job once. Sampling commutes with the
-    * per-row projections (same partitions, same seed, same row picks),
-    * so the trained model is identical to the unshared form. */
-  private def ivfIndexFramesSampled(corpus: DataFrame,
-      sampled: Option[DataFrame], idCol: String, vecCol: String,
-      nlist: Int, seed: Long, maxTrainRows: Long): (DataFrame, DataFrame) = {
+      maxTrainRows: Long = 100000L): (DataFrame, DataFrame) = {
     Ids.requireIntegral(corpus, idCol, "ivfIndexFrames")
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    def prep(df: DataFrame): DataFrame =
-      df.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
-        .withColumn("features", array_to_vector(col("c_vec").cast("array<double>")))
-    val c = prep(corpus)
-    val train = sampled.map(prep).getOrElse(trainSample(c, maxTrainRows, seed))
-    val model = new KMeans().setK(nlist).setSeed(seed).setMaxIter(5)
-      .setFeaturesCol("features").setPredictionCol("bucket")
-      .fit(train)
-    val assigned = model.transform(c).select(col("c_id"), col("c_vec"), col("bucket"))
+    ivfIndex(corpus, trainSample(corpus, col(vecCol), maxTrainRows, seed),
+      idCol, vecCol, nlist, seed)
+  }
+
+  /** [[ivfIndexFrames]] trained on an already drawn sample, so
+    * [[ivfPqIndexFrames]] trains both models on one corpus pass. */
+  private def ivfIndex(corpus: DataFrame, sample: Array[Array[Double]],
+      idCol: String, vecCol: String, nlist: Int,
+      seed: Long): (DataFrame, DataFrame) = {
+    val cents = graft.core.KMeans.train(sample, nlist, seed)
+    val assigned = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
+      cellOf(col(vecCol), cents).as("bucket"))
     val spark = corpus.sparkSession
     import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (v, i) => (i, v.toArray.toSeq) }.toSeq
-      .toDF("bucket", "centroid")
+    val centroids = cents.toSeq.zipWithIndex
+      .map { case (v, i) => (i, v.toSeq) }.toDF("bucket", "centroid")
     (assigned, centroids)
   }
+
+  /** The cell of each row: the index of the nearest centroid, through the
+    * codegen'd `pq_encode` kernel with the centroids as its one subspace
+    * — the same [[graft.core.VecMath.nearest]] rule training used. */
+  private def cellOf(vec: Column, cents: Array[Array[Double]]): Column =
+    element_at(graft.functions.pq_encode(vec.cast("array<double>"),
+      Seq(cents.toSeq.map(_.toSeq))), 1)
 
   /** Search a (possibly storage-round-tripped) [[ivfIndexFrames]] index:
     * the `nlist`-row centroid table collects to the driver (the same
@@ -402,14 +395,14 @@ object Similarity {
    *   - `codebooks`: `(sub, code, centroid array<double>)` — at most
    *     m*ksub rows, the driver-collectable model.
    *
-   * Training splits each sampled vector into m contiguous dsub-dim
-   * subvectors. A subspace with <= ksub DISTINCT subvectors keeps one
-   * codeword per distinct value (quantization error exactly 0 — the
-   * property the planted-corpus oracle exploits); a richer subspace
-   * falls back to k-means over a bounded sample (same shape as
-   * [[ivfIndexFrames]]: the iterative job never scans the full corpus).
-   * Codewords order deterministically (exact mode: lexicographic;
-   * k-means: seeded center order), so codes are reproducible.
+   * Training draws one bounded sample ([[trainSample]], one corpus pass)
+   * and splits each sampled vector into m contiguous dsub-dim
+   * subvectors; each subspace trains on the driver with
+   * [[graft.core.KMeans]]. A subspace with <= ksub DISTINCT subvectors
+   * keeps one codeword per distinct value in lexicographic order
+   * (quantization error exactly 0 — the property the planted-corpus
+   * oracle exploits); a richer subspace gets seeded k-means codewords
+   * (seed + subspace index). Either way codes are reproducible.
    *
    * Encoding is one scan through the codegen'd
    * [[graft.functions.pq_encode]] kernel — m*ksub*dsub multiply-adds per
@@ -417,59 +410,28 @@ object Similarity {
    */
   def pqIndexFrames(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, ksub: Int = 64, seed: Long = 42L,
-      maxTrainRows: Long = 100000L): (DataFrame, DataFrame) =
-    pqIndexFramesSampled(corpus, None, idCol, vecCol, m, ksub, seed,
-      maxTrainRows)
-
-  /** [[pqIndexFrames]] with an optional pre-drawn training sample — the
-    * [[ivfIndexFramesSampled]] contract. */
-  private def pqIndexFramesSampled(corpus: DataFrame,
-      sampled: Option[DataFrame], idCol: String, vecCol: String,
-      m: Int, ksub: Int, seed: Long,
-      maxTrainRows: Long): (DataFrame, DataFrame) = {
+      maxTrainRows: Long = 100000L): (DataFrame, DataFrame) = {
     Ids.requireIntegral(corpus, idCol, "pqIndexFrames")
+    pqIndex(corpus, trainSample(corpus, col(vecCol), maxTrainRows, seed),
+      idCol, vecCol, m, ksub, seed)
+  }
+
+  /** [[pqIndexFrames]] trained on an already drawn sample (see
+    * [[ivfIndex]]). */
+  private def pqIndex(corpus: DataFrame, sample: Array[Array[Double]],
+      idCol: String, vecCol: String, m: Int, ksub: Int,
+      seed: Long): (DataFrame, DataFrame) = {
     require(m >= 1 && ksub >= 1, s"need m >= 1 and ksub >= 1, got m=$m ksub=$ksub")
-    def prep(df: DataFrame): DataFrame = df.select(col(idCol).as("c_id"),
-      col(vecCol).cast("array<double>").as("c_vec"))
-    val c = prep(corpus)
-    val dims = c.select(size(col("c_vec")).as("d")).limit(1).collect()
-    require(dims.nonEmpty, "pqIndexFrames: empty corpus")
-    val dim = dims.head.getInt(0)
+    require(sample.nonEmpty, "pqIndexFrames: empty corpus")
+    val dim = sample(0).length
     require(dim % m == 0, s"dim=$dim must be divisible by m=$m")
     val dsub = dim / m
-
-    val sample = sampled.map(prep).getOrElse(trainSample(c, maxTrainRows, seed))
-    val svAll = sample.select(posexplode(array((0 until m).map(j =>
-      slice(col("c_vec"), j * dsub + 1, dsub)): _*)).as(Seq("sub", "sv")))
-    // ONE persisted distinct-subvector frame serves both driver reads
-    // (counts, exact words): the count collect materializes the cache in
-    // its own job and the words collect reads blocks — one fewer
-    // driver-sequenced job than the r20 eager-checkpoint form, and the
-    // cache releases in the finally instead of pinning for the session
-    val svDistinct = svAll.distinct().persist()
-    try {
-    val distinctPerSub = svDistinct.groupBy("sub").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-
-    val exactSubs = (0 until m).filter(j => distinctPerSub.getOrElse(j, 0L) <= ksub)
-    val exactWords: Map[Int, Seq[Seq[Double]]] =
-      if (exactSubs.isEmpty) Map.empty
-      else svDistinct.filter(col("sub").isin(exactSubs: _*))
-        .orderBy(col("sub"), col("sv")).collect()
-        .groupBy(_.getInt(0))
-        .map { case (j, rows) => j -> rows.toSeq.map(_.getSeq[Double](1)) }
-    val codebook: Seq[Seq[Seq[Double]]] = (0 until m).map { j =>
-      exactWords.getOrElse(j, {
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        val sub = svAll.filter(col("sub") === j)
-          .withColumn("features", array_to_vector(col("sv")))
-        new KMeans().setK(ksub).setSeed(seed + j).setMaxIter(5)
-          .setFeaturesCol("features").setPredictionCol("_p").fit(sub)
-          .clusterCenters.toSeq.map(_.toArray.toSeq)
-      })
+    val codebook = (0 until m).map { j =>
+      graft.core.KMeans.train(sample.map(_.slice(j * dsub, (j + 1) * dsub)),
+        ksub, seed + j).toSeq.map(_.toSeq)
     }
-
+    val c = corpus.select(col(idCol).as("c_id"),
+      col(vecCol).cast("array<double>").as("c_vec"))
     val codes = c.select(col("c_id"),
       graft.functions.pq_encode(col("c_vec"), codebook).as("code"),
       sqrt(dot(col("c_vec"), col("c_vec"))).as("c_norm"))
@@ -479,9 +441,6 @@ object Similarity {
       words.zipWithIndex.map { case (w, k) => (j, k, w) }
     }.toDF("sub", "code", "centroid")
     (codes, codebooks)
-    // the codebook is driver-side data by here; nothing downstream reads
-    // the distinct-subvector cache
-    } finally { svDistinct.unpersist(); () }
   }
 
   /**
@@ -595,17 +554,13 @@ object Similarity {
   def ivfPqIndexFrames(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, m: Int = 8, ksub: Int = 64, seed: Long = 42L,
       maxTrainRows: Long = 100000L): (DataFrame, DataFrame, DataFrame) = {
-    // ONE training sample serves both trainings: sampling commutes with
-    // the per-row projections each trainer applies (same partitions,
-    // same seed, same row picks — models identical to the unshared
-    // form), so the coarse quantizer and the PQ codebooks stop paying
-    // the count-probe + sample derivation twice over the same corpus.
-    val sampled = Some(trainSample(
-      corpus.select(col(idCol), col(vecCol)), maxTrainRows, seed))
-    val (assigned, centroids) = ivfIndexFramesSampled(
-      corpus, sampled, idCol, vecCol, nlist, seed, maxTrainRows)
-    val (codes, codebooks) = pqIndexFramesSampled(
-      corpus, sampled, idCol, vecCol, m, ksub, seed, maxTrainRows)
+    // ONE training sample serves both trainings: it is the same rows
+    // either unshared form would draw, so the models are identical and
+    // the corpus runs once for training, not twice
+    Ids.requireIntegral(corpus, idCol, "ivfPqIndexFrames")
+    val sample = trainSample(corpus, col(vecCol), maxTrainRows, seed)
+    val (assigned, centroids) = ivfIndex(corpus, sample, idCol, vecCol, nlist, seed)
+    val (codes, codebooks) = pqIndex(corpus, sample, idCol, vecCol, m, ksub, seed)
     val index = assigned.select(col("c_id"), col("bucket")).join(codes, "c_id")
     (index, centroids, codebooks)
   }
@@ -645,20 +600,45 @@ object Similarity {
   }
 
   /**
-   * Bounded k-means training sample: at most ~1.1 * maxTrainRows rows
-   * (expected; Bernoulli sampling has no hard cap), the full frame when it
-   * is already small enough. The row-count probe is one cheap job (count
-   * aggregates map-side); the alternative — limit(n) — funnels everything
-   * through one task AND biases training to the first partitions.
-   * Deterministic for a given seed, so IVF results are reproducible.
+   * Bounded k-means training sample, collected to the driver: the
+   * `min(n, maxTrainRows)` rows with the smallest `xxhash64(seed, vec)`,
+   * ties broken by the vector. One job: each partition keeps its bounded
+   * top-k, the tops shuffle to ONE partition and merge there, so a lazy
+   * multi-stage input runs once and the driver receives at most
+   * `maxTrainRows` rows however many partitions the input has (the
+   * shape of `TakeOrderedAndProjectExec.execute`; `RDD.takeOrdered`
+   * would ship every partition's top-k to the driver). The cap is exact,
+   * and the rows depend on the seed and the data only, not on
+   * partitioning. (An `orderBy(...).limit(...)` would be the same job,
+   * but the optimizer drops a limit its input provably fits under, and
+   * the global sort left behind runs the input twice.)
    */
-  private[operators] def trainSample(c: DataFrame, maxTrainRows: Long,
-      seed: Long): DataFrame = {
-    require(maxTrainRows > 0, s"maxTrainRows must be positive: $maxTrainRows")
-    val n = c.count()
-    if (n <= maxTrainRows) c
-    else c.sample(withReplacement = false,
-      math.min(1.0, maxTrainRows * 1.1 / n), seed)
+  private def trainSample(df: DataFrame, vec: Column,
+      maxTrainRows: Long, seed: Long): Array[Array[Double]] = {
+    require(maxTrainRows > 0 && maxTrainRows <= Int.MaxValue,
+      s"maxTrainRows must be in 1..${Int.MaxValue}: $maxTrainRows")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val v = vec.cast("array<double>")
+    val byHash = Ordering.by[(Long, Array[Double]), Long](_._1)
+      .orElseBy(_._2)(graft.core.KMeans.lexicographic)
+    val cap = maxTrainRows.toInt
+    val tops = df.select(xxhash64(lit(seed), v), v).as[(Long, Array[Double])]
+      .rdd.mapPartitions(rows => smallest(rows, cap, byHash))
+    val merged = if (tops.getNumPartitions <= 1) tops
+      else tops.repartition(1).mapPartitions(rows => smallest(rows, cap, byHash))
+    merged.collect().map(_._2)
+  }
+
+  /** The `k` smallest of `rows` under `ord`, ascending; holds at most `k`. */
+  private def smallest[T](rows: Iterator[T], k: Int, ord: Ordering[T]): Iterator[T] = {
+    val heap = new java.util.PriorityQueue[T](ord.reverse) // largest kept on top
+    rows.foreach { r =>
+      if (heap.size < k) heap.add(r)
+      else if (ord.lt(r, heap.peek())) { heap.poll(); heap.add(r) }
+    }
+    import scala.jdk.CollectionConverters._
+    heap.asScala.toSeq.sorted(ord).iterator
   }
 
   /**

@@ -182,8 +182,9 @@ object ScaleCurve {
           k = 5, nlist = 8, nprobe = 3).count()
       },
       "embed_pq_topk" -> { n =>
-        // k-means codebooks train on a bounded sample (8 sub-jobs, fixed
-        // cost at any n); the clock then measures the ENCODE scan
+        // k-means codebooks train on the driver over a bounded sample
+        // (one sample pass, fixed training cost at any n); the clock then
+        // measures the ENCODE scan
         // (n*m*ksub*dsub madds, linear) + the codes-table ADC scan
         val e = vecs(spark, n * 4)
         Similarity.pqTopK(e.filter(col("vec_id") < 10),
@@ -262,7 +263,7 @@ object ScaleCurve {
         // nlist grows with n (constant ~1000-vector cluster occupancy —
         // the paper's fixed-occupancy setup), so the within-cluster pair
         // join stays linear; training is capped at a 20k sample so the
-        // iterative k-means job never scans the corpus. The honest
+        // driver-side k-means never iterates over the corpus. The honest
         // super-linear remainder is the assignment pass (n*k distance
         // evals, k ∝ n) — tiny at these sizes, and the term a two-level
         // coarse quantizer would remove at true 100 TB.

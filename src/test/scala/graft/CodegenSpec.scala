@@ -89,6 +89,39 @@ class CodegenSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("pq_encode rejects a vector of the wrong length (interpreted and codegen)") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference,
+      InterpretedUnsafeProjection, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    // two subspaces of two dims: the codebook expects 4 elements. Unsafe
+    // arrays are the codegen input, where an out-of-range read is not caught
+    val cb = Seq(Seq(Seq(0.0, 0.0), Seq(1.0, 1.0)), Seq(Seq(0.0, 0.0), Seq(2.0, 2.0)))
+    def arrays(xs: Double*) = Seq(
+      FloatType -> UnsafeArrayData.fromPrimitiveArray(xs.map(_.toFloat).toArray),
+      DoubleType -> UnsafeArrayData.fromPrimitiveArray(xs.toArray))
+    for ((xs, code) <- Seq((Seq(1.0, 1.0, 0.0), None), (Seq(1.0, 1.0, 2.0, 2.0), Some(Seq(1, 1))),
+        (Seq(1.0, 1.0, 2.0, 2.0, 9.0), None));
+        (elem, arr) <- arrays(xs: _*)) {
+      val e = PqEncodeExpr(BoundReference(0, ArrayType(elem, containsNull = false),
+        nullable = false), cb)
+      for ((path, proj) <- Seq(
+          "interpreted" -> InterpretedUnsafeProjection.createProjection(Seq(e)),
+          "codegen" -> GenerateUnsafeProjection.generate(Seq(e)))) {
+        val what = s"$path $elem ${xs.length} elements"
+        code match {
+          case Some(c) =>
+            assert(proj(InternalRow(arr)).getArray(0).toIntArray().toSeq === c, what)
+          case None =>
+            val ex = intercept[IllegalArgumentException](proj(InternalRow(arr)))
+            assert(ex.getMessage.contains(s"vector has ${xs.length} elements") &&
+              ex.getMessage.contains("expects 4"), s"$what: ${ex.getMessage}")
+        }
+      }
+    }
+  }
+
   test("GraftExtensions registers the functions for SQL") {
     val s = freshSession(_.withExtensions(new GraftExtensions))
     assert(s.catalog.functionExists("cassandra_token"),

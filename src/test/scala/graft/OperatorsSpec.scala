@@ -186,6 +186,17 @@ class OperatorsSpec extends AnyFunSuite {
     val trueTop = bfAll.filter(_.getInt(3) == 1).map(r => r.getLong(0) -> r.getLong(1)).toMap
     val hits = ivf.count { case ((qid, _), cid) => trueTop(qid) == cid }
     assert(hits >= 10, s"recall@1 too low: $hits/20")
+    // integer vectors train and assign exactly like their double casts
+    val ints = c.select(col("vec_id"),
+      transform(col("embedding"), x => round(x * 100).cast("int")).as("embedding"))
+    def cells(corpus: org.apache.spark.sql.DataFrame) = {
+      val (assigned, centroids) =
+        Similarity.ivfIndexFrames(corpus, "vec_id", "embedding", nlist = 8)
+      (assigned.select("c_id", "bucket").collect().toSet,
+        centroids.collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap)
+    }
+    assert(cells(ints) === cells(ints.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding"))))
   }
 
   test("quantized topk: exact re-ranked sims, recall vs brute force") {
@@ -998,6 +1009,62 @@ class OperatorsSpec extends AnyFunSuite {
     // min id of each cosine-identical group survives; the axis-2
     // singleton is untouched (cross-axis cosine is 0)
     assert(kept === Set(1L, 2L, 3L))
+  }
+
+  test("k-means index builds and semanticDedup read their input once while training") {
+    import graft.operators.Similarity
+    val n = 600L
+    val acc = spark.sparkContext.longAccumulator("rows read")
+    val seen = udf { () => acc.add(1); true }.asNondeterministic()
+    // 16-dim vectors, more distinct than any k below, read through a
+    // counting filter that no optimizer rule may drop, fold or reorder
+    val corpus = spark.range(0, n, 1, 4).filter(seen())
+      .select(col("id").as("vec_id"), transform(sequence(lit(0), lit(15)),
+        i => sin(col("id") * (i + 1)).cast("float")).as("v"))
+    // the eager part of an index build is training: one sample pass
+    def reads(build: => Any): Long = { acc.reset(); build; acc.value }
+    assert(reads(Similarity.ivfIndexFrames(corpus, "vec_id", "v", nlist = 8)) === n)
+    assert(reads(Similarity.pqIndexFrames(corpus, "vec_id", "v", m = 4, ksub = 16)) === n)
+    assert(reads(Similarity.ivfPqIndexFrames(corpus, "vec_id", "v",
+      nlist = 8, m = 4, ksub = 16)) === n)
+    // semanticDedup adds the representatives' lazy checkpoint, whose
+    // adaptive plan runs its one shuffle (cell assignment + exact-dup
+    // collapse) when the checkpoint is declared: the sample pass plus that
+    assert(reads(Similarity.semanticDedup(corpus, "vec_id", "v",
+      threshold = 0.99, nlist = 8)) === 2 * n)
+  }
+
+  test("k-means training sample reaches the driver capped, however many partitions hold it") {
+    import graft.operators.Similarity
+    import org.apache.spark.scheduler._
+    // 8 partitions of 200 rows, each far over the 25-row cap, with 512-dim
+    // vectors (4 KB a row): shipping every partition's top-25 to the
+    // driver returns 8 x 100 KB; merging them on an executor returns one
+    val cap = 25
+    val rowBytes = 512L * 8
+    val corpus = spark.range(0, 1600, 1, 8).select(col("id").as("vec_id"),
+      transform(sequence(lit(0), lit(511)), i => sin(col("id") * (i + 1))).as("v"))
+    val resultBytes = new java.util.concurrent.atomic.AtomicLong
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { started.incrementAndGet(); () }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = { ended.incrementAndGet(); () }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskMetrics != null) { resultBytes.addAndGet(te.taskMetrics.resultSize); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Similarity.ivfIndexFrames(corpus, "vec_id", "v", nlist = 4, maxTrainRows = cap)
+      // listener delivery is async: a job's task ends precede its job end
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while ((started.get == 0 || ended.get < started.get) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(started.get === 1 && ended.get === 1, "training is one job")
+      assert(resultBytes.get < 2 * cap * rowBytes,
+        s"task results sent ${resultBytes.get} bytes to the driver for a " +
+          s"$cap-row sample of ${cap * rowBytes} bytes")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("topk_freq: exact under capacity, MG bound over capacity, merge across partitions") {

@@ -608,4 +608,21 @@ class PlanSpec extends AnyFunSuite {
     assert(d.rdd.getNumPartitions >= math.max(2, target / 2), "fixture is under-split")
     assert(exchanges(SparkEntry.widenScan(d, org.apache.spark.sql.functions.col("id"))).isEmpty)
   }
+
+  test("engine defaults let AQE coalesce a cached post-shuffle frame") {
+    import org.apache.spark.sql.functions._
+    // a child session at Spark's stock shuffle width: ~2k rows after one
+    // aggregation are a few KB, far under one coalesced partition's
+    // worth, so a cache that AQE may re-partition holds far fewer than 200
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "200")
+    val df = s.range(0, 20000, 1, 4)
+      .groupBy((col("id") % 2000).as("k")).agg(count(lit(1)).as("n"))
+      .persist()
+    try {
+      assert(df.count() === 2000L)
+      val parts = df.rdd.getNumPartitions
+      assert(parts < 200, s"cached frame kept $parts shuffle partitions")
+    } finally { df.unpersist(); () }
+  }
 }

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * Source rules that keep configuration in one place. `Sessions` is the
+ * Source rules that keep configuration and training in one place:
+ * `graft.core.KMeans` is the only k-means (no MLlib), `Sessions` is the
  * only session factory, and only the entry points (Sessions itself,
  * Bench, Verify, the CLI and the tools) read system properties or the
  * environment, so no operator or query carries a hidden switch.
@@ -40,5 +41,12 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(files.exists(_.endsWith("SparkEntry.scala")), "source tree not found")
     val bad = offenders(files, "sys" + ".props", "sys" + ".env")
     assert(bad.isEmpty, s"operators and queries take no switches from the process: $bad")
+  }
+
+  test("no MLlib import under src/main: the engine has one k-means") {
+    val files = scalaFiles("src/main/scala")
+    assert(files.exists(_.endsWith("KMeans.scala")), "source tree not found")
+    val bad = offenders(files, "org.apache.spark" + ".ml")
+    assert(bad.isEmpty, s"train with graft.core.KMeans, not MLlib: $bad")
   }
 }
