@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /**
@@ -27,14 +27,16 @@ object Curate {
    * Returns (curated corpus, stats). `langs` empty means keep all
    * languages.
    *
-   * Bookkeeping is one pass, not one action per stage: the per-row verdicts
-   * (quality pass, language pass, fingerprint) are computed once into a
-   * persisted frame, and the first FOUR stats fall out of a single
-   * aggregation — `count_distinct` of fingerprints among keepers IS the
-   * exact-dedup survivor count, no second corpus scan needed. The near-dup
-   * stat is a subtraction (survivors minus cluster losers; loser ids are
-   * unique within the exact-deduped corpus). At 100 TB this is 2 corpus
-   * scans total (build + final consumption) instead of ~7.
+   * One corpus scan and two materializations. Job 1 runs scan ->
+   * verdicts -> fingerprint -> exact dedup and `localCheckpoint`s the
+   * exact-deduped rows; job 2 anti-joins the near-dup losers and
+   * `localCheckpoint`s the curated rows it returns, so the caller (semantic
+   * dedup, a writer) reads blocks instead of re-running the text pipeline.
+   * Storage peaks at about 2x the exact-deduped corpus; blocks are
+   * executor-local, so a lost executor fails the job (the
+   * `minhashLshPairs` trade). Every count is observed at the root of a
+   * checkpoint job — its result stage, where a retried task's update is
+   * applied once (inside a shuffle-map stage a re-run counts again).
    */
   def curateCorpus(docs: DataFrame, idCol: String, textCol: String,
       minQuality: Double = 0.3, langs: Set[String] = Set("en"),
@@ -46,47 +48,34 @@ object Curate {
     val langPass =
       if (langs.isEmpty) lit(true)
       else col("predicted_lang").isin(langs.toSeq: _*)
-    val base = enriched
-      .withColumn("__q_pass", qPass)
-      .withColumn("__keep", qPass && langPass)
-      .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
-      .persist()
-    try {
-
-    val s = base.agg(
-      count(lit(1)).as("input"),
-      count_if(col("__q_pass")).as("after_quality"),
-      count_if(col("__keep")).as("after_lang"),
-      count_distinct(when(col("__keep"), col("__fp"))).as("after_exact")
-    ).head()
-    val (input, afterQuality, afterLang, afterExact) =
-      (s.getLong(0), s.getLong(1), s.getLong(2), s.getLong(3))
+    val (key, n) = (col("__k"), col("__n"))
+    def total(c: Column) = coalesce(sum(c), lit(0L))
 
     // exact dedup: keep the min-id doc per fingerprint. min_by over the
-    // whole row is ONE aggregation (map-side combinable) — the join-back-
-    // on-survivor-ids alternative reads the corpus twice and shuffles it
-    // twice.
-    val filtered = base.filter(col("__keep"))
-    val keepCols = filtered.columns.filterNot(_.startsWith("__"))
-    val exact = filtered.groupBy(col("__fp"))
-      .agg(min_by(struct(keepCols.map(col).toIndexedSeq: _*), col(idCol)).as("__r"))
-      .select("__r.*")
+    // whole row is ONE aggregation (map-side combinable); non-keepers
+    // collapse into one null-key group that carries their counts.
+    val funnel = Observation()
+    val exact = enriched
+      .groupBy(when(qPass && langPass, TextAnalysis.fingerprint(col(textCol))).as("__k"))
+      .agg(min_by(struct(enriched.columns.toIndexedSeq.map(col): _*), col(idCol)).as("__r"),
+        count(lit(1)).as("__n"), count_if(qPass).as("__nq"))
+      .observe(funnel, total(n).as("input"), total(col("__nq")).as("after_quality"),
+        total(when(key.isNotNull, n)).as("after_lang"), count(key).as("after_exact"))
+      .filter(key.isNotNull).select("__r.*")
+      .localCheckpoint()
 
-    // near-dup: drop every cluster member except the minimum id. The pair
-    // set is materialized inside minhashLshPairs, so the cluster iterations
-    // and the loser count run over a tiny checkpointed relation.
+    // near-dup: drop every cluster member except the minimum id
     val pairs = Dedup.minhashLshPairs(exact, idCol, textCol,
       threshold = nearDupThreshold)
-    val clusters = Dedup.dupClusters(pairs)
-    val losers = clusters.filter(col("doc_id") =!= col("cluster_id"))
+    val losers = Dedup.dupClusters(pairs).filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as(idCol))
-    val afterNearDup = afterExact - losers.count()
+    val kept = Observation()
     val curated = exact.join(losers, Seq(idCol), "left_anti")
+      .observe(kept, count(lit(1)).as("n")).localCheckpoint()
 
-    (curated, CurationStats(input, afterQuality, afterLang, afterExact, afterNearDup))
-    // release the cache even on failure — `curated` stays a valid lazy
-    // plan and recomputes one scan when the caller writes it out.
-    } finally { base.unpersist(); () }
+    val f = funnel.get.view.mapValues(_.asInstanceOf[Long]).toMap
+    (curated, CurationStats(f("input"), f("after_quality"), f("after_lang"),
+      f("after_exact"), kept.get("n").asInstanceOf[Long]))
   }
 
   /**

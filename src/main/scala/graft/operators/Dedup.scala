@@ -489,6 +489,10 @@ object Dedup {
    * O(component diameter) rounds, each one shuffle; near-dup components
    * are tiny (bounded by true duplicate clusters), so 2-3 rounds.
    *
+   * The loop's partition count is sized from `nPairs`, the pair count
+   * observed by the job that checkpoints the input pairs, so sizing costs
+   * no job of its own.
+   *
    * Lineage is truncated between rounds. `reliableCheckpoint = false`
    * (default) uses localCheckpoint — blocks live on executor local disk,
    * so an executor LOSS mid-loop is a recompute-from-nothing job failure;
@@ -510,10 +514,12 @@ object Dedup {
     // single-task rounds, and at real scale it grows back automatically.
     val spark = pairs.sparkSession
     // materialize the pair graph once up front (cheap re-scan when the
-    // caller already checkpointed, e.g. minhashLshPairs output) so the
-    // size probe and every loop round read blocks, not the pair dataflow
-    val p0 = ckpt(pairs)
-    val nPairs = p0.count()
+    // caller already checkpointed, e.g. minhashLshPairs output) so every
+    // loop round reads blocks, not the pair dataflow; the size is observed
+    // at the root of that same job (its result stage: exact under retries)
+    val sized = org.apache.spark.sql.Observation()
+    val p0 = ckpt(pairs.observe(sized, count(lit(1)).as("n")))
+    val nPairs = sized.get("n").asInstanceOf[Long]
     val defaultParts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val parts = math.max(1, math.min(defaultParts, (nPairs / 250000L).toInt + 1))
     // The loop runs in a CHILD session (shared SparkContext/cache, own

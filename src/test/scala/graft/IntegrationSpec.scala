@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -396,6 +397,80 @@ class IntegrationSpec extends AnyFunSuite {
     assert(curatedN === stats.afterNearDup)
     assert(acc.value <= (n * 2.4).toLong,
       s"stats + consumption took ${acc.value} row-reads for $n rows (must be ~2 passes)")
+  }
+
+  private val curateDocs = "/root/testdata/sf0.001/documents.parquet"
+
+  test("curateCorpus reads its input once; consumers of the result read none of it") {
+    // the counting-RDD pattern above: curation itself reads the input once,
+    // and consuming the curated frame twice — a count, then semantic dedup
+    // and a count — reads it zero more times (the result is materialized,
+    // not a lazy plan over a released cache)
+    import graft.operators.{Curate, Similarity}
+    val src = spark.read.parquet(curateDocs)
+      .select(col("doc_id"), col("text"),
+        array((col("doc_id") % 5).cast("double"), lit(1.0)).as("embedding"))
+    val rows = src.collect().toSeq
+    val n = rows.length.toLong
+    val acc = spark.sparkContext.longAccumulator("docReadsOnce")
+    val rdd = spark.sparkContext.parallelize(rows, 4).map { r => acc.add(1); r }
+    val (curated, stats) = Curate.curateCorpus(spark.createDataFrame(rdd, src.schema),
+      "doc_id", "text", minQuality = 0.1, langs = Set.empty)
+    assert(acc.value === n, s"curation read ${acc.value} rows for $n input rows")
+    assert(curated.count() === stats.afterNearDup)
+    val kept = Similarity.semanticDedup(curated, "doc_id", "embedding", threshold = 0.95)
+      .count()
+    assert(kept > 0 && kept <= stats.afterNearDup)
+    assert(acc.value === n,
+      s"consuming the curated frame re-read the input: ${acc.value} reads for $n rows")
+  }
+
+  test("curateCorpus funnel with the language gate on equals plain DataFrame counts") {
+    import graft.operators.{Curate, Dedup, TextAnalysis}
+    val d = spark.read.parquet(curateDocs)
+      .select("doc_id", "text")
+    // every doc twice (planted exact dups), plus German and French docs
+    // the gate drops and digit strings the quality bar drops
+    val de = Seq.fill(6)("der hund und die katze ist nicht ein vogel").mkString(" ")
+    val fr = Seq.fill(6)("le chat et la maison est une belle rue").mkString(" ")
+    val planted = Seq(900001L -> de, 900002L -> fr, 900003L -> de,
+      900004L -> "1 2 3 4 5", 900005L -> "7 7 7").toDF("doc_id", "text")
+    val docs = d.unionByName(d).unionByName(planted)
+    val (curated, st) = Curate.curateCorpus(docs, "doc_id", "text")
+    val verdicts = TextAnalysis.withLangId(TextAnalysis.withQuality(docs, "text"), "text")
+    val quality = verdicts.filter(col("quality") >= 0.3)
+    val lang = quality.filter(col("predicted_lang") === "en")
+    val survivorIds = lang.groupBy(TextAnalysis.fingerprint(col("text")))
+      .agg(min(col("doc_id")).as("doc_id"))
+    val exact = lang.dropDuplicates("doc_id").join(survivorIds, Seq("doc_id"), "left_semi")
+    val losers = Dedup.dupClusters(Dedup.minhashLshPairs(exact, "doc_id", "text"))
+      .filter(col("doc_id") =!= col("cluster_id")).count()
+    val want = Curate.CurationStats(docs.count(), quality.count(), lang.count(),
+      exact.count(), exact.count() - losers)
+    assert(st === want)
+    // every stage removes something on this corpus
+    assert(st.afterQuality < st.input && st.afterLang < st.afterQuality)
+    assert(st.afterExact < st.afterLang && st.afterNearDup < st.afterExact)
+    assert(curated.count() === st.afterNearDup)
+  }
+
+  test("curateCorpus on an empty corpus or one that fails quality: zero funnel, empty frame") {
+    import graft.operators.Curate
+    val d = spark.read.parquet(curateDocs)
+      .select("doc_id", "text")
+    val (none, st0) = Curate.curateCorpus(d.filter(lit(false)), "doc_id", "text")
+    assert(st0 === Curate.CurationStats(0, 0, 0, 0, 0))
+    assert(none.isEmpty)
+    val emptyRdd = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], d.schema)
+    val (none2, st1) = Curate.curateCorpus(emptyRdd, "doc_id", "text")
+    assert(st1 === Curate.CurationStats(0, 0, 0, 0, 0))
+    assert(none2.isEmpty)
+    // quality is at most 1, so a 1.5 bar rejects every doc
+    val (rejected, st2) = Curate.curateCorpus(d, "doc_id", "text", minQuality = 1.5)
+    assert(st2 === Curate.CurationStats(d.count(), 0, 0, 0, 0))
+    assert(rejected.isEmpty)
+    assert(rejected.columns.toSeq === Seq("doc_id", "text", "n_tokens", "alpha_ratio",
+      "stopword_ratio", "quality", "predicted_lang", "en_hits", "de_hits"))
   }
 
   test("offline loader streams runs to planned replicas; all-sessions-fail fails the job") {

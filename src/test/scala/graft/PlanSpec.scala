@@ -625,4 +625,60 @@ class PlanSpec extends AnyFunSuite {
       assert(parts < 200, s"cached frame kept $parts shuffle partitions")
     } finally { df.unpersist(); () }
   }
+
+  test("curation and cluster counts are observed in result stages, never in a shuffle-map stage") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec,
+      ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    // an observation's accumulator is applied again when a shuffle-map
+    // stage re-runs after a fetch failure; in a result stage it is not
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan; () }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      graft.operators.Curate.curateCorpus(docs, "doc_id", "text")
+      // un-checkpointed pairs: the sizing count sits above their exchanges
+      val ids = spark.range(0, 500)
+      val pairs = ids.select(col("id").as("doc_a"))
+        .join(ids.select(col("id").as("doc_b")),
+          col("doc_b") === col("doc_a") + 1 || col("doc_b") === col("doc_a") * 2)
+        .distinct()
+      graft.operators.Dedup.dupClusters(pairs)
+      org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    // (observe node, sits under a shuffle exchange or shuffle stage)
+    def observed(p: SparkPlan, inMap: Boolean): Seq[(CollectMetricsExec, Boolean)] = {
+      val here = p match {
+        case c: CollectMetricsExec => Seq(c -> inMap)
+        case _ => Nil
+      }
+      val below = inMap || (p match {
+        case _: ShuffleExchangeExec | _: ShuffleQueryStageExec => true
+        case _ => false
+      })
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _ => p.children
+      }
+      here ++ kids.flatMap(observed(_, below))
+    }
+    val found = plans.synchronized(plans.toSeq).flatMap(observed(_, inMap = false))
+    // curation's funnel and kept counts and each dupClusters call's pair
+    // count (its per-round counts run in a child session, whose listener
+    // manager this one does not see)
+    assert(found.size >= 4, s"expected at least 4 observations, found ${found.size}")
+    val inMap = found.filter(_._2).map(_._1)
+    assert(inMap.isEmpty, s"observed inside a shuffle-map stage:\n${inMap.mkString("\n")}")
+  }
 }
