@@ -329,9 +329,9 @@ object SparkEntry {
           round(col("sum_value"), 2).as("sum_value"))
     }),
 
-    // Events: hourly windowed aggregation (batch shape of the streaming
-    // ingest; event time normalized to epoch-micros whatever type the
-    // parquet `ts` column reads as — see core.EventTime)
+    // Events: hourly windowed aggregation (event time normalized to
+    // epoch-micros whatever type the parquet `ts` column reads as — see
+    // core.EventTime)
     "q9_events_hourly" -> ((s, dir) => {
       graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events")))
         .withColumn("hour_epoch", expr("ts_us div 3600000000") * 3600)
@@ -445,8 +445,7 @@ object SparkEntry {
 
     // Hopping (sliding) event-time windows — the built-in `window()`
     // form with a 1h width / 15min slide (each event lands in exactly 4
-    // windows); the same expression drives the streaming hopping-window
-    // aggregation, so the batch oracle pins the streaming shape's math
+    // windows)
     "q38_sliding_window" -> ((s, dir) => {
       val e = graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events")))
       e.select(
@@ -1081,8 +1080,8 @@ object SparkEntry {
           (0 until 8).map(i => element_at(col("sig"), i + 1).as(s"mh$i")): _*)
     }),
 
-    // Sessionization (batch form; streaming flatMapGroupsWithState form is
-    // proven equivalent in StreamingSpec). Event time rides as epoch-micros
+    // Sessionization (lag form; the session_window form below is proven
+    // equivalent in StreamingSpec). Event time rides as epoch-micros
     // BIGINT (the oracle contract, epoch_us(ts) in DuckDB), whatever
     // physical type the parquet scan yields — see core.EventTime.
     "q14_sessionize" -> ((s, dir) => {
@@ -1094,9 +1093,9 @@ object SparkEntry {
     }),
 
     // Same sessionization contract via the BUILT-IN session_window
-    // operator (the Spark-first form; also the streaming watermark-closed
-    // path). gap+1µs reproduces the lag form's <=-gap merge exactly; the
-    // ordinal session_id is a per-user window over one-row-per-session.
+    // operator (the Spark-first form). gap+1µs reproduces the lag form's
+    // <=-gap merge exactly; the ordinal session_id is a per-user window
+    // over one-row-per-session.
     "q14b_session_window" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val e = graft.core.EventTime
@@ -2166,8 +2165,7 @@ object SparkEntry {
       graft.operators.TextAnalysis.gopherRepetition(d, "doc_id", "text")
     }),
 
-    // Centroid drift of the odd-id slice against the full-corpus
-    // baseline — the batch form of the streaming drift monitor
+    // Centroid drift of the odd-id slice against the full-corpus baseline
     "embed_drift" -> ((s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
       val base = graft.streaming.DriftMonitor.labelSums(e, "label", "embedding")

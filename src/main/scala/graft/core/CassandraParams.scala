@@ -47,7 +47,7 @@ object StaticClusterInfo {
     fromJsonString(new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), java.nio.charset.StandardCharsets.UTF_8))
 
-  def fromJsonString(text: String): StaticClusterInfo = {
+  private[graft] def fromJsonString(text: String): StaticClusterInfo = {
     val partitioner = """"partitioner"\s*:\s*"([^"]+)"""".r
       .findFirstMatchIn(text).map(_.group(1))
       .getOrElse(CassandraParams.Murmur3Partitioner)
@@ -233,7 +233,7 @@ object CassandraParams {
     * loudly (a typo must not silently write an unsalted layout) —
     * including a DUPLICATED bucket id, which `.toMap` would otherwise
     * silently last-wins into the wrong salt factor. */
-  def parseSaltBuckets(spec: String): Map[Int, Int] = {
+  private def parseSaltBuckets(spec: String): Map[Int, Int] = {
     val pairs = spec.split(",").toSeq.filter(_.nonEmpty).map { pair =>
       pair.split(":") match {
         case Array(b, k) if b.forall(_.isDigit) && k.forall(_.isDigit) &&

@@ -50,7 +50,7 @@ object CassandraTokens {
       ((d(i + 7) & 0xffL) << 56)
 
   /** First 64 bits of MurmurHash3 x64_128, Cassandra variant (signed tail). */
-  def murmur3First64(data: Array[Byte], offset: Int, length: Int, seed: Long): Long = {
+  private def murmur3First64(data: Array[Byte], offset: Int, length: Int, seed: Long): Long = {
     val nblocks = length >> 4
     var h1 = seed
     var h2 = seed
@@ -104,7 +104,7 @@ object CassandraTokens {
    * 2^64 token space: ceil(2^64 / n), as an unsigned long.
    * (ceil(2^64/n) == floor((2^64-1)/n) + 1 for all n >= 1.)
    */
-  def rangePerBucket(n: Int): Long = {
+  private[graft] def rangePerBucket(n: Int): Long = {
     require(n > 0, s"bucket count must be positive, got $n")
     java.lang.Long.divideUnsigned(-1L, n.toLong) + 1L
   }
@@ -162,7 +162,7 @@ object CassandraTokens {
 
   /** RandomPartitioner token: abs(md5(key)) (empty key -> abs(-1) = 1,
     * mirroring BigIntegerToken.abs() of RandomPartitioner.MINIMUM). */
-  def md5Token(key: Array[Byte]): java.math.BigInteger = {
+  private[graft] def md5Token(key: Array[Byte]): java.math.BigInteger = {
     if (key == null || key.length == 0) return java.math.BigInteger.ONE
     val md = Md5.get()
     md.reset()
@@ -186,7 +186,7 @@ object CassandraTokens {
   /** ceil(2^127 / n) — the reference's rangePerReducer for RandomPartitioner
     * ([0, 2^127 - 1] inclusive, ceil division: CassandraParams.java:297-316).
     * Memoized: callers hit this once per row. */
-  def randomRangePerBucket(n: Int): java.math.BigInteger = {
+  private[graft] def randomRangePerBucket(n: Int): java.math.BigInteger = {
     require(n > 0, s"bucket count must be positive, got $n")
     RangeCache.computeIfAbsent(n, { n =>
       val span = java.math.BigInteger.ONE.shiftLeft(RandomTokenBits)

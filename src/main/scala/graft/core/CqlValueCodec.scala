@@ -57,7 +57,7 @@ object CqlValueCodec {
   def serializeBoolean(v: Boolean): Array[Byte] = Array(if (v) 1.toByte else 0.toByte)
 
   /** Cassandra decimal layout: 4-byte BE scale + unscaled big-endian bytes. */
-  def serializeDecimal(d: java.math.BigDecimal): Array[Byte] = {
+  private[graft] def serializeDecimal(d: java.math.BigDecimal): Array[Byte] = {
     val unscaled = d.unscaledValue.toByteArray
     val bb = ByteBuffer.allocate(4 + unscaled.length)
     bb.putInt(d.scale).put(unscaled)
@@ -68,7 +68,7 @@ object CqlValueCodec {
     ByteBuffer.allocate(16).putLong(u.getMostSignificantBits).putLong(u.getLeastSignificantBits).array()
 
   /** Protocol-v2 collection: unsigned-short count, then ushort-length-prefixed elements. */
-  def serializeCollection(elements: Iterable[Array[Byte]]): Array[Byte] = {
+  private[graft] def serializeCollection(elements: Iterable[Array[Byte]]): Array[Byte] = {
     val n = elements.size
     require(n <= 0xffff, s"collection too large for protocol-v2 layout: $n")
     var total = 2
@@ -84,7 +84,7 @@ object CqlValueCodec {
   }
 
   /** Protocol-v2 map: ushort count, then (ushort klen, k, ushort vlen, v)*. */
-  def serializeMap(entries: Iterable[(Array[Byte], Array[Byte])]): Array[Byte] = {
+  private[graft] def serializeMap(entries: Iterable[(Array[Byte], Array[Byte])]): Array[Byte] = {
     val n = entries.size
     require(n <= 0xffff, s"map too large for protocol-v2 layout: $n")
     var total = 2

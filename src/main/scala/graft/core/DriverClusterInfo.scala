@@ -38,7 +38,7 @@ object DriverClusterInfo {
    * (columns sorted by kind rank then position then name — partition key
    * first, matching the driver's metadata ordering).
    */
-  def fromSystemRows(partitioner: String, nodes: Seq[NodeRow],
+  private[graft] def fromSystemRows(partitioner: String, nodes: Seq[NodeRow],
       columns: Seq[ColumnRow],
       replication: Option[Map[String, String]] = None): StaticClusterInfo = {
     require(nodes.nonEmpty, "no nodes in system tables")
@@ -80,7 +80,7 @@ object DriverClusterInfo {
    * sum (every replica must receive the range's data). Non-numeric /
    * absent factors -> None, and the planner falls back loudly.
    */
-  def replicationFactorOf(options: Map[String, String]): Option[Int] = {
+  private[graft] def replicationFactorOf(options: Map[String, String]): Option[Int] = {
     val factors = options.collect {
       case (k, v) if k != "class" && v.forall(_.isDigit) && v.nonEmpty => v.toInt
     }

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
 object EventTime {
 
   /** Adds `outCol` = epoch-micros BIGINT derived from `tsCol`, keeping all
-    * other columns. Works on batch and streaming frames alike. */
+    * other columns. */
   def withTsUs(df: DataFrame, tsCol: String = "ts",
       outCol: String = "ts_us"): DataFrame = {
     // backquote the spliced name: an unquoted `expr()` splice would break

@@ -3,10 +3,8 @@ package graft.core
 import scala.collection.mutable
 
 /**
- * Misra-Gries heavy-hitters summary — the shared core behind the batch
- * `topk_freq` aggregate (functions.FreqAgg) and the streaming
- * heavy-hitters state (streaming.HeavyHitters), ONE implementation so
- * the two surfaces can never drift on sketch semantics.
+ * Misra-Gries heavy-hitters summary — the core of the `topk_freq`
+ * aggregate (functions.FreqAgg).
  *
  * The summary holds at most `capacity` (item, counter) pairs:
  *  - an unseen item over a full buffer decrements EVERY counter instead

@@ -25,7 +25,7 @@ object TextHash {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  def shingleHash32(s: UTF8String): Long = {
+  private def shingleHash32(s: UTF8String): Long = {
     val md = tl.get()
     md.reset()
     val dig = md.digest(s.getBytes)

@@ -57,9 +57,7 @@ case class FreqAgg(
   override def createAggregationBuffer(): mutable.HashMap[String, Long] =
     mutable.HashMap.empty
 
-  // sketch semantics live in graft.core.MisraGries — ONE implementation
-  // shared with the streaming heavy-hitters state, so the batch and
-  // streaming surfaces cannot drift
+  // sketch semantics live in graft.core.MisraGries
 
   override def update(buf: mutable.HashMap[String, Long],
       input: InternalRow): mutable.HashMap[String, Long] = {

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /**
  * Changelog compaction — the lakehouse ingest pair every 100 TB pipeline
@@ -64,46 +63,6 @@ object Cdc {
       keyCols: Seq[String], versionCol: String,
       tieBreakCols: Seq[String] = Nil): DataFrame =
     latestByKey(snapshot.unionByName(changes), keyCols, versionCol, tieBreakCols)
-
-  // ---- streaming form -------------------------------------------------
-
-  /** One changelog record: `(ver, seq)` is the total per-key ordering
-    * ([[latestByKey]]'s version + tiebreak), `payload` the carried row. */
-  case class CdcRecord(key: String, ver: Long, seq: Long, payload: String)
-
-  /**
-   * Streaming latest-wins compaction — the continuously-maintained
-   * materialized view of [[latestByKey]]: per-key state holds ONLY the
-   * current winner (one small record per live key, independent of
-   * changelog volume), and a batch emits a key's row exactly when its
-   * winner CHANGED. The last emission per key therefore always equals
-   * the batch compaction over everything ingested so far (pinned in
-   * StreamingSpec); max is order-insensitive, so unlike the funnel this
-   * needs no in-order-delivery caveat.
-   *
-   * State-size contract (spec-pinned via the state-store metrics): the
-   * store holds EXACTLY one row per distinct key ever seen — O(live
-   * keys), independent of changelog volume — and uses NoTimeout BY
-   * DESIGN: a compacted view must answer for every key forever, so no
-   * row is evictable. Size the state store (RocksDB provider at scale)
-   * for the KEY population, not the event rate; if the key universe is
-   * unbounded, that unboundedness is the application's data-model
-   * problem — an eviction here would silently resurrect old versions.
-   */
-  def latestByKeyStream(records: Dataset[CdcRecord]): Dataset[CdcRecord] = {
-    import records.sparkSession.implicits._
-    records.groupByKey(_.key)
-      .flatMapGroupsWithState[CdcRecord, CdcRecord](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it, state) =>
-          val cur = state.getOption
-          val best = (cur.iterator ++ it).maxBy(r => (r.ver, r.seq))
-          if (!cur.contains(best)) {
-            state.update(best)
-            Iterator.single(best)
-          } else Iterator.empty
-      }
-  }
 
   /**
    * SCD Type 2 history: orders each key's changelog by

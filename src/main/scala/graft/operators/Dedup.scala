@@ -576,7 +576,7 @@ object Dedup {
    * the signature inside a SIGNED int64 on every engine, so the value is
    * SQL-reproducible). Same kernel as [[withSimhash16]], scan-stage only.
    */
-  def withSimhash60(df: DataFrame, idCol: String, textCol: String): DataFrame =
+  private[graft] def withSimhash60(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol).as("doc_id"),
       graft.functions.simhash_tokens(TextAnalysis.tokens(col(textCol)), 60)
         .as("simhash60"))

@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.LongType
 
 /**
@@ -56,65 +55,5 @@ object Funnel {
     val reached = stages.indices.map(i =>
       when(col(s"t${i + 1}").isNotNull, 1).otherwise(0)).reduce(_ + _)
     acc.withColumn("stages_reached", reached.cast(LongType))
-  }
-
-  // ---- streaming form -------------------------------------------------
-
-  case class FEvent(user_id: Long, ts: Long, event_type: String)
-
-  /** One row per user per micro-batch in which the chain ADVANCED:
-    * `times(i)` is the stage-(i+1) match, `stages_reached = times.size`. */
-  case class FunnelProgress(user_id: Long, times: Seq[Long], stages_reached: Int)
-
-  /**
-   * Streaming first-touch funnel via per-user custom state
-   * (flatMapGroupsWithState): state is the matched-time chain so far —
-   * one tiny record per user, bounded by users, not event volume. Each
-   * micro-batch sorts its slice by `(ts, stage position)` (the stage
-   * tiebreak makes same-instant A→B chains match, mirroring the batch
-   * form's `>=`) and advances the chain greedily; because stage i's
-   * match is the EARLIEST eligible event and events are consumed in time
-   * order, in-order delivery reproduces [[funnel]] exactly (pinned in
-   * StreamingSpec). Cross-batch LATE events cannot retract an already-
-   * matched earlier stage — the usual watermark trade every streaming
-   * first-touch metric makes.
-   */
-  def funnelStream(events: Dataset[FEvent], stages: Seq[String],
-      windowMicros: Long): Dataset[FunnelProgress] = {
-    require(stages.nonEmpty && stages.distinct.size == stages.size,
-      "funnel stages must be non-empty and distinct")
-    import events.sparkSession.implicits._
-    val stageIdx = stages.zipWithIndex.toMap
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[Long], FunnelProgress](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid, it, state) =>
-          var matched = state.getOption.getOrElse(Nil)
-          val before = matched.size
-          val sorted = it.toSeq
-            .sortBy(e => (e.ts, stageIdx.getOrElse(e.event_type, Int.MaxValue)))
-          sorted.foreach { e =>
-            if (matched.size < stages.size &&
-                e.event_type == stages(matched.size)) {
-              if (matched.isEmpty) matched = List(e.ts)
-              else if (e.ts >= matched.last &&
-                  e.ts <= matched.head + windowMicros)
-                matched = matched :+ e.ts
-            }
-          }
-          if (matched.size > before) {
-            state.update(matched)
-            Iterator.single(FunnelProgress(uid, matched, matched.size))
-          } else Iterator.empty
-      }
-  }
-
-  /** Stage-level conversion summary derived from [[funnel]]: one row per
-    * stage ordinal with the count of users whose chain reached it. */
-  def funnelCounts(events: DataFrame, userCol: String, tsCol: String,
-      typeCol: String, stages: Seq[String], windowMicros: Long): DataFrame = {
-    val f = funnel(events, userCol, tsCol, typeCol, stages, windowMicros)
-    f.select(explode(sequence(lit(1L), col("stages_reached"))).as("stage"))
-      .groupBy(col("stage")).agg(count(lit(1)).as("users"))
   }
 }

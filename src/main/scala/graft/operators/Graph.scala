@@ -193,8 +193,11 @@ object Graph {
    * O(edges) exchange (contributions by destination). Nothing
    * accumulates on the driver and there is no lineage growth
    * (per-iteration lazy checkpoints, same pattern as Dedup.dupClusters).
-   * Hub skew is bounded by max in-degree and lands in the AQE-covered
-   * aggregation.
+   * Hub skew is NOT bounded: the adjacency packs a source's whole
+   * out-neighbour list into one `collect_list` row, so a hub's row grows
+   * with its out-degree without limit — it can exceed task memory, or
+   * the 2 GB array limit at very large out-degree. (Contributions to a
+   * high in-degree node land in the AQE-covered aggregation.)
    *
    * `reliableCheckpoint` picks the lineage-truncation durability (see
    * [[ckpt]]): the default localCheckpoint is the fail-and-rerun trade

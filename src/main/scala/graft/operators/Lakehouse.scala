@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
  * {{{
  *   path/data/part-*.parquet          the immutable data files
  *   path/_log/v0000000042/manifest/   full stats snapshot (1 row/file)
- *   path/_log/v0000000042/_commit     marker: op + streamId + batchId
- *                                     + nFiles/nRows + data schema
+ *   path/_log/v0000000042/_commit     marker: op + nFiles/nRows
+ *                                     + data schema
  *                                     + upsert insert-file list
  * }}}
  *
@@ -54,18 +54,18 @@ import org.apache.spark.sql.functions._
  * commit at latest+1 } — a lost race (another writer took the version
  * slot first) re-resolves and retries, because append manifests are
  * purely ADDITIVE: re-deriving "fresh live + my new rows" is always
- * correct whatever landed in between. Two interleaved appenders (a
- * stream plus a nightly backfill — the normal production shape) both
- * land, on a linear log.
+ * correct whatever landed in between. Two interleaved appenders (an
+ * hourly ingest plus a nightly backfill — the normal production shape)
+ * both land, on a linear log.
  *
  * The REWRITE ops resolve lost races with FILE-SET conflict detection
  * (the Delta model). [[compact]] removes only files it read and adds
  * files nobody else references, so it commutes with ANY interleaved
  * commit — append, delete, upsert, another compact — that left its
  * read set fully referenced by the new live manifest; it rebuilds
- * against the new head and retries (in-stream maintenance survives a
- * nightly backfill appender AND a concurrent CDC merge on other
- * files). [[deleteWhere]] and [[upsertByKey]] additionally need the
+ * against the new head and retries (maintenance survives a nightly
+ * backfill appender AND a concurrent CDC merge on other files).
+ * [[deleteWhere]] and [[upsertByKey]] additionally need the
  * interlopers' ADDED files to be provably unable to interact — an
  * added row could match the delete predicate or carry an update key —
  * and the manifest's per-file min/max stats give the proof: when every
@@ -85,19 +85,13 @@ import org.apache.spark.sql.functions._
  * to Delta-on-S3: the final rename needs the store's conditional-put —
  * out of scope here.)
  *
- * Each `_commit` records a `(streamId, batchId)` pair, the Delta `txn`
- * action analog: [[graft.streaming.LakehouseIngest]] fences re-delivered
- * `foreachBatch` batches on it, upgrading streaming ingest from
- * at-least-once to exactly-once under deterministic replay (spec-pinned
- * by replaying a batch and observing unchanged row counts).
- *
  * Scale shape: the manifest holds one row per DATA FILE (not per row), so
  * planning a pruned read is a driver-side replay of a #files-row table —
  * exactly Delta-log/Iceberg-manifest sized, the one collect in this
  * module and legitimate for the same reason theirs is. Commit markers are
  * ~100-byte files read driver-side (#versions of them — the Delta log
  * listing); [[vacuum]] drops superseded manifests but keeps every marker,
- * so txn fencing survives maintenance. Because the data is z-ordered on
+ * so [[history]] survives maintenance. Because the data is z-ordered on
  * the stats columns, every file covers a tight hyper-rectangle in ALL of
  * them at once, so a range predicate on ANY clustered column eliminates
  * most files before a byte of data is read.
@@ -162,31 +156,11 @@ object Lakehouse {
     * manifest (and its data files, which no mutation deletes) however
     * many commits land meanwhile. Valid until a [[vacuum]] whose
     * `retainVersions` window has moved past `v`. */
-  def manifestAt(spark: SparkSession, path: String, version: Long): DataFrame =
+  private[graft] def manifestAt(spark: SparkSession, path: String, version: Long): DataFrame =
     spark.read.parquet(s"${versionDir(path, version)}/manifest")
 
-  /** Highest `batchId` ever committed for `streamId`, or -1 — the Delta
-    * `txn` lookup [[graft.streaming.LakehouseIngest]] fences on.
-    * [[vacuum]] preserves commit markers precisely so this survives
-    * manifest pruning. A stream's batchIds are committed in increasing
-    * version order ([[appendClustered]]'s fence enforces it), so the
-    * NEWEST version carrying `streamId` holds its max batchId — the
-    * scan walks versions descending and stops at the first hit: O(1)
-    * marker reads per micro-batch in steady state (the stream itself
-    * wrote the latest commit), not O(#versions), which on an object
-    * store would turn every commit into thousands of round trips. */
-  def lastCommittedBatch(spark: SparkSession, path: String,
-      streamId: String): Long = {
-    require(streamId.nonEmpty, "lastCommittedBatch: empty streamId")
-    val fs = fsOf(spark, path)
-    committedVersions(spark, path).reverseIterator
-      .map(v => readCommit(fs, path, v))
-      .collectFirst { case c if c.streamId == streamId => c.batchId }
-      .getOrElse(-1L)
-  }
-
   /** DESCRIBE-HISTORY analog: one row per committed version —
-    * `(version, op, stream_id, batch_id, n_files, n_rows)`, the counts
+    * `(version, op, n_files, n_rows)`, the counts
     * being each version's SNAPSHOT TOTALS (its whole manifest, not the
     * commit's delta). They are recorded INTO each `_commit` marker at
     * commit time — surviving [[vacuum]] alongside the marker — so this is
@@ -210,12 +184,14 @@ object Lakehouse {
             (Some(m.getLong(0)), Some(m.getLong(1)))
           } else (None, None)
       }
-      (v, c.op, c.streamId, c.batchId, counts._1, counts._2)
-    }.toDF("version", "op", "stream_id", "batch_id", "n_files", "n_rows")
+      (v, c.op, counts._1, counts._2)
+    }.toDF("version", "op", "n_files", "n_rows")
   }
 
-  private case class CommitInfo(op: String, streamId: String, batchId: Long,
-      nFiles: Option[Long], nRows: Option[Long], insertFiles: Seq[String],
+  /** A commit marker's fields. Markers of older logs may also carry
+    * `streamId`/`batchId` keys; parsing ignores them. */
+  private case class CommitInfo(op: String, nFiles: Option[Long],
+      nRows: Option[Long], insertFiles: Seq[String],
       dataSchema: Option[org.apache.spark.sql.types.StructType],
       postimageFiles: Seq[String], deleteFiles: Seq[String],
       writerToken: String)
@@ -230,9 +206,7 @@ object Lakehouse {
         .map(_.toInt).getOrElse(0)
       (0 until n).map(i => props.getProperty(s"${prefix}File.$i"))
     }
-    CommitInfo(props.getProperty("op", ""), props.getProperty("streamId", ""),
-      props.getProperty("batchId", "-1").toLong,
-      optLong("nFiles"), optLong("nRows"),
+    CommitInfo(props.getProperty("op", ""), optLong("nFiles"), optLong("nRows"),
       fileList("insert"),
       Option(props.getProperty("dataSchema")).map(j =>
         org.apache.spark.sql.types.DataType.fromJson(j)
@@ -248,13 +222,13 @@ object Lakehouse {
     * None on markers that predate schema tracking (readers fall back to
     * file-footer schemas, the pre-evolution behavior). Driver-side: one
     * ~1 KB marker read, zero Spark jobs. */
-  def dataSchemaAt(spark: SparkSession, path: String, v: Long)
+  private def dataSchemaAt(spark: SparkSession, path: String, v: Long)
       : Option[org.apache.spark.sql.types.StructType] =
     if (v < 0) None
     else readCommit(fsOf(spark, path), path, v).dataSchema
 
   /** [[dataSchemaAt]] of the latest committed version. */
-  def dataSchema(spark: SparkSession, path: String)
+  private[graft] def dataSchema(spark: SparkSession, path: String)
       : Option[org.apache.spark.sql.types.StructType] =
     dataSchemaAt(spark, path, latestVersion(spark, path))
 
@@ -269,8 +243,7 @@ object Lakehouse {
     * written single-file manifest — #files rows) so [[history]] never
     * has to replay manifests. */
   private[graft] def commitVersion(spark: SparkSession, path: String,
-      manifest: DataFrame, op: String, streamId: String,
-      batchId: Long, base: Long,
+      manifest: DataFrame, op: String, base: Long,
       insertFiles: Seq[String] = Nil,
       dataSchema: Option[org.apache.spark.sql.types.StructType] = None,
       postimageFiles: Seq[String] = Nil,
@@ -289,8 +262,6 @@ object Lakehouse {
         .agg(count(lit(1)), coalesce(sum(col("n_rows")), lit(0L))).head()
       val props = new java.util.Properties()
       props.setProperty("op", op)
-      props.setProperty("streamId", streamId)
-      props.setProperty("batchId", batchId.toString)
       props.setProperty("nFiles", counts.getLong(0).toString)
       props.setProperty("nRows", counts.getLong(1).toString)
       // row-level CDF bookkeeping: an upsert commit's insert-only and
@@ -334,9 +305,8 @@ object Lakehouse {
       // ONLY a destination-exists outcome is a commit race. Any other
       // IOException (permissions, quota, a broken filesystem) propagates
       // as the infrastructure failure it is — reclassifying it as a
-      // conflict would let retry/skip layers (commitAdditive,
-      // LakehouseIngest.runMaintenance) indefinitely downgrade a
-      // persistent FS failure to "lost a race"
+      // conflict would let the retry loop (commitAdditive) indefinitely
+      // downgrade a persistent FS failure to "lost a race"
       try fc.rename(tmp, vd, Options.Rename.NONE)
       catch {
         case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
@@ -389,9 +359,7 @@ object Lakehouse {
     * out), and commits at latest+1; a [[CommitConflictException]] means
     * another writer took the slot — re-deriving from the NEW live
     * manifest is correct because the extension is purely additive, so
-    * back off briefly and go again. `fence` re-runs each attempt (a
-    * concurrent commit may have advanced this stream's batch high-water
-    * mark).
+    * back off briefly and go again.
     *
     * AMBIGUOUS-RENAME defense: every attempt carries one per-CALL writer
     * token into the marker; before retrying a conflict, the loop reads
@@ -400,22 +368,20 @@ object Lakehouse {
     * HDFS non-idempotent-RPC hazard), so the commit is returned instead
     * of re-extending and duplicating the same manifest rows. */
   private def commitAdditive(spark: SparkSession, path: String,
-      op: String, streamId: String, batchId: Long, maxAttempts: Int)(
-      fence: () => Unit)(extend: (Long, DataFrame) =>
+      op: String, maxAttempts: Int)(extend: (Long, DataFrame) =>
         (DataFrame, Option[org.apache.spark.sql.types.StructType])): Long = {
     val token = java.util.UUID.randomUUID().toString
     val fs = fsOf(spark, path)
     var attempt = 0
     while (true) {
       attempt += 1
-      fence()
       val base = latestVersion(spark, path)
       require(base >= 0, s"no committed lakehouse log at $path")
       val live = manifestAt(spark, path, base)
       try {
         val (manifest, schema) = extend(base, live)
-        return commitVersion(spark, path, manifest, op, streamId,
-          batchId, base, dataSchema = schema, writerToken = token)
+        return commitVersion(spark, path, manifest, op, base,
+          dataSchema = schema, writerToken = token)
       } catch {
         case e: CommitConflictException =>
           val lostSlot = base + 1
@@ -480,10 +446,10 @@ object Lakehouse {
    * manifest-sized job).
    */
   private def commitRewrite(spark: SparkSession, path: String, op: String,
-      streamId: String, batchId: Long, base0: Long, m0: DataFrame,
+      base0: Long, m0: DataFrame,
       affected: Seq[String], newStats: Option[DataFrame],
       insertFiles: Seq[String], postimageFiles: Seq[String],
-      deleteFiles: Seq[String], fence: () => Unit,
+      deleteFiles: Seq[String],
       addedOverlap: DataFrame => Option[String],
       maxAttempts: Int,
       // the schema the commit RECORDS — defaults to the base snapshot's
@@ -512,7 +478,7 @@ object Lakehouse {
         case None => kept
       }
       try {
-        return commitVersion(spark, path, next, op, streamId, batchId, base,
+        return commitVersion(spark, path, next, op, base,
           insertFiles = insertFiles, dataSchema = recordSchema,
           postimageFiles = postimageFiles, deleteFiles = deleteFiles,
           writerToken = token)
@@ -521,9 +487,6 @@ object Lakehouse {
           // ambiguous rename: our commit may have landed with the error
           // reported client-side only — never re-commit our own rows
           if (ownsSlot(fs, path, base + 1, token)) return base + 1
-          // a concurrent commit may have advanced this stream's batch
-          // high-water mark — re-fence before reasoning about a rebase
-          fence()
           val newBase = latestVersion(spark, path)
           val interlopers = committedVersions(spark, path)
             .filter(v => v > base && v <= newBase)
@@ -609,10 +572,9 @@ object Lakehouse {
   /** Releases the cached blocks behind a `localCheckpoint()`ed frame.
     * The checkpoint persists its RDD at the executor storage layer (a
     * Dataset-level `unpersist` cannot see it), and a long-running
-    * caller — a streaming MERGE ingest checkpointing per micro-batch —
-    * would otherwise accumulate dead blocks until the driver GC'd the
-    * frames. Best-effort: an already-released or non-checkpoint frame
-    * is a no-op. */
+    * caller running many merges would otherwise accumulate dead blocks
+    * until the driver GC'd the frames. Best-effort: an already-released
+    * or non-checkpoint frame is a no-op. */
   private def releaseCheckpoint(df: DataFrame): Unit =
     try df.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD =>
@@ -634,10 +596,6 @@ object Lakehouse {
    * storage it reads only those columns, the analog of collecting
    * footer stats at write time.
    *
-   * `streamId`/`batchId` stamp the commit for txn fencing when the
-   * creating write IS a stream's first batch (see
-   * [[graft.streaming.LakehouseIngest]]); leave defaulted otherwise.
-   *
    * This is DESTRUCTIVE create-table, not an atomic REPLACE: the old
    * log is dropped and the data dir overwritten before version 0
    * commits, so a concurrent reader of the OLD table loses its files
@@ -646,14 +604,13 @@ object Lakehouse {
    * mutations).
    */
   def writeClustered(df: DataFrame, path: String, zCols: Seq[String],
-      files: Int, bits: Int = 16, streamId: String = "",
-      batchId: Long = -1L): Unit = {
+      files: Int, bits: Int = 16): Unit = {
     val spark = df.sparkSession
     fsOf(spark, path).delete(new Path(logDir(path)), true)
     Zorder.writeZOrdered(df, zCols, s"$path/data", files, bits)
     commitVersion(spark, path,
       statsOf(spark.read.parquet(s"$path/data"), zCols),
-      "create", streamId, batchId, base = -1L,
+      "create", base = -1L,
       dataSchema = Some(df.schema))
   }
 
@@ -757,12 +714,6 @@ object Lakehouse {
    * once, before the retry loop; only the #files-row manifest commit
    * retries.
    *
-   * With a non-empty `streamId`, the commit is fenced: a `batchId` at or
-   * below the highest already committed for that stream throws instead
-   * of double-appending (callers that want skip-not-throw check
-   * [[lastCommittedBatch]] first, as [[graft.streaming.LakehouseIngest]]
-   * does). The fence re-checks on every retry.
-   *
    * The batch frame is evaluated up to three times by the z-clustered
    * write (bounds aggregation + range sampling + the write itself) —
    * a caller whose batch is an expensive upstream pipeline should
@@ -781,8 +732,7 @@ object Lakehouse {
    * widened the table.
    */
   def appendClustered(df: DataFrame, path: String, zCols: Seq[String],
-      files: Int, bits: Int = 16, streamId: String = "",
-      batchId: Long = -1L, maxAttempts: Int = 20): Unit = {
+      files: Int, bits: Int = 16, maxAttempts: Int = 20): Unit = {
     val spark = df.sparkSession
     val live0 = readManifest(spark, path)
     require(live0.columns.toSet == statsOf(df.limit(0), zCols).columns.toSet,
@@ -829,20 +779,11 @@ object Lakehouse {
       }
     }
     widen(latestVersion(spark, path), live0) // fail fast, before the write
-    def fence(): Unit =
-      if (streamId.nonEmpty &&
-          batchId <= lastCommittedBatch(spark, path, streamId))
-        throw new IllegalStateException(
-          s"appendClustered: batch $batchId of stream '$streamId' is already " +
-            s"committed at $path — a re-delivered batch must be skipped, " +
-            "not re-appended")
-    fence()
     val newFiles = writeBatch(spark, path, df, zCols, files, bits)
     require(newFiles.nonEmpty, "appendClustered: the write added no files")
     val added = statsOf(spark.read.parquet(newFiles: _*), zCols)
       .select(live0.columns.map(col): _*)
-    commitAdditive(spark, path, "append", streamId, batchId,
-      maxAttempts)(() => fence())((base, live) =>
+    commitAdditive(spark, path, "append", maxAttempts)((base, live) =>
       (live.unionByName(added), widen(base, live)))
   }
 
@@ -897,8 +838,7 @@ object Lakehouse {
     val newFiles = {
       val input = readData(spark, path, base0, small).localCheckpoint()
       try writeBatch(spark, path, input, zCols, files, bits)
-      finally releaseCheckpoint(input) // the in-stream maintenance loop
-      // compacts every few batches — dead blocks must not accumulate
+      finally releaseCheckpoint(input)
     }
     val newStats = statsOf(spark.read.parquet(newFiles: _*), zCols)
     onCompactBeforeCommit()
@@ -913,7 +853,7 @@ object Lakehouse {
       val replacement =
         kept.unionByName(newStats.select(kept.columns.map(col): _*))
       try {
-        commitVersion(spark, path, replacement, "compact", "", -1L, base,
+        commitVersion(spark, path, replacement, "compact", base,
           dataSchema = dataSchemaAt(spark, path, base),
           writerToken = token)
         return (small.size, newFiles.size)
@@ -1007,7 +947,7 @@ object Lakehouse {
     require(newFiles.nonEmpty, "replaceClustered: the write added no files")
     commitVersion(spark, path,
       statsOf(spark.read.parquet(newFiles: _*), zCols),
-      "replace", "", -1L, base, dataSchema = Some(df.schema))
+      "replace", base, dataSchema = Some(df.schema))
   }
 
   /** Ops that REWRITE existing rows into new files (vs append new data).
@@ -1043,11 +983,6 @@ object Lakehouse {
    * their own file batch and recorded in the commit marker, so
    * [[changesSince]] feeds exactly them downstream — update-postimages
    * still never feed (they would double-count keys the consumer saw).
-   *
-   * With a non-empty `streamId`, the commit is txn-FENCED exactly like
-   * [[appendClustered]]'s: a re-delivered `batchId` throws instead of
-   * double-merging ([[graft.streaming.LakehouseIngest.startMerge]] is
-   * the skip-not-throw streaming caller).
    *
    * `updates` is materialized ONCE at entry (`localCheckpoint`): the
    * frame is otherwise evaluated by the probe, the rewrite union, and
@@ -1107,14 +1042,12 @@ object Lakehouse {
    * [[CommitConflictException]]; `maxAttempts` bounds the retries.
    * Every intermediate frame this merge `localCheckpoint`s (the batch,
    * the large-batch matched keys and splits, the survivors) is
-   * RELEASED on exit — success or failure — so a streaming MERGE
-   * ingest does not accumulate dead executor blocks micro-batch over
-   * micro-batch.
+   * RELEASED on exit — success or failure — so a caller running many
+   * merges does not accumulate dead executor blocks.
    */
   def upsertByKey(spark: SparkSession, path: String, updates: DataFrame,
       keyCols: Seq[String], files: Int = 4, bits: Int = 16,
       pruneRanges: Seq[(String, Double, Double)] = Nil,
-      streamId: String = "", batchId: Long = -1L,
       maxProbeKeys: Long = DefaultMaxProbeKeys,
       largeBatch: Boolean = false, maxAttempts: Int = 10): (Int, Long, Long) = {
     require(keyCols.nonEmpty, "upsertByKey: need at least one key column")
@@ -1122,18 +1055,6 @@ object Lakehouse {
       log.warn(s"upsertByKey: maxProbeKeys=$maxProbeKeys is IGNORED with " +
         "largeBatch=true — the shuffle-side path has no driver-sized " +
         "state for the cap to bound")
-    // the txn fence, same contract as appendClustered's: a re-delivered
-    // batchId throws; skip-not-throw callers (LakehouseIngest) check
-    // lastCommittedBatch first. Re-runs on every rebase retry — a
-    // concurrent commit may have advanced the stream's high-water mark.
-    def fence(): Unit =
-      if (streamId.nonEmpty &&
-          batchId <= lastCommittedBatch(spark, path, streamId))
-        throw new IllegalStateException(
-          s"upsertByKey: batch $batchId of stream '$streamId' is already " +
-            s"committed at $path — a re-delivered batch must be skipped, " +
-            "not re-merged")
-    fence()
     val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val u = updates.localCheckpoint()
     toRelease += u
@@ -1181,11 +1102,11 @@ object Lakehouse {
       // decision assumed absent
       lastProbeScannedFiles = 0
       val newFiles = writeBatch(spark, path, u, zCols, files, bits)
-      commitRewrite(spark, path, "upsert", streamId, batchId, base, m,
+      commitRewrite(spark, path, "upsert", base, m,
         affected = Nil,
         newStats = Some(statsOf(spark.read.parquet(newFiles: _*), zCols)),
         insertFiles = newFiles, postimageFiles = Nil, deleteFiles = Nil,
-        fence = () => fence(), addedOverlap = keyAddedOverlap,
+        addedOverlap = keyAddedOverlap,
         maxAttempts = maxAttempts,
         commitSchema = Some(u.schema)) // the batch DEFINES the schema here
       return (0, 0L, u.count())
@@ -1317,12 +1238,12 @@ object Lakehouse {
       else writeBatch(spark, path, ins, zCols, files, bits)
     val newFiles = survivorFiles ++ postimageFiles ++ insertFiles
     require(newFiles.nonEmpty, "upsertByKey: the rewrite added no files")
-    commitRewrite(spark, path, "upsert", streamId, batchId, base, m,
+    commitRewrite(spark, path, "upsert", base, m,
       affected = affected,
       newStats = Some(statsOf(spark.read.parquet(newFiles: _*), zCols)),
       insertFiles = insertFiles, postimageFiles = postimageFiles,
-      deleteFiles = Nil, fence = () => fence(),
-      addedOverlap = keyAddedOverlap, maxAttempts = maxAttempts)
+      deleteFiles = Nil, addedOverlap = keyAddedOverlap,
+      maxAttempts = maxAttempts)
     (affected.size, replaced, u.count())
     } finally toRelease.foreach(releaseCheckpoint)
   }
@@ -1456,13 +1377,13 @@ object Lakehouse {
       else Some(s"${overlapping.size} added file(s) (e.g. " +
         s"${overlapping.head}) overlap the delete's pruneRanges")
     }
-    commitRewrite(spark, path, "delete", "", -1L, base, m,
+    commitRewrite(spark, path, "delete", base, m,
       affected = affected,
       newStats =
         if (newFiles.isEmpty) None
         else Some(statsOf(spark.read.parquet(newFiles: _*), zCols)),
       insertFiles = Nil, postimageFiles = Nil, deleteFiles = deleteFiles,
-      fence = () => (), addedOverlap = deleteAddedOverlap,
+      addedOverlap = deleteAddedOverlap,
       maxAttempts = maxAttempts)
     (affected.size, hits.values.sum)
     } finally releaseCheckpoint(affFrame)
@@ -1474,8 +1395,8 @@ object Lakehouse {
    * originals, crashed-append leftovers, any orphan under `data/`),
    * superseded versions' manifest parquet, crashed staging directories
    * (`_stage-*`, `_log/_tmp-*`), and marker-less pre-protocol version
-   * dirs. Commit MARKERS are kept for every version so
-   * [[lastCommittedBatch]] fencing survives. Returns
+   * dirs. Commit MARKERS are kept for every version so [[history]]
+   * survives. Returns
    * (dataFilesDeleted, manifestsPruned).
    *
    * A RETAINED version whose manifest a previous, narrower-windowed
@@ -1603,13 +1524,13 @@ object Lakehouse {
     * hyper-rectangle in ALL clustered columns, so each predicate prunes
     * independently and a file survives only if it overlaps EVERY range
     * (intersection of per-column survivors). */
-  def selectFilesMulti(spark: SparkSession, path: String,
+  private[graft] def selectFilesMulti(spark: SparkSession, path: String,
       ranges: Seq[(String, Double, Double)]): (Seq[String], Int) =
     selectFilesIn(readManifest(spark, path), path, ranges)
 
   /** [[selectFilesMulti]] against a PINNED version — the planning half
     * of a time-travel read. */
-  def selectFilesMultiAt(spark: SparkSession, path: String, version: Long,
+  private def selectFilesMultiAt(spark: SparkSession, path: String, version: Long,
       ranges: Seq[(String, Double, Double)]): (Seq[String], Int) =
     selectFilesIn(manifestAt(spark, path, version), path, ranges)
 
@@ -1738,7 +1659,7 @@ object Lakehouse {
     * module does not take on. Driver-sized: #versions manifest replays.
     * Versions whose manifests were vacuumed away fail loudly — consume
     * before the retention window passes. */
-  def addedFilesSince(spark: SparkSession, path: String,
+  private[graft] def addedFilesSince(spark: SparkSession, path: String,
       sinceVersion: Long): Seq[(Long, Seq[String])] = {
     val fs = fsOf(spark, path)
     val versions = committedVersions(spark, path).filter(_ > sinceVersion)
@@ -1819,34 +1740,9 @@ object Lakehouse {
    * lets thousands of versions pile up should catch up in windowed
    * calls. Wall time is the new bytes (12M-row soak: 1.4s).
    *
-   * == The mirror recipe (spec-pinned end-to-end) ==
-   *
-   * A downstream mirror consumes the feed in windows, each window
-   * applied in `_version` order, recording the high-water mark it has
-   * applied through:
-   *
-   * {{{
-   *   var applied = mirrorState.lastAppliedVersion  // durable
-   *   val head = Lakehouse.latestVersion(spark, path)
-   *   Lakehouse.consumeChanges(spark, path, applied) { feed =>
-   *     mirror = Lakehouse.applyChangeFeed(mirror, feed, keyCols)
-   *   }                                             // translates a
-   *   applied = head                                // vacuumed feed into
-   *                                                 // the retention error
-   * }}}
-   *
-   * If [[consumeChanges]] throws the retention-contract error — the
-   * mirror fell behind a [[vacuum]] window, or a REPLACE landed — the
-   * recovery is a RE-SYNC: drop the mirror, read the latest snapshot
-   * whole (`readData` of the live manifest / [[prunedReadMulti]]), and
-   * resume the feed from that version. Never skip the failed window and
-   * continue — the mirror would silently diverge.
-   *
-   * A KEY-UNIQUE mirror catching up over many versions should apply
-   * each window with [[applyChangeFeedCollapsed]] instead — one merge
-   * of the window's final state per key, constant plan depth — falling
-   * back to [[applyChangeFeed]] automatically where the collapse's
-   * guard cannot hold.
+   * A consumer that fell behind a [[vacuum]] window gets the
+   * retention-contract error; it must re-sync from the latest snapshot
+   * and resume the feed from that version, never skip the window.
    */
   def changesDetailed(spark: SparkSession, path: String,
       sinceVersion: Long): DataFrame = {
@@ -1909,143 +1805,6 @@ object Lakehouse {
     }
   }
 
-  /** Runs `use` over one [[changesDetailed]] window, translating a
-    * mid-job `FileNotFoundException` (anywhere in the failure's cause
-    * chain) into the retention-contract error. The pre-existence sweep
-    * inside [[changesDetailed]] covers the common case, but it is
-    * check-then-read: a [[vacuum]] deleting a feed file BETWEEN the
-    * sweep and the scan would otherwise surface as a raw task failure —
-    * this wrapper guarantees the diagnostic (and therefore the mirror
-    * recipe's re-sync trigger) under concurrent maintenance. */
-  def consumeChanges[T](spark: SparkSession, path: String,
-      sinceVersion: Long)(use: DataFrame => T): T = {
-    def fnf(t: Throwable): Boolean =
-      t != null && (t.isInstanceOf[java.io.FileNotFoundException] ||
-        t.getClass.getSimpleName.contains("FileNotFound") ||
-        fnf(t.getCause))
-    try use(changesDetailed(spark, path, sinceVersion))
-    catch {
-      case e: Throwable if fnf(e) =>
-        throw new IllegalStateException(
-          s"consumeChanges: a feed file of $path vanished mid-read " +
-            "(vacuumed concurrently) — incremental consumers must keep " +
-            "up with the retention window; re-sync the mirror from the " +
-            "latest snapshot", e)
-    }
-  }
-
-  /** Applies a [[changesDetailed]] feed to a mirror `snapshot`, version
-    * by version in `_version` order — the reference implementation of
-    * the mirror recipe, spec-pinned to reproduce the source's latest
-    * snapshot exactly:
-    *
-    *  - `delete` rows retract by WHOLE ROW with multiplicity
-    *    (`exceptAll`) — exact for keyed and unkeyed tables alike, since
-    *    the sidecar carries the full deleted rows;
-    *  - `update_postimage` rows replace by `keyCols` (drop every mirror
-    *    row carrying a postimage key, then add the postimages) — the
-    *    keyed-merge semantics [[upsertByKey]] wrote them under;
-    *  - `insert` rows append as-is (append-commit inserts are arbitrary
-    *    rows; upsert-commit inserts carry keys absent from the table by
-    *    construction, so plain union is exact for both).
-    *
-    * Driver-side work is one distinct pass over the window's (version,
-    * change-type) pairs — consumption-window sized, like the feed
-    * itself; the plan depth grows with the window's version count, so a
-    * consumer catching up over MANY versions should checkpoint the
-    * mirror between windowed calls. */
-  def applyChangeFeed(snapshot: DataFrame, feed: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
-    require(feed.columns.contains("_change_type") &&
-      feed.columns.contains("_version"),
-      "applyChangeFeed: feed must come from changesDetailed " +
-        "(_change_type/_version columns missing)")
-    val dataCols = feed.columns.filterNot(c =>
-      c == "_change_type" || c == "_version").map(col).toSeq
-    // window-sized driver pass: which change types each version carries
-    val present = feed.select(col("_version"), col("_change_type"))
-      .distinct().collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    val byVersion = present.groupBy(_._1).view.mapValues(_.map(_._2).toSet)
-    byVersion.keys.toSeq.sorted.foldLeft(snapshot) { case (acc, v) =>
-      val kinds = byVersion(v)
-      val at = feed.filter(col("_version") === v)
-      var next = acc
-      if (kinds("delete"))
-        next = next.exceptAll(
-          at.filter(col("_change_type") === "delete").select(dataCols: _*))
-      if (kinds("update_postimage")) {
-        val post = at.filter(col("_change_type") === "update_postimage")
-        next = next.join(
-            broadcast(post.select(keyCols.map(col): _*).distinct()),
-            keyCols, "left_anti")
-          .unionByName(post.select(dataCols: _*))
-      }
-      if (kinds("insert"))
-        next = next.unionByName(
-          at.filter(col("_change_type") === "insert").select(dataCols: _*))
-      next
-    }
-  }
-
-  /**
-   * [[applyChangeFeed]] with CONSTANT plan depth for the KEY-UNIQUE
-   * case: the feed window folds to its final state per key (the change
-   * with the highest `_version` wins) and applies as ONE merge — drop
-   * every mirror row carrying a touched key, then add the final
-   * non-delete rows — instead of 3 ops × #versions. A consumer catching
-   * up over hundreds of versions gets an O(1)-deep plan (spec-pinned)
-   * where the per-version replay would build a hundreds-deep
-   * except/anti/union chain before its first checkpoint.
-   *
-   * GUARD — the collapse is exact only when `keyCols` is a UNIQUE key
-   * of the table (every key holds at most one live row, the
-   * [[upsertByKey]]-maintained shape), because it retracts deletes BY
-   * KEY where the general path retracts by whole row with multiplicity.
-   * The feed-observable part of that contract is checked here — any
-   * null-keyed change row, or a key changed twice within one version
-   * (a multi-row-per-key upsert batch), falls back to the per-version
-   * replay automatically (one window-sized guard job). The
-   * table-uniqueness half is the caller's declaration, same as handing
-   * `keyCols` to [[upsertByKey]].
-   *
-   * A key touched in several versions folds correctly by construction:
-   * version order is total, so the max-version change IS the final
-   * state (insert-then-delete retracts, delete-then-reinsert lands the
-   * reinsert, postimage chains land the last postimage).
-   */
-  def applyChangeFeedCollapsed(snapshot: DataFrame, feed: DataFrame,
-      keyCols: Seq[String]): DataFrame = {
-    require(feed.columns.contains("_change_type") &&
-      feed.columns.contains("_version"),
-      "applyChangeFeedCollapsed: feed must come from changesDetailed " +
-        "(_change_type/_version columns missing)")
-    require(keyCols.nonEmpty, "applyChangeFeedCollapsed: need key columns")
-    val dataCols = feed.columns.filterNot(c =>
-      c == "_change_type" || c == "_version").map(col).toSeq
-    // the feed-side guard, one window-sized job: null keys cannot merge
-    // by key (SQL equality), and two changes to one key inside one
-    // version have an intra-version order the fold cannot see
-    val unsafe = feed
-      .groupBy((keyCols.map(col) :+ col("_version")): _*)
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") > 1 ||
-        keyCols.map(col(_).isNull).reduce(_ || _))
-      .limit(1).count() > 0
-    if (unsafe) return applyChangeFeed(snapshot, feed, keyCols)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*)
-      .orderBy(col("_version").desc)
-    val last = feed.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-    // one anti-join + one union, whatever the window's version count;
-    // the touched-key frame is window-sized — no broadcast hint, AQE
-    // broadcasts small windows and shuffles a month-long catch-up
-    snapshot.join(last.select(keyCols.map(col): _*), keyCols, "left_anti")
-      .unionByName(
-        last.filter(col("_change_type") =!= "delete").select(dataCols: _*))
-  }
-
   // ------------------------------------------------------------------
   // typed reads (string / date / timestamp clustered columns)
   // ------------------------------------------------------------------
@@ -2093,7 +1852,7 @@ object Lakehouse {
     selectFilesTypedIn(spark, readManifest(spark, path), path, ranges)
 
   /** [[selectFilesTyped]] against a PINNED version. */
-  def selectFilesTypedAt(spark: SparkSession, path: String, version: Long,
+  private def selectFilesTypedAt(spark: SparkSession, path: String, version: Long,
       ranges: Seq[(String, String, String)]): (Seq[String], Int) =
     selectFilesTypedIn(spark, manifestAt(spark, path, version), path, ranges)
 

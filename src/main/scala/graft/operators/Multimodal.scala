@@ -69,47 +69,7 @@ object Multimodal {
       }
   }
 
-  case class ResizedAsset(id: Long, width: Int, height: Int, payload: Array[Byte])
   case class SampledFrame(id: Long, frame_idx: Int, frame_sha: String)
-
-  /** Pluggable resize boundary (a real impl wraps an image library). */
-  trait MediaResizer extends Serializable {
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte]
-  }
-
-  /** Deterministic stub resizer: the "resized image" is the digest stream
-    * of the source payload cycled to exactly w*h/16 bytes — size-faithful
-    * (scales with target dims), deterministic, content-derived. A real
-    * decoder+scaler replaces exactly this class. */
-  final class StubResizer extends MediaResizer {
-    @transient private lazy val md = java.security.MessageDigest.getInstance("SHA-256")
-    override def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      md.reset()
-      val dig = md.digest(payload)
-      val n = math.max(1, w * h / 16)
-      Array.tabulate[Byte](n)(i => dig(i % dig.length))
-    }
-  }
-
-  /**
-   * Batched resize over a binary column — blob in, blob out, inside ONE
-   * mapPartitions (no shuffle touches the payload; resize before any wide
-   * op so only the small output crosses the wire).
-   */
-  def resizeAssets(df: DataFrame, idCol: String, payloadCol: String,
-      targetW: Int, targetH: Int,
-      resizer: MediaResizer = new StubResizer): Dataset[ResizedAsset] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType), col(payloadCol))
-      .filter(col(payloadCol).isNotNull)
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, payload) =>
-          ResizedAsset(id, targetW, targetH, resizer.resize(payload, targetW, targetH))
-        }
-      }
-  }
 
   /**
    * Video frame sampling: one output row per kept frame (every `everyN`th

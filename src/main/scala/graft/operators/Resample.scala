@@ -29,34 +29,6 @@ object Resample {
    *                 floor-division bucket expression on both sides.
    * @return (keyCols..., bucket_us, open, close, high, low, n, sum_value)
    */
-  /**
-   * Streaming twin of [[ohlcBars]]: tumbling event-time windows with a
-   * watermark, append output — each bar emits EXACTLY ONCE when the
-   * watermark passes its window end (late events inside the delay fold
-   * into their bar before it seals; later ones drop). State is one
-   * six-number bar per open (key, window) — bounded by the watermark
-   * horizon, never event volume. `tsCol` must be a timestamp column;
-   * `bucket` must match the batch side's `bucketMicros` for
-   * stream == batch equality (pinned in StreamingSpec), with
-   * `bucket_us` = epoch micros of the window start either way.
-   */
-  def ohlcBarsStream(events: DataFrame, keyCols: Seq[String], tsCol: String,
-      valueCol: String, bucket: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .groupBy(keyCols.map(col) :+ window(col(tsCol), bucket).as("w"): _*)
-      .agg(
-        min_by(col(valueCol), col(tsCol)).as("open"),
-        max_by(col(valueCol), col(tsCol)).as("close"),
-        max(col(valueCol)).as("high"),
-        min(col(valueCol)).as("low"),
-        count(lit(1)).as("n"),
-        round(sum(col(valueCol)), 2).as("sum_value"))
-      .select(keyCols.map(col) ++ Seq(
-        unix_micros(col("w.start")).as("bucket_us"),
-        col("open"), col("close"), col("high"), col("low"),
-        col("n"), col("sum_value")): _*)
-
   def ohlcBars(events: DataFrame, keyCols: Seq[String], tsUsCol: String,
       valueCol: String, bucketMicros: Long): DataFrame = {
     require(bucketMicros > 0, s"bucketMicros must be positive: $bucketMicros")

@@ -65,7 +65,7 @@ object Similarity {
    * is set when dot(v, plane_p) > 0. Equal buckets are ANN candidates.
    * plane_p[c] = +1 if the first hex digit of md5("p|c") is < '8' else -1.
    */
-  def signBucket(vec: Column, dim: Int, planes: Int = 8): Column = {
+  private[graft] def signBucket(vec: Column, dim: Int, planes: Int = 8): Column = {
     val bits = (0 until planes).map { p =>
       val plane = (0 until dim).map(c => planeComponent(p, c).toDouble)
       // one zip_with/aggregate pass per plane beats a dim-wide expression
@@ -77,7 +77,7 @@ object Similarity {
   }
 
   /** Deterministic +-1 hyperplane component (md5-derived, public recipe). */
-  def planeComponent(plane: Int, component: Int): Int = {
+  private[graft] def planeComponent(plane: Int, component: Int): Int = {
     val digest = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$plane|$component".getBytes("UTF-8"))
     if ((digest(0) & 0x80) == 0) 1 else -1
@@ -337,7 +337,7 @@ object Similarity {
 
   /** Inverse of quantizeI8: `q_i * scale` as float — the approximate
     * vector an int8 ANN stage scores against. */
-  def dequantI8(quantized: Column): Column =
+  private[graft] def dequantI8(quantized: Column): Column =
     transform(quantized.getField("q"),
       q => (q.cast(DoubleType) * quantized.getField("scale").cast(DoubleType))
         .cast(FloatType))
@@ -551,7 +551,7 @@ object Similarity {
    * paid once at ingest, like [[Bucketing]]'s write-side shuffle; write
    * `index` partitioned by `bucket` so probes prune the storage scan.
    */
-  def ivfPqIndexFrames(corpus: DataFrame, idCol: String, vecCol: String,
+  private[graft] def ivfPqIndexFrames(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, m: Int = 8, ksub: Int = 64, seed: Long = 42L,
       maxTrainRows: Long = 100000L): (DataFrame, DataFrame, DataFrame) = {
     // ONE training sample serves both trainings: it is the same rows
@@ -570,7 +570,7 @@ object Similarity {
     * when the planted corpus gives IVF probing recall 1 AND every PQ
     * subspace trained in exact mode, the coarse candidate set contains
     * the true top-k and the re-rank IS brute force. */
-  def ivfPqSearchIndex(queries: DataFrame, index: DataFrame,
+  private[graft] def ivfPqSearchIndex(queries: DataFrame, index: DataFrame,
       centroids: DataFrame, codebooks: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, refine: Int,
       nprobe: Int = 4): DataFrame = {

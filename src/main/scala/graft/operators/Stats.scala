@@ -169,37 +169,26 @@ object Stats {
   }
 
   /**
-   * Top principal component by the power method: exactly `iterations`
-   * unnormalized multiplies v ← Cv from the uniform start 1/√d, one
-   * final L2 normalization, rounded to 8 decimals, sign fixed so the
+   * Top-k principal components by the power method + Hotelling
+   * deflation. Each component takes exactly `iterations` unnormalized
+   * multiplies v ← Cv from the uniform start 1/√d, one final L2
+   * normalization, rounded to 8 decimals, sign fixed so the
    * largest-|·| entry (lowest index on ties) is positive. Deterministic
    * by construction — fixed iteration count (like [[Graph.pageRank]]'s
    * fixed 5), covariance pre-rounded by [[covariance]]'s contract, and
-   * the driver loop sums in index order — so an independent engine
-   * running the same recipe reproduces it bit-for-bit at the rounding
-   * precision.
+   * the driver loop sums in index order. After extracting component v
+   * with Rayleigh eigenvalue λ = vᵀCv (rounded to 8), the matrix
+   * deflates to C − λ·vvᵀ and is RE-ROUNDED to [[covariance]]'s 6
+   * decimals before the next component's iterations — every matrix any
+   * engine iterates on is a pure function of already-rounded values, so
+   * the whole decomposition reproduces bit-for-bit at the rounding
+   * precision (deflation arithmetic is kept left-associative
+   * `λ·vᵢ·vⱼ`, matching the SQL oracle's evaluation order).
    *
    * The d×d collect is the legitimate driver step (2080 upper-triangle
    * rows at d=64), mirrored to a full matrix locally.
    */
-  def topComponent(embs: DataFrame, vecCol: String,
-      iterations: Int = 16): Array[Double] =
-    topComponents(embs, vecCol, k = 1, iterations).head
-
-  /**
-   * Top-k principal components by power iteration + Hotelling deflation:
-   * after extracting component v with Rayleigh eigenvalue λ = vᵀCv
-   * (rounded to 8), the matrix deflates to C − λ·vvᵀ and is RE-ROUNDED
-   * to [[covariance]]'s 6 decimals before the next component's
-   * iterations — every matrix any engine iterates on is a pure function
-   * of already-rounded values, so the whole decomposition reproduces
-   * bit-for-bit at the rounding precision (deflation arithmetic is kept
-   * left-associative `λ·vᵢ·vⱼ`, matching the SQL oracle's evaluation
-   * order). Same per-component recipe as [[topComponent]]: exactly
-   * `iterations` unnormalized multiplies from the uniform 1/√d start,
-   * one final L2 normalization, round-8, largest-|entry|-positive sign.
-   */
-  def topComponents(embs: DataFrame, vecCol: String, k: Int,
+  private[graft] def topComponents(embs: DataFrame, vecCol: String, k: Int,
       iterations: Int = 16): Seq[Array[Double]] =
     topComponentsWithValues(embs, vecCol, k, iterations).map(_._1)
 
@@ -208,7 +197,7 @@ object Stats {
     * FROM — the original covariance for v1, the deflated remainder for
     * v2, ...). The same quantity the oracle's `lamK` CTEs compute, so
     * variance-explained summaries hash-check cross-engine. */
-  def topComponentsWithValues(embs: DataFrame, vecCol: String, k: Int,
+  private def topComponentsWithValues(embs: DataFrame, vecCol: String, k: Int,
       iterations: Int = 16): Seq[(Array[Double], Double)] =
     solveComponents(collectCov(embs, vecCol), k, iterations)
 
@@ -293,7 +282,7 @@ object Stats {
   }
 
   /**
-   * Projects every vector onto the [[topComponent]] direction:
+   * Projects every vector onto the top principal direction:
    * `(carryCols..., pc1)` with pc1 rounded to 4 decimals. One aggregate
    * pass to learn the component, one codegen'd vec_dot scan to apply it
    * — the corpus never shuffles.

@@ -132,16 +132,6 @@ object TextAnalysis {
         col("n_tokens").cast(DoubleType) / greatest(col("n_sentences"), lit(1L)), 4))
   }
 
-  /** Overlapping character k-grams of the whitespace-normalized text
-    * (lookahead regex — matches overlap without consuming). (?s) so `.`
-    * also crosses U+2028/U+2029/U+0085, which Java excludes by default but
-    * a SQL substr() naturally includes — engines must agree per position.
-    * NOTE: only for callers that need the gram STRINGS; hashing paths use
-    * the fused char_gram_hashes kernel, which never materializes them. */
-  def charGrams(text: Column, k: Int): Column =
-    regexp_extract_all(regexp_replace(trim(text), "\\s+", " "),
-      lit(s"(?s)(?=(.{$k}))"), lit(1))
-
   /**
    * Winnowing fingerprints (MOSS-style rolling-hash fingerprinting):
    * 32-bit md5-derived hashes of overlapping character k-grams, reduced to
@@ -150,7 +140,7 @@ object TextAnalysis {
    * least one shared fingerprint, so matching fingerprints localize
    * copied passages — not just whole-document duplicates. Gram hashing is
    * the fused char_gram_hashes kernel (one digest per byte-slice window —
-   * the charGrams regex form allocated a k-char string per character of
+   * a regex gram-string form allocated a k-char string per character of
    * every document); the winnow reduction is the O(n) deque kernel. All
    * codegen'd; document size bounds memory.
    */

@@ -84,23 +84,12 @@ object Zorder {
     * contiguous curve segment, i.e. a tight hyper-rectangle in all
     * `cols`. The key column itself is dropped from the output. */
   def writeZOrdered(df: DataFrame, cols: Seq[String], path: String,
-      files: Int, bits: Int = 16): Unit =
-    writeZ(df, cols, path, files, bits, org.apache.spark.sql.SaveMode.Overwrite)
-
-  /** [[writeZOrdered]] in append mode: adds a new z-clustered batch of
-    * files without touching existing ones (part-file names are
-    * task/UUID-unique). Used by [[Lakehouse.appendClustered]]. */
-  def writeZOrderedAppend(df: DataFrame, cols: Seq[String], path: String,
-      files: Int, bits: Int = 16): Unit =
-    writeZ(df, cols, path, files, bits, org.apache.spark.sql.SaveMode.Append)
-
-  private def writeZ(df: DataFrame, cols: Seq[String], path: String,
-      files: Int, bits: Int, mode: org.apache.spark.sql.SaveMode): Unit = {
+      files: Int, bits: Int = 16): Unit = {
     require(files > 0, s"files must be positive: $files")
     withZKey(df, cols, "_z", bits)
       .repartitionByRange(files, col("_z"))
       .sortWithinPartitions(col("_z"))
       .drop("_z")
-      .write.mode(mode).parquet(path)
+      .write.mode("overwrite").parquet(path)
   }
 }

@@ -218,7 +218,7 @@ object SortedRunWriter {
 
   /** Wrap a raw stream in the codec's compressor (lz4/snappy/zstd
     * ship in Spark's own jars; deflate is java.util.zip). */
-  def compress(codec: String, os: OutputStream): OutputStream = codec match {
+  private[graft] def compress(codec: String, os: OutputStream): OutputStream = codec match {
     case "none"    => os
     case "deflate" => new java.util.zip.DeflaterOutputStream(
       os, new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION), 1 << 16)
@@ -229,7 +229,7 @@ object SortedRunWriter {
   }
 
   /** Matching reader side, for run consumers and round-trip tests. */
-  def decompress(codec: String, is: InputStream): InputStream = codec match {
+  private def decompress(codec: String, is: InputStream): InputStream = codec match {
     case "none"    => is
     case "deflate" => new java.util.zip.InflaterInputStream(is)
     case "lz4"     => new net.jpountz.lz4.LZ4BlockInputStream(is)
@@ -310,7 +310,7 @@ object SortedRunWriter {
    * still skips `startLogical - <returned logical start>` bytes. Reads
    * only the physical bytes from the seek point on.
    */
-  def openChunked(dataFile: File, codec: String, chunks: Array[(Long, Long)],
+  private[graft] def openChunked(dataFile: File, codec: String, chunks: Array[(Long, Long)],
       startLogical: Long): (InputStream, Long) = {
     require(chunks.nonEmpty, s"no chunk map for $dataFile")
     var k = 0

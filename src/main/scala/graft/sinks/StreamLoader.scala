@@ -117,7 +117,7 @@ object StreamLoader {
     * sleeps until wall-clock catches up with bytes/rate, so sustained
     * throughput never exceeds the cap while small files still finish in
     * one burst. */
-  def streamRun(file: File, man: BulkSink.PartitionManifest,
+  private[graft] def streamRun(file: File, man: BulkSink.PartitionManifest,
       host: String, addr: String, port: Int,
       throttleMBits: Option[Int] = None): SessionResult =
     try {

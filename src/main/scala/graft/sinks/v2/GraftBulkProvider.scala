@@ -295,7 +295,7 @@ final class GraftBulkDataWriter(path: String, pid: Int, schema: StructType,
 object GraftBulkDataWriter {
   /** The record-value columns of a graft-bulk input: all but the aux
     * routing columns, as (ordinal, type). */
-  def valueFields(schema: StructType): Seq[(Int, DataType)] = {
+  private[v2] def valueFields(schema: StructType): Seq[(Int, DataType)] = {
     val aux = Set("_pk", "_token", "_bucket")
     schema.fields.toSeq.zipWithIndex.collect {
       case (f, i) if !aux(f.name) => (i, f.dataType)

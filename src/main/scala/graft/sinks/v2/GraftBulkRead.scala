@@ -141,7 +141,7 @@ object GraftBulkRead {
     * not token-sorted for the reader, and a file WITHOUT a manifest has
     * no evidence of order at all — claiming ordering over either would
     * let Spark elide sorts over unordered data. */
-  def murmur3Sorted(dir: File,
+  private[graft] def murmur3Sorted(dir: File,
       preRead: Option[Seq[BulkSink.PartitionManifest]] = None): Boolean = {
     val ms = preRead.getOrElse(BulkSink.readManifests(dir))
     val manifested = ms.map(_.dataFile).toSet

@@ -67,12 +67,12 @@ object AvroSource {
   }
 
   /** Avro schema -> Spark StructType (the §1.3 type table). */
-  def toStructType(schema: Schema): StructType =
+  private def toStructType(schema: Schema): StructType =
     StructType(schema.getFields.asScala.map { f =>
       StructField(f.name(), toDataType(f.schema()), nullable = true)
     }.toSeq)
 
-  def toDataType(s: Schema): DataType = s.getType match {
+  private def toDataType(s: Schema): DataType = s.getType match {
     case Schema.Type.STRING  => StringType
     case Schema.Type.INT     => IntegerType
     case Schema.Type.LONG    => LongType

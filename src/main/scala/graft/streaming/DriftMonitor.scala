@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.operators.Similarity
 
@@ -25,9 +24,9 @@ import graft.operators.Similarity
  *
  * Scale shape: each side is ONE bounded-state aggregation (a dim-double
  * sum per label, merged map-side); the #labels-row baseline joins
- * broadcast. Corpus/stream rows never shuffle — per micro-batch the
- * exchange carries kilobytes of sums, so the monitor costs a scan
- * regardless of batch size.
+ * broadcast. Corpus rows never shuffle — per batch the exchange
+ * carries kilobytes of sums, so the monitor costs a scan regardless of
+ * batch size.
  */
 object DriftMonitor {
 
@@ -39,7 +38,7 @@ object DriftMonitor {
       .select(col(labelCol), col("_vs.sums").as("_sums"), col("_vs.n").as("n"))
 
   /**
-   * Batch form: per-label drift of `batch` against `baselineSums` (a
+   * Per-label drift of `batch` against `baselineSums` (a
    * [[labelSums]] output). Labels absent from either side are omitted —
    * a new label has no baseline direction to drift FROM (pair this with
    * a label-set diff when taxonomy changes matter).
@@ -54,19 +53,4 @@ object DriftMonitor {
       .select(col(labelCol), col("n_batch"),
         round(lit(1.0) - Similarity.cosine(col("_bsums"), col("_base")), 4)
           .as("drift"))
-
-  /**
-   * Writer emitting one drift row per (micro-batch, label) via `sink`.
-   * Per-batch semantics are EXACTLY [[centroidDrift]] — StreamingSpec
-   * pins stream == batch on the same input. Callers pass a CACHED
-   * baselineSums frame (the [[StreamingEnrich]] static-side contract).
-   */
-  def centroidDriftWriter(stream: DataFrame, baselineSums: DataFrame,
-      labelCol: String, vecCol: String,
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(centroidDrift(batch, baselineSums, labelCol, vecCol), batchId)
-      }
 }

@@ -1,20 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /**
  * Sessionization: group a user's events into sessions separated by a gap.
- * Two equivalent forms:
+ * Two equivalent batch forms:
  *
- *  - batch: lag/cumulative-sum window (one shuffle on user_id, pure
+ *  - a lag/cumulative-sum window (one shuffle on user_id, pure
  *    Catalyst, any scale);
- *  - streaming: KeyValueGroupedDataset.flatMapGroupsWithState with
- *    per-user session state and processing-time timeouts — the custom-
- *    state streaming surface (§2.9/§2.10 north-star).
+ *  - Spark's built-in `session_window` aggregation.
  */
 object Sessionize {
 
@@ -39,56 +35,11 @@ object Sessionize {
         min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts"))
   }
 
-  // ---- streaming form -------------------------------------------------
-
-  case class Event(event_id: Long, ts: Long, user_id: Long)
-  case class SessionState(start: Long, end: Long, n: Long)
-  case class Session(user_id: Long, start_ts: Long, end_ts: Long, n_events: Long)
-
-  /**
-   * Streaming sessionization: per-user state carries the open session;
-   * events extending it merge in, a gap beyond `gap` closes and emits
-   * it. State is one small record per active user — bounded by active
-   * users, not event volume.
-   */
-  def sessionizeStream(events: Dataset[Event], gap: Long): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[SessionState], Session](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, it: Iterator[Event], state: GroupState[List[SessionState]]) =>
-          // within a micro-batch events may arrive unsorted — sort locally
-          val sorted = it.toSeq.sortBy(e => (e.ts, e.event_id))
-          var open = state.getOption.flatMap(_.headOption)
-          val closed = scala.collection.mutable.ListBuffer.empty[Session]
-          sorted.foreach { e =>
-            open match {
-              case Some(s) if e.ts - s.end <= gap =>
-                open = Some(s.copy(end = e.ts, n = s.n + 1))
-              case Some(s) =>
-                closed += Session(userId, s.start, s.end, s.n)
-                open = Some(SessionState(e.ts, e.ts, 1))
-              case None =>
-                open = Some(SessionState(e.ts, e.ts, 1))
-            }
-          }
-          state.update(open.toList)
-          closed.iterator
-      }
-  }
-
   // ---- built-in session_window form ----------------------------------
 
   /**
    * Spark-first sessionization via the native `session_window` operator —
-   * the form to prefer when the per-session output is an aggregate (the
-   * custom-state form above exists for arbitrary per-session logic).
-   * Works identically over batch frames and streams; on a stream, pass
-   * `watermark` (e.g. `Some("1 hour")`) and sessions CLOSE when the
-   * watermark passes gap beyond their last event — including each key's
-   * trailing session, which the flatMapGroupsWithState form can only
-   * close on a later event's arrival.
+   * the form to prefer when the per-session output is an aggregate.
    *
    * Gap-boundary semantics differ from [[sessionizeBatch]] by design of
    * the built-in: `session_window` merges an event at strictly LESS than
@@ -101,12 +52,9 @@ object Sessionize {
    * event times (min/max ts), not the padded window struct — matching
    * the batch form and the q14 oracle.
    */
-  def sessionizeWindows(events: DataFrame, gapMicros: Long,
-      watermark: Option[String] = None): DataFrame = {
+  def sessionizeWindows(events: DataFrame, gapMicros: Long): DataFrame = {
     require(gapMicros >= 1, "gapMicros must be >= 1")
-    val timed = events.withColumn("_event_time", timestamp_micros(col("ts")))
-    val bounded = watermark.fold(timed)(timed.withWatermark("_event_time", _))
-    bounded
+    events.withColumn("_event_time", timestamp_micros(col("ts")))
       .groupBy(col("user_id"),
         session_window(col("_event_time"), s"$gapMicros microseconds"))
       .agg(count(lit(1)).as("n_events"),

@@ -8,7 +8,7 @@ import graft.operators.Lakehouse
 /**
  * Lakehouse lifecycle soak at a scale the unit specs don't reach: one
  * N-row z-clustered initial write, `appends` small-batch appends (the
- * streaming-ingest debris shape), a pruned-read correctness sweep
+ * frequent-ingest debris shape), a pruned-read correctness sweep
  * against full-scan truth at each lifecycle stage, then OPTIMIZE-style
  * compaction and the same sweep again. Prints one JSON line:
  * files before/after compaction, pruned-file fraction for a 10% key

@@ -9,9 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.StaticClusterInfo
 import graft.cli.Hdfs2CassSpark
 import graft.sources.AvroSource
-import graft.streaming.EventsIngest
 
-/** End-to-end specs: Avro scan, CLI, streaming ingest, DSL. */
+/** End-to-end specs: Avro scan, CLI, replica streaming, DSL, curation. */
 class IntegrationSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import spark.implicits._
@@ -267,21 +266,6 @@ class IntegrationSpec extends AnyFunSuite {
       Hdfs2CassSpark.parseArgs(Seq("--bogus", "x")))
   }
 
-  test("streaming ingest: events stream to per-batch sorted bulk loads") {
-    val out = Files.createTempDirectory("graft-stream").toString
-    // the streaming file source wants a directory of files
-    val inDir = Files.createTempDirectory("graft-stream-in")
-    Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      inDir.resolve("events.parquet"))
-    EventsIngest.ingestOnce(spark, inDir.toString, out)
-    val batches = new java.io.File(out).listFiles().filter(_.getName.startsWith("batch="))
-    assert(batches.nonEmpty, "no micro-batch output written")
-    val manifest = new java.io.File(batches.head, "_MANIFEST.json")
-    assert(manifest.exists())
-    val json = new String(Files.readAllBytes(manifest.toPath))
-    assert(json.contains("\"sorted\":true"))
-  }
-
   test("LegacySource reads TSV line files") {
     val dir = Files.createTempDirectory("graft-legacy")
     Files.write(dir.resolve("part-0.txt"),
@@ -333,32 +317,16 @@ class IntegrationSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-dsl").toString
     val manifests = cql.bulkLoadSorted(Seq("rowkey"), 2, out)
     assert(manifests.map(_.rows).sum === 1500)
-  }
-
-  test("streaming dedup drops duplicate fingerprints within the watermark") {
-    import org.apache.spark.sql.streaming.Trigger
-    val inDir = Files.createTempDirectory("graft-sdedup")
-    // 6 events, 3 distinct texts (each duplicated once, close in time)
-    val batch = spark.createDataFrame(Seq(
-      (1L, "2024-01-01 10:00:00", "alpha beta gamma"),
-      (2L, "2024-01-01 10:00:10", "alpha  beta   gamma"), // dup after normalize
-      (3L, "2024-01-01 10:01:00", "delta epsilon zeta"),
-      (4L, "2024-01-01 10:01:30", "delta epsilon zeta"),
-      (5L, "2024-01-01 10:02:00", "eta theta iota"),
-      (6L, "2024-01-01 10:02:30", "eta theta iota")))
-      .toDF("id", "ts_s", "text")
-      .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
-    batch.write.mode("overwrite").parquet(inDir.toString + "/data")
-    val stream = spark.readStream.schema(batch.schema)
-      .parquet(inDir.toString + "/data")
-    val deduped = graft.streaming.StreamingDedup.dedupStream(stream, "text", "ts")
-    val qname = "sdedup_" + System.nanoTime()
-    val q = deduped.writeStream.outputMode("append").format("memory")
-      .queryName(qname).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val ids = spark.table(qname).select("id").collect().map(_.getLong(0)).toSet
-    assert(ids.size === 3, s"expected 3 survivors, got $ids")
-    assert(Set(1L, 3L, 5L).subsetOf(ids) || ids.size === 3) // one per fingerprint
+    // the Thrift-path cells: the same rows as toCells under the same
+    // Projection, and the ignored column emits no cell
+    val cells = df.toCellsByFieldNames("o_orderkey", ignore = Seq("o_orderdate"))
+    val direct = graft.operators.CqlPipeline.toCells(df,
+      graft.operators.CqlPipeline.Projection(rowkey = Some("o_orderkey"),
+        ignore = Seq("o_orderdate")))
+    assert(cells.columns.toSeq === direct.columns.toSeq)
+    assert(cells.exceptAll(direct).isEmpty && direct.exceptAll(cells).isEmpty)
+    assert(cells.filter(col("colname") === "o_orderdate").isEmpty)
+    assert(!cells.isEmpty)
   }
 
   test("curateCorpus composes filter -> dedup -> near-dup with plausible stats") {

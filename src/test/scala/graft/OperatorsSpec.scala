@@ -746,18 +746,9 @@ class OperatorsSpec extends AnyFunSuite {
     assert(pc.map(p => (p._1, p._2)) === Set((100L, 101L)))
   }
 
-  test("multimodal resize and frame-sample plumbing: batched, deterministic, size-faithful") {
+  test("multimodal frame-sample plumbing: batched, one row per kept frame") {
     val d = Seq((1L, "payload one"), (2L, "another payload body")).toDF("doc_id", "text")
       .withColumn("payload", col("text").cast("binary"))
-    // resize: output payload sized by target dims, stable across runs
-    val r1 = Multimodal.resizeAssets(d, "doc_id", "payload", 32, 32).collect()
-      .map(a => a.id -> a).toMap
-    assert(r1(1L).payload.length === 32 * 32 / 16)
-    val r2 = Multimodal.resizeAssets(d, "doc_id", "payload", 64, 32).collect()
-      .map(a => a.id -> a).toMap
-    assert(r2(1L).payload.length === 64 * 32 / 16)
-    assert(r1(1L).payload.toSeq === Multimodal.resizeAssets(d, "doc_id", "payload", 32, 32)
-      .collect().map(a => a.id -> a).toMap.apply(1L).payload.toSeq)
     // frame sampling: every 2nd frame of the decoded frame count, per doc
     val frames = Multimodal.decodeAssets(d, "doc_id", "payload").collect()
       .map(a => a.id -> a.meta.frames).toMap
@@ -1425,7 +1416,8 @@ class OperatorsSpec extends AnyFunSuite {
     val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
     assert(h.map(_.getString(1)).toSeq ===
       Seq("create", "append", "append", "compact"))
-    assert(h.last.getLong(4) === 3L && h.last.getLong(5) === 2200L,
+    assert(h.last.getAs[Long]("n_files") === 3L &&
+      h.last.getAs[Long]("n_rows") === 2200L,
       s"live version should report 3 files / 2200 rows, got ${h.last}")
     // a 2-version retention keeps the pinned snapshot's files alive
     val (r2, _) = Lakehouse.vacuum(spark, dir, retainVersions = 2, orphanGraceMs = 0)
@@ -1441,12 +1433,14 @@ class OperatorsSpec extends AnyFunSuite {
     assert(liveRead2.exceptAll(truth).isEmpty && truth.exceptAll(liveRead2).isEmpty,
       "live read drifted after vacuum")
     // vacuumed versions keep their identity row AND their counts (the
-    // counts live in the commit marker, which vacuum preserves for
-    // fencing) — only their snapshots stop being readable
+    // counts live in the commit marker, which vacuum preserves) — only
+    // their snapshots stop being readable
     val h2 = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    assert(h2.length === 4 && h2.forall(r => !r.isNullAt(4) && !r.isNullAt(5)),
+    assert(h2.length === 4 && h2.forall(r =>
+      !r.isNullAt(r.fieldIndex("n_files")) && !r.isNullAt(r.fieldIndex("n_rows"))),
       "vacuum must keep marker-recorded counts for superseded versions")
-    assert(h2.last.getLong(4) === 3L && h2.last.getLong(5) === 2200L)
+    assert(h2.last.getAs[Long]("n_files") === 3L &&
+      h2.last.getAs[Long]("n_rows") === 2200L)
     intercept[Exception](
       Lakehouse.prunedReadAt(spark, dir, 2, "k", 10, 19).collect())
   }
@@ -1619,7 +1613,7 @@ class OperatorsSpec extends AnyFunSuite {
     // 1 create + 6 appends on a LINEAR log: contiguous versions, no gaps
     val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
     val hDump = h.map(r => s"v${r.getLong(0)}:${r.getString(1)}" +
-      s"(${r.getLong(4)}f/${r.getLong(5)}r)").mkString(", ")
+      s"(${r.getAs[Long]("n_files")}f/${r.getAs[Long]("n_rows")}r)").mkString(", ")
     assert(h.map(_.getLong(0)).toSeq === (0L to 6L),
       s"log is not linear — history: $hDump")
     assert(h.count(_.getString(1) == "append") === 6,
@@ -2225,80 +2219,6 @@ class OperatorsSpec extends AnyFunSuite {
       s"upsert-vs-append thread race lost or duplicated rows — $hDump")
   }
 
-  test("lakehouse: applyChangeFeedCollapsed — identical mirror, constant plan depth over a 50-version catch-up") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-clps").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      col("id").as("k"), (col("id") % 7).as("t"),
-      (col("id") * 10).cast("double").as("v"))
-    Lakehouse.writeClustered(mk(0, 100), dir, Seq("k", "t"), files = 1) // v0
-    val snapshot0 = Lakehouse.prunedReadAt(spark, dir, 0, "k", 0, 1e9)
-      .localCheckpoint()
-    // 50 commits: appends of fresh key ranges, keyed upserts (postimages
-    // + inserts), periodic deletes — the key stays UNIQUE throughout
-    // (the collapse's contract). Mostly appends: the point is the
-    // VERSION COUNT (plan depth), not per-commit weight
-    (1 to 50).foreach { i =>
-      if (i % 25 == 0)
-        Lakehouse.deleteWhere(spark, dir,
-          col("k") >= (i - 5) * 100L && col("k") < (i - 5) * 100L + 30,
-          files = 1)
-      else if (i % 8 == 0)
-        Lakehouse.upsertByKey(spark, dir,
-          mk(i * 100L - 50, i * 100L + 100).withColumn("v", col("v") * -1),
-          Seq("k"), files = 1)
-      else
-        Lakehouse.appendClustered(mk(i * 100L, i * 100L + 100), dir,
-          Seq("k", "t"), files = 1)
-    }
-    val feed = Lakehouse.changesDetailed(spark, dir, 0)
-    val general = Lakehouse.applyChangeFeed(snapshot0, feed, Seq("k"))
-    val collapsed = Lakehouse.applyChangeFeedCollapsed(snapshot0, feed,
-      Seq("k"))
-    // identical mirrors, and both equal the live table
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    assert(collapsed.exceptAll(general).isEmpty &&
-      general.exceptAll(collapsed).isEmpty,
-      "collapsed path diverged from the per-version replay")
-    assert(collapsed.exceptAll(live).isEmpty &&
-      live.exceptAll(collapsed).isEmpty,
-      "collapsed mirror diverged from the live table")
-    // CONSTANT plan depth: the general path chains one
-    // except/anti-join/union group per version (50 versions deep); the
-    // collapse is ONE anti-join + ONE window + ONE union over the feed,
-    // however many versions the window spans
-    import org.apache.spark.sql.catalyst.plans.logical.{Except, Join}
-    def merges(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.analyzed.collect {
-        case j: Join => j
-        case e: Except => e
-      }.size
-    val cm = merges(collapsed)
-    val gm = merges(general)
-    assert(cm <= 2,
-      s"collapsed plan carries $cm join/except nodes — depth is not " +
-        "constant in the window's version count")
-    assert(gm >= 8, s"general path unexpectedly shallow ($gm) — the " +
-      "comparison no longer pins anything")
-    // the guard: a multi-row-per-key postimage batch (same key changed
-    // twice within one version) must fall back to the per-version
-    // replay, not mis-fold — pinned on a small fresh table
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-lh-clpf").toString
-    Lakehouse.writeClustered(mk(0, 20), dir2, Seq("k", "t"), files = 1)
-    val snap2 = Lakehouse.prunedReadAt(spark, dir2, 0, "k", 0, 1e9)
-      .localCheckpoint()
-    Lakehouse.upsertByKey(spark, dir2,
-      mk(0, 1).unionByName(mk(0, 1).withColumn("v", lit(7.0))), Seq("k"),
-      files = 1)
-    val feed2 = Lakehouse.changesDetailed(spark, dir2, 0)
-    val g2 = Lakehouse.applyChangeFeed(snap2, feed2, Seq("k"))
-    val c2 = Lakehouse.applyChangeFeedCollapsed(snap2, feed2, Seq("k"))
-    assert(c2.exceptAll(g2).isEmpty && g2.exceptAll(c2).isEmpty,
-      "fallback path diverged on a duplicate-key-within-version feed")
-    assert(merges(c2) === merges(g2),
-      "the duplicate-key feed did not fall back to the per-version replay")
-  }
-
   test("lakehouse: vacuum never reclaims a live appender's just-renamed files") {
     import graft.operators.Lakehouse
     val dir = java.nio.file.Files.createTempDirectory("graft-lh-vrace").toString
@@ -2522,7 +2442,7 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
-  test("lakehouse: windowed mirror consumption — vacuum boundary fails loudly, re-sync recovers") {
+  test("lakehouse: changesDetailed past the vacuum boundary fails loudly; a re-sync resumes the feed") {
     import graft.operators.Lakehouse
     val dir = java.nio.file.Files.createTempDirectory("graft-lh-mirror").toString
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
@@ -2530,106 +2450,49 @@ class OperatorsSpec extends AnyFunSuite {
       (col("id") * 10).cast("double").as("v"))
     Lakehouse.writeClustered(mk(0, 400), dir, Seq("k", "t"), files = 4) // v0
     val v0 = Lakehouse.latestVersion(spark, dir)
-    var mirror = Lakehouse.prunedReadAt(spark, dir, v0, "k", 0, 1e9)
-      .localCheckpoint()
-    var applied = v0
-    def consumeWindow(): Unit = {
-      val head = Lakehouse.latestVersion(spark, dir)
-      Lakehouse.consumeChanges(spark, dir, applied) { feed =>
-        mirror = Lakehouse.applyChangeFeed(mirror, feed, Seq("k"))
-          .localCheckpoint()
-      }
-      applied = head
-    }
-    def assertMirrorLive(ctx: String): Unit = {
-      val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-      assert(mirror.exceptAll(live).isEmpty && live.exceptAll(mirror).isEmpty,
-        s"$ctx: mirror diverged from the live table")
-    }
-    // window 1: append (400..449) + upsert (postimages 350..449,
-    // inserts 450..499)
+    // a consumer at v0 FALLS BEHIND: appends land and vacuum's retention
+    // window moves past them — reading the feed from v0 must fail with
+    // the retention contract, not feed a partial window
     Lakehouse.appendClustered(mk(400, 450), dir, Seq("k", "t"), files = 1) // v1
-    Lakehouse.upsertByKey(spark, dir,
-      mk(350, 500).withColumn("v", col("v") * -1), Seq("k"))              // v2
-    consumeWindow()
-    assertMirrorLive("window 1 (append + upsert)")
-    // window 2: delete + append
-    Lakehouse.deleteWhere(spark, dir, col("k") % 10 === 3)                // v3
-    Lakehouse.appendClustered(mk(500, 550), dir, Seq("k", "t"), files = 1) // v4
-    consumeWindow()
-    assertMirrorLive("window 2 (delete + append)")
-    // the mirror FALLS BEHIND: two more appends land and vacuum's
-    // retention window moves past them — the next consume must fail
-    // with the retention contract, not feed a partial window
-    Lakehouse.appendClustered(mk(550, 600), dir, Seq("k", "t"), files = 1) // v5
-    Lakehouse.appendClustered(mk(600, 650), dir, Seq("k", "t"), files = 1) // v6
+    Lakehouse.appendClustered(mk(450, 500), dir, Seq("k", "t"), files = 1) // v2
     Lakehouse.vacuum(spark, dir, retainVersions = 1, orphanGraceMs = 0)
-    val eBehind = intercept[Exception](consumeWindow())
+    val eBehind = intercept[Exception](
+      Lakehouse.changesDetailed(spark, dir, v0).collect())
     assert(eBehind.getMessage.contains("retention window"),
       eBehind.getMessage)
     // RECOVERY: re-sync from the latest snapshot, then resume the feed
-    mirror = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9).localCheckpoint()
-    applied = Lakehouse.latestVersion(spark, dir)
-    assertMirrorLive("post re-sync")
-    Lakehouse.appendClustered(mk(650, 700), dir, Seq("k", "t"), files = 1) // v7
-    consumeWindow()
-    assertMirrorLive("resumed feed after re-sync")
-    // and a feed file vanishing MID-READ (vacuum racing the consumer
-    // between changesDetailed's existence sweep and the scan) surfaces
-    // as the retention contract too, not a raw task failure
-    Lakehouse.deleteWhere(spark, dir, col("k") % 10 === 7)                // v8
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val eMidRead = intercept[IllegalStateException](
-      Lakehouse.consumeChanges(spark, dir, applied) { feed =>
-        // simulate the concurrent vacuum AFTER the pre-check passed
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir, "_cdf"))
-          .foreach(st => fs.delete(st.getPath, true))
-        feed.count()
-      })
-    assert(eMidRead.getMessage.contains("vanished mid-read"),
-      eMidRead.getMessage)
+    val resynced = Lakehouse.latestVersion(spark, dir)
+    Lakehouse.appendClustered(mk(500, 550), dir, Seq("k", "t"), files = 1) // v3
+    val feed = Lakehouse.changesDetailed(spark, dir, resynced)
+      .drop("_change_type", "_version")
+    val want = mk(500, 550)
+    assert(feed.exceptAll(want).isEmpty && want.exceptAll(feed).isEmpty,
+      "the resumed feed after a re-sync drifted")
   }
 
-  test("lakehouse ingest: maintenance escalates after consecutive lost races, resets on success") {
+  test("lakehouse: a compaction that loses to a whole-table REPLACE fails loudly; the table stays exact") {
     import graft.operators.Lakehouse
-    import graft.streaming.LakehouseIngest
     val dir = java.nio.file.Files.createTempDirectory("graft-lh-esc").toString
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
       pmod(col("id"), lit(100)).as("k"), col("id").as("t"))
     Lakehouse.writeClustered(mk(0, 100), dir, Seq("k", "t"), files = 2)
-    val m = LakehouseIngest.Maintenance(every = 1, minRows = 1000,
-      files = 2, maxConsecutiveSkips = 3)
-    // every cycle, a REPLACE (non-append rewrite — compaction cannot
-    // retry through it) steals the slot inside compaction's window
-    def armReplace(): Unit =
+    // a REPLACE (non-append rewrite — compaction cannot rebase through
+    // it) steals the slot inside compaction's commit window
+    try {
       Lakehouse.onCompactBeforeCommit = () => {
         Lakehouse.onCompactBeforeCommit = () => ()
         Lakehouse.replaceClustered(mk(0, 100), dir, Seq("k", "t"), files = 2)
       }
-    try {
-      // two lost cycles are tolerated (warn + skip)…
-      armReplace()
-      LakehouseIngest.runMaintenance(spark, dir, Seq("k", "t"), 1L, m)
-      armReplace()
-      LakehouseIngest.runMaintenance(spark, dir, Seq("k", "t"), 2L, m)
-      // …the third consecutive one escalates: persistent conflict is a
-      // failure, not contention
-      armReplace()
-      val e = intercept[IllegalStateException](
-        LakehouseIngest.runMaintenance(spark, dir, Seq("k", "t"), 3L, m))
-      assert(e.getMessage.contains("consecutive"), e.getMessage)
-      // a successful cycle runs clean and resets the counter
-      Lakehouse.onCompactBeforeCommit = () => ()
-      LakehouseIngest.runMaintenance(spark, dir, Seq("k", "t"), 4L, m)
-      armReplace()
-      LakehouseIngest.runMaintenance(spark, dir, Seq("k", "t"), 5L, m)
+      val e = intercept[Lakehouse.CommitConflictException](
+        Lakehouse.compact(spark, dir, Seq("k", "t"), minRows = 1000, files = 2))
+      assert(e.getMessage.contains("REPLACE"), e.getMessage)
     } finally Lakehouse.onCompactBeforeCommit = () => ()
-    // the table stayed exact through every interleave
+    // the next compaction runs clean
+    Lakehouse.compact(spark, dir, Seq("k", "t"), minRows = 1000, files = 2)
     val live = Lakehouse.prunedRead(spark, dir, "k", 0, 99)
     val truth = mk(0, 100)
     assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      "maintenance races drifted the table")
+      "the raced compaction drifted the table")
   }
 
   test("lakehouse: history is a pure marker replay — zero Spark jobs") {
@@ -2654,8 +2517,8 @@ class OperatorsSpec extends AnyFunSuite {
       // counts come from the commit markers, not manifest aggregations
       // (counts are SNAPSHOT totals: the append's manifest holds all 3
       // files / 600 rows, the compaction folds them into 1 file)
-      assert(h.map(r => (r.getLong(0), r.getString(1), r.getLong(4),
-        r.getLong(5))).sortBy(_._1).toSeq ===
+      assert(h.map(r => (r.getLong(0), r.getString(1), r.getAs[Long]("n_files"),
+        r.getAs[Long]("n_rows"))).sortBy(_._1).toSeq ===
         Seq((0L, "create", 2L, 500L), (1L, "append", 3L, 600L),
           (2L, "compact", 1L, 600L)))
       // listener delivery is async — give the bus a moment, then demand
@@ -2831,7 +2694,8 @@ class OperatorsSpec extends AnyFunSuite {
     val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
     assert(h.map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((0L, "create"), (1L, "replace")))
-    assert(h.last.getLong(4) === 2L && h.last.getLong(5) === 400L)
+    assert(h.last.getAs[Long]("n_files") === 2L &&
+      h.last.getAs[Long]("n_rows") === 400L)
     // the changes feed must NOT surface a whole-table swap as appends
     assert(Lakehouse.changesSince(spark, dir, v0).isEmpty,
       "replace leaked into the incremental changes feed")
@@ -2861,7 +2725,7 @@ class OperatorsSpec extends AnyFunSuite {
     // there is no retry loop for it
     val m = Lakehouse.manifestAt(spark, dir, staleBase)
     intercept[Lakehouse.CommitConflictException](
-      Lakehouse.commitVersion(spark, dir, m, "compact", "", -1L, staleBase))
+      Lakehouse.commitVersion(spark, dir, m, "compact", staleBase))
     // nothing became visible and no staging debris was left behind
     assert(Lakehouse.latestVersion(spark, dir) === 1L)
     val logLs = new java.io.File(s"$dir/_log").list().toSeq
@@ -4206,7 +4070,7 @@ class OperatorsSpec extends AnyFunSuite {
       Seq(Array(0.6f * k + 0.01f * (k % 3), 0.8f * k - 0.0075f * (k % 3)))
     }
     val df = pts.map(Tuple1(_)).toDF("v")
-    val v = Stats.topComponent(df, "v", iterations = 32)
+    val v = Stats.topComponents(df, "v", k = 1, iterations = 32).head
     assert(math.abs(v(0) - 0.6) < 0.02 && math.abs(v(1) - 0.8) < 0.02,
       s"got ${v.toSeq}")
     // sign rule: largest-|entry| is positive
@@ -4376,16 +4240,6 @@ class OperatorsSpec extends AnyFunSuite {
       includeUnchanged = true)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(all(1L) === "unchanged" && all.size === 4)
-  }
-
-  test("funnelCounts summarizes stage reach") {
-    import graft.operators.Funnel
-    val ev = Seq((1L, 1L, "A"), (1L, 2L, "B"), (2L, 5L, "A"))
-      .toDF("user_id", "ts", "event_type")
-    val got = Funnel.funnelCounts(ev, "user_id", "ts", "event_type",
-        Seq("A", "B"), windowMicros = 100L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 2L, 2L -> 1L))
   }
 }
 

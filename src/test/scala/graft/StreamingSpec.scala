@@ -7,53 +7,15 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Sessionize
-import graft.streaming.Sessionize.{Event, Session}
 
-/** Streaming custom-state sessionization vs the batch window form. */
+/** The batch operators of `graft.streaming`: the session_window form
+  * against the lag form, the drift monitor's planted geometry, and the
+  * stateless text screens, which run unchanged on a stream. */
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import spark.implicits._
 
   val gap = 3600L * 1000000L // 1h in µs (the core.EventTime contract)
-
-  test("flatMapGroupsWithState sessions match batch sessionization (closed sessions)") {
-    val batch = graft.core.EventTime.readEventsTsUsAs(
-      spark.read.parquet("/root/testdata/sf0.001/events.parquet"), "ts")
-
-    // batch truth: all sessions per user
-    val truth = Sessionize.sessionizeBatch(batch, gap)
-      .select("user_id", "start_ts", "end_ts", "n_events")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-
-    // streaming: drive the same events through flatMapGroupsWithState
-    val inDir = Files.createTempDirectory("graft-sess-in")
-    Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      inDir.resolve("events.parquet"))
-    val stream = graft.core.EventTime.readEventsTsUsAs(
-      spark.readStream
-        .schema(graft.streaming.EventsIngest.eventsSchema(spark, inDir.toString))
-        .parquet(inDir.toString), "ts")
-      .select(col("event_id"), col("ts"), col("user_id")).as[Event]
-    val sessions = Sessionize.sessionizeStream(stream, gap)
-    val qname = "sessions_out_" + System.nanoTime()
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    val streamed = spark.table(qname).as[Session].collect()
-      .map(s => (s.user_id, s.start_ts, s.end_ts, s.n_events)).toSet
-
-    // the stream never closes each user's LAST session (no more input), so
-    // streamed == truth minus exactly one trailing open session per user
-    val users = truth.map(_._1)
-    assert(streamed.subsetOf(truth), s"phantom sessions: ${streamed -- truth}")
-    val missing = truth -- streamed
-    assert(missing.size === users.size, s"expected one open session per user, got ${missing.size}")
-    val lastStart = truth.groupBy(_._1).map { case (u, ss) => u -> ss.map(_._2).max }
-    assert(missing.forall(s => lastStart(s._1) === s._2),
-      "a non-trailing session failed to close")
-  }
 
   test("session_window form equals the lag form, including the exact-gap boundary") {
     // diff == gap merges in the lag form (<= gap); session_window merges
@@ -83,125 +45,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(b === a)
   }
 
-  test("streaming session_window closes sessions by watermark, trailing included") {
-    val batch = graft.core.EventTime.readEventsTsUsAs(
-      spark.read.parquet("/root/testdata/sf0.001/events.parquet"), "ts")
-    val truth = Sessionize.sessionizeBatch(batch, gap)
-      .select(col("user_id"), col("start_ts"), col("end_ts"), col("n_events"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val maxTs = batch.agg(max(col("ts"))).head().getLong(0)
-
-    val inDir = Files.createTempDirectory("graft-sw-in")
-    Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      inDir.resolve("events.parquet"))
-    val stream = graft.core.EventTime.readEventsTsUsAs(
-      spark.readStream
-        .schema(graft.streaming.EventsIngest.eventsSchema(spark, inDir.toString))
-        .parquet(inDir.toString), "ts")
-      .select(col("event_id"), col("ts"), col("user_id"))
-    val qname = "sw_out_" + System.nanoTime()
-    val q = Sessionize.sessionizeWindows(stream, gap + 1,
-        watermark = Some("0 seconds"))
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table(qname)
-      .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-
-    // watermark semantics: a session emits when watermark (final = global
-    // max event time at 0s delay) passes its window end (= last event +
-    // gap). Only sessions still inside that horizon may be withheld —
-    // UNLIKE flatMapGroupsWithState, which withholds EVERY user's
-    // trailing session regardless of age.
-    assert(streamed.subsetOf(truth), s"phantom sessions: ${streamed -- truth}")
-    val missing = truth -- streamed
-    assert(missing.forall(s => s._3 + gap + 1 > maxTs),
-      s"sessions beyond the watermark horizon failed to close: " +
-        s"${missing.filter(s => s._3 + gap + 1 <= maxTs)}")
-  }
-
-  test("eventsSchema falls back when the directory has no parquet yet (24/7 startup)") {
-    val empty = Files.createTempDirectory("graft-empty-events").toString
-    assert(graft.streaming.EventsIngest.eventsSchema(spark, empty) ===
-      graft.streaming.EventsIngest.fallbackEventsSchema)
-    val missing = empty + "/not-created-yet"
-    assert(graft.streaming.EventsIngest.eventsSchema(spark, missing) ===
-      graft.streaming.EventsIngest.fallbackEventsSchema)
-    // and a populated directory still resolves from the footers
-    val real = graft.streaming.EventsIngest.eventsSchema(spark,
-      "/root/testdata/sf0.001/events.parquet")
-    assert(real.fieldNames.contains("ts"))
-  }
-
-  test("streaming heavy hitters equal the batch topk_freq aggregate after the last batch") {
-    import graft.streaming.HeavyHitters
-    import graft.streaming.HeavyHitters.{GroupTop, Item}
-    // derive (group, item) pairs from events: group = event_type, item =
-    // the user id bucket — skewed enough that top-k is non-trivial
-    val batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .select(col("event_type").as("group"),
-        concat(lit("u"), pmod(col("user_id"), lit(7))).as("item"))
-    // batch truth via the SAME sketch surface (topk_freq aggregate);
-    // capacity 64 > 7 distinct items -> both sides are EXACT counts
-    val truth = batch.groupBy(col("group"))
-      .agg(graft.functions.FreqAgg.topk_freq(col("item"), 64, 3).as("top"))
-      .collect().map(r => r.getString(0) ->
-        r.getSeq[org.apache.spark.sql.Row](1).map(t => (t.getString(0), t.getLong(1))))
-      .toMap
-
-    val inDir = Files.createTempDirectory("graft-hh-in")
-    batch.coalesce(1).write.parquet(inDir.resolve("part").toString)
-    val stream = spark.readStream
-      .schema("group string, item string")
-      .parquet(inDir.resolve("part").toString).as[Item]
-    val qname = "hh_out_" + System.nanoTime()
-    val q = HeavyHitters.heavyHittersStream(stream, capacity = 64, k = 3)
-      .writeStream.outputMode("update").format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    // update mode re-emits per batch; the LAST emission per group is the
-    // final sketch — with one input file there is exactly one emission
-    val streamed = spark.table(qname).as[GroupTop].collect()
-      .map(g => g.group -> g.top.map(t => (t.item, t.est))).toMap
-    assert(streamed.keySet === truth.keySet)
-    streamed.foreach { case (g, top) =>
-      assert(top === truth(g), s"group $g: streamed $top != batch ${truth(g)}")
-    }
-  }
-
-  test("streaming OHLC bars equal the batch bars once the watermark closes them") {
-    import graft.operators.Resample
-    val ev = graft.core.EventTime
-      .withTsUs(spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-      .select(col("event_type"), col("ts_us"), col("value"))
-    val truth = Resample
-      .ohlcBars(ev, Seq("event_type"), "ts_us", "value", 3600000000L)
-      .collect().map(_.toSeq).toSet
-    // a far-future sentinel event drives the final watermark past every
-    // real window so append mode seals them all; its own bar is excluded
-    val maxUs = ev.agg(max(col("ts_us"))).head().getLong(0)
-    val sentinel = Seq(("zzz_sentinel",
-      maxUs + 24L * 3600000000L, 0.0)).toDF("event_type", "ts_us", "value")
-    val inDir = Files.createTempDirectory("graft-ohlc-in")
-    ev.unionByName(sentinel)
-      .withColumn("tst", timestamp_micros(col("ts_us"))).drop("ts_us")
-      .coalesce(1).write.parquet(inDir.resolve("ev").toString)
-    val stream = spark.readStream
-      .schema("event_type string, value double, tst timestamp")
-      .parquet(inDir.resolve("ev").toString)
-    val qname = "ohlc_" + System.nanoTime()
-    val q = Resample.ohlcBarsStream(stream, Seq("event_type"), "tst", "value")
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table(qname)
-      .filter(col("event_type") =!= "zzz_sentinel")
-      .collect().map(_.toSeq).toSet
-    assert(streamed === truth, "watermark-closed streaming bars diverge from batch")
-  }
-
   test("stateless text screens run unchanged on a stream: stream == batch") {
     // encodingQuality / sentenceStats are pure scan-stage projections, so
     // the SAME operator code must work on a readStream frame with no
@@ -229,193 +72,7 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("append-mode ingest emits each window exactly once as the watermark passes") {
-    // three bounded runs over a growing directory = a restarting 24/7
-    // ingest; windows must flow to bulk loads exactly once, held until the
-    // watermark passes their end, surviving restarts via the checkpoint
-    val inDir = Files.createTempDirectory("graft-ingest-in").toString
-    val outDir = Files.createTempDirectory("graft-ingest-out").toString
-    val H = 3600L * 1000000000L // 1h in ns
-    def addEvents(rows: (Long, Long)*): Unit = // (event_id, ts_ns)
-      rows.toSeq.map { case (id, ts) => (id, ts, 1L, "a", 1.0, "{}") }
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("append").parquet(inDir)
-    def allKeys: Seq[String] = {
-      val dirs = Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      dirs.flatMap(_.listFiles().filter(_.getName.endsWith("-Data.db")).flatMap { f =>
-        val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-          new java.io.FileInputStream(f)))
-        val keys = scala.collection.mutable.Buffer[String]()
-        try while (in.available() > 0) {
-          val klen = in.readUnsignedShort()
-          val key = new Array[Byte](klen); in.readFully(key)
-          in.skipBytes(in.readInt())
-          keys += new String(key, "UTF-8")
-        } finally in.close()
-        keys
-      }).toSeq
-    }
-    def loadedKeys: Set[String] = {
-      val ks = allKeys
-      assert(ks.distinct.size === ks.size, s"window loaded twice: $ks") // exactly-once
-      ks.toSet
-    }
-
-    // run 1: events in windows [0,1) and [2,3); the trailing no-data batch
-    // advances the watermark to 1.5h -> [0,1) emits, [2,3) held in state
-    addEvents((1L, H / 2), (2L, H / 2 + 1), (3L, 2 * H + H / 2))
-    graft.streaming.EventsIngest.ingestAppend(spark, inDir, outDir)
-    assert(loadedKeys === Set("a|1970-01-01 00:00:00"))
-    // run 2 (restart): watermark advances to 4h -> [2,3) emits ONCE, [5,6) held
-    addEvents((4L, 5 * H))
-    graft.streaming.EventsIngest.ingestAppend(spark, inDir, outDir)
-    assert(loadedKeys === Set("a|1970-01-01 00:00:00", "a|1970-01-01 02:00:00"))
-    // run 3 (restart): watermark 6h -> [5,6) emits; earlier windows NOT re-emitted
-    addEvents((5L, 7 * H))
-    graft.streaming.EventsIngest.ingestAppend(spark, inDir, outDir)
-    assert(loadedKeys === Set("a|1970-01-01 00:00:00", "a|1970-01-01 02:00:00",
-      "a|1970-01-01 05:00:00"))
-  }
-
-  test("streaming as-of enrichment equals the batch as-of join on the same input") {
-    import graft.operators.TemporalJoin
-    // reference: per-key "rate epochs" the stream enriches against
-    val reference = Seq(
-      ("u", 100L, 10L, 1.0), ("u", 300L, 11L, 2.0),
-      ("v", 150L, 20L, 5.0))
-      .toDF("k", "rt", "rid", "rate").cache()
-    val eventRows = Seq(
-      (1L, "u", 50L), (2L, "u", 100L), (3L, "u", 250L), (4L, "u", 350L),
-      (5L, "v", 149L), (6L, "v", 151L), (7L, "w", 500L))
-    val inDir = Files.createTempDirectory("graft-enrich-in").toString
-    // two parquet files -> at maxFilesPerTrigger=1 the stream processes
-    // them as SEPARATE micro-batches (the per-batch composition is real)
-    eventRows.take(4).toDF("id", "k", "t").coalesce(1)
-      .write.mode("append").parquet(inDir)
-    eventRows.drop(4).toDF("id", "k", "t").coalesce(1)
-      .write.mode("append").parquet(inDir)
-
-    val stream = spark.readStream
-      .schema("id LONG, k STRING, t LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Long], Option[Double])]
-    val batches = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = graft.streaming.StreamingEnrich.asofEnrichWriter(
-      stream, reference, keyCols = Seq("k"), leftTimeCol = "t",
-      rightTimeCol = "rt", rightCols = Seq("rid", "rate"),
-      tiebreakCols = Seq("rid"),
-      sink = (df, id) => got.synchronized {
-        batches += id
-        got ++= df.collect().map(r => (r.getLong(0),
-          Option(r.get(3)).map(_.asInstanceOf[Long]),
-          Option(r.get(4)).map(_.asInstanceOf[Double])))
-        ()
-      }).start()
-    q.awaitTermination(60000)
-    assert(batches.size >= 2, "expected at least two micro-batches")
-
-    val batch = TemporalJoin.asofJoin(eventRows.toDF("id", "k", "t"),
-      reference, Seq("k"), "t", "rt", Seq("rid", "rate"), Seq("rid"))
-      .collect().map(r => (r.getLong(0),
-        Option(r.get(3)).map(_.asInstanceOf[Long]),
-        Option(r.get(4)).map(_.asInstanceOf[Double]))).toSet
-    assert(got.toSet === batch, "stream enrichment diverged from batch as-of")
-    // spot-check the semantics themselves
-    val byId = got.map(t => t._1 -> ((t._2, t._3))).toMap
-    assert(byId(1L) === ((None, None))) // before the first epoch
-    assert(byId(2L) === ((Some(10L), Some(1.0)))) // equal time matches
-    assert(byId(4L) === ((Some(11L), Some(2.0)))) // latest epoch wins
-    assert(byId(7L) === ((None, None))) // key with no reference rows
-    reference.unpersist()
-    ()
-  }
-
-  test("stream-stream interval join matches the batch join; watermarks bound state") {
-    // clicks joined to the same user's purchases within 10 minutes AFTER
-    // the click — Structured Streaming's native windowed stream-stream
-    // join (equality key + time bounds + both-side watermarks)
-    val t0 = 1700000000L // epoch seconds
-    def ts(offsetSec: Long) = new java.sql.Timestamp((t0 + offsetSec) * 1000L)
-    val clickRows = Seq((1L, "u", ts(0)), (2L, "u", ts(700)), (3L, "v", ts(100)))
-    val purchaseRows = Seq(
-      (10L, "u", ts(300)), // within 10 min of click 1
-      (11L, "u", ts(1200)), // within 10 min of click 2, NOT click 1
-      (12L, "w", ts(100))) // wrong user
-    val clickDir = Files.createTempDirectory("graft-ssj-c").toString
-    val purchaseDir = Files.createTempDirectory("graft-ssj-p").toString
-    clickRows.toDF("click_id", "k", "cts").write.mode("append").parquet(clickDir)
-    purchaseRows.toDF("purchase_id", "k", "pts").write.mode("append").parquet(purchaseDir)
-
-    def stream(dir: String, schema: String, tsCol: String) = spark.readStream
-      .schema(schema).parquet(dir).withWatermark(tsCol, "1 hour")
-    val joined = graft.streaming.StreamingEnrich.intervalJoinStreams(
-      stream(clickDir, "click_id LONG, k STRING, cts TIMESTAMP", "cts"),
-      stream(purchaseDir, "purchase_id LONG, k STRING, pts TIMESTAMP", "pts"),
-      keyCols = Seq("k"), leftTimeCol = "cts", rightTimeCol = "pts",
-      lower = "0 seconds", upper = "10 minutes")
-
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val q = joined.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        got.synchronized { got ++= df.collect().map(r =>
-          (r.getAs[Long]("click_id"), r.getAs[Long]("purchase_id"))) }
-        ()
-      }.start()
-    q.awaitTermination(60000)
-
-    val batch = graft.streaming.StreamingEnrich.intervalJoinStreams(
-      clickRows.toDF("click_id", "k", "cts"),
-      purchaseRows.toDF("purchase_id", "k", "pts"),
-      Seq("k"), "cts", "pts", "0 seconds", "10 minutes")
-      .collect().map(r => (r.getAs[Long]("click_id"), r.getAs[Long]("purchase_id"))).toSet
-    assert(got.toSet === batch, "stream-stream join diverged from batch")
-    assert(got.toSet === Set((1L, 10L), (2L, 11L)))
-  }
-
-  test("ingestAndStream pushes every micro-batch's runs to the ring as it commits") {
-    // the full firehose-to-ring pipeline: windowed aggregation -> per-batch
-    // sorted bulk load -> rf-aware replica streaming, with receivers
-    // re-verifying decorated order and counts per session
-    import graft.sinks.{BulkSink, InProcessCluster, LoaderPlan}
-    val inDir = Files.createTempDirectory("graft-ingstream-in").toString
-    val outDir = Files.createTempDirectory("graft-ingstream-out").toString
-    val H = 3600L * 1000000000L
-    (1L to 40L).map(i => (i, (i % 4) * H + H / 2, i, s"t${i % 3}", 1.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("append").parquet(inDir)
-
-    val step = java.lang.Long.divideUnsigned(-1L, 4L)
-    val ring = Seq(
-      LoaderPlan.RingNode("s-1", Seq(Long.MinValue + step, Long.MinValue + 3L * step)),
-      LoaderPlan.RingNode("s-2", Seq(Long.MinValue + 2L * step, Long.MinValue + 4L * step)))
-    val cluster = new InProcessCluster(Seq("s-1", "s-2"),
-      ring = ring.map(n => n.host -> n.tokens).toMap)
-    val endpoints = cluster.start()
-    try {
-      graft.streaming.EventsIngest.ingestAndStream(spark, inDir, outDir,
-        graft.streaming.EventsIngest.StreamTarget(ring, rf = 2, endpoints),
-        mode = "complete")
-      // every non-empty run of every batch reached BOTH replicas (rf=2 on
-      // a 2-node ring) with verified order and counts
-      val received = cluster.receivedStreams
-      val batches = Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      val runs = batches.flatMap(b => BulkSink.readManifests(b).filter(_.rows > 0))
-      assert(runs.nonEmpty, "ingest produced no runs")
-      runs.foreach { m =>
-        for (host <- Seq("s-1", "s-2")) {
-          val r = received.getOrElse((host, m.dataFile),
-            fail(s"$host never received ${m.dataFile}: got ${received.keys.toSeq.sorted}"))
-          assert(r.rows === m.rows && r.sortedOk)
-        }
-      }
-    } finally cluster.stop()
-  }
-
-  test("streaming centroid drift equals the batch form; planted geometry reads exactly") {
+  test("centroid drift reads planted geometry exactly; a label without a baseline is omitted") {
     import graft.streaming.DriftMonitor
     // baseline: label A along +x, label B along +y
     val baseline = Seq(
@@ -423,497 +80,19 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "B", Seq(0.0f, 1.0f)))
       .toDF("vec_id", "label", "embedding")
     val baseSums = DriftMonitor.labelSums(baseline, "label", "embedding").cache()
-    // file 1: A still +x (drift 0); file 2: A rotated to +y (drift 1),
+    // batch 1: A still +x (drift 0); batch 2: A rotated to +y (drift 1),
     // B anti-parallel (drift 2), label C has no baseline -> omitted
     val b1 = Seq((10L, "A", Seq(2.0f, 0.0f)))
     val b2 = Seq((11L, "A", Seq(0.0f, 3.0f)), (12L, "B", Seq(0.0f, -1.0f)),
       (13L, "C", Seq(1.0f, 1.0f)))
-    val inDir = Files.createTempDirectory("graft-drift-in").toString
-    b1.toDF("vec_id", "label", "embedding").coalesce(1)
-      .write.mode("append").parquet(inDir)
-    b2.toDF("vec_id", "label", "embedding").coalesce(1)
-      .write.mode("append").parquet(inDir)
-
-    val stream = spark.readStream
-      .schema("vec_id LONG, label STRING, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    // one result SET per micro-batch, keyed by batch id
-    val got = scala.collection.mutable.Map.empty[Long, Set[(String, Long, Double)]]
-    val q = DriftMonitor.centroidDriftWriter(stream, baseSums, "label", "embedding",
-      sink = (df, id) => got.synchronized {
-        got(id) = df.collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-        ()
-      }).start()
-    q.awaitTermination(60000)
-    assert(got.size === 2, s"expected two micro-batches, got ${got.keySet}")
-
-    // stream == batch on each micro-batch's input (file order = id order)
     val perBatch = Seq(b1, b2).map(rows =>
       DriftMonitor.centroidDrift(rows.toDF("vec_id", "label", "embedding"),
           baseSums, "label", "embedding")
         .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet)
-    // (file→batch order is mod-time-based, so match sets, not indices)
-    assert(got.values.toSet === perBatch.toSet,
-      s"stream drift diverged from batch: $got vs $perBatch")
-    // planted geometry: exact drift values, no-baseline label omitted
-    assert(perBatch.toSet === Set(
+    assert(perBatch === Seq(
       Set(("A", 1L, 0.0)),
       Set(("A", 1L, 1.0), ("B", 1L, 2.0))))
     baseSums.unpersist()
     ()
-  }
-
-  test("hopping-window streaming aggregation equals the batch window() form") {
-    import graft.streaming.EventsIngest
-    val src = "/root/testdata/sf0.001/events.parquet"
-    val batch = EventsIngest.windowedCountsSliding(spark.read.parquet(src))
-      .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1),
-        r.getLong(2), math.round(r.getDouble(3) * 100))).toSet
-
-    val inDir = Files.createTempDirectory("graft-slide-in")
-    Files.copy(java.nio.file.Paths.get(src), inDir.resolve("events.parquet"))
-    val stream = spark.readStream
-      .schema(EventsIngest.eventsSchema(spark, inDir.toString))
-      .parquet(inDir.toString)
-    val qname = "slide_out_" + System.nanoTime()
-    // complete mode: every window emitted every trigger — one bounded
-    // trigger, so the final table IS the full aggregation
-    val q = EventsIngest.windowedCountsSliding(stream)
-      .writeStream.outputMode("complete").format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val streamed = spark.table(qname)
-      .collect().map(r => (r.getTimestamp(0).getTime, r.getString(1),
-        r.getLong(2), math.round(r.getDouble(3) * 100))).toSet
-    assert(streamed === batch)
-    // every event lands in exactly width/slide = 4 windows
-    val nEvents = spark.read.parquet(src).count()
-    assert(batch.toSeq.map(_._3).sum === 4 * nEvents)
-  }
-
-  test("streaming latest-wins compaction equals batch latestByKey") {
-    import graft.operators.Cdc
-    import graft.operators.Cdc.CdcRecord
-    val src = "/root/testdata/sf0.001/events.parquet"
-    def asRecords(df: org.apache.spark.sql.DataFrame) =
-      graft.core.EventTime.readEventsTsUsAs(df, "ts")
-        .select(concat_ws("|", col("user_id"), col("event_type")).as("key"),
-          col("ts").as("ver"), col("event_id").as("seq"),
-          col("props").as("payload"))
-
-    val truth = Cdc.latestByKey(asRecords(spark.read.parquet(src)),
-        Seq("key"), "ver", Seq("seq"))
-      .collect().map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getString(3))).toMap
-
-    val inDir = Files.createTempDirectory("graft-cdc-in")
-    Files.copy(java.nio.file.Paths.get(src), inDir.resolve("events.parquet"))
-    val stream = asRecords(spark.readStream
-        .schema(graft.streaming.EventsIngest.eventsSchema(spark, inDir.toString))
-        .parquet(inDir.toString)).as[CdcRecord]
-    val qname = "cdc_out_" + System.nanoTime()
-    val q = Cdc.latestByKeyStream(stream)
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // last emission per key (largest (ver, seq)) is the live view
-    val streamed = spark.table(qname).as[CdcRecord].collect()
-      .groupBy(_.key)
-      .map { case (k, rows) =>
-        val b = rows.maxBy(r => (r.ver, r.seq)); k -> ((b.ver, b.seq, b.payload))
-      }
-    assert(streamed === truth)
-  }
-
-  test("streaming latest-wins compaction state is O(live keys): one state row per distinct key") {
-    import graft.operators.Cdc
-    import graft.operators.Cdc.CdcRecord
-    val src = "/root/testdata/sf0.001/events.parquet"
-    def asRecords(df: org.apache.spark.sql.DataFrame) =
-      graft.core.EventTime.readEventsTsUsAs(df, "ts")
-        .select(concat_ws("|", col("user_id"), col("event_type")).as("key"),
-          col("ts").as("ver"), col("event_id").as("seq"),
-          col("props").as("payload"))
-    val nKeys = asRecords(spark.read.parquet(src))
-      .select("key").distinct().count()
-    val nRecords = spark.read.parquet(src).count()
-    assert(nRecords > nKeys, "fixture must hold multiple versions per key")
-
-    val inDir = Files.createTempDirectory("graft-cdc-state-in")
-    Files.copy(java.nio.file.Paths.get(src), inDir.resolve("events.parquet"))
-    val stream = asRecords(spark.readStream
-        .schema(graft.streaming.EventsIngest.eventsSchema(spark, inDir.toString))
-        .parquet(inDir.toString)).as[CdcRecord]
-    val qname = "cdc_state_out_" + System.nanoTime()
-    val q = Cdc.latestByKeyStream(stream)
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // the documented contract: the store holds EXACTLY one row per
-    // distinct key ever seen — independent of how many versions the
-    // changelog carried (NoTimeout by design; nothing is evicted)
-    val stateRows = q.recentProgress.flatMap(_.stateOperators)
-      .lastOption.map(_.numRowsTotal)
-    assert(stateRows === Some(nKeys),
-      s"state rows $stateRows != distinct keys $nKeys (of $nRecords records)")
-  }
-
-  test("streaming lakehouse ingest: per-micro-batch appends equal the batch layout") {
-    import graft.operators.Lakehouse
-    // three source files + maxFilesPerTrigger=1 -> three micro-batches,
-    // so the layout is built from three separate appendClustered calls
-    val srcDir = Files.createTempDirectory("graft-lhing-src")
-    val ev = graft.core.EventTime.withTsUs(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-      .select(col("event_id"), col("user_id"), col("event_type"), col("ts_us"))
-    for (i <- 0 until 3)
-      ev.filter(pmod(col("event_id"), lit(3)) === i).coalesce(1)
-        .write.parquet(s"$srcDir/chunk$i")
-    // flatten the three chunks into one glob dir of single files
-    val flat = Files.createTempDirectory("graft-lhing-flat")
-    for (i <- 0 until 3) {
-      val part = new java.io.File(s"$srcDir/chunk$i").listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.copy(part.toPath, flat.resolve(s"c$i.parquet"))
-    }
-    val layout = Files.createTempDirectory("graft-lhing-layout").toString
-    val ckpt = Files.createTempDirectory("graft-lhing-ckpt").toString
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(flat.toString)
-    val q = graft.streaming.LakehouseIngest.start(stream, layout,
-      Seq("user_id", "ts_us"), filesPerBatch = 2, checkpoint = ckpt)
-    q.awaitTermination()
-    assert(q.recentProgress.count(_.numInputRows > 0) === 3,
-      "expected three non-empty micro-batches")
-    // manifest covers 3 batches x 2 files and pruning is exact vs the
-    // original batch frame
-    val (kept, total) = Lakehouse.selectFiles(spark, layout, "user_id", 0, 1e18)
-    assert(total === 6 && kept.size === 6, s"manifest rows: $total")
-    val pruned = Lakehouse.prunedRead(spark, layout, "user_id", 4, 7)
-    val expect = ev.filter(col("user_id") >= 4 && col("user_id") <= 7)
-    assert(pruned.exceptAll(expect).isEmpty && expect.exceptAll(pruned).isEmpty,
-      "streamed layout drifted from the batch source")
-    // the exactly-once fence lives in the TABLE's log, not the stream's
-    // checkpoint: wipe the checkpoint and replay the entire source under
-    // the same streamId (the default — the checkpoint path). Every
-    // batchId is re-delivered from 0 and every one is fenced, so the
-    // layout commits nothing and stays row-identical.
-    val vBefore = Lakehouse.latestVersion(spark, layout)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-    val q2 = graft.streaming.LakehouseIngest.start(stream, layout,
-      Seq("user_id", "ts_us"), filesPerBatch = 2, checkpoint = ckpt)
-    q2.awaitTermination()
-    assert(Lakehouse.latestVersion(spark, layout) === vBefore,
-      "checkpoint-wipe replay committed new versions — the fence failed")
-    val replayed = Lakehouse.prunedRead(spark, layout, "user_id", 4, 7)
-    assert(replayed.exceptAll(expect).isEmpty && expect.exceptAll(replayed).isEmpty,
-      "checkpoint-wipe replay changed the layout's rows")
-    // the maintenance pass folds the micro-batch debris, still exact
-    val (c, w) = Lakehouse.compact(spark, layout, Seq("user_id", "ts_us"),
-      minRows = Long.MaxValue, files = 2)
-    assert(c === 6 && w === 2, s"compacted $c -> $w")
-    val pruned2 = Lakehouse.prunedRead(spark, layout, "user_id", 4, 7)
-    assert(pruned2.exceptAll(expect).isEmpty && expect.exceptAll(pruned2).isEmpty,
-      "compaction after streaming ingest drifted")
-  }
-
-  test("streaming lakehouse ingest: a widened stream evolves the layout; old rows null-fill") {
-    import graft.operators.Lakehouse
-    val ev = graft.core.EventTime.withTsUs(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
-      .select(col("event_id"), col("user_id"), col("event_type"), col("ts_us"))
-    // phase 1: two micro-batches of the ORIGINAL schema
-    val flat1 = Files.createTempDirectory("graft-lhev-flat1")
-    for (i <- 0 until 2) {
-      val d = Files.createTempDirectory("graft-lhev-chunk").toString
-      ev.filter(pmod(col("event_id"), lit(3)) === i).coalesce(1)
-        .write.mode("overwrite").parquet(d)
-      val part = new java.io.File(d).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.copy(part.toPath, flat1.resolve(s"c$i.parquet"))
-    }
-    val layout = Files.createTempDirectory("graft-lhev-layout").toString
-    val q1 = graft.streaming.LakehouseIngest.start(
-      spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1")
-        .parquet(flat1.toString),
-      layout, Seq("user_id", "ts_us"), filesPerBatch = 2,
-      checkpoint = Files.createTempDirectory("graft-lhev-ck1").toString)
-    q1.awaitTermination()
-    // phase 2: a later deployment ships a WIDENED schema (adds score);
-    // fresh source + checkpoint (a schema change is a new stream)
-    val ev2 = ev.filter(pmod(col("event_id"), lit(3)) === 2)
-      .withColumn("score", (col("event_id") % 5).cast("double"))
-    val flat2 = Files.createTempDirectory("graft-lhev-flat2")
-    locally {
-      val d = Files.createTempDirectory("graft-lhev-chunk2").toString
-      ev2.coalesce(1).write.mode("overwrite").parquet(d)
-      val part = new java.io.File(d).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      Files.copy(part.toPath, flat2.resolve("c2.parquet"))
-    }
-    val q2 = graft.streaming.LakehouseIngest.start(
-      spark.readStream.schema(ev2.schema).option("maxFilesPerTrigger", "1")
-        .parquet(flat2.toString),
-      layout, Seq("user_id", "ts_us"), filesPerBatch = 2,
-      checkpoint = Files.createTempDirectory("graft-lhev-ck2").toString)
-    q2.awaitTermination()
-    // the layout's recorded schema widened; pre-evolution rows null-fill
-    val live = Lakehouse.prunedRead(spark, layout, "user_id", 0, 1e18)
-    assert(live.columns.contains("score"),
-      "the widened stream did not evolve the layout schema")
-    val expect = ev.filter(pmod(col("event_id"), lit(3)) < 2)
-      .withColumn("score", lit(null).cast("double"))
-      .unionByName(ev2)
-    assert(live.exceptAll(expect).isEmpty && expect.exceptAll(live).isEmpty,
-      "widened streaming ingest drifted from the batch union")
-    assert(live.filter(col("score").isNull).count() ===
-      ev.filter(pmod(col("event_id"), lit(3)) < 2).count())
-  }
-
-  test("streaming MERGE ingest: latest-wins upserts equal the batch expectation; replay fenced") {
-    import graft.operators.Lakehouse
-    // CDC shape: batch i carries keys [50i, 50i+100) — overlapping the
-    // previous batch by 50 — and TWO versions per key (ver 2i and 2i+1),
-    // so versionCol must reduce within the batch and the upsert must
-    // replace across batches
-    def cdc(i: Int) = {
-      val base = spark.range(50L * i, 50L * i + 100).select(
-        col("id").as("k"), lit(2L * i).as("ver"),
-        (col("id") * 10 + i).cast("double").as("v"))
-      base.unionByName(base.select(col("k"), (col("ver") + 1).as("ver"),
-        (col("v") + 1000).as("v")))
-    }
-    val flat = Files.createTempDirectory("graft-lhmrg-flat")
-    for (i <- 0 until 3) {
-      val d = Files.createTempDirectory("graft-lhmrg-chunk").toString
-      cdc(i).coalesce(1).write.mode("overwrite").parquet(d)
-      val part = new java.io.File(d).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = flat.resolve(s"c$i.parquet")
-      Files.copy(part.toPath, dst)
-      // pin the file-source processing ORDER (modTime then path): merge
-      // outcome is order-dependent, unlike the append ingest's
-      dst.toFile.setLastModified(1700000000000L + i * 60000L)
-    }
-    val layout = Files.createTempDirectory("graft-lhmrg-layout").toString
-    val ckpt = Files.createTempDirectory("graft-lhmrg-ckpt").toString
-    val src = spark.readStream.schema(cdc(0).schema)
-      .option("maxFilesPerTrigger", "1").parquet(flat.toString)
-    val q = graft.streaming.LakehouseIngest.startMerge(src, layout,
-      keyCols = Seq("k"), zCols = Seq("k", "ver"), filesPerBatch = 2,
-      checkpoint = ckpt, versionCol = "ver")
-    q.awaitTermination()
-    // expected: per key, the LAST batch covering it wins, at its odd
-    // (in-batch latest) version
-    def winner(i: Int) = cdc(i).filter(col("ver") % 2 === 1)
-    val expect = winner(0).filter(col("k") < 50)
-      .unionByName(winner(1).filter(col("k") >= 50 && col("k") < 100))
-      .unionByName(winner(2).filter(col("k") >= 100))
-    val live = Lakehouse.prunedRead(spark, layout, "k", 0, 1e9)
-    assert(live.exceptAll(expect).isEmpty && expect.exceptAll(live).isEmpty,
-      "streamed MERGE drifted from the latest-wins expectation")
-    assert(live.count() === 200L)
-    // history shows create + 2 upserts, all fenced under the streamId
-    val ops = Lakehouse.history(spark, layout).orderBy(col("version"))
-      .collect().map(_.getString(1)).toSeq
-    assert(ops === Seq("create", "upsert", "upsert"), s"ops: $ops")
-    // crash replay: wipe the checkpoint, re-run the whole source under
-    // the same streamId — every batch fenced, nothing changes
-    val vBefore = Lakehouse.latestVersion(spark, layout)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
-    val q2 = graft.streaming.LakehouseIngest.startMerge(src, layout,
-      keyCols = Seq("k"), zCols = Seq("k", "ver"), filesPerBatch = 2,
-      checkpoint = ckpt, versionCol = "ver")
-    q2.awaitTermination()
-    assert(Lakehouse.latestVersion(spark, layout) === vBefore,
-      "checkpoint-wipe replay re-merged batches — the fence failed")
-    val replayed = Lakehouse.prunedRead(spark, layout, "k", 0, 1e9)
-    assert(replayed.exceptAll(expect).isEmpty && expect.exceptAll(replayed).isEmpty)
-  }
-
-  test("streaming MERGE ingest: largeBatch mode merges shuffle-side under the same fence") {
-    import graft.operators.Lakehouse
-    import graft.streaming.LakehouseIngest
-    // processMergeBatch is foreachBatch's body — driving it directly
-    // exercises the largeBatch pass-through without a file-source stream
-    val dir = Files.createTempDirectory("graft-lhmrg-lb").toString
-    def mk(lo: Long, hi: Long, salt: Int) = spark.range(lo, hi).select(
-      col("id").as("k"), lit(salt.toLong).as("ver"),
-      (col("id") * 10 + salt).cast("double").as("v"))
-    val sid = "lb-merge-spec"
-    LakehouseIngest.processMergeBatch(mk(0, 100, 0), 0, dir, Seq("k"),
-      Seq("k", "ver"), 2, sid, largeBatch = true)           // creates
-    LakehouseIngest.processMergeBatch(mk(50, 150, 1), 1, dir, Seq("k"),
-      Seq("k", "ver"), 2, sid, largeBatch = true)           // merges
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    val expect = mk(0, 50, 0).unionByName(mk(50, 150, 1))
-    assert(live.exceptAll(expect).isEmpty && expect.exceptAll(live).isEmpty,
-      "largeBatch streaming merge drifted from the batch expectation")
-    // the fence holds in this mode too: re-delivery is a strict no-op
-    val v = Lakehouse.latestVersion(spark, dir)
-    LakehouseIngest.processMergeBatch(mk(50, 150, 1), 1, dir, Seq("k"),
-      Seq("k", "ver"), 2, sid, largeBatch = true)
-    assert(Lakehouse.latestVersion(spark, dir) === v,
-      "re-delivered largeBatch merge committed a new version")
-  }
-
-  test("lakehouse ingest fences a re-delivered batch — exactly-once crash replay") {
-    import graft.operators.Lakehouse
-    import graft.streaming.LakehouseIngest
-    // processBatch is foreachBatch's body; calling it twice with the same
-    // batchId IS the crash-between-sink-commit-and-checkpoint-commit
-    // replay, deterministically
-    val dir = Files.createTempDirectory("graft-lh-fence").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(50)).as("k"), col("id").as("t"))
-    def rows() = Lakehouse.readManifest(spark, dir)
-      .agg(sum(col("n_rows"))).head().getLong(0)
-    val sid = "fence-spec"
-    LakehouseIngest.processBatch(mk(0, 500), 0, dir, Seq("k", "t"), 2, sid)
-    LakehouseIngest.processBatch(mk(500, 600), 1, dir, Seq("k", "t"), 1, sid)
-    assert(rows() === 600L)
-    val v = Lakehouse.latestVersion(spark, dir)
-    // re-delivery of batch 1: a no-op — no new version, no doubled rows
-    LakehouseIngest.processBatch(mk(500, 600), 1, dir, Seq("k", "t"), 1, sid)
-    assert(Lakehouse.latestVersion(spark, dir) === v,
-      "re-delivered batch committed a new version")
-    assert(rows() === 600L, "re-delivered batch doubled its rows")
-    // re-delivery of batch 0 (the layout-CREATING batch): also fenced
-    LakehouseIngest.processBatch(mk(0, 500), 0, dir, Seq("k", "t"), 2, sid)
-    assert(rows() === 600L, "re-delivered create batch doubled its rows")
-    // a direct append that bypasses the skip fails loudly instead
-    intercept[IllegalStateException](Lakehouse.appendClustered(
-      mk(500, 600), dir, Seq("k", "t"), 1, streamId = sid, batchId = 1))
-    // the NEXT batch still lands, and an unrelated stream is not fenced
-    LakehouseIngest.processBatch(mk(600, 650), 2, dir, Seq("k", "t"), 1, sid)
-    assert(rows() === 650L)
-    LakehouseIngest.processBatch(mk(650, 700), 0, dir, Seq("k", "t"), 1,
-      "other-stream")
-    assert(rows() === 700L, "an unrelated stream's batch 0 was fenced")
-    // and the layout's data is exactly the union of the committed batches
-    val truth = mk(0, 700)
-    val all = Lakehouse.prunedRead(spark, dir, "k", 0, 49)
-    assert(all.exceptAll(truth).isEmpty && truth.exceptAll(all).isEmpty,
-      "fenced layout drifted from the committed-batch union")
-  }
-
-  test("lakehouse ingest maintenance: periodic compact + vacuum inside the stream, rows exact") {
-    import graft.operators.Lakehouse
-    import graft.streaming.LakehouseIngest
-    val dir = Files.createTempDirectory("graft-lh-maint").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(50)).as("k"), col("id").as("t"))
-    val m = Some(LakehouseIngest.Maintenance(
-      every = 2, minRows = Long.MaxValue, files = 1,
-      orphanGraceMs = 0)) // no concurrent appender in this spec
-    val sid = "maint-spec"
-    LakehouseIngest.processBatch(mk(0, 500), 0, dir, Seq("k", "t"), 2, sid, m)
-    LakehouseIngest.processBatch(mk(500, 600), 1, dir, Seq("k", "t"), 2, sid, m)
-    // batch 2 commits, then (every=2) folds ALL six files into one and
-    // vacuums the superseded bytes — the full loop inside the stream
-    LakehouseIngest.processBatch(mk(600, 700), 2, dir, Seq("k", "t"), 2, sid, m)
-    val ops = Lakehouse.history(spark, dir).collect().map(_.getString(1))
-    assert(ops.count(_ == "compact") === 1, s"ops: ${ops.mkString(",")}")
-    val dataFiles = new java.io.File(s"$dir/data").listFiles()
-      .count(_.getName.startsWith("part-"))
-    assert(dataFiles.toLong === Lakehouse.readManifest(spark, dir).count(),
-      "in-stream vacuum left superseded bytes on disk")
-    val truth = mk(0, 700)
-    val all = Lakehouse.prunedRead(spark, dir, "k", 0, 49)
-    assert(all.exceptAll(truth).isEmpty && truth.exceptAll(all).isEmpty,
-      "in-stream maintenance drifted the data")
-    // a fenced replay of batch 2 is a STRICT no-op: no append, and no
-    // second maintenance pass either
-    val v = Lakehouse.latestVersion(spark, dir)
-    LakehouseIngest.processBatch(mk(600, 700), 2, dir, Seq("k", "t"), 2, sid, m)
-    assert(Lakehouse.latestVersion(spark, dir) === v,
-      "fenced replay ran maintenance")
-  }
-
-  test("stateful ops run on the RocksDB state store with identical output") {
-    // the state backend a real cluster uses for large key populations:
-    // HDFSBackedStateStore holds state on-heap (fine for tests, a
-    // liability at O(100M live keys)); RocksDB spills to local disk with
-    // bounded memory. The compaction contract must be provider-invariant.
-    import graft.operators.Cdc
-    import graft.operators.Cdc.CdcRecord
-    val s = spark.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val src = "/root/testdata/sf0.001/events.parquet"
-    def asRecords(df: org.apache.spark.sql.DataFrame) =
-      graft.core.EventTime.readEventsTsUsAs(df, "ts")
-        .select(concat_ws("|", col("user_id"), col("event_type")).as("key"),
-          col("ts").as("ver"), col("event_id").as("seq"),
-          col("props").as("payload"))
-    val truth = Cdc.latestByKey(asRecords(s.read.parquet(src)),
-        Seq("key"), "ver", Seq("seq"))
-      .collect().map(r => r.getString(0) ->
-        ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-
-    val inDir = Files.createTempDirectory("graft-cdc-rocksdb-in")
-    Files.copy(java.nio.file.Paths.get(src), inDir.resolve("events.parquet"))
-    import s.implicits._
-    val stream = asRecords(s.readStream
-        .schema(graft.streaming.EventsIngest.eventsSchema(s, inDir.toString))
-        .parquet(inDir.toString)).as[CdcRecord]
-    val qname = "cdc_rocksdb_out_" + System.nanoTime()
-    val q = Cdc.latestByKeyStream(stream)
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    // proof RocksDB actually backed the state, not a silently-ignored conf
-    val metrics = q.recentProgress.flatMap(_.stateOperators)
-      .flatMap(_.customMetrics.keySet().toArray.map(_.toString))
-    assert(metrics.exists(_.toLowerCase.contains("rocksdb")),
-      s"no RocksDB state metrics — provider conf ignored? saw: ${metrics.take(8).mkString(", ")}")
-    // last emission per key (largest (ver, seq)) is the live view — same
-    // read contract as the default-provider stream==batch pin above
-    val streamed = s.table(qname).as[CdcRecord].collect()
-      .groupBy(_.key)
-      .map { case (k, rows) =>
-        val b = rows.maxBy(r => (r.ver, r.seq)); k -> ((b.ver, b.seq, b.payload))
-      }
-    assert(streamed === truth,
-      "RocksDB-backed streaming compaction drifted from the batch truth")
-  }
-
-  test("streaming funnel's final per-user progress equals the batch funnel") {
-    import graft.operators.Funnel
-    import graft.operators.Funnel.{FEvent, FunnelProgress}
-    val stages = Seq("view", "click", "purchase")
-    val w = 86400000000L // 24h in µs, the q36 contract
-
-    val batchEvents = graft.core.EventTime.readEventsTsUsAs(
-      spark.read.parquet("/root/testdata/sf0.001/events.parquet"), "ts")
-    val truth = Funnel.funnel(batchEvents, "user_id", "ts", "event_type", stages, w)
-      .collect().map { r =>
-        r.getLong(0) -> (1 to 3).flatMap(i => Option(r.get(i)).map(_.asInstanceOf[Long]))
-      }.toMap
-
-    val inDir = Files.createTempDirectory("graft-funnel-in")
-    Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      inDir.resolve("events.parquet"))
-    val stream = graft.core.EventTime.readEventsTsUsAs(
-      spark.readStream
-        .schema(graft.streaming.EventsIngest.eventsSchema(spark, inDir.toString))
-        .parquet(inDir.toString), "ts")
-      .select(col("user_id"), col("ts"), col("event_type")).as[FEvent]
-    val qname = "funnel_out_" + System.nanoTime()
-    val q = Funnel.funnelStream(stream, stages, w)
-      .writeStream.outputMode("append").format("memory").queryName(qname)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    // the last (deepest) progress row per user is the final chain
-    val streamed = spark.table(qname).as[FunnelProgress].collect()
-      .groupBy(_.user_id)
-      .map { case (u, rows) => u -> rows.maxBy(_.stages_reached).times }
-    assert(streamed === truth,
-      s"stream-final funnel differs: ${streamed.toSet -- truth.toSet}")
   }
 }
