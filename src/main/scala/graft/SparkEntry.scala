@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Materialize
 import graft.functions.{array_sum_long, cassandra_token, cql_serialize, partition_key, token_bucket}
 import graft.operators.CqlPipeline
 import graft.operators.CqlPipeline.Projection
@@ -854,12 +855,11 @@ object SparkEntry {
     // DuckDB-oracle-checked). Organic-corpus recall stays spec'd against
     // brute force in OperatorsSpec.
     "embed_lsh_topk" -> ((s, dir) => {
-      // localCheckpoint materializes the planted corpus ONCE: without it,
+      // truncating materializes the planted corpus ONCE: without it,
       // CollapseProject re-inlines the 64-branch construction into every
       // hyperplane dot (8x the work and a codegen blowup)
-      val e = s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
-        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding"))
-        .localCheckpoint()
+      val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
+        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       graft.operators.Similarity.lshTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", dim = 64, k = 5)
@@ -881,10 +881,9 @@ object SparkEntry {
     // vectors can never split across k-means cells, so the min-id of
     // each angle-group survives regardless of the trained centroids.
     "dedup_semantic" -> ((s, dir) => {
-      val e = s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
+      val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
         graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding"))
-        .filter(col("vec_id") >= 10)
-        .localCheckpoint()
+        .filter(col("vec_id") >= 10))
       graft.operators.Similarity.semanticDedup(e, "vec_id", "embedding",
         threshold = 0.999, nlist = 8)
         .select(col("vec_id"))
@@ -896,11 +895,10 @@ object SparkEntry {
     // the seeded training makes the run reproducible — the analytic
     // top-k oracle applies. Organic-corpus recall stays in OperatorsSpec.
     "embed_ivf_topk" -> ((s, dir) => {
-      // localCheckpoint as in embed_lsh_topk: k-means iterations and the
+      // truncated as in embed_lsh_topk: k-means iterations and the
       // per-centroid distances must not re-evaluate the construction
-      val e = s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
-        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding"))
-        .localCheckpoint()
+      val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
+        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       // nprobe=3 (r8 parity): the analytic argument needs only the query's
       // OWN cell probed, and its centroid is always the nearest (identical
       // ring-position vectors cannot split across cells; other clusters'
@@ -915,9 +913,8 @@ object SparkEntry {
     // spec-pinned), searched without re-clustering; result contract is
     // the same planted analytic top-k as embed_ivf_topk
     "embed_ivf_persisted" -> ((s, dir) => {
-      val e = s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
-        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding"))
-        .localCheckpoint()
+      val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
+        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       val (assigned, centroids) = graft.operators.Similarity
         .ivfIndexFrames(e.filter(col("vec_id") >= 10), "vec_id", "embedding",
           nlist = 8)
@@ -937,18 +934,17 @@ object SparkEntry {
     // contains the true top-5 and the float re-rank IS the analytic
     // answer. Organic-corpus recall is spec'd in OperatorsSpec.
     "embed_i8_topk" -> ((s, dir) => {
-      // localCheckpoint as in embed_lsh_topk: the 64-branch construction
+      // truncated as in embed_lsh_topk: the 64-branch construction
       // must not re-inline into the quantize + dot expressions. Widened
       // (unlike the k-means-training siblings, where 32-partition
       // checkpoints multiplied per-job scheduling across dozens of tiny
       // driver jobs and A/B'd 1.25-1.43x LOSS): quantizedTopK is a pure
       // coarse scan + re-rank, so the parallel checkpoint feeds its one
       // corpus-sized stage (A/B 0.66x WIN)
-      val e = widenScan(s.read.parquet(t(dir, "embeddings"))
+      val e = Materialize.truncate(widenScan(s.read.parquet(t(dir, "embeddings"))
           .select(col("vec_id")), col("vec_id"))
         .select(col("vec_id"),
-          graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding"))
-        .localCheckpoint()
+          graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       graft.operators.Similarity.quantizedTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", k = 5, refine = 10)
@@ -975,9 +971,8 @@ object SparkEntry {
     // bruteForceTopK's own arithmetic. Coarse top-20 therefore contains
     // the true top-5 and the result IS the analytic answer.
     "embed_pq_topk" -> ((s, dir) => {
-      val e = s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
-        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding"))
-        .localCheckpoint()
+      val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
+        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       graft.operators.Similarity.pqTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", k = 5, refine = 20, m = 8, ksub = 64)
@@ -990,9 +985,8 @@ object SparkEntry {
     // contains the true top-5 and the float re-rank IS the analytic
     // answer
     "embed_ivfpq_topk" -> ((s, dir) => {
-      val e = s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
-        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding"))
-        .localCheckpoint()
+      val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
+        graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       graft.operators.Similarity.ivfPqTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", k = 5, refine = 20,

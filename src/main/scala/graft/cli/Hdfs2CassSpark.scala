@@ -2,7 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{CassandraParams, ClusterInfo, StaticClusterInfo}
+import graft.core.{CassandraParams, ClusterInfo, Materialize, StaticClusterInfo}
 import graft.operators.CqlPipeline
 import graft.operators.CqlPipeline.Projection
 import graft.sinks.{BulkSink, LoaderPlan, StreamLoader}
@@ -146,14 +146,15 @@ object Hdfs2CassSpark {
       // auto mode adds a sample pass over the projected input (sampling
       // still READS every row), so the frame materializes once and both
       // the salt plan and the write consume the checkpoint — not two
-      // full scans + CQL serializations of a multi-TB load
+      // full scans + CQL serializations of a multi-TB load. The blocks go
+      // as soon as the writes return: streaming reads the run files.
       val toWrite =
-        if (params.saltAuto) projected.localCheckpoint() else projected
-      val salts =
-        if (params.saltAuto)
-          BulkSink.planSalts(toWrite, Seq("rowkey"), params.reducers)
-        else params.saltBuckets
-      val manifests =
+        if (params.saltAuto) Materialize.truncate(projected) else projected
+      val manifests = try {
+        val salts =
+          if (params.saltAuto)
+            BulkSink.planSalts(toWrite, Seq("rowkey"), params.reducers)
+          else params.saltBuckets
         if (wantSalt && salts.nonEmpty)
           BulkSink.writeSortedSalted(toWrite, Seq("rowkey"),
             params.reducers, args.sinkDir, salts,
@@ -163,6 +164,7 @@ object Hdfs2CassSpark {
             partitionerClass = info.partitionerClass,
             compression = params.compressionClass,
             distributeRandomly = params.distributeRandomly)
+      } finally if (params.saltAuto) Materialize.release(toWrite)
       // with ring metadata present, also emit the stream plan the loader
       // would execute (file -> replica endpoints). Compressed runs plan
       // and stream like any other since chunked compression landed: the

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -59,29 +60,31 @@ object Classify {
     // The model table and the tokenized corpus each feed MULTIPLE
     // consumers (lw -> label totals + |V| + the evidence join; the doc
     // tokens -> the evidence explode + the per-doc length) — without a
-    // persist each consumer re-runs the tokenizer over its whole input
+    // cache each consumer re-runs the tokenizer over its whole input
     // (measured r20: the two corpus-sized scans were ~2/3 of this
     // operator's wall time). lw is vocab*labels-bounded; docTok is one
     // token-array row per corpus row — the same O(corpus) cache the
-    // dedup pair engine holds for its shingle frame. Both release in the
-    // finally; the result is localCheckpoint'd (O(docs) rows) first so
-    // the caller never recomputes through the unpersisted lineage.
+    // dedup pair engine holds for its shingle frame. Each scope releases
+    // its cache on the way out, also when an inner one throws; the result
+    // is truncated (O(docs) rows) first so the caller never recomputes
+    // through the released lineage.
     val trainTok = train.select(col(labelCol).as("_l"), explode(toks).as("_w"))
-    val lw = trainTok.groupBy(col("_l"), col("_w"))
+    val wordCounts = trainTok.groupBy(col("_l"), col("_w"))
       .agg(count(lit(1)).as("_clw"))
-      .persist()
     // priors also has two consumers (the labels join AND the doc total —
     // a separate train.count() was a third full pass over the training
     // input); the #labels-row cache serves both
-    val priors = train.groupBy(col(labelCol).as("_l"))
-      .agg(count(lit(1)).as("_nd")).persist()
+    val labelDocs = train.groupBy(col(labelCol).as("_l"))
+      .agg(count(lit(1)).as("_nd"))
     // The tokenized corpus keeps the scan's width: repartitioning it on
     // an under-split input was no reproducible win under the engine
     // session (plans/r22/classify_nb_nbwide_ab.txt), and widening the
     // INPUT measured a 1.37-1.39x loss (r20+r21), the exchange re-paid
-    // by each of the three persists.
-    val docTok = docs.select(col(idCol), toks.as("_toks")).persist()
-    try {
+    // by each of the three caches.
+    val docTokens = docs.select(col(idCol), toks.as("_toks"))
+    Materialize.cached(wordCounts) { lw =>
+    Materialize.cached(labelDocs) { priors =>
+    Materialize.cached(docTokens) { docTok =>
       val lTotals = lw.groupBy(col("_l")).agg(sum(col("_clw")).as("_cl"))
       // |V| and the training doc total: two count jobs, plan literals
       val vocab = lw.select(col("_w")).distinct().count().toDouble
@@ -109,14 +112,13 @@ object Classify {
             log(col("_cl").cast(DoubleType) + lit(alpha * vocab))) +
           coalesce(col("_s"), lit(0.0)), 4)
 
-      frame.join(evidence, Seq(idCol, "_l"), "left")
+      Materialize.truncate(frame.join(evidence, Seq(idCol, "_l"), "left")
         .select(col(idCol), col("_l"), score.as("_score"))
         // argmax with min-struct: min(-score) = max(score), ties -> min label
         .groupBy(col(idCol))
         .agg(min(struct((-col("_score")).as("_ns"), col("_l").as("_lbl"))).as("_b"))
         .select(col(idCol), col("_b._lbl").as("pred_label"),
-          round(-col("_b._ns"), 4).as("score"))
-        .localCheckpoint()
-    } finally { lw.unpersist(); docTok.unpersist(); priors.unpersist(); () }
+          round(-col("_b._ns"), 4).as("score")))
+    }}}
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
@@ -28,13 +29,12 @@ object Curate {
    * languages.
    *
    * One corpus scan and two materializations. Job 1 runs scan ->
-   * verdicts -> fingerprint -> exact dedup and `localCheckpoint`s the
-   * exact-deduped rows; job 2 anti-joins the near-dup losers and
-   * `localCheckpoint`s the curated rows it returns, so the caller (semantic
-   * dedup, a writer) reads blocks instead of re-running the text pipeline.
-   * Storage peaks at about 2x the exact-deduped corpus; blocks are
-   * executor-local, so a lost executor fails the job (the
-   * `minhashLshPairs` trade). Every count is observed at the root of a
+   * verdicts -> fingerprint -> exact dedup and truncates the exact-deduped
+   * rows; job 2 anti-joins the near-dup losers and truncates the curated
+   * rows it returns, so the caller (semantic dedup, a writer) reads
+   * blocks instead of re-running the text pipeline. Storage peaks at
+   * about 2x the exact-deduped corpus, local or reliable per
+   * [[Materialize.truncate]]. Every count is observed at the root of a
    * checkpoint job — its result stage, where a retried task's update is
    * applied once (inside a shuffle-map stage a re-run counts again).
    */
@@ -55,14 +55,13 @@ object Curate {
     // whole row is ONE aggregation (map-side combinable); non-keepers
     // collapse into one null-key group that carries their counts.
     val funnel = Observation()
-    val exact = enriched
+    val exact = Materialize.truncate(enriched
       .groupBy(when(qPass && langPass, TextAnalysis.fingerprint(col(textCol))).as("__k"))
       .agg(min_by(struct(enriched.columns.toIndexedSeq.map(col): _*), col(idCol)).as("__r"),
         count(lit(1)).as("__n"), count_if(qPass).as("__nq"))
       .observe(funnel, total(n).as("input"), total(col("__nq")).as("after_quality"),
         total(when(key.isNotNull, n)).as("after_lang"), count(key).as("after_exact"))
-      .filter(key.isNotNull).select("__r.*")
-      .localCheckpoint()
+      .filter(key.isNotNull).select("__r.*"))
 
     // near-dup: drop every cluster member except the minimum id
     val pairs = Dedup.minhashLshPairs(exact, idCol, textCol,
@@ -70,8 +69,8 @@ object Curate {
     val losers = Dedup.dupClusters(pairs).filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id").as(idCol))
     val kept = Observation()
-    val curated = exact.join(losers, Seq(idCol), "left_anti")
-      .observe(kept, count(lit(1)).as("n")).localCheckpoint()
+    val curated = Materialize.truncate(exact.join(losers, Seq(idCol), "left_anti")
+      .observe(kept, count(lit(1)).as("n")))
 
     val f = funnel.get.view.mapValues(_.asInstanceOf[Long]).toMap
     (curated, CurationStats(f("input"), f("after_quality"), f("after_lang"),
@@ -140,14 +139,12 @@ object Curate {
    * AQE-broadcastable and the corpus never shuffles; bucket assignment is
    * a scan-stage md5 (deterministic across engines/runs/cluster sizes,
    * same contract as [[withSplit]], distinct salt so the two stay
-   * independent events). `reliableCheckpoint` follows the dedup-family
-   * contract (localCheckpoint is fast but unrecoverable on executor loss).
+   * independent events).
    */
   def leakageSafeSplit(docs: DataFrame, idCol: String, pairs: DataFrame,
-      trainPerMille: Int = 900, valPerMille: Int = 50,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      trainPerMille: Int = 900, valPerMille: Int = 50): DataFrame = {
     require(trainPerMille + valPerMille <= 1000, "split fractions exceed 1")
-    val clusters = Dedup.dupClusters(pairs, reliableCheckpoint)
+    val clusters = Dedup.dupClusters(pairs)
       .withColumnRenamed("doc_id", idCol).withColumnRenamed("cluster_id", "_cl")
     // the singleton fallback stays in the ID's OWN type: a long cast here
     // would null out non-numeric ids (UUID/URL corpora) and silently dump
@@ -189,13 +186,12 @@ object Curate {
     // DIFFERENT boundaries than the ones the base offsets were computed
     // for (e.g. after cache eviction forces a recompute). A single RDD
     // lineage re-executes with the same partitioner no matter what.
-    val ranged = df.select(col(idCol).cast("long"),
+    Materialize.cached(df.select(col(idCol).cast("long"),
         size(TextAnalysis.tokens(col(textCol))).cast("long"))
       .as[(Long, Long)]
       .repartitionByRange(parts, col(idCol))
       .sortWithinPartitions(col(idCol))
-      .rdd.persist()
-    try {
+      .rdd) { ranged =>
       // phase 1: one (partitionIndex, tokenTotal) row per partition
       val totals = ranged
         .mapPartitionsWithIndex { case (i, it) =>
@@ -209,12 +205,11 @@ object Curate {
           val o = off; off += n; (id, n, o, o / blockTokens)
         }
       }
-      // materialize before unpersist: the result must not re-depend on
+      // materialize before the release: the result must not re-depend on
       // the cached two-pass lineage after this method returns
-      spark.createDataset(packed)
-        .toDF(idCol, "n_tokens", "token_offset", "block_id")
-        .localCheckpoint()
-    } finally { ranged.unpersist(); () }
+      Materialize.truncate(spark.createDataset(packed)
+        .toDF(idCol, "n_tokens", "token_offset", "block_id"))
+    }
   }
 
   /**
@@ -294,7 +289,7 @@ object Curate {
    *      one shuffle with map-side combine; aggregation state bounded by
    *      the SOURCE CARDINALITY (a config-bounded dimension, like
    *      languages — tens to hundreds, never corpus-scale). The result
-   *      is lazily localCheckpoint'ed because BOTH derivations below
+   *      is lazily truncated because BOTH derivations below
    *      read it (without it Catalyst would re-run the scan+exchange per
    *      consumer — the 3-scan shape this operator had at first cut);
    *   2. per-source sizes = explode the source sets and count — a
@@ -313,11 +308,10 @@ object Curate {
       n: Int = 3): DataFrame = {
     // collect_set absorbs duplicate (source, shingle) pairs, so no
     // separate distinct pass is needed before the aggregation
-    val bySrc = df.select(col(sourceCol).as("_src"),
+    val bySrc = Materialize.truncate(df.select(col(sourceCol).as("_src"),
         explode(Dedup.shingles(col(textCol), n)).as("_sh"))
       .groupBy(col("_sh"))
-      .agg(sort_array(collect_set(col("_src"))).as("_srcs"))
-      .localCheckpoint(eager = false)
+      .agg(sort_array(collect_set(col("_src"))).as("_srcs")), eager = false)
     val sizes = bySrc.select(explode(col("_srcs")).as("_src"))
       .groupBy(col("_src")).agg(count(lit(1)).as("_n"))
     val pairs = bySrc

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -123,51 +124,49 @@ object Dedup {
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 4, rowsPerBand: Int = 2, threshold: Double = 0.8): DataFrame = {
     val k = bands * rowsPerBand
-    // shingle sets are reused (signature + verification) — persist instead
+    // shingle sets are reused (signature + verification) — cached instead
     // of recomputing the scan + md5 pass on every branch. At the 100 TB
     // scale this becomes a checkpoint to storage; same dataflow.
-    val withSh = df
+    Materialize.cached(df
       .select(col(idCol).as("doc_id"), shingles(col(textCol)).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("hs", shingleHashes(col("sh"))) // md5 once, cached
-      .persist()
+      .withColumn("hs", shingleHashes(col("sh")))) { withSh => // md5 once, cached
+      val withSig = withSh
+        .withColumn("sig", minhashSignature(col("hs"), k))
 
-    val withSig = withSh
-      .withColumn("sig", minhashSignature(col("hs"), k))
+      // bands carry ONLY (doc_id, band_id, band_sig) through the shuffle —
+      // the shingle arrays would otherwise be duplicated `bands` times. The
+      // band signature is an 8-byte xxhash64 of the band's minima, not a
+      // concat string: ~5x fewer shuffle bytes, and a hash collision can
+      // only ADD a candidate pair, which exact-Jaccard verification drops.
+      val banded = bandSigs(withSig, bands, rowsPerBand)
 
-    // bands carry ONLY (doc_id, band_id, band_sig) through the shuffle —
-    // the shingle arrays would otherwise be duplicated `bands` times. The
-    // band signature is an 8-byte xxhash64 of the band's minima, not a
-    // concat string: ~5x fewer shuffle bytes, and a hash collision can
-    // only ADD a candidate pair, which exact-Jaccard verification drops.
-    val banded = bandSigs(withSig, bands, rowsPerBand)
+      val a = banded.alias("a")
+      val b = banded.alias("b")
+      val candidates = a.join(b,
+          col("a.band_id") === col("b.band_id") &&
+          col("a.band_sig") === col("b.band_sig") &&
+          col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+        .distinct()
 
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val candidates = a.join(b,
-        col("a.band_id") === col("b.band_id") &&
-        col("a.band_sig") === col("b.band_sig") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-
-    // exact-Jaccard verification only on bucket-colliding pairs;
-    // |union| = na + nb - |intersect| avoids building the union array.
-    val sa = withSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val sb = withSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    val verified = candidates.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jac", round(col("inter").cast(DoubleType) /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
-      .filter(col("jac") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jac"))
-    // Materialize the verified pairs (tiny relative to the corpus — bounded
-    // by true duplicate clusters) so the shingle cache can be released NOW
-    // instead of pinning executor storage for the app lifetime — also on
-    // failure. Downstream consumers (clustering iterations, joins) reuse
-    // the materialized pairs instead of re-running the LSH dataflow.
-    try verified.localCheckpoint()
-    finally { withSh.unpersist(); () }
+      // exact-Jaccard verification only on bucket-colliding pairs;
+      // |union| = na + nb - |intersect| avoids building the union array.
+      val sa = withSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
+      val sb = withSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
+      val verified = candidates.join(sa, "doc_a").join(sb, "doc_b")
+        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("jac", round(col("inter").cast(DoubleType) /
+          (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
+        .filter(col("jac") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jac"))
+      // Materialize the verified pairs (tiny relative to the corpus — bounded
+      // by true duplicate clusters) so the shingle cache can be released NOW
+      // instead of pinning executor storage for the app lifetime — also on
+      // failure. Downstream consumers (clustering iterations, joins) reuse
+      // the materialized pairs instead of re-running the LSH dataflow.
+      Materialize.truncate(verified)
+    }
   }
 
   /** (doc_id, band_id, band_sig) rows from a minhash-signature frame:
@@ -228,63 +227,61 @@ object Dedup {
       idCol: String, textCol: String, index: DataFrame,
       bands: Int = 4, rowsPerBand: Int = 2, threshold: Double = 0.8): DataFrame = {
     val k = bands * rowsPerBand
-    val deltaSh = delta
+    Materialize.cached(delta
       .select(col(idCol).as("doc_id"), shingles(col(textCol)).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("hs", shingleHashes(col("sh")))
-      .persist()
-    val deltaBands = bandSigs(
-      deltaSh.withColumn("sig", minhashSignature(col("hs"), k)), bands, rowsPerBand)
+      .withColumn("hs", shingleHashes(col("sh")))) { deltaSh =>
+      val deltaBands = bandSigs(
+        deltaSh.withColumn("sig", minhashSignature(col("hs"), k)), bands, rowsPerBand)
 
-    // delta vs corpus: band-hash equi-join against the index
-    val d = deltaBands.alias("d")
-    val i = index.alias("i")
-    val candCross = d.join(i,
-        col("d.band_id") === col("i.band_id") &&
-        col("d.band_sig") === col("i.band_sig") &&
-        col("d.doc_id") =!= col("i.doc_id"))
-      .select(col("d.doc_id").as("delta_id"), col("i.doc_id").as("corpus_id"))
-      .distinct()
-    // corpus text ONLY for colliding ids: candIds is duplicate-bounded,
-    // so this join prunes the corpus scan rather than re-shingling it
-    val candIds = candCross.select(col("corpus_id").as("doc_id")).distinct()
-    val corpusSh = corpus
-      .select(col(idCol).as("doc_id"), shingles(col(textCol)).as("sh"))
-      .join(candIds, "doc_id")
-      .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
-    val crossVerified = candCross
-      .join(deltaSh.select(col("doc_id").as("delta_id"), col("sh").as("sh_d")), "delta_id")
-      .join(corpusSh, "corpus_id")
-      .withColumn("inter", size(array_intersect(col("sh_d"), col("sh_c"))))
-      .withColumn("jac", round(col("inter").cast(DoubleType) /
-        (size(col("sh_d")) + size(col("sh_c")) - col("inter")), 4))
-      .filter(col("jac") >= threshold)
-      .select(least(col("delta_id"), col("corpus_id")).as("doc_a"),
-        greatest(col("delta_id"), col("corpus_id")).as("doc_b"), col("jac"))
+      // delta vs corpus: band-hash equi-join against the index
+      val d = deltaBands.alias("d")
+      val i = index.alias("i")
+      val candCross = d.join(i,
+          col("d.band_id") === col("i.band_id") &&
+          col("d.band_sig") === col("i.band_sig") &&
+          col("d.doc_id") =!= col("i.doc_id"))
+        .select(col("d.doc_id").as("delta_id"), col("i.doc_id").as("corpus_id"))
+        .distinct()
+      // corpus text ONLY for colliding ids: candIds is duplicate-bounded,
+      // so this join prunes the corpus scan rather than re-shingling it
+      val candIds = candCross.select(col("corpus_id").as("doc_id")).distinct()
+      val corpusSh = corpus
+        .select(col(idCol).as("doc_id"), shingles(col(textCol)).as("sh"))
+        .join(candIds, "doc_id")
+        .select(col("doc_id").as("corpus_id"), col("sh").as("sh_c"))
+      val crossVerified = candCross
+        .join(deltaSh.select(col("doc_id").as("delta_id"), col("sh").as("sh_d")), "delta_id")
+        .join(corpusSh, "corpus_id")
+        .withColumn("inter", size(array_intersect(col("sh_d"), col("sh_c"))))
+        .withColumn("jac", round(col("inter").cast(DoubleType) /
+          (size(col("sh_d")) + size(col("sh_c")) - col("inter")), 4))
+        .filter(col("jac") >= threshold)
+        .select(least(col("delta_id"), col("corpus_id")).as("doc_a"),
+          greatest(col("delta_id"), col("corpus_id")).as("doc_b"), col("jac"))
 
-    // delta vs delta: the one-shot operator's dataflow over just the batch
-    val da = deltaBands.alias("da")
-    val db = deltaBands.alias("db")
-    val candDelta = da.join(db,
-        col("da.band_id") === col("db.band_id") &&
-        col("da.band_sig") === col("db.band_sig") &&
-        col("da.doc_id") < col("db.doc_id"))
-      .select(col("da.doc_id").as("doc_a"), col("db.doc_id").as("doc_b"))
-      .distinct()
-    val deltaVerified = candDelta
-      .join(deltaSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(deltaSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jac", round(col("inter").cast(DoubleType) /
-        (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
-      .filter(col("jac") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jac"))
+      // delta vs delta: the one-shot operator's dataflow over just the batch
+      val da = deltaBands.alias("da")
+      val db = deltaBands.alias("db")
+      val candDelta = da.join(db,
+          col("da.band_id") === col("db.band_id") &&
+          col("da.band_sig") === col("db.band_sig") &&
+          col("da.doc_id") < col("db.doc_id"))
+        .select(col("da.doc_id").as("doc_a"), col("db.doc_id").as("doc_b"))
+        .distinct()
+      val deltaVerified = candDelta
+        .join(deltaSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
+        .join(deltaSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+        .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+        .withColumn("jac", round(col("inter").cast(DoubleType) /
+          (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4))
+        .filter(col("jac") >= threshold)
+        .select(col("doc_a"), col("doc_b"), col("jac"))
 
-    // disjoint by construction (cross pairs have exactly one delta member,
-    // delta pairs two) — union, materialize, release the shingle cache
-    val out = crossVerified.unionByName(deltaVerified)
-    try out.localCheckpoint()
-    finally { deltaSh.unpersist(); () }
+      // disjoint by construction (cross pairs have exactly one delta member,
+      // delta pairs two) — union, materialize, release the shingle cache
+      Materialize.truncate(crossVerified.unionByName(deltaVerified))
+    }
   }
 
   /**
@@ -337,14 +334,12 @@ object Dedup {
   private def ngramPairs(df: DataFrame, idCol: String, textCol: String,
       blockCol: String, threshold: Double, maxDf: Int,
       measure: (Column, Column, Column) => Column, outCol: String): DataFrame = {
-    // shingle extraction (the regex pass) runs ONCE into a persisted frame
-    val withSh = df.select(col(idCol).as("doc_id"), col(blockCol).as("block"),
-      shingles(col(textCol)).as("sh"))
-      .withColumn("n", size(col("sh")))
-      .persist()
-    try {
-      ngramPairsImpl(withSh, threshold, maxDf, measure, outCol)
-    } finally { withSh.unpersist(); () }
+    // shingle extraction (the regex pass) runs ONCE into a cached frame
+    Materialize.cached(df.select(col(idCol).as("doc_id"), col(blockCol).as("block"),
+        shingles(col(textCol)).as("sh"))
+      .withColumn("n", size(col("sh")))) {
+      ngramPairsImpl(_, threshold, maxDf, measure, outCol)
+    }
   }
 
   /** round-4 Jaccard |A∩B| / |A∪B| from (intersection, |A|, |B|). */
@@ -368,89 +363,86 @@ object Dedup {
     // collisions are not survivable in this variant. Each posting entry
     // carries the doc's total shingle count so Jaccard denominators ride
     // along with the expansion — no join back to the corpus for counts.
-    val posts = withSh
+    Materialize.cached(withSh
       .select(col("block"), struct(col("doc_id"), col("n")).as("d"),
         explode(col("sh")).as("s"))
       .groupBy(col("block"), col("s"))
-      .agg(collect_set(col("d")).as("ds"))
-      .persist()
-    try {
-    // |A∩B| over the KEPT (sub-cap) index falls out of counting pair
-    // occurrences across posting lists — pairs expand in-row from ≤maxDf
-    // arrays, no self-join, no array shipping. (n is functionally
-    // dependent on doc_id, so grouping by it adds no cardinality.)
-    val interKept = posts
-      .filter(size(col("ds")) > 1 && size(col("ds")) <= maxDf)
-      .select(explode(col("ds")).as("a"), col("ds"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.n").as("na"), col("b.n").as("nb"))
-      .agg(count(lit(1)).as("inter_kept"))
-    // docs containing at least one over-cap shingle: only for THESE can
-    // the true intersection exceed inter_kept
-    val hotDocs = posts.filter(size(col("ds")) > maxDf)
-      .select(explode(col("ds")).as("d"))
-      .select(col("d.doc_id").as("doc_id")).distinct()
-      .withColumn("hot", lit(true))
-    // common case at sane caps: NO hot docs. One cheap probe over the
-    // cached index then skips the hot-flag joins, the dirty verify, and
-    // the set-fingerprint rescue outright — inter_kept is exact for every
-    // pair and the groupBy already emits unique pairs (no distinct).
-    if (hotDocs.isEmpty) {
-      return interKept
+      .agg(collect_set(col("d")).as("ds"))) { posts =>
+      // |A∩B| over the KEPT (sub-cap) index falls out of counting pair
+      // occurrences across posting lists — pairs expand in-row from ≤maxDf
+      // arrays, no self-join, no array shipping. (n is functionally
+      // dependent on doc_id, so grouping by it adds no cardinality.)
+      val interKept = posts
+        .filter(size(col("ds")) > 1 && size(col("ds")) <= maxDf)
+        .select(explode(col("ds")).as("a"), col("ds"))
+        .select(col("a"), explode(col("ds")).as("b"))
+        .filter(col("a.doc_id") < col("b.doc_id"))
+        .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+          col("a.n").as("na"), col("b.n").as("nb"))
+        .agg(count(lit(1)).as("inter_kept"))
+      // docs containing at least one over-cap shingle: only for THESE can
+      // the true intersection exceed inter_kept
+      val hotDocs = posts.filter(size(col("ds")) > maxDf)
+        .select(explode(col("ds")).as("d"))
+        .select(col("d.doc_id").as("doc_id")).distinct()
+        .withColumn("hot", lit(true))
+      // common case at sane caps: NO hot docs. One cheap probe over the
+      // cached index then skips the hot-flag joins, the dirty verify, and
+      // the set-fingerprint rescue outright — inter_kept is exact for every
+      // pair and the groupBy already emits unique pairs (no distinct).
+      if (hotDocs.isEmpty) Materialize.truncate(interKept
         .select(col("doc_a"), col("doc_b"),
           measure(col("inter_kept"), col("na"), col("nb")).as(outCol))
-        .filter(col(outCol) >= threshold)
-        .localCheckpoint()
+        .filter(col(outCol) >= threshold))
+      else {
+        val scored = interKept
+          .join(hotDocs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("hot", "hot_a"),
+            Seq("doc_a"), "left")
+          .join(hotDocs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("hot", "hot_b"),
+            Seq("doc_b"), "left")
+        // neither doc touches a hot shingle -> inter_kept IS the exact
+        // intersection; Jaccard from counts alone (the common case at scale)
+        val clean = scored.filter(col("hot_a").isNull && col("hot_b").isNull)
+          .select(col("doc_a"), col("doc_b"),
+            measure(col("inter_kept"), col("na"), col("nb")).as(outCol))
+          .filter(col(outCol) >= threshold)
+        // hot-doc pairs (rare by construction): exact verify from full sets
+        val dirty = scored.filter(col("hot_a").isNotNull || col("hot_b").isNotNull)
+          .select(col("doc_a"), col("doc_b"))
+        val sa = withSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
+        val sb = withSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
+        val verified = dirty.join(sa, "doc_a").join(sb, "doc_b")
+          .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
+          .withColumn(outCol,
+            measure(col("inter"), size(col("sh_a")), size(col("sh_b"))))
+          .filter(col(outCol) >= threshold)
+          .select(col("doc_a"), col("doc_b"), col(outCol))
+        // Mass-duplicate rescue: a document copied more than maxDf times per
+        // block has EVERY shingle over the cap, so such copies share no
+        // sub-cap shingle and would silently escape the index — yet they are
+        // the most common real dedup target. Identical shingle SETS are
+        // caught linearly: group hot docs by a set fingerprint and expand
+        // jac=1.0 pairs in-row (the pair count is inherent to the output
+        // contract; the INDEX stays bounded). Near-dup (jac < 1) pairs whose
+        // shared shingles are all hot remain out of reach by design — raise
+        // maxDf if a block legitimately holds that shape.
+        val hotExact = withSh.join(hotDocs.drop("hot"), "doc_id")
+          .withColumn("setfp", graft.functions.set_fingerprint(col("sh")))
+          .groupBy(col("block"), col("setfp"))
+          .agg(collect_set(col("doc_id")).as("ds"))
+          .filter(size(col("ds")) > 1)
+          .select(explode(col("ds")).as("doc_a"), col("ds"))
+          .select(col("doc_a"), explode(col("ds")).as("doc_b"))
+          .filter(col("doc_a") < col("doc_b"))
+          .withColumn(outCol, lit(1.0))
+        // materialize (tiny, threshold-bounded); the caches are released by
+        // the enclosing scopes even when a stage throws.
+        // distinct: a hot exact-duplicate pair can also surface via `verified`
+        // when it shares a sub-cap shingle with a third doc's vocabulary.
+        Materialize.truncate(clean.unionByName(verified).unionByName(hotExact)
+          .distinct())
+      }
     }
-    val scored = interKept
-      .join(hotDocs.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("hot", "hot_a"),
-        Seq("doc_a"), "left")
-      .join(hotDocs.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("hot", "hot_b"),
-        Seq("doc_b"), "left")
-    // neither doc touches a hot shingle -> inter_kept IS the exact
-    // intersection; Jaccard from counts alone (the common case at scale)
-    val clean = scored.filter(col("hot_a").isNull && col("hot_b").isNull)
-      .select(col("doc_a"), col("doc_b"),
-        measure(col("inter_kept"), col("na"), col("nb")).as(outCol))
-      .filter(col(outCol) >= threshold)
-    // hot-doc pairs (rare by construction): exact verify from full sets
-    val dirty = scored.filter(col("hot_a").isNotNull || col("hot_b").isNotNull)
-      .select(col("doc_a"), col("doc_b"))
-    val sa = withSh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val sb = withSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    val verified = dirty.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn(outCol,
-        measure(col("inter"), size(col("sh_a")), size(col("sh_b"))))
-      .filter(col(outCol) >= threshold)
-      .select(col("doc_a"), col("doc_b"), col(outCol))
-    // Mass-duplicate rescue: a document copied more than maxDf times per
-    // block has EVERY shingle over the cap, so such copies share no
-    // sub-cap shingle and would silently escape the index — yet they are
-    // the most common real dedup target. Identical shingle SETS are
-    // caught linearly: group hot docs by a set fingerprint and expand
-    // jac=1.0 pairs in-row (the pair count is inherent to the output
-    // contract; the INDEX stays bounded). Near-dup (jac < 1) pairs whose
-    // shared shingles are all hot remain out of reach by design — raise
-    // maxDf if a block legitimately holds that shape.
-    val hotExact = withSh.join(hotDocs.drop("hot"), "doc_id")
-      .withColumn("setfp", graft.functions.set_fingerprint(col("sh")))
-      .groupBy(col("block"), col("setfp"))
-      .agg(collect_set(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) > 1)
-      .select(explode(col("ds")).as("doc_a"), col("ds"))
-      .select(col("doc_a"), explode(col("ds")).as("doc_b"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn(outCol, lit(1.0))
-    // materialize (tiny, threshold-bounded); the caches are released in
-    // the enclosing finally blocks even when a stage throws.
-    // distinct: a hot exact-duplicate pair can also surface via `verified`
-    // when it shares a sub-cap shingle with a third doc's vocabulary.
-    clean.unionByName(verified).unionByName(hotExact)
-      .distinct().localCheckpoint()
-    } finally { posts.unpersist(); () }
   }
 
   /**
@@ -493,20 +485,10 @@ object Dedup {
    * observed by the job that checkpoints the input pairs, so sizing costs
    * no job of its own.
    *
-   * Lineage is truncated between rounds. `reliableCheckpoint = false`
-   * (default) uses localCheckpoint — blocks live on executor local disk,
-   * so an executor LOSS mid-loop is a recompute-from-nothing job failure;
-   * fine on local[*] and for fail-and-retry batch jobs. Set it true (with
-   * `spark.sparkContext.setCheckpointDir(...)` pointing at reliable
-   * storage) when a 1000-executor run must survive executor churn.
+   * Lineage is truncated (eagerly) between rounds, local or reliable per
+   * [[Materialize.truncate]].
    */
-  def dupClusters(pairs: DataFrame, reliableCheckpoint: Boolean = false): DataFrame = {
-    if (reliableCheckpoint)
-      require(pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint=true requires sparkContext.setCheckpointDir " +
-          "(an HDFS/object-store path that survives executor loss)")
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint()
+  def dupClusters(pairs: DataFrame): DataFrame = {
     // the pair graph is orders of magnitude smaller than the corpus
     // (bounded by true duplicate clusters), so run the iterations at a
     // partition count sized to the EDGE set, not the session default —
@@ -518,7 +500,7 @@ object Dedup {
     // loop round reads blocks, not the pair dataflow; the size is observed
     // at the root of that same job (its result stage: exact under retries)
     val sized = org.apache.spark.sql.Observation()
-    val p0 = ckpt(pairs.observe(sized, count(lit(1)).as("n")))
+    val p0 = Materialize.truncate(pairs.observe(sized, count(lit(1)).as("n")))
     val nPairs = sized.get("n").asInstanceOf[Long]
     val defaultParts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val parts = math.max(1, math.min(defaultParts, (nPairs / 250000L).toInt + 1))
@@ -529,10 +511,10 @@ object Dedup {
     loopSession.conf.set("spark.sql.shuffle.partitions", parts.toString)
     locally {
       val pc = loopSession.createDataFrame(p0.rdd, p0.schema)
-      val edges = ckpt(pc.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      val edges = Materialize.truncate(pc.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(pc.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .distinct())
-      var labels = ckpt(edges.select(col("src").as("id")).distinct()
+      var labels = Materialize.truncate(edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
       var changed = 1L
       var round = 0
@@ -545,7 +527,7 @@ object Dedup {
         round += 1
         val prop = edges.join(labels, edges("dst") === labels("id"))
           .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-        val merged = ckpt(labels.join(prop, labels("id") === prop("src"), "left")
+        val merged = Materialize.truncate(labels.join(prop, labels("id") === prop("src"), "left")
           .select(col("id"), col("label"),
             least(col("label"), coalesce(col("nlabel"), col("label"))).as("next"))
           .observe(obs, sum(when(col("next") < col("label"), 1L).otherwise(0L))
@@ -600,12 +582,11 @@ object Dedup {
       maxHamming: Int = 3, maxBucket: Int = Int.MaxValue): DataFrame = {
     require(maxHamming <= 3, s"4 bands over 60 bits are exact only for hamming <= 3, got $maxHamming")
     // both sides of the band self-join derive from the signature frame —
-    // persist it so the tokenize+simhash kernel runs ONCE over the corpus
+    // cache it so the tokenize+simhash kernel runs ONCE over the corpus
     // instead of once per side (16 bytes/row of cache; the threshold-
-    // bounded pair result is localCheckpoint'd before the release, the
-    // ngram pair engine's pattern)
-    val sims = withSimhash60(df, idCol, textCol).persist()
-    try {
+    // bounded pair result is truncated before the release, the ngram pair
+    // engine's pattern)
+    Materialize.cached(withSimhash60(df, idCol, textCol)) { sims =>
       val bandCols = (0 until 4).map(b => struct(lit(b).as("band"),
         shiftright(col("simhash60"), b * 15).bitwiseAND(lit(0x7FFFL)).as("v")))
       val bands = sims.select(struct(col("doc_id"), col("simhash60")).as("d"),
@@ -618,13 +599,12 @@ object Dedup {
           .filter(col("n") <= maxBucket).drop("n")
       val left = capped.select(col("band"), col("v"), col("d").as("a"))
       val right = capped.select(col("band"), col("v"), col("d").as("b"))
-      left.join(right, Seq("band", "v"))
+      Materialize.truncate(left.join(right, Seq("band", "v"))
         .filter(col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
           bit_count(col("a.simhash60").bitwiseXOR(col("b.simhash60"))).as("hamming"))
         .filter(col("hamming") <= maxHamming)
-        .distinct() // a close pair can agree on several bands
-        .localCheckpoint()
-    } finally { sims.unpersist(); () }
+        .distinct()) // a close pair can agree on several bands
+    }
   }
 }

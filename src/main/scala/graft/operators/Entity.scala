@@ -2,6 +2,7 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicLong
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -85,16 +86,9 @@ object Entity {
    * distribution has hot prefixes, check [[oversizedBlocks]] (or the
    * observe() metric) and raise `maxBlock` / lengthen `blockPrefix`
    * explicitly.
-   *
-   * `reliableCheckpoint = true` swaps the lazy localCheckpoint of the
-   * blocked name set for a reliable `checkpoint()` (requires
-   * `sparkContext.setCheckpointDir`) — localCheckpoint lineage truncation
-   * is unrecoverable on executor loss, the same trade the dedup family
-   * exposes.
    */
   def fuzzyNamePairs(df: DataFrame, nameCol: String, blockPrefix: Int = 2,
-      maxDist: Int = 3, maxBlock: Long = 10000L,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      maxDist: Int = 3, maxBlock: Long = 10000L): DataFrame = {
     require(blockPrefix >= 1, "blockPrefix must be >= 1")
     require(maxDist >= 1, "maxDist must be >= 1")
     require(maxBlock >= 1, "maxBlock must be >= 1")
@@ -108,18 +102,10 @@ object Entity {
         sum(when(col("_bn") > maxBlock, 1L).otherwise(0L)).as("excluded_blocks"),
         sum(when(col("_bn") > maxBlock, col("_bn")).otherwise(0L)).as("excluded_names"))
       .filter(col("_bn") <= maxBlock).drop("_bn")
-    // the filtered name set feeds BOTH sides of the self-join; a (lazy
-    // local, or reliable on request) checkpoint computes the distinct +
-    // sizing join once and the self-join re-reads materialized blocks
-    // (the dedup-family pattern)
-    if (reliableCheckpoint)
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint=true requires sparkContext.setCheckpointDir " +
-          "to be called first")
-    val joined = blocked.join(sized, Seq("_blk"))
-    val inBlock =
-      if (reliableCheckpoint) joined.checkpoint()
-      else joined.localCheckpoint(eager = false)
+    // the filtered name set feeds BOTH sides of the self-join; a lazy
+    // truncation computes the distinct + sizing join once and the
+    // self-join re-reads materialized blocks (the dedup-family pattern)
+    val inBlock = Materialize.truncate(blocked.join(sized, Seq("_blk")), eager = false)
     val a = inBlock.select(col("_blk"), col("_nm").as("name_a"))
     val b = inBlock.select(col("_blk"), col("_nm").as("name_b"))
     a.join(b, Seq("_blk"))
@@ -142,17 +128,13 @@ object Entity {
    * so the iterative job only ever sees the (small) matched-pair graph.
    *
    * Shares [[fuzzyNamePairs]]' defaults — including the round-12
-   * recall-affecting change documented there — and its
-   * `reliableCheckpoint` contract (threaded through to
-   * [[Dedup.dupClusters]]'s per-round checkpoints as well).
+   * recall-affecting change documented there.
    */
   def resolveEntities(df: DataFrame, nameCol: String, blockPrefix: Int = 2,
-      maxDist: Int = 3, maxBlock: Long = 10000L,
-      reliableCheckpoint: Boolean = false): DataFrame = {
-    val pairs = fuzzyNamePairs(df, nameCol, blockPrefix, maxDist, maxBlock,
-        reliableCheckpoint)
+      maxDist: Int = 3, maxBlock: Long = 10000L): DataFrame = {
+    val pairs = fuzzyNamePairs(df, nameCol, blockPrefix, maxDist, maxBlock)
       .select(col("name_a").as("doc_a"), col("name_b").as("doc_b"))
-    val clusters = Dedup.dupClusters(pairs, reliableCheckpoint)
+    val clusters = Dedup.dupClusters(pairs)
       .select(col("doc_id").as("_nm"), col("cluster_id").as("_canon"))
     df.select(norm(nameCol).as("_nm"))
       .filter(length(col("_nm")) > 0).distinct()

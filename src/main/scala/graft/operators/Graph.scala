@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -13,29 +14,9 @@ import org.apache.spark.sql.types.LongType
  */
 object Graph {
 
-  /** Shared lineage-truncation policy (same contract as
-    * [[Dedup.dupClusters]]): `reliable = false` uses lazy
-    * localCheckpoint — blocks on executor local disk, an executor LOSS
-    * mid-job is a fail-and-rerun; set true (with
-    * `sparkContext.setCheckpointDir` on reliable storage) when a
-    * 1000-executor run must survive executor churn. Lazy either way —
-    * materialized by the first action that touches it.
-    *
-    * Cleanup obligation with `reliable = true`: Spark does NOT delete
-    * reliable checkpoint files by default (several land per pageRank
-    * call — one per truncation point). Long-running deployments must
-    * either set `spark.cleaner.referenceTracking.cleanCheckpoints=true`
-    * (GC-driven delete once the frames are unreferenced) or clear the
-    * checkpoint dir between runs; otherwise repeated calls accumulate
-    * blocks on reliable storage indefinitely. */
-  private def ckpt(df: DataFrame, reliable: Boolean): DataFrame = {
-    if (reliable)
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint=true requires sparkContext.setCheckpointDir " +
-          "(an HDFS/object-store path that survives executor loss)")
-    if (reliable) df.checkpoint(eager = false)
-    else df.localCheckpoint(eager = false)
-  }
+  /** Lazy lineage truncation: materialized by the first action that
+    * touches it (local or reliable per [[Materialize.truncate]]). */
+  private def ckpt(df: DataFrame): DataFrame = Materialize.truncate(df, eager = false)
 
   /**
    * Co-occurrence edge list: one undirected edge `(a, b)` per unordered
@@ -97,8 +78,7 @@ object Graph {
    * across the two joins. No driver state; the census row is the only
    * thing collected.
    */
-  def triangleStats(edges: DataFrame, srcCol: String, dstCol: String,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+  def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val raw = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
       .filter(col("s") =!= col("d"))
     // integral node ids take the PACKED adjacency path below: neighbor
@@ -110,27 +90,27 @@ object Graph {
       case LongType | org.apache.spark.sql.types.IntegerType => true
       case _ => false
     }
+    // reused 4x: degrees, orientation, close join
     val e = ckpt(raw.select(least(col("s"), col("d")).as("a"),
-        greatest(col("s"), col("d")).as("b")).distinct(),
-      reliableCheckpoint) // reused 4x: degrees, orientation, close join
+        greatest(col("s"), col("d")).as("b")).distinct())
     // deg feeds the orientation join AND the wedge aggregation; without
     // its own checkpoint the second consumer re-runs the full union+agg
     // over the edge cache (two more whole-e reads, measured r20)
     val deg = ckpt(e.select(col("a").as("n")).union(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg")), reliableCheckpoint)
+      .groupBy(col("n")).agg(count(lit(1)).as("deg")))
     // orient a<b edge toward the (deg, id)-greater endpoint; carry both
     // endpoints' ranks so the wedge join can order neighbors without
     // another degree lookup
     val withDeg = e
       .join(deg.withColumnRenamed("n", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("n", "b").withColumnRenamed("deg", "db"), "b")
+    // reused: adjacency build + two probes
     val oriented = ckpt(withDeg.select(
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
           struct(col("a").as("u"), col("b").as("v")))
           .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("o"))
-      .select(col("o.u").as("u"), col("o.v").as("v")),
-      reliableCheckpoint) // reused: adjacency build + two probes
+      .select(col("o.u").as("u"), col("o.v").as("v")))
     // a triangle's three edges all point up-rank, so it is found exactly
     // once: from its lowest-rank edge (u,v), as the common out-neighbor
     // w ∈ N+(u) ∩ N+(v). Out-lists are ≤O(√E) by the orientation; the
@@ -198,18 +178,10 @@ object Graph {
    * with its out-degree without limit — it can exceed task memory, or
    * the 2 GB array limit at very large out-degree. (Contributions to a
    * high in-degree node land in the AQE-covered aggregation.)
-   *
-   * `reliableCheckpoint` picks the lineage-truncation durability (see
-   * [[ckpt]]): the default localCheckpoint is the fail-and-rerun trade
-   * fine for a bounded 5-iteration batch job; true writes checkpoint
-   * blocks to `sparkContext.getCheckpointDir` so the loop survives
-   * executor churn on a long cluster run. Both modes produce identical
-   * output (pinned in OperatorsSpec).
    */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 5, damping: Double = 0.85,
-      symmetrize: Boolean = false,
-      reliableCheckpoint: Boolean = false): DataFrame = {
+      symmetrize: Boolean = false): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     require(damping >= 0.0 && damping <= 1.0, "damping must be in [0, 1]")
     val base = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -230,8 +202,7 @@ object Graph {
     // duplicate, so the distinct's aggregate is satisfied by this same
     // exchange (clustered-distribution-by-subset) and adds none of its
     // own — one full-edge shuffle total, output still partitioned by src
-    val e = ckpt(undirected.repartition(col("src")).distinct(),
-      reliableCheckpoint)
+    val e = ckpt(undirected.repartition(col("src")).distinct())
     // The iteration state is a PACKED ADJACENCY, not the edge list: one
     // row per src carrying its sorted neighbor ids as a delta-varint
     // blob (~1-3 B/id; long-keyed graphs) plus the out-degree — built by
@@ -253,8 +224,7 @@ object Graph {
         sort_array(collect_list(col("dst"))))
       else collect_list(col("dst"))
     val adj = ckpt(e.groupBy(col("src"))
-      .agg(nbrsAgg.as("nbrs"), count(lit(1)).as("outdeg")),
-      reliableCheckpoint)
+      .agg(nbrsAgg.as("nbrs"), count(lit(1)).as("outdeg")))
     def nbrsOut = if (packed)
       graft.functions.unpack_sorted_longs(col("nbrs")) else col("nbrs")
     // rank-update join partition reuse: nodes sit hash-partitioned on
@@ -269,7 +239,7 @@ object Graph {
       else adj.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct()
         .repartition(col("node"))
-    val nodes = ckpt(nodes0, reliableCheckpoint)
+    val nodes = ckpt(nodes0)
     var ranks = nodes.withColumn("r", lit(1.0))
     for (_ <- 1 to iterations) {
       val contribs = adj
@@ -281,7 +251,7 @@ object Graph {
         .join(contribs, nodes("node") === contribs("dst"), "left")
         .select(col("node"),
           (lit(1.0 - damping) + lit(damping) * coalesce(col("s"), lit(0.0))).as("r"))
-      ranks = ckpt(ranks, reliableCheckpoint)
+      ranks = ckpt(ranks)
     }
     ranks
   }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -569,19 +570,6 @@ object Lakehouse {
     -1L // unreachable
   }
 
-  /** Releases the cached blocks behind a `localCheckpoint()`ed frame.
-    * The checkpoint persists its RDD at the executor storage layer (a
-    * Dataset-level `unpersist` cannot see it), and a long-running
-    * caller running many merges would otherwise accumulate dead blocks
-    * until the driver GC'd the frames. Best-effort: an already-released
-    * or non-checkpoint frame is a no-op. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(false); ()
-      case _ => ()
-    } catch { case _: Exception => () }
-
   // ------------------------------------------------------------------
   // writes
   // ------------------------------------------------------------------
@@ -831,14 +819,14 @@ object Lakehouse {
     if (small.size <= 1) return (0, 0)
     // read under the recorded schema: compaction NORMALIZES pre-evolution
     // small files to the current schema as a side effect. Materialized
-    // ONCE (localCheckpoint): the z-write evaluates its input three
+    // ONCE (truncated): the z-write evaluates its input three
     // times (bounds agg + range sampling + write), and the small files
     // — bounded bytes by the minRows selection — should be scanned
     // once, not thrice
     val newFiles = {
-      val input = readData(spark, path, base0, small).localCheckpoint()
+      val input = Materialize.truncate(readData(spark, path, base0, small))
       try writeBatch(spark, path, input, zCols, files, bits)
-      finally releaseCheckpoint(input)
+      finally Materialize.release(input)
     }
     val newStats = statsOf(spark.read.parquet(newFiles: _*), zCols)
     onCompactBeforeCommit()
@@ -984,7 +972,7 @@ object Lakehouse {
    * [[changesSince]] feeds exactly them downstream — update-postimages
    * still never feed (they would double-count keys the consumer saw).
    *
-   * `updates` is materialized ONCE at entry (`localCheckpoint`): the
+   * `updates` is materialized ONCE at entry (truncated): the
    * frame is otherwise evaluated by the probe, the rewrite union, and
    * the final count, and a NON-DETERMINISTIC source (sampling, `rand()`,
    * a re-read of mutating storage) could present different keys to the
@@ -1040,7 +1028,7 @@ object Lakehouse {
    * and compactions on OTHER key ranges all rebase; overlapping or
    * stats-less cases and whole-table replaces stay fail-loud
    * [[CommitConflictException]]; `maxAttempts` bounds the retries.
-   * Every intermediate frame this merge `localCheckpoint`s (the batch,
+   * Every intermediate frame this merge truncates (the batch,
    * the large-batch matched keys and splits, the survivors) is
    * RELEASED on exit — success or failure — so a caller running many
    * merges does not accumulate dead executor blocks.
@@ -1056,7 +1044,7 @@ object Lakehouse {
         "largeBatch=true — the shuffle-side path has no driver-sized " +
         "state for the cap to bound")
     val toRelease = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val u = updates.localCheckpoint()
+    val u = Materialize.truncate(updates)
     toRelease += u
     try {
     if (u.isEmpty) return (0, 0L, 0L)
@@ -1186,9 +1174,9 @@ object Lakehouse {
       val mk =
         if (aff.isEmpty) keys.limit(0)
         else {
-          val c = keys.join(
+          val c = Materialize.truncate(keys.join(
             readData(spark, path, base, aff).select(keyCols.map(col): _*),
-            keyCols, "left_semi").localCheckpoint()
+            keyCols, "left_semi"))
           toRelease += c
           c
         }
@@ -1208,13 +1196,13 @@ object Lakehouse {
       else {
         def split(how: String) = {
           val j = u.join(matchedKeys, keyCols, how)
-          if (largeBatch) { val c = j.localCheckpoint(); toRelease += c; c }
+          if (largeBatch) { val c = Materialize.truncate(j); toRelease += c; c }
           else j
         }
         (split("left_semi"), split("left_anti"))
       }
     val affectedRows = affected.map(fileRows).sum
-    // survivors materialize ONCE (localCheckpoint) before the z-write's
+    // survivors materialize ONCE (truncated) before the z-write's
     // three input evaluations — the affected files (the merge's most
     // expensive read, bounded by the COW contract) are scanned a single
     // time for the rewrite, matching [[deleteWhere]]'s single-scan pin.
@@ -1225,8 +1213,8 @@ object Lakehouse {
     val survivorFiles =
       if (affected.isEmpty || replaced == affectedRows) Seq.empty[String]
       else {
-        val surv = readData(spark, path, base, affected)
-          .join(survivorKeys, keyCols, "left_anti").localCheckpoint()
+        val surv = Materialize.truncate(readData(spark, path, base, affected)
+          .join(survivorKeys, keyCols, "left_anti"))
         toRelease += surv
         writeBatch(spark, path, surv, zCols, files, bits)
       }
@@ -1245,7 +1233,7 @@ object Lakehouse {
       deleteFiles = Nil, addedOverlap = keyAddedOverlap,
       maxAttempts = maxAttempts)
     (affected.size, replaced, u.count())
-    } finally toRelease.foreach(releaseCheckpoint)
+    } finally toRelease.foreach(Materialize.release)
   }
 
   /**
@@ -1332,14 +1320,14 @@ object Lakehouse {
     if (hits.isEmpty) return (0, 0L)
     val affected = allFiles.filter(f => hits.contains(f))
     // the affected files — the mutation's most expensive input —
-    // materialize ONCE (localCheckpoint, the module's idiom from
+    // materialize ONCE (truncated, the module's idiom from
     // [[upsertByKey]]): the survivor z-write alone evaluates its input
     // three times (bounds agg + range sampling + write), and with CDF
     // the deleted-row sidecar consumes it too; every pass after this
     // line reads cached blocks, never the files (spec-pinned via a
     // counting filesystem: the whole delete opens the affected files at
     // most twice — probe + this materialization)
-    val affFrame = readData(spark, path, base, affected).localCheckpoint()
+    val affFrame = Materialize.truncate(readData(spark, path, base, affected))
     try {
     val survivors = affFrame.filter(!(pred <=> lit(true)))
     val anySurvivor = !survivors.isEmpty
@@ -1386,7 +1374,7 @@ object Lakehouse {
       addedOverlap = deleteAddedOverlap,
       maxAttempts = maxAttempts)
     (affected.size, hits.values.sum)
-    } finally releaseCheckpoint(affFrame)
+    } finally Materialize.release(affFrame)
   }
 
   /**
@@ -1644,6 +1632,19 @@ object Lakehouse {
   // incremental consumption
   // ------------------------------------------------------------------
 
+  /** The file set of version `v`'s manifest. A manifest vacuumed away
+    * raises the retention-window error, an IllegalStateException like a
+    * vacuumed feed file or a REPLACE in the window, so a consumer
+    * re-syncs on one exception type. */
+  private def manifestFiles(spark: SparkSession, fs: FileSystem, path: String,
+      v: Long, caller: String): Set[String] = {
+    if (!fs.exists(new Path(versionDir(path, v), "manifest")))
+      throw new IllegalStateException(s"$caller: version $v's manifest was " +
+        "vacuumed — incremental consumers must keep up with the retention window")
+    manifestAt(spark, path, v).select(col("file")).collect()
+      .map(_.getString(0)).toSet
+  }
+
   /** Data files ADDED by each committed version in `(sinceVersion,
     * latest]`, as (version, files) pairs — the manifest diff a
     * downstream incremental job replays instead of rescanning the
@@ -1663,13 +1664,7 @@ object Lakehouse {
       sinceVersion: Long): Seq[(Long, Seq[String])] = {
     val fs = fsOf(spark, path)
     val versions = committedVersions(spark, path).filter(_ > sinceVersion)
-    def filesOf(v: Long): Set[String] = {
-      require(fs.exists(new Path(versionDir(path, v), "manifest")),
-        s"addedFilesSince: version $v's manifest was vacuumed — " +
-          "incremental consumers must keep up with the retention window")
-      manifestAt(spark, path, v).select(col("file")).collect()
-        .map(_.getString(0)).toSet
-    }
+    def filesOf(v: Long): Set[String] = manifestFiles(spark, fs, path, v, "addedFilesSince")
     versions.foldLeft((Seq.empty[(Long, Seq[String])],
         Option.empty[Set[String]])) { case ((acc, prevOpt), v) =>
       val cur = filesOf(v)
@@ -1750,13 +1745,7 @@ object Lakehouse {
     val latest = latestVersion(spark, path)
     val versions = committedVersions(spark, path)
       .filter(v => v > sinceVersion && v <= latest)
-    def filesOf(v: Long): Set[String] = {
-      require(fs.exists(new Path(versionDir(path, v), "manifest")),
-        s"changesDetailed: version $v's manifest was vacuumed — " +
-          "incremental consumers must keep up with the retention window")
-      manifestAt(spark, path, v).select(col("file")).collect()
-        .map(_.getString(0)).toSet
-    }
+    def filesOf(v: Long): Set[String] = manifestFiles(spark, fs, path, v, "changesDetailed")
     // fold with a CARRIED previous-file-set (addedFilesSince's trick):
     // consecutive appends replay one manifest each instead of two; a
     // rewrite/typed op invalidates the carry (its file set moved), so

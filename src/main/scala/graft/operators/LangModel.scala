@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -70,12 +71,10 @@ object LangModel {
     // uni feeds BOTH the |V| count and the scoring join — persist the
     // vocab-bounded table so the second consumer doesn't re-tokenize the
     // training slice (the naiveBayes/bm25 cache pattern); the O(docs)
-    // result is localCheckpoint'd before the release
-    val uni = train
+    // result is truncated before the release
+    Materialize.cached(train
       .select(explode(TextAnalysis.tokens(col(textCol))).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("_c1"))
-      .persist()
-    try {
+      .groupBy(col("w1")).agg(count(lit(1)).as("_c1"))) { uni =>
       val big = trainBg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("_c2"))
       // vocabulary size: one count job, folded into the plan as a literal
       val vocab = uni.count().toDouble
@@ -84,14 +83,13 @@ object LangModel {
       val logp = log((coalesce(col("_c2"), lit(0L)).cast(DoubleType) + lit(alpha)) /
         (coalesce(col("_c1"), lit(0L)).cast(DoubleType) + lit(alpha * vocab)))
       val nll = round(-sum(col("_lp")) / count(lit(1)), 4)
-      bigrams(docs, Seq(idCol), textCol)
+      Materialize.truncate(bigrams(docs, Seq(idCol), textCol)
         .join(big, Seq("w1", "w2"), "left")
         .join(uni, Seq("w1"), "left")
         .select(col(idCol), logp.as("_lp"))
         .groupBy(col(idCol))
         .agg(count(lit(1)).as("n_bigrams"), nll.as("nll"))
-        .withColumn("ppl", round(exp(col("nll")), 2))
-        .localCheckpoint()
-    } finally { uni.unpersist(); () }
+        .withColumn("ppl", round(exp(col("nll")), 2)))
+    }
   }
 }

@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Data-card column profiling — the per-column fact sheet (row counts,
@@ -183,19 +183,18 @@ object Profile {
     val cnt = df.filter(v.isNotNull).select(v.as("_v"))
       .groupBy(col("_v")).agg(count(lit(1)).as("_c"))
     val parts = math.max(2, spark.sparkContext.defaultParallelism)
-    // ONE persisted RDD instance serves both passes (mass, pick) — the
+    // ONE cached RDD instance serves both passes (mass, pick) — the
     // packBlocks pattern: the mass pass materializes the cache in ITS
     // job (one fewer driver-sequenced job than the r20 eager-checkpoint
     // form), the pick pass reads blocks, and the cache is released
     // deterministically in the finally instead of pinning checkpoint
     // blocks for the session. A single RDD instance also guarantees both
     // passes see the SAME range-partition boundaries (they come from
-    // sampling). MEMORY_AND_DISK, the level of the localCheckpoint this
-    // replaced: an evicted partition is re-read, not re-sorted.
-    val sorted = cnt.repartitionByRange(parts, col("_v"))
+    // sampling). Materialize.Level spills: an evicted partition is
+    // re-read, not re-sorted.
+    Materialize.cached(cnt.repartitionByRange(parts, col("_v"))
       .sortWithinPartitions(col("_v"))
-      .rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+      .rdd) { sorted =>
       val masses = sorted.mapPartitionsWithIndex { (pid, it) =>
         var s = 0L
         it.foreach(r => s += r.getLong(1))
@@ -235,7 +234,7 @@ object Profile {
         // only in the last ulp — and the spec pins even that)
         else (higher - pos) * found(lower) + (pos - lower) * found(higher)
       }
-    } finally { sorted.unpersist(); () }
+    }
   }
 
   /** The boundary pass of [[equiHeightHistogramSampled]], exposed so

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,11 +43,10 @@ object Search {
     // tokenize ONCE: the stats pass and the scoring pass both consume the
     // persisted token arrays instead of re-running the tokenizer over the
     // corpus (the naiveBayes/dedup-pair-engine cache pattern); the k-row
-    // result is localCheckpoint'd before the unpersist so the caller
-    // never recomputes through the released cache
-    val base = docs.select(col(idCol), toks.as("_toks"),
-      size(toks).cast("long").as("_len")).persist()
-    try {
+    // result is truncated before the release so the caller never
+    // recomputes through the released cache
+    Materialize.cached(docs.select(col(idCol), toks.as("_toks"),
+        size(toks).cast("long").as("_len"))) { base =>
       // one corpus-stats pass: N, token total, df per term — all map-side
       // combinable longs, so the exchange carries one row per partition
       val statCols = Seq(count(lit(1)).as("_n"), sum(col("_len")).as("_tok")) ++
@@ -72,12 +72,11 @@ object Search {
       // bounded top-k: heap-reduce per partition before the single exchange
       // (the orderBy+limit form is equivalent here but rankTopK's TopKAgg
       // pattern keeps the shuffle k-bounded at any corpus size)
-      scored.agg(graft.functions.TopKAgg.topk_agg(
+      Materialize.truncate(scored.agg(graft.functions.TopKAgg.topk_agg(
           col("bm25"), col(idCol).cast("long"), k).as("_top"))
         .select(explode(col("_top")).as("_e"))
-        .select(col("_e.c_id").as(idCol), col("_e.sim").as("bm25"))
-        .localCheckpoint()
-    } finally { base.unpersist(); () }
+        .select(col("_e.c_id").as(idCol), col("_e.sim").as("bm25")))
+    }
   }
 
   /**

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -183,21 +184,18 @@ object Similarity {
     // reps feeds BOTH sides of the pair join AND the kept-set anti-join:
     // left lazy, the cell assignment + collapse aggregation would execute
     // three times (the r10 plan audit showed the pipeline planned 3x).
-    // A LAZY localCheckpoint computes it once on first use and shares
+    // A LAZY truncation computes it once on first use and shares
     // the materialized partitions across the three scans — no extra
     // eager job (the operator is overhead-dominated at small corpora)
     // and no cache-manager entry accumulating per call the way persist()
     // would. Size is one row per distinct (cluster, vector) — at most
     // the corpus — spilling to executor disk when memory-pressured.
-    // Known localCheckpoint trade (same as the dupClusters loop): the
-    // truncated lineage lives in non-replicated executor blocks, so an
-    // executor lost MID-QUERY fails the job instead of recomputing —
-    // re-run the query; don't use dynamic executor deallocation under it.
-    val reps = assigned
+    // Without a checkpoint dir the truncated lineage lives in
+    // non-replicated executor blocks (see Materialize).
+    val reps = Materialize.truncate(assigned
       .groupBy(col("_sd_cluster"), col("_sd_vec"))
       .agg(min(col("_sd_id")).as("_sd_id"))
-      .withColumn("_sd_nrm", norm(col("_sd_vec")))
-      .localCheckpoint(eager = false)
+      .withColumn("_sd_nrm", norm(col("_sd_vec"))), eager = false)
     // a representative is dropped when ANY smaller-id same-cluster rep is
     // within the threshold; everything else (reps minus dropped) is kept
     val a = reps.alias("a")

@@ -45,7 +45,7 @@ object AnnSoak {
     val t2 = System.nanoTime()
     val (codes, cbs) = Similarity.pqIndexFrames(c, "vec_id", "embedding",
       m = 8, ksub = 64)
-    val codesC = codes.localCheckpoint() // materialize = the persisted index
+    val codesC = graft.core.Materialize.truncate(codes) // materialize = the persisted index
     val pqBuildSec = (System.nanoTime() - t2) / 1e9
     // refine must cover the quantization blind spot: all ~n/1000 members
     // of a tight cluster share (nearly) one code, so the coarse cut must

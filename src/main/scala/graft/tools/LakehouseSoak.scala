@@ -91,8 +91,8 @@ object LakehouseSoak {
     // key existed) and the deleted band's rows, and the postimages must
     // BE the original rows (identity upsert) byte-for-byte
     val ((cdfPost, cdfIns, cdfDel, cdfExact), tCdf) = timed {
-      val feed = Lakehouse.changesDetailed(spark, base, vPreMutations).cache()
-      try {
+      graft.core.Materialize.cached(
+          Lakehouse.changesDetailed(spark, base, vPreMutations)) { feed =>
         val byType = feed.groupBy(col("_change_type")).count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val post = feed.filter(col("_change_type") === "update_postimage")
@@ -102,7 +102,7 @@ object LakehouseSoak {
         (byType.getOrElse("update_postimage", 0L),
           byType.getOrElse("insert", 0L),
           byType.getOrElse("delete", 0L), exact)
-      } finally feed.unpersist()
+      }
     }
 
     def f(d: Double) = "%.1f".formatLocal(java.util.Locale.ROOT, d)

@@ -55,8 +55,9 @@ object SaltSoak {
         element_at(poolCol, (col("id") % pool.length).cast("int") + 1))
         .otherwise(concat(lit("user-"), col("id"))).as("user_id"),
       (col("id") % 97).cast("int").as("score"))
-    val projected = CqlPipeline.toCql(df, Projection(defaultTimestampMicros = 1L))
-      .localCheckpoint() // both writes + the salt plan read the same rows
+    // both writes + the salt plan read the same rows
+    val projected = graft.core.Materialize.truncate(
+      CqlPipeline.toCql(df, Projection(defaultTimestampMicros = 1L)))
 
     val t0 = System.nanoTime()
     val plain = BulkSink.writeSorted(projected, Seq("rowkey"), buckets,

@@ -167,8 +167,8 @@ object ScaleCurve {
       "dedup_clusters" -> { n =>
         // isolate the clustering: pairs are precomputed and pinned so the
         // measured time is label propagation, not the LSH front half
-        val pairs = Dedup.minhashLshPairs(docs(spark, n), "doc_id", "text",
-          bands = 4, rowsPerBand = 2, threshold = 0.8).localCheckpoint()
+        val pairs = graft.core.Materialize.truncate(Dedup.minhashLshPairs(
+          docs(spark, n), "doc_id", "text", bands = 4, rowsPerBand = 2, threshold = 0.8))
         Dedup.dupClusters(pairs).count()
       },
       "corpus_pack" -> { n =>

@@ -21,6 +21,12 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sharedState.cacheManager.isEmpty
 
+  /** Drops RDD `id`'s cached blocks, as `RDD.unpersist` does minus its
+    * warning that a locally checkpointed RDD cannot be recomputed — the
+    * caller releases such an RDD on purpose (`graft.core.Materialize`). */
+  def unpersistRDD(spark: org.apache.spark.sql.SparkSession, id: Int): Unit =
+    spark.sparkContext.unpersistRDD(id, blocking = false)
+
   /** Execute a resolved logical plan and collect its rows — the range-join
     * rewrite's bin-width derivation probe needs this from inside an
     * optimizer rule, and Dataset.ofRows is private[sql] in Spark 4. */

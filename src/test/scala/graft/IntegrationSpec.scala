@@ -159,6 +159,24 @@ class IntegrationSpec extends AnyFunSuite {
     assert(e.getMessage.contains("saltbuckets"), e.getMessage)
   }
 
+  test("CLI saltbuckets=auto releases its materialized load once the writes return") {
+    // an in-process caller keeps its session: the projected input that
+    // auto mode materializes for the salt plan must not stay pinned
+    val input = Files.createTempDirectory("graft-cli-saltr-in").resolve("rows").toString
+    spark.range(1500).select(col("id").as("k"), (col("id") % 7).as("v")).write.parquet(input)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val manifests = Hdfs2CassSpark.run(spark, Hdfs2CassSpark.parseArgs(Seq(
+      "--input", input,
+      "--output", "cql://localhost/ks/rows?reducers=4&saltbuckets=auto",
+      "--rowkey", "k",
+      "--sink-dir", Files.createTempDirectory("graft-cli-saltr").toString)),
+      StaticClusterInfo())
+    assert(manifests.map(_.rows).sum === 1500)
+    assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+      s"run left persistent RDDs: ${sc.getPersistentRDDs.keySet.toSet -- before}")
+  }
+
   test("CLI distributerandomly emits sorted runs that span the ring, not parquet") {
     // reference semantics: random routing changes ONLY the reducer
     // assignment (CassandraPartitioner.java:58-60); the sort comparator

@@ -15,6 +15,22 @@ class OperatorsSpec extends AnyFunSuite {
   val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
     "lambda mu nu xi omicron pi rho sigma tau upsilon"
 
+  /** Runs `body` with the context's checkpoint dir set to `dir` (None:
+    * unset), restoring the previous setting afterwards. */
+  private def withCheckpointDir[T](dir: Option[java.nio.file.Path])(body: => T): T = {
+    val had = spark.sparkContext.getCheckpointDir
+    spark.sparkContext.setCheckpointDir(dir.map(_.toString).orNull)
+    try body finally spark.sparkContext.setCheckpointDir(had.orNull)
+  }
+
+  private def checkpointFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(dir)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator.asScala.filter(f => f.getFileName.toString.startsWith("part-")).toList
+    } finally s.close()
+  }
+
   test("exact dedup groups identical normalized texts") {
     val df = docs(
       1L -> "Hello  world   foo", 2L -> "hello world foo", 3L -> "different text here")
@@ -561,37 +577,19 @@ class OperatorsSpec extends AnyFunSuite {
     assert(math.abs(dr("y") - (0.15 + 0.85 * 0.15)) < 1e-12)
   }
 
-  test("graph: reliableCheckpoint mode fails fast without a dir and matches local mode") {
+  test("graph: a checkpoint dir makes pageRank/triangleStats reliable, same results") {
     import graft.operators.Graph
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 3L))
       .toDF("s", "d")
-    val hadDir = spark.sparkContext.getCheckpointDir
-    if (hadDir.isEmpty) {
-      // no checkpoint dir set -> fail fast at plan time, not as a late
-      // executor-side error mid-loop
-      intercept[IllegalArgumentException](
-        Graph.pageRank(edges, "s", "d", iterations = 2, reliableCheckpoint = true))
-      intercept[IllegalArgumentException](
-        Graph.triangleStats(edges, "s", "d", reliableCheckpoint = true))
-    }
+    def run() = (
+      Graph.pageRank(edges, "s", "d", iterations = 4)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap,
+      Graph.triangleStats(edges, "s", "d").collect()(0).toSeq)
+    val local = withCheckpointDir(None)(run())
     val dir = java.nio.file.Files.createTempDirectory("graft-graph-ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    try {
-      // both durability modes must produce IDENTICAL output — the flag
-      // only changes where lineage-truncation blocks live
-      val local = Graph.pageRank(edges, "s", "d", iterations = 4)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-      val reliable = Graph.pageRank(edges, "s", "d", iterations = 4,
-          reliableCheckpoint = true)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-      assert(reliable === local)
-      val tLocal = Graph.triangleStats(edges, "s", "d").collect()(0).toSeq
-      val tReliable = Graph.triangleStats(edges, "s", "d",
-        reliableCheckpoint = true).collect()(0).toSeq
-      assert(tReliable === tLocal)
-    } finally {
-      spark.sparkContext.setCheckpointDir(hadDir.orNull)
-    }
+    // the dir only changes where lineage-truncation blocks live
+    assert(withCheckpointDir(Some(dir))(run()) === local)
+    assert(checkpointFiles(dir).nonEmpty, s"no reliable checkpoint files under $dir")
   }
 
   test("segmentDedup: first occurrence survives, docs rewritten, full dup vanishes") {
@@ -879,15 +877,50 @@ class OperatorsSpec extends AnyFunSuite {
     assert(got(2L) === Seq((20L, 0.1)))
   }
 
-  test("minhashLshPairs releases its shingle cache before returning") {
+  test("cached operator scopes release all but the returned frame's blocks") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.graft.Bridge
-    val df = docs(1L -> base, 2L -> base.replace("delta", "DELTA"), 3L -> base)
-    (1 to 3).foreach { _ =>
-      val n = Dedup.minhashLshPairs(df, "doc_id", "text", threshold = 0.5).count()
-      assert(n >= 2)
+    import graft.core.Materialize
+    import graft.operators.{Classify, Curate, LangModel, Profile, Search}
+    val sc = spark.sparkContext
+    val corpus = docs(1L -> base, 2L -> base.replace("delta", "DELTA"), 3L -> base,
+      4L -> "one two three four five six seven eight nine ten")
+    val blocked = corpus.withColumn("src", lit("s"))
+    val train = Seq(("A", "alpha beta gamma"), ("B", "one two three")).toDF("lang", "text")
+    val index = Dedup.lshBandIndex(corpus, "doc_id", "text")
+    // each family's result frame; None where it returns driver values
+    val families: Seq[(String, () => Option[DataFrame])] = Seq(
+      "bm25TopK" -> (() => Some(Search.bm25TopK(corpus, "doc_id", "text", Seq("alpha"), 2))),
+      "naiveBayes" -> (() => Some(Classify.naiveBayes(corpus, train, "doc_id", "text", "lang"))),
+      "bigramScore" -> (() => Some(LangModel.bigramScore(corpus, train, "doc_id", "text"))),
+      "ngramJaccardPairs" -> (() => Some(Dedup.ngramJaccardPairs(blocked, "doc_id", "text",
+        "src", 0.5))),
+      "containmentPairs over hot shingles" -> (() => Some(Dedup.containmentPairs(blocked,
+        "doc_id", "text", "src", 0.5, maxDf = 2))),
+      "simhashBandPairs" -> (() => Some(Dedup.simhashBandPairs(corpus, "doc_id", "text"))),
+      "minhashLshPairs" -> (() => Some(Dedup.minhashLshPairs(corpus, "doc_id", "text",
+        threshold = 0.5))),
+      "incrementalNearDupPairs" -> (() => Some(Dedup.incrementalNearDupPairs(
+        docs(10L -> base), corpus, "doc_id", "text", index))),
+      "packBlocks" -> (() => Some(Curate.packBlocks(corpus, "doc_id", "text", 5L))),
+      "exactQuantiles" -> (() => {
+        Profile.exactQuantiles(corpus, "doc_id", Seq(0.5)); None }))
+    families.foreach { case (name, run) =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = run()
+      assert(out.forall(_.count() > 0), s"$name: empty result proves nothing")
+      assert(Bridge.cacheIsEmpty(spark), s"$name left a Dataset cache entry")
+      val behind = out.map(_.queryExecution.logical match {
+        case r: LogicalRDD => r.rdd.id
+        case p => fail(s"$name returned an untruncated frame: $p")
+      })
+      assert(sc.getPersistentRDDs.keySet.toSet -- before === behind.toSet,
+        s"$name: persistent RDDs other than the result's")
+      out.foreach(Materialize.release)
+      assert((sc.getPersistentRDDs.keySet.toSet -- before).isEmpty,
+        s"$name: release left the result's blocks")
     }
-    assert(Bridge.cacheIsEmpty(spark),
-      "shingle cache must be unpersisted before minhashLshPairs returns")
   }
 
   test("simhash banded Hamming join equals the all-pairs form (pigeonhole exactness)") {
@@ -2456,7 +2489,7 @@ class OperatorsSpec extends AnyFunSuite {
     Lakehouse.appendClustered(mk(400, 450), dir, Seq("k", "t"), files = 1) // v1
     Lakehouse.appendClustered(mk(450, 500), dir, Seq("k", "t"), files = 1) // v2
     Lakehouse.vacuum(spark, dir, retainVersions = 1, orphanGraceMs = 0)
-    val eBehind = intercept[Exception](
+    val eBehind = intercept[IllegalStateException](
       Lakehouse.changesDetailed(spark, dir, v0).collect())
     assert(eBehind.getMessage.contains("retention window"),
       eBehind.getMessage)
@@ -3070,12 +3103,12 @@ class OperatorsSpec extends AnyFunSuite {
               opLog.mkString(" -> "))
         } finally feed.unpersist()
       } catch {
-        case e: RuntimeException
+        case e: IllegalStateException
             if trial != 0 && e.getMessage != null &&
               e.getMessage.contains("retention window") =>
           // trial 1's tight vacuum may outrun the feed — the documented
-          // contract (manifests throw require's IllegalArgumentException,
-          // feed files IllegalStateException); the per-op live==model
+          // contract (an IllegalStateException, whether a manifest or
+          // a feed file was vacuumed); the per-op live==model
           // checks above already covered the run. Trial 0 retains
           // everything, so ITS mirror always runs.
           ()
@@ -3111,7 +3144,7 @@ class OperatorsSpec extends AnyFunSuite {
       Seq(0L, 1L, 2L, 4L))
     // consuming past the retention window fails loudly, never partially
     Lakehouse.vacuum(spark, dir, orphanGraceMs = 0)
-    val e = intercept[IllegalArgumentException](
+    val e = intercept[IllegalStateException](
       Lakehouse.addedFilesSince(spark, dir, -1))
     assert(e.getMessage.contains("vacuum"))
   }
@@ -3821,31 +3854,18 @@ class OperatorsSpec extends AnyFunSuite {
       .isEmpty)
   }
 
-  test("entity: reliableCheckpoint threads through and preserves results") {
+  test("entity: a checkpoint dir makes resolution checkpoint reliably, same results") {
     val df = Seq("smith", "smyth", "date", "data", "zz").toDF("name")
-    // no checkpoint dir set -> fail fast, not a late executor error
-    val hadDir = spark.sparkContext.getCheckpointDir
-    if (hadDir.isEmpty) {
-      intercept[IllegalArgumentException](
-        Entity.fuzzyNamePairs(df, "name", reliableCheckpoint = true))
-      intercept[IllegalArgumentException](
-        Entity.resolveEntities(df, "name", reliableCheckpoint = true))
-    }
+    def run() = (
+      Entity.resolveEntities(df, "name")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet,
+      Entity.fuzzyNamePairs(df, "name")
+        .collect().map(r => (r.getString(0), r.getString(1))).toSet)
+    val local = withCheckpointDir(None)(run())
+    assert(local._2 === Set(("smith", "smyth"), ("data", "date")))
     val dir = java.nio.file.Files.createTempDirectory("graft-entity-ckpt")
-    spark.sparkContext.setCheckpointDir(dir.toString)
-    try {
-      val local = Entity.resolveEntities(df, "name")
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      val reliable = Entity.resolveEntities(df, "name", reliableCheckpoint = true)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(reliable === local)
-      val pairs = Entity.fuzzyNamePairs(df, "name", reliableCheckpoint = true)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      assert(pairs === Set(("smith", "smyth"), ("data", "date")))
-    } finally {
-      // restore: a stale temp checkpoint dir must not leak into other tests
-      spark.sparkContext.setCheckpointDir(hadDir.orNull)
-    }
+    assert(withCheckpointDir(Some(dir))(run()) === local)
+    assert(checkpointFiles(dir).nonEmpty, s"no reliable checkpoint files under $dir")
   }
 
   test("entity: invalid knobs fail fast") {

@@ -275,6 +275,9 @@ class PlanSpec extends AnyFunSuite {
             qe.optimizedPlan.toString.contains("GraftBulk")) captured = qe.executedPlan.toString
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    // a prior write's late event (bulkDir's, just before) must not be
+    // captured as this one's: drain the bus first, as plansDuring does
+    org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       body

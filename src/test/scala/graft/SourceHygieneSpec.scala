@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * only session factory, and only the entry points (Sessions itself,
  * Bench, Verify, the CLI and the tools) read system properties or the
  * environment, so no operator or query carries a hidden switch. The
- * engine is batch only, and every public entry that no other source
+ * engine is batch only, operators materialize intermediates only through
+ * `graft.core.Materialize`, and every public entry that no other source
  * file calls is listed, with its reason, in `docs/kept_entries.txt`.
  */
 class SourceHygieneSpec extends AnyFunSuite {
@@ -58,6 +59,19 @@ class SourceHygieneSpec extends AnyFunSuite {
     val bad = offenders(files, "read" + "Stream", "write" + "Stream",
       "foreach" + "Batch")
     assert(bad.isEmpty, s"no stream sources, sinks or micro-batch writers: $bad")
+  }
+
+  test("operators, the CLI and the queries materialize only through Materialize") {
+    val root = "src/main/scala/graft"
+    val files = scalaFiles(s"$root/operators") ++ scalaFiles(s"$root/cli") :+
+      Paths.get(s"$root/SparkEntry.scala")
+    assert(files.exists(_.endsWith("Dedup.scala")), "source tree not found")
+    val calls = Seq(".persist(", ".cache()", "unpersist(", "localCheckpoint(", ".checkpoint(")
+    val bad = files.filter { f =>
+      val code = SourceInventory.strip(read(f), keepStrings = false)
+      calls.exists(code.contains)
+    }.map(_.toString).sorted
+    assert(bad.isEmpty, s"cache, truncate and release with Materialize: $bad")
   }
 
   test("every public entry without a caller in another file is on the keep-list") {
