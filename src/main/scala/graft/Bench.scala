@@ -29,7 +29,8 @@ package graft
  *     own stats ride in "probe" (min sec + per-pass list).
  *
  * SPARK_GRAFT_BENCH_ONLY=<csv of names> restricts to a subset (local
- * iteration); the sentinel always runs.
+ * iteration); the sentinel always runs, and an unknown name fails before
+ * any query runs.
  *
  * Shared-intermediate memo contract: queries consuming a per-(session,
  * dir) memoized frame (`SparkEntry.sharedMemo` — the LSH pair graph, the
@@ -37,8 +38,8 @@ package graft
  * top of the shared build, mirroring the one-graph-N-consumers
  * production shape; the full derivation cost is billed exactly once by
  * a memo-free query (`dedup_minhash_lsh`, `corpus_curate`). A consumer
- * with NO marginal work sits in `SparkEntry.benchExempt` (still run
- * once, correctness-gated) instead of reporting a meaningless ~0.
+ * with NO marginal work is untimed (`timed = false`: still run once,
+ * correctness-gated) instead of reporting a meaningless ~0.
  */
 object Bench {
   val SentinelQuery = "q4_window"
@@ -48,7 +49,7 @@ object Bench {
     val cpus = Sessions.cpus
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(SparkEntry.resolveCsv(_).map(_.name).toSet)
     // Engine defaults (AQE coalescing floor included) come from the ONE
     // shared session factory — the bench measures the engine's config,
     // not its own (VERDICT r20 #2).
@@ -59,25 +60,21 @@ object Bench {
     // query through the noop sink so JIT/codegen startup is not billed to
     // whichever query happens to sort first
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    try SparkEntry.queries("q1_agg")(spark, sfDir)
+    try SparkEntry.query("q1_agg").build(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] warm-up failed: ${e.getMessage}")
     }
 
-    // Layout-composition demos (write tmp parquet layouts each pass) are
-    // exempt from the timed suite: their seconds measure local tmp-dir
-    // writes, not engine throughput, and their scale story is carried by
-    // scale_curve.json + the layout specs. They still run ONCE here (rc
-    // != 0 on failure) so the bench can never go green over a broken
-    // query, and the JSON names them in "exempt".
-    val exempt = SparkEntry.benchExempt
-    val names = SparkEntry.queries.keys.toSeq
-      .filter(n => only.forall(s => s.contains(n) || n == SentinelQuery))
-      .filterNot(n => exempt.contains(n) && only.isEmpty)
-      .sorted
-    if (only.isEmpty) exempt.toSeq.sorted.foreach { n =>
-      SparkEntry.queries(n)(spark, sfDir)
+    // Untimed queries still run ONCE here (rc != 0 on failure) so the
+    // bench can never go green over a broken query, and the JSON names
+    // them in "exempt".
+    val exempt = SparkEntry.queries.filterNot(_.timed).map(_.name).sorted
+    val names = SparkEntry.queries
+      .filter(q => only.fold(q.timed)(s => s.contains(q.name) || q.name == SentinelQuery))
+      .map(_.name).sorted
+    if (only.isEmpty) exempt.foreach { n =>
+      SparkEntry.query(n).build(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     }
     val times = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -103,7 +100,7 @@ object Bench {
     // query that threw once but measured on other passes keeps its min and
     // stays out of the list (the per-pass stderr line still records it).
     for (pass <- 1 to runs; name <- names) {
-      val fn = SparkEntry.queries(name)
+      val fn = SparkEntry.query(name).build
       val p = probeOnce()
       val t0 = System.nanoTime()
       try {
@@ -146,7 +143,7 @@ object Bench {
       // layout-write time, not engine throughput
       val ex =
         if (exempt.isEmpty) ""
-        else exempt.toSeq.sorted.map("\"" + _ + "\"")
+        else exempt.map("\"" + _ + "\"")
           .mkString(""","exempt":[""", ",", "]")
       val norm =
         if (!withNorm || !(sentinelMin > 0)) "" // no sentinel -> no norm map

@@ -74,8 +74,8 @@ object SparkEntry {
   // MARGINAL cost on top of the shared intermediate (label propagation
   // for dedup_clusters, the census for dedup_graph_quality, the split
   // for corpus_leakage_split). corpus_curate_stats has NO marginal work
-  // (the stats are byproducts of the curation itself), so it sits in
-  // benchExempt rather than reporting a meaningless ~0 minimum.
+  // (the stats are byproducts of the curation itself), so it is untimed
+  // rather than reporting a meaningless ~0 minimum.
   //
   // Sessions are WEAK keys: a stopped session's cached frames must not
   // be pinned forever by this static map (test suites and sweeps create
@@ -108,22 +108,6 @@ object SparkEntry {
         s.read.parquet(t(dir, "documents")), "doc_id", "text")._2
     }.asInstanceOf[graft.operators.Curate.CurationStats]
 
-  /** Queries Bench runs once (correctness-gated, rc!=0 on failure) but
-    * keeps out of the timed suite: the lakehouse layout compositions
-    * spend their wall time writing tmp parquet layouts — local disk-write
-    * seconds, not engine throughput — and corpus_curate_stats has no
-    * marginal work beyond the memoized curation (its min-of-passes would
-    * report a meaningless ~0; the curation cost is billed by the
-    * memo-free corpus_curate). Their scale story is measured in
-    * scale_curve.json and pinned in the layout specs; Verify hash-checks
-    * them like any other query. */
-  val benchExempt: Set[String] =
-    Set("lakehouse_pruned_join", "lakehouse_incremental", "lakehouse_compact",
-      "lakehouse_pruned_2d", "lakehouse_pruned_date", "lakehouse_changes",
-      "lakehouse_delete", "lakehouse_upsert", "lakehouse_upsert_large",
-      "lakehouse_replace", "lakehouse_upsert_changes", "lakehouse_evolve",
-      "lakehouse_cdf", "corpus_curate_stats")
-
   /** Flagship: the full reference dataflow on sf0.001 — scan -> CQL
     * projection -> partition-key/token extraction -> ring-aligned
     * repartition + decorated-key sort. Driver smoke-checks rows>0. */
@@ -139,59 +123,140 @@ object SparkEntry {
   // Operator queries. Names map to SURVEY.md §2 rows.
   // ---------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** How a query's rows are checked. */
+  sealed trait Oracle
+  /** DuckDB SQL over the same parquet tables, with the same column names
+    * and semantics; Verify writes it to `oracle_sql.json`. */
+  final case class Sql(text: String) extends Oracle
+  /** No SQL can express the semantics: only the rows are checked, and
+    * `reason` says why. */
+  final case class RowsOnly(reason: String) extends Oracle
+
+  /** One operator query: its builder over `(session, sf dir)`, its oracle,
+    * and whether Bench times it. An untimed query still runs once in Bench
+    * (a failure fails the bench) and is hash-checked by Verify. */
+  final case class Query(name: String, build: (SparkSession, String) => DataFrame,
+      oracle: Oracle, timed: Boolean = true)
+
+  /** Name -> entry; rejects a name given to two entries. */
+  private[graft] def index(qs: Seq[Query]): Map[String, Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    if (dups.nonEmpty) throw new IllegalArgumentException(
+      s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs.map(q => q.name -> q).toMap
+  }
+
+  private lazy val byName: Map[String, Query] = index(queries)
+
+  /** The entries named, in order; throws on any unknown name before a
+    * caller runs anything. */
+  def resolve(names: Seq[String]): Seq[Query] = {
+    val unknown = names.filterNot(byName.contains)
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query names: ${unknown.mkString(", ")}")
+    names.map(byName)
+  }
+
+  def query(name: String): Query = resolve(Seq(name)).head
+
+  /** [[resolve]] over a comma-separated name list. */
+  def resolveCsv(csv: String): Seq[Query] =
+    resolve(csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+
+  /** Every operator query, one entry each; lazy, so the shared oracle
+    * fragments declared below are initialized before it is built. */
+  lazy val queries: Seq[Query] = Seq(
     // S1: projection + predicate pushed to the parquet scan
-    "s1_scan_project" -> ((s, dir) => {
+    Query("s1_scan_project", (s, dir) => {
       s.read.parquet(t(dir, "lineitem"))
         .filter(col("l_shipdate") < lit("1996-01-01").cast(TimestampType) &&
           col("l_quantity") > 30)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"), col("l_shipdate"))
-    }),
+    }, Sql(
+      """SELECT l_orderkey, l_linenumber, l_extendedprice, l_shipdate
+        |FROM lineitem
+        |WHERE l_shipdate < TIMESTAMP '1996-01-01' AND l_quantity > 30""".stripMargin)),
 
     // U1: multi-path input union (UNION ALL semantics)
-    "u1_union_paths" -> ((s, dir) => {
+    Query("u1_union_paths", (s, dir) => {
       val a = s.read.parquet(t(dir, "lineitem"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
       val b = s.read.parquet(t(dir, "lineitem"))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
       a.unionByName(b)
-    }),
+    }, Sql(
+      """SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem
+        |UNION ALL
+        |SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem""".stripMargin)),
 
     // S3/P3: legacy TSV line parse (lines synthesized from orders, three
     // format versions round-robin by key; ts values must fit in int —
     // reference parses them with Integer.valueOf)
-    "s3_legacy_parse" -> ((s, dir) => {
+    Query("s3_legacy_parse", (s, dir) => {
       val lines = legacyLines(s, dir)
       CqlPipeline.parseLegacy(lines, "line", defaultTimestampMillis = 0L)
-    }),
+    },
+    // independent derivation of the parsed legacy fields (not a re-parse)
+    Sql(
+      """SELECT CAST(o_orderkey AS VARCHAR) AS rowkey,
+        |       'status' AS colname,
+        |       o_orderstatus AS value,
+        |       CAST(CASE WHEN o_orderkey % 3 + 1 = 1 THEN 0 ELSE o_custkey END AS BIGINT) AS writetime,
+        |       CAST(CASE WHEN o_orderkey % 3 + 1 = 3 THEN 600 ELSE 0 END AS BIGINT) AS ttl
+        |FROM orders""".stripMargin)),
 
     // P1: AvroToCQL projection — rowkey + ordered values + writetime/ttl
-    "p1_cql_projection" -> ((s, dir) => {
+    Query("p1_cql_projection", (s, dir) => {
       CqlPipeline.toCql(s.read.parquet(t(dir, "orders")),
         Projection(ignore = Seq("o_orderpriority"),
           defaultTimestampMicros = DefaultWritetimeMicros))
-    }),
+    }, Sql(
+      s"""SELECT o_orderkey AS rowkey, o_orderkey, o_custkey, o_orderstatus,
+         |       o_totalprice, o_orderdate,
+         |       CAST($DefaultWritetimeMicros AS BIGINT) AS writetime,
+         |       CAST(0 AS INTEGER) AS ttl
+         |FROM orders""".stripMargin)),
 
     // P2: AvroToThrift wide-to-long cell projection
-    "p2_cells" -> ((s, dir) => {
+    Query("p2_cells", (s, dir) => {
       CqlPipeline.toCells(s.read.parquet(t(dir, "orders")),
         Projection(ignore = Seq("o_totalprice", "o_orderdate"),
           defaultTimestampMicros = DefaultWritetimeMicros))
-    }),
+    }, Sql(
+      s"""SELECT o_orderkey AS rowkey, colname, value,
+         |       CAST($DefaultWritetimeMicros AS BIGINT) AS writetime,
+         |       CAST(0 AS INTEGER) AS ttl
+         |FROM (
+         |  SELECT o_orderkey, 'o_custkey' AS colname, CAST(o_custkey AS VARCHAR) AS value FROM orders
+         |  UNION ALL
+         |  SELECT o_orderkey, 'o_orderstatus', o_orderstatus FROM orders
+         |  UNION ALL
+         |  SELECT o_orderkey, 'o_orderpriority', o_orderpriority FROM orders
+         |)""".stripMargin)),
 
     // F1/F3: wire-format serialization kernel, cross-checked in hex against
     // an independent SQL reconstruction of the byte layout
-    "f1_serialize_hex" -> ((s, dir) => {
+    Query("f1_serialize_hex", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders"))
       o.select(
         col("o_orderkey"),
         hex(cql_serialize(col("o_orderkey"))).as("ser_bigint_hex"),
         hex(cql_serialize(col("o_orderpriority"))).as("ser_string_hex"),
         hex(partition_key(col("o_orderkey"), col("o_orderpriority"))).as("composite_hex"))
-    }),
+    },
+    // independent hex reconstruction of the wire layout: 8-byte BE bigint,
+    // UTF-8 string, and the composite (2-byte len + bytes + 0x00) encoding
+    Sql(
+      """SELECT o_orderkey,
+        |       lpad(hex(o_orderkey), 16, '0') AS ser_bigint_hex,
+        |       hex(o_orderpriority) AS ser_string_hex,
+        |       '0008' || lpad(hex(o_orderkey), 16, '0') || '00' ||
+        |       lpad(hex(length(o_orderpriority)), 4, '0') || hex(o_orderpriority) || '00'
+        |         AS composite_hex
+        |FROM orders""".stripMargin)),
 
     // Aggregation (north-star §2.6): TPC-H Q1 shape
-    "q1_agg" -> ((s, dir) => {
+    Query("q1_agg", (s, dir) => {
       s.read.parquet(t(dir, "lineitem"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -199,10 +264,16 @@ object SparkEntry {
           round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
           round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
           count(lit(1)).as("count_order"))
-    }),
+    }, Sql(
+      """SELECT l_returnflag, l_linestatus,
+        |       round(sum(l_quantity), 2) AS sum_qty,
+        |       round(sum(l_extendedprice), 2) AS sum_base_price,
+        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+        |       count(*) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin)),
 
     // Join + aggregation + top-k (deterministic tiebreak on o_orderkey)
-    "q3_join_topk" -> ((s, dir) => {
+    Query("q3_join_topk", (s, dir) => {
       val c = s.read.parquet(t(dir, "customer")).filter(col("c_mktsegment") === "BUILDING")
       val o = s.read.parquet(t(dir, "orders"))
       val l = s.read.parquet(t(dir, "lineitem"))
@@ -212,10 +283,19 @@ object SparkEntry {
         .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
         .orderBy(col("revenue").desc, col("o_orderkey").asc)
         .limit(10)
-    }),
+    }, Sql(
+      """SELECT o_orderkey, o_orderdate,
+        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |GROUP BY o_orderkey, o_orderdate
+        |ORDER BY revenue DESC, o_orderkey ASC
+        |LIMIT 10""".stripMargin)),
 
     // Window function: top order per customer
-    "q4_window" -> ((s, dir) => {
+    Query("q4_window", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
@@ -223,26 +303,39 @@ object SparkEntry {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-    }),
+    }, Sql(
+      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |         row_number() OVER (PARTITION BY o_custkey
+        |                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
+        |  FROM orders
+        |) WHERE rn = 1""".stripMargin)),
 
     // Distinct aggregation
-    "q5_distinct" -> ((s, dir) => {
+    Query("q5_distinct", (s, dir) => {
       s.read.parquet(t(dir, "customer"))
         .groupBy(col("c_mktsegment"))
         .agg(countDistinct(col("c_nationkey")).as("n_nations"),
           count(lit(1)).as("n_customers"))
-    }),
+    }, Sql(
+      """SELECT c_mktsegment,
+        |       count(DISTINCT c_nationkey) AS n_nations,
+        |       count(*) AS n_customers
+        |FROM customer GROUP BY c_mktsegment""".stripMargin)),
 
     // Rollup (grouping sets)
-    "q6_rollup" -> ((s, dir) => {
+    Query("q6_rollup", (s, dir) => {
       s.read.parquet(t(dir, "lineitem"))
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(round(sum(col("l_quantity")), 2).as("sum_qty"),
           count(lit(1)).as("n"))
-    }),
+    }, Sql(
+      """SELECT l_returnflag, l_linestatus,
+        |       round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin)),
 
     // Multi-way join with join-reorder surface (TPC-H Q5 shape)
-    "q15_revenue_by_nation" -> ((s, dir) => {
+    Query("q15_revenue_by_nation", (s, dir) => {
       val region = s.read.parquet(t(dir, "region")).filter(col("r_name") === "ASIA")
       val nation = s.read.parquet(t(dir, "nation"))
       val customer = s.read.parquet(t(dir, "customer"))
@@ -256,11 +349,21 @@ object SparkEntry {
         .groupBy(col("n_name"))
         .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
           .as("revenue"), count(lit(1)).as("n_items"))
-    }),
+    }, Sql(
+      """SELECT n_name,
+        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+        |       count(*) AS n_items
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |GROUP BY n_name""".stripMargin)),
 
     // Correlated scalar subquery (TPC-H Q17 shape — Catalyst decorrelates
     // it into an aggregate+join; the reference had no optimizer at all)
-    "q16_correlated" -> ((s, dir) => {
+    Query("q16_correlated", (s, dir) => {
       s.read.parquet(t(dir, "lineitem")).createOrReplaceTempView("lineitem_v")
       s.read.parquet(t(dir, "part")).createOrReplaceTempView("part_v")
       s.sql(
@@ -270,47 +373,65 @@ object SparkEntry {
           |WHERE l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
           |                    FROM lineitem_v l2 WHERE l2.l_partkey = p_partkey)
           |GROUP BY p_brand""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT p_brand, round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly,
+        |       count(*) AS n
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
+        |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
+        |GROUP BY p_brand""".stripMargin)),
 
     // Cube (full grouping-set lattice)
-    "q6b_cube" -> ((s, dir) => {
+    Query("q6b_cube", (s, dir) => {
       s.read.parquet(t(dir, "lineitem"))
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(round(sum(col("l_extendedprice")), 2).as("sum_price"),
           count(lit(1)).as("n"))
-    }),
+    }, Sql(
+      """SELECT l_returnflag, l_linestatus,
+        |       round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin)),
 
     // HAVING (post-aggregation predicate)
-    "q17_having" -> ((s, dir) => {
+    Query("q17_having", (s, dir) => {
       s.read.parquet(t(dir, "orders"))
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"),
           round(sum(col("o_totalprice")), 2).as("total_spend"))
         .filter(col("n_orders") >= 12)
-    }),
+    }, Sql(
+      """SELECT o_custkey, count(*) AS n_orders,
+        |       round(sum(o_totalprice), 2) AS total_spend
+        |FROM orders GROUP BY o_custkey HAVING count(*) >= 12""".stripMargin)),
 
     // Semi join (EXISTS)
-    "q7_exists" -> ((s, dir) => {
+    Query("q7_exists", (s, dir) => {
       val c = s.read.parquet(t(dir, "customer"))
       val o = s.read.parquet(t(dir, "orders")).filter(col("o_totalprice") > 200000)
       c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name"))
-    }),
+    }, Sql(
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)""".stripMargin)),
 
     // Anti join (NOT EXISTS)
-    "q8_not_exists" -> ((s, dir) => {
+    Query("q8_not_exists", (s, dir) => {
       val c = s.read.parquet(t(dir, "customer"))
       val o = s.read.parquet(t(dir, "orders")).filter(col("o_totalprice") > 300000)
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
-    }),
+    }, Sql(
+      """SELECT c_custkey, c_name FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |                  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)""".stripMargin)),
 
     // §2.5 skew path: the salted join must land on the IDENTICAL row set
     // as the plain inner join (the oracle IS the plain join) — salting
     // spreads each hot key over `factor` tasks for the case AQE's skew
     // split can't fix (a shuffled build side). Deterministic hash salt,
     // so retried tasks route rows identically.
-    "q34_salted_join" -> ((s, dir) => {
+    Query("q34_salted_join", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders"))
       val c = s.read.parquet(t(dir, "customer"))
         .withColumnRenamed("c_custkey", "o_custkey")
@@ -318,32 +439,44 @@ object SparkEntry {
       graft.operators.Skew.saltedJoin(o, c, "o_custkey", factor = 4)
         .select(col("o_orderkey"), col("o_custkey"), col("c_name"),
           round(col("o_totalprice"), 2).as("totalprice"))
-    }),
+    },
+    // the salted forms must be INDISTINGUISHABLE from the plain ones —
+    // the oracle is the unsalted join/aggregation
+    Sql(
+      """SELECT o.o_orderkey, o.o_custkey, c.c_name,
+        |       round(o.o_totalprice, 2) AS totalprice
+        |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey""".stripMargin)),
 
     // two-phase salted aggregation == plain aggregation (the explicit
     // form for states partial agg can't reduce when one key dominates)
-    "q35_salted_agg" -> ((s, dir) => {
+    Query("q35_salted_agg", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders"))
       graft.operators.Skew
         .saltedCountSum(o, Seq("o_orderstatus"), "o_totalprice", factor = 4)
         .select(col("o_orderstatus"), col("n"),
           round(col("sum_value"), 2).as("sum_value"))
-    }),
+    }, Sql(
+      """SELECT o_orderstatus, count(*) AS n,
+        |       round(sum(o_totalprice), 2) AS sum_value
+        |FROM orders GROUP BY 1""".stripMargin)),
 
     // Events: hourly windowed aggregation (event time normalized to
     // epoch-micros whatever type the parquet `ts` column reads as — see
     // core.EventTime)
-    "q9_events_hourly" -> ((s, dir) => {
+    Query("q9_events_hourly", (s, dir) => {
       graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events")))
         .withColumn("hour_epoch", expr("ts_us div 3600000000") * 3600)
         .groupBy(col("hour_epoch"), col("event_type"))
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-    }),
+    }, Sql(
+      """SELECT epoch_ns(ts) // 3600000000000 * 3600 AS hour_epoch, event_type,
+        |       count(*) AS n, round(sum(value), 2) AS sum_value
+        |FROM events GROUP BY 1, 2""".stripMargin)),
 
     // Per-type value trend over time: OLS slope/intercept/r² with x =
     // days since the corpus-wide first event (O(10) magnitudes, so the
     // moment cancellations sit far above round-6)
-    "events_trend" -> ((s, dir) => {
+    Query("events_trend", (s, dir) => {
       val e = graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events")))
       val minRow = e.agg(min(col("ts_us"))).head()
       require(!minRow.isNullAt(0), "events_trend: events table is empty")
@@ -352,33 +485,104 @@ object SparkEntry {
         e.withColumn("x_days",
           (col("ts_us") - lit(minUs)) / lit(86400000000.0)),
         "event_type", "x_days", "value")
-    }),
+    },
+    // identical moments + identical closed forms; the min-ts offset is
+    // recomputed in SQL exactly as the Spark side's bounds job does
+    Sql(
+      """WITH e AS (
+        |  SELECT event_type,
+        |    (epoch_ns(ts) // 1000 -
+        |      (SELECT min(epoch_ns(ts) // 1000) FROM events)) / 86400000000.0 AS x,
+        |    CAST(value AS DOUBLE) AS y
+        |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
+        |), m AS (
+        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+        |    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
+        |    sum(x * x) AS sxx, sum(y * y) AS syy
+        |  FROM e GROUP BY 1
+        |)
+        |SELECT event_type, n,
+        |  CASE WHEN n >= 2 AND n * sxx - sx * sx > 0
+        |    THEN round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) + 0.0
+        |  END AS slope,
+        |  CASE WHEN n >= 2 AND n * sxx - sx * sx > 0
+        |    THEN round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx)
+        |               / n, 6) + 0.0
+        |  END AS intercept,
+        |  CASE WHEN n >= 2 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
+        |    THEN round((n * sxy - sx * sy) * (n * sxy - sx * sy) /
+        |               ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
+        |  END AS r2
+        |FROM m""".stripMargin)),
 
     // Welch t-test per event type between an md5-free deterministic A/B
     // split (user_id parity); one moments aggregation, closed-form stats
-    "events_ab_ttest" -> ((s, dir) => {
+    Query("events_ab_ttest", (s, dir) => {
       val ev = s.read.parquet(t(dir, "events"))
         .withColumn("variant",
           when(col("user_id") % 2 === 0, lit("A")).otherwise(lit("B")))
       graft.operators.Stats.welchTTest(
         ev, "event_type", "variant", "value", "A", "B")
-    }),
+    },
+    // identical moment formulas; sums differ only in fp order (round-4)
+    Sql(
+      """WITH e AS (
+        |  SELECT event_type,
+        |         CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS variant,
+        |         CAST(value AS DOUBLE) AS x
+        |  FROM events WHERE value IS NOT NULL
+        |), m AS (
+        |  SELECT event_type,
+        |    CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+        |    sum(CASE WHEN variant = 'A' THEN x ELSE 0 END) AS s_a,
+        |    sum(CASE WHEN variant = 'A' THEN x * x ELSE 0 END) AS q_a,
+        |    CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+        |    sum(CASE WHEN variant = 'B' THEN x ELSE 0 END) AS s_b,
+        |    sum(CASE WHEN variant = 'B' THEN x * x ELSE 0 END) AS q_b
+        |  FROM e GROUP BY 1
+        |), d AS (
+        |  SELECT event_type, n_a, n_b, s_a / n_a AS ma, s_b / n_b AS mb,
+        |    (q_a - n_a * (s_a / n_a) * (s_a / n_a)) / (n_a - 1) AS va,
+        |    (q_b - n_b * (s_b / n_b) * (s_b / n_b)) / (n_b - 1) AS vb
+        |  FROM m
+        |)
+        |SELECT event_type, n_a, n_b,
+        |  round(ma, 4) AS mean_a, round(mb, 4) AS mean_b,
+        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND va / n_a + vb / n_b > 0
+        |    THEN round((ma - mb) / sqrt(va / n_a + vb / n_b), 4) END AS t,
+        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND va / n_a + vb / n_b > 0
+        |    THEN round((va / n_a + vb / n_b) * (va / n_a + vb / n_b) /
+        |      ((va / n_a) * (va / n_a) / (n_a - 1)
+        |        + (vb / n_b) * (vb / n_b) / (n_b - 1)), 4) END AS df
+        |FROM d""".stripMargin)),
 
     // OHLC hourly bars per event type: open/close via min_by/max_by over
     // the (unique) event time — one map-side-combinable aggregation, no
     // window
-    "events_ohlc" -> ((s, dir) => {
+    Query("events_ohlc", (s, dir) => {
       graft.operators.Resample.ohlcBars(
         graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events"))),
         Seq("event_type"), "ts_us", "value", bucketMicros = 3600000000L)
-    }),
+    },
+    // arg_min/arg_max over the unique epoch-micros time = min_by/max_by
+    Sql(
+      """WITH e AS (
+        |  SELECT event_type, epoch_ns(ts) // 1000 AS ts_us, value FROM events
+        |)
+        |SELECT event_type,
+        |       ts_us // 3600000000 * 3600000000 AS bucket_us,
+        |       arg_min(value, ts_us) AS open,
+        |       arg_max(value, ts_us) AS close,
+        |       max(value) AS high, min(value) AS low,
+        |       count(*) AS n, round(sum(value), 2) AS sum_value
+        |FROM e GROUP BY 1, 2""".stripMargin)),
 
     // Volume anomaly screen: hourly counts per type, each hour z-scored
     // against its type's TRAILING-24h window (RANGE frame over the hour
     // epoch, current hour excluded so a spike can't mask itself);
     // |z| > 3 flags. Window partitions by type — state bounded by 24
     // rows per partition stream
-    "events_anomaly" -> ((s, dir) => {
+    Query("events_anomaly", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val hourly = graft.core.EventTime
         .withTsUs(s.read.parquet(t(dir, "events")))
@@ -396,37 +600,68 @@ object SparkEntry {
         // hash-checked value (the embed_outliers convention)
         .select(col("hour_epoch"), col("event_type"), col("n"), col("z"),
           (abs(col("z")) > 3.0).as("is_anomaly"))
-    }),
+    },
+    // same trailing-24h RANGE frame; is_anomaly derives from the rounded
+    // z on both sides
+    Sql(
+      """WITH hourly AS (
+        |  SELECT epoch_us(ts) // 3600000000 * 3600 AS hour_epoch,
+        |         event_type, count(*) AS n
+        |  FROM events GROUP BY 1, 2
+        |), scored AS (
+        |  SELECT hour_epoch, event_type, n,
+        |         avg(n) OVER tw AS mu, stddev_pop(n) OVER tw AS sd
+        |  FROM hourly
+        |  WINDOW tw AS (PARTITION BY event_type ORDER BY hour_epoch
+        |                RANGE BETWEEN 86400 PRECEDING AND 3600 PRECEDING)
+        |)
+        |SELECT hour_epoch, event_type, n,
+        |       round((n - mu) / sd, 4) AS z,
+        |       abs(round((n - mu) / sd, 4)) > 3.0 AS is_anomaly
+        |FROM scored WHERE sd > 0""".stripMargin)),
 
-    // Per-group feature normalization: winsorize to the group's
-    // [p05, p95] and z-score against the group's moments — one bounded
-    // aggregation (5 values per event_type) broadcast back onto the
-    // scan; rows never shuffle. Exact percentile anchors the oracle
-    // (the q20 contract); a 100 TB run swaps approx_percentile in
     // The flagship curation composition, hash-checked END TO END: quality
     // gate -> langid gate -> exact dedup (min-id per fingerprint) ->
     // LSH near-dup clusters (min-id survivor). The oracle re-derives the
     // whole chain from the proven per-stage fragments
-    "corpus_curate" -> ((s, dir) => {
+    Query("corpus_curate", (s, dir) => {
       val (curated, _) = graft.operators.Curate.curateCorpus(
         s.read.parquet(t(dir, "documents")), "doc_id", "text")
       curated.select(col("doc_id"), col("source"), col("quality"),
         col("predicted_lang"))
-    }),
+    }, Sql(curateCtes +
+      """
+        |SELECT doc_id, source, quality, predicted_lang
+        |FROM exact
+        |WHERE doc_id NOT IN (SELECT doc_id FROM losers)""".stripMargin)),
 
     // the composition's funnel report (input -> quality -> lang -> exact
     // -> near-dup counts) as a one-row frame, oracle-checked number for
-    // number
-    "corpus_curate_stats" -> ((s, dir) => {
+    // number. Untimed: the stats are byproducts of the memoized curation,
+    // so a min-of-passes would read ~0; the memo-free corpus_curate bills
+    // the curation.
+    Query("corpus_curate_stats", (s, dir) => {
       val st = curateStatsShared(s, dir)
       import s.implicits._
       Seq((st.input, st.afterQuality, st.afterLang, st.afterExact,
         st.afterNearDup))
         .toDF("input", "after_quality", "after_lang", "after_exact",
           "after_near_dup")
-    }),
+    }, Sql(curateCtes +
+      """
+        |SELECT (SELECT count(*) FROM documents) AS input,
+        |  (SELECT count(*) FROM ql WHERE quality >= 0.3) AS after_quality,
+        |  (SELECT count(*) FROM kept) AS after_lang,
+        |  (SELECT count(DISTINCT fp) FROM fps) AS after_exact,
+        |  (SELECT count(*) FROM exact
+        |   WHERE doc_id NOT IN (SELECT doc_id FROM losers)) AS after_near_dup""".stripMargin), timed = false),
 
-    "curate_normalize" -> ((s, dir) => {
+    // Per-group feature normalization: winsorize to the group's
+    // [p05, p95] and z-score against the group's moments — one bounded
+    // aggregation (5 values per event_type) broadcast back onto the
+    // scan; rows never shuffle. Exact percentile anchors the oracle
+    // (the q20 contract).
+    Query("curate_normalize", (s, dir) => {
       val e = graft.core.EventTime
         .readEventsTsUsAs(s.read.parquet(t(dir, "events")), "ts")
       val stats = e.groupBy(col("event_type")).agg(
@@ -442,12 +677,27 @@ object SparkEntry {
           // NULL on BOTH engines (Spark's /0 is NULL, DuckDB's is inf)
           when(col("sd") > 0,
             round((col("value") - col("mu")) / col("sd"), 4)).as("z"))
-    }),
+    },
+    // quantile_cont == Spark percentile (the q20 parity); a value within
+    // one ulp of a clip bound rounds to the same 4 decimals either way
+    Sql(
+      """WITH st AS (
+        |  SELECT event_type,
+        |         quantile_cont(value, 0.05) AS lo,
+        |         quantile_cont(value, 0.95) AS hi,
+        |         avg(value) AS mu, stddev_pop(value) AS sd
+        |  FROM events GROUP BY 1
+        |)
+        |SELECT e.event_id, e.event_type,
+        |       round(greatest(st.lo, least(st.hi, e.value)), 4) AS v_winsor,
+        |       CASE WHEN st.sd > 0
+        |            THEN round((e.value - st.mu) / st.sd, 4) END AS z
+        |FROM events e JOIN st USING (event_type)""".stripMargin)),
 
     // Hopping (sliding) event-time windows — the built-in `window()`
     // form with a 1h width / 15min slide (each event lands in exactly 4
     // windows)
-    "q38_sliding_window" -> ((s, dir) => {
+    Query("q38_sliding_window", (s, dir) => {
       val e = graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events")))
       e.select(
           window(timestamp_micros(col("ts_us")), "1 hour", "15 minutes").as("w"),
@@ -456,7 +706,24 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
         .select(expr("unix_micros(w.start) div 1000000").as("win_start_sec"),
           col("event_type"), col("n"), col("sum_value"))
-    }),
+    },
+    // each event expands to its 4 hop-aligned windows: start = 15min-
+    // aligned floor minus k slides, kept while start + 1h > t — exactly
+    // Spark's [start, start + window) membership
+    Sql(
+      """WITH ev AS (
+        |  SELECT epoch_us(ts) AS tu, event_type, value FROM events
+        |), k AS (SELECT unnest(range(0, 4)) AS k
+        |), w AS (
+        |  SELECT (tu // 900000000) * 900000000 - k.k * 900000000 AS ws,
+        |         event_type, value
+        |  FROM ev CROSS JOIN k
+        |  WHERE (tu // 900000000) * 900000000 - k.k * 900000000
+        |        + 3600000000 > tu
+        |)
+        |SELECT ws // 1000000 AS win_start_sec, event_type,
+        |       count(*) AS n, round(sum(value), 2) AS sum_value
+        |FROM w GROUP BY 1, 2""".stripMargin)),
 
     // P9 + G1/G2: partition-key bytes, token, ring bucket (no SQL oracle —
     // token math is validated against Cassandra's known hashes in tests)
@@ -465,24 +732,39 @@ object SparkEntry {
     // bytes + 0x00 per component) across bigint/int32/string components.
     // Token/bucket values are pinned against reference hashes in
     // KernelSpec/CodegenSpec (murmur3 is not DuckDB-reconstructable).
-    "p9_partition_key" -> ((s, dir) => {
+    Query("p9_partition_key", (s, dir) => {
       val c = s.read.parquet(t(dir, "customer"))
       c.select(col("c_custkey"),
         hex(partition_key(col("c_custkey"))).as("pk_single_hex"),
         hex(partition_key(col("c_custkey"), col("c_mktsegment"))).as("pk_comp2_hex"),
         hex(partition_key(col("c_custkey"), col("c_nationkey"), col("c_name"))).as("pk_comp3_hex"))
-    }),
+    },
+    // independent reconstruction of raw + CompositeType key framing over
+    // bigint / int32 / string components (same layout family as f1)
+    Sql(
+      """SELECT c_custkey,
+        |       lpad(hex(c_custkey), 16, '0') AS pk_single_hex,
+        |       '0008' || lpad(hex(c_custkey), 16, '0') || '00' ||
+        |       lpad(hex(strlen(c_mktsegment)), 4, '0') || hex(c_mktsegment) || '00'
+        |         AS pk_comp2_hex,
+        |       '0008' || lpad(hex(c_custkey), 16, '0') || '00' ||
+        |       '0004' || lpad(hex(c_nationkey), 8, '0') || '00' ||
+        |       lpad(hex(strlen(c_name)), 4, '0') || hex(c_name) || '00'
+        |         AS pk_comp3_hex
+        |FROM customer""".stripMargin)),
 
     // G1-G3: ring-aligned repartition + decorated-key sort (shape check:
     // per-bucket row counts and token ranges; sortedness proven in tests)
-    "g1_ring_align" -> ((s, dir) => {
+    Query("g1_ring_align", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders"))
       val projected = CqlPipeline.toCql(o,
         Projection(defaultTimestampMicros = DefaultWritetimeMicros))
       CqlPipeline.alignToRing(projected, Seq("rowkey"), numBuckets = 8)
         .groupBy(col("_bucket")).agg(count(lit(1)).as("n"),
           min(col("_token")).as("min_token"), max(col("_token")).as("max_token"))
-    }),
+    }, RowsOnly("no DuckDB expression computes Cassandra's sign-extended " +
+      "Murmur3 x64_128 token; KernelSpec pins the byte-exact token against " +
+      "reference-derived golden hashes instead")),
 
     // G2: same ring alignment under RandomPartitioner (MD5/BigIntegerToken
     // path, CassandraPartitioner.java:46-47) — tokens ride as canonical
@@ -492,7 +774,7 @@ object SparkEntry {
     // abs(int128_be(md5(utf8(key)))) with HUGEINT arithmetic, so this is
     // a full value check, not a rows-only shape check (g1's Murmur3
     // variant stays rows-only — no DuckDB expression computes it).
-    "g2_random_ring_align" -> ((s, dir) => {
+    Query("g2_random_ring_align", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders"))
         .withColumn("o_orderkey", col("o_orderkey").cast("string"))
       val projected = CqlPipeline.toCql(o,
@@ -502,30 +784,88 @@ object SparkEntry {
         .groupBy(col("_bucket")).agg(count(lit(1)).as("n"),
           hex(min(col("_token"))).as("min_token_hex"),
           hex(max(col("_token"))).as("max_token_hex"))
-    }),
+    },
+    // RandomPartitioner ring alignment, reconstructed from first
+    // principles: token = abs(int128_be(md5(utf8(rowkey)))) via HUGEINT
+    // arithmetic (the signed big-endian int128 is upper_u64 adjusted by
+    // 2^64 when its sign bit is set, times 2^64, plus lower_u64);
+    // bucket = token / ceil(2^127/8) (= 2^124), clamped to the last
+    // bucket; hex = the canonical 16-byte big-endian form, zero-padded
+    Sql(
+      """WITH tok AS (
+        |  SELECT (abs(
+        |    (CAST(('0x'||substr(md5(CAST(o_orderkey AS VARCHAR)),1,16))::UBIGINT AS HUGEINT)
+        |      - (CASE WHEN ('0x'||substr(md5(CAST(o_orderkey AS VARCHAR)),1,16))::UBIGINT >= 9223372036854775808
+        |              THEN 18446744073709551616 ELSE 0 END))
+        |    * 18446744073709551616
+        |    + CAST(('0x'||substr(md5(CAST(o_orderkey AS VARCHAR)),17,16))::UBIGINT AS HUGEINT)
+        |  )) AS token
+        |  FROM orders
+        |)
+        |SELECT CAST(least(token // 21267647932558653966460912964485513216, 7) AS INTEGER) AS _bucket,
+        |       count(*) AS n,
+        |       lpad(hex(CAST(min(token) // 18446744073709551616 AS BIGINT)),16,'0')
+        |         || lpad(hex(CAST(min(token) % 18446744073709551616 AS UBIGINT)),16,'0') AS min_token_hex,
+        |       lpad(hex(CAST(max(token) // 18446744073709551616 AS BIGINT)),16,'0')
+        |         || lpad(hex(CAST(max(token) % 18446744073709551616 AS UBIGINT)),16,'0') AS max_token_hex
+        |FROM tok
+        |GROUP BY 1""".stripMargin)),
 
     // ------------------- LLM-data-pipeline operators -------------------
 
     // Token counting (whitespace + BPE-ish pre-tokenizer) + fingerprinting
-    "text_tokens" -> ((s, dir) => {
+    Query("text_tokens", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       d.select(col("doc_id"),
         graft.operators.TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         graft.operators.TextAnalysis.bpeTokenCount(col("text")).as("n_bpe_tokens"),
         graft.operators.TextAnalysis.fingerprint(col("text")).as("fingerprint"))
-    }),
+    }, Sql(
+      ("""SELECT doc_id,
+        |       CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
+        |       CAST(len(regexp_extract_all(text, '""" +
+        graft.operators.TextAnalysis.BpePattern.replace("'", "''") +
+        """', 0)) AS BIGINT) AS n_bpe_tokens,
+        |       md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fingerprint
+        |FROM documents""").stripMargin)),
 
     // Encoding-quality screen over the corpus with deterministic
     // corruption planted on every 7th doc (the synthetic corpus is
     // clean, so the plant makes the oracle exercise the positive path:
     // one double-encoding pair, one U+FFFD, one C0 control)
-    "text_encoding" -> ((s, dir) => {
+    Query("text_encoding", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
         .withColumn("t2", when(col("doc_id") % 7 === 0,
           concat(col("text"), lit(" Caf\u00c3\u00a9 \ufffd\u0007")))
           .otherwise(col("text")))
       graft.operators.TextAnalysis.encodingQuality(d, "doc_id", "t2")
-    }),
+    },
+    // same plant (chr forms of U+00C3 U+00A9, U+FFFD, BEL), same RE2
+    // patterns; ratio is one double division of exact integer counts
+    Sql(
+      """WITH src AS (
+        |  SELECT doc_id,
+        |         CASE WHEN doc_id % 7 = 0
+        |              THEN text || ' Caf' || chr(195) || chr(169) || ' '
+        |                        || chr(65533) || chr(7)
+        |              ELSE text END AS t
+        |  FROM documents
+        |), c AS (
+        |  SELECT doc_id,
+        |    CAST(len(regexp_extract_all(t, '\x{FFFD}')) AS BIGINT) AS n_replacement,
+        |    CAST(len(regexp_extract_all(t, '[\x{0080}-\x{009F}]')) AS BIGINT) AS n_c1,
+        |    CAST(len(regexp_extract_all(t, '[\x{00C2}-\x{00C3}][\x{0080}-\x{00BF}]')) AS BIGINT) AS n_mojibake,
+        |    CAST(len(regexp_extract_all(t, '[\x{0001}-\x{0008}\x{000B}\x{000C}\x{000E}-\x{001F}]')) AS BIGINT) AS n_ctl,
+        |    CAST(length(t) AS BIGINT) AS n_chars
+        |  FROM src
+        |)
+        |SELECT doc_id, n_replacement, n_c1, n_mojibake, n_ctl, n_chars,
+        |       round((n_replacement + n_c1 + n_mojibake + n_ctl)::DOUBLE
+        |             / greatest(n_chars, 1), 6) AS bad_ratio,
+        |       (n_replacement > 0 OR
+        |        round((n_replacement + n_c1 + n_mojibake + n_ctl)::DOUBLE
+        |              / greatest(n_chars, 1), 6) >= 0.001) AS flag_encoding
+        |FROM c""".stripMargin)),
 
     // Sentence-shape stats: terminal-run count, C4's ends-with-terminal-
     // punctuation rule, mean sentence length in tokens. The synthetic
@@ -533,26 +873,68 @@ object SparkEntry {
     // planted deterministically (a period after every 5th word; every
     // 3rd doc also ends terminally) — the screen's positive AND negative
     // paths both reach the oracle
-    "text_sentences" -> ((s, dir) => {
+    Query("text_sentences", (s, dir) => {
       val punct = regexp_replace(col("text"),
         "(\\w+ \\w+ \\w+ \\w+ \\w+) ", "$1. ")
       val d = s.read.parquet(t(dir, "documents"))
         .withColumn("t2", when(col("doc_id") % 3 === 0,
           concat(rtrim(punct), lit("."))).otherwise(punct))
       graft.operators.TextAnalysis.sentenceStats(d, "doc_id", "t2")
-    }),
+    }, Sql(
+      """WITH src AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 3 = 0
+        |      THEN rtrim(regexp_replace(text,
+        |             '(\w+ \w+ \w+ \w+ \w+) ', '\1. ', 'g')) || '.'
+        |      ELSE regexp_replace(text,
+        |             '(\w+ \w+ \w+ \w+ \w+) ', '\1. ', 'g') END AS t
+        |  FROM documents
+        |), c AS (
+        |  SELECT doc_id,
+        |    CAST(len(regexp_extract_all(t, '[.!?]+(\s|\z)')) AS BIGINT) AS n_sentences,
+        |    CAST(len(string_split_regex(trim(t), '\s+')) AS BIGINT) AS n_tokens,
+        |    regexp_matches(rtrim(t), '[.!?]["'']?\z') AS ends_terminal
+        |  FROM src
+        |)
+        |SELECT doc_id, n_sentences, n_tokens, ends_terminal,
+        |       round(n_tokens::DOUBLE / greatest(n_sentences, 1), 4)
+        |         AS avg_sentence_tokens
+        |FROM c""".stripMargin)),
 
     // Rolling-hash document fingerprinting (winnowing over char 8-grams,
     // window 4): per-doc fingerprint-set summary, codegen'd kernels
     // Passage-level dedup candidates: fingerprints shared across >= 2
     // documents (the step between whole-doc LSH and substring dedup)
-    "text_shared_passages" -> ((s, dir) => {
+    Query("text_shared_passages", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.TextAnalysis.sharedPassages(d, "doc_id", "text",
         k = 8, w = 4, minDocs = 2)
-    }),
+    },
+    // the winnow pipeline again, then unnest + group: per-doc
+    // fingerprints are distinct, so count(*) is the distinct-doc count
+    Sql(
+      """WITH norm AS (
+        |  SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t FROM documents
+        |), hs AS (
+        |  SELECT doc_id,
+        |    [CAST('0x' || substr(md5(substr(t, CAST(i AS INTEGER), 8)), 1, 8) AS BIGINT)
+        |     for i in range(1, len(t) - 8 + 2)] AS hs
+        |  FROM norm WHERE len(t) >= 8
+        |), fps AS (
+        |  SELECT doc_id, list_sort(list_distinct(
+        |    CASE WHEN len(hs) >= 4 THEN
+        |      [list_min(hs[CAST(i AS INTEGER):CAST(i + 3 AS INTEGER)])
+        |       for i in range(1, len(hs) - 4 + 2)]
+        |    ELSE [list_min(hs)] END)) AS f
+        |  FROM hs
+        |), ex AS (
+        |  SELECT doc_id, unnest(f) AS fp FROM fps
+        |)
+        |SELECT fp, count(*) AS n_docs,
+        |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
+        |FROM ex GROUP BY fp HAVING count(*) >= 2""".stripMargin)),
 
-    "text_winnow" -> ((s, dir) => {
+    Query("text_winnow", (s, dir) => {
       // widen: the winnow kernel (char-gram hashes + sliding min) is the
       // heaviest pure-map scan in the suite — one pruned-row exchange
       // buys 32-way kernel execution (identity at production layouts)
@@ -570,123 +952,319 @@ object SparkEntry {
           // the higher-order aggregate() fell back to interpreted eval
           // and re-paid the winnow kernel for each sibling column
           array_sum_long(col("fps")).as("sum_fp"))
-    }),
+    }, Sql(
+      """WITH norm AS (
+        |  SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t FROM documents
+        |), hs AS (
+        |  SELECT doc_id,
+        |    [CAST('0x' || substr(md5(substr(t, CAST(i AS INTEGER), 8)), 1, 8) AS BIGINT)
+        |     for i in range(1, len(t) - 8 + 2)] AS hs
+        |  FROM norm WHERE len(t) >= 8
+        |), fps AS (
+        |  SELECT doc_id, list_sort(list_distinct(
+        |    CASE WHEN len(hs) >= 4 THEN
+        |      [list_min(hs[CAST(i AS INTEGER):CAST(i + 3 AS INTEGER)])
+        |       for i in range(1, len(hs) - 4 + 2)]
+        |    ELSE [list_min(hs)] END)) AS f
+        |  FROM hs
+        |)
+        |SELECT doc_id, CAST(len(f) AS BIGINT) AS n_fp,
+        |       f[1] AS min_fp, f[len(f)] AS max_fp,
+        |       CAST(list_sum(f) AS BIGINT) AS sum_fp
+        |FROM fps WHERE len(f) > 0""".stripMargin)),
 
     // Quality scoring (length/alpha/stopword priors)
-    "text_quality" -> ((s, dir) => {
+    Query("text_quality", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.TextAnalysis.withQuality(d, "text")
         .select(col("doc_id"), col("n_tokens"), col("alpha_ratio"),
           col("stopword_ratio"), col("quality"))
-    }),
+    }, Sql(
+      """SELECT doc_id,
+        |  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
+        |  round(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) / greatest(len(text), 1), 4) AS alpha_ratio,
+        |  round(len([x for x in string_split_regex(trim(text), '\s+')
+        |             if x in ('the','a','of','and','is','to','in')])
+        |        / greatest(len(string_split_regex(trim(text), '\s+')), 1), 4) AS stopword_ratio,
+        |  round(least(1.0, len(string_split_regex(trim(text), '\s+')) / 100.0) * 0.5
+        |        + (len(regexp_replace(text, '[^A-Za-z]', '', 'g')) / greatest(len(text), 1)) * 0.3
+        |        + (len([x for x in string_split_regex(trim(text), '\s+')
+        |                if x in ('the','a','of','and','is','to','in')])
+        |           / greatest(len(string_split_regex(trim(text), '\s+')), 1)) * 0.2, 4) AS quality
+        |FROM documents""".stripMargin)),
 
     // SimHash near-dup PAIRS via the exact banded Hamming join (pigeonhole
     // over four 15-bit bands recovers every hamming<=3 pair with no
     // all-pairs comparison; the oracle does the all-pairs form)
-    "dedup_simhash_pairs" -> ((s, dir) => {
+    Query("dedup_simhash_pairs", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Dedup.simhashBandPairs(d, "doc_id", "text", maxHamming = 3)
-    }),
+    },
+    // all-pairs reconstruction of the banded form (exact for hamming<=3)
+    Sql(
+      """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents
+        |), h AS (
+        |  SELECT doc_id, CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) AS h FROM toks
+        |), votes AS (
+        |  SELECT doc_id, b,
+        |         sum(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
+        |  FROM h, range(0, 60) t(b) GROUP BY doc_id, b
+        |), sig AS (
+        |  SELECT doc_id,
+        |         CAST(sum(CASE WHEN v > 0 THEN CAST(1 AS BIGINT) << CAST(b AS INTEGER) ELSE 0 END) AS BIGINT) AS s
+        |  FROM votes GROUP BY doc_id
+        |)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |       CAST(bit_count(xor(a.s, b.s)) AS INTEGER) AS hamming
+        |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.s, b.s)) <= 3""".stripMargin)),
 
     // Deterministic corpus split + per-source mixing: md5-bucket
     // assignment reproducible on any engine (vs seeded sample()), so
     // train/val/test membership survives re-runs and is hash-checkable
-    "corpus_split" -> ((s, dir) => {
+    Query("corpus_split", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.withSplit(d, "doc_id")
         .withColumn("kept", graft.operators.Curate.mixKeep(
           "doc_id", "source",
           Map("src0" -> 300, "src1" -> 300, "src2" -> 300), defaultPerMille = 800))
         .select(col("doc_id"), col("source"), col("split"), col("kept"))
-    }),
+    },
+    // same md5-bucket arithmetic, reconstructed independently
+    Sql(
+      """SELECT doc_id, source,
+        |  CASE WHEN CAST('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 900 THEN 'train'
+        |       WHEN CAST('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 950 THEN 'val'
+        |       ELSE 'test' END AS split,
+        |  CAST('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000
+        |    < CASE WHEN source IN ('src0','src1','src2') THEN 300 ELSE 800 END AS kept
+        |FROM documents""".stripMargin)),
 
     // Sequence packing: global token offsets + fixed-budget block ids via
     // the distributed two-phase prefix sum (the window-over-global-order
     // form the oracle uses would be a one-partition bottleneck at scale)
-    "corpus_pack" -> ((s, dir) => {
+    Query("corpus_pack", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.packBlocks(d, "doc_id", "text", blockTokens = 512L)
-    }),
+    },
+    // the naive global-window form IS the oracle — the point of the
+    // distributed prefix sum is producing identical numbers without it
+    Sql(
+      """WITH t AS (
+        |  SELECT doc_id, CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n
+        |  FROM documents
+        |)
+        |SELECT doc_id, n AS n_tokens,
+        |  CAST(COALESCE(sum(n) OVER (ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS token_offset,
+        |  CAST(COALESCE(sum(n) OVER (ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS BIGINT) AS block_id
+        |FROM t""".stripMargin)),
 
     // Benchmark decontamination: corpus docs sharing any word 3-gram with
     // the eval set (doc_id <= 5 stands in for a benchmark); eval shingles
     // broadcast, corpus side never shuffles text
-    "decontaminate" -> ((s, dir) => {
+    Query("decontaminate", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.contaminationHits(
         d.filter(col("doc_id") > 5), d.filter(col("doc_id") <= 5),
         "doc_id", "text", n = 3)
-    }),
+    },
+    // eval 3-gram set built with the same list comprehension as the
+    // dedup_ngram oracle; shared-shingle counts per corpus doc
+    Sql(
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3 THEN
+        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+        |                   for i in range(1, len(w)-1)])
+        |    ELSE [] END AS shingles
+        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
+        |), ev AS (
+        |  SELECT DISTINCT unnest(shingles) AS sh FROM sh WHERE doc_id <= 5
+        |), corpus AS (
+        |  SELECT doc_id, unnest(shingles) AS sh FROM sh WHERE doc_id > 5
+        |)
+        |SELECT c.doc_id, count(*) AS n_shared
+        |FROM corpus c JOIN ev USING (sh)
+        |GROUP BY c.doc_id""".stripMargin)),
 
     // Bloom-accelerated decontamination — EXACT same rows as
     // `decontaminate` (bloom prunes, the exact join verifies), so it
     // shares that query's oracle verbatim; the win is a fixed-size
     // broadcast and an in-row candidate test at corpus scale
-    "decontaminate_bloom" -> ((s, dir) => {
+    Query("decontaminate_bloom", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.decontaminateBloom(
         d.filter(col("doc_id") > 5), d.filter(col("doc_id") <= 5),
         "doc_id", "text", n = 3, numBits = 1 << 17, numHashes = 5)
-    }),
+    },
+    // bloom pruning is exact after the verify join -> same oracle as the
+    // exact operator, proving the bloom path changes nothing but the plan
+    Sql(
+      """WITH sh AS (
+        |  SELECT doc_id, CASE WHEN len(w) >= 3 THEN
+        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+        |                   for i in range(1, len(w)-1)])
+        |    ELSE [] END AS shingles
+        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
+        |), ev AS (
+        |  SELECT DISTINCT unnest(shingles) AS sh FROM sh WHERE doc_id <= 5
+        |), corpus AS (
+        |  SELECT doc_id, unnest(shingles) AS sh FROM sh WHERE doc_id > 5
+        |)
+        |SELECT c.doc_id, count(*) AS n_shared
+        |FROM corpus c JOIN ev USING (sh)
+        |GROUP BY c.doc_id""".stripMargin)),
 
     // Gopher-style repetition signals (dup-word / top-word fractions),
     // scan-stage only: the top-word count is an in-row codegen'd kernel,
     // not an explode + two-shuffle groupBy
-    "text_repetition" -> ((s, dir) => {
+    Query("text_repetition", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.TextAnalysis.withRepetition(d, "doc_id", "text")
-    }),
+    },
+    // repetition signals reconstructed via the explode/groupBy form the
+    // in-row kernel replaces (unnest + count per word + max, joined back)
+    Sql(
+      """WITH t AS (
+        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+        |  FROM documents),
+        |c AS (
+        |  SELECT doc_id, max(cnt) AS top_cnt FROM (
+        |    SELECT doc_id, w, count(*) AS cnt
+        |    FROM (SELECT doc_id, unnest(toks) AS w FROM t) GROUP BY doc_id, w)
+        |  GROUP BY doc_id)
+        |SELECT t.doc_id,
+        |  CAST(len(t.toks) AS BIGINT) AS n_words,
+        |  CAST(len(list_distinct(t.toks)) AS BIGINT) AS n_distinct,
+        |  round(1.0 - len(list_distinct(t.toks)) / greatest(len(t.toks), 1), 4)
+        |    AS dup_word_fraction,
+        |  CAST(c.top_cnt AS BIGINT) AS top_word_count,
+        |  round(c.top_cnt / greatest(len(t.toks), 1), 4) AS top_word_ratio
+        |FROM t JOIN c USING (doc_id)""".stripMargin)),
 
     // Language ID heuristic
-    "text_langid" -> ((s, dir) => {
+    Query("text_langid", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.TextAnalysis.withLangId(d, "text")
         .select(col("doc_id"), col("predicted_lang"), col("en_hits"), col("de_hits"))
-    }),
+    }, Sql(langidCtes +
+      """
+        |SELECT doc_id, predicted_lang,
+        |       CAST(en AS BIGINT) AS en_hits, CAST(de AS BIGINT) AS de_hits
+        |FROM pred""".stripMargin)),
 
     // Confusion matrix of the langid heuristic vs the labeled lang
     // column — the evaluation report any classifier family ships with;
     // one scan-stage prediction + one counts aggregation
-    "text_lang_confusion" -> ((s, dir) => {
+    Query("text_lang_confusion", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.TextAnalysis.withLangId(d, "text")
         .groupBy(col("lang"), col("predicted_lang"))
         .agg(count(lit(1)).as("n"))
-    }),
+    },
+    // confusion matrix of the langid heuristic vs the labeled lang
+    // column — the evaluation report a classifier family ships with
+    Sql(langidCtes +
+      """
+        |SELECT d.lang, p.predicted_lang, count(*) AS n
+        |FROM documents d JOIN pred p USING (doc_id)
+        |GROUP BY 1, 2""".stripMargin)),
 
     // Exact dedup: hash-groupBy on the content fingerprint over a doubled
     // corpus (map-side combine collapses duplicates before the shuffle)
-    "dedup_exact" -> ((s, dir) => {
+    Query("dedup_exact", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Dedup.exactDupGroups(d.unionByName(d), "doc_id", "text")
-    }),
+    }, Sql(
+      """WITH u AS (SELECT doc_id, text FROM documents
+        |           UNION ALL SELECT doc_id, text FROM documents)
+        |SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fingerprint,
+        |       min(doc_id) AS survivor_id, count(*) AS n_copies
+        |FROM u GROUP BY 1""".stripMargin)),
 
     // MinHash + LSH near-dup pairs with exact-Jaccard verification
-    "dedup_minhash_lsh" -> ((s, dir) => {
+    Query("dedup_minhash_lsh", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Dedup.minhashLshPairs(d, "doc_id", "text",
         bands = 4, rowsPerBand = 2, threshold = 0.8)
-    }),
+    }, Sql(
+      s"""WITH $minhashCtes
+        |SELECT doc_a, doc_b,
+        |  round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
+        |        len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) AS jac
+        |FROM cand
+        |JOIN sh sa ON sa.doc_id = doc_a
+        |JOIN sh sb ON sb.doc_id = doc_b
+        |WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
+        |        len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8""".stripMargin)),
 
     // LSH threshold health check: triangle census of the near-dup pair
     // graph. High transitivity = the pair generator found coherent
     // clusters; a chain-heavy (low-clustering) graph at the same
     // threshold is how an over-loose LSH first shows itself
-    "dedup_graph_quality" -> ((s, dir) => {
+    Query("dedup_graph_quality", (s, dir) => {
       graft.operators.Graph.triangleStats(
         lshPairsShared(s, dir), "doc_a", "doc_b")
-    }),
+    },
+    // the LSH pair CTEs feed the textbook triangle count — same composed
+    // derivation as the Spark side (minhashLshPairs -> triangleStats)
+    Sql(
+      s"""WITH $minhashCtes,
+        |pr AS (
+        |  SELECT doc_a, doc_b FROM cand
+        |  JOIN sh sa ON sa.doc_id = doc_a
+        |  JOIN sh sb ON sb.doc_id = doc_b
+        |  WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
+        |          len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8
+        |), ed AS (
+        |  SELECT DISTINCT doc_a AS a, doc_b AS b FROM pr
+        |), deg AS (
+        |  SELECT n, count(*) AS d
+        |  FROM (SELECT a AS n FROM ed UNION ALL SELECT b FROM ed)
+        |  GROUP BY 1
+        |), tri AS (
+        |  SELECT count(*) AS t FROM ed e1, ed e2, ed e3
+        |  WHERE e1.a = e2.a AND e1.b < e2.b
+        |    AND e3.a = e1.b AND e3.b = e2.b
+        |)
+        |SELECT (SELECT count(*) FROM deg) AS n_nodes,
+        |       (SELECT count(*) FROM ed) AS n_edges,
+        |       (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) FROM deg) AS n_wedges,
+        |       (SELECT t FROM tri) AS n_triangles,
+        |       CASE WHEN (SELECT sum(d * (d - 1) // 2) FROM deg) > 0
+        |            THEN round(3.0 * (SELECT t FROM tri) /
+        |                       (SELECT sum(d * (d - 1) // 2) FROM deg), 4)
+        |       END AS global_clustering""".stripMargin)),
 
     // Near-dup clusters: connected components over the LSH pair graph
-    "dedup_clusters" -> ((s, dir) => {
+    Query("dedup_clusters", (s, dir) => {
       graft.operators.Dedup.dupClusters(lshPairsShared(s, dir))
-    }),
+    }, Sql(
+      s"""WITH RECURSIVE $minhashCtes,
+        |pairs AS (
+        |  SELECT doc_a, doc_b FROM cand
+        |  JOIN sh sa ON sa.doc_id = doc_a
+        |  JOIN sh sb ON sb.doc_id = doc_b
+        |  WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
+        |          len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8
+        |), edges AS (
+        |  SELECT doc_a AS a, doc_b AS b FROM pairs
+        |  UNION SELECT doc_b, doc_a FROM pairs
+        |), reach AS (
+        |  SELECT a, b FROM edges
+        |  UNION
+        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+        |)
+        |SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS cluster_id
+        |FROM reach GROUP BY a""".stripMargin)),
 
     // Incremental near-dup: nightly-ingest shape — an md5-chosen ~20%
     // "delta" dedups against the persisted LSH band index of the other
     // ~80% "corpus" plus itself; corpus text is read back only for
     // colliding candidate ids
-    "dedup_incremental" -> ((s, dir) => {
+    Query("dedup_incremental", (s, dir) => {
       val d0 = s.read.parquet(t(dir, "documents"))
       val isDelta = (conv(substring(md5(concat(lit("delta:"),
         col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long") % 1000) >= 800
@@ -696,77 +1274,190 @@ object SparkEntry {
         bands = 4, rowsPerBand = 2)
       graft.operators.Dedup.incrementalNearDupPairs(delta, corpus, "doc_id", "text",
         index, bands = 4, rowsPerBand = 2, threshold = 0.8)
-    }),
+    },
+    // the one-shot pair derivation over the FULL set, restricted to pairs
+    // touching the md5-chosen delta — the incremental operator's contract
+    Sql(
+      s"""WITH $minhashCtes
+        |SELECT doc_a, doc_b,
+        |  round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
+        |        len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) AS jac
+        |FROM cand
+        |JOIN sh sa ON sa.doc_id = doc_a
+        |JOIN sh sb ON sb.doc_id = doc_b
+        |WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
+        |        len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8
+        |  AND (CAST('0x' || substr(md5('delta:' || CAST(doc_a AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 800
+        |    OR CAST('0x' || substr(md5('delta:' || CAST(doc_b AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 800)""".stripMargin)),
 
     // Leakage-safe split: near-dup cluster members always land on the
     // same train/val/test side (split keyed on the cluster representative)
-    "corpus_leakage_split" -> ((s, dir) => {
+    Query("corpus_leakage_split", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.leakageSafeSplit(d, "doc_id", lshPairsShared(s, dir))
         .select(col("doc_id"), col("source"), col("split_rep"), col("split"))
-    }),
+    },
+    // same recursive reachability as dedup_clusters, then a per-CLUSTER
+    // md5 bucket — every member inherits its representative's side, so
+    // the oracle re-derives leakage-freedom from first principles
+    Sql(
+      s"""WITH RECURSIVE $minhashCtes,
+        |pairs AS (
+        |  SELECT doc_a, doc_b FROM cand
+        |  JOIN sh sa ON sa.doc_id = doc_a
+        |  JOIN sh sb ON sb.doc_id = doc_b
+        |  WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
+        |          len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8
+        |), edges AS (
+        |  SELECT doc_a AS a, doc_b AS b FROM pairs
+        |  UNION SELECT doc_b, doc_a FROM pairs
+        |), reach AS (
+        |  SELECT a, b FROM edges
+        |  UNION
+        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+        |), cl AS (
+        |  SELECT a AS doc_id, least(a, min(b)) AS cluster_id FROM reach GROUP BY a
+        |), rep AS (
+        |  SELECT d.doc_id, d.source,
+        |         CAST(COALESCE(c.cluster_id, d.doc_id) AS BIGINT) AS split_rep
+        |  FROM documents d LEFT JOIN cl c ON d.doc_id = c.doc_id
+        |)
+        |SELECT doc_id, source, split_rep,
+        |  CASE WHEN CAST('0x' || substr(md5('lsplit:' || CAST(split_rep AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 900 THEN 'train'
+        |       WHEN CAST('0x' || substr(md5('lsplit:' || CAST(split_rep AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 950 THEN 'val'
+        |       ELSE 'test' END AS split
+        |FROM rep""".stripMargin)),
 
     // Blocked n-gram Jaccard pairs (blocking key = source). maxDf=100 is
     // the explicit scale-path cap (bounded candidates; identical-set
     // copies rescued) — the API default is exhaustive.
-    "dedup_ngram" -> ((s, dir) => {
+    Query("dedup_ngram", (s, dir) => {
       val d = widenScan(s.read.parquet(t(dir, "documents"))
         .select(col("doc_id"), col("text"), col("source")), col("doc_id"))
       graft.operators.Dedup.ngramJaccardPairs(d, "doc_id", "text", "source", 0.5,
         maxDf = 100)
-    }),
+    }, Sql(
+      """WITH sh AS (
+        |  SELECT doc_id, source, CASE WHEN len(w) >= 3 THEN
+        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+        |                   for i in range(1, len(w)-1)])
+        |    ELSE [] END AS shingles
+        |  FROM (SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w FROM documents)
+        |)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
+        |        len(list_distinct(list_concat(a.shingles, b.shingles))), 4) AS jac
+        |FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id
+        |WHERE round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
+        |      len(list_distinct(list_concat(a.shingles, b.shingles))), 4) >= 0.5""".stripMargin)),
 
     // Asymmetric containment |A∩B| / min(|A|,|B|): catches short docs
     // quoted inside long ones, where Jaccard dilutes toward 0
-    "dedup_containment" -> ((s, dir) => {
+    Query("dedup_containment", (s, dir) => {
       val d = widenScan(s.read.parquet(t(dir, "documents"))
         .select(col("doc_id"), col("text"), col("source")), col("doc_id"))
       graft.operators.Dedup.containmentPairs(d, "doc_id", "text", "source",
         0.6, maxDf = 100)
-    }),
+    },
+    // same shingle CTE as dedup_ngram; the inter>0 guard mirrors the
+    // inverted-index contract (pairs must share a shingle) and keeps a
+    // 0/0 NaN — which DuckDB orders ABOVE the threshold — out of the set
+    Sql(
+      """WITH sh AS (
+        |  SELECT doc_id, source, CASE WHEN len(w) >= 3 THEN
+        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+        |                   for i in range(1, len(w)-1)])
+        |    ELSE [] END AS shingles
+        |  FROM (SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w FROM documents)
+        |)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
+        |        least(len(a.shingles), len(b.shingles)), 4) AS containment
+        |FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id
+        |WHERE len(list_intersect(a.shingles, b.shingles)) > 0
+        |  AND round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
+        |      least(len(a.shingles), len(b.shingles)), 4) >= 0.6""".stripMargin)),
 
     // SimHash signatures
-    "dedup_simhash" -> ((s, dir) => {
+    Query("dedup_simhash", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Dedup.withSimhash16(d, "doc_id", "text")
-    }),
+    }, Sql(
+      """WITH toks AS (
+        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents
+        |), h AS (
+        |  SELECT doc_id, CAST('0x' || substr(md5(w), 1, 4) AS INTEGER) AS h FROM toks
+        |), votes AS (
+        |  SELECT doc_id, b,
+        |         sum(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
+        |  FROM h, range(0, 16) t(b) GROUP BY doc_id, b
+        |)
+        |SELECT doc_id,
+        |       CAST(sum(CASE WHEN v > 0 THEN 1 << CAST(b AS INTEGER) ELSE 0 END) AS BIGINT) AS simhash16
+        |FROM votes GROUP BY doc_id""".stripMargin)),
 
     // Brute-force cosine top-k similarity search (query side broadcast)
-    "embed_knn" -> ((s, dir) => {
+    Query("embed_knn", (s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
       graft.operators.Similarity.bruteForceTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", k = 5)
-    }),
+    }, Sql(
+      """WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id < 10),
+        |c AS (SELECT vec_id AS c_id, embedding AS c_vec FROM embeddings WHERE vec_id >= 10),
+        |scored AS (
+        |  SELECT q_id, c_id,
+        |         round(list_dot_product(q_vec, c_vec) /
+        |               (sqrt(list_dot_product(q_vec, q_vec)) * sqrt(list_dot_product(c_vec, c_vec))), 4) AS sim
+        |  FROM c, q
+        |), ranked AS (
+        |  SELECT q_id, c_id, sim,
+        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id ASC) AS INTEGER) AS rank
+        |  FROM scored
+        |)
+        |SELECT q_id, c_id, sim, rank FROM ranked WHERE rank <= 5""".stripMargin)),
 
     // Multimodal stub-decode features over an opaque binary column
-    "mm_features" -> ((s, dir) => {
+    Query("mm_features", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
         .withColumn("payload", col("text").cast(BinaryType))
       graft.operators.Multimodal.stubFeatures(d, "doc_id", "payload")
-    }),
+    }, Sql(
+      """SELECT doc_id,
+        |       CAST(strlen(text) AS BIGINT) AS byte_len,
+        |       sha256(text) AS sha256,
+        |       CAST(64 + strpos('0123456789abcdef', substr(sha256(text), 1, 1)) - 1 AS INTEGER) AS width,
+        |       CAST(64 + strpos('0123456789abcdef', substr(sha256(text), 2, 1)) - 1 AS INTEGER) AS height,
+        |       CAST(1 + CAST('0x' || substr(sha256(text), 3, 2) AS INTEGER) % 16 AS INTEGER) AS frames
+        |FROM documents""".stripMargin)),
 
     // Set op: INTERSECT (distinct semantics)
-    "q10_intersect" -> ((s, dir) => {
+    Query("q10_intersect", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders"))
         .filter(col("o_totalprice") > 250000).select(col("o_custkey"))
       val c = s.read.parquet(t(dir, "customer"))
         .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
       o.intersect(c)
-    }),
+    }, Sql(
+      """SELECT o_custkey FROM orders WHERE o_totalprice > 250000
+        |INTERSECT
+        |SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'""".stripMargin)),
 
     // Set op: EXCEPT (distinct semantics)
-    "q11_except" -> ((s, dir) => {
+    Query("q11_except", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders")).select(col("o_custkey"))
       val c = s.read.parquet(t(dir, "customer"))
         .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
       o.except(c)
-    }),
+    }, Sql(
+      """SELECT o_custkey FROM orders
+        |EXCEPT
+        |SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'""".stripMargin)),
 
     // Analytic window functions beyond frames: lag/lead navigation,
     // ntile bucketing, percent_rank — one window pass, deterministic
     // ORDER BY (date, key) so every engine ranks identically
-    "q32_window_funcs" -> ((s, dir) => {
+    Query("q32_window_funcs", (s, dir) => {
       s.read.parquet(t(dir, "orders")).createOrReplaceTempView("orders_wf")
       s.sql("""SELECT o_orderkey,
               |       lag(o_totalprice) OVER w AS prev_price,
@@ -777,53 +1468,76 @@ object SparkEntry {
               |WINDOW w AS (PARTITION BY o_custkey
               |             ORDER BY o_orderdate, o_orderkey)
               |""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT o_orderkey,
+        |       lag(o_totalprice) OVER w AS prev_price,
+        |       lead(o_totalprice) OVER w AS next_price,
+        |       ntile(4) OVER w AS quartile,
+        |       round(percent_rank() OVER w, 4) AS pr
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey
+        |             ORDER BY o_orderdate, o_orderkey)""".stripMargin)),
 
     // Ordered string aggregation (LISTAGG/string_agg semantics):
     // deterministic via sorted distinct values, so the concatenation is
     // engine-independent
-    "q33_string_agg" -> ((s, dir) => {
+    Query("q33_string_agg", (s, dir) => {
       s.read.parquet(t(dir, "orders"))
         .groupBy(col("o_orderpriority"))
         .agg(
           concat_ws(",", array_sort(collect_set(col("o_orderstatus"))))
             .as("statuses"),
           count(lit(1)).as("n"))
-    }),
+    }, Sql(
+      """SELECT o_orderpriority,
+        |       string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus)
+        |         AS statuses,
+        |       count(*) AS n
+        |FROM orders GROUP BY o_orderpriority""".stripMargin)),
 
     // Set ops with BAG semantics: INTERSECT ALL keeps duplicate
     // multiplicity — min(left count, right count) per value. Spark plans
     // it as a replicated-count aggregate + join (no row-at-a-time
     // matching), the shape that survives scale
-    "q29_intersect_all" -> ((s, dir) => {
+    Query("q29_intersect_all", (s, dir) => {
       val hi = s.read.parquet(t(dir, "orders"))
         .filter(col("o_totalprice") > 150000).select(col("o_custkey"))
       val fin = s.read.parquet(t(dir, "orders"))
         .filter(col("o_orderstatus") === "F").select(col("o_custkey"))
       hi.intersectAll(fin)
-    }),
+    }, Sql(
+      """SELECT o_custkey FROM orders WHERE o_totalprice > 150000
+        |INTERSECT ALL
+        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'""".stripMargin)),
 
     // EXCEPT ALL: left multiplicity minus right multiplicity, floored
-    "q30_except_all" -> ((s, dir) => {
+    Query("q30_except_all", (s, dir) => {
       val all = s.read.parquet(t(dir, "orders")).select(col("o_custkey"))
       val fin = s.read.parquet(t(dir, "orders"))
         .filter(col("o_orderstatus") === "F").select(col("o_custkey"))
       all.exceptAll(fin)
-    }),
+    }, Sql(
+      """SELECT o_custkey FROM orders
+        |EXCEPT ALL
+        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'""".stripMargin)),
 
     // Spark 4 VARIANT ingestion: parse_json -> binary variant, typed
     // variant_get extraction — the columnar semi-structured path (q12
     // exercises the per-row string get_json_object form of the same
     // extraction; VARIANT is what a 100 TB semi-structured column should
     // land as, shredded once instead of re-parsed per expression)
-    "q31_variant_json" -> ((s, dir) => {
+    Query("q31_variant_json", (s, dir) => {
       s.read.parquet(t(dir, "events"))
         .withColumn("v", parse_json(col("props")))
         .withColumn("k", expr("variant_get(v, '$.k', 'bigint')"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
           countDistinct(col("k")).as("n_distinct_k"))
-    }),
+    }, Sql(
+      """SELECT event_type, count(*) AS n,
+        |       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+        |       count(DISTINCT CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_distinct_k
+        |FROM events GROUP BY event_type""".stripMargin)),
 
     // int8 embedding quantization under an error-bound contract: scale
     // and the quantized checksum are engine-deterministic (double math,
@@ -831,7 +1545,7 @@ object SparkEntry {
     // scale/2 per component (0.501 slack absorbs float-vs-double ulps).
     // The 100 TB point: q + one float scale is 4x smaller than float32
     // vectors for candidate generation and shuffles; re-rank in float
-    "embed_quantize_i8" -> ((s, dir) => {
+    Query("embed_quantize_i8", (s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
       val vec = col("embedding")
       val maxabs = array_max(transform(vec, x => abs(x.cast(DoubleType))))
@@ -846,7 +1560,23 @@ object SparkEntry {
               (x, q) => abs(x.cast(DoubleType) - q.cast(DoubleType) * col("s"))))
               <= col("s") * 0.501)
             .otherwise(lit(true)).as("within_bound"))
-    }),
+    }, Sql(
+      """WITH m AS (
+        |  SELECT vec_id, embedding AS e,
+        |         list_max([abs(CAST(x AS DOUBLE)) for x in embedding]) AS maxabs
+        |  FROM embeddings
+        |)
+        |SELECT vec_id,
+        |       round(maxabs / 127, 6) AS scale6,
+        |       CAST(CASE WHEN maxabs > 0
+        |            THEN list_sum([round(CAST(x AS DOUBLE) / (maxabs / 127)) for x in e])
+        |            ELSE 0 END AS BIGINT) AS q_sum,
+        |       CASE WHEN maxabs > 0
+        |            THEN list_max([abs(CAST(x AS DOUBLE) -
+        |                 round(CAST(x AS DOUBLE) / (maxabs / 127)) * (maxabs / 127))
+        |                 for x in e]) <= maxabs / 127 * 0.501
+        |            ELSE true END AS within_bound
+        |FROM m""".stripMargin)),
 
     // LSH-bucketed ANN over the PLANTED validation corpus (orthogonal
     // cluster axes with every member < pi/4 from its query, so the whole
@@ -854,7 +1584,7 @@ object SparkEntry {
     // margin argument, and the exact top-k is analytically known and
     // DuckDB-oracle-checked). Organic-corpus recall stays spec'd against
     // brute force in OperatorsSpec.
-    "embed_lsh_topk" -> ((s, dir) => {
+    Query("embed_lsh_topk", (s, dir) => {
       // truncating materializes the planted corpus ONCE: without it,
       // CollapseProject re-inlines the 64-branch construction into every
       // hyperplane dot (8x the work and a codegen blowup)
@@ -863,14 +1593,23 @@ object SparkEntry {
       graft.operators.Similarity.lshTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", dim = 64, k = 5)
-    }),
+    }, Sql(PlantedAnnOracle)),
 
     // Embedding-cosine near-dup pairs, blocked by label
-    "dedup_embedding" -> ((s, dir) => {
+    Query("dedup_embedding", (s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
       graft.operators.Similarity.cosineNearDupPairs(
         e, "vec_id", "embedding", "label", threshold = 0.4)
-    }),
+    }, Sql(
+      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |       round(list_dot_product(a.embedding, b.embedding) /
+        |             (sqrt(list_dot_product(a.embedding, a.embedding)) *
+        |              sqrt(list_dot_product(b.embedding, b.embedding))), 4) AS sim
+        |FROM embeddings a JOIN embeddings b
+        |  ON a.label = b.label AND a.vec_id < b.vec_id
+        |WHERE round(list_dot_product(a.embedding, b.embedding) /
+        |            (sqrt(list_dot_product(a.embedding, a.embedding)) *
+        |             sqrt(list_dot_product(b.embedding, b.embedding))), 4) >= 0.4""".stripMargin)),
 
     // SemDeDup over the planted corpus: k-means clusters, then drop any
     // vector with a smaller-id cluster-mate at cosine >= 0.999. The
@@ -880,21 +1619,34 @@ object SparkEntry {
     // cross-group cosine is 0 or <= cos(0.1) ~= 0.995 < 0.999. Identical
     // vectors can never split across k-means cells, so the min-id of
     // each angle-group survives regardless of the trained centroids.
-    "dedup_semantic" -> ((s, dir) => {
+    Query("dedup_semantic", (s, dir) => {
       val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
         graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding"))
         .filter(col("vec_id") >= 10))
       graft.operators.Similarity.semanticDedup(e, "vec_id", "embedding",
         threshold = 0.999, nlist = 8)
         .select(col("vec_id"))
-    }),
+    },
+    // the planted corpus' semantic groups in closed form: (axis, pinned
+    // angle); keep each group's min id — the independent statement of
+    // "no smaller-id semantic duplicate exists"
+    Sql(
+      """WITH c AS (
+        |  SELECT vec_id, vec_id % 10 AS g,
+        |         least((vec_id - 10) // 10, 4) AS r
+        |  FROM embeddings WHERE vec_id >= 10
+        |)
+        |SELECT a.vec_id FROM c a
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM c b
+        |  WHERE b.g = a.g AND b.r = a.r AND b.vec_id < a.vec_id)""".stripMargin)),
 
     // IVF ANN over the same planted corpus: identical vectors within each
     // ring position can never split across k-means cells, orthogonal
     // clusters keep the query's own cell among its nearest probes, and
     // the seeded training makes the run reproducible — the analytic
     // top-k oracle applies. Organic-corpus recall stays in OperatorsSpec.
-    "embed_ivf_topk" -> ((s, dir) => {
+    Query("embed_ivf_topk", (s, dir) => {
       // truncated as in embed_lsh_topk: k-means iterations and the
       // per-centroid distances must not re-evaluate the construction
       val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
@@ -906,13 +1658,13 @@ object SparkEntry {
       graft.operators.Similarity.ivfTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", k = 5, nlist = 8, nprobe = 3)
-    }),
+    }, Sql(PlantedAnnOracle)),
 
     // The nightly-ANN shape: index frames built once (in a deployment,
     // read back from storage — the parquet round-trip identity is
     // spec-pinned), searched without re-clustering; result contract is
     // the same planted analytic top-k as embed_ivf_topk
-    "embed_ivf_persisted" -> ((s, dir) => {
+    Query("embed_ivf_persisted", (s, dir) => {
       val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
         graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       val (assigned, centroids) = graft.operators.Similarity
@@ -921,7 +1673,7 @@ object SparkEntry {
       graft.operators.Similarity.ivfSearchIndex(
         e.filter(col("vec_id") < 10), assigned, centroids,
         "vec_id", "embedding", k = 5, nprobe = 3)
-    }),
+    }, Sql(PlantedAnnOracle)),
 
     // Int8-quantized coarse ANN + exact float re-rank over the planted
     // corpus. The analytic oracle survives quantization: an in-cluster
@@ -933,7 +1685,7 @@ object SparkEntry {
     // on c_id as in the float ranker. Coarse top-refine therefore
     // contains the true top-5 and the float re-rank IS the analytic
     // answer. Organic-corpus recall is spec'd in OperatorsSpec.
-    "embed_i8_topk" -> ((s, dir) => {
+    Query("embed_i8_topk", (s, dir) => {
       // truncated as in embed_lsh_topk: the 64-branch construction
       // must not re-inline into the quantize + dot expressions. Widened
       // (unlike the k-means-training siblings, where 32-partition
@@ -948,14 +1700,31 @@ object SparkEntry {
       graft.operators.Similarity.quantizedTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", k = 5, refine = 10)
-    }),
+    }, Sql(PlantedAnnOracle)),
 
     // Johnson-Lindenstrauss +-1 random projection to 8 dims over the raw
     // organic embeddings; the oracle rebuilds the md5-derived sign matrix
-    "embed_random_projection" -> ((s, dir) => {
+    Query("embed_random_projection", (s, dir) => {
       graft.operators.Similarity.randomProjection(
         s.read.parquet(t(dir, "embeddings")),
         Seq("vec_id", "label"), "embedding", dim = 64, k = 8)
+    },
+    // the same +-1 matrix from md5 first-hex-digit: planeComponent's
+    // `digest[0] & 0x80 == 0` IS `substr(md5, 1, 1) < '8'`
+    Sql {
+      val cols = (0 until 8).map { p =>
+        s"""round(sum(x * CASE WHEN substr(md5('$p|' || CAST(c AS VARCHAR)), 1, 1) < '8'
+           |  THEN 1.0 ELSE -1.0 END) / sqrt(8.0), 4) AS rp$p""".stripMargin
+      }.mkString(",\n")
+      s"""WITH px AS (
+         |  SELECT vec_id, label,
+         |         CAST(generate_subscripts(embedding, 1) AS BIGINT) - 1 AS c,
+         |         CAST(unnest(embedding) AS DOUBLE) AS x
+         |  FROM embeddings
+         |)
+         |SELECT vec_id, label,
+         |$cols
+         |FROM px GROUP BY 1, 2""".stripMargin
     }),
 
     // Product-quantization ADC search + exact float re-rank over the
@@ -970,13 +1739,13 @@ object SparkEntry {
     // float ranker does; the re-rank then scores candidates with
     // bruteForceTopK's own arithmetic. Coarse top-20 therefore contains
     // the true top-5 and the result IS the analytic answer.
-    "embed_pq_topk" -> ((s, dir) => {
+    Query("embed_pq_topk", (s, dir) => {
       val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
         graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       graft.operators.Similarity.pqTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", k = 5, refine = 20, m = 8, ksub = 64)
-    }),
+    }, Sql(PlantedAnnOracle)),
 
     // IVF+PQ composition over the planted corpus: exactness composes —
     // IVF probing recovers the whole cluster (same nlist/nprobe as
@@ -984,18 +1753,18 @@ object SparkEntry {
     // in exact mode (see embed_pq_topk), so the cell-pruned ADC top-20
     // contains the true top-5 and the float re-rank IS the analytic
     // answer
-    "embed_ivfpq_topk" -> ((s, dir) => {
+    Query("embed_ivfpq_topk", (s, dir) => {
       val e = Materialize.truncate(s.read.parquet(t(dir, "embeddings")).select(col("vec_id"),
         graft.operators.Similarity.plantedClusterVector(col("vec_id")).as("embedding")))
       graft.operators.Similarity.ivfPqTopK(
         e.filter(col("vec_id") < 10), e.filter(col("vec_id") >= 10),
         "vec_id", "embedding", k = 5, refine = 20,
         nlist = 8, nprobe = 3, m = 8, ksub = 64)
-    }),
+    }, Sql(PlantedAnnOracle)),
 
     // mapPartitions batched decode path (the real multimodal plumbing;
     // equality with the expression path is proven in OperatorsSpec)
-    "mm_decode" -> ((s, dir) => {
+    Query("mm_decode", (s, dir) => {
       // the mapPartitions decode path, emitting the FULL stub metadata so
       // the DuckDB oracle hash-checks it (same reconstruction as
       // mm_features, which covers the pure-expression form)
@@ -1007,29 +1776,52 @@ object SparkEntry {
           col("meta.sha256").as("sha256"),
           col("meta.width").as("width"), col("meta.height").as("height"),
           col("meta.frames").as("frames"))
-    }),
+    },
+    // same stub-metadata reconstruction as mm_features — this one checks
+    // the mapPartitions decode path end-to-end
+    Sql(
+      """SELECT doc_id AS id,
+        |       CAST(strlen(text) AS BIGINT) AS byte_len,
+        |       sha256(text) AS sha256,
+        |       CAST(64 + strpos('0123456789abcdef', substr(sha256(text), 1, 1)) - 1 AS INTEGER) AS width,
+        |       CAST(64 + strpos('0123456789abcdef', substr(sha256(text), 2, 1)) - 1 AS INTEGER) AS height,
+        |       CAST(1 + CAST('0x' || substr(sha256(text), 3, 2) AS INTEGER) % 16 AS INTEGER) AS frames
+        |FROM documents WHERE text IS NOT NULL""".stripMargin)),
 
     // Multimodal frame sampling: every 2nd frame of each stub-decoded
     // asset, fanned out inside the partition (mapPartitions plumbing)
-    "mm_frame_sample" -> ((s, dir) => {
+    Query("mm_frame_sample", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
         .withColumn("payload", col("text").cast(BinaryType))
       graft.operators.Multimodal.sampleFrames(d, "doc_id", "payload", everyN = 2)
         .toDF().select(col("id").as("doc_id"), col("frame_idx"), col("frame_sha"))
-    }),
+    }, Sql(
+      """WITH m AS (
+        |  SELECT doc_id, sha256(text) AS sha,
+        |         CAST(1 + CAST('0x' || substr(sha256(text), 3, 2) AS INTEGER) % 16 AS INTEGER) AS frames
+        |  FROM documents
+        |)
+        |SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
+        |       sha256(sha || '-' || CAST(i AS VARCHAR)) AS frame_sha
+        |FROM m, range(0, 16) t(i)
+        |WHERE i < frames AND i % 2 = 0""".stripMargin)),
 
     // Semi-structured: JSON property extraction + aggregation
-    "q12_json_props" -> ((s, dir) => {
+    Query("q12_json_props", (s, dir) => {
       s.read.parquet(t(dir, "events"))
         .withColumn("k", get_json_object(col("props"), "$.k").cast(LongType))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
           max(col("k")).as("max_k"))
-    }),
+    }, Sql(
+      """SELECT event_type, count(*) AS n,
+        |       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+        |       max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
+        |FROM events GROUP BY event_type""".stripMargin)),
 
     // P1 with a per-record writetime override (the --timestamp flag path):
     // field value wins, plan-time default fills nulls
-    "p1_ts_override" -> ((s, dir) => {
+    Query("p1_ts_override", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders"))
         .withColumn("event_micros",
           when(col("o_orderkey") % 5 === 0, lit(null).cast(LongType))
@@ -1039,7 +1831,13 @@ object SparkEntry {
         ttlField = None,
         ignore = Seq("o_orderstatus", "o_orderpriority"),
         defaultTimestampMicros = DefaultWritetimeMicros))
-    }),
+    }, Sql(
+      s"""SELECT o_orderkey AS rowkey, o_orderkey, o_custkey, o_totalprice,
+         |       o_orderdate,
+         |       CASE WHEN o_orderkey % 5 = 0 THEN CAST($DefaultWritetimeMicros AS BIGINT)
+         |            ELSE epoch_us(o_orderdate) END AS writetime,
+         |       CAST(0 AS INTEGER) AS ttl
+         |FROM orders""".stripMargin)),
 
     // approx_count_distinct (HLL++): sketch values are engine-specific, so
     // no SQL oracle — the error bound vs exact is asserted in QuerySpec
@@ -1048,7 +1846,7 @@ object SparkEntry {
     // within the documented relative error" — the oracle computes the same
     // exact count and asserts the bound as a literal, so a sketch drifting
     // out of tolerance breaks the hash match
-    "q13_approx_distinct" -> ((s, dir) => {
+    Query("q13_approx_distinct", (s, dir) => {
       val rsd = 0.05 // approx_count_distinct default relative stddev
       widenScan(s.read.parquet(t(dir, "lineitem"))
           .select(col("l_returnflag"), col("l_orderkey")), col("l_orderkey"))
@@ -1058,11 +1856,19 @@ object SparkEntry {
         .select(col("l_returnflag"), col("exact_orders"),
           (abs(col("approx") - col("exact_orders")).cast(DoubleType) /
             col("exact_orders") <= rsd * 4).as("within_bound"))
-    }),
+    },
+    // the sketch estimate itself is engine-specific; the checkable claim
+    // is exactness of the true count and the estimate's error bound,
+    // which the Spark side reduces to a boolean
+    Sql(
+      """SELECT l_returnflag,
+        |       count(DISTINCT l_orderkey) AS exact_orders,
+        |       true AS within_bound
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
 
     // Custom TypedImperativeAggregate: corpus-level MinHash signature per
     // source in one map-side-combined aggregation
-    "minhash_by_source" -> ((s, dir) => {
+    Query("minhash_by_source", (s, dir) => {
       import graft.functions.MinHashAgg.minhash_agg
       val d = s.read.parquet(t(dir, "documents"))
       d.select(col("source"),
@@ -1072,25 +1878,58 @@ object SparkEntry {
         .agg(minhash_agg(col("hs"), 8).as("sig"))
         .select(col("source") +:
           (0 until 8).map(i => element_at(col("sig"), i + 1).as(s"mh$i")): _*)
+    }, Sql {
+      val mins = (0 until 8).map(i =>
+        s"min((${graft.operators.Dedup.MinhashA(i)}*h + " +
+          s"${graft.operators.Dedup.MinhashB(i)}) % ${graft.operators.Dedup.MinhashP}) AS mh$i")
+        .mkString(", ")
+      s"""WITH sh AS (
+        |  SELECT source, CASE WHEN len(w) >= 3 THEN
+        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w)-1)])
+        |    ELSE [] END AS shingles
+        |  FROM (SELECT source, string_split_regex(trim(text), '\\s+') AS w FROM documents)
+        |), h AS (
+        |  SELECT source, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h
+        |  FROM (SELECT source, unnest(shingles) AS s FROM sh)
+        |)
+        |SELECT source, $mins FROM h GROUP BY source""".stripMargin
     }),
 
     // Sessionization (lag form; the session_window form below is proven
     // equivalent in StreamingSpec). Event time rides as epoch-micros
     // BIGINT (the oracle contract, epoch_us(ts) in DuckDB), whatever
     // physical type the parquet scan yields — see core.EventTime.
-    "q14_sessionize" -> ((s, dir) => {
+    Query("q14_sessionize", (s, dir) => {
       val e = graft.core.EventTime
         .readEventsTsUsAs(s.read.parquet(t(dir, "events")), "ts")
       graft.streaming.Sessionize.sessionizeBatch(e, gap = 3600L * 1000000L)
         .withColumnRenamed("start_ts", "start_us")
         .withColumnRenamed("end_ts", "end_us")
-    }),
+    }, Sql(
+      """WITH e AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events
+        |), flagged AS (
+        |  SELECT user_id, tsu,
+        |    CASE WHEN tsu - lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
+        |              > 3600000000 THEN 1 ELSE 0 END AS is_new,
+        |    event_id
+        |  FROM e
+        |), sess AS (
+        |  SELECT user_id, tsu,
+        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
+        |                      ROWS UNBOUNDED PRECEDING) AS session_id
+        |  FROM flagged
+        |)
+        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
+        |       count(*) AS n_events,
+        |       min(tsu) AS start_us, max(tsu) AS end_us
+        |FROM sess GROUP BY user_id, session_id""".stripMargin)),
 
     // Same sessionization contract via the BUILT-IN session_window
     // operator (the Spark-first form). gap+1µs reproduces the lag form's
     // <=-gap merge exactly; the ordinal session_id is a per-user window
     // over one-row-per-session.
-    "q14b_session_window" -> ((s, dir) => {
+    Query("q14b_session_window", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val e = graft.core.EventTime
         .readEventsTsUsAs(s.read.parquet(t(dir, "events")), "ts")
@@ -1101,32 +1940,75 @@ object SparkEntry {
             .orderBy(col("start_us"))) - 1).cast(LongType))
         .select(col("user_id"), col("session_id"), col("n_events"),
           col("start_us"), col("end_us"))
-    }),
+    },
+    // the session_window form must land on the IDENTICAL session set as
+    // the lag/cumsum form (gap+1µs boundary alignment) — same oracle
+    Sql(
+      """WITH e AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events
+        |), flagged AS (
+        |  SELECT user_id, tsu,
+        |    CASE WHEN tsu - lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
+        |              > 3600000000 THEN 1 ELSE 0 END AS is_new,
+        |    event_id
+        |  FROM e
+        |), sess AS (
+        |  SELECT user_id, tsu,
+        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
+        |                      ROWS UNBOUNDED PRECEDING) AS session_id
+        |  FROM flagged
+        |)
+        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
+        |       count(*) AS n_events,
+        |       min(tsu) AS start_us, max(tsu) AS end_us
+        |FROM sess GROUP BY user_id, session_id""".stripMargin)),
 
     // First-touch funnel view -> click -> purchase within 24h of the
     // first view: per stage one user-keyed equi-join (time bounds as
     // residual) + min aggregation — entrants shrink monotonically, the
     // event log is scanned once per stage with the type filter pushed
     // down, and no per-user event list is ever collected
-    "q36_funnel" -> ((s, dir) => {
+    Query("q36_funnel", (s, dir) => {
       val e = graft.core.EventTime
         .readEventsTsUsAs(s.read.parquet(t(dir, "events")), "ts")
       graft.operators.Funnel.funnel(e, "user_id", "ts", "event_type",
         stages = Seq("view", "click", "purchase"),
         windowMicros = 86400000000L)
-    }),
+    },
+    // stage-chained min-ts CTEs mirror the first-touch semantics: stage i
+    // is the earliest matching event at-or-after stage i-1's match,
+    // chain bounded by t1 + 24h; stalls propagate as nulls
+    Sql(
+      """WITH ev AS (
+        |  SELECT user_id, epoch_us(ts) AS ts, event_type FROM events
+        |), s1 AS (
+        |  SELECT user_id, min(ts) AS t1 FROM ev
+        |  WHERE event_type = 'view' GROUP BY 1
+        |), s2 AS (
+        |  SELECT s1.user_id, s1.t1, min(e.ts) AS t2
+        |  FROM s1 LEFT JOIN ev e ON e.user_id = s1.user_id
+        |    AND e.event_type = 'click'
+        |    AND e.ts >= s1.t1 AND e.ts <= s1.t1 + 86400000000
+        |  GROUP BY 1, 2
+        |), s3 AS (
+        |  SELECT s2.user_id, s2.t1, s2.t2, min(e.ts) AS t3
+        |  FROM s2 LEFT JOIN ev e ON e.user_id = s2.user_id
+        |    AND e.event_type = 'purchase'
+        |    AND e.ts >= s2.t2 AND e.ts <= s2.t1 + 86400000000
+        |  GROUP BY 1, 2, 3
+        |)
+        |SELECT user_id, t1, t2, t3,
+        |       CAST(1 + CAST(t2 IS NOT NULL AS INT)
+        |              + CAST(t3 IS NOT NULL AS INT) AS BIGINT) AS stages_reached
+        |FROM s3""".stripMargin)),
 
-    // Cohort retention: users bucketed by first-seen week, counted once
-    // per (cohort, week-offset) they return in — first-touch agg, one
-    // user-keyed join back (broadcast/AQE at this cardinality), distinct,
-    // count; integer `div` on micros so both engines floor identically
     // Bucketed co-located join: both sides pre-bucketed AND sorted by the
     // join key at write time (Bucketing.writeBucketed — the one paid
     // shuffle), so the SortMergeJoin and the per-customer aggregation
     // both plan with ZERO shuffle Exchange (pinned in PlanSpec). The
     // write happens eagerly at query-build time into java.io.tmpdir,
     // keyed by a digest of the data dir so sf variants don't collide.
-    "q39_bucketed_join" -> ((s, dir) => {
+    Query("q39_bucketed_join", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-bucketed-$tag"
@@ -1144,8 +2026,20 @@ object SparkEntry {
         .groupBy(col("c_custkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n_orders"),
           round(sum(col("o_totalprice")), 2).as("total_spend"))
-    }),
+    },
+    // the bucketed tables hold projections of orders/customer, so the
+    // plain-join SQL is the semantic oracle for the co-located plan
+    Sql(
+      """SELECT c_custkey, c_mktsegment, count(*) AS n_orders,
+        |       round(sum(o_totalprice), 2) AS total_spend
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY 1, 2""".stripMargin)),
 
+    // The lakehouse layout compositions below are untimed: each pass
+    // spends its wall time writing tmp parquet layouts (local disk, not
+    // engine throughput). scale_curve.json and the layout specs carry
+    // their scale story.
+    //
     // The lakehouse layout composed end-to-end (q39 + q40 were the
     // parts): events z-clustered into 16 files + a per-file stats
     // manifest; the read replays the manifest and opens ONLY the files
@@ -1154,7 +2048,7 @@ object SparkEntry {
     // spec-pinned); the pruned subset and the customer dim then land in
     // co-located buckets so the join plans with zero Exchange. The
     // result is row-identical to a full scan + filter (this oracle).
-    "lakehouse_pruned_join" -> ((s, dir) => {
+    Query("lakehouse_pruned_join", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lakehouse-$tag"
@@ -1176,7 +2070,16 @@ object SparkEntry {
         .groupBy(col("c_mktsegment"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // manifest pruning is a superset file filter + exact residual
+    // predicate, so the whole composition must equal a plain
+    // filter-join-aggregate — THE no-drift contract of file skipping
+    Sql(
+      """SELECT c_mktsegment, event_type, count(*) AS n_events,
+        |       round(sum(value), 2) AS total_value
+        |FROM events JOIN customer ON user_id = c_custkey
+        |WHERE user_id BETWEEN 4 AND 7
+        |GROUP BY 1, 2""".stripMargin), timed = false),
 
     // The z-order SHOWCASE: a conjunction over BOTH clustered columns
     // (user band x middle-30%-to-50% time band) prunes on each range at
@@ -1184,7 +2087,7 @@ object SparkEntry {
     // integer micros derived with integer arithmetic (t0 + (span*3)/10),
     // floor-exact in both engines; the oracle is the plain two-range
     // filter-aggregate, so pruning drift on EITHER dimension mismatches.
-    "lakehouse_pruned_2d" -> ((s, dir) => {
+    Query("lakehouse_pruned_2d", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-2d-$tag"
@@ -1201,7 +2104,21 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // both pruning dimensions must be row-invisible: the 2-D pruned read
+    // equals the plain two-range filter-aggregate (integer-floor time
+    // band arithmetic identical in both engines)
+    Sql(
+      """WITH b AS (
+        |  SELECT min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1 FROM events
+        |)
+        |SELECT event_type, count(*) AS n_events,
+        |       round(sum(value), 2) AS total_value
+        |FROM events, b
+        |WHERE user_id BETWEEN 4 AND 7
+        |  AND epoch_us(ts) >= b.t0 + (b.t1 - b.t0) * 3 // 10
+        |  AND epoch_us(ts) <= b.t0 + (b.t1 - b.t0) * 5 // 10
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // The lakehouse layout's nightly-ingest shape: ~80% of events land as
     // the initial z-clustered write, the md5-chosen ~20% delta APPENDS as
@@ -1209,7 +2126,7 @@ object SparkEntry {
     // the pruned read stays row-exact over the union — the oracle is the
     // same plain filter-aggregate over ALL events, so any batch the
     // manifest replay missed would hash-mismatch immediately
-    "lakehouse_incremental" -> ((s, dir) => {
+    Query("lakehouse_incremental", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-inc-$tag"
@@ -1226,7 +2143,16 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // the no-drift contract of incremental ingest: initial write + delta
+    // append + manifest-pruned read must equal one plain filter-aggregate
+    // over the WHOLE table (the md5 batch split is invisible by design)
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       round(sum(value), 2) AS total_value
+        |FROM events
+        |WHERE user_id BETWEEN 4 AND 7
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // The layout's maintenance pass: initial write (n/10 rows/file) +
     // small-file delta append (n/30 rows/file), then OPTIMIZE-style
@@ -1235,7 +2161,7 @@ object SparkEntry {
     // over the compacted layout must STILL equal the plain
     // filter-aggregate (a lost or doubled row in the rewrite would
     // hash-mismatch)
-    "lakehouse_compact" -> ((s, dir) => {
+    Query("lakehouse_compact", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-cmp-$tag"
@@ -1258,7 +2184,15 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // compaction must be row-preserving: the post-OPTIMIZE pruned read
+    // equals the same whole-table filter-aggregate as the other layouts
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       round(sum(value), 2) AS total_value
+        |FROM events
+        |WHERE user_id BETWEEN 4 AND 7
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // The typed-pruning path — the data-card read whose first predicate
     // is a CATEGORY and a CALENDAR DATE, not a number: events z-clustered
@@ -1268,7 +2202,7 @@ object SparkEntry {
     // residual comparing in the wrong collation/type) hash-mismatches.
     // Dates surface as epoch-day BIGINT (the q23 convention) so the
     // cross-engine compare is integer-exact.
-    "lakehouse_pruned_date" -> ((s, dir) => {
+    Query("lakehouse_pruned_date", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-date-$tag"
@@ -1288,14 +2222,32 @@ object SparkEntry {
         .groupBy(unix_date(col("event_date")).cast("long").as("event_day"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // typed (string + date) manifest pruning must be row-invisible: the
+    // category-equality x date-band pruned read equals the plain
+    // two-predicate filter-aggregate; the date band is integer-floor
+    // arithmetic on day counts, identical in both engines
+    Sql(
+      """WITH b AS (
+        |  SELECT min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1
+        |  FROM events
+        |)
+        |SELECT CAST(date_diff('day', DATE '1970-01-01',
+        |                      CAST(ts AS DATE)) AS BIGINT) AS event_day,
+        |       count(*) AS n_events,
+        |       round(sum(value), 2) AS total_value
+        |FROM events, b
+        |WHERE event_type = 'click'
+        |  AND CAST(ts AS DATE) >= b.d0 + CAST((b.d1 - b.d0) * 3 // 10 AS INTEGER)
+        |  AND CAST(ts AS DATE) <= b.d0 + CAST((b.d1 - b.d0) * 5 // 10 AS INTEGER)
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // Incremental consumption anchored end-to-end: the ~80% initial
     // write is v0, the md5-chosen ~20% delta appends as v1, and
     // changesSince(0) must surface EXACTLY the delta rows — the oracle
     // recomputes the same md5 bucket split, so a leaked initial-write
     // row (or a compaction-style double feed) hash-mismatches at once
-    "lakehouse_changes" -> ((s, dir) => {
+    Query("lakehouse_changes", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-chg-$tag"
@@ -1312,14 +2264,23 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // incremental consumption: the changes feed after the initial write
+    // must be exactly the md5-chosen delta batch, reconstructed here
+    // with the same bucket arithmetic over the raw table
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       round(sum(value), 2) AS total_value
+        |FROM events
+        |WHERE CAST('0x' || substr(md5('lhchg:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 800
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // Copy-on-write DELETE anchored end-to-end: the md5-chosen ~15% of
     // rows are deleted (only their files rewrite), then the pruned read
     // aggregates the survivors — the oracle filters the same bucket
     // arithmetic out of the raw table, so a row the rewrite lost OR kept
     // wrongly hash-mismatches
-    "lakehouse_delete" -> ((s, dir) => {
+    Query("lakehouse_delete", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-del-$tag"
@@ -1335,14 +2296,23 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // COW delete: survivors of the same md5 bucket filter, nothing more,
+    // nothing less
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       round(sum(value), 2) AS total_value
+        |FROM events
+        |WHERE user_id BETWEEN 4 AND 7
+        |  AND CAST('0x' || substr(md5('lhdel:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 850
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // Copy-on-write MERGE anchored end-to-end: the md5-chosen ~10% of
     // rows are upserted with their value doubled (event_id is the unique
     // key, so wholesale replacement is 1:1), then the pruned read
     // aggregates — the oracle rebuilds the same CASE over the raw table;
     // a lost survivor, a double-fed key, or a missed update mismatches
-    "lakehouse_upsert" -> ((s, dir) => {
+    Query("lakehouse_upsert", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-ups-$tag"
@@ -1360,13 +2330,22 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // COW merge: the same rows, with the md5-chosen keys' values doubled
+    // (exact fp doubling — no rounding before the final round)
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       round(sum(CASE WHEN CAST('0x' || substr(md5('lhups:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 900
+        |                      THEN value * 2 ELSE value END), 2) AS total_value
+        |FROM events
+        |WHERE user_id BETWEEN 4 AND 7
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // The SAME merge through the shuffle-side largeBatch path (no
     // broadcast, no driver-side key collection, cap ignored) — anchored
     // to the identical oracle, so the two probe/split modes are pinned
     // row-equivalent by the gate itself
-    "lakehouse_upsert_large" -> ((s, dir) => {
+    Query("lakehouse_upsert_large", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-upl-$tag"
@@ -1384,7 +2363,15 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // shuffle-side merge: byte-identical contract to lakehouse_upsert
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       round(sum(CASE WHEN CAST('0x' || substr(md5('lhups:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 900
+        |                      THEN value * 2 ELSE value END), 2) AS total_value
+        |FROM events
+        |WHERE user_id BETWEEN 4 AND 7
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // Row-level change data feed anchored end-to-end: the md5-chosen
     // ~10% of rows are upserted twice over (in place doubled, and
@@ -1393,7 +2380,7 @@ object SparkEntry {
     // rows AS OF the post-upsert state; any mis-typed, lost, or
     // double-fed row hash-mismatches on its (change_type, event_type)
     // aggregate
-    "lakehouse_cdf" -> ((s, dir) => {
+    Query("lakehouse_cdf", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-cdf-$tag"
@@ -1417,7 +2404,32 @@ object SparkEntry {
         .groupBy(col("_change_type"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // row-level CDF: postimages doubled, inserts tripled, deletes read
+    // from the POST-UPSERT state (the CASE arithmetic rebuilds it)
+    Sql(
+      """WITH b AS (
+        |  SELECT event_type, user_id, value,
+        |         CAST('0x' || substr(md5('lhcdf:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 AS bk
+        |  FROM events
+        |), v1 AS (
+        |  SELECT event_type, user_id,
+        |         CASE WHEN bk >= 900 THEN value * 2 ELSE value END AS value
+        |  FROM b
+        |  UNION ALL
+        |  SELECT event_type, user_id, value * 3 AS value FROM b WHERE bk >= 900
+        |), typed AS (
+        |  SELECT 'update_postimage' AS _change_type, event_type, value * 2 AS value
+        |  FROM b WHERE bk >= 900
+        |  UNION ALL
+        |  SELECT 'insert', event_type, value * 3 FROM b WHERE bk >= 900
+        |  UNION ALL
+        |  SELECT 'delete', event_type, value FROM v1 WHERE user_id <= 2
+        |)
+        |SELECT _change_type, event_type, count(*) AS n_events,
+        |       round(sum(value), 2) AS total_value
+        |FROM typed
+        |GROUP BY 1, 2""".stripMargin), timed = false),
 
     // Additive schema evolution anchored end-to-end: the md5-chosen ~60%
     // seed lands WITHOUT the value column, the delta batch appends WITH
@@ -1426,7 +2438,7 @@ object SparkEntry {
     // count and sum come from delta rows alone; a first-file-schema
     // reconciliation (column silently dropped) or a mis-filled row
     // hash-mismatches
-    "lakehouse_evolve" -> ((s, dir) => {
+    Query("lakehouse_evolve", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-evo-$tag"
@@ -1446,7 +2458,18 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_events"),
           count(col("value")).as("n_valued"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // additive schema evolution: value is non-null ONLY on the widened
+    // delta batch's rows — seed rows null-fill it
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       count(CASE WHEN CAST('0x' || substr(md5('lhevo:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 600
+        |                  THEN value END) AS n_valued,
+        |       round(sum(CASE WHEN CAST('0x' || substr(md5('lhevo:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 600
+        |                     THEN value END), 2) AS total_value
+        |FROM events
+        |WHERE user_id BETWEEN 4 AND 7
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // Upsert-aware change feed anchored end-to-end: the md5-chosen ~10%
     // of rows are upserted twice over — once in place (same event_id,
@@ -1454,7 +2477,7 @@ object SparkEntry {
     // (value tripled: pure inserts) — and changesSince must surface
     // EXACTLY the remapped rows: a leaked survivor re-file or
     // update-postimage (double-feed) or a dropped insert hash-mismatches
-    "lakehouse_upsert_changes" -> ((s, dir) => {
+    Query("lakehouse_upsert_changes", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-upc-$tag"
@@ -1476,7 +2499,15 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // upsert-aware change feed: exactly the remapped pure-insert rows,
+    // value tripled — survivor re-files and update-postimages never feed
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       round(sum(value * 3), 2) AS total_value
+        |FROM events
+        |WHERE CAST('0x' || substr(md5('lhupc:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 900
+        |GROUP BY 1""".stripMargin), timed = false),
 
     // Atomic REPLACE anchored end-to-end: the table starts as the
     // md5-chosen ~60% seed subset, then replaceClustered swaps in the
@@ -1485,7 +2516,7 @@ object SparkEntry {
     // layout must equal the plain doubled-value aggregate over ALL
     // rows: a pre-replace file leaking into the manifest (stale seed
     // rows double-count) or a lost new file hash-mismatches
-    "lakehouse_replace" -> ((s, dir) => {
+    Query("lakehouse_replace", (s, dir) => {
       val tag = java.security.MessageDigest.getInstance("MD5")
         .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-lh-rpl-$tag"
@@ -1503,9 +2534,21 @@ object SparkEntry {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("total_value"))
-    }),
+    },
+    // atomic REPLACE: the whole table swapped for the doubled-value
+    // frame — the seed subset must leave no trace
+    Sql(
+      """SELECT event_type, count(*) AS n_events,
+        |       round(sum(value * 2), 2) AS total_value
+        |FROM events
+        |WHERE user_id BETWEEN 4 AND 7
+        |GROUP BY 1""".stripMargin), timed = false),
 
-    "q37_retention" -> ((s, dir) => {
+    // Cohort retention: users bucketed by first-seen week, counted once
+    // per (cohort, week-offset) they return in — first-touch agg, one
+    // user-keyed join back (broadcast/AQE at this cardinality), distinct,
+    // count; integer `div` on micros so both engines floor identically
+    Query("q37_retention", (s, dir) => {
       val e = graft.core.EventTime
         .readEventsTsUsAs(s.read.parquet(t(dir, "events")), "ts")
       val first = e.groupBy(col("user_id")).agg(min(col("ts")).as("first_ts"))
@@ -1516,26 +2559,55 @@ object SparkEntry {
         .distinct()
         .groupBy(col("cohort_week"), col("week_offset"))
         .agg(count(lit(1)).as("n_users"))
-    }),
+    },
+    // `//` is DuckDB floor division — equal to Spark's `div` truncation
+    // on these non-negative micros
+    Sql(
+      """WITH ev AS (
+        |  SELECT user_id, epoch_us(ts) AS ts FROM events
+        |), f AS (
+        |  SELECT user_id, min(ts) AS first_ts FROM ev GROUP BY 1
+        |), c AS (
+        |  SELECT DISTINCT e.user_id,
+        |         f.first_ts // 604800000000 AS cohort_week,
+        |         (e.ts - f.first_ts) // 604800000000 AS week_offset
+        |  FROM ev e JOIN f USING (user_id)
+        |)
+        |SELECT cohort_week, week_offset, count(*) AS n_users
+        |FROM c GROUP BY 1, 2""".stripMargin)),
 
     // CDC latest-wins compaction: one surviving row per (user, type) key
     // — max_by(struct) hash aggregation, partial-combined map-side, so
     // the exchange carries one candidate per key per partition, never the
     // full changelog (the row_number()=1 window form would)
-    "cdc_compact" -> ((s, dir) => {
+    Query("cdc_compact", (s, dir) => {
       val e = graft.core.EventTime
         .readEventsTsUsAs(s.read.parquet(t(dir, "events")), "ts")
         .withColumn("value", round(col("value"), 2))
       graft.operators.Cdc.latestByKey(e, Seq("user_id", "event_type"),
         versionCol = "ts", tieBreakCols = Seq("event_id"))
-    }),
+    },
+    // latest (ts, event_id) per key via row_number — the textbook oracle
+    // form; (user_id, event_type, ts) is unique in this data but the
+    // event_id tiebreak mirrors the Spark ordering anyway
+    Sql(
+      """WITH ev AS (
+        |  SELECT event_id, user_id, event_type, round(value, 2) AS value,
+        |         props, epoch_us(ts) AS ts
+        |  FROM events
+        |)
+        |SELECT event_id, user_id, event_type, value, props, ts FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
+        |                               ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM ev)
+        |WHERE rn = 1""".stripMargin)),
 
     // Incremental MERGE == global recompute: the log splits at Jan 16,
     // the before-half compacts into a snapshot (tombstones retained —
     // 'error' events deactivate a user), the after-half merges in, and
     // the ORACLE recomputes the whole log from scratch — hash equality
     // IS the no-drift contract every nightly upsert job needs
-    "cdc_merge" -> ((s, dir) => {
+    Query("cdc_merge", (s, dir) => {
       val cutoff = 1705363200000000L // 2024-01-16T00:00:00Z in micros
       val e = graft.core.EventTime
         .readEventsTsUsAs(s.read.parquet(t(dir, "events")), "ts")
@@ -1550,24 +2622,53 @@ object SparkEntry {
         .filter(!col("is_delete")) // serving view: live rows only
         .select(col("user_id"), col("event_id"), col("ts"),
           col("event_type"), col("value"))
-    }),
+    },
+    // the GLOBAL recompute — one row_number over the whole log — against
+    // which the Spark side's snapshot+merge must hash-match exactly
+    Sql(
+      """WITH ev AS (
+        |  SELECT event_id, user_id, event_type, round(value, 2) AS value,
+        |         epoch_us(ts) AS ts
+        |  FROM events
+        |)
+        |SELECT user_id, event_id, ts, event_type, value FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY user_id
+        |                               ORDER BY ts DESC, event_id DESC) AS rn
+        |  FROM ev)
+        |WHERE rn = 1 AND event_type <> 'error'""".stripMargin)),
 
     // SCD Type 2 history: per-user event_type run compression into
     // [valid_from, valid_to) validity intervals, open-ended current row —
     // one exchange, two same-ordering window passes
-    "cdc_scd2" -> ((s, dir) => {
+    Query("cdc_scd2", (s, dir) => {
       val e = graft.core.EventTime
         .readEventsTsUsAs(s.read.parquet(t(dir, "events")), "ts")
       graft.operators.Cdc.scd2(e, Seq("user_id"), versionCol = "ts",
         trackCols = Seq("event_type"), tieBreakCols = Seq("event_id"))
-    }),
+    },
+    // BOTH windows order by (ts, event_id) — the Spark side tiebreaks the
+    // lead the same way, and dropping the tiebreak from either one makes
+    // valid_to nondeterministic on same-ts change rows
+    Sql(
+      """WITH ev AS (
+        |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts FROM events
+        |), ch AS (
+        |  SELECT user_id, event_type, ts, event_id,
+        |         lag(event_type) OVER (PARTITION BY user_id
+        |                               ORDER BY ts, event_id) AS prev
+        |  FROM ev
+        |)
+        |SELECT user_id, event_type, ts AS valid_from,
+        |       lead(ts) OVER (PARTITION BY user_id
+        |                      ORDER BY ts, event_id) AS valid_to
+        |FROM ch WHERE prev IS NULL OR prev <> event_type""".stripMargin)),
 
     // As-of join (pandas merge_asof / kdb aj): each view event picks the
     // same user's most recent purchase at-or-before it — one keyed
     // shuffle + window pass, no inequality nested loop. Ties (same ts)
     // break by largest purchase event_id, mirrored in the oracle's
     // row_number ordering. Times ride as microsecond longs.
-    "q18_asof_join" -> ((s, dir) => {
+    Query("q18_asof_join", (s, dir) => {
       val e = graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events")))
       val views = e.filter(col("event_type") === "view")
         .select(col("event_id"), col("user_id"), col("ts_us"))
@@ -1580,14 +2681,35 @@ object SparkEntry {
         rightTimeCol = "purchase_us",
         rightCols = Seq("purchase_event_id", "purchase_us", "purchase_value"),
         tiebreakCols = Seq("purchase_event_id"), prefix = "")
-    }),
+    },
+    // As-of semantics as an independent formulation: inequality LEFT JOIN
+    // + row_number picking the latest (ties: largest event_id) — the same
+    // contract the window carry-forward implements in one shuffle.
+    Sql(
+      """WITH ev AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
+        |         round(value, 2) AS value
+        |  FROM events
+        |), m AS (
+        |  SELECT v.event_id, v.user_id, v.ts_us,
+        |         p.event_id AS purchase_event_id, p.ts_us AS purchase_us,
+        |         p.value AS purchase_value,
+        |         row_number() OVER (PARTITION BY v.event_id
+        |                            ORDER BY p.ts_us DESC, p.event_id DESC) AS rn
+        |  FROM (SELECT * FROM ev WHERE event_type = 'view') v
+        |  LEFT JOIN (SELECT * FROM ev WHERE event_type = 'purchase') p
+        |    ON p.user_id = v.user_id AND p.ts_us <= v.ts_us
+        |)
+        |SELECT event_id, user_id, ts_us,
+        |       purchase_event_id, purchase_us, purchase_value
+        |FROM m WHERE rn = 1""".stripMargin)),
 
     // Pure time-range join (no equi-key): for every click, how many events
     // of ANY user landed in the trailing 5 minutes. Bin equi-join +
     // residual — the shape Catalyst would otherwise plan as a
     // BroadcastNestedLoopJoin. Every click matches at least itself, so the
     // inner interval join keeps all clicks and `count - 1` excludes self.
-    "q19_range_join" -> ((s, dir) => {
+    Query("q19_range_join", (s, dir) => {
       val e = graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events")))
       val clicks = e.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"),
@@ -1599,7 +2721,17 @@ object SparkEntry {
         binWidth = 300L * 1000000L)
         .groupBy(col("click_id"))
         .agg((count(lit(1)) - 1L).as("nearby"))
-    }),
+    },
+    // Pure range join: every click matches at least itself, so count - 1
+    // is the trailing-window neighbor count (self excluded).
+    Sql(
+      """WITH ev AS (
+        |  SELECT event_id, epoch_us(ts) AS ts_us, event_type FROM events
+        |)
+        |SELECT a.event_id AS click_id, count(*) - 1 AS nearby
+        |FROM (SELECT event_id, ts_us FROM ev WHERE event_type = 'click') a
+        |JOIN ev b ON b.ts_us >= a.ts_us - 300000000 AND b.ts_us <= a.ts_us
+        |GROUP BY 1""".stripMargin)),
 
     // Heavy hitters: top-20 word 3-grams by frequency via the mergeable
     // Misra-Gries aggregate — bounded memory at any corpus size (the
@@ -1609,7 +2741,7 @@ object SparkEntry {
     // at 100 TB the same plan holds with estimates bounded by
     // n/(capacity+1). Grams are built in-row (transform over the token
     // array), NON-distinct — frequency needs the multiset.
-    "corpus_heavy_ngrams" -> ((s, dir) => {
+    Query("corpus_heavy_ngrams", (s, dir) => {
       import graft.functions.FreqAgg.topk_freq
       val grams = widenScan(s.read.parquet(t(dir, "documents"))
           .select(col("text")), col("text"))
@@ -1622,7 +2754,23 @@ object SparkEntry {
         .select(posexplode(col("top")))
         .select((col("pos") + 1).cast(LongType).as("rank"),
           col("col.item").as("gram"), col("col.est").as("n"))
-    }),
+    },
+    // Exact formulation of the heavy-hitters query: the sketch's capacity
+    // exceeds the distinct-gram count at test scale, so Misra-Gries
+    // counts are exact and the two must match row-for-row.
+    Sql(
+      """WITH toks AS (
+        |  SELECT string_split_regex(trim(text), '\s+') AS w FROM documents
+        |), g AS (
+        |  SELECT unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+        |                 for i in range(1, len(w) - 1)]) AS gram
+        |  FROM toks WHERE len(w) >= 3
+        |), c AS (
+        |  SELECT gram, count(*) AS n FROM g GROUP BY gram
+        |)
+        |SELECT CAST(row_number() OVER (ORDER BY n DESC, gram) AS BIGINT) AS rank,
+        |       gram, n
+        |FROM c ORDER BY n DESC, gram LIMIT 20""".stripMargin)),
 
     // Exact interpolated percentiles (Spark `percentile` == DuckDB
     // quantile_cont — both linear interpolation over the sorted group).
@@ -1632,7 +2780,7 @@ object SparkEntry {
     // capacity. Correct (and the oracle form) at test scale; at 100 TB
     // use q20b's approx_percentile path, whose GK-sketch state is bounded
     // by `accuracy` no matter the data volume.
-    "q20_percentiles" -> ((s, dir) => {
+    Query("q20_percentiles", (s, dir) => {
       widenScan(s.read.parquet(t(dir, "lineitem"))
           .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice")),
           col("l_extendedprice"))
@@ -1642,7 +2790,13 @@ object SparkEntry {
           round(expr("percentile(l_quantity, 0.5)"), 2).as("p50_qty"),
           round(expr("percentile(l_quantity, 0.75)"), 2).as("p75_qty"),
           round(expr("percentile(l_extendedprice, 0.9)"), 2).as("p90_price"))
-    }),
+    }, Sql(
+      """SELECT l_returnflag,
+        |       round(quantile_cont(l_quantity, 0.25), 2) AS p25_qty,
+        |       round(quantile_cont(l_quantity, 0.5), 2) AS p50_qty,
+        |       round(quantile_cont(l_quantity, 0.75), 2) AS p75_qty,
+        |       round(quantile_cont(l_extendedprice, 0.9), 2) AS p90_price
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
 
     // Scale-safe percentiles: approx_percentile's Greenwald-Khanna sketch
     // holds O(accuracy) state per group regardless of data volume — the
@@ -1651,7 +2805,7 @@ object SparkEntry {
     // oracle) plus "every approx value sits between the exact percentiles
     // at p±0.01" — 100x the sketch's guaranteed 1/accuracy rank error, so
     // a sketch drifting out of tolerance flips the hash-checked boolean
-    "q20b_approx_percentiles" -> ((s, dir) => {
+    Query("q20b_approx_percentiles", (s, dir) => {
       val ranks = "array(0.24, 0.25, 0.26, 0.49, 0.5, 0.51, 0.74, 0.75, 0.76)"
       def ex(i: Int) = element_at(col("ex"), i)
       def ap(i: Int) = element_at(col("ap"), i)
@@ -1668,12 +2822,22 @@ object SparkEntry {
           round(ex(5), 2).as("p50_qty"),
           round(ex(8), 2).as("p75_qty"),
           within.as("within_bound"))
-    }),
+    },
+    // the sketch estimate is engine-specific; the checkable claim is the
+    // exact percentiles plus the estimate's rank-error bound, which the
+    // Spark side reduces to a boolean (same contract as q13)
+    Sql(
+      """SELECT l_returnflag,
+        |       round(quantile_cont(l_quantity, 0.25), 2) AS p25_qty,
+        |       round(quantile_cont(l_quantity, 0.5), 2) AS p50_qty,
+        |       round(quantile_cont(l_quantity, 0.75), 2) AS p75_qty,
+        |       true AS within_bound
+        |FROM lineitem GROUP BY l_returnflag""".stripMargin)),
 
     // GROUPING SETS beyond rollup/cube: two single-column sets + the
     // grand total, with grouping_id disambiguating subtotal nulls from
     // (hypothetical) real nulls
-    "q21_grouping_sets" -> ((s, dir) => {
+    Query("q21_grouping_sets", (s, dir) => {
       s.read.parquet(t(dir, "orders")).createOrReplaceTempView("orders_gs")
       s.sql("""SELECT o_orderstatus, o_orderpriority,
               |       CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT)
@@ -1682,17 +2846,30 @@ object SparkEntry {
               |FROM orders_gs
               |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
               |""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT o_orderstatus, o_orderpriority,
+        |       CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
+        |       count(*) AS n, round(sum(o_totalprice), 2) AS total
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin)),
 
     // Pivot (wide aggregation): per-user event counts, one column per
     // event type — compiles to ONE pass with conditional aggregates, the
     // same plan the oracle's FILTER clauses describe
-    "q22_pivot" -> ((s, dir) => wideEventCounts(s, dir)),
+    Query("q22_pivot", (s, dir) => wideEventCounts(s, dir),
+    Sql(
+      """SELECT user_id,
+        |       count(*) FILTER (WHERE event_type = 'click') AS n_click,
+        |       count(*) FILTER (WHERE event_type = 'view') AS n_view,
+        |       count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
+        |       count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
+        |       count(*) FILTER (WHERE event_type = 'error') AS n_error
+        |FROM events GROUP BY user_id""".stripMargin)),
 
     // RANGE window frame (value-based, not row-based): running revenue
     // over a sliding VALUE window of order dates per priority class —
     // rows sharing a date contribute together regardless of row order
-    "q23_range_frame" -> ((s, dir) => {
+    Query("q23_range_frame", (s, dir) => {
       s.read.parquet(t(dir, "orders")).createOrReplaceTempView("orders_rf")
       s.sql("""SELECT o_orderkey,
               |       round(sum(o_totalprice) OVER (
@@ -1705,22 +2882,46 @@ object SparkEntry {
               |               AS epoch_days
               |      FROM orders_rf)
               |""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT o_orderkey,
+        |       round(sum(o_totalprice) OVER (
+        |         PARTITION BY o_orderpriority
+        |         ORDER BY epoch_days
+        |         RANGE BETWEEN 30 PRECEDING AND CURRENT ROW), 2) AS rev_30d
+        |FROM (SELECT o_orderkey, o_orderpriority, o_totalprice,
+        |             CAST(date_diff('day', DATE '1970-01-01',
+        |                            CAST(o_orderdate AS DATE)) AS BIGINT)
+        |               AS epoch_days
+        |      FROM orders)""".stripMargin)),
 
     // Unpivot/melt: wide per-type counts back to long (type, n) rows —
     // the literal inverse of q22_pivot (same wide frame), one pass, no join
-    "q24_unpivot" -> ((s, dir) => {
+    Query("q24_unpivot", (s, dir) => {
       wideEventCounts(s, dir).unpivot(Array(col("user_id")),
         Array(col("n_click"), col("n_view"), col("n_purchase"),
           col("n_signup"), col("n_error")),
         "event_type", "n")
-    }),
+    }, Sql(
+      """WITH wide AS (
+        |  SELECT user_id,
+        |         count(*) FILTER (WHERE event_type = 'click') AS n_click,
+        |         count(*) FILTER (WHERE event_type = 'view') AS n_view,
+        |         count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
+        |         count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
+        |         count(*) FILTER (WHERE event_type = 'error') AS n_error
+        |  FROM events GROUP BY user_id
+        |)
+        |SELECT user_id, 'n_click' AS event_type, n_click AS n FROM wide
+        |UNION ALL SELECT user_id, 'n_view', n_view FROM wide
+        |UNION ALL SELECT user_id, 'n_purchase', n_purchase FROM wide
+        |UNION ALL SELECT user_id, 'n_signup', n_signup FROM wide
+        |UNION ALL SELECT user_id, 'n_error', n_error FROM wide""".stripMargin)),
 
     // Snapshot diff — deterministic synthetic "tomorrow": every 7th doc
     // dropped, every 10th survivor's text amended, every 13th re-added
     // under a shifted id; both sides reduce to 16-byte fingerprints
     // before the full-outer join, so text never shuffles
-    "corpus_snapshot_diff" -> ((s, dir) => {
+    Query("corpus_snapshot_diff", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents")).select(col("doc_id"), col("text"))
       val kept = d.filter(col("doc_id") % 7 =!= 0)
         .withColumn("text", when(col("doc_id") % 10 === 0,
@@ -1729,58 +2930,171 @@ object SparkEntry {
         .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
       graft.operators.Curate.snapshotDiff(
         d, kept.unionByName(adds), "doc_id", "text")
-    }),
+    },
+    // text inequality in the oracle == md5 inequality on the Spark side
+    // (the exact-dedup content-identity contract)
+    Sql(
+      """WITH newd AS (
+        |  SELECT doc_id,
+        |         CASE WHEN doc_id % 10 = 0 THEN text || ' v2' ELSE text END AS text
+        |  FROM documents WHERE doc_id % 7 <> 0
+        |  UNION ALL
+        |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 13 = 0
+        |)
+        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
+        |       CASE WHEN o.doc_id IS NULL THEN 'added'
+        |            WHEN n.doc_id IS NULL THEN 'removed'
+        |            WHEN o.text <> n.text THEN 'changed'
+        |            ELSE 'unchanged' END AS change_type
+        |FROM documents o FULL OUTER JOIN newd n ON o.doc_id = n.doc_id
+        |WHERE NOT (o.doc_id IS NOT NULL AND n.doc_id IS NOT NULL
+        |           AND o.text = n.text)""".stripMargin)),
 
     // Z-order clustering key over (orderkey, partkey), each min/max-
     // scaled to 16 bits: the multi-column data-skipping sort key. The
     // oracle recomputes bounds, scaling, and all 32 interleave terms
-    "q40_zorder_key" -> ((s, dir) => {
+    Query("q40_zorder_key", (s, dir) => {
       graft.operators.Zorder.withZKey(
         s.read.parquet(t(dir, "lineitem"))
           .select(col("l_orderkey"), col("l_partkey")),
         Seq("l_orderkey", "l_partkey"), outCol = "z", bits = 16)
+    },
+    // the 16 interleave terms per dimension: dim j's bit b lands at
+    // output position b*2 + j (disjoint bits, so + is |)
+    Sql {
+      val terms = (0 until 16).flatMap { b =>
+        Seq(s"(((a >> $b) & 1) << ${2 * b})",
+          s"(((c >> $b) & 1) << ${2 * b + 1})")
+      }.mkString(" + ")
+      """WITH bnd AS (
+        |  SELECT CAST(min(l_orderkey) AS DOUBLE) AS lo1,
+        |         CAST(max(l_orderkey) AS DOUBLE) AS hi1,
+        |         CAST(min(l_partkey) AS DOUBLE) AS lo2,
+        |         CAST(max(l_partkey) AS DOUBLE) AS hi2
+        |  FROM lineitem
+        |), s AS (
+        |  SELECT l_orderkey, l_partkey,
+        |    CAST(floor((CAST(l_orderkey AS DOUBLE) - lo1) * (65535.0 / (hi1 - lo1))) AS BIGINT) AS a,
+        |    CAST(floor((CAST(l_partkey AS DOUBLE) - lo2) * (65535.0 / (hi2 - lo2))) AS BIGINT) AS c
+        |  FROM lineitem, bnd
+        |)
+        |SELECT l_orderkey, l_partkey, """.stripMargin +
+        s"CAST($terms AS BIGINT) AS z FROM s"
     }),
 
     // Pearson correlation matrix over four lineitem measures (price
     // scaled to O(1) so round-6 covariances sit far above summation
     // noise) — one covariance pass, k(k+1)/2-row normalization joins
-    "profile_corr" -> ((s, dir) => {
+    Query("profile_corr", (s, dir) => {
       val li = s.read.parquet(t(dir, "lineitem"))
         .withColumn("price_100k", col("l_extendedprice") / 100000.0)
       graft.operators.Stats.corrMatrix(li,
         Seq("l_quantity", "l_discount", "l_tax", "price_100k"))
+    },
+    // covar_pop per pair on the same scaled columns, then corr derived
+    // from the round-6 covariances exactly as the Scala side does
+    Sql {
+      val names = Seq("l_quantity", "l_discount", "l_tax", "price_100k")
+      val pairs = for (i <- 1 to 4; j <- i to 4) yield
+        s"SELECT $i AS i, $j AS j, round(covar_pop(c$i, c$j), 6) + 0.0 AS cov FROM src"
+      val nameList = names.map(n => s"'$n'").mkString("[", ", ", "]")
+      s"""WITH src AS (
+         |  SELECT CAST(l_quantity AS DOUBLE) AS c1,
+         |         CAST(l_discount AS DOUBLE) AS c2,
+         |         CAST(l_tax AS DOUBLE) AS c3,
+         |         l_extendedprice / 100000.0 AS c4
+         |  FROM lineitem
+         |), cv AS (
+         |${pairs.mkString("  ", "\n  UNION ALL ", "")}
+         |), d AS (SELECT i AS k, cov AS v FROM cv WHERE i = j)
+         |SELECT $nameList[cv.i] AS col_i, $nameList[cv.j] AS col_j,
+         |       CASE WHEN di.v > 0 AND dj.v > 0
+         |            THEN round(cv.cov / sqrt(di.v * dj.v), 6) + 0.0 END AS corr
+         |FROM cv JOIN d di ON di.k = cv.i JOIN d dj ON dj.k = cv.j""".stripMargin
     }),
 
     // Equi-width price histogram (24 x 5000-wide buckets — w binary-exact
     // so bucket bounds hash identically); the data-card distribution view
-    "profile_histogram" -> ((s, dir) => {
+    Query("profile_histogram", (s, dir) => {
       graft.operators.Profile.histogram(
         s.read.parquet(t(dir, "lineitem")), "l_extendedprice",
         lo = 0.0, hi = 120000.0, bins = 24)
-    }),
+    }, Sql(
+      """WITH b AS (
+        |  SELECT CASE WHEN l_extendedprice < 0.0 THEN -1
+        |              WHEN l_extendedprice >= 120000.0 THEN 24
+        |              ELSE CAST(least(floor((CAST(l_extendedprice AS DOUBLE) - 0.0)
+        |                                    / 5000.0), 23.0) AS INTEGER) END AS bin
+        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
+        |)
+        |SELECT bin, count(*) AS n,
+        |       round(0.0 + bin * 5000.0, 6) AS bin_lo,
+        |       round(0.0 + (bin + 1) * 5000.0, 6) AS bin_hi
+        |FROM b GROUP BY 1""".stripMargin)),
 
     // Equi-height (quartile) histogram of the price column — exact
     // percentile boundaries rounded to the shared 2-decimal contract,
     // then one bucketing scan
-    "profile_histogram_eq" -> ((s, dir) => {
+    Query("profile_histogram_eq", (s, dir) => {
       graft.operators.Profile.equiHeightHistogram(
         s.read.parquet(t(dir, "lineitem")), "l_extendedprice", bins = 4)
-    }),
+    },
+    // quantile_cont == Spark's exact percentile at round-2 (the q20
+    // precedent); identical rounded boundaries -> identical buckets
+    Sql(
+      """WITH b AS (
+        |  SELECT round(quantile_cont(l_extendedprice, 0.25), 2) AS b1,
+        |         round(quantile_cont(l_extendedprice, 0.50), 2) AS b2,
+        |         round(quantile_cont(l_extendedprice, 0.75), 2) AS b3
+        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
+        |), x AS (
+        |  SELECT CASE WHEN l_extendedprice <= b1 THEN 0
+        |              WHEN l_extendedprice <= b2 THEN 1
+        |              WHEN l_extendedprice <= b3 THEN 2
+        |              ELSE 3 END AS bin
+        |  FROM lineitem, b WHERE l_extendedprice IS NOT NULL
+        |)
+        |SELECT x.bin, count(*) AS n,
+        |       CASE x.bin WHEN 0 THEN b.b1 WHEN 1 THEN b.b2
+        |                  WHEN 2 THEN b.b3 END AS hi_bound
+        |FROM x, b GROUP BY 1, 3""".stripMargin)),
 
     // The 100 TB boundary path: quartile boundaries from a deterministic
     // 5% md5 row sample (boundary-pass state bounded by the sample, not
     // the corpus), full-data bucket counts — bit-reproducible in DuckDB,
     // unlike a sketch
-    "profile_histogram_eq_approx" -> ((s, dir) => {
+    Query("profile_histogram_eq_approx", (s, dir) => {
       graft.operators.Profile.equiHeightHistogramSampled(
         s.read.parquet(t(dir, "lineitem")), "l_extendedprice",
         idCol = "l_orderkey", bins = 4, keepPerMille = 50)
-    }),
+    },
+    // same md5 row sample, same quantile_cont boundaries, same buckets —
+    // the whole scale-path histogram hash-checks (not just a boolean)
+    Sql(
+      """WITH b AS (
+        |  SELECT round(quantile_cont(l_extendedprice, 0.25), 2) AS b1,
+        |         round(quantile_cont(l_extendedprice, 0.50), 2) AS b2,
+        |         round(quantile_cont(l_extendedprice, 0.75), 2) AS b3
+        |  FROM lineitem
+        |  WHERE l_extendedprice IS NOT NULL
+        |    AND CAST('0x' || substr(md5('ehist:' || CAST(l_orderkey AS VARCHAR)), 1, 8)
+        |             AS BIGINT) % 1000 < 50
+        |), x AS (
+        |  SELECT CASE WHEN l_extendedprice <= b1 THEN 0
+        |              WHEN l_extendedprice <= b2 THEN 1
+        |              WHEN l_extendedprice <= b3 THEN 2
+        |              ELSE 3 END AS bin
+        |  FROM lineitem, b WHERE l_extendedprice IS NOT NULL
+        |)
+        |SELECT x.bin, count(*) AS n,
+        |       CASE x.bin WHEN 0 THEN b.b1 WHEN 1 THEN b.b2
+        |                  WHEN 2 THEN b.b3 END AS hi_bound
+        |FROM x, b GROUP BY 1, 3""".stripMargin)),
 
     // Categorical data card: top-3 most frequent values per column via
     // the bounded-memory Misra-Gries aggregate (capacity 64 >> distinct
     // -> exact counts; ties break count desc then value asc)
-    "profile_topvalues" -> ((s, dir) => {
+    Query("profile_topvalues", (s, dir) => {
       import graft.functions.FreqAgg.topk_freq
       val o = s.read.parquet(t(dir, "orders"))
       def top(c: String) =
@@ -1789,20 +3103,55 @@ object SparkEntry {
           .select(col("col_name"), (col("pos") + 1).cast(LongType).as("rank"),
             col("col.item").as("value"), col("col.est").as("n"))
       top("o_orderstatus").unionByName(top("o_orderpriority"))
-    }),
+    }, Sql(
+      """WITH s AS (
+        |  SELECT 'o_orderstatus' AS col_name, o_orderstatus AS value FROM orders
+        |  UNION ALL
+        |  SELECT 'o_orderpriority', o_orderpriority FROM orders
+        |), c AS (
+        |  SELECT col_name, value, count(*) AS n FROM s GROUP BY 1, 2
+        |), r AS (
+        |  SELECT col_name, value, n,
+        |    CAST(row_number() OVER (PARTITION BY col_name
+        |                            ORDER BY n DESC, value) AS BIGINT) AS rank
+        |  FROM c
+        |)
+        |SELECT col_name, rank, value, n FROM r WHERE rank <= 3""".stripMargin)),
 
     // Data-card column profile: every column's counts/nulls/cardinality/
     // range in ONE scan (one Aggregate, stack()'d afterwards) — the fact
     // sheet a dataset release ships with
-    "profile_stats" -> ((s, dir) => {
+    Query("profile_stats", (s, dir) => {
       graft.operators.Profile.profile(s.read.parquet(t(dir, "lineitem")),
         numCols = Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_discount"),
         strCols = Seq("l_returnflag", "l_linestatus"))
+    },
+    // one UNION ALL branch per profiled column (fine at oracle scale;
+    // the Spark side is the one-scan form)
+    Sql {
+      val num = Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
+      val str = Seq("l_returnflag", "l_linestatus")
+      (num.map { c =>
+        s"""SELECT '$c' AS "column", count(*) AS n_rows,
+           |  count(*) - count($c) AS n_nulls,
+           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
+           |  round(CAST(min($c) AS DOUBLE), 4) AS min_num,
+           |  round(CAST(max($c) AS DOUBLE), 4) AS max_num,
+           |  CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
+           |FROM lineitem""".stripMargin
+      } ++ str.map { c =>
+        s"""SELECT '$c' AS "column", count(*) AS n_rows,
+           |  count(*) - count($c) AS n_nulls,
+           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
+           |  CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
+           |  min($c) AS min_str, max($c) AS max_str
+           |FROM lineitem""".stripMargin
+      }).mkString("\nUNION ALL\n")
     }),
 
     // Corpus profiling: the per-source shape stats a pipeline reads before
     // deciding mixing rates — counts, length distribution, token mass
-    "q25_source_stats" -> ((s, dir) => {
+    Query("q25_source_stats", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       d.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1810,11 +3159,18 @@ object SparkEntry {
           round(expr("percentile(n_chars, 0.5)"), 2).as("p50_chars"),
           max(col("n_chars")).as("max_chars"),
           sum(graft.operators.TextAnalysis.tokenCount(col("text"))).as("total_tokens"))
-    }),
+    }, Sql(
+      """SELECT source, count(*) AS n_docs,
+        |       round(avg(n_chars), 2) AS avg_chars,
+        |       round(quantile_cont(n_chars, 0.5), 2) AS p50_chars,
+        |       max(n_chars) AS max_chars,
+        |       CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
+        |         AS total_tokens
+        |FROM documents GROUP BY source""".stripMargin)),
 
     // Full outer join: per-user click vs purchase activity, users present
     // on either side survive with zero-filled counts
-    "q26_full_outer" -> ((s, dir) => {
+    Query("q26_full_outer", (s, dir) => {
       val e = s.read.parquet(t(dir, "events"))
       val clicks = e.filter(col("event_type") === "click")
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_clicks"))
@@ -1826,12 +3182,25 @@ object SparkEntry {
           coalesce(col("n_clicks"), lit(0L)).as("n_clicks"),
           coalesce(col("n_purchases"), lit(0L)).as("n_purchases"),
           coalesce(col("purchase_value"), lit(0.0)).as("purchase_value"))
-    }),
+    }, Sql(
+      """WITH c AS (
+        |  SELECT user_id, count(*) AS n_clicks FROM events
+        |  WHERE event_type = 'click' GROUP BY user_id
+        |), p AS (
+        |  SELECT user_id, count(*) AS n_purchases,
+        |         round(sum(value), 2) AS purchase_value
+        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id
+        |)
+        |SELECT coalesce(c.user_id, p.user_id) AS user_id,
+        |       coalesce(n_clicks, 0) AS n_clicks,
+        |       coalesce(n_purchases, 0) AS n_purchases,
+        |       coalesce(purchase_value, 0.0) AS purchase_value
+        |FROM c FULL OUTER JOIN p ON c.user_id = p.user_id""".stripMargin)),
 
     // Lateral (correlated) join: each nation's two highest-balance
     // customers via a per-row subquery — Catalyst decorrelates it into
     // the ranked-window plan instead of executing per-nation subqueries
-    "q27_lateral" -> ((s, dir) => {
+    Query("q27_lateral", (s, dir) => {
       s.read.parquet(t(dir, "nation")).createOrReplaceTempView("nation_lat")
       s.read.parquet(t(dir, "customer")).createOrReplaceTempView("customer_lat")
       s.sql("""SELECT n.n_name, t.c_name, round(t.c_acctbal, 2) AS acctbal
@@ -1842,13 +3211,20 @@ object SparkEntry {
               |  ORDER BY c_acctbal DESC, c_name LIMIT 2
               |) t
               |""".stripMargin)
-    }),
+    }, Sql(
+      """SELECT n.n_name, t.c_name, round(t.c_acctbal, 2) AS acctbal
+        |FROM nation n,
+        |LATERAL (
+        |  SELECT c_name, c_acctbal FROM customer c
+        |  WHERE c.c_nationkey = n.n_nationkey
+        |  ORDER BY c_acctbal DESC, c_name LIMIT 2
+        |) t""".stripMargin)),
 
     // Time-series densify/gap-fill: hourly counts per event type
     // INCLUDING empty hours — sequence-explode the full hour range per
     // type (tiny dimension), left-join the sparse aggregates, zero-fill.
     // The generated axis is dimension-sized, so the join broadcasts.
-    "q28_gap_fill" -> ((s, dir) => {
+    Query("q28_gap_fill", (s, dir) => {
       val e = graft.core.EventTime.withTsUs(s.read.parquet(t(dir, "events")))
         .withColumn("hour", expr("ts_us div 3600000000").cast(LongType))
       val sparse = e.groupBy(col("event_type"), col("hour"))
@@ -1860,13 +3236,25 @@ object SparkEntry {
       axis.join(sparse, Seq("event_type", "hour"), "left")
         .select(col("event_type"), col("hour"),
           coalesce(col("n"), lit(0L)).as("n"))
-    }),
+    }, Sql(
+      """WITH e AS (
+        |  SELECT event_type, epoch_ns(ts) // 3600000000000 AS hour FROM events
+        |), sparse AS (
+        |  SELECT event_type, hour, count(*) AS n FROM e GROUP BY 1, 2
+        |), bounds AS (
+        |  SELECT event_type, min(hour) AS lo, max(hour) AS hi FROM e GROUP BY 1
+        |), axis AS (
+        |  SELECT event_type, unnest(generate_series(lo, hi)) AS hour FROM bounds
+        |)
+        |SELECT a.event_type, a.hour, coalesce(s.n, 0) AS n
+        |FROM axis a LEFT JOIN sparse s
+        |  ON a.event_type = s.event_type AND a.hour = s.hour""".stripMargin)),
 
     // Within-doc line dedup (C4-style boilerplate removal). The synthetic
     // docs are single-line, so each doc PLANTS duplicate lines (text +
     // 40-char prefix, twice) — both engines build the same input, then
     // keep first occurrences in order
-    "text_line_dedup" -> ((s, dir) => {
+    Query("text_line_dedup", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       val multi = concat_ws("\n", col("text"), substring(col("text"), 1, 40),
         col("text"), substring(col("text"), 1, 40))
@@ -1875,13 +3263,28 @@ object SparkEntry {
         size(split(multi, "\n")).cast(LongType).as("n_lines"),
         size(split(deduped, "\n")).cast(LongType).as("n_unique"),
         md5(deduped).as("dedup_md5"))
-    }),
+    }, Sql(
+      """WITH m AS (
+        |  SELECT doc_id,
+        |         text || chr(10) || substr(text, 1, 40) || chr(10) ||
+        |         text || chr(10) || substr(text, 1, 40) AS mt
+        |  FROM documents
+        |), l AS (
+        |  SELECT doc_id, string_split(mt, chr(10)) AS lines FROM m
+        |), dd AS (
+        |  SELECT doc_id, CAST(len(lines) AS BIGINT) AS n_lines,
+        |         list_filter(lines, (x, i) -> list_position(lines, x) = i) AS u
+        |  FROM l
+        |)
+        |SELECT doc_id, n_lines, CAST(len(u) AS BIGINT) AS n_unique,
+        |       md5(array_to_string(u, chr(10))) AS dedup_md5
+        |FROM dd""".stripMargin)),
 
     // PII redaction (scan-stage regexp_replace chain, codegen'd): the
     // synthetic corpus carries no PII, so each doc PLANTS a deterministic
     // email + IPv4 + phone derived from its id, redacts, and emits the
     // md5 plus the tag count — proving every planted item was caught.
-    "text_redact" -> ((s, dir) => {
+    Query("text_redact", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       val planted = concat(col("text"),
         lit(" contact user"), col("doc_id").cast(StringType),
@@ -1892,25 +3295,78 @@ object SparkEntry {
       d.select(col("doc_id"), md5(redacted).as("redacted_md5"),
         graft.functions.match_count(redacted, "\\[(EMAIL|IP|PHONE)\\]")
           .as("n_tags"))
-    }),
+    }, Sql(
+      """WITH planted AS (
+        |  SELECT doc_id,
+        |         text || ' contact user' || doc_id || '@example.com or 10.0.' ||
+        |         (doc_id % 256) || '.7 and +1 555-' ||
+        |         lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-1234' AS t
+        |  FROM documents
+        |), red AS (
+        |  SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(t,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
+        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
+        |    '(?:\+?\d{1,2}[ .-])?\(?\d{3}\)?[ .-]\d{3}[ .-]\d{4}\b', '[PHONE]', 'g') AS r
+        |  FROM planted
+        |)
+        |SELECT doc_id, md5(r) AS redacted_md5,
+        |       CAST(len(regexp_extract_all(r, '\[(EMAIL|IP|PHONE)\]')) AS BIGINT)
+        |         AS n_tags
+        |FROM red""".stripMargin)),
 
     // Sliding token-window passage chunking (RAG / long-doc training
     // prep): 32-token windows at stride 24, tail always emitted,
     // integer-exact window count so both engines agree row-for-row
-    "text_chunks" -> ((s, dir) => {
+    Query("text_chunks", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.TextAnalysis.chunkPassages(d, "doc_id", "text",
         chunkTokens = 32, strideTokens = 24)
-    }),
+    }, Sql(
+      """WITH t AS (
+        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
+        |  FROM documents
+        |), w AS (
+        |  SELECT doc_id, toks,
+        |         1 + (greatest(len(toks) - 32, 0) + 23) // 24 AS n_chunks
+        |  FROM t
+        |), x AS (
+        |  SELECT doc_id, toks, unnest(range(0, n_chunks)) AS i FROM w
+        |)
+        |SELECT doc_id, CAST(i AS INTEGER) AS chunk_idx,
+        |       array_to_string(toks[i*24+1 : i*24+32], ' ') AS chunk_text,
+        |       CAST(len(toks[i*24+1 : i*24+32]) AS BIGINT) AS chunk_tokens
+        |FROM x""".stripMargin)),
 
     // TF-IDF keyword extraction: top-3 terms per doc on the ROUNDED
     // score (term-text tie-break) — one (doc,term) exchange, a
     // vocabulary-sized df broadcast, per-doc windows
-    "text_tfidf_terms" -> ((s, dir) => {
+    Query("text_tfidf_terms", (s, dir) => {
       val d = widenScan(s.read.parquet(t(dir, "documents"))
         .select(col("doc_id"), col("text")), col("doc_id"))
       graft.operators.Search.tfidfTopTerms(d, "doc_id", "text", k = 3)
-    }),
+    },
+    // smoothed-idf formula mirrored op-for-op; ranking on the rounded
+    // score keeps order identical under 1-ulp ln drift
+    Sql(
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term
+        |  FROM documents
+        |), tf AS (
+        |  SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term
+        |), df AS (
+        |  SELECT term, count(*) AS df FROM tf GROUP BY term
+        |), n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
+        |s AS (
+        |  SELECT tf.doc_id, tf.term,
+        |         round(CAST(tf.tf AS DOUBLE)
+        |               * (ln((n.n + 1.0) / (CAST(df.df AS DOUBLE) + 1.0)) + 1.0), 4) AS score
+        |  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n
+        |)
+        |SELECT doc_id, term, score, rank FROM (
+        |  SELECT doc_id, term, score,
+        |         CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS BIGINT) AS rank
+        |  FROM s
+        |) WHERE rank <= 3""".stripMargin)),
 
     // PageRank (5 iterations, d = 0.85) over the symmetrized
     // customer-supplier interaction graph: edges+outdeg checkpointed
@@ -1922,7 +3378,7 @@ object SparkEntry {
     // keys instead of strings (job profile r20: the string-keyed loop
     // re-read a 121MB checkpoint per iteration; long keys shrink the
     // cached edge rows and every per-iteration exchange/probe with them)
-    "graph_pagerank" -> ((s, dir) => {
+    Query("graph_pagerank", (s, dir) => {
       val o = s.read.parquet(t(dir, "orders"))
         .select(col("o_orderkey"), col("o_custkey"))
       val l = s.read.parquet(t(dir, "lineitem"))
@@ -1939,6 +3395,35 @@ object SparkEntry {
             concat(lit("c"), shiftright(col("node"), 1)))
           .otherwise(concat(lit("s"), shiftright(col("node"), 1))).as("node"),
           round(col("r"), 6).as("rank"))
+    },
+    // 5 unrolled iterations (no recursive aggregate needed); constants
+    // computed as (1.0 - 0.85) in doubles on BOTH sides so the literal
+    // is the identical IEEE value; round 6 hides sum-order ulps
+    Sql {
+      val base =
+        """WITH e AS (
+          |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
+          |                  's' || CAST(l_suppkey AS VARCHAR) AS dst
+          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+          |), ee AS (
+          |  SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e
+          |), deg AS (SELECT src, count(*) AS outdeg FROM ee GROUP BY src),
+          |n AS (SELECT DISTINCT src AS node FROM ee),
+          |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS r FROM n)""".stripMargin
+      val steps = (1 to 5).map { i =>
+        s""",
+           |r$i AS (
+           |  SELECT n.node,
+           |         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))
+           |           + CAST(0.85 AS DOUBLE)
+           |             * coalesce(sum(r.r / CAST(deg.outdeg AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS r
+           |  FROM n LEFT JOIN ee ON ee.dst = n.node
+           |         LEFT JOIN r${i - 1} r ON r.node = ee.src
+           |         LEFT JOIN deg ON deg.src = ee.src
+           |  GROUP BY n.node
+           |)""".stripMargin
+      }.mkString
+      base + steps + "\nSELECT node, round(r, 6) AS rank FROM r5"
     }),
 
     // Triangle census of the part co-occurrence graph (parts bought in
@@ -1953,142 +3438,506 @@ object SparkEntry {
     // reuses the widening exchange (zero added shuffles) — without it
     // the collect_set partials and the in-row pair explode run on the
     // scan's 1-3 effective tasks (job profile r20: 14s of the census's 19s)
-    "graph_triangles" -> ((s, dir) => {
+    Query("graph_triangles", (s, dir) => {
       val edges = graft.operators.Graph.coOccurrenceEdges(
         widenScan(s.read.parquet(t(dir, "lineitem"))
           .select(col("l_orderkey"), col("l_partkey")), col("l_orderkey")),
         "l_orderkey", "l_partkey", maxBasket = 64)
       graft.operators.Graph.triangleStats(edges, "a", "b")
-    }),
+    },
+    // textbook a<b<c three-way self-join (fine at oracle scale; the
+    // Spark side earns its keep via the degree orientation)
+    Sql(
+      """WITH ed AS (
+        |  SELECT DISTINCT la.l_partkey AS a, lb.l_partkey AS b
+        |  FROM lineitem la JOIN lineitem lb
+        |    ON la.l_orderkey = lb.l_orderkey AND la.l_partkey < lb.l_partkey
+        |), deg AS (
+        |  SELECT n, count(*) AS d
+        |  FROM (SELECT a AS n FROM ed UNION ALL SELECT b FROM ed)
+        |  GROUP BY 1
+        |), tri AS (
+        |  SELECT count(*) AS t FROM ed e1, ed e2, ed e3
+        |  WHERE e1.a = e2.a AND e1.b < e2.b
+        |    AND e3.a = e1.b AND e3.b = e2.b
+        |)
+        |SELECT (SELECT count(*) FROM deg) AS n_nodes,
+        |       (SELECT count(*) FROM ed) AS n_edges,
+        |       (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) FROM deg) AS n_wedges,
+        |       (SELECT t FROM tri) AS n_triangles,
+        |       CASE WHEN (SELECT sum(d * (d - 1) // 2) FROM deg) > 0
+        |            THEN round(3.0 * (SELECT t FROM tri) /
+        |                       (SELECT sum(d * (d - 1) // 2) FROM deg), 4)
+        |       END AS global_clustering""".stripMargin)),
 
     // Blocked fuzzy entity matching: distinct-name candidate pairs from
     // a prefix equi-join block, thresholded levenshtein verify — work is
     // sum(block²), never corpus², oversized blocks excluded loudly
-    "entity_pairs" -> ((s, dir) => {
+    Query("entity_pairs", (s, dir) => {
       val p = s.read.parquet(t(dir, "part"))
       graft.operators.Entity.fuzzyNamePairs(p, "p_name",
         blockPrefix = 2, maxDist = 3, maxBlock = 10000L)
-    }),
+    },
+    // DuckDB levenshtein is unthresholded but agrees with Spark's
+    // thresholded form on every kept row (dist <= maxDist there). The
+    // `kept` CTE mirrors fuzzyNamePairs' maxBlock=10000 exclusion (blocks
+    // with more distinct names are DROPPED by both engines — without it
+    // the oracle would keep pairs Spark excludes on any dataset with a
+    // degenerate 2-char prefix).
+    Sql(
+      """WITH n0 AS (
+        |  SELECT DISTINCT lower(trim(p_name)) AS nm FROM part
+        |  WHERE length(lower(trim(p_name))) > 0
+        |), kept AS (
+        |  SELECT substring(nm, 1, 2) AS blk FROM n0
+        |  GROUP BY 1 HAVING count(*) <= 10000
+        |), n AS (
+        |  SELECT nm FROM n0 JOIN kept ON substring(n0.nm, 1, 2) = kept.blk
+        |)
+        |SELECT a.nm AS name_a, b.nm AS name_b,
+        |       CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS dist
+        |FROM n a JOIN n b
+        |  ON substring(a.nm, 1, 2) = substring(b.nm, 1, 2) AND a.nm < b.nm
+        |WHERE levenshtein(a.nm, b.nm) <= 3""".stripMargin)),
 
     // Full entity resolution: fuzzy pairs -> min-label connected
     // components -> canonical name; singletons re-attach via left join
     // so the iterative loop only ever sees the matched-pair graph
-    "entity_resolve" -> ((s, dir) => {
+    Query("entity_resolve", (s, dir) => {
       val p = s.read.parquet(t(dir, "part"))
       graft.operators.Entity.resolveEntities(p, "p_name",
         blockPrefix = 2, maxDist = 3, maxBlock = 10000L)
-    }),
+    },
+    // transitive closure over the fuzzy-pair graph (the dedup_clusters
+    // recursive-CTE pattern); singletons fall through the left join.
+    // `kept` mirrors the maxBlock=10000 exclusion: oversized blocks
+    // generate NO pairs (their names still appear, as singletons) —
+    // matching resolveEntities, where every distinct name is emitted but
+    // excluded blocks contribute no edges.
+    Sql(
+      """WITH RECURSIVE n AS (
+        |  SELECT DISTINCT lower(trim(p_name)) AS nm FROM part
+        |  WHERE length(lower(trim(p_name))) > 0
+        |), kept AS (
+        |  SELECT substring(nm, 1, 2) AS blk FROM n
+        |  GROUP BY 1 HAVING count(*) <= 10000
+        |), pairs AS (
+        |  SELECT a.nm AS name_a, b.nm AS name_b
+        |  FROM n a JOIN n b
+        |    ON substring(a.nm, 1, 2) = substring(b.nm, 1, 2) AND a.nm < b.nm
+        |  JOIN kept k ON substring(a.nm, 1, 2) = k.blk
+        |  WHERE levenshtein(a.nm, b.nm) <= 3
+        |), edges AS (
+        |  SELECT name_a AS a, name_b AS b FROM pairs
+        |  UNION SELECT name_b, name_a FROM pairs
+        |), reach AS (
+        |  SELECT a, b FROM edges
+        |  UNION
+        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+        |), canon AS (
+        |  SELECT a, least(a, min(b)) AS canon FROM reach GROUP BY a
+        |)
+        |SELECT n.nm AS name, coalesce(c.canon, n.nm) AS canon
+        |FROM n LEFT JOIN canon c ON c.a = n.nm""".stripMargin)),
 
     // Exact segment dedup with document rewriting (Lee et al. 2022,
     // fixed 8-token windows): later copies of any segment are erased
     // corpus-wide, survivors stitched back per doc — two content-sized
     // exchanges, exact-string decisions, no floats
-    "corpus_segment_dedup" -> ((s, dir) => {
+    Query("corpus_segment_dedup", (s, dir) => {
       val d = widenScan(s.read.parquet(t(dir, "documents"))
         .select(col("doc_id"), col("text")), col("doc_id"))
       graft.operators.Dedup.segmentDedup(d, "doc_id", "text", segTokens = 8)
-    }),
+    },
+    // chunk-count formula and list slicing mirrored from text_chunks;
+    // first-occurrence = row_number over exact segment text
+    Sql(
+      """WITH t AS (
+        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
+        |), w AS (
+        |  SELECT doc_id, toks, 1 + (greatest(len(toks) - 8, 0) + 7) // 8 AS n_segs FROM t
+        |), x AS (
+        |  SELECT doc_id, toks, unnest(range(0, n_segs)) AS i FROM w
+        |), s AS (
+        |  SELECT doc_id, CAST(i AS INTEGER) AS seg_idx,
+        |         array_to_string(toks[i*8+1 : i*8+8], ' ') AS seg
+        |  FROM x
+        |), k AS (
+        |  SELECT doc_id, seg_idx, seg,
+        |         row_number() OVER (PARTITION BY seg ORDER BY doc_id, seg_idx) AS rn
+        |  FROM s
+        |)
+        |SELECT doc_id, string_agg(seg, ' ' ORDER BY seg_idx) AS text,
+        |       count(*) AS n_kept
+        |FROM k WHERE rn = 1 GROUP BY doc_id""".stripMargin)),
 
     // Code-point Shannon entropy (compressibility proxy): scan-stage
     // codegen'd kernel, zero shuffle — the gibberish/boilerplate signal
     // of a quality-filter stack
-    "text_entropy" -> ((s, dir) => {
+    Query("text_entropy", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       d.select(col("doc_id"),
         round(graft.functions.char_entropy(col("text")), 4).as("entropy_bits"))
-    }),
+    },
+    // per-char frequency reconstruction; both engines round to 4
+    // decimals (summation order differs only at ~1e-15)
+    Sql(
+      """WITH c AS (
+        |  SELECT doc_id, unnest(string_split(text, '')) AS ch FROM documents
+        |), f AS (
+        |  SELECT doc_id, ch, count(*) AS cnt FROM c GROUP BY doc_id, ch
+        |), n AS (
+        |  SELECT doc_id, sum(cnt) AS tot FROM f GROUP BY doc_id
+        |)
+        |SELECT f.doc_id,
+        |       round(-sum((CAST(cnt AS DOUBLE) / tot) * log2(CAST(cnt AS DOUBLE) / tot)), 4)
+        |         AS entropy_bits
+        |FROM f JOIN n USING (doc_id) GROUP BY f.doc_id""".stripMargin)),
 
     // Deterministic k-per-stratum sample: md5-priority bounded heap per
     // source — the window form would shuffle the whole corpus into
     // #sources partitions; this shuffles <= k rows per partition-stratum
-    "corpus_sample_k" -> ((s, dir) => {
+    Query("corpus_sample_k", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.sampleKPerStratum(d, "doc_id", "source", k = 7)
-    }),
+    },
+    // the window form IS the oracle: proves the bounded-heap sample
+    // equals "rank by hash priority, keep k" exactly
+    Sql(
+      """WITH p AS (
+        |  SELECT source, doc_id,
+        |    CAST('0x' || substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS prio
+        |  FROM documents
+        |)
+        |SELECT source, doc_id FROM (
+        |  SELECT source, doc_id,
+        |         row_number() OVER (PARTITION BY source ORDER BY prio DESC, doc_id) AS rn
+        |  FROM p
+        |) WHERE rn <= 7""".stripMargin)),
 
     // Efraimidis-Spirakis weighted sampling without replacement, weight =
     // doc length: same bounded-heap shape as corpus_sample_k (<= k rows
     // per partition cross the one exchange), priority ln(u)/w with an
     // exact dyadic u so both engines rank identical keys
-    "corpus_weighted_sample" -> ((s, dir) => {
+    Query("corpus_weighted_sample", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.weightedSampleK(d, "doc_id", "n_chars", k = 200)
-    }),
+    },
+    // the window form IS the oracle for the bounded-heap sample; the key
+    // ln((h+0.5)/2^32)/w feeds ln an exact dyadic double in both engines
+    Sql(
+      """WITH p AS (
+        |  SELECT doc_id,
+        |    ln((CAST('0x' || substr(md5('wsample:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) + 0.5)
+        |       / 4294967296.0) / CAST(n_chars AS DOUBLE) AS k
+        |  FROM documents WHERE n_chars > 0
+        |)
+        |SELECT doc_id FROM (
+        |  SELECT doc_id, row_number() OVER (ORDER BY k DESC, doc_id) AS rn FROM p
+        |) WHERE rn <= 200""".stripMargin)),
 
     // Temperature (alpha=0.5) source rebalancing: per-source keep rates
     // prop. to sqrt(count)/count compiled into a scan predicate — the
     // corpus is scanned ONCE, the only other job is a per-source count
-    "corpus_temperature_mix" -> ((s, dir) => {
+    Query("corpus_temperature_mix", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.temperatureMixKeep(d, "doc_id", "source",
         targetRows = 200L).select(col("doc_id"), col("source"))
-    }),
+    },
+    // threshold arithmetic mirrored op-for-op: sqrt/mul/div are IEEE
+    // correctly-rounded, so floor(rate*2^32) lands on the same integer
+    Sql(
+      """WITH c AS (SELECT source, count(*) AS cnt FROM documents GROUP BY source),
+        |z AS (SELECT sum(sqrt(CAST(cnt AS DOUBLE))) AS z FROM c),
+        |t AS (
+        |  SELECT source,
+        |         CAST(floor(least(1.0, sqrt(CAST(cnt AS DOUBLE)) / z.z * 200.0 / CAST(cnt AS DOUBLE))
+        |                    * 4294967296.0) AS BIGINT) AS thr
+        |  FROM c, z
+        |)
+        |SELECT d.doc_id, d.source
+        |FROM documents d JOIN t ON d.source = t.source
+        |WHERE CAST('0x' || substr(md5('tmix:' || CAST(d.doc_id AS VARCHAR)), 1, 8) AS BIGINT) < t.thr""".stripMargin)),
 
     // BM25 keyword retrieval: one mergeable corpus-stats pass, then
     // scan-stage scoring (in-row codegen'd tf, idf/avgdl as plan
     // literals) reduced by the bounded top-k heap — ranking a 100 TB
     // corpus costs two scans and two tiny exchanges
-    "text_bm25" -> ((s, dir) => {
+    Query("text_bm25", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Search.bm25TopK(d, "doc_id", "text",
         terms = Seq("spark", "vector", "customer"), k = 20)
-    }),
+    },
+    // BM25 with the formula association mirrored term-for-term (IEEE
+    // double ops are deterministic given identical operand order; ln may
+    // differ by 1 ulp between engines, hidden by round 4)
+    Sql(
+      """WITH t AS (
+        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+        |), s AS (
+        |  SELECT count(*) AS n, CAST(sum(len(w)) AS DOUBLE) / count(*) AS avgdl,
+        |         count(*) FILTER (list_contains(w, 'spark')) AS df0,
+        |         count(*) FILTER (list_contains(w, 'vector')) AS df1,
+        |         count(*) FILTER (list_contains(w, 'customer')) AS df2
+        |  FROM t
+        |), sc AS (
+        |  SELECT doc_id, round(
+        |      ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5))
+        |        * (len([x for x in w if x = 'spark']) * (1.2 + 1.0))
+        |        / (len([x for x in w if x = 'spark'])
+        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl))
+        |    + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5))
+        |        * (len([x for x in w if x = 'vector']) * (1.2 + 1.0))
+        |        / (len([x for x in w if x = 'vector'])
+        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl))
+        |    + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5))
+        |        * (len([x for x in w if x = 'customer']) * (1.2 + 1.0))
+        |        / (len([x for x in w if x = 'customer'])
+        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl)), 4) AS bm25
+        |  FROM t, s
+        |)
+        |SELECT doc_id, bm25 FROM sc WHERE bm25 > 0
+        |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin)),
 
     // Gopher hard quality gates (arXiv:2112.11446 Table A1): integer-count
     // ratios + rule conjunction, one scan, zero shuffle. minStopHits=1
     // because this synthetic corpus tops out at one stopword per doc —
     // the paper's 2 would reject everything (real deployments keep 2)
-    "text_gopher_rules" -> ((s, dir) => {
+    Query("text_gopher_rules", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.TextAnalysis.gopherRules(d, "doc_id", "text",
         minWords = 50, maxWords = 100000, minStopHits = 1)
-    }),
+    },
+    // every ratio is one IEEE division of exact integer counts, so the
+    // unrounded gate comparisons are bit-identical across engines; the
+    // rounded columns are display-only
+    Sql(
+      """WITH f AS (
+        |  SELECT doc_id,
+        |    string_split_regex(trim(text), '\s+') AS w,
+        |    len(regexp_replace(text, '\s', '', 'g')) AS nc,
+        |    len(regexp_extract_all(text, '#'))
+        |      + len(regexp_extract_all(text, '\.\.\.|…')) AS nsym,
+        |    len([x for x in string_split_regex(trim(text), '\s+')
+        |         if regexp_matches(x, '[A-Za-z]')]) AS nalpha,
+        |    len([s for s in ['the','be','to','of','and','that','have','with']
+        |         if list_contains(string_split_regex(trim(text), '\s+'), s)]) AS nstops
+        |  FROM documents
+        |)
+        |SELECT doc_id,
+        |  CAST(len(w) AS BIGINT) AS n_words,
+        |  round(nc / greatest(len(w), 1), 4) AS mean_word_len,
+        |  round(nsym / greatest(len(w), 1), 4) AS symbol_ratio,
+        |  round(nalpha / greatest(len(w), 1), 4) AS alpha_word_ratio,
+        |  CAST(nstops AS BIGINT) AS n_stop_hits,
+        |  (len(w) BETWEEN 50 AND 100000
+        |    AND nc / greatest(len(w), 1) BETWEEN 3.0 AND 10.0
+        |    AND nsym / greatest(len(w), 1) <= 0.1
+        |    AND nalpha / greatest(len(w), 1) >= 0.8
+        |    AND nstops >= 1) AS keep
+        |FROM f""".stripMargin)),
 
     // CCNet-style LM quality: add-alpha bigram model trained on the src0
     // slice, every document scored by per-bigram negative log-likelihood
-    "text_perplexity" -> ((s, dir) => {
+    Query("text_perplexity", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.LangModel.bigramScore(d,
         d.filter(col("source") === "src0"), "doc_id", "text", alpha = 0.1)
-    }),
+    },
+    // add-alpha bigram LM trained on the src0 slice; counts are exact
+    // integers, each ln() agrees within 1 ulp, the per-doc sum's
+    // association error (~1e-12) hides under round 4, and ppl
+    // exponentiates the already-rounded nll
+    Sql(
+      """WITH tok AS (
+        |  SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w
+        |  FROM documents
+        |), tr AS (
+        |  SELECT w FROM tok WHERE source = 'src0'
+        |), uni AS (
+        |  SELECT w1, count(*) AS c1
+        |  FROM (SELECT unnest(w) AS w1 FROM tr) GROUP BY w1
+        |), v AS (
+        |  SELECT CAST(count(*) AS DOUBLE) AS v FROM uni
+        |), big AS (
+        |  SELECT w1, w2, count(*) AS c2 FROM (
+        |    SELECT p[1] AS w1, p[2] AS w2
+        |    FROM (SELECT unnest(list_zip(w, w[2:])) AS p FROM tr)
+        |    WHERE p[2] IS NOT NULL) GROUP BY w1, w2
+        |), db AS (
+        |  SELECT doc_id, p[1] AS w1, p[2] AS w2
+        |  FROM (SELECT doc_id, unnest(list_zip(w, w[2:])) AS p
+        |        FROM tok WHERE len(w) >= 2)
+        |  WHERE p[2] IS NOT NULL
+        |), sc AS (
+        |  SELECT doc_id,
+        |         ln((coalesce(c2, 0) + 0.1) / (coalesce(c1, 0) + 0.1 * v)) AS lp
+        |  FROM db LEFT JOIN big USING (w1, w2) LEFT JOIN uni USING (w1)
+        |       CROSS JOIN v
+        |), ag AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+        |         round(-sum(lp) / count(*), 4) AS nll
+        |  FROM sc GROUP BY doc_id
+        |)
+        |SELECT doc_id, n_bigrams, nll, round(exp(nll), 2) AS ppl FROM ag""".stripMargin)),
 
     // Hybrid retrieval: BM25 candidate pool fused with a dense cosine
     // pool by reciprocal-rank fusion — both pools are bounded (<= poolK
     // rows), so fusion cost is constant at any corpus size
-    "text_hybrid_rrf" -> ((s, dir) => {
+    Query("text_hybrid_rrf", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       val e = s.read.parquet(t(dir, "embeddings"))
       graft.operators.Search.hybridRrf(d, e, "doc_id", "text",
         "vec_id", "embedding", terms = Seq("spark", "vector", "customer"),
         queryVecId = 7L, k = 20, poolK = 50)
-    }),
+    },
+    // rank lists are integer-total-ordered (round-4 score desc, id asc);
+    // each RRF term is one IEEE division, summed in fixed order
+    Sql(
+      """WITH t AS (
+        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
+        |), s AS (
+        |  SELECT count(*) AS n, CAST(sum(len(w)) AS DOUBLE) / count(*) AS avgdl,
+        |         count(*) FILTER (list_contains(w, 'spark')) AS df0,
+        |         count(*) FILTER (list_contains(w, 'vector')) AS df1,
+        |         count(*) FILTER (list_contains(w, 'customer')) AS df2
+        |  FROM t
+        |), sc AS (
+        |  SELECT doc_id, round(
+        |      ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5))
+        |        * (len([x for x in w if x = 'spark']) * (1.2 + 1.0))
+        |        / (len([x for x in w if x = 'spark'])
+        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl))
+        |    + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5))
+        |        * (len([x for x in w if x = 'vector']) * (1.2 + 1.0))
+        |        / (len([x for x in w if x = 'vector'])
+        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl))
+        |    + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5))
+        |        * (len([x for x in w if x = 'customer']) * (1.2 + 1.0))
+        |        / (len([x for x in w if x = 'customer'])
+        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl)), 4) AS bm25
+        |  FROM t, s
+        |), sp AS (
+        |  SELECT doc_id,
+        |         CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT)
+        |           AS r_bm25
+        |  FROM (SELECT doc_id, bm25 FROM sc WHERE bm25 > 0
+        |        ORDER BY bm25 DESC, doc_id LIMIT 50)
+        |), dn AS (
+        |  SELECT c_id AS doc_id, CAST(rnk AS BIGINT) AS r_dense FROM (
+        |    SELECT c_id, row_number() OVER (ORDER BY sim DESC, c_id) AS rnk
+        |    FROM (
+        |      SELECT b.vec_id AS c_id,
+        |             round(list_dot_product(a.embedding, b.embedding) /
+        |                   (sqrt(list_dot_product(a.embedding, a.embedding)) *
+        |                    sqrt(list_dot_product(b.embedding, b.embedding))), 4)
+        |               AS sim
+        |      FROM embeddings a, embeddings b
+        |      WHERE a.vec_id = 7 AND b.vec_id <> 7))
+        |  WHERE rnk <= 50
+        |)
+        |SELECT doc_id,
+        |       round(coalesce(1.0 / (60 + r_bm25), 0)
+        |             + coalesce(1.0 / (60 + r_dense), 0), 6) AS rrf,
+        |       r_bm25, r_dense
+        |FROM sp FULL OUTER JOIN dn USING (doc_id)
+        |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin)),
 
     // Per-label embedding centroids via the bounded-state vector-sum
     // aggregate: the exchange carries one dim-double sum per (partition,
     // label), not dim× the corpus rows like posexplode+groupBy would
-    "embed_centroids" -> ((s, dir) => {
+    Query("embed_centroids", (s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
       graft.operators.Similarity.labelCentroids(e, "label", "embedding")
-    }),
+    },
+    // sum-then-divide mirrors the Spark side (one division after the
+    // double sum); summation order differs between engines but the
+    // association error hides under round 4
+    Sql(
+      """SELECT label, pos, round(s / n, 4) AS centroid, n FROM (
+        |  SELECT label, CAST(pos AS BIGINT) AS pos,
+        |         sum(CAST(x AS DOUBLE)) AS s, CAST(count(*) AS BIGINT) AS n
+        |  FROM (SELECT label, generate_subscripts(embedding, 1) AS pos,
+        |               unnest(embedding) AS x FROM embeddings)
+        |  GROUP BY label, pos)""".stripMargin)),
 
     // Population covariance of the embedding corpus from ONE
     // vec_outer_agg scan (bounded d+d² state per partition, merged
     // map-side) — the d² explode happens on the single aggregated row,
     // never per input vector; round-6 is the matrix's downstream contract
-    "embed_covariance" -> ((s, dir) => {
+    Query("embed_covariance", (s, dir) => {
       graft.operators.Stats.covariance(
         s.read.parquet(t(dir, "embeddings")), "embedding")
-    }),
+    },
+    // covar_pop over unnest pairs — numerically a different path than
+    // the one-pass moment formula, identical at the shared round-6.
+    // `+ 0.0` canonicalizes -0.0: DuckDB's round keeps IEEE zero sign
+    // where Spark's BigDecimal round does not (both sides add it)
+    Sql(
+      """WITH px AS (
+        |  SELECT vec_id, CAST(generate_subscripts(embedding, 1) AS BIGINT) AS pos,
+        |         CAST(unnest(embedding) AS DOUBLE) AS x
+        |  FROM embeddings
+        |)
+        |SELECT a.pos AS i, b.pos AS j, round(covar_pop(a.x, b.x), 6) + 0.0 AS cov
+        |FROM px a JOIN px b ON a.vec_id = b.vec_id AND a.pos <= b.pos
+        |GROUP BY 1, 2""".stripMargin)),
 
     // PCA projection: 16 unnormalized power-method multiplies on the
     // round-6 covariance (fixed iteration count like pageRank's 5, so an
     // independent engine reproduces it exactly), one final normalize +
     // round-8 + sign fix, then a codegen'd vec_dot scan — the corpus
     // never shuffles; the d×d collect is the legitimate driver step
-    "embed_pca_project" -> ((s, dir) => {
+    Query("embed_pca_project", (s, dir) => {
       graft.operators.Stats.pcaProject(
         s.read.parquet(t(dir, "embeddings")),
         Seq("vec_id", "label"), "embedding", iterations = 16)
+    },
+    // the same fixed-16-iteration power method, unrolled as chained CTEs
+    // (the graph_pagerank oracle pattern) on the SAME round-6 covariance;
+    // both engines then normalize once, round the component to 8, fix the
+    // sign by the largest-|entry| rule, and round projections to 4
+    Sql {
+      val base =
+        """WITH px AS MATERIALIZED (
+          |  SELECT vec_id, CAST(generate_subscripts(embedding, 1) AS BIGINT) AS pos,
+          |         CAST(unnest(embedding) AS DOUBLE) AS x
+          |  FROM embeddings
+          |), cov AS MATERIALIZED (
+          |  SELECT a.pos AS i, b.pos AS j, round(covar_pop(a.x, b.x), 6) AS c
+          |  FROM px a JOIN px b ON a.vec_id = b.vec_id
+          |  GROUP BY 1, 2
+          |), v0 AS (
+          |  SELECT DISTINCT i AS pos,
+          |         1.0 / sqrt((SELECT count(DISTINCT i) FROM cov)) AS val
+          |  FROM cov
+          |)""".stripMargin
+      val steps = (1 to 16).map { k =>
+        s""",
+           |v$k AS (
+           |  SELECT c.i AS pos, sum(c.c * v.val) AS val
+           |  FROM cov c JOIN v${k - 1} v ON c.j = v.pos
+           |  GROUP BY 1
+           |)""".stripMargin
+      }.mkString
+      val tail =
+        """,
+          |nv AS (
+          |  SELECT pos, val / sqrt((SELECT sum(val * val) FROM v16)) AS val
+          |  FROM v16
+          |), vr AS (
+          |  SELECT pos, round(val, 8) AS val FROM nv
+          |), sgn AS (
+          |  SELECT CASE WHEN (SELECT val FROM vr
+          |                    ORDER BY abs(val) DESC, pos ASC LIMIT 1) < 0
+          |              THEN -1.0 ELSE 1.0 END AS s
+          |)
+          |SELECT p.vec_id, e.label,
+          |       round((SELECT s FROM sgn) * sum(p.x * v.val), 4) + 0.0 AS pc1
+          |FROM px p JOIN vr v ON p.pos = v.pos
+          |JOIN embeddings e ON e.vec_id = p.vec_id
+          |GROUP BY 1, 2""".stripMargin
+      base + steps + tail
     }),
 
     // Top-2 PCA via Hotelling deflation: component 2 comes from
@@ -2096,76 +3945,269 @@ object SparkEntry {
     // the whole decomposition — both power chains, the Rayleigh λ, the
     // deflation products (kept left-associative) — is reproducible
     // cross-engine; still one aggregate pass + one projection scan
-    "embed_pca2" -> ((s, dir) => {
+    Query("embed_pca2", (s, dir) => {
       graft.operators.Stats.pcaProjectK(
         s.read.parquet(t(dir, "embeddings")),
         Seq("vec_id", "label"), "embedding", k = 2, iterations = 16)
-    }),
+    },
+    // two unrolled power chains with the SAME recipe; vr1/vr2 carry the
+    // sign IN the component values (±1 multiply is IEEE-exact either
+    // side of the dot), and cov1's deflation mirrors the Scala side's
+    // left-associative λ·vᵢ·vⱼ with round-8 λ and round-6 re-rounding
+    Sql(pcaTwoChainCtes +
+      """
+        |SELECT d1.vec_id, e.label, d1.pc1, d2.pc2
+        |FROM (
+        |  SELECT p.vec_id, round(sum(p.x * v.val), 4) + 0.0 AS pc1
+        |  FROM px p JOIN vr1 v ON p.pos = v.pos GROUP BY 1
+        |) d1
+        |JOIN (
+        |  SELECT p.vec_id, round(sum(p.x * v.val), 4) + 0.0 AS pc2
+        |  FROM px p JOIN vr2 v ON p.pos = v.pos GROUP BY 1
+        |) d2 ON d1.vec_id = d2.vec_id
+        |JOIN embeddings e ON e.vec_id = d1.vec_id""".stripMargin)),
 
     // Variance decomposition: each deflated component's Rayleigh
     // eigenvalue against the round-6 trace — the "how many components
     // carry this corpus" summary. ONE covariance collect serves the
     // eigensolve AND the trace (Stats.pcaSummary); corpus work is the
     // single vec_outer_agg pass
-    "embed_pca_variance" -> ((s, dir) => {
+    Query("embed_pca_variance", (s, dir) => {
       graft.operators.Stats.pcaSummary(
         s.read.parquet(t(dir, "embeddings")), "embedding",
         k = 2, iterations = 16)
-    }),
+    },
+    // same two-chain derivation, summarized: per-component Rayleigh
+    // eigenvalue over the round-6 trace; lambda/trace is one IEEE
+    // division of already-hash-stable values
+    Sql(pcaTwoChainCtes +
+      """, tr AS (SELECT round(sum(c), 6) AS t FROM cov WHERE i = j)
+        |SELECT CAST(1 AS BIGINT) AS component, (SELECT l FROM lam1) AS lambda,
+        |       tr.t AS trace, round((SELECT l FROM lam1) / tr.t, 6) AS explained
+        |FROM tr
+        |UNION ALL
+        |SELECT CAST(2 AS BIGINT), (SELECT l FROM lam2),
+        |       tr.t, round((SELECT l FROM lam2) / tr.t, 6)
+        |FROM tr""".stripMargin)),
 
     // Outlier screen: cosine to the (un-normalized) own-label sum vector;
     // threshold 0.0 flags the ~10% of vectors anti-correlated with their
     // class mean in this corpus
-    "embed_outliers" -> ((s, dir) => {
+    Query("embed_outliers", (s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
       graft.operators.Similarity.centroidOutliers(
         e, "vec_id", "label", "embedding", simThreshold = 0.0)
-    }),
+    },
+    // same un-normalized sum-vector arithmetic as the Spark side (cosine
+    // is scale-invariant, so sums ARE centroids); is_outlier compares the
+    // already-rounded cosine so the flag is derived from the hashed value
+    Sql(
+      """WITH ps AS (
+        |  SELECT label, generate_subscripts(embedding, 1) AS pos,
+        |         unnest(embedding) AS x FROM embeddings
+        |), sv AS (
+        |  SELECT label, list(s ORDER BY pos) AS csum, CAST(max(n) AS BIGINT) AS n_label
+        |  FROM (SELECT label, pos, sum(CAST(x AS DOUBLE)) AS s, count(*) AS n
+        |        FROM ps GROUP BY label, pos)
+        |  GROUP BY label
+        |)
+        |SELECT vec_id, label, n_label, sim_centroid, sim_centroid < 0.0 AS is_outlier
+        |FROM (
+        |  SELECT e.vec_id, e.label, sv.n_label,
+        |         round(list_dot_product(e.embedding, sv.csum) /
+        |               (sqrt(list_dot_product(e.embedding, e.embedding)) *
+        |                sqrt(list_dot_product(sv.csum, sv.csum))), 4) AS sim_centroid
+        |  FROM embeddings e JOIN sv USING (label))""".stripMargin)),
 
     // Cross-source contamination matrix: exact pairwise Jaccard of
     // distinct 3-gram sets, computed via bounded source-set aggregation
     // (never a shingle self-join)
-    "source_overlap" -> ((s, dir) => {
+    Query("source_overlap", (s, dir) => {
       val d = widenScan(s.read.parquet(t(dir, "documents"))
         .select(col("source"), col("text")), col("text"))
       graft.operators.Curate.sourceOverlap(d, "source", "text")
-    }),
+    },
+    // the oracle takes the textbook shingle self-join (fine at oracle
+    // scale); counts are exact integers, jaccard one IEEE division
+    Sql(
+      """WITH sh AS (
+        |  SELECT DISTINCT source, unnest(CASE WHEN len(w) >= 3 THEN
+        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+        |                   for i in range(1, len(w)-1)])
+        |    ELSE [] END) AS sh
+        |  FROM (SELECT source, string_split_regex(trim(text), '\s+') AS w FROM documents)
+        |), sz AS (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY source
+        |), cm AS (
+        |  SELECT a.source AS src_a, b.source AS src_b,
+        |         CAST(count(*) AS BIGINT) AS n_common
+        |  FROM sh a JOIN sh b USING (sh)
+        |  WHERE a.source < b.source GROUP BY 1, 2
+        |)
+        |SELECT src_a, src_b, sa.n AS n_a, sb.n AS n_b, n_common,
+        |       round(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 6) AS jaccard
+        |FROM cm
+        |JOIN sz sa ON sa.source = cm.src_a
+        |JOIN sz sb ON sb.source = cm.src_b""".stripMargin)),
 
     // Naive Bayes language routing: closed-form multinomial NB trained
     // on the 20% doc_id%5==0 slice (lang as label), every doc scored and
     // argmax'd — the fasttext-style classifier shape with reproducible
     // training
-    "classify_nb" -> ((s, dir) => {
+    Query("classify_nb", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Classify.naiveBayes(d,
         d.filter(col("doc_id") % 5 === 0), "doc_id", "text", "lang",
         alpha = 1.0)
-    }),
+    },
+    // mirrors the operator's log-space decomposition term for term
+    // (prior + per-token floor + seen-word evidence); counts are exact
+    // integers, each ln() within 1 ulp, sum association error under
+    // round 4; ties on the rounded score break by label asc
+    Sql(
+      """WITH tok AS (
+        |  SELECT doc_id, lang, unnest(string_split_regex(trim(text), '\s+')) AS w
+        |  FROM documents
+        |), tr AS (
+        |  SELECT * FROM tok WHERE doc_id % 5 = 0
+        |), lw AS (
+        |  SELECT lang AS l, w, count(*) AS clw FROM tr GROUP BY 1, 2
+        |), lt AS (
+        |  SELECT l, sum(clw) AS cl FROM lw GROUP BY 1
+        |), v AS (
+        |  SELECT CAST(count(DISTINCT w) AS DOUBLE) AS v FROM lw
+        |), pri AS (
+        |  SELECT lang AS l, count(*) AS nd
+        |  FROM (SELECT DISTINCT doc_id, lang FROM documents WHERE doc_id % 5 = 0)
+        |  GROUP BY 1
+        |), tot AS (
+        |  SELECT CAST(sum(nd) AS DOUBLE) AS t FROM pri
+        |), ntok AS (
+        |  SELECT doc_id, CAST(count(*) AS DOUBLE) AS n FROM tok GROUP BY 1
+        |), ev AS (
+        |  SELECT t.doc_id, lw.l, sum(ln((CAST(clw AS DOUBLE) + 1.0) / 1.0)) AS s
+        |  FROM tok t JOIN lw ON lw.w = t.w GROUP BY 1, 2
+        |), sc AS (
+        |  SELECT n.doc_id, p.l,
+        |         round(ln(CAST(p.nd AS DOUBLE) / tot.t)
+        |               + n.n * (ln(1.0) - ln(CAST(lt.cl AS DOUBLE) + 1.0 * v.v))
+        |               + coalesce(ev.s, 0.0), 4) AS score
+        |  FROM ntok n
+        |  CROSS JOIN pri p CROSS JOIN tot CROSS JOIN v
+        |  JOIN lt ON lt.l = p.l
+        |  LEFT JOIN ev ON ev.doc_id = n.doc_id AND ev.l = p.l
+        |)
+        |SELECT doc_id, l AS pred_label, score FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY doc_id
+        |                               ORDER BY score DESC, l) AS rn FROM sc)
+        |WHERE rn = 1""".stripMargin)),
 
     // Epoch-style source upsampling: src0 docs appear 2-3x (factor 2.5),
     // src1 exactly 2x, src2 deterministically downsampled to 25%, the
     // rest once — one scan-stage pass, copy index carried
-    "corpus_upsample" -> ((s, dir) => {
+    Query("corpus_upsample", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.Curate.upsampleBySource(d, "doc_id", "source",
         factors = Map("src0" -> 2.5, "src1" -> 2.0, "src2" -> 0.25))
         .select(col("doc_id"), col("source"), col("copy"))
-    }),
+    },
+    // same md5-uniform arithmetic as the operator: u exact in double,
+    // copies = floor(f) + (u < frac(f)), rows exploded by range(copies)
+    Sql(
+      """WITH f AS (
+        |  SELECT doc_id, source,
+        |    CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 2.0
+        |                WHEN 'src2' THEN 0.25 ELSE 1.0 END AS fac,
+        |    (CAST('0x' || substr(md5('upsample:' || CAST(doc_id AS VARCHAR)), 1, 8)
+        |          AS BIGINT) + 0.5) / 4294967296.0 AS u
+        |  FROM documents
+        |), c AS (
+        |  SELECT doc_id, source,
+        |         CAST(floor(fac) AS INT)
+        |           + CASE WHEN u < fac - floor(fac) THEN 1 ELSE 0 END AS copies
+        |  FROM f
+        |)
+        |SELECT doc_id, source, CAST(unnest(range(0, copies)) AS BIGINT) AS copy
+        |FROM c WHERE copies > 0""".stripMargin)),
 
     // Gopher duplicate-n-gram repetition gates: fraction of characters
     // covered by repeat 2/3/4-gram occurrences, O(tokens) kernel per n
-    "text_gopher_repetition" -> ((s, dir) => {
+    Query("text_gopher_repetition", (s, dir) => {
       val d = s.read.parquet(t(dir, "documents"))
       graft.operators.TextAnalysis.gopherRepetition(d, "doc_id", "text")
-    }),
+    },
+    // the oracle re-derives each dup-gram char count by grouping the
+    // NON-distinct gram stream (the kernel's hash-probe equivalent:
+    // occurrences beyond the first x the gram's no-space char length);
+    // numerators/denominators are exact integers, one IEEE division each
+    Sql(
+      """WITH tok AS (
+        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w,
+        |         len(regexp_replace(text, '\s', '', 'g')) AS nc
+        |  FROM documents
+        |), d2 AS (
+        |  SELECT doc_id, sum((cnt - 1) * glen) AS dup FROM (
+        |    SELECT doc_id, gram, count(*) AS cnt,
+        |           len(replace(gram, ' ', '')) AS glen
+        |    FROM (SELECT doc_id, unnest([w[i] || ' ' || w[i+1]
+        |                  for i in range(1, len(w))]) AS gram FROM tok)
+        |    GROUP BY doc_id, gram) GROUP BY doc_id
+        |), d3 AS (
+        |  SELECT doc_id, sum((cnt - 1) * glen) AS dup FROM (
+        |    SELECT doc_id, gram, count(*) AS cnt,
+        |           len(replace(gram, ' ', '')) AS glen
+        |    FROM (SELECT doc_id, unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+        |                  for i in range(1, len(w) - 1)]) AS gram FROM tok)
+        |    GROUP BY doc_id, gram) GROUP BY doc_id
+        |), d4 AS (
+        |  SELECT doc_id, sum((cnt - 1) * glen) AS dup FROM (
+        |    SELECT doc_id, gram, count(*) AS cnt,
+        |           len(replace(gram, ' ', '')) AS glen
+        |    FROM (SELECT doc_id,
+        |                 unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
+        |                  for i in range(1, len(w) - 2)]) AS gram FROM tok)
+        |    GROUP BY doc_id, gram) GROUP BY doc_id
+        |), f AS (
+        |  SELECT t.doc_id, CAST(t.nc AS BIGINT) AS n_chars,
+        |         round(coalesce(d2.dup, 0) / greatest(t.nc, 1), 4) AS dup2_frac,
+        |         round(coalesce(d3.dup, 0) / greatest(t.nc, 1), 4) AS dup3_frac,
+        |         round(coalesce(d4.dup, 0) / greatest(t.nc, 1), 4) AS dup4_frac
+        |  FROM tok t LEFT JOIN d2 USING (doc_id) LEFT JOIN d3 USING (doc_id)
+        |       LEFT JOIN d4 USING (doc_id)
+        |)
+        |SELECT doc_id, n_chars, dup2_frac, dup3_frac, dup4_frac,
+        |       (dup2_frac <= 0.20 AND dup3_frac <= 0.18 AND dup4_frac <= 0.16)
+        |         AS keep
+        |FROM f""".stripMargin)),
 
     // Centroid drift of the odd-id slice against the full-corpus baseline
-    "embed_drift" -> ((s, dir) => {
+    Query("embed_drift", (s, dir) => {
       val e = s.read.parquet(t(dir, "embeddings"))
       val base = graft.streaming.DriftMonitor.labelSums(e, "label", "embedding")
       graft.streaming.DriftMonitor.centroidDrift(
         e.filter(col("vec_id") % 2 === 1), base, "label", "embedding")
-    })
+    },
+    // both sides are un-normalized per-label sum vectors (cosine is
+    // scale-invariant); drift = 1 - cos, one subtraction after the
+    // rounded-under-4 division chain
+    Sql(
+      """WITH ps AS (
+        |  SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
+        |         unnest(embedding) AS x FROM embeddings
+        |), base AS (
+        |  SELECT label, list(s ORDER BY pos) AS bsum FROM
+        |    (SELECT label, pos, sum(CAST(x AS DOUBLE)) AS s
+        |     FROM ps GROUP BY label, pos) GROUP BY label
+        |), slice AS (
+        |  SELECT label, list(s ORDER BY pos) AS ssum, max(n) AS n_batch FROM
+        |    (SELECT label, pos, sum(CAST(x AS DOUBLE)) AS s, count(*) AS n
+        |     FROM ps WHERE vec_id % 2 = 1 GROUP BY label, pos) GROUP BY label
+        |)
+        |SELECT s.label, CAST(s.n_batch AS BIGINT) AS n_batch,
+        |       round(1.0 - list_dot_product(s.ssum, b.bsum) /
+        |             (sqrt(list_dot_product(s.ssum, s.ssum)) *
+        |              sqrt(list_dot_product(b.bsum, b.bsum))), 4) AS drift
+        |FROM slice s JOIN base b USING (label)""".stripMargin)),
   )
 
   /** Per-user event counts pivoted wide — shared by q22_pivot and its
@@ -2195,7 +4237,7 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------------
-  // DuckDB oracle SQL — same column names, same semantics.
+  // Oracle SQL shared by several entries.
   // ---------------------------------------------------------------------
 
   /** Shared WITH-clause for the two-component PCA oracles: round-6
@@ -2365,10 +4407,12 @@ object SparkEntry {
       |)""".stripMargin
   }
 
-  /** Exact top-5 over the planted ANN corpus: similarity is nonzero only
+  /** Exact top-5 over the planted ANN corpus
+    * (`Similarity.plantedClusterVector`): similarity is nonzero only
     * inside a query's own cluster (orthogonal axis pairs), where it is
-    * cos(0.1 * min(ring, 4)) — brute-force rank over that analytic score
-    * IS the true answer both ANN variants must reproduce at recall 1. */
+    * cos(0.1 * min(ring, 4)), ties broken by c_id — brute-force rank over
+    * that analytic score IS the true answer every ANN variant must
+    * reproduce at recall 1. */
   private val PlantedAnnOracle: String =
     """WITH q AS (SELECT vec_id AS q_id FROM embeddings WHERE vec_id < 10),
       |c AS (SELECT vec_id AS c_id FROM embeddings WHERE vec_id >= 10),
@@ -2384,2238 +4428,4 @@ object SparkEntry {
       |  FROM scored
       |)
       |SELECT q_id, c_id, sim, rank FROM ranked WHERE rank <= 5""".stripMargin
-
-  /** Queries deliberately WITHOUT a DuckDB oracle — the driver records a
-    * rows-only check for these. Every entry must say why here, and
-    * PipelineSpec pins `queries.keySet == oracleSql.keySet ++ rowsOnly`
-    * so a query can never silently lose (or never gain) its oracle.
-    *
-    *  - g1: ring-aligned repartition+sort on Murmur3 token math — no
-    *    DuckDB expression computes Cassandra's sign-extended Murmur3
-    *    x64_128 variant; the byte-exact contract is pinned against
-    *    reference-derived golden hashes in KernelSpec instead. (g2's
-    *    RandomPartitioner variant IS oracle-checked: md5 tokens are
-    *    reconstructable with DuckDB HUGEINT arithmetic.) */
-  val rowsOnly: Set[String] = Set("g1_ring_align")
-
-  def oracleSql: Map[String, String] = Map(
-    // RandomPartitioner ring alignment, reconstructed from first
-    // principles: token = abs(int128_be(md5(utf8(rowkey)))) via HUGEINT
-    // arithmetic (the signed big-endian int128 is upper_u64 adjusted by
-    // 2^64 when its sign bit is set, times 2^64, plus lower_u64);
-    // bucket = token / ceil(2^127/8) (= 2^124), clamped to the last
-    // bucket; hex = the canonical 16-byte big-endian form, zero-padded
-    "g2_random_ring_align" ->
-      """WITH tok AS (
-        |  SELECT (abs(
-        |    (CAST(('0x'||substr(md5(CAST(o_orderkey AS VARCHAR)),1,16))::UBIGINT AS HUGEINT)
-        |      - (CASE WHEN ('0x'||substr(md5(CAST(o_orderkey AS VARCHAR)),1,16))::UBIGINT >= 9223372036854775808
-        |              THEN 18446744073709551616 ELSE 0 END))
-        |    * 18446744073709551616
-        |    + CAST(('0x'||substr(md5(CAST(o_orderkey AS VARCHAR)),17,16))::UBIGINT AS HUGEINT)
-        |  )) AS token
-        |  FROM orders
-        |)
-        |SELECT CAST(least(token // 21267647932558653966460912964485513216, 7) AS INTEGER) AS _bucket,
-        |       count(*) AS n,
-        |       lpad(hex(CAST(min(token) // 18446744073709551616 AS BIGINT)),16,'0')
-        |         || lpad(hex(CAST(min(token) % 18446744073709551616 AS UBIGINT)),16,'0') AS min_token_hex,
-        |       lpad(hex(CAST(max(token) // 18446744073709551616 AS BIGINT)),16,'0')
-        |         || lpad(hex(CAST(max(token) % 18446744073709551616 AS UBIGINT)),16,'0') AS max_token_hex
-        |FROM tok
-        |GROUP BY 1""".stripMargin,
-
-    "s1_scan_project" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice, l_shipdate
-        |FROM lineitem
-        |WHERE l_shipdate < TIMESTAMP '1996-01-01' AND l_quantity > 30""".stripMargin,
-
-    "u1_union_paths" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem""".stripMargin,
-
-    // independent derivation of the parsed legacy fields (not a re-parse)
-    "s3_legacy_parse" ->
-      """SELECT CAST(o_orderkey AS VARCHAR) AS rowkey,
-        |       'status' AS colname,
-        |       o_orderstatus AS value,
-        |       CAST(CASE WHEN o_orderkey % 3 + 1 = 1 THEN 0 ELSE o_custkey END AS BIGINT) AS writetime,
-        |       CAST(CASE WHEN o_orderkey % 3 + 1 = 3 THEN 600 ELSE 0 END AS BIGINT) AS ttl
-        |FROM orders""".stripMargin,
-
-    "p1_cql_projection" ->
-      s"""SELECT o_orderkey AS rowkey, o_orderkey, o_custkey, o_orderstatus,
-         |       o_totalprice, o_orderdate,
-         |       CAST($DefaultWritetimeMicros AS BIGINT) AS writetime,
-         |       CAST(0 AS INTEGER) AS ttl
-         |FROM orders""".stripMargin,
-
-    "p2_cells" ->
-      s"""SELECT o_orderkey AS rowkey, colname, value,
-         |       CAST($DefaultWritetimeMicros AS BIGINT) AS writetime,
-         |       CAST(0 AS INTEGER) AS ttl
-         |FROM (
-         |  SELECT o_orderkey, 'o_custkey' AS colname, CAST(o_custkey AS VARCHAR) AS value FROM orders
-         |  UNION ALL
-         |  SELECT o_orderkey, 'o_orderstatus', o_orderstatus FROM orders
-         |  UNION ALL
-         |  SELECT o_orderkey, 'o_orderpriority', o_orderpriority FROM orders
-         |)""".stripMargin,
-
-    // independent hex reconstruction of the wire layout: 8-byte BE bigint,
-    // UTF-8 string, and the composite (2-byte len + bytes + 0x00) encoding
-    "f1_serialize_hex" ->
-      """SELECT o_orderkey,
-        |       lpad(hex(o_orderkey), 16, '0') AS ser_bigint_hex,
-        |       hex(o_orderpriority) AS ser_string_hex,
-        |       '0008' || lpad(hex(o_orderkey), 16, '0') || '00' ||
-        |       lpad(hex(length(o_orderpriority)), 4, '0') || hex(o_orderpriority) || '00'
-        |         AS composite_hex
-        |FROM orders""".stripMargin,
-
-    // independent reconstruction of raw + CompositeType key framing over
-    // bigint / int32 / string components (same layout family as f1)
-    "p9_partition_key" ->
-      """SELECT c_custkey,
-        |       lpad(hex(c_custkey), 16, '0') AS pk_single_hex,
-        |       '0008' || lpad(hex(c_custkey), 16, '0') || '00' ||
-        |       lpad(hex(strlen(c_mktsegment)), 4, '0') || hex(c_mktsegment) || '00'
-        |         AS pk_comp2_hex,
-        |       '0008' || lpad(hex(c_custkey), 16, '0') || '00' ||
-        |       '0004' || lpad(hex(c_nationkey), 8, '0') || '00' ||
-        |       lpad(hex(strlen(c_name)), 4, '0') || hex(c_name) || '00'
-        |         AS pk_comp3_hex
-        |FROM customer""".stripMargin,
-
-    // same stub-metadata reconstruction as mm_features — this one checks
-    // the mapPartitions decode path end-to-end
-    "mm_decode" ->
-      """SELECT doc_id AS id,
-        |       CAST(strlen(text) AS BIGINT) AS byte_len,
-        |       sha256(text) AS sha256,
-        |       CAST(64 + strpos('0123456789abcdef', substr(sha256(text), 1, 1)) - 1 AS INTEGER) AS width,
-        |       CAST(64 + strpos('0123456789abcdef', substr(sha256(text), 2, 1)) - 1 AS INTEGER) AS height,
-        |       CAST(1 + CAST('0x' || substr(sha256(text), 3, 2) AS INTEGER) % 16 AS INTEGER) AS frames
-        |FROM documents WHERE text IS NOT NULL""".stripMargin,
-
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty,
-        |       round(sum(l_extendedprice), 2) AS sum_base_price,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-        |       count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_join_topk" ->
-      """SELECT o_orderkey, o_orderdate,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey ASC
-        |LIMIT 10""".stripMargin,
-
-    "q4_window" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |         row_number() OVER (PARTITION BY o_custkey
-        |                            ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
-        |  FROM orders
-        |) WHERE rn = 1""".stripMargin,
-
-    "q5_distinct" ->
-      """SELECT c_mktsegment,
-        |       count(DISTINCT c_nationkey) AS n_nations,
-        |       count(*) AS n_customers
-        |FROM customer GROUP BY c_mktsegment""".stripMargin,
-
-    "q6_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q15_revenue_by_nation" ->
-      """SELECT n_name,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name""".stripMargin,
-
-    "q16_correlated" ->
-      """SELECT p_brand, round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly,
-        |       count(*) AS n
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
-        |                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
-        |GROUP BY p_brand""".stripMargin,
-
-    "q6b_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q17_having" ->
-      """SELECT o_custkey, count(*) AS n_orders,
-        |       round(sum(o_totalprice), 2) AS total_spend
-        |FROM orders GROUP BY o_custkey HAVING count(*) >= 12""".stripMargin,
-
-    "q7_exists" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 200000)""".stripMargin,
-
-    "q8_not_exists" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)""".stripMargin,
-
-    // the salted forms must be INDISTINGUISHABLE from the plain ones —
-    // the oracle is the unsalted join/aggregation
-    "q34_salted_join" ->
-      """SELECT o.o_orderkey, o.o_custkey, c.c_name,
-        |       round(o.o_totalprice, 2) AS totalprice
-        |FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey""".stripMargin,
-
-    "q35_salted_agg" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        |       round(sum(o_totalprice), 2) AS sum_value
-        |FROM orders GROUP BY 1""".stripMargin,
-
-    "q9_events_hourly" ->
-      """SELECT epoch_ns(ts) // 3600000000000 * 3600 AS hour_epoch, event_type,
-        |       count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // identical moments + identical closed forms; the min-ts offset is
-    // recomputed in SQL exactly as the Spark side's bounds job does
-    "events_trend" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |    (epoch_ns(ts) // 1000 -
-        |      (SELECT min(epoch_ns(ts) // 1000) FROM events)) / 86400000000.0 AS x,
-        |    CAST(value AS DOUBLE) AS y
-        |  FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-        |), m AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-        |    sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM e GROUP BY 1
-        |)
-        |SELECT event_type, n,
-        |  CASE WHEN n >= 2 AND n * sxx - sx * sx > 0
-        |    THEN round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) + 0.0
-        |  END AS slope,
-        |  CASE WHEN n >= 2 AND n * sxx - sx * sx > 0
-        |    THEN round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx)
-        |               / n, 6) + 0.0
-        |  END AS intercept,
-        |  CASE WHEN n >= 2 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-        |    THEN round((n * sxy - sx * sy) * (n * sxy - sx * sy) /
-        |               ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
-        |  END AS r2
-        |FROM m""".stripMargin,
-
-    // identical moment formulas; sums differ only in fp order (round-4)
-    "events_ab_ttest" ->
-      """WITH e AS (
-        |  SELECT event_type,
-        |         CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS variant,
-        |         CAST(value AS DOUBLE) AS x
-        |  FROM events WHERE value IS NOT NULL
-        |), m AS (
-        |  SELECT event_type,
-        |    CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |    sum(CASE WHEN variant = 'A' THEN x ELSE 0 END) AS s_a,
-        |    sum(CASE WHEN variant = 'A' THEN x * x ELSE 0 END) AS q_a,
-        |    CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |    sum(CASE WHEN variant = 'B' THEN x ELSE 0 END) AS s_b,
-        |    sum(CASE WHEN variant = 'B' THEN x * x ELSE 0 END) AS q_b
-        |  FROM e GROUP BY 1
-        |), d AS (
-        |  SELECT event_type, n_a, n_b, s_a / n_a AS ma, s_b / n_b AS mb,
-        |    (q_a - n_a * (s_a / n_a) * (s_a / n_a)) / (n_a - 1) AS va,
-        |    (q_b - n_b * (s_b / n_b) * (s_b / n_b)) / (n_b - 1) AS vb
-        |  FROM m
-        |)
-        |SELECT event_type, n_a, n_b,
-        |  round(ma, 4) AS mean_a, round(mb, 4) AS mean_b,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND va / n_a + vb / n_b > 0
-        |    THEN round((ma - mb) / sqrt(va / n_a + vb / n_b), 4) END AS t,
-        |  CASE WHEN n_a >= 2 AND n_b >= 2 AND va / n_a + vb / n_b > 0
-        |    THEN round((va / n_a + vb / n_b) * (va / n_a + vb / n_b) /
-        |      ((va / n_a) * (va / n_a) / (n_a - 1)
-        |        + (vb / n_b) * (vb / n_b) / (n_b - 1)), 4) END AS df
-        |FROM d""".stripMargin,
-
-    // arg_min/arg_max over the unique epoch-micros time = min_by/max_by
-    "events_ohlc" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_ns(ts) // 1000 AS ts_us, value FROM events
-        |)
-        |SELECT event_type,
-        |       ts_us // 3600000000 * 3600000000 AS bucket_us,
-        |       arg_min(value, ts_us) AS open,
-        |       arg_max(value, ts_us) AS close,
-        |       max(value) AS high, min(value) AS low,
-        |       count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM e GROUP BY 1, 2""".stripMargin,
-
-    // same trailing-24h RANGE frame; is_anomaly derives from the rounded
-    // z on both sides
-    "events_anomaly" ->
-      """WITH hourly AS (
-        |  SELECT epoch_us(ts) // 3600000000 * 3600 AS hour_epoch,
-        |         event_type, count(*) AS n
-        |  FROM events GROUP BY 1, 2
-        |), scored AS (
-        |  SELECT hour_epoch, event_type, n,
-        |         avg(n) OVER tw AS mu, stddev_pop(n) OVER tw AS sd
-        |  FROM hourly
-        |  WINDOW tw AS (PARTITION BY event_type ORDER BY hour_epoch
-        |                RANGE BETWEEN 86400 PRECEDING AND 3600 PRECEDING)
-        |)
-        |SELECT hour_epoch, event_type, n,
-        |       round((n - mu) / sd, 4) AS z,
-        |       abs(round((n - mu) / sd, 4)) > 3.0 AS is_anomaly
-        |FROM scored WHERE sd > 0""".stripMargin,
-
-    // quantile_cont == Spark percentile (the q20 parity); a value within
-    // one ulp of a clip bound rounds to the same 4 decimals either way
-    "corpus_curate" -> (curateCtes +
-      """
-        |SELECT doc_id, source, quality, predicted_lang
-        |FROM exact
-        |WHERE doc_id NOT IN (SELECT doc_id FROM losers)""".stripMargin),
-
-    "corpus_curate_stats" -> (curateCtes +
-      """
-        |SELECT (SELECT count(*) FROM documents) AS input,
-        |  (SELECT count(*) FROM ql WHERE quality >= 0.3) AS after_quality,
-        |  (SELECT count(*) FROM kept) AS after_lang,
-        |  (SELECT count(DISTINCT fp) FROM fps) AS after_exact,
-        |  (SELECT count(*) FROM exact
-        |   WHERE doc_id NOT IN (SELECT doc_id FROM losers)) AS after_near_dup""".stripMargin),
-
-    "curate_normalize" ->
-      """WITH st AS (
-        |  SELECT event_type,
-        |         quantile_cont(value, 0.05) AS lo,
-        |         quantile_cont(value, 0.95) AS hi,
-        |         avg(value) AS mu, stddev_pop(value) AS sd
-        |  FROM events GROUP BY 1
-        |)
-        |SELECT e.event_id, e.event_type,
-        |       round(greatest(st.lo, least(st.hi, e.value)), 4) AS v_winsor,
-        |       CASE WHEN st.sd > 0
-        |            THEN round((e.value - st.mu) / st.sd, 4) END AS z
-        |FROM events e JOIN st USING (event_type)""".stripMargin,
-
-    // each event expands to its 4 hop-aligned windows: start = 15min-
-    // aligned floor minus k slides, kept while start + 1h > t — exactly
-    // Spark's [start, start + window) membership
-    "q38_sliding_window" ->
-      """WITH ev AS (
-        |  SELECT epoch_us(ts) AS tu, event_type, value FROM events
-        |), k AS (SELECT unnest(range(0, 4)) AS k
-        |), w AS (
-        |  SELECT (tu // 900000000) * 900000000 - k.k * 900000000 AS ws,
-        |         event_type, value
-        |  FROM ev CROSS JOIN k
-        |  WHERE (tu // 900000000) * 900000000 - k.k * 900000000
-        |        + 3600000000 > tu
-        |)
-        |SELECT ws // 1000000 AS win_start_sec, event_type,
-        |       count(*) AS n, round(sum(value), 2) AS sum_value
-        |FROM w GROUP BY 1, 2""".stripMargin,
-
-    "text_tokens" ->
-      ("""SELECT doc_id,
-        |       CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-        |       CAST(len(regexp_extract_all(text, '""" +
-        graft.operators.TextAnalysis.BpePattern.replace("'", "''") +
-        """', 0)) AS BIGINT) AS n_bpe_tokens,
-        |       md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fingerprint
-        |FROM documents""").stripMargin,
-
-    // same plant (chr forms of U+00C3 U+00A9, U+FFFD, BEL), same RE2
-    // patterns; ratio is one double division of exact integer counts
-    "text_encoding" ->
-      """WITH src AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 7 = 0
-        |              THEN text || ' Caf' || chr(195) || chr(169) || ' '
-        |                        || chr(65533) || chr(7)
-        |              ELSE text END AS t
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(t, '\x{FFFD}')) AS BIGINT) AS n_replacement,
-        |    CAST(len(regexp_extract_all(t, '[\x{0080}-\x{009F}]')) AS BIGINT) AS n_c1,
-        |    CAST(len(regexp_extract_all(t, '[\x{00C2}-\x{00C3}][\x{0080}-\x{00BF}]')) AS BIGINT) AS n_mojibake,
-        |    CAST(len(regexp_extract_all(t, '[\x{0001}-\x{0008}\x{000B}\x{000C}\x{000E}-\x{001F}]')) AS BIGINT) AS n_ctl,
-        |    CAST(length(t) AS BIGINT) AS n_chars
-        |  FROM src
-        |)
-        |SELECT doc_id, n_replacement, n_c1, n_mojibake, n_ctl, n_chars,
-        |       round((n_replacement + n_c1 + n_mojibake + n_ctl)::DOUBLE
-        |             / greatest(n_chars, 1), 6) AS bad_ratio,
-        |       (n_replacement > 0 OR
-        |        round((n_replacement + n_c1 + n_mojibake + n_ctl)::DOUBLE
-        |              / greatest(n_chars, 1), 6) >= 0.001) AS flag_encoding
-        |FROM c""".stripMargin,
-
-    "text_sentences" ->
-      """WITH src AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 3 = 0
-        |      THEN rtrim(regexp_replace(text,
-        |             '(\w+ \w+ \w+ \w+ \w+) ', '\1. ', 'g')) || '.'
-        |      ELSE regexp_replace(text,
-        |             '(\w+ \w+ \w+ \w+ \w+) ', '\1. ', 'g') END AS t
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id,
-        |    CAST(len(regexp_extract_all(t, '[.!?]+(\s|\z)')) AS BIGINT) AS n_sentences,
-        |    CAST(len(string_split_regex(trim(t), '\s+')) AS BIGINT) AS n_tokens,
-        |    regexp_matches(rtrim(t), '[.!?]["'']?\z') AS ends_terminal
-        |  FROM src
-        |)
-        |SELECT doc_id, n_sentences, n_tokens, ends_terminal,
-        |       round(n_tokens::DOUBLE / greatest(n_sentences, 1), 4)
-        |         AS avg_sentence_tokens
-        |FROM c""".stripMargin,
-
-    "text_winnow" ->
-      """WITH norm AS (
-        |  SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    [CAST('0x' || substr(md5(substr(t, CAST(i AS INTEGER), 8)), 1, 8) AS BIGINT)
-        |     for i in range(1, len(t) - 8 + 2)] AS hs
-        |  FROM norm WHERE len(t) >= 8
-        |), fps AS (
-        |  SELECT doc_id, list_sort(list_distinct(
-        |    CASE WHEN len(hs) >= 4 THEN
-        |      [list_min(hs[CAST(i AS INTEGER):CAST(i + 3 AS INTEGER)])
-        |       for i in range(1, len(hs) - 4 + 2)]
-        |    ELSE [list_min(hs)] END)) AS f
-        |  FROM hs
-        |)
-        |SELECT doc_id, CAST(len(f) AS BIGINT) AS n_fp,
-        |       f[1] AS min_fp, f[len(f)] AS max_fp,
-        |       CAST(list_sum(f) AS BIGINT) AS sum_fp
-        |FROM fps WHERE len(f) > 0""".stripMargin,
-
-    // the winnow pipeline again, then unnest + group: per-doc
-    // fingerprints are distinct, so count(*) is the distinct-doc count
-    "text_shared_passages" ->
-      """WITH norm AS (
-        |  SELECT doc_id, regexp_replace(trim(text), '\s+', ' ', 'g') AS t FROM documents
-        |), hs AS (
-        |  SELECT doc_id,
-        |    [CAST('0x' || substr(md5(substr(t, CAST(i AS INTEGER), 8)), 1, 8) AS BIGINT)
-        |     for i in range(1, len(t) - 8 + 2)] AS hs
-        |  FROM norm WHERE len(t) >= 8
-        |), fps AS (
-        |  SELECT doc_id, list_sort(list_distinct(
-        |    CASE WHEN len(hs) >= 4 THEN
-        |      [list_min(hs[CAST(i AS INTEGER):CAST(i + 3 AS INTEGER)])
-        |       for i in range(1, len(hs) - 4 + 2)]
-        |    ELSE [list_min(hs)] END)) AS f
-        |  FROM hs
-        |), ex AS (
-        |  SELECT doc_id, unnest(f) AS fp FROM fps
-        |)
-        |SELECT fp, count(*) AS n_docs,
-        |       min(doc_id) AS min_doc, max(doc_id) AS max_doc
-        |FROM ex GROUP BY fp HAVING count(*) >= 2""".stripMargin,
-
-    // same md5-bucket arithmetic, reconstructed independently
-    "corpus_split" ->
-      """SELECT doc_id, source,
-        |  CASE WHEN CAST('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 900 THEN 'train'
-        |       WHEN CAST('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 950 THEN 'val'
-        |       ELSE 'test' END AS split,
-        |  CAST('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000
-        |    < CASE WHEN source IN ('src0','src1','src2') THEN 300 ELSE 800 END AS kept
-        |FROM documents""".stripMargin,
-
-    // the naive global-window form IS the oracle — the point of the
-    // distributed prefix sum is producing identical numbers without it
-    "corpus_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n
-        |  FROM documents
-        |)
-        |SELECT doc_id, n AS n_tokens,
-        |  CAST(COALESCE(sum(n) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS token_offset,
-        |  CAST(COALESCE(sum(n) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // 512 AS BIGINT) AS block_id
-        |FROM t""".stripMargin,
-
-    // eval 3-gram set built with the same list comprehension as the
-    // dedup_ngram oracle; shared-shingle counts per corpus doc
-    "decontaminate" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3 THEN
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)])
-        |    ELSE [] END AS shingles
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |), ev AS (
-        |  SELECT DISTINCT unnest(shingles) AS sh FROM sh WHERE doc_id <= 5
-        |), corpus AS (
-        |  SELECT doc_id, unnest(shingles) AS sh FROM sh WHERE doc_id > 5
-        |)
-        |SELECT c.doc_id, count(*) AS n_shared
-        |FROM corpus c JOIN ev USING (sh)
-        |GROUP BY c.doc_id""".stripMargin,
-
-    // bloom pruning is exact after the verify join -> same oracle as the
-    // exact operator, proving the bloom path changes nothing but the plan
-    "decontaminate_bloom" ->
-      """WITH sh AS (
-        |  SELECT doc_id, CASE WHEN len(w) >= 3 THEN
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)])
-        |    ELSE [] END AS shingles
-        |  FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |), ev AS (
-        |  SELECT DISTINCT unnest(shingles) AS sh FROM sh WHERE doc_id <= 5
-        |), corpus AS (
-        |  SELECT doc_id, unnest(shingles) AS sh FROM sh WHERE doc_id > 5
-        |)
-        |SELECT c.doc_id, count(*) AS n_shared
-        |FROM corpus c JOIN ev USING (sh)
-        |GROUP BY c.doc_id""".stripMargin,
-
-    // repetition signals reconstructed via the explode/groupBy form the
-    // in-row kernel replaces (unnest + count per word + max, joined back)
-    "text_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, max(cnt) AS top_cnt FROM (
-        |    SELECT doc_id, w, count(*) AS cnt
-        |    FROM (SELECT doc_id, unnest(toks) AS w FROM t) GROUP BY doc_id, w)
-        |  GROUP BY doc_id)
-        |SELECT t.doc_id,
-        |  CAST(len(t.toks) AS BIGINT) AS n_words,
-        |  CAST(len(list_distinct(t.toks)) AS BIGINT) AS n_distinct,
-        |  round(1.0 - len(list_distinct(t.toks)) / greatest(len(t.toks), 1), 4)
-        |    AS dup_word_fraction,
-        |  CAST(c.top_cnt AS BIGINT) AS top_word_count,
-        |  round(c.top_cnt / greatest(len(t.toks), 1), 4) AS top_word_ratio
-        |FROM t JOIN c USING (doc_id)""".stripMargin,
-
-    "text_quality" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens,
-        |  round(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) / greatest(len(text), 1), 4) AS alpha_ratio,
-        |  round(len([x for x in string_split_regex(trim(text), '\s+')
-        |             if x in ('the','a','of','and','is','to','in')])
-        |        / greatest(len(string_split_regex(trim(text), '\s+')), 1), 4) AS stopword_ratio,
-        |  round(least(1.0, len(string_split_regex(trim(text), '\s+')) / 100.0) * 0.5
-        |        + (len(regexp_replace(text, '[^A-Za-z]', '', 'g')) / greatest(len(text), 1)) * 0.3
-        |        + (len([x for x in string_split_regex(trim(text), '\s+')
-        |                if x in ('the','a','of','and','is','to','in')])
-        |           / greatest(len(string_split_regex(trim(text), '\s+')), 1)) * 0.2, 4) AS quality
-        |FROM documents""".stripMargin,
-
-    "text_langid" -> (langidCtes +
-      """
-        |SELECT doc_id, predicted_lang,
-        |       CAST(en AS BIGINT) AS en_hits, CAST(de AS BIGINT) AS de_hits
-        |FROM pred""".stripMargin),
-
-    // confusion matrix of the langid heuristic vs the labeled lang
-    // column — the evaluation report a classifier family ships with
-    "text_lang_confusion" -> (langidCtes +
-      """
-        |SELECT d.lang, p.predicted_lang, count(*) AS n
-        |FROM documents d JOIN pred p USING (doc_id)
-        |GROUP BY 1, 2""".stripMargin),
-
-    "dedup_exact" ->
-      """WITH u AS (SELECT doc_id, text FROM documents
-        |           UNION ALL SELECT doc_id, text FROM documents)
-        |SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fingerprint,
-        |       min(doc_id) AS survivor_id, count(*) AS n_copies
-        |FROM u GROUP BY 1""".stripMargin,
-
-    "dedup_minhash_lsh" ->
-      s"""WITH $minhashCtes
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) AS jac
-        |FROM cand
-        |JOIN sh sa ON sa.doc_id = doc_a
-        |JOIN sh sb ON sb.doc_id = doc_b
-        |WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8""".stripMargin,
-
-    // the LSH pair CTEs feed the textbook triangle count — same composed
-    // derivation as the Spark side (minhashLshPairs -> triangleStats)
-    "dedup_graph_quality" ->
-      s"""WITH $minhashCtes,
-        |pr AS (
-        |  SELECT doc_a, doc_b FROM cand
-        |  JOIN sh sa ON sa.doc_id = doc_a
-        |  JOIN sh sb ON sb.doc_id = doc_b
-        |  WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8
-        |), ed AS (
-        |  SELECT DISTINCT doc_a AS a, doc_b AS b FROM pr
-        |), deg AS (
-        |  SELECT n, count(*) AS d
-        |  FROM (SELECT a AS n FROM ed UNION ALL SELECT b FROM ed)
-        |  GROUP BY 1
-        |), tri AS (
-        |  SELECT count(*) AS t FROM ed e1, ed e2, ed e3
-        |  WHERE e1.a = e2.a AND e1.b < e2.b
-        |    AND e3.a = e1.b AND e3.b = e2.b
-        |)
-        |SELECT (SELECT count(*) FROM deg) AS n_nodes,
-        |       (SELECT count(*) FROM ed) AS n_edges,
-        |       (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) FROM deg) AS n_wedges,
-        |       (SELECT t FROM tri) AS n_triangles,
-        |       CASE WHEN (SELECT sum(d * (d - 1) // 2) FROM deg) > 0
-        |            THEN round(3.0 * (SELECT t FROM tri) /
-        |                       (SELECT sum(d * (d - 1) // 2) FROM deg), 4)
-        |       END AS global_clustering""".stripMargin,
-
-    // the one-shot pair derivation over the FULL set, restricted to pairs
-    // touching the md5-chosen delta — the incremental operator's contract
-    "dedup_incremental" ->
-      s"""WITH $minhashCtes
-        |SELECT doc_a, doc_b,
-        |  round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) AS jac
-        |FROM cand
-        |JOIN sh sa ON sa.doc_id = doc_a
-        |JOIN sh sb ON sb.doc_id = doc_b
-        |WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8
-        |  AND (CAST('0x' || substr(md5('delta:' || CAST(doc_a AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 800
-        |    OR CAST('0x' || substr(md5('delta:' || CAST(doc_b AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 800)""".stripMargin,
-
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $minhashCtes,
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM cand
-        |  JOIN sh sa ON sa.doc_id = doc_a
-        |  JOIN sh sb ON sb.doc_id = doc_b
-        |  WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8
-        |), edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-        |)
-        |SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS cluster_id
-        |FROM reach GROUP BY a""".stripMargin,
-
-    // same recursive reachability as dedup_clusters, then a per-CLUSTER
-    // md5 bucket — every member inherits its representative's side, so
-    // the oracle re-derives leakage-freedom from first principles
-    "corpus_leakage_split" ->
-      s"""WITH RECURSIVE $minhashCtes,
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM cand
-        |  JOIN sh sa ON sa.doc_id = doc_a
-        |  JOIN sh sb ON sb.doc_id = doc_b
-        |  WHERE round(CAST(len(list_intersect(sa.shingles, sb.shingles)) AS DOUBLE) /
-        |          len(list_distinct(list_concat(sa.shingles, sb.shingles))), 4) >= 0.8
-        |), edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs
-        |), reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-        |), cl AS (
-        |  SELECT a AS doc_id, least(a, min(b)) AS cluster_id FROM reach GROUP BY a
-        |), rep AS (
-        |  SELECT d.doc_id, d.source,
-        |         CAST(COALESCE(c.cluster_id, d.doc_id) AS BIGINT) AS split_rep
-        |  FROM documents d LEFT JOIN cl c ON d.doc_id = c.doc_id
-        |)
-        |SELECT doc_id, source, split_rep,
-        |  CASE WHEN CAST('0x' || substr(md5('lsplit:' || CAST(split_rep AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 900 THEN 'train'
-        |       WHEN CAST('0x' || substr(md5('lsplit:' || CAST(split_rep AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 950 THEN 'val'
-        |       ELSE 'test' END AS split
-        |FROM rep""".stripMargin,
-
-    "dedup_ngram" ->
-      """WITH sh AS (
-        |  SELECT doc_id, source, CASE WHEN len(w) >= 3 THEN
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)])
-        |    ELSE [] END AS shingles
-        |  FROM (SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.shingles, b.shingles))), 4) AS jac
-        |FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id
-        |WHERE round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-        |      len(list_distinct(list_concat(a.shingles, b.shingles))), 4) >= 0.5""".stripMargin,
-
-    // same shingle CTE as dedup_ngram; the inter>0 guard mirrors the
-    // inverted-index contract (pairs must share a shingle) and keeps a
-    // 0/0 NaN — which DuckDB orders ABOVE the threshold — out of the set
-    "dedup_containment" ->
-      """WITH sh AS (
-        |  SELECT doc_id, source, CASE WHEN len(w) >= 3 THEN
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)])
-        |    ELSE [] END AS shingles
-        |  FROM (SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |  round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-        |        least(len(a.shingles), len(b.shingles)), 4) AS containment
-        |FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.shingles, b.shingles)) > 0
-        |  AND round(CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) /
-        |      least(len(a.shingles), len(b.shingles)), 4) >= 0.6""".stripMargin,
-
-    "dedup_simhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents
-        |), h AS (
-        |  SELECT doc_id, CAST('0x' || substr(md5(w), 1, 4) AS INTEGER) AS h FROM toks
-        |), votes AS (
-        |  SELECT doc_id, b,
-        |         sum(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM h, range(0, 16) t(b) GROUP BY doc_id, b
-        |)
-        |SELECT doc_id,
-        |       CAST(sum(CASE WHEN v > 0 THEN 1 << CAST(b AS INTEGER) ELSE 0 END) AS BIGINT) AS simhash16
-        |FROM votes GROUP BY doc_id""".stripMargin,
-
-    // all-pairs reconstruction of the banded form (exact for hamming<=3)
-    "dedup_simhash_pairs" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents
-        |), h AS (
-        |  SELECT doc_id, CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) AS h FROM toks
-        |), votes AS (
-        |  SELECT doc_id, b,
-        |         sum(CASE WHEN (h >> CAST(b AS INTEGER)) & 1 = 1 THEN 1 ELSE -1 END) AS v
-        |  FROM h, range(0, 60) t(b) GROUP BY doc_id, b
-        |), sig AS (
-        |  SELECT doc_id,
-        |         CAST(sum(CASE WHEN v > 0 THEN CAST(1 AS BIGINT) << CAST(b AS INTEGER) ELSE 0 END) AS BIGINT) AS s
-        |  FROM votes GROUP BY doc_id
-        |)
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       CAST(bit_count(xor(a.s, b.s)) AS INTEGER) AS hamming
-        |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.s, b.s)) <= 3""".stripMargin,
-
-    // the planted corpus' semantic groups in closed form: (axis, pinned
-    // angle); keep each group's min id — the independent statement of
-    // "no smaller-id semantic duplicate exists"
-    "dedup_semantic" ->
-      """WITH c AS (
-        |  SELECT vec_id, vec_id % 10 AS g,
-        |         least((vec_id - 10) // 10, 4) AS r
-        |  FROM embeddings WHERE vec_id >= 10
-        |)
-        |SELECT a.vec_id FROM c a
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM c b
-        |  WHERE b.g = a.g AND b.r = a.r AND b.vec_id < a.vec_id)""".stripMargin,
-
-    "dedup_embedding" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |       round(list_dot_product(a.embedding, b.embedding) /
-        |             (sqrt(list_dot_product(a.embedding, a.embedding)) *
-        |              sqrt(list_dot_product(b.embedding, b.embedding))), 4) AS sim
-        |FROM embeddings a JOIN embeddings b
-        |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE round(list_dot_product(a.embedding, b.embedding) /
-        |            (sqrt(list_dot_product(a.embedding, a.embedding)) *
-        |             sqrt(list_dot_product(b.embedding, b.embedding))), 4) >= 0.4""".stripMargin,
-
-    "embed_knn" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS c_id, embedding AS c_vec FROM embeddings WHERE vec_id >= 10),
-        |scored AS (
-        |  SELECT q_id, c_id,
-        |         round(list_dot_product(q_vec, c_vec) /
-        |               (sqrt(list_dot_product(q_vec, q_vec)) * sqrt(list_dot_product(c_vec, c_vec))), 4) AS sim
-        |  FROM c, q
-        |), ranked AS (
-        |  SELECT q_id, c_id, sim,
-        |         CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id ASC) AS INTEGER) AS rank
-        |  FROM scored
-        |)
-        |SELECT q_id, c_id, sim, rank FROM ranked WHERE rank <= 5""".stripMargin,
-
-    // Both ANN variants run over the planted validation corpus
-    // (Similarity.plantedClusterVector), whose true top-k is analytic:
-    // positive similarity only within a query's own cluster (orthogonal
-    // axes), sims = cos(0.1 * min(ring, 4)), ties broken by c_id — the
-    // oracle is brute force over the analytically-reconstructed corpus.
-    "embed_lsh_topk" -> PlantedAnnOracle,
-    "embed_ivf_topk" -> PlantedAnnOracle,
-    "embed_ivf_persisted" -> PlantedAnnOracle,
-    "embed_i8_topk" -> PlantedAnnOracle,
-    "embed_pq_topk" -> PlantedAnnOracle,
-    "embed_ivfpq_topk" -> PlantedAnnOracle,
-
-    // the same +-1 matrix from md5 first-hex-digit: planeComponent's
-    // `digest[0] & 0x80 == 0` IS `substr(md5, 1, 1) < '8'`
-    "embed_random_projection" -> {
-      val cols = (0 until 8).map { p =>
-        s"""round(sum(x * CASE WHEN substr(md5('$p|' || CAST(c AS VARCHAR)), 1, 1) < '8'
-           |  THEN 1.0 ELSE -1.0 END) / sqrt(8.0), 4) AS rp$p""".stripMargin
-      }.mkString(",\n")
-      s"""WITH px AS (
-         |  SELECT vec_id, label,
-         |         CAST(generate_subscripts(embedding, 1) AS BIGINT) - 1 AS c,
-         |         CAST(unnest(embedding) AS DOUBLE) AS x
-         |  FROM embeddings
-         |)
-         |SELECT vec_id, label,
-         |$cols
-         |FROM px GROUP BY 1, 2""".stripMargin
-    },
-
-    "q10_intersect" ->
-      """SELECT o_custkey FROM orders WHERE o_totalprice > 250000
-        |INTERSECT
-        |SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'""".stripMargin,
-
-    "q11_except" ->
-      """SELECT o_custkey FROM orders
-        |EXCEPT
-        |SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'""".stripMargin,
-
-    "embed_quantize_i8" ->
-      """WITH m AS (
-        |  SELECT vec_id, embedding AS e,
-        |         list_max([abs(CAST(x AS DOUBLE)) for x in embedding]) AS maxabs
-        |  FROM embeddings
-        |)
-        |SELECT vec_id,
-        |       round(maxabs / 127, 6) AS scale6,
-        |       CAST(CASE WHEN maxabs > 0
-        |            THEN list_sum([round(CAST(x AS DOUBLE) / (maxabs / 127)) for x in e])
-        |            ELSE 0 END AS BIGINT) AS q_sum,
-        |       CASE WHEN maxabs > 0
-        |            THEN list_max([abs(CAST(x AS DOUBLE) -
-        |                 round(CAST(x AS DOUBLE) / (maxabs / 127)) * (maxabs / 127))
-        |                 for x in e]) <= maxabs / 127 * 0.501
-        |            ELSE true END AS within_bound
-        |FROM m""".stripMargin,
-
-    "q32_window_funcs" ->
-      """SELECT o_orderkey,
-        |       lag(o_totalprice) OVER w AS prev_price,
-        |       lead(o_totalprice) OVER w AS next_price,
-        |       ntile(4) OVER w AS quartile,
-        |       round(percent_rank() OVER w, 4) AS pr
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY o_orderdate, o_orderkey)""".stripMargin,
-
-    "q33_string_agg" ->
-      """SELECT o_orderpriority,
-        |       string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus)
-        |         AS statuses,
-        |       count(*) AS n
-        |FROM orders GROUP BY o_orderpriority""".stripMargin,
-
-    "q29_intersect_all" ->
-      """SELECT o_custkey FROM orders WHERE o_totalprice > 150000
-        |INTERSECT ALL
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'""".stripMargin,
-
-    "q30_except_all" ->
-      """SELECT o_custkey FROM orders
-        |EXCEPT ALL
-        |SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'""".stripMargin,
-
-    "q31_variant_json" ->
-      """SELECT event_type, count(*) AS n,
-        |       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |       count(DISTINCT CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_distinct_k
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "minhash_by_source" -> {
-      val mins = (0 until 8).map(i =>
-        s"min((${graft.operators.Dedup.MinhashA(i)}*h + " +
-          s"${graft.operators.Dedup.MinhashB(i)}) % ${graft.operators.Dedup.MinhashP}) AS mh$i")
-        .mkString(", ")
-      s"""WITH sh AS (
-        |  SELECT source, CASE WHEN len(w) >= 3 THEN
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w)-1)])
-        |    ELSE [] END AS shingles
-        |  FROM (SELECT source, string_split_regex(trim(text), '\\s+') AS w FROM documents)
-        |), h AS (
-        |  SELECT source, CAST('0x' || substr(md5(s), 1, 8) AS BIGINT) AS h
-        |  FROM (SELECT source, unnest(shingles) AS s FROM sh)
-        |)
-        |SELECT source, $mins FROM h GROUP BY source""".stripMargin
-    },
-
-    "q14_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events
-        |), flagged AS (
-        |  SELECT user_id, tsu,
-        |    CASE WHEN tsu - lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
-        |              > 3600000000 THEN 1 ELSE 0 END AS is_new,
-        |    event_id
-        |  FROM e
-        |), sess AS (
-        |  SELECT user_id, tsu,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM flagged
-        |)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |       count(*) AS n_events,
-        |       min(tsu) AS start_us, max(tsu) AS end_us
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-
-    // the session_window form must land on the IDENTICAL session set as
-    // the lag/cumsum form (gap+1µs boundary alignment) — same oracle
-    "q14b_session_window" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events
-        |), flagged AS (
-        |  SELECT user_id, tsu,
-        |    CASE WHEN tsu - lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id)
-        |              > 3600000000 THEN 1 ELSE 0 END AS is_new,
-        |    event_id
-        |  FROM e
-        |), sess AS (
-        |  SELECT user_id, tsu,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |                      ROWS UNBOUNDED PRECEDING) AS session_id
-        |  FROM flagged
-        |)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |       count(*) AS n_events,
-        |       min(tsu) AS start_us, max(tsu) AS end_us
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-
-    // As-of semantics as an independent formulation: inequality LEFT JOIN
-    // + row_number picking the latest (ties: largest event_id) — the same
-    // contract the window carry-forward implements in one shuffle.
-    // stage-chained min-ts CTEs mirror the first-touch semantics: stage i
-    // is the earliest matching event at-or-after stage i-1's match,
-    // chain bounded by t1 + 24h; stalls propagate as nulls
-    "q36_funnel" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) AS ts, event_type FROM events
-        |), s1 AS (
-        |  SELECT user_id, min(ts) AS t1 FROM ev
-        |  WHERE event_type = 'view' GROUP BY 1
-        |), s2 AS (
-        |  SELECT s1.user_id, s1.t1, min(e.ts) AS t2
-        |  FROM s1 LEFT JOIN ev e ON e.user_id = s1.user_id
-        |    AND e.event_type = 'click'
-        |    AND e.ts >= s1.t1 AND e.ts <= s1.t1 + 86400000000
-        |  GROUP BY 1, 2
-        |), s3 AS (
-        |  SELECT s2.user_id, s2.t1, s2.t2, min(e.ts) AS t3
-        |  FROM s2 LEFT JOIN ev e ON e.user_id = s2.user_id
-        |    AND e.event_type = 'purchase'
-        |    AND e.ts >= s2.t2 AND e.ts <= s2.t1 + 86400000000
-        |  GROUP BY 1, 2, 3
-        |)
-        |SELECT user_id, t1, t2, t3,
-        |       CAST(1 + CAST(t2 IS NOT NULL AS INT)
-        |              + CAST(t3 IS NOT NULL AS INT) AS BIGINT) AS stages_reached
-        |FROM s3""".stripMargin,
-
-    // `//` is DuckDB floor division — equal to Spark's `div` truncation
-    // on these non-negative micros
-    // the bucketed tables hold projections of orders/customer, so the
-    // plain-join SQL is the semantic oracle for the co-located plan
-    "q39_bucketed_join" ->
-      """SELECT c_custkey, c_mktsegment, count(*) AS n_orders,
-        |       round(sum(o_totalprice), 2) AS total_spend
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    // manifest pruning is a superset file filter + exact residual
-    // predicate, so the whole composition must equal a plain
-    // filter-join-aggregate — THE no-drift contract of file skipping
-    "lakehouse_pruned_join" ->
-      """SELECT c_mktsegment, event_type, count(*) AS n_events,
-        |       round(sum(value), 2) AS total_value
-        |FROM events JOIN customer ON user_id = c_custkey
-        |WHERE user_id BETWEEN 4 AND 7
-        |GROUP BY 1, 2""".stripMargin,
-
-    // both pruning dimensions must be row-invisible: the 2-D pruned read
-    // equals the plain two-range filter-aggregate (integer-floor time
-    // band arithmetic identical in both engines)
-    "lakehouse_pruned_2d" ->
-      """WITH b AS (
-        |  SELECT min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1 FROM events
-        |)
-        |SELECT event_type, count(*) AS n_events,
-        |       round(sum(value), 2) AS total_value
-        |FROM events, b
-        |WHERE user_id BETWEEN 4 AND 7
-        |  AND epoch_us(ts) >= b.t0 + (b.t1 - b.t0) * 3 // 10
-        |  AND epoch_us(ts) <= b.t0 + (b.t1 - b.t0) * 5 // 10
-        |GROUP BY 1""".stripMargin,
-
-    // the no-drift contract of incremental ingest: initial write + delta
-    // append + manifest-pruned read must equal one plain filter-aggregate
-    // over the WHOLE table (the md5 batch split is invisible by design)
-    "lakehouse_incremental" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       round(sum(value), 2) AS total_value
-        |FROM events
-        |WHERE user_id BETWEEN 4 AND 7
-        |GROUP BY 1""".stripMargin,
-
-    // compaction must be row-preserving: the post-OPTIMIZE pruned read
-    // equals the same whole-table filter-aggregate as the other layouts
-    "lakehouse_compact" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       round(sum(value), 2) AS total_value
-        |FROM events
-        |WHERE user_id BETWEEN 4 AND 7
-        |GROUP BY 1""".stripMargin,
-
-    // typed (string + date) manifest pruning must be row-invisible: the
-    // category-equality x date-band pruned read equals the plain
-    // two-predicate filter-aggregate; the date band is integer-floor
-    // arithmetic on day counts, identical in both engines
-    "lakehouse_pruned_date" ->
-      """WITH b AS (
-        |  SELECT min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1
-        |  FROM events
-        |)
-        |SELECT CAST(date_diff('day', DATE '1970-01-01',
-        |                      CAST(ts AS DATE)) AS BIGINT) AS event_day,
-        |       count(*) AS n_events,
-        |       round(sum(value), 2) AS total_value
-        |FROM events, b
-        |WHERE event_type = 'click'
-        |  AND CAST(ts AS DATE) >= b.d0 + CAST((b.d1 - b.d0) * 3 // 10 AS INTEGER)
-        |  AND CAST(ts AS DATE) <= b.d0 + CAST((b.d1 - b.d0) * 5 // 10 AS INTEGER)
-        |GROUP BY 1""".stripMargin,
-
-    // incremental consumption: the changes feed after the initial write
-    // must be exactly the md5-chosen delta batch, reconstructed here
-    // with the same bucket arithmetic over the raw table
-    "lakehouse_changes" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       round(sum(value), 2) AS total_value
-        |FROM events
-        |WHERE CAST('0x' || substr(md5('lhchg:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 800
-        |GROUP BY 1""".stripMargin,
-
-    // COW delete: survivors of the same md5 bucket filter, nothing more,
-    // nothing less
-    "lakehouse_delete" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       round(sum(value), 2) AS total_value
-        |FROM events
-        |WHERE user_id BETWEEN 4 AND 7
-        |  AND CAST('0x' || substr(md5('lhdel:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 850
-        |GROUP BY 1""".stripMargin,
-
-    // COW merge: the same rows, with the md5-chosen keys' values doubled
-    // (exact fp doubling — no rounding before the final round)
-    "lakehouse_upsert" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       round(sum(CASE WHEN CAST('0x' || substr(md5('lhups:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 900
-        |                      THEN value * 2 ELSE value END), 2) AS total_value
-        |FROM events
-        |WHERE user_id BETWEEN 4 AND 7
-        |GROUP BY 1""".stripMargin,
-
-    // shuffle-side merge: byte-identical contract to lakehouse_upsert
-    "lakehouse_upsert_large" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       round(sum(CASE WHEN CAST('0x' || substr(md5('lhups:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 900
-        |                      THEN value * 2 ELSE value END), 2) AS total_value
-        |FROM events
-        |WHERE user_id BETWEEN 4 AND 7
-        |GROUP BY 1""".stripMargin,
-
-    // row-level CDF: postimages doubled, inserts tripled, deletes read
-    // from the POST-UPSERT state (the CASE arithmetic rebuilds it)
-    "lakehouse_cdf" ->
-      """WITH b AS (
-        |  SELECT event_type, user_id, value,
-        |         CAST('0x' || substr(md5('lhcdf:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 AS bk
-        |  FROM events
-        |), v1 AS (
-        |  SELECT event_type, user_id,
-        |         CASE WHEN bk >= 900 THEN value * 2 ELSE value END AS value
-        |  FROM b
-        |  UNION ALL
-        |  SELECT event_type, user_id, value * 3 AS value FROM b WHERE bk >= 900
-        |), typed AS (
-        |  SELECT 'update_postimage' AS _change_type, event_type, value * 2 AS value
-        |  FROM b WHERE bk >= 900
-        |  UNION ALL
-        |  SELECT 'insert', event_type, value * 3 FROM b WHERE bk >= 900
-        |  UNION ALL
-        |  SELECT 'delete', event_type, value FROM v1 WHERE user_id <= 2
-        |)
-        |SELECT _change_type, event_type, count(*) AS n_events,
-        |       round(sum(value), 2) AS total_value
-        |FROM typed
-        |GROUP BY 1, 2""".stripMargin,
-
-    // additive schema evolution: value is non-null ONLY on the widened
-    // delta batch's rows — seed rows null-fill it
-    "lakehouse_evolve" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       count(CASE WHEN CAST('0x' || substr(md5('lhevo:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 600
-        |                  THEN value END) AS n_valued,
-        |       round(sum(CASE WHEN CAST('0x' || substr(md5('lhevo:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 600
-        |                     THEN value END), 2) AS total_value
-        |FROM events
-        |WHERE user_id BETWEEN 4 AND 7
-        |GROUP BY 1""".stripMargin,
-
-    // upsert-aware change feed: exactly the remapped pure-insert rows,
-    // value tripled — survivor re-files and update-postimages never feed
-    "lakehouse_upsert_changes" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       round(sum(value * 3), 2) AS total_value
-        |FROM events
-        |WHERE CAST('0x' || substr(md5('lhupc:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 >= 900
-        |GROUP BY 1""".stripMargin,
-
-    // atomic REPLACE: the whole table swapped for the doubled-value
-    // frame — the seed subset must leave no trace
-    "lakehouse_replace" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       round(sum(value * 2), 2) AS total_value
-        |FROM events
-        |WHERE user_id BETWEEN 4 AND 7
-        |GROUP BY 1""".stripMargin,
-
-    "q37_retention" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(ts) AS ts FROM events
-        |), f AS (
-        |  SELECT user_id, min(ts) AS first_ts FROM ev GROUP BY 1
-        |), c AS (
-        |  SELECT DISTINCT e.user_id,
-        |         f.first_ts // 604800000000 AS cohort_week,
-        |         (e.ts - f.first_ts) // 604800000000 AS week_offset
-        |  FROM ev e JOIN f USING (user_id)
-        |)
-        |SELECT cohort_week, week_offset, count(*) AS n_users
-        |FROM c GROUP BY 1, 2""".stripMargin,
-
-    // latest (ts, event_id) per key via row_number — the textbook oracle
-    // form; (user_id, event_type, ts) is unique in this data but the
-    // event_id tiebreak mirrors the Spark ordering anyway
-    "cdc_compact" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, event_type, round(value, 2) AS value,
-        |         props, epoch_us(ts) AS ts
-        |  FROM events
-        |)
-        |SELECT event_id, user_id, event_type, value, props, ts FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id, event_type
-        |                               ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM ev)
-        |WHERE rn = 1""".stripMargin,
-
-    // the GLOBAL recompute — one row_number over the whole log — against
-    // which the Spark side's snapshot+merge must hash-match exactly
-    "cdc_merge" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, event_type, round(value, 2) AS value,
-        |         epoch_us(ts) AS ts
-        |  FROM events
-        |)
-        |SELECT user_id, event_id, ts, event_type, value FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY user_id
-        |                               ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM ev)
-        |WHERE rn = 1 AND event_type <> 'error'""".stripMargin,
-
-    // BOTH windows order by (ts, event_id) — the Spark side tiebreaks the
-    // lead the same way, and dropping the tiebreak from either one makes
-    // valid_to nondeterministic on same-ts change rows
-    "cdc_scd2" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts FROM events
-        |), ch AS (
-        |  SELECT user_id, event_type, ts, event_id,
-        |         lag(event_type) OVER (PARTITION BY user_id
-        |                               ORDER BY ts, event_id) AS prev
-        |  FROM ev
-        |)
-        |SELECT user_id, event_type, ts AS valid_from,
-        |       lead(ts) OVER (PARTITION BY user_id
-        |                      ORDER BY ts, event_id) AS valid_to
-        |FROM ch WHERE prev IS NULL OR prev <> event_type""".stripMargin,
-
-    "q18_asof_join" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us, event_type,
-        |         round(value, 2) AS value
-        |  FROM events
-        |), m AS (
-        |  SELECT v.event_id, v.user_id, v.ts_us,
-        |         p.event_id AS purchase_event_id, p.ts_us AS purchase_us,
-        |         p.value AS purchase_value,
-        |         row_number() OVER (PARTITION BY v.event_id
-        |                            ORDER BY p.ts_us DESC, p.event_id DESC) AS rn
-        |  FROM (SELECT * FROM ev WHERE event_type = 'view') v
-        |  LEFT JOIN (SELECT * FROM ev WHERE event_type = 'purchase') p
-        |    ON p.user_id = v.user_id AND p.ts_us <= v.ts_us
-        |)
-        |SELECT event_id, user_id, ts_us,
-        |       purchase_event_id, purchase_us, purchase_value
-        |FROM m WHERE rn = 1""".stripMargin,
-
-    // Pure range join: every click matches at least itself, so count - 1
-    // is the trailing-window neighbor count (self excluded).
-    "q19_range_join" ->
-      """WITH ev AS (
-        |  SELECT event_id, epoch_us(ts) AS ts_us, event_type FROM events
-        |)
-        |SELECT a.event_id AS click_id, count(*) - 1 AS nearby
-        |FROM (SELECT event_id, ts_us FROM ev WHERE event_type = 'click') a
-        |JOIN ev b ON b.ts_us >= a.ts_us - 300000000 AND b.ts_us <= a.ts_us
-        |GROUP BY 1""".stripMargin,
-
-    // Exact formulation of the heavy-hitters query: the sketch's capacity
-    // exceeds the distinct-gram count at test scale, so Misra-Gries
-    // counts are exact and the two must match row-for-row.
-    "corpus_heavy_ngrams" ->
-      """WITH toks AS (
-        |  SELECT string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), g AS (
-        |  SELECT unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                 for i in range(1, len(w) - 1)]) AS gram
-        |  FROM toks WHERE len(w) >= 3
-        |), c AS (
-        |  SELECT gram, count(*) AS n FROM g GROUP BY gram
-        |)
-        |SELECT CAST(row_number() OVER (ORDER BY n DESC, gram) AS BIGINT) AS rank,
-        |       gram, n
-        |FROM c ORDER BY n DESC, gram LIMIT 20""".stripMargin,
-
-    "q20_percentiles" ->
-      """SELECT l_returnflag,
-        |       round(quantile_cont(l_quantity, 0.25), 2) AS p25_qty,
-        |       round(quantile_cont(l_quantity, 0.5), 2) AS p50_qty,
-        |       round(quantile_cont(l_quantity, 0.75), 2) AS p75_qty,
-        |       round(quantile_cont(l_extendedprice, 0.9), 2) AS p90_price
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    // the sketch estimate is engine-specific; the checkable claim is the
-    // exact percentiles plus the estimate's rank-error bound, which the
-    // Spark side reduces to a boolean (same contract as q13)
-    "q20b_approx_percentiles" ->
-      """SELECT l_returnflag,
-        |       round(quantile_cont(l_quantity, 0.25), 2) AS p25_qty,
-        |       round(quantile_cont(l_quantity, 0.5), 2) AS p50_qty,
-        |       round(quantile_cont(l_quantity, 0.75), 2) AS p75_qty,
-        |       true AS within_bound
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q21_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |       CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
-        |       count(*) AS n, round(sum(o_totalprice), 2) AS total
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())""".stripMargin,
-
-    "q22_pivot" ->
-      """SELECT user_id,
-        |       count(*) FILTER (WHERE event_type = 'click') AS n_click,
-        |       count(*) FILTER (WHERE event_type = 'view') AS n_view,
-        |       count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
-        |       count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
-        |       count(*) FILTER (WHERE event_type = 'error') AS n_error
-        |FROM events GROUP BY user_id""".stripMargin,
-
-    "q23_range_frame" ->
-      """SELECT o_orderkey,
-        |       round(sum(o_totalprice) OVER (
-        |         PARTITION BY o_orderpriority
-        |         ORDER BY epoch_days
-        |         RANGE BETWEEN 30 PRECEDING AND CURRENT ROW), 2) AS rev_30d
-        |FROM (SELECT o_orderkey, o_orderpriority, o_totalprice,
-        |             CAST(date_diff('day', DATE '1970-01-01',
-        |                            CAST(o_orderdate AS DATE)) AS BIGINT)
-        |               AS epoch_days
-        |      FROM orders)""".stripMargin,
-
-    "q24_unpivot" ->
-      """WITH wide AS (
-        |  SELECT user_id,
-        |         count(*) FILTER (WHERE event_type = 'click') AS n_click,
-        |         count(*) FILTER (WHERE event_type = 'view') AS n_view,
-        |         count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
-        |         count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
-        |         count(*) FILTER (WHERE event_type = 'error') AS n_error
-        |  FROM events GROUP BY user_id
-        |)
-        |SELECT user_id, 'n_click' AS event_type, n_click AS n FROM wide
-        |UNION ALL SELECT user_id, 'n_view', n_view FROM wide
-        |UNION ALL SELECT user_id, 'n_purchase', n_purchase FROM wide
-        |UNION ALL SELECT user_id, 'n_signup', n_signup FROM wide
-        |UNION ALL SELECT user_id, 'n_error', n_error FROM wide""".stripMargin,
-
-    // text inequality in the oracle == md5 inequality on the Spark side
-    // (the exact-dedup content-identity contract)
-    "corpus_snapshot_diff" ->
-      """WITH newd AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 10 = 0 THEN text || ' v2' ELSE text END AS text
-        |  FROM documents WHERE doc_id % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 13 = 0
-        |)
-        |SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-        |       CASE WHEN o.doc_id IS NULL THEN 'added'
-        |            WHEN n.doc_id IS NULL THEN 'removed'
-        |            WHEN o.text <> n.text THEN 'changed'
-        |            ELSE 'unchanged' END AS change_type
-        |FROM documents o FULL OUTER JOIN newd n ON o.doc_id = n.doc_id
-        |WHERE NOT (o.doc_id IS NOT NULL AND n.doc_id IS NOT NULL
-        |           AND o.text = n.text)""".stripMargin,
-
-    // the 16 interleave terms per dimension: dim j's bit b lands at
-    // output position b*2 + j (disjoint bits, so + is |)
-    "q40_zorder_key" -> {
-      val terms = (0 until 16).flatMap { b =>
-        Seq(s"(((a >> $b) & 1) << ${2 * b})",
-          s"(((c >> $b) & 1) << ${2 * b + 1})")
-      }.mkString(" + ")
-      """WITH bnd AS (
-        |  SELECT CAST(min(l_orderkey) AS DOUBLE) AS lo1,
-        |         CAST(max(l_orderkey) AS DOUBLE) AS hi1,
-        |         CAST(min(l_partkey) AS DOUBLE) AS lo2,
-        |         CAST(max(l_partkey) AS DOUBLE) AS hi2
-        |  FROM lineitem
-        |), s AS (
-        |  SELECT l_orderkey, l_partkey,
-        |    CAST(floor((CAST(l_orderkey AS DOUBLE) - lo1) * (65535.0 / (hi1 - lo1))) AS BIGINT) AS a,
-        |    CAST(floor((CAST(l_partkey AS DOUBLE) - lo2) * (65535.0 / (hi2 - lo2))) AS BIGINT) AS c
-        |  FROM lineitem, bnd
-        |)
-        |SELECT l_orderkey, l_partkey, """.stripMargin +
-        s"CAST($terms AS BIGINT) AS z FROM s"
-    },
-
-    // covar_pop per pair on the same scaled columns, then corr derived
-    // from the round-6 covariances exactly as the Scala side does
-    "profile_corr" -> {
-      val names = Seq("l_quantity", "l_discount", "l_tax", "price_100k")
-      val pairs = for (i <- 1 to 4; j <- i to 4) yield
-        s"SELECT $i AS i, $j AS j, round(covar_pop(c$i, c$j), 6) + 0.0 AS cov FROM src"
-      val nameList = names.map(n => s"'$n'").mkString("[", ", ", "]")
-      s"""WITH src AS (
-         |  SELECT CAST(l_quantity AS DOUBLE) AS c1,
-         |         CAST(l_discount AS DOUBLE) AS c2,
-         |         CAST(l_tax AS DOUBLE) AS c3,
-         |         l_extendedprice / 100000.0 AS c4
-         |  FROM lineitem
-         |), cv AS (
-         |${pairs.mkString("  ", "\n  UNION ALL ", "")}
-         |), d AS (SELECT i AS k, cov AS v FROM cv WHERE i = j)
-         |SELECT $nameList[cv.i] AS col_i, $nameList[cv.j] AS col_j,
-         |       CASE WHEN di.v > 0 AND dj.v > 0
-         |            THEN round(cv.cov / sqrt(di.v * dj.v), 6) + 0.0 END AS corr
-         |FROM cv JOIN d di ON di.k = cv.i JOIN d dj ON dj.k = cv.j""".stripMargin
-    },
-
-    "profile_histogram" ->
-      """WITH b AS (
-        |  SELECT CASE WHEN l_extendedprice < 0.0 THEN -1
-        |              WHEN l_extendedprice >= 120000.0 THEN 24
-        |              ELSE CAST(least(floor((CAST(l_extendedprice AS DOUBLE) - 0.0)
-        |                                    / 5000.0), 23.0) AS INTEGER) END AS bin
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |)
-        |SELECT bin, count(*) AS n,
-        |       round(0.0 + bin * 5000.0, 6) AS bin_lo,
-        |       round(0.0 + (bin + 1) * 5000.0, 6) AS bin_hi
-        |FROM b GROUP BY 1""".stripMargin,
-
-    // quantile_cont == Spark's exact percentile at round-2 (the q20
-    // precedent); identical rounded boundaries -> identical buckets
-    "profile_histogram_eq" ->
-      """WITH b AS (
-        |  SELECT round(quantile_cont(l_extendedprice, 0.25), 2) AS b1,
-        |         round(quantile_cont(l_extendedprice, 0.50), 2) AS b2,
-        |         round(quantile_cont(l_extendedprice, 0.75), 2) AS b3
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |), x AS (
-        |  SELECT CASE WHEN l_extendedprice <= b1 THEN 0
-        |              WHEN l_extendedprice <= b2 THEN 1
-        |              WHEN l_extendedprice <= b3 THEN 2
-        |              ELSE 3 END AS bin
-        |  FROM lineitem, b WHERE l_extendedprice IS NOT NULL
-        |)
-        |SELECT x.bin, count(*) AS n,
-        |       CASE x.bin WHEN 0 THEN b.b1 WHEN 1 THEN b.b2
-        |                  WHEN 2 THEN b.b3 END AS hi_bound
-        |FROM x, b GROUP BY 1, 3""".stripMargin,
-
-    // same md5 row sample, same quantile_cont boundaries, same buckets —
-    // the whole scale-path histogram hash-checks (not just a boolean)
-    "profile_histogram_eq_approx" ->
-      """WITH b AS (
-        |  SELECT round(quantile_cont(l_extendedprice, 0.25), 2) AS b1,
-        |         round(quantile_cont(l_extendedprice, 0.50), 2) AS b2,
-        |         round(quantile_cont(l_extendedprice, 0.75), 2) AS b3
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL
-        |    AND CAST('0x' || substr(md5('ehist:' || CAST(l_orderkey AS VARCHAR)), 1, 8)
-        |             AS BIGINT) % 1000 < 50
-        |), x AS (
-        |  SELECT CASE WHEN l_extendedprice <= b1 THEN 0
-        |              WHEN l_extendedprice <= b2 THEN 1
-        |              WHEN l_extendedprice <= b3 THEN 2
-        |              ELSE 3 END AS bin
-        |  FROM lineitem, b WHERE l_extendedprice IS NOT NULL
-        |)
-        |SELECT x.bin, count(*) AS n,
-        |       CASE x.bin WHEN 0 THEN b.b1 WHEN 1 THEN b.b2
-        |                  WHEN 2 THEN b.b3 END AS hi_bound
-        |FROM x, b GROUP BY 1, 3""".stripMargin,
-
-    "profile_topvalues" ->
-      """WITH s AS (
-        |  SELECT 'o_orderstatus' AS col_name, o_orderstatus AS value FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderpriority', o_orderpriority FROM orders
-        |), c AS (
-        |  SELECT col_name, value, count(*) AS n FROM s GROUP BY 1, 2
-        |), r AS (
-        |  SELECT col_name, value, n,
-        |    CAST(row_number() OVER (PARTITION BY col_name
-        |                            ORDER BY n DESC, value) AS BIGINT) AS rank
-        |  FROM c
-        |)
-        |SELECT col_name, rank, value, n FROM r WHERE rank <= 3""".stripMargin,
-
-    // one UNION ALL branch per profiled column (fine at oracle scale;
-    // the Spark side is the one-scan form)
-    "profile_stats" -> {
-      val num = Seq("l_orderkey", "l_quantity", "l_extendedprice", "l_discount")
-      val str = Seq("l_returnflag", "l_linestatus")
-      (num.map { c =>
-        s"""SELECT '$c' AS "column", count(*) AS n_rows,
-           |  count(*) - count($c) AS n_nulls,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  round(CAST(min($c) AS DOUBLE), 4) AS min_num,
-           |  round(CAST(max($c) AS DOUBLE), 4) AS max_num,
-           |  CAST(NULL AS VARCHAR) AS min_str, CAST(NULL AS VARCHAR) AS max_str
-           |FROM lineitem""".stripMargin
-      } ++ str.map { c =>
-        s"""SELECT '$c' AS "column", count(*) AS n_rows,
-           |  count(*) - count($c) AS n_nulls,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(NULL AS DOUBLE) AS min_num, CAST(NULL AS DOUBLE) AS max_num,
-           |  min($c) AS min_str, max($c) AS max_str
-           |FROM lineitem""".stripMargin
-      }).mkString("\nUNION ALL\n")
-    },
-
-    "q25_source_stats" ->
-      """SELECT source, count(*) AS n_docs,
-        |       round(avg(n_chars), 2) AS avg_chars,
-        |       round(quantile_cont(n_chars, 0.5), 2) AS p50_chars,
-        |       max(n_chars) AS max_chars,
-        |       CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-        |         AS total_tokens
-        |FROM documents GROUP BY source""".stripMargin,
-
-    "q26_full_outer" ->
-      """WITH c AS (
-        |  SELECT user_id, count(*) AS n_clicks FROM events
-        |  WHERE event_type = 'click' GROUP BY user_id
-        |), p AS (
-        |  SELECT user_id, count(*) AS n_purchases,
-        |         round(sum(value), 2) AS purchase_value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id
-        |)
-        |SELECT coalesce(c.user_id, p.user_id) AS user_id,
-        |       coalesce(n_clicks, 0) AS n_clicks,
-        |       coalesce(n_purchases, 0) AS n_purchases,
-        |       coalesce(purchase_value, 0.0) AS purchase_value
-        |FROM c FULL OUTER JOIN p ON c.user_id = p.user_id""".stripMargin,
-
-    "q27_lateral" ->
-      """SELECT n.n_name, t.c_name, round(t.c_acctbal, 2) AS acctbal
-        |FROM nation n,
-        |LATERAL (
-        |  SELECT c_name, c_acctbal FROM customer c
-        |  WHERE c.c_nationkey = n.n_nationkey
-        |  ORDER BY c_acctbal DESC, c_name LIMIT 2
-        |) t""".stripMargin,
-
-    "q28_gap_fill" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_ns(ts) // 3600000000000 AS hour FROM events
-        |), sparse AS (
-        |  SELECT event_type, hour, count(*) AS n FROM e GROUP BY 1, 2
-        |), bounds AS (
-        |  SELECT event_type, min(hour) AS lo, max(hour) AS hi FROM e GROUP BY 1
-        |), axis AS (
-        |  SELECT event_type, unnest(generate_series(lo, hi)) AS hour FROM bounds
-        |)
-        |SELECT a.event_type, a.hour, coalesce(s.n, 0) AS n
-        |FROM axis a LEFT JOIN sparse s
-        |  ON a.event_type = s.event_type AND a.hour = s.hour""".stripMargin,
-
-    "text_line_dedup" ->
-      """WITH m AS (
-        |  SELECT doc_id,
-        |         text || chr(10) || substr(text, 1, 40) || chr(10) ||
-        |         text || chr(10) || substr(text, 1, 40) AS mt
-        |  FROM documents
-        |), l AS (
-        |  SELECT doc_id, string_split(mt, chr(10)) AS lines FROM m
-        |), dd AS (
-        |  SELECT doc_id, CAST(len(lines) AS BIGINT) AS n_lines,
-        |         list_filter(lines, (x, i) -> list_position(lines, x) = i) AS u
-        |  FROM l
-        |)
-        |SELECT doc_id, n_lines, CAST(len(u) AS BIGINT) AS n_unique,
-        |       md5(array_to_string(u, chr(10))) AS dedup_md5
-        |FROM dd""".stripMargin,
-
-    "text_chunks" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-        |  FROM documents
-        |), w AS (
-        |  SELECT doc_id, toks,
-        |         1 + (greatest(len(toks) - 32, 0) + 23) // 24 AS n_chunks
-        |  FROM t
-        |), x AS (
-        |  SELECT doc_id, toks, unnest(range(0, n_chunks)) AS i FROM w
-        |)
-        |SELECT doc_id, CAST(i AS INTEGER) AS chunk_idx,
-        |       array_to_string(toks[i*24+1 : i*24+32], ' ') AS chunk_text,
-        |       CAST(len(toks[i*24+1 : i*24+32]) AS BIGINT) AS chunk_tokens
-        |FROM x""".stripMargin,
-
-    // per-char frequency reconstruction; both engines round to 4
-    // decimals (summation order differs only at ~1e-15)
-    "text_entropy" ->
-      """WITH c AS (
-        |  SELECT doc_id, unnest(string_split(text, '')) AS ch FROM documents
-        |), f AS (
-        |  SELECT doc_id, ch, count(*) AS cnt FROM c GROUP BY doc_id, ch
-        |), n AS (
-        |  SELECT doc_id, sum(cnt) AS tot FROM f GROUP BY doc_id
-        |)
-        |SELECT f.doc_id,
-        |       round(-sum((CAST(cnt AS DOUBLE) / tot) * log2(CAST(cnt AS DOUBLE) / tot)), 4)
-        |         AS entropy_bits
-        |FROM f JOIN n USING (doc_id) GROUP BY f.doc_id""".stripMargin,
-
-    // the window form IS the oracle: proves the bounded-heap sample
-    // equals "rank by hash priority, keep k" exactly
-    "corpus_sample_k" ->
-      """WITH p AS (
-        |  SELECT source, doc_id,
-        |    CAST('0x' || substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) AS prio
-        |  FROM documents
-        |)
-        |SELECT source, doc_id FROM (
-        |  SELECT source, doc_id,
-        |         row_number() OVER (PARTITION BY source ORDER BY prio DESC, doc_id) AS rn
-        |  FROM p
-        |) WHERE rn <= 7""".stripMargin,
-
-    // smoothed-idf formula mirrored op-for-op; ranking on the rounded
-    // score keeps order identical under 1-ulp ln drift
-    "text_tfidf_terms" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term
-        |  FROM documents
-        |), tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term
-        |), df AS (
-        |  SELECT term, count(*) AS df FROM tf GROUP BY term
-        |), n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-        |s AS (
-        |  SELECT tf.doc_id, tf.term,
-        |         round(CAST(tf.tf AS DOUBLE)
-        |               * (ln((n.n + 1.0) / (CAST(df.df AS DOUBLE) + 1.0)) + 1.0), 4) AS score
-        |  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n
-        |)
-        |SELECT doc_id, term, score, rank FROM (
-        |  SELECT doc_id, term, score,
-        |         CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS BIGINT) AS rank
-        |  FROM s
-        |) WHERE rank <= 3""".stripMargin,
-
-    // 5 unrolled iterations (no recursive aggregate needed); constants
-    // computed as (1.0 - 0.85) in doubles on BOTH sides so the literal
-    // is the identical IEEE value; round 6 hides sum-order ulps
-    "graph_pagerank" -> {
-      val base =
-        """WITH e AS (
-          |  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-          |                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-          |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-          |), ee AS (
-          |  SELECT src, dst FROM e UNION ALL SELECT dst AS src, src AS dst FROM e
-          |), deg AS (SELECT src, count(*) AS outdeg FROM ee GROUP BY src),
-          |n AS (SELECT DISTINCT src AS node FROM ee),
-          |r0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS r FROM n)""".stripMargin
-      val steps = (1 to 5).map { i =>
-        s""",
-           |r$i AS (
-           |  SELECT n.node,
-           |         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE))
-           |           + CAST(0.85 AS DOUBLE)
-           |             * coalesce(sum(r.r / CAST(deg.outdeg AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS r
-           |  FROM n LEFT JOIN ee ON ee.dst = n.node
-           |         LEFT JOIN r${i - 1} r ON r.node = ee.src
-           |         LEFT JOIN deg ON deg.src = ee.src
-           |  GROUP BY n.node
-           |)""".stripMargin
-      }.mkString
-      base + steps + "\nSELECT node, round(r, 6) AS rank FROM r5"
-    },
-
-    // textbook a<b<c three-way self-join (fine at oracle scale; the
-    // Spark side earns its keep via the degree orientation)
-    "graph_triangles" ->
-      """WITH ed AS (
-        |  SELECT DISTINCT la.l_partkey AS a, lb.l_partkey AS b
-        |  FROM lineitem la JOIN lineitem lb
-        |    ON la.l_orderkey = lb.l_orderkey AND la.l_partkey < lb.l_partkey
-        |), deg AS (
-        |  SELECT n, count(*) AS d
-        |  FROM (SELECT a AS n FROM ed UNION ALL SELECT b FROM ed)
-        |  GROUP BY 1
-        |), tri AS (
-        |  SELECT count(*) AS t FROM ed e1, ed e2, ed e3
-        |  WHERE e1.a = e2.a AND e1.b < e2.b
-        |    AND e3.a = e1.b AND e3.b = e2.b
-        |)
-        |SELECT (SELECT count(*) FROM deg) AS n_nodes,
-        |       (SELECT count(*) FROM ed) AS n_edges,
-        |       (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) FROM deg) AS n_wedges,
-        |       (SELECT t FROM tri) AS n_triangles,
-        |       CASE WHEN (SELECT sum(d * (d - 1) // 2) FROM deg) > 0
-        |            THEN round(3.0 * (SELECT t FROM tri) /
-        |                       (SELECT sum(d * (d - 1) // 2) FROM deg), 4)
-        |       END AS global_clustering""".stripMargin,
-
-    // DuckDB levenshtein is unthresholded but agrees with Spark's
-    // thresholded form on every kept row (dist <= maxDist there). The
-    // `kept` CTE mirrors fuzzyNamePairs' maxBlock=10000 exclusion (blocks
-    // with more distinct names are DROPPED by both engines — without it
-    // the oracle would keep pairs Spark excludes on any dataset with a
-    // degenerate 2-char prefix).
-    "entity_pairs" ->
-      """WITH n0 AS (
-        |  SELECT DISTINCT lower(trim(p_name)) AS nm FROM part
-        |  WHERE length(lower(trim(p_name))) > 0
-        |), kept AS (
-        |  SELECT substring(nm, 1, 2) AS blk FROM n0
-        |  GROUP BY 1 HAVING count(*) <= 10000
-        |), n AS (
-        |  SELECT nm FROM n0 JOIN kept ON substring(n0.nm, 1, 2) = kept.blk
-        |)
-        |SELECT a.nm AS name_a, b.nm AS name_b,
-        |       CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS dist
-        |FROM n a JOIN n b
-        |  ON substring(a.nm, 1, 2) = substring(b.nm, 1, 2) AND a.nm < b.nm
-        |WHERE levenshtein(a.nm, b.nm) <= 3""".stripMargin,
-
-    // transitive closure over the fuzzy-pair graph (the dedup_clusters
-    // recursive-CTE pattern); singletons fall through the left join.
-    // `kept` mirrors the maxBlock=10000 exclusion: oversized blocks
-    // generate NO pairs (their names still appear, as singletons) —
-    // matching resolveEntities, where every distinct name is emitted but
-    // excluded blocks contribute no edges.
-    "entity_resolve" ->
-      """WITH RECURSIVE n AS (
-        |  SELECT DISTINCT lower(trim(p_name)) AS nm FROM part
-        |  WHERE length(lower(trim(p_name))) > 0
-        |), kept AS (
-        |  SELECT substring(nm, 1, 2) AS blk FROM n
-        |  GROUP BY 1 HAVING count(*) <= 10000
-        |), pairs AS (
-        |  SELECT a.nm AS name_a, b.nm AS name_b
-        |  FROM n a JOIN n b
-        |    ON substring(a.nm, 1, 2) = substring(b.nm, 1, 2) AND a.nm < b.nm
-        |  JOIN kept k ON substring(a.nm, 1, 2) = k.blk
-        |  WHERE levenshtein(a.nm, b.nm) <= 3
-        |), edges AS (
-        |  SELECT name_a AS a, name_b AS b FROM pairs
-        |  UNION SELECT name_b, name_a FROM pairs
-        |), reach AS (
-        |  SELECT a, b FROM edges
-        |  UNION
-        |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-        |), canon AS (
-        |  SELECT a, least(a, min(b)) AS canon FROM reach GROUP BY a
-        |)
-        |SELECT n.nm AS name, coalesce(c.canon, n.nm) AS canon
-        |FROM n LEFT JOIN canon c ON c.a = n.nm""".stripMargin,
-
-    // chunk-count formula and list slicing mirrored from text_chunks;
-    // first-occurrence = row_number over exact segment text
-    "corpus_segment_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks FROM documents
-        |), w AS (
-        |  SELECT doc_id, toks, 1 + (greatest(len(toks) - 8, 0) + 7) // 8 AS n_segs FROM t
-        |), x AS (
-        |  SELECT doc_id, toks, unnest(range(0, n_segs)) AS i FROM w
-        |), s AS (
-        |  SELECT doc_id, CAST(i AS INTEGER) AS seg_idx,
-        |         array_to_string(toks[i*8+1 : i*8+8], ' ') AS seg
-        |  FROM x
-        |), k AS (
-        |  SELECT doc_id, seg_idx, seg,
-        |         row_number() OVER (PARTITION BY seg ORDER BY doc_id, seg_idx) AS rn
-        |  FROM s
-        |)
-        |SELECT doc_id, string_agg(seg, ' ' ORDER BY seg_idx) AS text,
-        |       count(*) AS n_kept
-        |FROM k WHERE rn = 1 GROUP BY doc_id""".stripMargin,
-
-    // the window form IS the oracle for the bounded-heap sample; the key
-    // ln((h+0.5)/2^32)/w feeds ln an exact dyadic double in both engines
-    "corpus_weighted_sample" ->
-      """WITH p AS (
-        |  SELECT doc_id,
-        |    ln((CAST('0x' || substr(md5('wsample:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) + 0.5)
-        |       / 4294967296.0) / CAST(n_chars AS DOUBLE) AS k
-        |  FROM documents WHERE n_chars > 0
-        |)
-        |SELECT doc_id FROM (
-        |  SELECT doc_id, row_number() OVER (ORDER BY k DESC, doc_id) AS rn FROM p
-        |) WHERE rn <= 200""".stripMargin,
-
-    // threshold arithmetic mirrored op-for-op: sqrt/mul/div are IEEE
-    // correctly-rounded, so floor(rate*2^32) lands on the same integer
-    "corpus_temperature_mix" ->
-      """WITH c AS (SELECT source, count(*) AS cnt FROM documents GROUP BY source),
-        |z AS (SELECT sum(sqrt(CAST(cnt AS DOUBLE))) AS z FROM c),
-        |t AS (
-        |  SELECT source,
-        |         CAST(floor(least(1.0, sqrt(CAST(cnt AS DOUBLE)) / z.z * 200.0 / CAST(cnt AS DOUBLE))
-        |                    * 4294967296.0) AS BIGINT) AS thr
-        |  FROM c, z
-        |)
-        |SELECT d.doc_id, d.source
-        |FROM documents d JOIN t ON d.source = t.source
-        |WHERE CAST('0x' || substr(md5('tmix:' || CAST(d.doc_id AS VARCHAR)), 1, 8) AS BIGINT) < t.thr""".stripMargin,
-
-    // BM25 with the formula association mirrored term-for-term (IEEE
-    // double ops are deterministic given identical operand order; ln may
-    // differ by 1 ulp between engines, hidden by round 4)
-    "text_bm25" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), s AS (
-        |  SELECT count(*) AS n, CAST(sum(len(w)) AS DOUBLE) / count(*) AS avgdl,
-        |         count(*) FILTER (list_contains(w, 'spark')) AS df0,
-        |         count(*) FILTER (list_contains(w, 'vector')) AS df1,
-        |         count(*) FILTER (list_contains(w, 'customer')) AS df2
-        |  FROM t
-        |), sc AS (
-        |  SELECT doc_id, round(
-        |      ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5))
-        |        * (len([x for x in w if x = 'spark']) * (1.2 + 1.0))
-        |        / (len([x for x in w if x = 'spark'])
-        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl))
-        |    + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5))
-        |        * (len([x for x in w if x = 'vector']) * (1.2 + 1.0))
-        |        / (len([x for x in w if x = 'vector'])
-        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl))
-        |    + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5))
-        |        * (len([x for x in w if x = 'customer']) * (1.2 + 1.0))
-        |        / (len([x for x in w if x = 'customer'])
-        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl)), 4) AS bm25
-        |  FROM t, s
-        |)
-        |SELECT doc_id, bm25 FROM sc WHERE bm25 > 0
-        |ORDER BY bm25 DESC, doc_id LIMIT 20""".stripMargin,
-
-    // every ratio is one IEEE division of exact integer counts, so the
-    // unrounded gate comparisons are bit-identical across engines; the
-    // rounded columns are display-only
-    "text_gopher_rules" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    string_split_regex(trim(text), '\s+') AS w,
-        |    len(regexp_replace(text, '\s', '', 'g')) AS nc,
-        |    len(regexp_extract_all(text, '#'))
-        |      + len(regexp_extract_all(text, '\.\.\.|…')) AS nsym,
-        |    len([x for x in string_split_regex(trim(text), '\s+')
-        |         if regexp_matches(x, '[A-Za-z]')]) AS nalpha,
-        |    len([s for s in ['the','be','to','of','and','that','have','with']
-        |         if list_contains(string_split_regex(trim(text), '\s+'), s)]) AS nstops
-        |  FROM documents
-        |)
-        |SELECT doc_id,
-        |  CAST(len(w) AS BIGINT) AS n_words,
-        |  round(nc / greatest(len(w), 1), 4) AS mean_word_len,
-        |  round(nsym / greatest(len(w), 1), 4) AS symbol_ratio,
-        |  round(nalpha / greatest(len(w), 1), 4) AS alpha_word_ratio,
-        |  CAST(nstops AS BIGINT) AS n_stop_hits,
-        |  (len(w) BETWEEN 50 AND 100000
-        |    AND nc / greatest(len(w), 1) BETWEEN 3.0 AND 10.0
-        |    AND nsym / greatest(len(w), 1) <= 0.1
-        |    AND nalpha / greatest(len(w), 1) >= 0.8
-        |    AND nstops >= 1) AS keep
-        |FROM f""".stripMargin,
-
-    // add-alpha bigram LM trained on the src0 slice; counts are exact
-    // integers, each ln() agrees within 1 ulp, the per-doc sum's
-    // association error (~1e-12) hides under round 4, and ppl
-    // exponentiates the already-rounded nll
-    "text_perplexity" ->
-      """WITH tok AS (
-        |  SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS w
-        |  FROM documents
-        |), tr AS (
-        |  SELECT w FROM tok WHERE source = 'src0'
-        |), uni AS (
-        |  SELECT w1, count(*) AS c1
-        |  FROM (SELECT unnest(w) AS w1 FROM tr) GROUP BY w1
-        |), v AS (
-        |  SELECT CAST(count(*) AS DOUBLE) AS v FROM uni
-        |), big AS (
-        |  SELECT w1, w2, count(*) AS c2 FROM (
-        |    SELECT p[1] AS w1, p[2] AS w2
-        |    FROM (SELECT unnest(list_zip(w, w[2:])) AS p FROM tr)
-        |    WHERE p[2] IS NOT NULL) GROUP BY w1, w2
-        |), db AS (
-        |  SELECT doc_id, p[1] AS w1, p[2] AS w2
-        |  FROM (SELECT doc_id, unnest(list_zip(w, w[2:])) AS p
-        |        FROM tok WHERE len(w) >= 2)
-        |  WHERE p[2] IS NOT NULL
-        |), sc AS (
-        |  SELECT doc_id,
-        |         ln((coalesce(c2, 0) + 0.1) / (coalesce(c1, 0) + 0.1 * v)) AS lp
-        |  FROM db LEFT JOIN big USING (w1, w2) LEFT JOIN uni USING (w1)
-        |       CROSS JOIN v
-        |), ag AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-        |         round(-sum(lp) / count(*), 4) AS nll
-        |  FROM sc GROUP BY doc_id
-        |)
-        |SELECT doc_id, n_bigrams, nll, round(exp(nll), 2) AS ppl FROM ag""".stripMargin,
-
-    // rank lists are integer-total-ordered (round-4 score desc, id asc);
-    // each RRF term is one IEEE division, summed in fixed order
-    "text_hybrid_rrf" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents
-        |), s AS (
-        |  SELECT count(*) AS n, CAST(sum(len(w)) AS DOUBLE) / count(*) AS avgdl,
-        |         count(*) FILTER (list_contains(w, 'spark')) AS df0,
-        |         count(*) FILTER (list_contains(w, 'vector')) AS df1,
-        |         count(*) FILTER (list_contains(w, 'customer')) AS df2
-        |  FROM t
-        |), sc AS (
-        |  SELECT doc_id, round(
-        |      ln(1.0 + (n - df0 + 0.5) / (df0 + 0.5))
-        |        * (len([x for x in w if x = 'spark']) * (1.2 + 1.0))
-        |        / (len([x for x in w if x = 'spark'])
-        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl))
-        |    + ln(1.0 + (n - df1 + 0.5) / (df1 + 0.5))
-        |        * (len([x for x in w if x = 'vector']) * (1.2 + 1.0))
-        |        / (len([x for x in w if x = 'vector'])
-        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl))
-        |    + ln(1.0 + (n - df2 + 0.5) / (df2 + 0.5))
-        |        * (len([x for x in w if x = 'customer']) * (1.2 + 1.0))
-        |        / (len([x for x in w if x = 'customer'])
-        |           + 1.2 * ((1.0 - 0.75) + 0.75 * len(w) / avgdl)), 4) AS bm25
-        |  FROM t, s
-        |), sp AS (
-        |  SELECT doc_id,
-        |         CAST(row_number() OVER (ORDER BY bm25 DESC, doc_id) AS BIGINT)
-        |           AS r_bm25
-        |  FROM (SELECT doc_id, bm25 FROM sc WHERE bm25 > 0
-        |        ORDER BY bm25 DESC, doc_id LIMIT 50)
-        |), dn AS (
-        |  SELECT c_id AS doc_id, CAST(rnk AS BIGINT) AS r_dense FROM (
-        |    SELECT c_id, row_number() OVER (ORDER BY sim DESC, c_id) AS rnk
-        |    FROM (
-        |      SELECT b.vec_id AS c_id,
-        |             round(list_dot_product(a.embedding, b.embedding) /
-        |                   (sqrt(list_dot_product(a.embedding, a.embedding)) *
-        |                    sqrt(list_dot_product(b.embedding, b.embedding))), 4)
-        |               AS sim
-        |      FROM embeddings a, embeddings b
-        |      WHERE a.vec_id = 7 AND b.vec_id <> 7))
-        |  WHERE rnk <= 50
-        |)
-        |SELECT doc_id,
-        |       round(coalesce(1.0 / (60 + r_bm25), 0)
-        |             + coalesce(1.0 / (60 + r_dense), 0), 6) AS rrf,
-        |       r_bm25, r_dense
-        |FROM sp FULL OUTER JOIN dn USING (doc_id)
-        |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    // sum-then-divide mirrors the Spark side (one division after the
-    // double sum); summation order differs between engines but the
-    // association error hides under round 4
-    "embed_centroids" ->
-      """SELECT label, pos, round(s / n, 4) AS centroid, n FROM (
-        |  SELECT label, CAST(pos AS BIGINT) AS pos,
-        |         sum(CAST(x AS DOUBLE)) AS s, CAST(count(*) AS BIGINT) AS n
-        |  FROM (SELECT label, generate_subscripts(embedding, 1) AS pos,
-        |               unnest(embedding) AS x FROM embeddings)
-        |  GROUP BY label, pos)""".stripMargin,
-
-    // covar_pop over unnest pairs — numerically a different path than
-    // the one-pass moment formula, identical at the shared round-6.
-    // `+ 0.0` canonicalizes -0.0: DuckDB's round keeps IEEE zero sign
-    // where Spark's BigDecimal round does not (both sides add it)
-    "embed_covariance" ->
-      """WITH px AS (
-        |  SELECT vec_id, CAST(generate_subscripts(embedding, 1) AS BIGINT) AS pos,
-        |         CAST(unnest(embedding) AS DOUBLE) AS x
-        |  FROM embeddings
-        |)
-        |SELECT a.pos AS i, b.pos AS j, round(covar_pop(a.x, b.x), 6) + 0.0 AS cov
-        |FROM px a JOIN px b ON a.vec_id = b.vec_id AND a.pos <= b.pos
-        |GROUP BY 1, 2""".stripMargin,
-
-    // the same fixed-16-iteration power method, unrolled as chained CTEs
-    // (the graph_pagerank oracle pattern) on the SAME round-6 covariance;
-    // both engines then normalize once, round the component to 8, fix the
-    // sign by the largest-|entry| rule, and round projections to 4
-    "embed_pca_project" -> {
-      val base =
-        """WITH px AS MATERIALIZED (
-          |  SELECT vec_id, CAST(generate_subscripts(embedding, 1) AS BIGINT) AS pos,
-          |         CAST(unnest(embedding) AS DOUBLE) AS x
-          |  FROM embeddings
-          |), cov AS MATERIALIZED (
-          |  SELECT a.pos AS i, b.pos AS j, round(covar_pop(a.x, b.x), 6) AS c
-          |  FROM px a JOIN px b ON a.vec_id = b.vec_id
-          |  GROUP BY 1, 2
-          |), v0 AS (
-          |  SELECT DISTINCT i AS pos,
-          |         1.0 / sqrt((SELECT count(DISTINCT i) FROM cov)) AS val
-          |  FROM cov
-          |)""".stripMargin
-      val steps = (1 to 16).map { k =>
-        s""",
-           |v$k AS (
-           |  SELECT c.i AS pos, sum(c.c * v.val) AS val
-           |  FROM cov c JOIN v${k - 1} v ON c.j = v.pos
-           |  GROUP BY 1
-           |)""".stripMargin
-      }.mkString
-      val tail =
-        """,
-          |nv AS (
-          |  SELECT pos, val / sqrt((SELECT sum(val * val) FROM v16)) AS val
-          |  FROM v16
-          |), vr AS (
-          |  SELECT pos, round(val, 8) AS val FROM nv
-          |), sgn AS (
-          |  SELECT CASE WHEN (SELECT val FROM vr
-          |                    ORDER BY abs(val) DESC, pos ASC LIMIT 1) < 0
-          |              THEN -1.0 ELSE 1.0 END AS s
-          |)
-          |SELECT p.vec_id, e.label,
-          |       round((SELECT s FROM sgn) * sum(p.x * v.val), 4) + 0.0 AS pc1
-          |FROM px p JOIN vr v ON p.pos = v.pos
-          |JOIN embeddings e ON e.vec_id = p.vec_id
-          |GROUP BY 1, 2""".stripMargin
-      base + steps + tail
-    },
-
-    // two unrolled power chains with the SAME recipe; vr1/vr2 carry the
-    // sign IN the component values (±1 multiply is IEEE-exact either
-    // side of the dot), and cov1's deflation mirrors the Scala side's
-    // left-associative λ·vᵢ·vⱼ with round-8 λ and round-6 re-rounding
-    "embed_pca2" -> (pcaTwoChainCtes +
-      """
-        |SELECT d1.vec_id, e.label, d1.pc1, d2.pc2
-        |FROM (
-        |  SELECT p.vec_id, round(sum(p.x * v.val), 4) + 0.0 AS pc1
-        |  FROM px p JOIN vr1 v ON p.pos = v.pos GROUP BY 1
-        |) d1
-        |JOIN (
-        |  SELECT p.vec_id, round(sum(p.x * v.val), 4) + 0.0 AS pc2
-        |  FROM px p JOIN vr2 v ON p.pos = v.pos GROUP BY 1
-        |) d2 ON d1.vec_id = d2.vec_id
-        |JOIN embeddings e ON e.vec_id = d1.vec_id""".stripMargin),
-
-    // same two-chain derivation, summarized: per-component Rayleigh
-    // eigenvalue over the round-6 trace; lambda/trace is one IEEE
-    // division of already-hash-stable values
-    "embed_pca_variance" -> (pcaTwoChainCtes +
-      """, tr AS (SELECT round(sum(c), 6) AS t FROM cov WHERE i = j)
-        |SELECT CAST(1 AS BIGINT) AS component, (SELECT l FROM lam1) AS lambda,
-        |       tr.t AS trace, round((SELECT l FROM lam1) / tr.t, 6) AS explained
-        |FROM tr
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), (SELECT l FROM lam2),
-        |       tr.t, round((SELECT l FROM lam2) / tr.t, 6)
-        |FROM tr""".stripMargin),
-
-    // same un-normalized sum-vector arithmetic as the Spark side (cosine
-    // is scale-invariant, so sums ARE centroids); is_outlier compares the
-    // already-rounded cosine so the flag is derived from the hashed value
-    "embed_outliers" ->
-      """WITH ps AS (
-        |  SELECT label, generate_subscripts(embedding, 1) AS pos,
-        |         unnest(embedding) AS x FROM embeddings
-        |), sv AS (
-        |  SELECT label, list(s ORDER BY pos) AS csum, CAST(max(n) AS BIGINT) AS n_label
-        |  FROM (SELECT label, pos, sum(CAST(x AS DOUBLE)) AS s, count(*) AS n
-        |        FROM ps GROUP BY label, pos)
-        |  GROUP BY label
-        |)
-        |SELECT vec_id, label, n_label, sim_centroid, sim_centroid < 0.0 AS is_outlier
-        |FROM (
-        |  SELECT e.vec_id, e.label, sv.n_label,
-        |         round(list_dot_product(e.embedding, sv.csum) /
-        |               (sqrt(list_dot_product(e.embedding, e.embedding)) *
-        |                sqrt(list_dot_product(sv.csum, sv.csum))), 4) AS sim_centroid
-        |  FROM embeddings e JOIN sv USING (label))""".stripMargin,
-
-    // the oracle takes the textbook shingle self-join (fine at oracle
-    // scale); counts are exact integers, jaccard one IEEE division
-    "source_overlap" ->
-      """WITH sh AS (
-        |  SELECT DISTINCT source, unnest(CASE WHEN len(w) >= 3 THEN
-        |    list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                   for i in range(1, len(w)-1)])
-        |    ELSE [] END) AS sh
-        |  FROM (SELECT source, string_split_regex(trim(text), '\s+') AS w FROM documents)
-        |), sz AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n FROM sh GROUP BY source
-        |), cm AS (
-        |  SELECT a.source AS src_a, b.source AS src_b,
-        |         CAST(count(*) AS BIGINT) AS n_common
-        |  FROM sh a JOIN sh b USING (sh)
-        |  WHERE a.source < b.source GROUP BY 1, 2
-        |)
-        |SELECT src_a, src_b, sa.n AS n_a, sb.n AS n_b, n_common,
-        |       round(CAST(n_common AS DOUBLE) / (sa.n + sb.n - n_common), 6) AS jaccard
-        |FROM cm
-        |JOIN sz sa ON sa.source = cm.src_a
-        |JOIN sz sb ON sb.source = cm.src_b""".stripMargin,
-
-    // mirrors the operator's log-space decomposition term for term
-    // (prior + per-token floor + seen-word evidence); counts are exact
-    // integers, each ln() within 1 ulp, sum association error under
-    // round 4; ties on the rounded score break by label asc
-    "classify_nb" ->
-      """WITH tok AS (
-        |  SELECT doc_id, lang, unnest(string_split_regex(trim(text), '\s+')) AS w
-        |  FROM documents
-        |), tr AS (
-        |  SELECT * FROM tok WHERE doc_id % 5 = 0
-        |), lw AS (
-        |  SELECT lang AS l, w, count(*) AS clw FROM tr GROUP BY 1, 2
-        |), lt AS (
-        |  SELECT l, sum(clw) AS cl FROM lw GROUP BY 1
-        |), v AS (
-        |  SELECT CAST(count(DISTINCT w) AS DOUBLE) AS v FROM lw
-        |), pri AS (
-        |  SELECT lang AS l, count(*) AS nd
-        |  FROM (SELECT DISTINCT doc_id, lang FROM documents WHERE doc_id % 5 = 0)
-        |  GROUP BY 1
-        |), tot AS (
-        |  SELECT CAST(sum(nd) AS DOUBLE) AS t FROM pri
-        |), ntok AS (
-        |  SELECT doc_id, CAST(count(*) AS DOUBLE) AS n FROM tok GROUP BY 1
-        |), ev AS (
-        |  SELECT t.doc_id, lw.l, sum(ln((CAST(clw AS DOUBLE) + 1.0) / 1.0)) AS s
-        |  FROM tok t JOIN lw ON lw.w = t.w GROUP BY 1, 2
-        |), sc AS (
-        |  SELECT n.doc_id, p.l,
-        |         round(ln(CAST(p.nd AS DOUBLE) / tot.t)
-        |               + n.n * (ln(1.0) - ln(CAST(lt.cl AS DOUBLE) + 1.0 * v.v))
-        |               + coalesce(ev.s, 0.0), 4) AS score
-        |  FROM ntok n
-        |  CROSS JOIN pri p CROSS JOIN tot CROSS JOIN v
-        |  JOIN lt ON lt.l = p.l
-        |  LEFT JOIN ev ON ev.doc_id = n.doc_id AND ev.l = p.l
-        |)
-        |SELECT doc_id, l AS pred_label, score FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY doc_id
-        |                               ORDER BY score DESC, l) AS rn FROM sc)
-        |WHERE rn = 1""".stripMargin,
-
-    // same md5-uniform arithmetic as the operator: u exact in double,
-    // copies = floor(f) + (u < frac(f)), rows exploded by range(copies)
-    "corpus_upsample" ->
-      """WITH f AS (
-        |  SELECT doc_id, source,
-        |    CASE source WHEN 'src0' THEN 2.5 WHEN 'src1' THEN 2.0
-        |                WHEN 'src2' THEN 0.25 ELSE 1.0 END AS fac,
-        |    (CAST('0x' || substr(md5('upsample:' || CAST(doc_id AS VARCHAR)), 1, 8)
-        |          AS BIGINT) + 0.5) / 4294967296.0 AS u
-        |  FROM documents
-        |), c AS (
-        |  SELECT doc_id, source,
-        |         CAST(floor(fac) AS INT)
-        |           + CASE WHEN u < fac - floor(fac) THEN 1 ELSE 0 END AS copies
-        |  FROM f
-        |)
-        |SELECT doc_id, source, CAST(unnest(range(0, copies)) AS BIGINT) AS copy
-        |FROM c WHERE copies > 0""".stripMargin,
-
-    // the oracle re-derives each dup-gram char count by grouping the
-    // NON-distinct gram stream (the kernel's hash-probe equivalent:
-    // occurrences beyond the first x the gram's no-space char length);
-    // numerators/denominators are exact integers, one IEEE division each
-    "text_gopher_repetition" ->
-      """WITH tok AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS w,
-        |         len(regexp_replace(text, '\s', '', 'g')) AS nc
-        |  FROM documents
-        |), d2 AS (
-        |  SELECT doc_id, sum((cnt - 1) * glen) AS dup FROM (
-        |    SELECT doc_id, gram, count(*) AS cnt,
-        |           len(replace(gram, ' ', '')) AS glen
-        |    FROM (SELECT doc_id, unnest([w[i] || ' ' || w[i+1]
-        |                  for i in range(1, len(w))]) AS gram FROM tok)
-        |    GROUP BY doc_id, gram) GROUP BY doc_id
-        |), d3 AS (
-        |  SELECT doc_id, sum((cnt - 1) * glen) AS dup FROM (
-        |    SELECT doc_id, gram, count(*) AS cnt,
-        |           len(replace(gram, ' ', '')) AS glen
-        |    FROM (SELECT doc_id, unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-        |                  for i in range(1, len(w) - 1)]) AS gram FROM tok)
-        |    GROUP BY doc_id, gram) GROUP BY doc_id
-        |), d4 AS (
-        |  SELECT doc_id, sum((cnt - 1) * glen) AS dup FROM (
-        |    SELECT doc_id, gram, count(*) AS cnt,
-        |           len(replace(gram, ' ', '')) AS glen
-        |    FROM (SELECT doc_id,
-        |                 unnest([w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]
-        |                  for i in range(1, len(w) - 2)]) AS gram FROM tok)
-        |    GROUP BY doc_id, gram) GROUP BY doc_id
-        |), f AS (
-        |  SELECT t.doc_id, CAST(t.nc AS BIGINT) AS n_chars,
-        |         round(coalesce(d2.dup, 0) / greatest(t.nc, 1), 4) AS dup2_frac,
-        |         round(coalesce(d3.dup, 0) / greatest(t.nc, 1), 4) AS dup3_frac,
-        |         round(coalesce(d4.dup, 0) / greatest(t.nc, 1), 4) AS dup4_frac
-        |  FROM tok t LEFT JOIN d2 USING (doc_id) LEFT JOIN d3 USING (doc_id)
-        |       LEFT JOIN d4 USING (doc_id)
-        |)
-        |SELECT doc_id, n_chars, dup2_frac, dup3_frac, dup4_frac,
-        |       (dup2_frac <= 0.20 AND dup3_frac <= 0.18 AND dup4_frac <= 0.16)
-        |         AS keep
-        |FROM f""".stripMargin,
-
-    // both sides are un-normalized per-label sum vectors (cosine is
-    // scale-invariant); drift = 1 - cos, one subtraction after the
-    // rounded-under-4 division chain
-    "embed_drift" ->
-      """WITH ps AS (
-        |  SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
-        |         unnest(embedding) AS x FROM embeddings
-        |), base AS (
-        |  SELECT label, list(s ORDER BY pos) AS bsum FROM
-        |    (SELECT label, pos, sum(CAST(x AS DOUBLE)) AS s
-        |     FROM ps GROUP BY label, pos) GROUP BY label
-        |), slice AS (
-        |  SELECT label, list(s ORDER BY pos) AS ssum, max(n) AS n_batch FROM
-        |    (SELECT label, pos, sum(CAST(x AS DOUBLE)) AS s, count(*) AS n
-        |     FROM ps WHERE vec_id % 2 = 1 GROUP BY label, pos) GROUP BY label
-        |)
-        |SELECT s.label, CAST(s.n_batch AS BIGINT) AS n_batch,
-        |       round(1.0 - list_dot_product(s.ssum, b.bsum) /
-        |             (sqrt(list_dot_product(s.ssum, s.ssum)) *
-        |              sqrt(list_dot_product(b.bsum, b.bsum))), 4) AS drift
-        |FROM slice s JOIN base b USING (label)""".stripMargin,
-
-    "text_redact" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |         text || ' contact user' || doc_id || '@example.com or 10.0.' ||
-        |         (doc_id % 256) || '.7 and +1 555-' ||
-        |         lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-1234' AS t
-        |  FROM documents
-        |), red AS (
-        |  SELECT doc_id, regexp_replace(regexp_replace(regexp_replace(t,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[IP]', 'g'),
-        |    '(?:\+?\d{1,2}[ .-])?\(?\d{3}\)?[ .-]\d{3}[ .-]\d{4}\b', '[PHONE]', 'g') AS r
-        |  FROM planted
-        |)
-        |SELECT doc_id, md5(r) AS redacted_md5,
-        |       CAST(len(regexp_extract_all(r, '\[(EMAIL|IP|PHONE)\]')) AS BIGINT)
-        |         AS n_tags
-        |FROM red""".stripMargin,
-
-    // the sketch estimate itself is engine-specific; the checkable claim
-    // is exactness of the true count and the estimate's error bound,
-    // which the Spark side reduces to a boolean
-    "q13_approx_distinct" ->
-      """SELECT l_returnflag,
-        |       count(DISTINCT l_orderkey) AS exact_orders,
-        |       true AS within_bound
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q12_json_props" ->
-      """SELECT event_type, count(*) AS n,
-        |       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |       max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type""".stripMargin,
-
-    "p1_ts_override" ->
-      s"""SELECT o_orderkey AS rowkey, o_orderkey, o_custkey, o_totalprice,
-         |       o_orderdate,
-         |       CASE WHEN o_orderkey % 5 = 0 THEN CAST($DefaultWritetimeMicros AS BIGINT)
-         |            ELSE epoch_us(o_orderdate) END AS writetime,
-         |       CAST(0 AS INTEGER) AS ttl
-         |FROM orders""".stripMargin,
-
-    "mm_frame_sample" ->
-      """WITH m AS (
-        |  SELECT doc_id, sha256(text) AS sha,
-        |         CAST(1 + CAST('0x' || substr(sha256(text), 3, 2) AS INTEGER) % 16 AS INTEGER) AS frames
-        |  FROM documents
-        |)
-        |SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-        |       sha256(sha || '-' || CAST(i AS VARCHAR)) AS frame_sha
-        |FROM m, range(0, 16) t(i)
-        |WHERE i < frames AND i % 2 = 0""".stripMargin,
-
-    "mm_features" ->
-      """SELECT doc_id,
-        |       CAST(strlen(text) AS BIGINT) AS byte_len,
-        |       sha256(text) AS sha256,
-        |       CAST(64 + strpos('0123456789abcdef', substr(sha256(text), 1, 1)) - 1 AS INTEGER) AS width,
-        |       CAST(64 + strpos('0123456789abcdef', substr(sha256(text), 2, 1)) - 1 AS INTEGER) AS height,
-        |       CAST(1 + CAST('0x' || substr(sha256(text), 3, 2) AS INTEGER) % 16 AS INTEGER) AS frames
-        |FROM documents""".stripMargin
-  )
 }

@@ -21,6 +21,11 @@ import org.apache.spark.storage.StorageLevel
  *    and a `localCheckpoint` otherwise; `eager = false` defers the write
  *    to the first action that reads the frame. Both modes give identical
  *    rows and keep the frame's output partitioning.
+ *    A lazy truncation must have exactly one consumer: when two branches
+ *    of a plan read it before it is written (a self-join, sibling AQE
+ *    stages), each computes the same unwritten partitions, and Spark
+ *    logs "Block rdd_N already exists on this machine; not re-adding
+ *    it". A frame read by more than one branch is truncated eagerly.
  *  - [[release]] frees the blocks behind a truncated frame once its owner
  *    is done with it. A frame that is never released lives until the
  *    session's cleaner collects it (a query result, a session memo).

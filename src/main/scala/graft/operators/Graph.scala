@@ -14,10 +14,6 @@ import org.apache.spark.sql.types.LongType
  */
 object Graph {
 
-  /** Lazy lineage truncation: materialized by the first action that
-    * touches it (local or reliable per [[Materialize.truncate]]). */
-  private def ckpt(df: DataFrame): DataFrame = Materialize.truncate(df, eager = false)
-
   /**
    * Co-occurrence edge list: one undirected edge `(a, b)` per unordered
    * distinct item pair sharing a group (order, basket, document) — ONE
@@ -91,13 +87,14 @@ object Graph {
       case _ => false
     }
     // reused 4x: degrees, orientation, close join
-    val e = ckpt(raw.select(least(col("s"), col("d")).as("a"),
+    val e = Materialize.truncate(raw.select(least(col("s"), col("d")).as("a"),
         greatest(col("s"), col("d")).as("b")).distinct())
     // deg feeds the orientation join AND the wedge aggregation; without
     // its own checkpoint the second consumer re-runs the full union+agg
     // over the edge cache (two more whole-e reads, measured r20)
-    val deg = ckpt(e.select(col("a").as("n")).union(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("deg")))
+    val deg = Materialize.truncate(
+      e.select(col("a").as("n")).union(e.select(col("b").as("n")))
+        .groupBy(col("n")).agg(count(lit(1)).as("deg")))
     // orient a<b edge toward the (deg, id)-greater endpoint; carry both
     // endpoints' ranks so the wedge join can order neighbors without
     // another degree lookup
@@ -105,7 +102,7 @@ object Graph {
       .join(deg.withColumnRenamed("n", "a").withColumnRenamed("deg", "da"), "a")
       .join(deg.withColumnRenamed("n", "b").withColumnRenamed("deg", "db"), "b")
     // reused: adjacency build + two probes
-    val oriented = ckpt(withDeg.select(
+    val oriented = Materialize.truncate(withDeg.select(
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")),
           struct(col("a").as("u"), col("b").as("v")))
@@ -202,7 +199,7 @@ object Graph {
     // duplicate, so the distinct's aggregate is satisfied by this same
     // exchange (clustered-distribution-by-subset) and adds none of its
     // own — one full-edge shuffle total, output still partitioned by src
-    val e = ckpt(undirected.repartition(col("src")).distinct())
+    val e = Materialize.truncate(undirected.repartition(col("src")).distinct())
     // The iteration state is a PACKED ADJACENCY, not the edge list: one
     // row per src carrying its sorted neighbor ids as a delta-varint
     // blob (~1-3 B/id; long-keyed graphs) plus the out-degree — built by
@@ -223,7 +220,7 @@ object Graph {
       if (packed) graft.functions.pack_sorted_longs(
         sort_array(collect_list(col("dst"))))
       else collect_list(col("dst"))
-    val adj = ckpt(e.groupBy(col("src"))
+    val adj = Materialize.truncate(e.groupBy(col("src"))
       .agg(nbrsAgg.as("nbrs"), count(lit(1)).as("outdeg")))
     def nbrsOut = if (packed)
       graft.functions.unpack_sorted_longs(col("nbrs")) else col("nbrs")
@@ -239,7 +236,7 @@ object Graph {
       else adj.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct()
         .repartition(col("node"))
-    val nodes = ckpt(nodes0)
+    val nodes = Materialize.truncate(nodes0)
     var ranks = nodes.withColumn("r", lit(1.0))
     for (_ <- 1 to iterations) {
       val contribs = adj
@@ -251,7 +248,8 @@ object Graph {
         .join(contribs, nodes("node") === contribs("dst"), "left")
         .select(col("node"),
           (lit(1.0 - damping) + lit(damping) * coalesce(col("s"), lit(0.0))).as("r"))
-      ranks = ckpt(ranks)
+      // one consumer (the next round), so the lazy form computes it once
+      ranks = Materialize.truncate(ranks, eager = false)
     }
     ranks
   }

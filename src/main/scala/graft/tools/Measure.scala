@@ -7,10 +7,14 @@ import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Sessions, SparkEntry}
+import graft.SparkEntry.Query
 
 /**
  * The one measurement tool. Every mode runs `SparkEntry.queries` on a
@@ -19,12 +23,13 @@ import graft.{Sessions, SparkEntry}
  * through the noop sink.
  *
  *   sbt "runMain graft.tools.Measure ab <sqlConf> <a> <b> <q1,...> [pairs]"
- *   sbt "runMain graft.tools.Measure profile <q1,...>"
+ *   sbt "runMain graft.tools.Measure profile [q1,...]"
  *   sbt "runMain graft.tools.Measure plans <outFile> [q1,...]"
  *   sbt "runMain graft.tools.Measure suite-ctx [probe1,...] [minOf]"
  *
  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default all
- * cores).
+ * cores). Every query name is resolved before the session starts, so a
+ * misspelled one fails at once.
  *
  *  - `ab`: same-JVM interleaved A/B of a runtime SQL conf. Both shapes
  *    run once unmeasured, then `pairs` (default 4) A,B pairs; the verdict
@@ -32,7 +37,10 @@ import graft.{Sessions, SparkEntry}
  *    external-load oscillation (cross-process runs disagreed by 2x).
  *  - `profile`: one warm-up run, then one run under a listener that
  *    attributes wall time to Spark jobs and their stages (duration,
- *    tasks, input, shuffle read/write, spill).
+ *    tasks, input, shuffle read/write, spill). Each query also prints one
+ *    JSON line (`{"query":...}`): Catalyst planning ms by phase, jobs,
+ *    stages, tasks, shuffle and spill bytes, and max/median task time.
+ *    Default: the timed queries (the per-layer split of Bench's suite).
  *  - `plans`: `explain("formatted")` of each query (default: the
  *    headline list) into one markdown file, e.g. PLANS.md.
  *  - `suite-ctx`: what a long-lived session accumulates. The probes are
@@ -63,20 +71,26 @@ object Measure {
     "lakehouse_evolve", "lakehouse_cdf", "lakehouse_upsert_changes")
 
   def main(args: Array[String]): Unit = {
-    def csv(s: String): Seq[String] = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val timed = SparkEntry.queries.filter(_.timed).sortBy(_.name)
+    // names resolve here, outside the mode closures, so an unknown one
+    // fails before the session starts
     val mode: (SparkSession, String) => Unit = args.toList match {
       case "ab" :: key :: a :: b :: qs :: rest if rest.size <= 1 =>
-        ab(_, _, key, a, b, csv(qs), rest.headOption.fold(4)(_.toInt))
-      case "profile" :: qs :: Nil => profile(_, _, csv(qs))
+        val (names, pairs) = (SparkEntry.resolveCsv(qs), rest.headOption.fold(4)(_.toInt))
+        ab(_, _, key, a, b, names, pairs)
+      case "profile" :: rest if rest.size <= 1 =>
+        val names = rest.headOption.fold(timed)(SparkEntry.resolveCsv)
+        profile(_, _, names)
       case "plans" :: out :: rest if rest.size <= 1 =>
-        plans(_, _, out, rest.headOption.fold(Headline)(csv))
+        val names = rest.headOption.fold(SparkEntry.resolve(Headline))(SparkEntry.resolveCsv)
+        plans(_, _, out, names)
       case "suite-ctx" :: rest if rest.size <= 2 =>
-        suiteCtx(_, _, rest.headOption.map(csv).filter(_.nonEmpty)
-          .getOrElse(Seq("graph_triangles", "graph_pagerank")),
-          rest.lift(1).fold(3)(_.toInt),
-          SparkEntry.queries.keys.toSeq.filterNot(SparkEntry.benchExempt).sorted)
+        val probes = rest.headOption.map(SparkEntry.resolveCsv).filter(_.nonEmpty)
+          .getOrElse(SparkEntry.resolve(Seq("graph_triangles", "graph_pagerank")))
+        val minOf = rest.lift(1).fold(3)(_.toInt)
+        suiteCtx(_, _, probes, minOf, timed)
       case _ => throw new IllegalArgumentException("usage: Measure ab <sqlConf> <a> <b> " +
-        "<q1,...> [pairs] | profile <q1,...> | plans <outFile> [q1,...] | suite-ctx [p1,...] [minOf]")
+        "<q1,...> [pairs] | profile [q1,...] | plans <outFile> [q1,...] | suite-ctx [p1,...] [minOf]")
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(Sessions.cpus).getOrCreate()
@@ -84,44 +98,59 @@ object Measure {
     try mode(spark, sfDir) finally spark.stop()
   }
 
-  /** Wall seconds of one noop-sink write of `name`. */
-  private def run(spark: SparkSession, sfDir: String, name: String): Double = {
+  /** Wall seconds of one noop-sink write of `q`, and the frame written. */
+  private def runFrame(spark: SparkSession, sfDir: String, q: Query): (Double, DataFrame) = {
     val t0 = System.nanoTime()
-    SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+    val df = q.build(spark, sfDir)
+    df.write.format("noop").mode("overwrite").save()
+    ((System.nanoTime() - t0) / 1e9, df)
   }
+
+  private def run(spark: SparkSession, sfDir: String, q: Query): Double =
+    runFrame(spark, sfDir, q)._1
 
   /** Parquet footer caches and session startup, billed to no query. */
   private def warm(spark: SparkSession, sfDir: String): Unit =
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
   private[graft] def ab(spark: SparkSession, sfDir: String, key: String,
-      valA: String, valB: String, names: Seq[String], pairs: Int): Unit = {
+      valA: String, valB: String, queries: Seq[Query], pairs: Int): Unit = {
     warm(spark, sfDir)
-    def timed(name: String, v: String): Double = { spark.conf.set(key, v); run(spark, sfDir, name) }
+    def timed(q: Query, v: String): Double = { spark.conf.set(key, v); run(spark, sfDir, q) }
     def stats(xs: Seq[Double]): String = {
       val s = xs.sorted
       f"min=${s.head}%6.3f med=${s(s.size / 2)}%6.3f"
     }
     val before = spark.conf.getOption(key)
-    try names.foreach { name =>
-      timed(name, valA); timed(name, valB) // warm both shapes, unmeasured
-      val (a, b) = (1 to pairs).map(_ => (timed(name, valA), timed(name, valB))).unzip
+    try queries.foreach { q =>
+      timed(q, valA); timed(q, valB) // warm both shapes, unmeasured
+      val (a, b) = (1 to pairs).map(_ => (timed(q, valA), timed(q, valB))).unzip
       val verdict =
         if (b.min < 0.9 * a.min) "B-WIN" else if (b.min > 1.1 * a.min) "B-LOSS" else "PAR"
-      println(f"[ab] $name%-28s A($valA%s): ${stats(a)}  " +
+      println(f"[ab] ${q.name}%-28s A($valA%s): ${stats(a)}  " +
         f"B($valB%s): ${stats(b)}  ratio=${b.min / a.min}%5.2f  $verdict")
     } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   private final case class StageAgg(job: Int, name: String, ms: Long, tasks: Int,
-    input: Long, shuffleRead: Long, shuffleWrite: Long, spill: Long)
+    input: Long, shuffleRead: Long, shuffleWrite: Long, spill: Long, diskSpill: Long)
 
-  private final class JobListener extends SparkListener {
+  private final class JobListener extends SparkListener with QueryExecutionListener {
     val stageToJob = TrieMap.empty[Int, Int]
     val jobStart = TrieMap.empty[Int, Long]
     val jobMs = TrieMap.empty[Int, Long]
     val stages = TrieMap.empty[Int, StageAgg]
+    val taskMs = TrieMap.empty[Long, Long]
+    /** Catalyst phase -> ms, summed over every query that finished. */
+    val phaseMs = TrieMap.empty[String, Long]
+    def addPhases(tracker: QueryPlanningTracker): Unit = phaseMs.synchronized {
+      tracker.phases.foreach { case (p, t) => phaseMs(p) = phaseMs.getOrElse(p, 0L) + t.durationMs }
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      addPhases(qe.tracker)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      taskMs(e.taskInfo.taskId) = e.taskInfo.duration
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       jobStart(e.jobId) = e.time
       e.stageIds.foreach(stageToJob(_) = e.jobId)
@@ -136,21 +165,30 @@ object Measure {
         (for (s <- si.submissionTime; c <- si.completionTime) yield c - s).getOrElse(0L),
         si.numTasks, m.fold(0L)(_.inputMetrics.bytesRead),
         m.fold(0L)(_.shuffleReadMetrics.totalBytesRead),
-        m.fold(0L)(_.shuffleWriteMetrics.bytesWritten), m.fold(0L)(_.memoryBytesSpilled))
+        m.fold(0L)(_.shuffleWriteMetrics.bytesWritten), m.fold(0L)(_.memoryBytesSpilled),
+        m.fold(0L)(_.diskBytesSpilled))
     }
   }
 
-  private[graft] def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+  private[graft] def profile(spark: SparkSession, sfDir: String, queries: Seq[Query]): Unit = {
     warm(spark, sfDir)
     def mb(b: Long) = f"${b / 1048576.0}%.1fMB"
-    names.foreach { name =>
-      val warmSec = run(spark, sfDir, name)
+    queries.foreach { q =>
+      val name = q.name
+      val warmSec = run(spark, sfDir, q)
       val l = new JobListener
+      // the warm-up's late events must not land in this profile
+      Bridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.addSparkListener(l)
-      val sec = try run(spark, sfDir, name) finally {
-        Thread.sleep(1000) // let the async listener bus drain
+      spark.listenerManager.register(l)
+      val (sec, df) = try runFrame(spark, sfDir, q) finally {
+        Bridge.drainListenerBus(spark.sparkContext)
+        spark.listenerManager.unregister(l)
         spark.sparkContext.removeSparkListener(l)
       }
+      // the written frame was analyzed when built; the write's own query
+      // (reported above) optimizes and plans it
+      l.addPhases(df.queryExecution.tracker)
       println(f"== $name warm=$warmSec%.3fs profiled=$sec%.3fs")
       l.jobMs.toSeq.sortBy(_._1).foreach { case (j, ms) =>
         println(f"  job $j%3d ${ms / 1000.0}%7.3fs")
@@ -160,28 +198,48 @@ object Measure {
             (if (a.spill > 0) s" SPILL=${mb(a.spill)}" else "") + s"  ${a.name}")
         }
       }
+      println(profileJson(name, sec, l))
     }
   }
 
+  /** One query's per-layer split as a single JSON line. */
+  private def profileJson(name: String, sec: Double, l: JobListener): String = {
+    import QueryPlanningTracker.{ANALYSIS, OPTIMIZATION, PLANNING}
+    def ms(phase: String) = l.phaseMs.getOrElse(phase, 0L)
+    val st = l.stages.values
+    val tasks = l.taskMs.values.toArray.sorted
+    val skew =
+      if (tasks.isEmpty || tasks(tasks.length / 2) == 0) 1.0
+      else tasks.last.toDouble / tasks(tasks.length / 2)
+    def f3(d: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, d)
+    s"""{"query":"$name","sec":${f3(sec)},"plan_ms":{"analysis":${ms(ANALYSIS)},""" +
+      s""""optimization":${ms(OPTIMIZATION)},"planning":${ms(PLANNING)}},""" +
+      s""""jobs":${l.jobMs.size},"stages":${st.size},"tasks":${tasks.length},""" +
+      s""""shuffle_read_bytes":${st.map(_.shuffleRead).sum},""" +
+      s""""shuffle_write_bytes":${st.map(_.shuffleWrite).sum},""" +
+      s""""spill_mem_bytes":${st.map(_.spill).sum},"spill_disk_bytes":${st.map(_.diskSpill).sum},""" +
+      s""""task_skew":${f3(skew)}}"""
+  }
+
   private[graft] def plans(spark: SparkSession, sfDir: String, outFile: String,
-      names: Seq[String]): Unit = {
+      queries: Seq[Query]): Unit = {
     val sb = new StringBuilder
     sb ++= "# PLANS — formatted physical plans of the headline queries\n\n"
     sb ++= s"Generated by `sbt \"runMain graft.tools.Measure plans $outFile\"` over `$sfDir`.\n"
     sb ++= "Load-bearing properties (pushdown, broadcast, partial agg, no stray\n"
     sb ++= "exchange, codegen) are ASSERTED in `PlanSpec`; this file is the full\n"
     sb ++= "picture for review. Regenerate after plan-affecting changes.\n"
-    names.foreach { name =>
-      sb ++= s"\n## $name\n\n```\n"
-      sb ++= SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+    queries.foreach { q =>
+      sb ++= s"\n## ${q.name}\n\n```\n"
+      sb ++= q.build(spark, sfDir).queryExecution.explainString(FormattedMode)
       sb ++= "```\n"
     }
     Files.write(Paths.get(outFile), sb.toString.getBytes(StandardCharsets.UTF_8))
-    println(s"[plans] wrote ${names.size} plans to $outFile")
+    println(s"[plans] wrote ${queries.size} plans to $outFile")
   }
 
-  private[graft] def suiteCtx(spark: SparkSession, sfDir: String, probes: Seq[String],
-      minOf: Int, suite: Seq[String]): Unit = {
+  private[graft] def suiteCtx(spark: SparkSession, sfDir: String, probes: Seq[Query],
+      minOf: Int, suite: Seq[Query]): Unit = {
     warm(spark, sfDir)
     def gcSec: Double = ManagementFactory.getGarbageCollectorMXBeans.toArray
       .map(_.asInstanceOf[GarbageCollectorMXBean].getCollectionTime).sum / 1000.0
@@ -194,7 +252,7 @@ object Measure {
     def probe(tag: String): Unit = {
       probes.foreach { p =>
         val xs = (1 to minOf).map(_ => run(spark, sfDir, p))
-        println(f"[probe] $tag%-12s $p%-20s min=${xs.min}%6.3f " +
+        println(f"[probe] $tag%-12s ${p.name}%-20s min=${xs.min}%6.3f " +
           f"all=${xs.map(x => f"$x%.3f").mkString(",")}")
       }
       storage(s"after-$tag")
@@ -203,9 +261,9 @@ object Measure {
     storage("fresh")
     probe("fresh")
     val t0 = System.nanoTime()
-    suite.foreach { n =>
-      try run(spark, sfDir, n)
-      catch { case e: Throwable => System.err.println(s"[ctx] $n failed: ${e.getMessage}") }
+    suite.foreach { q =>
+      try run(spark, sfDir, q)
+      catch { case e: Throwable => System.err.println(s"[ctx] ${q.name} failed: ${e.getMessage}") }
     }
     println(f"[ctx] suite pass of ${suite.size} queries took ${(System.nanoTime() - t0) / 1e9}%.1fs")
     storage("post-suite")

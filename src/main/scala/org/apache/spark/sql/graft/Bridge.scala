@@ -27,6 +27,13 @@ object Bridge {
   def unpersistRDD(spark: org.apache.spark.sql.SparkSession, id: Int): Unit =
     spark.sparkContext.unpersistRDD(id, blocking = false)
 
+  /** Blocks until every event posted so far has reached every listener —
+    * the deterministic wait for listener-derived figures (job, stage and
+    * task metrics, captured query plans) that a fixed sleep only
+    * approximates on a loaded box. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Execute a resolved logical plan and collect its rows — the range-join
     * rewrite's bin-width derivation probe needs this from inside an
     * optimizer rule, and Dataset.ofRows is private[sql] in Spark 4. */

@@ -343,16 +343,16 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("all queries execute at sf0.001 and return rows") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n > 0, s"$name returned no rows")
+    SparkEntry.queries.foreach { q =>
+      val n = q.build(spark, sf).count()
+      assert(n > 0, s"${q.name} returned no rows")
     }
   }
 
   test("approx_count_distinct within HLL++ error of exact") {
     // the query now folds the bound into a boolean the oracle checks; the
     // spec asserts it holds for every group (exact counts stay positive)
-    val rows = SparkEntry.queries("q13_approx_distinct")(spark, sf).collect()
+    val rows = SparkEntry.query("q13_approx_distinct").build(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("exact_orders") > 0L)
@@ -364,7 +364,7 @@ class PipelineSpec extends AnyFunSuite {
   test("approx_percentile within rank-error bound of exact") {
     // q20b folds the bound into a boolean the oracle hash-checks; the
     // spec asserts it holds per group and the exact values are sane
-    val rows = SparkEntry.queries("q20b_approx_percentiles")(spark, sf).collect()
+    val rows = SparkEntry.query("q20b_approx_percentiles").build(spark, sf).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val p25 = r.getAs[Double]("p25_qty")
@@ -375,20 +375,31 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("query set == oracle set + declared rows-only set") {
-    // r12 lost 5 broken queries because nothing pinned the DECLARED set:
-    // a query that drops its oracle (or is renamed on one side only) must
-    // fail the build, not shrink the correctness report.
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
-    val unaccounted =
-      SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- SparkEntry.rowsOnly
-    assert(unaccounted.isEmpty,
-      s"queries with neither an oracle nor a rowsOnly declaration: $unaccounted")
-    val stale = SparkEntry.rowsOnly -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"rowsOnly names without queries: $stale")
-    val shadowed = SparkEntry.rowsOnly.intersect(SparkEntry.oracleSql.keySet)
-    assert(shadowed.isEmpty, s"rowsOnly names that DO have an oracle: $shadowed")
+  test("registry rejects a duplicate query name and names it") {
+    val q = SparkEntry.query("q1_agg")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.index(Seq(q, SparkEntry.query("s1_scan_project"), q.copy(timed = false)))
+    }
+    assert(e.getMessage.contains("q1_agg"), e.getMessage)
+    assert(!e.getMessage.contains("s1_scan_project"), e.getMessage)
+  }
+
+  test("every rows-only query states a non-empty reason") {
+    val reasons = SparkEntry.queries.collect {
+      case SparkEntry.Query(n, _, SparkEntry.RowsOnly(r), _) => n -> r
+    }
+    assert(reasons.nonEmpty)
+    reasons.foreach { case (n, r) => assert(r.trim.nonEmpty, s"$n: empty reason") }
+  }
+
+  test("unknown query names fail before any query runs, naming each one") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.resolveCsv("q1_agg, q1_agx ,graph_pagrank")
+    }
+    assert(e.getMessage.contains("q1_agx") && e.getMessage.contains("graph_pagrank"),
+      e.getMessage)
+    assert(!e.getMessage.contains("q1_agg"), e.getMessage)
+    assert(SparkEntry.resolveCsv("q4_window,q1_agg").map(_.name) === Seq("q4_window", "q1_agg"))
   }
 
   test("edge keys: null, empty, and unicode rowkeys flow through the sink") {

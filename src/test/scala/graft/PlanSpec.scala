@@ -4,7 +4,7 @@ class PlanSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   val sf = "/root/testdata/sf0.01"
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    SparkEntry.query(name).build(spark, sf).queryExecution.executedPlan.toString
 
   /** Plans of EVERY execution a query construction triggers, plus the
     * result's own: operators that materialize an internal frame (the
@@ -27,11 +27,11 @@ class PlanSpec extends AnyFunSuite {
     // events would otherwise land in this listener and pollute the
     // negative assertions), and drain deterministically after the run —
     // a fixed sleep made the positive pins flaky under load
-    org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(l)
     try {
       val p = plan(name)
-      org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       plans.synchronized(plans.append(p))
       plans.toString
     } finally spark.listenerManager.unregister(l)
@@ -46,7 +46,7 @@ class PlanSpec extends AnyFunSuite {
   test("lakehouse typed pruning: string and date residuals pushed to the pruned scan in native types") {
     // formatted mode: the one-line toString truncates long PushedFilters
     // lists, hiding exactly the date bounds this test exists to pin
-    val p = SparkEntry.queries("lakehouse_pruned_date")(spark, sf)
+    val p = SparkEntry.query("lakehouse_pruned_date").build(spark, sf)
       .queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     val pushed = p.linesIterator.filter(_.contains("PushedFilters")).mkString("\n")
@@ -243,7 +243,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), s"corpus-side shuffle join:\n${p.take(2000)}")
   }
   test("whole-stage codegen active in scan queries") {
-    val df = SparkEntry.queries("p1_cql_projection")(spark, sf)
+    val df = SparkEntry.query("p1_cql_projection").build(spark, sf)
     df.count() // materialize AQE final plan
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("WholeStageCodegen") || p.contains("*("), p.take(2000))
@@ -277,7 +277,7 @@ class PlanSpec extends AnyFunSuite {
     }
     // a prior write's late event (bulkDir's, just before) must not be
     // captured as this one's: drain the bus first, as plansDuring does
-    org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(listener)
     try {
       body
@@ -645,7 +645,7 @@ class PlanSpec extends AnyFunSuite {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     }
-    org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     spark.listenerManager.register(l)
     try {
       val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -657,7 +657,7 @@ class PlanSpec extends AnyFunSuite {
           col("doc_b") === col("doc_a") + 1 || col("doc_b") === col("doc_a") * 2)
         .distinct()
       graft.operators.Dedup.dupClusters(pairs)
-      org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(l)
     // (observe node, sits under a shuffle exchange or shuffle stage)
     def observed(p: SparkPlan, inMap: Boolean): Seq[(CollectMetricsExec, Boolean)] = {
