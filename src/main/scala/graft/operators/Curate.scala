@@ -289,9 +289,11 @@ object Curate {
    *      one shuffle with map-side combine; aggregation state bounded by
    *      the SOURCE CARDINALITY (a config-bounded dimension, like
    *      languages — tens to hundreds, never corpus-scale). The result
-   *      is lazily truncated because BOTH derivations below
-   *      read it (without it Catalyst would re-run the scan+exchange per
-   *      consumer — the 3-scan shape this operator had at first cut);
+   *      is truncated eagerly because BOTH derivations below read it
+   *      (without it Catalyst would re-run the scan+exchange per
+   *      consumer — the 3-scan shape this operator had at first cut; a
+   *      lazy truncation would let the two sibling stages compute it
+   *      twice);
    *   2. per-source sizes = explode the source sets and count — a
    *      #sources-row table, broadcast back for the Jaccard denominator;
    *   3. in-row pair expansion of each multi-source set (<= |S| choose 2
@@ -311,7 +313,7 @@ object Curate {
     val bySrc = Materialize.truncate(df.select(col(sourceCol).as("_src"),
         explode(Dedup.shingles(col(textCol), n)).as("_sh"))
       .groupBy(col("_sh"))
-      .agg(sort_array(collect_set(col("_src"))).as("_srcs")), eager = false)
+      .agg(sort_array(collect_set(col("_src"))).as("_srcs")))
     val sizes = bySrc.select(explode(col("_srcs")).as("_src"))
       .groupBy(col("_src")).agg(count(lit(1)).as("_n"))
     val pairs = bySrc

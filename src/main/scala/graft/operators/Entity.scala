@@ -28,7 +28,8 @@ import org.apache.spark.sql.types._
  *     bounded work, documented recall loss on pathological keys. The
  *     exclusion is observable two ways: an `observe()` metric
  *     (`excluded_blocks` / `excluded_names`, delivered to any
- *     QueryExecutionListener when the query runs) and the
+ *     QueryExecutionListener by the truncation [[fuzzyNamePairs]] runs
+ *     before it returns) and the
  *     [[oversizedBlocks]] diagnostic, which returns the excluded
  *     (block, size) rows directly;
  *   - the edit-distance predicate uses Spark's thresholded levenshtein
@@ -102,10 +103,11 @@ object Entity {
         sum(when(col("_bn") > maxBlock, 1L).otherwise(0L)).as("excluded_blocks"),
         sum(when(col("_bn") > maxBlock, col("_bn")).otherwise(0L)).as("excluded_names"))
       .filter(col("_bn") <= maxBlock).drop("_bn")
-    // the filtered name set feeds BOTH sides of the self-join; a lazy
-    // truncation computes the distinct + sizing join once and the
-    // self-join re-reads materialized blocks (the dedup-family pattern)
-    val inBlock = Materialize.truncate(blocked.join(sized, Seq("_blk")), eager = false)
+    // the filtered name set feeds BOTH sides of the self-join, so it is
+    // truncated eagerly: the distinct + sizing join runs once, before
+    // the self-join's two sides read the materialized blocks, and the
+    // observation is filled in when that truncation's action reports
+    val inBlock = Materialize.truncate(blocked.join(sized, Seq("_blk")))
     val a = inBlock.select(col("_blk"), col("_nm").as("name_a"))
     val b = inBlock.select(col("_blk"), col("_nm").as("name_b"))
     a.join(b, Seq("_blk"))

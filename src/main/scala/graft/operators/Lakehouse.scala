@@ -42,49 +42,22 @@ import org.apache.spark.sql.functions._
  * `Rename.NONE` semantics so a destination that already exists FAILS the
  * rename instead of merging into it. Readers resolve "latest committed
  * version" once per read and replay exactly that snapshot, which gives
- * SNAPSHOT ISOLATION through concurrent mutations: no mutation ever
+ * them SNAPSHOT ISOLATION from the writer: no mutation ever
  * rewrites or deletes a file an existing snapshot references — superseded
  * files are reclaimed only by an explicit [[vacuum]]. A crashed attempt
  * leaves only `_tmp-*` staging debris (never a half-visible version);
  * [[vacuum]] sweeps it.
  *
- * == Concurrency ==
+ * == One writer at a time ==
  *
- * APPENDS are optimistically concurrent: [[appendClustered]] writes its
- * data files once, then loops { resolve latest, extend that manifest,
- * commit at latest+1 } — a lost race (another writer took the version
- * slot first) re-resolves and retries, because append manifests are
- * purely ADDITIVE: re-deriving "fresh live + my new rows" is always
- * correct whatever landed in between. Two interleaved appenders (an
- * hourly ingest plus a nightly backfill — the normal production shape)
- * both land, on a linear log.
- *
- * The REWRITE ops resolve lost races with FILE-SET conflict detection
- * (the Delta model). [[compact]] removes only files it read and adds
- * files nobody else references, so it commutes with ANY interleaved
- * commit — append, delete, upsert, another compact — that left its
- * read set fully referenced by the new live manifest; it rebuilds
- * against the new head and retries (maintenance survives a nightly
- * backfill appender AND a concurrent CDC merge on other files).
- * [[deleteWhere]] and [[upsertByKey]] additionally need the
- * interlopers' ADDED files to be provably unable to interact — an
- * added row could match the delete predicate or carry an update key —
- * and the manifest's per-file min/max stats give the proof: when every
- * concurrently-added file's stat ranges are DISJOINT from the delete's
- * `pruneRanges` (resp. the upsert batch's key bounds), and the op's
- * read set is still live, the rewrite rebases exactly like compact
- * (the stats-disjointness argument Delta uses to avoid
- * ConcurrentAppendException); removals OUTSIDE the read set are safe
- * by construction (see `commitRewrite`'s doc for the argument).
- * Overlapping or unprovable cases (a delete without `pruneRanges`, an
- * upsert whose key columns carry no manifest stats, an interloper that
- * rewrote a file this op read) stay fail-loud, as does any race with a
- * whole-table [[replaceClustered]]; [[writeClustered]] is destructive
- * create-table and participates in no race resolution. A lost race
- * that cannot rebase throws BEFORE anything becomes visible.
- * (On an object store without atomic rename the same caveat applies as
- * to Delta-on-S3: the final rename needs the store's conditional-put —
- * out of scope here.)
+ * A table has one writer at a time: the batch job that owns it. Every
+ * mutation resolves the latest version ONCE, builds its manifest against
+ * that base, and commits ONCE at base+1. A second writer that took the
+ * slot meanwhile makes the rename fail, and the mutation throws
+ * [[CommitConflictException]] with nothing visible — no retry, no
+ * rebase; its written data files stay unreferenced until [[vacuum]].
+ * (On an object store without atomic rename the final rename needs the
+ * store's conditional put — out of scope here.)
  *
  * Scale shape: the manifest holds one row per DATA FILE (not per row), so
  * planning a pruned read is a driver-side replay of a #files-row table —
@@ -117,9 +90,9 @@ object Lakehouse {
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** A commit lost its version slot to a concurrent writer. Additive
-    * (append) commits catch this and retry against the new latest;
-    * rewrite commits let it propagate — fail-loud by design. */
+  /** A commit lost its version slot to another writer. Every mutation
+    * lets it propagate: the table holds the winner's commit only, and
+    * nothing of the loser is visible. */
   final class CommitConflictException(msg: String)
     extends IllegalStateException(msg)
 
@@ -234,12 +207,19 @@ object Lakehouse {
     dataSchemaAt(spark, path, latestVersion(spark, path))
 
   /** Stages `manifest` + marker as a complete version directory and
-    * renames it into the `base + 1` slot. The rename is the commit
-    * point: `FileContext` + `Rename.NONE` fails if the slot is taken
-    * (it never merges into an existing directory, unlike
-    * `FileSystem.rename`'s copy fallback), so a lost race throws
+    * renames it into the `base + 1` slot — every mutation's one commit.
+    * The rename is the commit point: `FileContext` + `Rename.NONE` fails
+    * if the slot is taken (it never merges into an existing directory,
+    * unlike `FileSystem.rename`'s copy fallback), so a lost race throws
     * [[CommitConflictException]] with NOTHING visible — the staging
     * debris is cleaned up (best-effort; [[vacuum]] sweeps leftovers).
+    *
+    * AMBIGUOUS rename: on HDFS a rename can apply on the filesystem while
+    * the client sees an error (the non-idempotent-RPC hazard). Each call
+    * writes a fresh writer token into its marker; when the rename reports
+    * the slot taken, the slot's marker is read back, and if it carries
+    * OUR token the commit landed and the version is returned.
+    *
     * The marker records file/row counts (one tiny read of the just-
     * written single-file manifest — #files rows) so [[history]] never
     * has to replay manifests. */
@@ -248,13 +228,12 @@ object Lakehouse {
       insertFiles: Seq[String] = Nil,
       dataSchema: Option[org.apache.spark.sql.types.StructType] = None,
       postimageFiles: Seq[String] = Nil,
-      deleteFiles: Seq[String] = Nil,
-      writerToken: String = "")
+      deleteFiles: Seq[String] = Nil)
       : Long = {
     val fs = fsOf(spark, path)
     val v = base + 1
-    val tmp = new Path(logDir(path),
-      s"_tmp-${java.util.UUID.randomUUID().toString}")
+    val token = java.util.UUID.randomUUID().toString
+    val tmp = new Path(logDir(path), s"_tmp-$token")
     val vd = new Path(versionDir(path, v))
     try {
       manifest.coalesce(1).write.mode("error")
@@ -278,12 +257,7 @@ object Lakehouse {
       putList("insert", insertFiles)
       putList("postimage", postimageFiles)
       putList("delete", deleteFiles)
-      // writer identity, for retry loops to recognize their OWN landed
-      // commit after an AMBIGUOUS rename (applied on the filesystem,
-      // error reported to the client — the HDFS non-idempotent-RPC
-      // hazard); without it a retry would re-commit the same extension
-      // and duplicate manifest rows
-      if (writerToken.nonEmpty) props.setProperty("writerToken", writerToken)
+      props.setProperty("writerToken", token)
       // the snapshot's data schema (top-level nullable normalized — added
       // columns ARE null in pre-evolution files): reads resolve against
       // THIS, so those files null-fill instead of inheriting parquet's
@@ -300,22 +274,19 @@ object Lakehouse {
         fs.delete(vd, true)
       if (fs.exists(vd))
         throw new CommitConflictException(
-          s"lakehouse log at $path: version $v was committed concurrently")
+          s"lakehouse log at $path: version $v was committed by another writer")
       val fc = FileContext.getFileContext(fs.getUri,
         spark.sparkContext.hadoopConfiguration)
-      // ONLY a destination-exists outcome is a commit race. Any other
+      // ONLY a destination-exists outcome is a commit race; any other
       // IOException (permissions, quota, a broken filesystem) propagates
-      // as the infrastructure failure it is — reclassifying it as a
-      // conflict would let the retry loop (commitAdditive) indefinitely
-      // downgrade a persistent FS failure to "lost a race"
+      // as the infrastructure failure it is
+      def lost(e: Exception): Unit =
+        if (!ownsSlot(fs, path, v, token)) throw new CommitConflictException(
+          s"lakehouse log at $path: lost the race for version $v: $e")
       try fc.rename(tmp, vd, Options.Rename.NONE)
       catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          throw new CommitConflictException(
-            s"lakehouse log at $path: lost the race for version $v: $e")
-        case e: org.apache.hadoop.fs.PathExistsException =>
-          throw new CommitConflictException(
-            s"lakehouse log at $path: lost the race for version $v: $e")
+        case e: org.apache.hadoop.fs.FileAlreadyExistsException => lost(e)
+        case e: org.apache.hadoop.fs.PathExistsException => lost(e)
       }
       v
     } catch {
@@ -330,9 +301,9 @@ object Lakehouse {
     * missing marker is a definitive NO (visibility is the whole-dir
     * rename — a committed slot always carries its marker); any other
     * IOException is retried a few times before failing LOUDLY, because
-    * concluding "not mine" from a transient read error would let the
-    * caller re-commit the same rows at the next slot (duplicated data),
-    * the one corruption this probe exists to prevent. */
+    * concluding "not mine" from a transient read error would report a
+    * landed commit as lost, and a caller that re-runs the mutation would
+    * commit the same rows twice. */
   private def ownsSlot(fs: FileSystem, path: String, slot: Long,
       token: String): Boolean = {
     var attempt = 0
@@ -347,227 +318,23 @@ object Lakehouse {
           if (attempt >= 3) throw new IllegalStateException(
             s"lakehouse log at $path: cannot read the commit marker at " +
               s"version $slot to determine whether a conflicted commit " +
-              "was actually ours — refusing to retry (a blind retry " +
-              "could duplicate the committed rows); inspect the log", e)
+              "was actually ours — inspect the log before re-running (a " +
+              "blind re-run could duplicate the committed rows)", e)
           Thread.sleep(25L * attempt)
       }
     }
     false // unreachable
   }
 
-  /** The additive-commit retry loop: re-resolves latest, rebuilds the
-    * manifest via `extend` (fresh live manifest in, extended manifest
-    * out), and commits at latest+1; a [[CommitConflictException]] means
-    * another writer took the slot — re-deriving from the NEW live
-    * manifest is correct because the extension is purely additive, so
-    * back off briefly and go again.
-    *
-    * AMBIGUOUS-RENAME defense: every attempt carries one per-CALL writer
-    * token into the marker; before retrying a conflict, the loop reads
-    * the marker at the slot it just lost — if it carries OUR token, the
-    * rename actually applied and the error was client-side only (the
-    * HDFS non-idempotent-RPC hazard), so the commit is returned instead
-    * of re-extending and duplicating the same manifest rows. */
-  private def commitAdditive(spark: SparkSession, path: String,
-      op: String, maxAttempts: Int)(extend: (Long, DataFrame) =>
-        (DataFrame, Option[org.apache.spark.sql.types.StructType])): Long = {
-    val token = java.util.UUID.randomUUID().toString
-    val fs = fsOf(spark, path)
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val base = latestVersion(spark, path)
-      require(base >= 0, s"no committed lakehouse log at $path")
-      val live = manifestAt(spark, path, base)
-      try {
-        val (manifest, schema) = extend(base, live)
-        return commitVersion(spark, path, manifest, op, base,
-          dataSchema = schema, writerToken = token)
-      } catch {
-        case e: CommitConflictException =>
-          val lostSlot = base + 1
-          if (ownsSlot(fs, path, lostSlot, token)) return lostSlot
-          if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"lakehouse log at $path: additive commit lost $maxAttempts " +
-              s"races in a row — giving up", e)
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(5L, 50L))
-      }
-    }
-    -1L // unreachable
-  }
-
-  /** Test seam: invoked before a COW rewrite's ([[deleteWhere]] /
-    * [[upsertByKey]]) first commit attempt — lets a spec interleave a
-    * concurrent commit deterministically into the rebase race window. */
-  private[graft] var onRewriteBeforeCommit: () => Unit = () => ()
-
-  /**
-   * The REWRITE-commit loop with FILE-SET conflict resolution (the
-   * Delta model), shared by [[deleteWhere]] and [[upsertByKey]]. A
-   * lost race is rebased — the replacement manifest rebuilt against
-   * the new live manifest, the interlopers' work riding along — ONLY
-   * when the interleaved commits provably cannot interact with this
-   * rewrite:
-   *
-   *  - no interloper is a whole-table REPLACE (nothing computed
-   *    against the old table survives one);
-   *  - the table schema did not move (this op's files were written
-   *    under the base schema; committing them under a marker recording
-   *    that schema would silently narrow a widened table);
-   *  - this op's READ SET (`affected`) is still fully referenced by
-   *    the new live manifest — the primary gate: any interloper that
-   *    rewrote or dropped a file this op read (a delete/upsert/compact
-   *    touching the same files) fails here, while one that touched
-   *    only OTHER files passes (its removals cannot affect rows this
-   *    op never read);
-   *  - `addedOverlap(addedManifestRows)` returns None over EVERY file
-   *    the interlopers ADDED (append batches, upsert postimage/insert
-   *    files, delete survivor re-files, compaction outputs): the
-   *    op-specific stats proof that NO added row can match the delete
-   *    predicate / carry an update key. Some(diagnostic) — overlap,
-   *    or no bound to reason with — fails loud with the diagnostic.
-   *    (A compaction re-files rows from inside this op's range
-   *    without changing them; its output overlaps the stats bound and
-   *    fails CONSERVATIVELY — correct, just not maximally permissive.)
-   *
-   * Why removals outside the read set are safe: for a delete, an
-   * interloper's removal can only take rows AWAY — it cannot create a
-   * predicate match; for an upsert, every row carrying a matched
-   * update key lives in this op's read set by the probe's construction
-   * (pruneRanges contract included), so a removal touching such a row
-   * necessarily touches the read set and trips the liveness gate, and
-   * keys absent from the table (our inserts) have no rows to remove —
-   * an interloper INSERTING one of our keys is caught by the
-   * added-files proof instead.
-   *
-   * Carries the same ambiguous-rename writer-token defense as
-   * [[commitAdditive]]/[[compact]]. Driver work per retry: #files-row
-   * manifest replays plus whatever the overlap callback runs (one
-   * manifest-sized job).
-   */
-  private def commitRewrite(spark: SparkSession, path: String, op: String,
-      base0: Long, m0: DataFrame,
-      affected: Seq[String], newStats: Option[DataFrame],
-      insertFiles: Seq[String], postimageFiles: Seq[String],
-      deleteFiles: Seq[String],
-      addedOverlap: DataFrame => Option[String],
-      maxAttempts: Int,
-      // the schema the commit RECORDS — defaults to the base snapshot's
-      // (a rewrite re-files existing rows); the empty-table insert-all
-      // path overrides it with the batch's schema (the batch DEFINES
-      // the table there). The schema-STABILITY race check below always
-      // compares against the base snapshot's schema regardless.
-      commitSchema: Option[org.apache.spark.sql.types.StructType] = null)
-      : Long = {
-    val fs = fsOf(spark, path)
-    val token = java.util.UUID.randomUUID().toString
-    val baseSchema = dataSchemaAt(spark, path, base0)
-    val recordSchema =
-      if (commitSchema == null) baseSchema else commitSchema
-    var base = base0
-    var live = m0
-    var attempt = 0
-    onRewriteBeforeCommit()
-    while (true) {
-      attempt += 1
-      val kept =
-        if (affected.isEmpty) live
-        else live.filter(!col("file").isin(affected: _*))
-      val next = newStats match {
-        case Some(s) => kept.unionByName(s.select(kept.columns.map(col): _*))
-        case None => kept
-      }
-      try {
-        return commitVersion(spark, path, next, op, base,
-          insertFiles = insertFiles, dataSchema = recordSchema,
-          postimageFiles = postimageFiles, deleteFiles = deleteFiles,
-          writerToken = token)
-      } catch {
-        case e: CommitConflictException =>
-          // ambiguous rename: our commit may have landed with the error
-          // reported client-side only — never re-commit our own rows
-          if (ownsSlot(fs, path, base + 1, token)) return base + 1
-          val newBase = latestVersion(spark, path)
-          val interlopers = committedVersions(spark, path)
-            .filter(v => v > base && v <= newBase)
-            .map(v => (v, readCommit(fs, path, v).op))
-          // a REPLACE swapped the whole table — nothing this op computed
-          // survives (the liveness check below would also catch it; the
-          // explicit gate gives the honest diagnostic)
-          val replaced = interlopers.filter(_._2 == "replace")
-          if (replaced.nonEmpty) throw new CommitConflictException(
-            s"lakehouse log at $path: $op lost the race to whole-table " +
-              s"REPLACE commit(s) ${replaced.map(p =>
-                s"v${p._1}").mkString(", ")} — re-run against the new head")
-          if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"lakehouse log at $path: $op lost $maxAttempts commit races " +
-              "in a row — giving up", e)
-          if (dataSchemaAt(spark, path, newBase) != baseSchema)
-            throw new CommitConflictException(
-              s"lakehouse log at $path: $op lost the race to an append " +
-                "that widened the table schema — this op's rewrite files " +
-                "were written under the old schema; re-run against the " +
-                "new head")
-          val newLive = manifestAt(spark, path, newBase)
-          val liveFiles = newLive.select(col("file")).collect()
-            .map(r => pathKey(r.getString(0))).toSet
-          val missing = affected.filterNot(f => liveFiles(pathKey(f)))
-          if (missing.nonEmpty) throw new CommitConflictException(
-            s"lakehouse log at $path: $op's read set lost ${missing.size} " +
-              s"file(s) (e.g. ${missing.head}) from the live manifest — " +
-              s"concurrent commit(s) ${interlopers.map(p =>
-                s"v${p._1}:${p._2}").mkString(", ")} rewrote or dropped " +
-              "files this op read; re-run against the new head")
-          // the interlopers' new files: referenced by the new live
-          // manifest, absent from the manifest this op read (our own
-          // staged files are in neither — the commit failed). A
-          // pure-removal interleave (a delete with no survivors) adds
-          // NOTHING — then there is nothing to prove and even a
-          // no-bound op (a delete without pruneRanges) rebases safely
-          val added = newLive.join(
-            live.select(col("file")), Seq("file"), "left_anti")
-          if (!added.isEmpty) {
-            // A commitSchema override (the empty-table insert-all path)
-            // records the BATCH's schema — legal only while the batch is
-            // the sole content. An interloper's added rows were written
-            // under the base schema; rebasing a diverging batch schema
-            // over them would silently narrow/retype their columns on
-            // every recorded-schema read (the stability gate above only
-            // proves the TABLE schema didn't move, not that the override
-            // is compatible with it). Divergence is (name, type) SHAPE —
-            // the same contract upsertByKey's own schema gate uses;
-            // nullability/metadata differences (parquet round-trips are
-            // always nullable) are benign.
-            def shapeOf(o: Option[org.apache.spark.sql.types.StructType]) =
-              o.map(_.fields.map(f => (f.name, f.dataType)).sortBy(_._1).toSeq)
-            if (commitSchema != null && shapeOf(recordSchema) != shapeOf(baseSchema))
-              throw new CommitConflictException(
-                s"lakehouse log at $path: $op lost the race to concurrent " +
-                  s"commit(s) ${interlopers.map(p =>
-                    s"v${p._1}:${p._2}").mkString(", ")} that added files " +
-                  "while this op would record the batch's own schema " +
-                  s"(${recordSchema.map(_.simpleString)} != base " +
-                  s"${baseSchema.map(_.simpleString)}) over the added rows — " +
-                  "re-run against the new head")
-            addedOverlap(added).foreach(diag =>
-              throw new CommitConflictException(
-                s"lakehouse log at $path: $op lost the race to concurrent " +
-                  s"commit(s) ${interlopers.map(p =>
-                    s"v${p._1}:${p._2}").mkString(", ")} whose added files " +
-                  s"are not provably disjoint from the $op's scope — " +
-                  s"$diag; re-run against the new head"))
-          }
-          base = newBase
-          live = newLive
-          // jittered backoff (the commitAdditive idiom): two symmetric
-          // rewriters retrying in lockstep would otherwise burn the
-          // whole attempt budget colliding on the same slots
-          Thread.sleep(
-            java.util.concurrent.ThreadLocalRandom.current().nextLong(5L, 50L))
-      }
-    }
-    -1L // unreachable
+  /** `live` without the `removed` files, plus stats rows for the `added`
+    * files — the manifest every mutation commits. */
+  private def swapFiles(spark: SparkSession, live: DataFrame,
+      removed: Seq[String], added: Seq[String], zCols: Seq[String]): DataFrame = {
+    val kept =
+      if (removed.isEmpty) live else live.filter(!col("file").isin(removed: _*))
+    if (added.isEmpty) kept
+    else kept.unionByName(statsOf(spark.read.parquet(added: _*), zCols)
+      .select(kept.columns.map(col): _*))
   }
 
   // ------------------------------------------------------------------
@@ -657,9 +424,9 @@ object Lakehouse {
   /** Writes `df` as a z-clustered batch via a private staging dir, then
     * moves each part file into `path/data` and returns EXACTLY the moved
     * files. The written-file set is known by construction, never inferred
-    * from a before/after listing diff — under a CONCURRENT appender a
-    * listing diff would claim the other writer's files and commit
-    * duplicate manifest rows for them (double reads). Part-file names are
+    * from a before/after listing diff — a listing diff would also claim
+    * the orphan files a crashed or losing write left in `data/` and
+    * commit manifest rows for them (phantom reads). Part-file names are
     * job-UUID unique, so the per-file renames cannot collide; a crash
     * leaves only `_stage-*` debris outside `data/`, invisible to every
     * reader and swept by [[vacuum]]. */
@@ -695,13 +462,6 @@ object Lakehouse {
    * per-batch, manifest stats (the thing pruning reads) are exact
    * regardless.
    *
-   * CONCURRENT-SAFE: appends are commutative, so a lost commit race
-   * re-resolves the (now newer) live manifest and retries — see the
-   * class doc's concurrency section. Two interleaved appenders both
-   * land on a linear log (spec-pinned). The data files are written
-   * once, before the retry loop; only the #files-row manifest commit
-   * retries.
-   *
    * The batch frame is evaluated up to three times by the z-clustered
    * write (bounds aggregation + range sampling + the write itself) —
    * a caller whose batch is an expensive upstream pipeline should
@@ -715,64 +475,58 @@ object Lakehouse {
    * reconcile mixed files to the FIRST file's schema and silently lose a
    * column), and may ADD new columns — the commit records the widened
    * schema, and every read resolves against the recorded schema so
-   * pre-evolution files null-fill the added columns. The widened schema
-   * re-derives on every retry: a concurrent appender may itself have
-   * widened the table.
+   * pre-evolution files null-fill the added columns.
    */
   def appendClustered(df: DataFrame, path: String, zCols: Seq[String],
-      files: Int, bits: Int = 16, maxAttempts: Int = 20): Unit = {
+      files: Int, bits: Int = 16): Unit = {
     val spark = df.sparkSession
-    val live0 = readManifest(spark, path)
-    require(live0.columns.toSet == statsOf(df.limit(0), zCols).columns.toSet,
+    val base = latestVersion(spark, path)
+    require(base >= 0, s"no committed lakehouse log at $path — writeClustered first")
+    val live = manifestAt(spark, path, base)
+    require(live.columns.toSet == statsOf(df.limit(0), zCols).columns.toSet,
       s"appendClustered: zCols $zCols do not match the manifest at $path " +
         "— an appended batch must carry stats for the SAME clustered " +
         "columns or pruning would silently skip it")
-    // additive-evolution check + widened-schema derivation against a
-    // given base version. The table schema comes from the commit marker
-    // — emptiness from the marker's nFiles too, so the common (schema-
-    // tracked) path decides with ZERO Spark jobs; only a legacy
-    // (pre-tracking) marker probes the manifest and one live-file
-    // footer. An EMPTY manifest (legal after a wipe-delete) has nothing
-    // to conflict with — the batch defines the schema.
-    def widen(base: Long, live: DataFrame)
-        : Option[org.apache.spark.sql.types.StructType] = {
-      val info = readCommit(fsOf(spark, path), path, base)
-      val tableSchema =
-        if (info.nFiles.contains(0L)) None
-        else info.dataSchema.orElse {
-          val probeFile = live.select(col("file")).limit(1).collect()
-          if (probeFile.isEmpty) None
-          else Some(spark.read.parquet(probeFile(0).getString(0)).schema)
-        }
-      tableSchema match {
-        case None => Some(df.schema)
-        case Some(t) =>
-          val batch = df.schema.fields.map(f => f.name -> f.dataType).toMap
-          t.fields.foreach { f =>
-            batch.get(f.name) match {
-              case None => throw new IllegalArgumentException(
-                s"appendClustered: batch is missing existing column " +
-                  s"'${f.name}' at $path — evolution is additive-only " +
-                  "(columns can be added, never dropped)")
-              case Some(dt) => require(dt == f.dataType,
-                s"appendClustered: column '${f.name}' is ${f.dataType
-                  .simpleString} in the table but ${dt.simpleString} in " +
-                  s"the batch at $path — a retype needs an explicit " +
-                  "rewrite (replaceClustered), not an append")
-            }
-          }
-          val addedCols =
-            df.schema.fields.filterNot(f => t.fieldNames.contains(f.name))
-          Some(org.apache.spark.sql.types.StructType(t.fields ++ addedCols))
+    // additive-evolution check + widened-schema derivation, before the
+    // write. The table schema comes from the commit marker — emptiness
+    // from the marker's nFiles too, so the common (schema-tracked) path
+    // decides with ZERO Spark jobs; only a legacy (pre-tracking) marker
+    // probes the manifest and one live-file footer. An EMPTY manifest
+    // (legal after a wipe-delete) has nothing to conflict with — the
+    // batch defines the schema.
+    val info = readCommit(fsOf(spark, path), path, base)
+    val tableSchema =
+      if (info.nFiles.contains(0L)) None
+      else info.dataSchema.orElse {
+        val probeFile = live.select(col("file")).limit(1).collect()
+        if (probeFile.isEmpty) None
+        else Some(spark.read.parquet(probeFile(0).getString(0)).schema)
       }
+    val schema = tableSchema match {
+      case None => df.schema
+      case Some(t) =>
+        val batch = df.schema.fields.map(f => f.name -> f.dataType).toMap
+        t.fields.foreach { f =>
+          batch.get(f.name) match {
+            case None => throw new IllegalArgumentException(
+              s"appendClustered: batch is missing existing column " +
+                s"'${f.name}' at $path — evolution is additive-only " +
+                "(columns can be added, never dropped)")
+            case Some(dt) => require(dt == f.dataType,
+              s"appendClustered: column '${f.name}' is ${f.dataType
+                .simpleString} in the table but ${dt.simpleString} in " +
+                s"the batch at $path — a retype needs an explicit " +
+                "rewrite (replaceClustered), not an append")
+          }
+        }
+        val addedCols =
+          df.schema.fields.filterNot(f => t.fieldNames.contains(f.name))
+        org.apache.spark.sql.types.StructType(t.fields ++ addedCols)
     }
-    widen(latestVersion(spark, path), live0) // fail fast, before the write
     val newFiles = writeBatch(spark, path, df, zCols, files, bits)
     require(newFiles.nonEmpty, "appendClustered: the write added no files")
-    val added = statsOf(spark.read.parquet(newFiles: _*), zCols)
-      .select(live0.columns.map(col): _*)
-    commitAdditive(spark, path, "append", maxAttempts)((base, live) =>
-      (live.unionByName(added), widen(base, live)))
+    commitVersion(spark, path, swapFiles(spark, live, Nil, newFiles, zCols),
+      "append", base, dataSchema = Some(schema))
   }
 
   /**
@@ -790,31 +544,15 @@ object Lakehouse {
    * that resolved "latest" a moment before this commit) keeps reading a
    * consistent, complete snapshot. [[vacuum]] reclaims the superseded
    * bytes once no retained version references them.
-   *
-   * CONCURRENCY — file-set conflict detection (the Delta model):
-   * compaction removes only files it read and adds files nobody else
-   * references, so it is COMMUTATIVE with any interleaved commit that
-   * left its read set alone. On a lost commit race, if every file this
-   * compaction read is still referenced by the new live manifest, the
-   * replacement is rebuilt against that manifest (the interlopers'
-   * work — appended batches, another range's delete or CDC merge —
-   * rides along untouched) and the commit retries at the new head.
-   * An interloper that rewrote or dropped a read-set file (a
-   * delete/upsert/compact overlapping the same small files), or a
-   * whole-table replace, stays fail-loud [[CommitConflictException]]:
-   * replaying against those could resurrect rows. The already-written
-   * compacted files are reused across retries — only the #files-row
-   * manifest commit repeats.
    */
   def compact(spark: SparkSession, path: String, zCols: Seq[String],
-      minRows: Long, files: Int, bits: Int = 16,
-      maxAttempts: Int = 10): (Int, Int) = {
-    val base0 = latestVersion(spark, path)
-    require(base0 >= 0, s"no committed lakehouse log at $path")
-    val m0 = manifestAt(spark, path, base0)
-    require(m0.columns.contains("n_rows"),
+      minRows: Long, files: Int, bits: Int = 16): (Int, Int) = {
+    val base = latestVersion(spark, path)
+    require(base >= 0, s"no committed lakehouse log at $path")
+    val m = manifestAt(spark, path, base)
+    require(m.columns.contains("n_rows"),
       s"manifest at $path has no n_rows column")
-    val small = m0.filter(col("n_rows") < minRows)
+    val small = m.filter(col("n_rows") < minRows)
       .select(col("file")).collect().map(_.getString(0)).toSeq
     if (small.size <= 1) return (0, 0)
     // read under the recorded schema: compaction NORMALIZES pre-evolution
@@ -824,75 +562,14 @@ object Lakehouse {
     // — bounded bytes by the minRows selection — should be scanned
     // once, not thrice
     val newFiles = {
-      val input = Materialize.truncate(readData(spark, path, base0, small))
+      val input = Materialize.truncate(readData(spark, path, base, small))
       try writeBatch(spark, path, input, zCols, files, bits)
       finally Materialize.release(input)
     }
-    val newStats = statsOf(spark.read.parquet(newFiles: _*), zCols)
-    onCompactBeforeCommit()
-    val fs = fsOf(spark, path)
-    val token = java.util.UUID.randomUUID().toString
-    var base = base0
-    var m = m0
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val kept = m.filter(!col("file").isin(small: _*))
-      val replacement =
-        kept.unionByName(newStats.select(kept.columns.map(col): _*))
-      try {
-        commitVersion(spark, path, replacement, "compact", base,
-          dataSchema = dataSchemaAt(spark, path, base),
-          writerToken = token)
-        return (small.size, newFiles.size)
-      } catch {
-        case e: CommitConflictException =>
-          // ambiguous rename: our commit may have landed with the error
-          // reported client-side only — never re-commit our own rows
-          if (ownsSlot(fs, path, base + 1, token))
-            return (small.size, newFiles.size)
-          val newBase = latestVersion(spark, path)
-          val interlopers = committedVersions(spark, path)
-            .filter(v => v > base && v <= newBase)
-            .map(v => (v, readCommit(fs, path, v).op))
-          // a REPLACE swapped the whole table — the read set is gone by
-          // definition (the liveness gate below would also catch it;
-          // the explicit check gives the honest diagnostic)
-          val replaced = interlopers.filter(_._2 == "replace")
-          if (replaced.nonEmpty) throw new CommitConflictException(
-            s"lakehouse log at $path: compaction lost the race to " +
-              s"whole-table REPLACE commit(s) ${replaced.map(p =>
-                s"v${p._1}").mkString(", ")} — re-run against the new head")
-          if (attempt >= maxAttempts) throw new IllegalStateException(
-            s"lakehouse log at $path: compaction lost $maxAttempts " +
-              "commit races in a row — giving up", e)
-          val newLive = manifestAt(spark, path, newBase)
-          // THE gate — file-set conflict detection: compaction removes
-          // only files it read and adds files nobody else references,
-          // so it commutes with ANY interleaved commit (append, delete,
-          // upsert, another compact) that left its read set fully live;
-          // an interloper that rewrote or dropped a file this compaction
-          // read fails here
-          val liveFiles = newLive.select(col("file")).collect()
-            .map(r => pathKey(r.getString(0))).toSet
-          val missing = small.filterNot(f => liveFiles(pathKey(f)))
-          if (missing.nonEmpty) throw new CommitConflictException(
-            s"lakehouse log at $path: compaction's read set lost " +
-              s"${missing.size} file(s) (e.g. ${missing.head}) from the " +
-              s"live manifest — concurrent commit(s) ${interlopers.map(p =>
-                s"v${p._1}:${p._2}").mkString(", ")} rewrote or dropped " +
-              "files this compaction read; re-run against the new head")
-          base = newBase
-          m = newLive
-      }
-    }
-    (-1, -1) // unreachable
+    commitVersion(spark, path, swapFiles(spark, m, small, newFiles, zCols),
+      "compact", base, dataSchema = dataSchemaAt(spark, path, base))
+    (small.size, newFiles.size)
   }
-
-  /** Test seam: invoked after the compacted files are written, before
-    * the first commit attempt — lets a spec interleave a concurrent
-    * commit deterministically into [[compact]]'s race window. */
-  private[graft] var onCompactBeforeCommit: () => Unit = () => ()
 
   /**
    * Atomic REPLACE (the INSERT OVERWRITE / CREATE OR REPLACE TABLE
@@ -907,13 +584,11 @@ object Lakehouse {
    *
    * A replace may RE-CLUSTER: `zCols` (and the schema) need not match
    * the current layout — the manifest is rebuilt whole, so downstream
-   * [[prunedRead]]s simply prune on the new columns. It is a REWRITE op:
-   * fail-loud on a commit race (replaying a whole-table swap against a
-   * moved base must be the caller's decision), and excluded from the
-   * incremental changes feed — a full rewrite cannot be expressed as
-   * appended rows. Replacing with an EMPTY frame is refused (use
-   * `deleteWhere(lit(true))` to empty a table); parquet needs at least
-   * one file to carry the new schema.
+   * [[prunedRead]]s simply prune on the new columns. It is a REWRITE op,
+   * excluded from the incremental changes feed — a full rewrite cannot
+   * be expressed as appended rows. Replacing with an EMPTY frame is
+   * refused (use `deleteWhere(lit(true))` to empty a table); parquet
+   * needs at least one file to carry the new schema.
    *
    * Like [[appendClustered]], `df` is evaluated up to three times by
    * the z-clustered write (bounds aggregation + range sampling + the
@@ -1017,17 +692,6 @@ object Lakehouse {
    * bounded by it) — a non-default cap combined with `largeBatch` logs
    * a warning so the dead parameter is visible.
    *
-   * CONCURRENCY — file-set conflict detection (the Delta model): a
-   * lost commit race is rebased when (a) every file this merge read is
-   * still live in the new manifest (an interloper rewriting one stays
-   * fail-loud) and (b) the interlopers' ADDED files' manifest stats
-   * prove no added row can carry an update key — every key column must
-   * be a clustered stats column whose added [min, max] is disjoint
-   * from the batch's key bounds on at least one column (the same
-   * stats-disjointness argument Delta uses). Appends, deletes, merges,
-   * and compactions on OTHER key ranges all rebase; overlapping or
-   * stats-less cases and whole-table replaces stay fail-loud
-   * [[CommitConflictException]]; `maxAttempts` bounds the retries.
    * Every intermediate frame this merge truncates (the batch,
    * the large-batch matched keys and splits, the survivors) is
    * RELEASED on exit — success or failure — so a caller running many
@@ -1037,7 +701,7 @@ object Lakehouse {
       keyCols: Seq[String], files: Int = 4, bits: Int = 16,
       pruneRanges: Seq[(String, Double, Double)] = Nil,
       maxProbeKeys: Long = DefaultMaxProbeKeys,
-      largeBatch: Boolean = false, maxAttempts: Int = 10): (Int, Long, Long) = {
+      largeBatch: Boolean = false): (Int, Long, Long) = {
     require(keyCols.nonEmpty, "upsertByKey: need at least one key column")
     if (largeBatch && maxProbeKeys != DefaultMaxProbeKeys)
       log.warn(s"upsertByKey: maxProbeKeys=$maxProbeKeys is IGNORED with " +
@@ -1054,49 +718,16 @@ object Lakehouse {
     val zCols = m.columns.collect {
       case c if c.startsWith("min_") => c.stripPrefix("min_")
     }.toSeq
-    // the rebase's disjointness proof: a file added by a concurrent
-    // commit (an append batch, another upsert's postimages/inserts, a
-    // delete's survivor re-files) can carry an update key only if its
-    // stats overlap the batch's key bounds on EVERY key column that has
-    // manifest stats; null file stats (an all-null key column — SQL
-    // equality never matches a null key) and null batch bounds both
-    // fall out of the overlap naturally
-    def keyAddedOverlap(added: DataFrame): Option[String] = {
-      val keyStatCols = keyCols.filter(c => m.columns.contains(s"min_$c"))
-      if (keyStatCols.isEmpty)
-        return Some(s"no key column (${keyCols.mkString(", ")}) carries " +
-          "manifest stats, so nothing bounds the added rows' keys — " +
-          "cluster on a key column (zCols) to enable the rebase")
-      val aggs = keyStatCols.flatMap(c =>
-        Seq(min(col(c)).as(s"_mn_$c"), max(col(c)).as(s"_mx_$c")))
-      val bounds = u.agg(aggs.head, aggs.tail: _*).head()
-      val overlap = keyStatCols.zipWithIndex.map { case (c, i) =>
-        col(s"max_$c") >= lit(bounds.get(2 * i)) &&
-          col(s"min_$c") <= lit(bounds.get(2 * i + 1))
-      }.reduce(_ && _)
-      val hit = added.filter(overlap).select(col("file")).limit(1).collect()
-      if (hit.isEmpty) None
-      else Some(s"added file ${hit(0).getString(0)}'s key-column " +
-        "stats overlap the update batch's key bounds")
-    }
     val fileRows = m.select(col("file"), col("n_rows")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val allFiles = fileRows.keys.toSeq
     if (allFiles.isEmpty) {
       // empty table: nothing to probe or replace — insert-all, and every
-      // written file feeds the changes feed; the batch defines the
-      // schema. Still rebase-guarded: an append interleaving the commit
-      // could introduce rows carrying batch keys, which this insert-all
-      // decision assumed absent
+      // written file feeds the changes feed; the batch defines the schema
       lastProbeScannedFiles = 0
       val newFiles = writeBatch(spark, path, u, zCols, files, bits)
-      commitRewrite(spark, path, "upsert", base, m,
-        affected = Nil,
-        newStats = Some(statsOf(spark.read.parquet(newFiles: _*), zCols)),
-        insertFiles = newFiles, postimageFiles = Nil, deleteFiles = Nil,
-        addedOverlap = keyAddedOverlap,
-        maxAttempts = maxAttempts,
-        commitSchema = Some(u.schema)) // the batch DEFINES the schema here
+      commitVersion(spark, path, swapFiles(spark, m, Nil, newFiles, zCols),
+        "upsert", base, insertFiles = newFiles, dataSchema = Some(u.schema))
       return (0, 0L, u.count())
     }
     val data = readData(spark, path, base, allFiles)
@@ -1226,12 +857,10 @@ object Lakehouse {
       else writeBatch(spark, path, ins, zCols, files, bits)
     val newFiles = survivorFiles ++ postimageFiles ++ insertFiles
     require(newFiles.nonEmpty, "upsertByKey: the rewrite added no files")
-    commitRewrite(spark, path, "upsert", base, m,
-      affected = affected,
-      newStats = Some(statsOf(spark.read.parquet(newFiles: _*), zCols)),
-      insertFiles = insertFiles, postimageFiles = postimageFiles,
-      deleteFiles = Nil, addedOverlap = keyAddedOverlap,
-      maxAttempts = maxAttempts)
+    commitVersion(spark, path, swapFiles(spark, m, affected, newFiles, zCols),
+      "upsert", base, insertFiles = insertFiles,
+      dataSchema = dataSchemaAt(spark, path, base),
+      postimageFiles = postimageFiles)
     (affected.size, replaced, u.count())
     } finally toRelease.foreach(Materialize.release)
   }
@@ -1257,19 +886,6 @@ object Lakehouse {
    * it when `pred` bounds a clustered column; a spec pins that the
    * probe then scans fewer files than the table holds.
    *
-   * CONCURRENCY — file-set conflict detection (the Delta model): a
-   * lost commit race is rebased when (a) every file this delete read
-   * is still live in the new manifest and (b) the interlopers' ADDED
-   * files' manifest stats are disjoint from `pruneRanges` — the ranges
-   * bound everything `pred` can match, so a disjoint added file
-   * provably contains no doomed row; interloper REMOVALS outside the
-   * read set only take rows away and cannot create a match. Appends,
-   * merges, deletes, and compactions on OTHER ranges all rebase. A
-   * delete WITHOUT `pruneRanges` has no bound to reason with and stays
-   * fail-loud on any race, as do overlapping added files, read-set
-   * rewrites, and whole-table replaces; `maxAttempts` bounds the
-   * retries.
-   *
    * SQL DELETE semantics: a row is removed iff `pred` is TRUE — rows
    * where it evaluates null are kept. The affected-file probe is one
    * scan over the candidate file set with `pred` pushed down (a
@@ -1289,7 +905,7 @@ object Lakehouse {
   def deleteWhere(spark: SparkSession, path: String,
       pred: org.apache.spark.sql.Column, files: Int = 4, bits: Int = 16,
       pruneRanges: Seq[(String, Double, Double)] = Nil,
-      cdf: Boolean = true, maxAttempts: Int = 10): (Int, Long) = {
+      cdf: Boolean = true): (Int, Long) = {
     val base = latestVersion(spark, path)
     require(base >= 0, s"no committed lakehouse log at $path")
     val m = manifestAt(spark, path, base)
@@ -1350,29 +966,9 @@ object Lakehouse {
           .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
           .map(s => fs.makeQualified(s.getPath).toUri.toString)
       }
-    // the rebase's disjointness proof: `pred` implies `pruneRanges` (the
-    // documented contract), so a concurrently-added file whose stats are
-    // disjoint from the ranges provably holds no row this delete should
-    // remove. selectFilesIn IS the overlap test (a file survives pruning
-    // iff it overlaps every range); no ranges ⇒ no bound ⇒ not provable.
-    def deleteAddedOverlap(added: DataFrame): Option[String] = {
-      if (pruneRanges.isEmpty)
-        return Some("the delete carries no pruneRanges, so no stats " +
-          "bound exists to prove concurrently-added rows cannot match " +
-          "the predicate (pass pruneRanges to enable the rebase)")
-      val (overlapping, _) = selectFilesIn(added, path, pruneRanges)
-      if (overlapping.isEmpty) None
-      else Some(s"${overlapping.size} added file(s) (e.g. " +
-        s"${overlapping.head}) overlap the delete's pruneRanges")
-    }
-    commitRewrite(spark, path, "delete", base, m,
-      affected = affected,
-      newStats =
-        if (newFiles.isEmpty) None
-        else Some(statsOf(spark.read.parquet(newFiles: _*), zCols)),
-      insertFiles = Nil, postimageFiles = Nil, deleteFiles = deleteFiles,
-      addedOverlap = deleteAddedOverlap,
-      maxAttempts = maxAttempts)
+    commitVersion(spark, path, swapFiles(spark, m, affected, newFiles, zCols),
+      "delete", base, dataSchema = dataSchemaAt(spark, path, base),
+      deleteFiles = deleteFiles)
     (affected.size, hits.values.sum)
     } finally Materialize.release(affFrame)
   }
@@ -1392,63 +988,29 @@ object Lakehouse {
    * unreadable either way, and failing the whole vacuum would wedge
    * maintenance until an unrelated commit moved the window.
    *
-   * CONCURRENT-APPEND SAFETY (`orphanGraceMs`): a mid-commit appender
-   * has already renamed its data files into `data/` (and may hold
-   * staging under `_stage-*` / `_log/_tmp-*`) before any manifest
-   * references them — to vacuum they are indistinguishable from crashed
-   * debris. Unreferenced files/staging YOUNGER than `orphanGraceMs` are
-   * therefore left alone (the same age-cutoff defense Delta's VACUUM
-   * retention period provides); size it above the longest plausible
-   * append's write-to-commit latency. Files SUPERSEDED by the retained
-   * window (compacted-away originals, rewritten COW inputs) are equally
-   * age-guarded — they reclaim on the next vacuum after the grace, a
-   * deliberate delay, not a leak. Pass 0 only where a concurrent writer
-   * is impossible (tests, a strictly single-writer deployment).
+   * Vacuum is one of the table's writes: it runs while no other
+   * mutation does, so every unreferenced file and staging directory is
+   * debris and goes at once.
    *
    * Contract: snapshots older than the retained window stop being
    * readable — the same retention trade Delta's `VACUUM` makes. Size
    * `retainVersions` to outlive the longest concurrent reader.
    */
   def vacuum(spark: SparkSession, path: String,
-      retainVersions: Int = 1,
-      orphanGraceMs: Long = 600000L): (Int, Int) = {
+      retainVersions: Int = 1): (Int, Int) = {
     require(retainVersions >= 1,
       s"vacuum: retainVersions must be >= 1, got $retainVersions")
     val fs = fsOf(spark, path)
     val committed = committedVersions(spark, path)
     require(committed.nonEmpty, s"no committed lakehouse log at $path")
     val retained = committed.takeRight(retainVersions)
-    // the grace cutoff compares against STORE-side modification times, so
-    // "now" must come from the store's clock, not this host's: a storage
-    // service running behind the vacuum host would otherwise silently
-    // shrink the window protecting a mid-commit appender's just-renamed
-    // files. A throwaway probe file's mtime IS the store clock; the MIN
-    // of store and local now is used so skew in either direction only
-    // ever WIDENS the effective grace (falls back to local time if the
-    // probe fails — degraded to the documented pre-probe behavior)
-    val storeNow =
-      try {
-        val probe = new Path(logDir(path),
-          s"_clock-probe-${java.util.UUID.randomUUID().toString}")
-        fs.create(probe, false).close()
-        val t = fs.getFileStatus(probe).getModificationTime
-        fs.delete(probe, false)
-        t
-      } catch { case _: Exception => Long.MaxValue }
-    val cutoff =
-      math.min(storeNow, System.currentTimeMillis()) - orphanGraceMs
-    def oldEnough(p: Path): Boolean =
-      try fs.getFileStatus(p).getModificationTime <= cutoff
-      catch { case _: java.io.FileNotFoundException => false }
     val live: Set[String] = retained.flatMap { v =>
       if (!fs.exists(new Path(versionDir(path, v), "manifest")))
         Seq.empty // already pruned by an earlier narrower vacuum
       else manifestAt(spark, path, v).select(col("file")).collect()
         .map(r => pathKey(r.getString(0))).toSeq
     }.toSet
-    val dead = listData(spark, path).toSeq
-      .filterNot(f => live(pathKey(f)))
-      .filter(f => oldEnough(new Path(new java.net.URI(f))))
+    val dead = listData(spark, path).toSeq.filterNot(f => live(pathKey(f)))
     dead.foreach(f => fs.delete(new Path(new java.net.URI(f)), false))
     val pruned = committed.dropRight(retainVersions).count { v =>
       val mp = new Path(versionDir(path, v), "manifest")
@@ -1456,20 +1018,15 @@ object Lakehouse {
     }
     fs.listStatus(new Path(logDir(path))).foreach { st =>
       st.getPath.getName match {
-        case VersionDirRe(_) if !fs.exists(new Path(st.getPath, "_commit"))
-            && oldEnough(st.getPath) =>
+        case VersionDirRe(_) if !fs.exists(new Path(st.getPath, "_commit")) =>
           fs.delete(st.getPath, true)
-        case n if n.startsWith("_tmp-") && oldEnough(st.getPath) =>
-          fs.delete(st.getPath, true)
-        case n if n.startsWith("_clock-probe-") && oldEnough(st.getPath) =>
-          fs.delete(st.getPath, false) // a crashed vacuum's clock probe
+        case n if n.startsWith("_tmp-") => fs.delete(st.getPath, true)
         case _ => ()
       }
     }
     val root = new Path(path)
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      if (st.getPath.getName.startsWith("_stage-") && oldEnough(st.getPath))
-        fs.delete(st.getPath, true)
+      if (st.getPath.getName.startsWith("_stage-")) fs.delete(st.getPath, true)
     }
     // CDF sidecar retention: delete-row files referenced only by
     // versions OUTSIDE the retained window (their feed window has
@@ -1483,9 +1040,7 @@ object Lakehouse {
         val fls =
           if (st.isFile) Seq(st)
           else fs.listStatus(st.getPath).toSeq
-        fls.filter(f => f.isFile &&
-            !liveCdf(pathKey(f.getPath.toUri.toString)) &&
-            f.getModificationTime <= cutoff)
+        fls.filter(f => f.isFile && !liveCdf(pathKey(f.getPath.toUri.toString)))
           .foreach(f => fs.delete(f.getPath, false))
         if (st.isDirectory && fs.listStatus(st.getPath).isEmpty)
           fs.delete(st.getPath, true)

@@ -60,10 +60,7 @@ object LakehouseSoak {
       Lakehouse.compact(spark, base, zCols, minRows = n / 100, files = 4))
     // compact defers deletes for snapshot isolation; vacuum is the
     // maintenance pass that reclaims the superseded bytes
-    // single-writer soak: no concurrent appender exists, so the orphan
-    // grace window (the concurrent-append defense) is safely zero here
-    val ((reclaimed, _), tVacuum) = timed(
-      Lakehouse.vacuum(spark, base, orphanGraceMs = 0))
+    val ((reclaimed, _), tVacuum) = timed(Lakehouse.vacuum(spark, base))
     val (keptAfter, filesAfter) = Lakehouse.selectFiles(spark, base, "k", 0, 99)
     val (okAfter, tSweep2) = timed(sweep())
 

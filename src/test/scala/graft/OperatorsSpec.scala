@@ -1346,7 +1346,7 @@ class OperatorsSpec extends AnyFunSuite {
     // (a reader pinned on the pre-compact snapshot still needs them)
     // until vacuum reclaims them; the LIVE manifest already dropped them
     assert(after.size === 9, s"expected 4 big + 4 superseded + 1 merged, found ${after.size}")
-    val (reclaimed, prunedManifests) = Lakehouse.vacuum(spark, dir, orphanGraceMs = 0)
+    val (reclaimed, prunedManifests) = Lakehouse.vacuum(spark, dir)
     assert(reclaimed === 4, s"vacuum reclaimed $reclaimed files, expected the 4 compacted originals")
     assert(prunedManifests === 3, s"vacuum pruned $prunedManifests superseded manifests (create + 2 appends)")
     val afterVacuum = new java.io.File(s"$dir/data").listFiles()
@@ -1453,14 +1453,14 @@ class OperatorsSpec extends AnyFunSuite {
       h.last.getAs[Long]("n_rows") === 2200L,
       s"live version should report 3 files / 2200 rows, got ${h.last}")
     // a 2-version retention keeps the pinned snapshot's files alive
-    val (r2, _) = Lakehouse.vacuum(spark, dir, retainVersions = 2, orphanGraceMs = 0)
+    val (r2, _) = Lakehouse.vacuum(spark, dir, retainVersions = 2)
     assert(r2 === 0, s"vacuum(retain=2) deleted $r2 files still referenced by v2")
     val oldRead2 = spark.read.parquet(pinned: _*)
       .filter(col("k") >= 10 && col("k") <= 19)
     assert(oldRead2.exceptAll(truth).isEmpty && truth.exceptAll(oldRead2).isEmpty,
       "retained snapshot became unreadable after vacuum(retain=2)")
     // moving the window past v2 reclaims exactly the compacted originals
-    val (r1, _) = Lakehouse.vacuum(spark, dir, retainVersions = 1, orphanGraceMs = 0)
+    val (r1, _) = Lakehouse.vacuum(spark, dir, retainVersions = 1)
     assert(r1 === 2, s"vacuum(retain=1) reclaimed $r1 files, expected the 2 small appends")
     val liveRead2 = Lakehouse.prunedRead(spark, dir, "k", 10, 19)
     assert(liveRead2.exceptAll(truth).isEmpty && truth.exceptAll(liveRead2).isEmpty,
@@ -1493,20 +1493,28 @@ class OperatorsSpec extends AnyFunSuite {
       dataDir.toPath.resolve("part-orphan-crashed-append.snappy.parquet"))
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$dir/_log/v0000000007"))
-    // reads go through the manifest's explicit file list, so neither
-    // plant is visible — and the marker-less dir is not "latest"
+    // and the staging a crashed batch write and a crashed commit leave
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$dir/_stage-crashed/part-x"))
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$dir/_log/_tmp-crashed/manifest"))
+    // reads go through the manifest's explicit file list, so no plant is
+    // visible — and the marker-less dir is not "latest"
     assert(Lakehouse.latestVersion(spark, dir) === 0L)
     val truth = mk(0, 1000).filter(col("k") >= 10 && col("k") <= 19)
     val before = Lakehouse.prunedRead(spark, dir, "k", 10, 19)
     assert(before.exceptAll(truth).isEmpty && truth.exceptAll(before).isEmpty,
       "orphan file leaked into a manifest-pruned read")
-    val (reclaimed, prunedManifests) = Lakehouse.vacuum(spark, dir, orphanGraceMs = 0)
+    val (reclaimed, prunedManifests) = Lakehouse.vacuum(spark, dir)
     assert(reclaimed === 1, s"vacuum reclaimed $reclaimed files, expected the 1 orphan")
     assert(prunedManifests === 0)
     assert(!dataDir.listFiles().exists(_.getName.contains("orphan")),
       "orphan data file survived vacuum")
     assert(!new java.io.File(s"$dir/_log/v0000000007").exists(),
       "crashed-attempt version dir survived vacuum")
+    assert(!new java.io.File(s"$dir/_stage-crashed").exists() &&
+      !new java.io.File(s"$dir/_log/_tmp-crashed").exists(),
+      "crashed staging survived vacuum")
     val after = Lakehouse.prunedRead(spark, dir, "k", 10, 19)
     assert(after.exceptAll(truth).isEmpty && truth.exceptAll(after).isEmpty,
       "vacuum changed a live read")
@@ -1557,7 +1565,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Lakehouse.deleteWhere(spark, dir, col("k") === 12345) === ((0, 0L)))
     assert(Lakehouse.latestVersion(spark, dir) === v)
     // vacuum reclaims exactly the rewritten originals; live unchanged
-    val (freed, _) = Lakehouse.vacuum(spark, dir, orphanGraceMs = 0)
+    val (freed, _) = Lakehouse.vacuum(spark, dir)
     assert(freed === rw, s"vacuum reclaimed $freed, expected $rw")
     val live2 = Lakehouse.prunedRead(spark, dir, "k", 0, 99)
     assert(live2.exceptAll(truth).isEmpty && truth.exceptAll(live2).isEmpty,
@@ -1618,426 +1626,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Lakehouse.latestVersion(spark, dir) === v)
   }
 
-  test("lakehouse: two interleaved appenders both land on a linear log") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-race").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(100)).as("k"), col("id").as("t"))
-    Lakehouse.writeClustered(mk(0, 1000), dir, Seq("k", "t"), files = 2)
-    // the stream + nightly-backfill shape: two writers, 3 batches each,
-    // racing for version slots — optimistic retry must land ALL of them
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val futs = (0 until 2).map { w =>
-      pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = {
-          gate.await()
-          (0 until 3).foreach { i =>
-            val lo = 1000 + (w * 3 + i) * 1000
-            Lakehouse.appendClustered(mk(lo, lo + 1000), dir, Seq("k", "t"),
-              files = 1, maxAttempts = 50)
-          }
-        }
-      })
-    }
-    gate.countDown()
-    futs.foreach(_.get()) // propagates a lost-forever race or any error
-    pool.shutdown()
-    // 1 create + 6 appends on a LINEAR log: contiguous versions, no gaps
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    val hDump = h.map(r => s"v${r.getLong(0)}:${r.getString(1)}" +
-      s"(${r.getAs[Long]("n_files")}f/${r.getAs[Long]("n_rows")}r)").mkString(", ")
-    assert(h.map(_.getLong(0)).toSeq === (0L to 6L),
-      s"log is not linear — history: $hDump")
-    assert(h.count(_.getString(1) == "append") === 6,
-      s"an appender's commit was lost — history: $hDump")
-    // the live snapshot is the exact union of every batch
-    val truth = mk(0, 7000)
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 99)
-    val lost = truth.exceptAll(live).count()
-    val extra = live.exceptAll(truth).count()
-    assert(lost == 0 && extra == 0,
-      s"concurrent appends lost $lost / duplicated $extra rows — " +
-        s"history: $hDump")
-    // no manifest row claims another writer's file (the listing-diff bug)
-    val files = Lakehouse.readManifest(spark, dir)
-      .select(col("file")).collect().map(_.getString(0))
-    assert(files.distinct.length === files.length,
-      "a data file appears in the manifest more than once")
-  }
-
-  test("lakehouse: compaction retries through a concurrent append — both land, log linear") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-capp").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(100)).as("k"), col("id").as("t"))
-    Lakehouse.writeClustered(mk(0, 100), dir, Seq("k", "t"), files = 1)   // v0
-    Lakehouse.appendClustered(mk(100, 200), dir, Seq("k", "t"), files = 1) // v1
-    Lakehouse.appendClustered(mk(200, 300), dir, Seq("k", "t"), files = 1) // v2
-    // the production shape: in-stream maintenance compacts while the
-    // nightly backfill appends — the appender takes the slot INSIDE
-    // compaction's race window (deterministically, via the test seam),
-    // and compaction must retry against the new head instead of dying
-    try {
-      Lakehouse.onCompactBeforeCommit = () => {
-        Lakehouse.onCompactBeforeCommit = () => () // fire once
-        Lakehouse.appendClustered(mk(300, 400), dir, Seq("k", "t"),
-          files = 1)                                                     // v3
-      }
-      val (c, w) = Lakehouse.compact(spark, dir, Seq("k", "t"),
-        minRows = 1000, files = 1)                                       // v4
-      assert(c === 3 && w === 1, s"compacted $c -> $w")
-    } finally Lakehouse.onCompactBeforeCommit = () => ()
-    // BOTH landed, on a linear log
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    assert(h.map(_.getLong(0)).toSeq === (0L to 4L) &&
-      h.map(_.getString(1)).toSeq ===
-        Seq("create", "append", "append", "append", "compact"),
-      s"history drifted: ${h.map(r =>
-        s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")}")
-    // the union is exact: nothing lost, nothing doubled
-    val truth = mk(0, 400)
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 99)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      "compact-vs-append interleave lost or duplicated rows")
-    // the interleaved append's file rode along; the 3 compacted
-    // originals are dereferenced (2 files live: append's + compacted)
-    assert(Lakehouse.readManifest(spark, dir).count() === 2)
-    // an interloper that rewrites a file compaction READ (here a
-    // delete hitting the compacted file) stays fail-loud via the
-    // read-set liveness gate — the file-set conflict, detected
-    try {
-      Lakehouse.onCompactBeforeCommit = () => {
-        Lakehouse.onCompactBeforeCommit = () => ()
-        Lakehouse.deleteWhere(spark, dir, col("t") === 5L, files = 1)
-      }
-      val e = intercept[Lakehouse.CommitConflictException](
-        Lakehouse.compact(spark, dir, Seq("k", "t"),
-          minRows = 1000, files = 1))
-      assert(e.getMessage.contains("rewrote or dropped"), e.getMessage)
-    } finally Lakehouse.onCompactBeforeCommit = () => ()
-  }
-
-  test("lakehouse: compact races a live appender thread — both land, union exact") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-tcap").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(100)).as("k"), col("id").as("t"))
-    // 4 small files for compaction to merge
-    Lakehouse.writeClustered(mk(0, 200), dir, Seq("k", "t"), files = 1)
-    (1 to 3).foreach(i => Lakehouse.appendClustered(
-      mk(i * 200L, i * 200L + 200), dir, Seq("k", "t"), files = 1))
-    // unlike the seam-driven spec above, this is a REAL race: an
-    // appender thread fires 3 backfill batches while compact runs —
-    // whoever loses a slot retries (appends via commitAdditive, compact
-    // via its append-only retry loop); the schedule is whatever the
-    // box gives us, and EVERY schedule must end with all 4 commits
-    // landed and the union exact
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val appender = pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = {
-        gate.await()
-        (0 until 3).foreach { i =>
-          val lo = 800L + i * 1000L
-          Lakehouse.appendClustered(mk(lo, lo + 1000), dir, Seq("k", "t"),
-            files = 1, maxAttempts = 50)
-        }
-      }
-    })
-    val compactor = pool.submit(
-      new java.util.concurrent.Callable[(Int, Int)] {
-        def call(): (Int, Int) = {
-          gate.await()
-          Lakehouse.compact(spark, dir, Seq("k", "t"), minRows = 500,
-            files = 1, maxAttempts = 50)
-        }
-      })
-    gate.countDown()
-    appender.get()
-    val (c, w) = compactor.get()
-    pool.shutdown()
-    assert(c === 4 && w === 1, s"compacted $c -> $w")
-    // linear log: 1 create + 3 setup appends + 3 raced appends + 1 compact
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    val hDump = h.map(r =>
-      s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")
-    assert(h.map(_.getLong(0)).toSeq === (0L to 7L),
-      s"log is not linear — history: $hDump")
-    assert(h.count(_.getString(1) == "append") === 6 &&
-      h.count(_.getString(1) == "compact") === 1,
-      s"a raced commit was lost — history: $hDump")
-    // nothing lost, nothing doubled, under every interleave
-    val truth = mk(0, 800).unionByName(mk(800, 1800))
-      .unionByName(mk(1800, 2800)).unionByName(mk(2800, 3800))
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 99)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      s"compact-vs-append thread race lost or duplicated rows — $hDump")
-    // the 4 small originals are gone; the raced appends' files survive
-    val files = Lakehouse.readManifest(spark, dir)
-      .select(col("file")).collect().map(_.getString(0))
-    assert(files.length === 4 && files.distinct.length === 4,
-      s"manifest drifted: ${files.length} files")
-  }
-
-  test("lakehouse: deleteWhere rebases through a stats-disjoint append — both land") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-drb").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      col("id").as("k"), (col("id") % 7).as("t"),
-      (col("id") * 10).cast("double").as("v"))
-    Lakehouse.writeClustered(mk(0, 1000), dir, Seq("k", "t"), files = 4) // v0
-    // a pure append whose key range [5000, 6000) is provably disjoint
-    // from the delete's pruneRanges [100, 299] steals the slot inside
-    // the rewrite's race window — the delete must REBASE and commit
-    // with the appended rows riding along, not die
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => () // fire once
-        Lakehouse.appendClustered(mk(5000, 6000), dir, Seq("k", "t"),
-          files = 1)                                                    // v1
-      }
-      val (fw, nd) = Lakehouse.deleteWhere(spark, dir,
-        col("k") >= 100 && col("k") < 300,
-        pruneRanges = Seq(("k", 100, 299)))                             // v2
-      assert(nd === 200L, s"deleted $nd rows")
-      assert(fw >= 1)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-    // BOTH landed, on a linear log
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    assert(h.map(_.getLong(0)).toSeq === (0L to 2L) &&
-      h.map(_.getString(1)).toSeq === Seq("create", "append", "delete"),
-      s"history drifted: ${h.map(r =>
-        s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")}")
-    // union exact: base minus the deleted band plus the appended rows
-    val truth = mk(0, 100).unionByName(mk(300, 1000))
-      .unionByName(mk(5000, 6000))
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      "delete-vs-append rebase lost or duplicated rows")
-    // the CDF sidecar survived the rebase: the feed retracts exactly
-    // the deleted band
-    val dels = Lakehouse.changesDetailed(spark, dir, 1)
-      .filter(col("_change_type") === "delete")
-    assert(dels.count() === 200L, "rebased delete's CDF drifted")
-    // an OVERLAPPING append (keys inside the delete's ranges) stays
-    // fail-loud: it could carry rows the predicate matches
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        Lakehouse.appendClustered(mk(5050, 5060), dir, Seq("k", "t"),
-          files = 1)                                                    // v3
-      }
-      val e = intercept[Lakehouse.CommitConflictException](
-        Lakehouse.deleteWhere(spark, dir,
-          col("k") >= 5000 && col("k") < 5100,
-          pruneRanges = Seq(("k", 5000, 5099))))
-      assert(e.getMessage.contains("not provably disjoint"), e.getMessage)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-    // and a delete WITHOUT pruneRanges has no bound to reason with:
-    // fail-loud even though this append is in fact disjoint
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        Lakehouse.appendClustered(mk(9000, 9100), dir, Seq("k", "t"),
-          files = 1)
-      }
-      val e = intercept[Lakehouse.CommitConflictException](
-        Lakehouse.deleteWhere(spark, dir, col("k") === 1L))
-      assert(e.getMessage.contains("pruneRanges"), e.getMessage)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-  }
-
-  test("lakehouse: upsertByKey rebases through a key-disjoint append — both land") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-urb").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      col("id").as("k"), (col("id") % 7).as("t"),
-      (col("id") * 10).cast("double").as("v"))
-    Lakehouse.writeClustered(mk(0, 1000), dir, Seq("k", "t"), files = 4) // v0
-    // batch keys span [500, 1200): 500 replaced + 200 inserted; the
-    // interloping append's keys [5000, 6000) are provably outside that
-    // bound, so no appended row can carry an update key — rebase
-    val ups = mk(500, 1200).withColumn("v", col("v") * -1)
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        Lakehouse.appendClustered(mk(5000, 6000), dir, Seq("k", "t"),
-          files = 1)                                                    // v1
-      }
-      val (rw, repl, ins) = Lakehouse.upsertByKey(spark, dir, ups,
-        Seq("k"))                                                       // v2
-      assert(repl === 500L && ins === 700L,
-        s"upsert drifted through the rebase: ($rw, $repl, $ins)")
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    assert(h.map(_.getLong(0)).toSeq === (0L to 2L) &&
-      h.map(_.getString(1)).toSeq === Seq("create", "append", "upsert"),
-      s"history drifted: ${h.map(r =>
-        s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")}")
-    val truth = mk(0, 500).unionByName(ups).unionByName(mk(5000, 6000))
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      "upsert-vs-append rebase lost or duplicated rows")
-    // the feed survived the rebase: the upsert's inserts are exactly
-    // the keys absent from the base table
-    val fed = Lakehouse.changesDetailed(spark, dir, 1)
-      .filter(col("_change_type") === "insert" && col("_version") === 2L)
-    assert(fed.count() === 200L, "rebased upsert's insert feed drifted")
-    // an append whose keys OVERLAP the batch's key bounds stays
-    // fail-loud: it could carry a key this merge decided to insert
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        Lakehouse.appendClustered(mk(5500, 5510), dir, Seq("k", "t"),
-          files = 1)                                                    // v3
-      }
-      val e = intercept[Lakehouse.CommitConflictException](
-        Lakehouse.upsertByKey(spark, dir,
-          mk(5400, 5600).withColumn("v", lit(0.0)), Seq("k")))
-      assert(e.getMessage.contains("not provably disjoint"), e.getMessage)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-    // a key column with NO manifest stats (not a zCol) has no bound at
-    // all: fail-loud with the cluster-on-a-key-column diagnostic
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        Lakehouse.appendClustered(mk(9000, 9100), dir, Seq("k", "t"),
-          files = 1)
-      }
-      val e = intercept[Lakehouse.CommitConflictException](
-        Lakehouse.upsertByKey(spark, dir,
-          mk(0, 10).withColumn("v", lit(-1.0)), Seq("v")))
-      assert(e.getMessage.contains("manifest stats"), e.getMessage)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-  }
-
-  test("lakehouse: file-set conflicts — compact rebases through a delete on OTHER files") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-cxd").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      col("id").as("k"), (col("id") % 7).as("t"),
-      (col("id") * 10).cast("double").as("v"))
-    // one big file (the delete's target) + two small files (compaction's
-    // read set) — the file sets are disjoint by construction
-    Lakehouse.writeClustered(mk(0, 5000), dir, Seq("k", "t"), files = 1) // v0
-    Lakehouse.appendClustered(mk(5000, 5200), dir, Seq("k", "t"), files = 1) // v1
-    Lakehouse.appendClustered(mk(5200, 5400), dir, Seq("k", "t"), files = 1) // v2
-    try {
-      Lakehouse.onCompactBeforeCommit = () => {
-        Lakehouse.onCompactBeforeCommit = () => ()
-        // rewrites ONLY the big file — compaction's small files stay live
-        val (fw, nd) = Lakehouse.deleteWhere(spark, dir,
-          col("k") >= 100 && col("k") < 200, files = 1)          // v3
-        assert(fw === 1 && nd === 100L)
-      }
-      val (c, w) = Lakehouse.compact(spark, dir, Seq("k", "t"),
-        minRows = 1000, files = 1)                               // v4
-      assert(c === 2 && w === 1, s"compacted $c -> $w")
-    } finally Lakehouse.onCompactBeforeCommit = () => ()
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    assert(h.map(_.getString(1)).toSeq ===
-      Seq("create", "append", "append", "delete", "compact"),
-      s"history drifted: ${h.map(r =>
-        s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")}")
-    val truth = mk(0, 100).unionByName(mk(200, 5400))
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      "compact-vs-delete interleave lost or duplicated rows")
-  }
-
-  test("lakehouse: file-set conflicts — delete and upsert rebase through rewrites on OTHER files") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-xop").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      col("id").as("k"), (col("id") % 7).as("t"),
-      (col("id") * 10).cast("double").as("v"))
-    // two append batches -> file sets split cleanly at k = 500
-    Lakehouse.writeClustered(mk(0, 500), dir, Seq("k", "t"), files = 2)  // v0
-    Lakehouse.appendClustered(mk(500, 1000), dir, Seq("k", "t"),
-      files = 2)                                                         // v1
-    // an upsert of keys [0, 100) rebases through an interloping DELETE
-    // of [600, 700): disjoint read sets (different append batches),
-    // and the delete's survivor re-files carry k >= 500 — provably
-    // outside the upsert's key bounds
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        val (_, nd) = Lakehouse.deleteWhere(spark, dir,
-          col("k") >= 600 && col("k") < 700,
-          pruneRanges = Seq(("k", 600, 699)), files = 1)          // v2
-        assert(nd === 100L)
-      }
-      val (_, repl, tot) = Lakehouse.upsertByKey(spark, dir,
-        mk(0, 100).withColumn("v", col("v") * -1), Seq("k"),
-        files = 1)                                                // v3
-      assert(repl === 100L && tot === 100L)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    assert(h.map(_.getString(1)).toSeq ===
-      Seq("create", "append", "delete", "upsert"),
-      s"history drifted: ${h.map(r =>
-        s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")}")
-    val truth = mk(0, 100).withColumn("v", col("v") * -1)
-      .unionByName(mk(100, 600)).unionByName(mk(700, 1000))
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      "upsert-vs-delete interleave lost or duplicated rows")
-    // a delete rebases through an interloping COMPACT of other files:
-    // plant two small low-range batches, then delete a high band while
-    // compaction merges the low files — the compaction output's stats
-    // (k < 100) are provably outside the delete's ranges
-    Lakehouse.appendClustered(mk(0, 50).withColumn("k", col("k") + 10000),
-      dir, Seq("k", "t"), files = 1)                              // v4
-    Lakehouse.appendClustered(mk(50, 100).withColumn("k", col("k") + 10000),
-      dir, Seq("k", "t"), files = 1)                              // v5
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        val (c, w) = Lakehouse.compact(spark, dir, Seq("k", "t"),
-          minRows = 60, files = 1)                                // v6
-        assert(c === 2 && w === 1, s"compacted $c -> $w")
-      }
-      val (_, nd) = Lakehouse.deleteWhere(spark, dir,
-        col("k") >= 800 && col("k") < 900,
-        pruneRanges = Seq(("k", 800, 899)), files = 1)            // v7
-      assert(nd === 100L)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-    val h2 = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    assert(h2.map(_.getString(1)).drop(4).toSeq ===
-      Seq("append", "append", "compact", "delete"),
-      s"history drifted: ${h2.map(r =>
-        s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")}")
-    // an interloping upsert INSERTING keys that overlap OUR insert
-    // bounds stays fail-loud: both merges decided those keys were
-    // absent — committing both would duplicate them
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        Lakehouse.upsertByKey(spark, dir,
-          mk(0, 50).withColumn("k", col("k") + 20050), Seq("k"))
-      }
-      val e = intercept[Lakehouse.CommitConflictException](
-        Lakehouse.upsertByKey(spark, dir,
-          mk(0, 100).withColumn("k", col("k") + 20000), Seq("k")))
-      assert(e.getMessage.contains("not provably disjoint"), e.getMessage)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-    // and an interloper that rewrites a file THIS op read fails via the
-    // read-set liveness gate, whatever its added files look like
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        // rewrites the low-range file the outer delete also probed
-        Lakehouse.deleteWhere(spark, dir, col("k") === 10001L, files = 1)
-      }
-      val e = intercept[Lakehouse.CommitConflictException](
-        Lakehouse.deleteWhere(spark, dir,
-          col("k") >= 10000 && col("k") < 10010,
-          pruneRanges = Seq(("k", 10000, 10009)), files = 1))
-      assert(e.getMessage.contains("rewrote or dropped"), e.getMessage)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-  }
-
   test("lakehouse: insert-all into an emptied table records the BATCH's schema") {
     import graft.operators.Lakehouse
     val dir = java.nio.file.Files.createTempDirectory("graft-lh-eschema").toString
@@ -2059,245 +1647,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(live.count() === 50 &&
       live.filter(col("w") === col("k") * 2).count() === 50,
       "the added column's values did not survive the read")
-  }
-
-  test("lakehouse: empty-table insert-all racing an append fails loud iff the batch schema diverges") {
-    import graft.operators.Lakehouse
-    def mk(dir: String) = {
-      def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(
-        col("id").as("k"), (col("id") % 7).as("t"),
-        (col("id") * 10).cast("double").as("v"))
-      Lakehouse.writeClustered(rows(0, 100), dir, Seq("k", "t"), files = 1)
-      Lakehouse.deleteWhere(spark, dir,
-        org.apache.spark.sql.functions.lit(true), files = 1) // empty table
-      rows _
-    }
-    // DIVERGING batch schema (extra column, legal against the empty
-    // table) + a concurrent append of base-schema rows: rebasing would
-    // record the batch's schema over the appended rows — must fail loud
-    locally {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lh-esr1").toString
-      val rows = mk(dir)
-      try {
-        Lakehouse.onRewriteBeforeCommit = () => {
-          Lakehouse.onRewriteBeforeCommit = () => ()
-          Lakehouse.appendClustered(rows(5000, 5100), dir, Seq("k", "t"),
-            files = 1)
-        }
-        val ups = rows(0, 50).withColumn("w", col("k") * 2)
-        val e = intercept[Lakehouse.CommitConflictException](
-          Lakehouse.upsertByKey(spark, dir, ups, Seq("k"), files = 1))
-        assert(e.getMessage.contains("schema"), e.getMessage)
-      } finally Lakehouse.onRewriteBeforeCommit = () => ()
-      // the appended rows survive under their own (base) schema
-      val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-      assert(live.count() === 100 && !live.columns.contains("w"))
-    }
-    // SAME batch schema: the race rebases (keys disjoint from the
-    // appended file's stats), both land
-    locally {
-      val dir = java.nio.file.Files.createTempDirectory("graft-lh-esr2").toString
-      val rows = mk(dir)
-      try {
-        Lakehouse.onRewriteBeforeCommit = () => {
-          Lakehouse.onRewriteBeforeCommit = () => ()
-          Lakehouse.appendClustered(rows(5000, 5100), dir, Seq("k", "t"),
-            files = 1)
-        }
-        val (rw, repl, ins) =
-          Lakehouse.upsertByKey(spark, dir, rows(0, 50), Seq("k"), files = 1)
-        assert(rw === 0 && repl === 0L && ins === 50L, s"($rw, $repl, $ins)")
-      } finally Lakehouse.onRewriteBeforeCommit = () => ()
-      val truth = rows(0, 50).unionByName(rows(5000, 5100))
-      val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-      assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-        "same-schema insert-all rebase lost or duplicated rows")
-    }
-  }
-
-  test("lakehouse: a no-bound delete rebases through a pure-removal interleave") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-prm").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      col("id").as("k"), (col("id") % 7).as("t"),
-      (col("id") * 10).cast("double").as("v"))
-    Lakehouse.writeClustered(mk(0, 1000), dir, Seq("k", "t"), files = 2) // v0
-    Lakehouse.appendClustered(mk(2000, 2100), dir, Seq("k", "t"),
-      files = 1)                                                         // v1
-    // the interloper removes the v1 file WHOLE (no survivors, no CDF
-    // sidecar in the manifest): it ADDS nothing — so even a delete with
-    // no pruneRanges (no stats bound at all) can rebase: liveness covers
-    // the removal, and there are no added rows to reason about
-    try {
-      Lakehouse.onRewriteBeforeCommit = () => {
-        Lakehouse.onRewriteBeforeCommit = () => ()
-        val (fw, nd) = Lakehouse.deleteWhere(spark, dir,
-          col("k") >= 2000, files = 1, cdf = false)                // v2
-        assert(fw === 1 && nd === 100L)
-      }
-      val (_, nd) = Lakehouse.deleteWhere(spark, dir, col("k") === 5L,
-        files = 1)                                                 // v3
-      assert(nd === 1L)
-    } finally Lakehouse.onRewriteBeforeCommit = () => ()
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    assert(h.map(_.getString(1)).toSeq ===
-      Seq("create", "append", "delete", "delete"),
-      s"history drifted: ${h.map(r =>
-        s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")}")
-    val truth = mk(0, 5).unionByName(mk(6, 1000))
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      "pure-removal rebase lost or duplicated rows")
-  }
-
-  test("lakehouse: deleteWhere races a live disjoint-appender thread — both land, union exact") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-tdrb").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      col("id").as("k"), (col("id") % 7).as("t"),
-      (col("id") * 10).cast("double").as("v"))
-    Lakehouse.writeClustered(mk(0, 1000), dir, Seq("k", "t"), files = 4)
-    // unlike the seam-driven spec, this is a REAL race: an appender
-    // thread lands 3 batches (keys 10000+, provably outside the
-    // delete's pruneRanges) while the delete runs — whatever the
-    // schedule, the delete must rebase through every interleaved
-    // append and ALL 4 commits land
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val appender = pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = {
-        gate.await()
-        (0 until 3).foreach { i =>
-          val lo = 10000L + i * 1000
-          Lakehouse.appendClustered(mk(lo, lo + 1000), dir, Seq("k", "t"),
-            files = 1, maxAttempts = 50)
-        }
-      }
-    })
-    val deleter = pool.submit(new java.util.concurrent.Callable[(Int, Long)] {
-      def call(): (Int, Long) = {
-        gate.await()
-        Lakehouse.deleteWhere(spark, dir,
-          col("k") >= 100 && col("k") < 300,
-          pruneRanges = Seq(("k", 100, 299)), maxAttempts = 50)
-      }
-    })
-    gate.countDown()
-    appender.get()
-    val (_, nd) = deleter.get()
-    pool.shutdown()
-    assert(nd === 200L, s"deleted $nd rows")
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    val hDump = h.map(r =>
-      s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")
-    assert(h.map(_.getLong(0)).toSeq === (0L to 4L),
-      s"log is not linear — history: $hDump")
-    assert(h.count(_.getString(1) == "append") === 3 &&
-      h.count(_.getString(1) == "delete") === 1,
-      s"a raced commit was lost — history: $hDump")
-    val truth = mk(0, 100).unionByName(mk(300, 1000))
-      .unionByName(mk(10000, 13000))
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      s"delete-vs-append thread race lost or duplicated rows — $hDump")
-  }
-
-  test("lakehouse: upsertByKey races a live disjoint-appender thread — both land, union exact") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-turb").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      col("id").as("k"), (col("id") % 7).as("t"),
-      (col("id") * 10).cast("double").as("v"))
-    Lakehouse.writeClustered(mk(0, 1000), dir, Seq("k", "t"), files = 4)
-    // a REAL race: 3 appends of keys [10000, 13000) — provably outside
-    // the merge's key bounds [0, 1200) — land while the upsert runs;
-    // every schedule must end with all 4 commits on a linear log
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val appender = pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = {
-        gate.await()
-        (0 until 3).foreach { i =>
-          val lo = 10000L + i * 1000
-          Lakehouse.appendClustered(mk(lo, lo + 1000), dir, Seq("k", "t"),
-            files = 1, maxAttempts = 50)
-        }
-      }
-    })
-    val ups = mk(500, 1200).withColumn("v", col("v") * -1)
-    val merger = pool.submit(
-      new java.util.concurrent.Callable[(Int, Long, Long)] {
-        def call(): (Int, Long, Long) = {
-          gate.await()
-          Lakehouse.upsertByKey(spark, dir, ups, Seq("k"), maxAttempts = 50)
-        }
-      })
-    gate.countDown()
-    appender.get()
-    val (_, repl, tot) = merger.get()
-    pool.shutdown()
-    assert(repl === 500L && tot === 700L,
-      s"raced upsert drifted: ($repl, $tot)")
-    val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
-    val hDump = h.map(r =>
-      s"v${r.getLong(0)}:${r.getString(1)}").mkString(", ")
-    assert(h.map(_.getLong(0)).toSeq === (0L to 4L),
-      s"log is not linear — history: $hDump")
-    assert(h.count(_.getString(1) == "append") === 3 &&
-      h.count(_.getString(1) == "upsert") === 1,
-      s"a raced commit was lost — history: $hDump")
-    val truth = mk(0, 500).unionByName(ups).unionByName(mk(10000, 13000))
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      s"upsert-vs-append thread race lost or duplicated rows — $hDump")
-  }
-
-  test("lakehouse: vacuum never reclaims a live appender's just-renamed files") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-vrace").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(100)).as("k"), col("id").as("t"))
-    Lakehouse.writeClustered(mk(0, 100), dir, Seq("k", "t"), files = 1)
-    // an appender thread lands 20 batches while the main thread runs a
-    // vacuum loop with a production-sized orphan grace: a mid-commit
-    // appender's just-renamed (not yet manifest-referenced) data files
-    // look exactly like crashed debris, and ONLY the grace cutoff
-    // protects them — any reclaim here surfaces as lost rows or a
-    // FileNotFound at the final read
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val appender = pool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit =
-        (0 until 20).foreach { i =>
-          Lakehouse.appendClustered(mk(100L + i * 100, 200L + i * 100),
-            dir, Seq("k", "t"), files = 1, maxAttempts = 50)
-        }
-    })
-    var vacuums = 0
-    while (!appender.isDone || vacuums < 20) {
-      Lakehouse.vacuum(spark, dir, retainVersions = 1,
-        orphanGraceMs = 600000L)
-      vacuums += 1
-      // breathe: an unthrottled vacuum loop starves the appender's jobs
-      // on the shared local scheduler without exercising anything more
-      Thread.sleep(50L)
-    }
-    appender.get()
-    pool.shutdown()
-    assert(vacuums >= 20, s"only $vacuums vacuum iterations ran")
-    // nothing lost: every batch's rows are live, and every
-    // manifest-referenced file still exists on disk
-    val truth = mk(0, 2100)
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 99)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      s"vacuum racing $vacuums iterations against a live appender lost " +
-        "or duplicated rows")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Lakehouse.readManifest(spark, dir).select(col("file")).collect()
-      .foreach { r =>
-        val p = new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0)))
-        assert(fs.exists(p), s"vacuum reclaimed live file $p")
-      }
   }
 
   test("lakehouse: upsertByKey refuses an over-contract update batch at the boundary") {
@@ -2488,7 +1837,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the retention contract, not feed a partial window
     Lakehouse.appendClustered(mk(400, 450), dir, Seq("k", "t"), files = 1) // v1
     Lakehouse.appendClustered(mk(450, 500), dir, Seq("k", "t"), files = 1) // v2
-    Lakehouse.vacuum(spark, dir, retainVersions = 1, orphanGraceMs = 0)
+    Lakehouse.vacuum(spark, dir, retainVersions = 1)
     val eBehind = intercept[IllegalStateException](
       Lakehouse.changesDetailed(spark, dir, v0).collect())
     assert(eBehind.getMessage.contains("retention window"),
@@ -2501,31 +1850,6 @@ class OperatorsSpec extends AnyFunSuite {
     val want = mk(500, 550)
     assert(feed.exceptAll(want).isEmpty && want.exceptAll(feed).isEmpty,
       "the resumed feed after a re-sync drifted")
-  }
-
-  test("lakehouse: a compaction that loses to a whole-table REPLACE fails loudly; the table stays exact") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-esc").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(100)).as("k"), col("id").as("t"))
-    Lakehouse.writeClustered(mk(0, 100), dir, Seq("k", "t"), files = 2)
-    // a REPLACE (non-append rewrite — compaction cannot rebase through
-    // it) steals the slot inside compaction's commit window
-    try {
-      Lakehouse.onCompactBeforeCommit = () => {
-        Lakehouse.onCompactBeforeCommit = () => ()
-        Lakehouse.replaceClustered(mk(0, 100), dir, Seq("k", "t"), files = 2)
-      }
-      val e = intercept[Lakehouse.CommitConflictException](
-        Lakehouse.compact(spark, dir, Seq("k", "t"), minRows = 1000, files = 2))
-      assert(e.getMessage.contains("REPLACE"), e.getMessage)
-    } finally Lakehouse.onCompactBeforeCommit = () => ()
-    // the next compaction runs clean
-    Lakehouse.compact(spark, dir, Seq("k", "t"), minRows = 1000, files = 2)
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 99)
-    val truth = mk(0, 100)
-    assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
-      "the raced compaction drifted the table")
   }
 
   test("lakehouse: history is a pure marker replay — zero Spark jobs") {
@@ -2696,7 +2020,7 @@ class OperatorsSpec extends AnyFunSuite {
     Lakehouse.appendClustered(mk(700, 800), dir, Seq("k", "t"), files = 1) // v3
     // retained window now covers v1..v3, but v1's manifest is gone — the
     // re-widened vacuum must skip it, not wedge until an unrelated commit
-    val (_, pruned) = Lakehouse.vacuum(spark, dir, retainVersions = 3, orphanGraceMs = 0)
+    val (_, pruned) = Lakehouse.vacuum(spark, dir, retainVersions = 3)
     assert(pruned === 0)
     val truth = mk(0, 800)
     val live = Lakehouse.prunedRead(spark, dir, "k", 0, 49)
@@ -2733,7 +2057,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Lakehouse.changesSince(spark, dir, v0).isEmpty,
       "replace leaked into the incremental changes feed")
     // vacuum reclaims the superseded files; the live read is unharmed
-    val (reclaimed, _) = Lakehouse.vacuum(spark, dir, retainVersions = 1, orphanGraceMs = 0)
+    val (reclaimed, _) = Lakehouse.vacuum(spark, dir, retainVersions = 1)
     assert(reclaimed === 4, s"vacuum reclaimed $reclaimed of 4 old files")
     val live2 = Lakehouse.prunedRead(spark, dir, "t", 0, 1e9)
     assert(live2.exceptAll(fresh).isEmpty && fresh.exceptAll(live2).isEmpty,
@@ -2746,28 +2070,104 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("lakehouse: a rewrite that lost the race fails loudly with nothing visible") {
     import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-conflict").toString
+    CommitRaceFs.register(spark.sparkContext.hadoopConfiguration)
     def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(50)).as("k"), col("id").as("t"))
+      col("id").as("k"), (col("id") % 7).as("t"))
+    // each op resolves its base, then a second writer's append takes
+    // base+1 just before the op's commit rename: the op throws, and the
+    // table holds the winner's rows only, with no staging debris
+    def lostRace(name: String)(op: String => Any): Unit = {
+      val local = java.nio.file.Files.createTempDirectory(s"graft-lh-lost-$name").toString
+      val dir = "racefs://" + local
+      Lakehouse.writeClustered(mk(0, 400), dir, Seq("k", "t"), files = 2)   // v0
+      Lakehouse.appendClustered(mk(400, 450), dir, Seq("k", "t"), files = 1) // v1
+      Lakehouse.appendClustered(mk(450, 500), dir, Seq("k", "t"), files = 1) // v2
+      CommitRaceFs.arm(CommitRaceFs.Race(() => Lakehouse.appendClustered(
+        mk(5000, 5100), dir, Seq("k", "t"), files = 1)))                    // v3
+      val e = try intercept[Lakehouse.CommitConflictException](op(dir))
+        finally CommitRaceFs.disarm()
+      assert(e.getMessage.contains("lost the race for version 3"), s"$name: ${e.getMessage}")
+      val h = Lakehouse.history(spark, dir).orderBy(col("version")).collect()
+      assert(Lakehouse.latestVersion(spark, dir) === 3L &&
+        h.last.getString(1) === "append" && h.last.getAs[Long]("n_rows") === 600L,
+        s"$name: the log must end at the other writer's commit")
+      val logLs = new java.io.File(s"$local/_log").list().toSeq
+      assert(!logLs.exists(_.startsWith("_tmp-")),
+        s"$name: the lost commit left staging debris: $logLs")
+      val truth = mk(0, 500).unionByName(mk(5000, 5100))
+      val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
+      assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty,
+        s"$name: the lost commit became visible")
+    }
+    lostRace("append")(d =>
+      Lakehouse.appendClustered(mk(500, 600), d, Seq("k", "t"), files = 1))
+    lostRace("compact")(d =>
+      Lakehouse.compact(spark, d, Seq("k", "t"), minRows = 100, files = 1))
+    lostRace("delete")(d =>
+      Lakehouse.deleteWhere(spark, d, col("k") < 100, files = 1))
+    lostRace("upsert")(d => Lakehouse.upsertByKey(spark, d,
+      mk(90, 110).withColumn("t", lit(-1L)), Seq("k"), files = 1))
+    // a manifest committed against a stale base throws before its rename
+    val dir = java.nio.file.Files.createTempDirectory("graft-lh-conflict").toString
     Lakehouse.writeClustered(mk(0, 500), dir, Seq("k", "t"), files = 2)
     val staleBase = Lakehouse.latestVersion(spark, dir) // 0
-    // a concurrent appender takes the next slot first
     Lakehouse.appendClustered(mk(500, 600), dir, Seq("k", "t"), files = 1)
-    // the rewrite's commit against the stale base must throw — a rewrite
-    // replayed against a moved base could resurrect or double rows, so
-    // there is no retry loop for it
     val m = Lakehouse.manifestAt(spark, dir, staleBase)
     intercept[Lakehouse.CommitConflictException](
       Lakehouse.commitVersion(spark, dir, m, "compact", staleBase))
-    // nothing became visible and no staging debris was left behind
     assert(Lakehouse.latestVersion(spark, dir) === 1L)
     val logLs = new java.io.File(s"$dir/_log").list().toSeq
     assert(!logLs.exists(_.startsWith("_tmp-")),
       s"conflict left staging debris: $logLs")
-    // the table is untouched: both batches read back exactly
     val truth = mk(0, 600)
-    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 49)
+    val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
     assert(live.exceptAll(truth).isEmpty && truth.exceptAll(live).isEmpty)
+  }
+
+  test("lakehouse: an ambiguous commit rename that landed counts once; another writer's marker throws") {
+    import graft.operators.Lakehouse
+    CommitRaceFs.register(spark.sparkContext.hadoopConfiguration)
+    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
+      col("id").as("k"), (col("id") % 7).as("t"))
+    val local = java.nio.file.Files.createTempDirectory("graft-lh-ambiguous").toString
+    val dir = "racefs://" + local
+    Lakehouse.writeClustered(mk(0, 400), dir, Seq("k", "t"), files = 2) // v0
+    // the rename lands but the client is told the slot exists: the
+    // slot's marker carries this commit's token, so the op returns
+    // normally, once
+    def landsOnce(name: String, want: org.apache.spark.sql.DataFrame)(op: => Any): Unit = {
+      val before = Lakehouse.latestVersion(spark, dir)
+      CommitRaceFs.arm(CommitRaceFs.Ambiguous(_ => ()))
+      try op finally CommitRaceFs.disarm()
+      assert(Lakehouse.latestVersion(spark, dir) === before + 1,
+        s"$name: the landed commit must count as exactly one version")
+      val files = Lakehouse.readManifest(spark, dir)
+        .select(col("file")).collect().map(_.getString(0))
+      assert(files.distinct.length === files.length,
+        s"$name: a manifest row was duplicated")
+      val live = Lakehouse.prunedRead(spark, dir, "k", 0, 1e9)
+      assert(live.exceptAll(want).isEmpty && want.exceptAll(live).isEmpty,
+        s"$name: rows drifted")
+    }
+    landsOnce("append", mk(0, 500))(
+      Lakehouse.appendClustered(mk(400, 500), dir, Seq("k", "t"), files = 1)) // v1
+    landsOnce("delete", mk(100, 500))(
+      Lakehouse.deleteWhere(spark, dir, col("k") < 100, files = 1))          // v2
+    // the same outcome with the landed marker naming another writer: the
+    // slot is not this commit's, so it throws
+    CommitRaceFs.arm(CommitRaceFs.Ambiguous { vd =>
+      val marker = new java.io.File(s"${vd.toUri.getPath}/_commit")
+      val props = new java.util.Properties()
+      val in = new java.io.FileInputStream(marker)
+      try props.load(in) finally in.close()
+      props.setProperty("writerToken", "another-writer")
+      val out = new java.io.FileOutputStream(marker)
+      try props.store(out, null) finally out.close()
+    })
+    val e = try intercept[Lakehouse.CommitConflictException](
+        Lakehouse.appendClustered(mk(500, 600), dir, Seq("k", "t"), files = 1))
+      finally CommitRaceFs.disarm()
+    assert(e.getMessage.contains("lost the race for version 3"), e.getMessage)
   }
 
   test("lakehouse: additive schema evolution — added column null-fills old files; drop and retype refused") {
@@ -2872,32 +2272,6 @@ class OperatorsSpec extends AnyFunSuite {
       "insert-all upsert into an empty table must feed its whole batch")
   }
 
-  test("lakehouse: vacuum's orphan grace protects a mid-commit appender's young files") {
-    import graft.operators.Lakehouse
-    val dir = java.nio.file.Files.createTempDirectory("graft-lh-grace").toString
-    def mk(lo: Long, hi: Long) = spark.range(lo, hi).select(
-      pmod(col("id"), lit(50)).as("k"), col("id").as("t"))
-    Lakehouse.writeClustered(mk(0, 500), dir, Seq("k", "t"), files = 2)
-    // simulate a CONCURRENT appender caught mid-commit: data files moved
-    // into data/ (and staging still present) but referenced by no
-    // manifest yet — to vacuum these are indistinguishable from debris
-    val inflight = new java.io.File(s"$dir/data/part-inflight-x.parquet")
-    java.nio.file.Files.write(inflight.toPath, Array[Byte](1, 2, 3))
-    val staging = new java.io.File(s"$dir/_stage-inflight")
-    staging.mkdirs()
-    // default grace: the young unreferenced file and staging SURVIVE —
-    // deleting them would corrupt the append about to commit
-    val (r0, _) = Lakehouse.vacuum(spark, dir, retainVersions = 1)
-    assert(r0 === 0 && inflight.exists() && staging.exists(),
-      "vacuum deleted a young unreferenced file — a mid-commit " +
-        "concurrent appender would lose its data")
-    // zero grace (the explicit single-writer mode): both are reclaimed
-    val (r1, _) = Lakehouse.vacuum(spark, dir, retainVersions = 1,
-      orphanGraceMs = 0)
-    assert(r1 === 1 && !inflight.exists() && !staging.exists(),
-      s"zero-grace vacuum left debris (reclaimed $r1)")
-  }
-
   test("lakehouse: changesDetailed feeds typed row changes; applying them mirrors the table") {
     import graft.operators.Lakehouse
     val dir = java.nio.file.Files.createTempDirectory("graft-lh-cdf").toString
@@ -2985,13 +2359,13 @@ class OperatorsSpec extends AnyFunSuite {
     assert(cdfFiles().nonEmpty, "delete wrote no CDF sidecar")
     Lakehouse.appendClustered(mk(500, 600), dir, Seq("k", "t"), files = 1) // v2
     Lakehouse.appendClustered(mk(600, 700), dir, Seq("k", "t"), files = 1) // v3
-    Lakehouse.vacuum(spark, dir, retainVersions = 2, orphanGraceMs = 0) // retains v2, v3
+    Lakehouse.vacuum(spark, dir, retainVersions = 2) // retains v2, v3
     assert(cdfFiles().isEmpty,
       "v1's delete sidecar outlived the retention window")
     // a delete INSIDE the next retained window keeps its sidecar and
     // still feeds
     Lakehouse.deleteWhere(spark, dir, col("t") >= 650)                  // v4
-    Lakehouse.vacuum(spark, dir, retainVersions = 2, orphanGraceMs = 0) // retains v3, v4
+    Lakehouse.vacuum(spark, dir, retainVersions = 2) // retains v3, v4
     assert(cdfFiles().nonEmpty, "a retained delete's sidecar was swept")
     val feed = Lakehouse.changesDetailed(spark, dir, 3)
     val wantDel = mk(600, 700).filter(col("t") >= 650)
@@ -3073,7 +2447,7 @@ class OperatorsSpec extends AnyFunSuite {
             // actually RUN, not skip on retention); trial 1 exercises the
             // tight-window interplay
             val retain = if (trial == 0) 100 else 4
-            Lakehouse.vacuum(spark, dir, retainVersions = retain, orphanGraceMs = 0)
+            Lakehouse.vacuum(spark, dir, retainVersions = retain)
             opLog += s"vacuum($retain)"
         }
         val got = liveState()
@@ -3143,7 +2517,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(Lakehouse.addedFilesSince(spark, dir, -1).map(_._1) ===
       Seq(0L, 1L, 2L, 4L))
     // consuming past the retention window fails loudly, never partially
-    Lakehouse.vacuum(spark, dir, orphanGraceMs = 0)
+    Lakehouse.vacuum(spark, dir)
     val e = intercept[IllegalStateException](
       Lakehouse.addedFilesSince(spark, dir, -1))
     assert(e.getMessage.contains("vacuum"))
@@ -3866,6 +3240,35 @@ class OperatorsSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-entity-ckpt")
     assert(withCheckpointDir(Some(dir))(run()) === local)
     assert(checkpointFiles(dir).nonEmpty, s"no reliable checkpoint files under $dir")
+  }
+
+  test("entity: the excluded-block observation reaches a QueryExecutionListener filled in") {
+    // block "aa" holds 4 names, over maxBlock = 3: one block, four names
+    // excluded — reported on every call, not only when the listener
+    // happens to read the metric after the rows were counted
+    val df = Seq("aaa", "aab", "aac", "aad", "smith", "smyth").toDF("name")
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        qe.observedMetrics.foreach { case (k, r) =>
+          if (k.startsWith("graft.entity.")) got.add((r.getLong(0), r.getLong(1)))
+        }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      (0 until 3).foreach { _ =>
+        assert(Entity.fuzzyNamePairs(df, "name", maxBlock = 3).collect().length === 1)
+      }
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(l)
+    import scala.jdk.CollectionConverters._
+    assert(got.asScala.toSeq === Seq.fill(3)((1L, 4L)))
   }
 
   test("entity: invalid knobs fail fast") {

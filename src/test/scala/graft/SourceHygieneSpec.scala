@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
  * Bench, Verify, the CLI and the tools) read system properties or the
  * environment, so no operator or query carries a hidden switch. The
  * engine is batch only, operators materialize intermediates only through
- * `graft.core.Materialize`, and every public entry that no other source
- * file calls is listed, with its reason, in `docs/kept_entries.txt`.
+ * `graft.core.Materialize`, no engine `var` holds a function (a test
+ * hook), and every public entry that no other source file calls is
+ * listed, with its reason, in `docs/kept_entries.txt`.
  */
 class SourceHygieneSpec extends AnyFunSuite {
   private def scalaFiles(root: String): Seq[Path] = {
@@ -72,6 +73,20 @@ class SourceHygieneSpec extends AnyFunSuite {
       calls.exists(code.contains)
     }.map(_.toString).sorted
     assert(bad.isEmpty, s"cache, truncate and release with Materialize: $bad")
+  }
+
+  test("no var under src/main holds a function: tests interleave through a test filesystem") {
+    val files = scalaFiles("src/main/scala")
+    assert(files.exists(_.endsWith("Lakehouse.scala")), "source tree not found")
+    // `var f: () => Unit = ...` (a function type before the `=`) or
+    // `var f = (...) => ...` (a lambda assigned)
+    val typed = "\\bvar\\s+\\w+\\s*:((?!\\s=\\s)[^\\n])*=>".r
+    val lambda = "\\bvar\\s+\\w+\\s*=\\s*(\\([^)\\n]*\\)|\\w+)\\s*=>".r
+    val bad = files.filter { f =>
+      val code = SourceInventory.strip(read(f), keepStrings = false)
+      typed.findFirstIn(code).isDefined || lambda.findFirstIn(code).isDefined
+    }.map(_.toString).sorted
+    assert(bad.isEmpty, s"no mutable hooks in the engine: $bad")
   }
 
   test("every public entry without a caller in another file is on the keep-list") {
