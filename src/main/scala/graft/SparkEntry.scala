@@ -71,7 +71,7 @@ object SparkEntry {
   // not lineage; the curation memo keeps the stats alone. This mirrors
   // the real pipeline shape: one pair graph per corpus snapshot, N consumers —
   // and it defines what a consumer's BENCH minimum measures: the
-  // MARGINAL cost on top of the shared intermediate (label propagation
+  // MARGINAL cost on top of the shared intermediate (the clustering
   // for dedup_clusters, the census for dedup_graph_quality, the split
   // for corpus_leakage_split). corpus_curate_stats has NO marginal work
   // (the stats are byproducts of the curation itself), so it is untimed
@@ -3500,9 +3500,9 @@ object SparkEntry {
         |  ON substring(a.nm, 1, 2) = substring(b.nm, 1, 2) AND a.nm < b.nm
         |WHERE levenshtein(a.nm, b.nm) <= 3""".stripMargin)),
 
-    // Full entity resolution: fuzzy pairs -> min-label connected
-    // components -> canonical name; singletons re-attach via left join
-    // so the iterative loop only ever sees the matched-pair graph
+    // Full entity resolution: fuzzy pairs -> connected components ->
+    // canonical name; singletons re-attach via left join so the
+    // clustering only sees the matched-pair graph
     Query("entity_resolve", (s, dir) => {
       val p = s.read.parquet(t(dir, "part"))
       graft.operators.Entity.resolveEntities(p, "p_name",

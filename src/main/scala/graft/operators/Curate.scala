@@ -34,9 +34,11 @@ object Curate {
    * rows it returns, so the caller (semantic dedup, a writer) reads
    * blocks instead of re-running the text pipeline. Storage peaks at
    * about 2x the exact-deduped corpus, local or reliable per
-   * [[Materialize.truncate]]. Every count is observed at the root of a
-   * checkpoint job — its result stage, where a retried task's update is
-   * applied once (inside a shuffle-map stage a re-run counts again).
+   * [[Materialize.truncate]]; the exact-deduped rows and the LSH pairs
+   * are released once the curated rows are written. Every count is
+   * observed at the root of a checkpoint job — its result stage, where a
+   * retried task's update is applied once (inside a shuffle-map stage a
+   * re-run counts again).
    */
   def curateCorpus(docs: DataFrame, idCol: String, textCol: String,
       minQuality: Double = 0.3, langs: Set[String] = Set("en"),
@@ -64,13 +66,17 @@ object Curate {
       .filter(key.isNotNull).select("__r.*"))
 
     // near-dup: drop every cluster member except the minimum id
-    val pairs = Dedup.minhashLshPairs(exact, idCol, textCol,
-      threshold = nearDupThreshold)
-    val losers = Dedup.dupClusters(pairs).filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id").as(idCol))
     val kept = Observation()
-    val curated = Materialize.truncate(exact.join(losers, Seq(idCol), "left_anti")
-      .observe(kept, count(lit(1)).as("n")))
+    val curated = try {
+      val pairs = Dedup.minhashLshPairs(exact, idCol, textCol,
+        threshold = nearDupThreshold)
+      try {
+        val losers = Dedup.dupClusters(pairs).filter(col("doc_id") =!= col("cluster_id"))
+          .select(col("doc_id").as(idCol))
+        Materialize.truncate(exact.join(losers, Seq(idCol), "left_anti")
+          .observe(kept, count(lit(1)).as("n")))
+      } finally Materialize.release(pairs)
+    } finally Materialize.release(exact)
 
     val f = funnel.get.view.mapValues(_.asInstanceOf[Long]).toMap
     (curated, CurationStats(f("input"), f("after_quality"), f("after_lang"),
@@ -134,9 +140,8 @@ object Curate {
    * the caller pick the similarity notion that defines "leak".
    *
    * Scale: the cluster map from [[Dedup.dupClusters]] holds one row per
-   * document that appears in a pair — bounded by true duplicates, orders
-   * of magnitude smaller than the corpus — so the left join is
-   * AQE-broadcastable and the corpus never shuffles; bucket assignment is
+   * document in a pair, a local frame under its driver cap, so the left
+   * join broadcasts and the corpus never shuffles; bucket assignment is
    * a scan-stage md5 (deterministic across engines/runs/cluster sizes,
    * same contract as [[withSplit]], distinct salt so the two stay
    * independent events).

@@ -474,72 +474,110 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .distinct()
 
+  /** Edge-set bytes up to which [[dupClusters]] finishes on the driver:
+    * about 600k long-id edges, a few hundred MB of driver heap. */
+  val ClusterDriverCapBytes: Long = 16L << 20
+
   /**
-   * Connected components over a near-dup pair graph: every document in a
-   * pair gets the minimum doc id of its component as cluster_id (the
-   * survivor). Iterative min-label propagation — converges in
-   * O(component diameter) rounds, each one shuffle; near-dup components
-   * are tiny (bounded by true duplicate clusters), so 2-3 rounds.
+   * Connected components over a near-dup pair graph (`doc_a`, `doc_b`):
+   * every document in a pair gets the minimum doc id of its component as
+   * cluster_id (the survivor). A pair with a null id is no edge.
    *
-   * The loop's partition count is sized from `nPairs`, the pair count
-   * observed by the job that checkpoints the input pairs, so sizing costs
-   * no job of its own.
+   * The pairs are truncated once, observing their count and bytes. While
+   * they exceed [[ClusterDriverCapBytes]], large-star/small-star rounds
+   * (Kiveris et al., SoCC 2014: O(log^2 n) rounds) contract them on the
+   * cluster, one observed truncation each. Then either the edges fit, and
+   * the driver collects them and returns union-find's labels as a local
+   * frame (2 jobs for an input that fits), or a round changed no edge and
+   * its stars (node -> component minimum, minimum -> itself) are the labels.
    *
-   * Lineage is truncated (eagerly) between rounds, local or reliable per
-   * [[Materialize.truncate]].
+   * The minimum is in Spark's order for the id type, as Catalyst compares
+   * in both exits: string ids order by UTF-8 bytes, not by
+   * `String.compareTo`'s UTF-16 units. Every truncation but the returned
+   * one is released; the caller's `pairs` are not.
    */
-  def dupClusters(pairs: DataFrame): DataFrame = {
-    // the pair graph is orders of magnitude smaller than the corpus
-    // (bounded by true duplicate clusters), so run the iterations at a
-    // partition count sized to the EDGE set, not the session default —
-    // at sf0.1 that turns ~100-task rounds over a few thousand edges into
-    // single-task rounds, and at real scale it grows back automatically.
-    val spark = pairs.sparkSession
-    // materialize the pair graph once up front (cheap re-scan when the
-    // caller already checkpointed, e.g. minhashLshPairs output) so every
-    // loop round reads blocks, not the pair dataflow; the size is observed
-    // at the root of that same job (its result stage: exact under retries)
-    val sized = org.apache.spark.sql.Observation()
-    val p0 = Materialize.truncate(pairs.observe(sized, count(lit(1)).as("n")))
-    val nPairs = sized.get("n").asInstanceOf[Long]
-    val defaultParts = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    val parts = math.max(1, math.min(defaultParts, (nPairs / 250000L).toInt + 1))
-    // The loop runs in a CHILD session (shared SparkContext/cache, own
-    // SQLConf) so the edge-sized shuffle-partition setting cannot leak
-    // into queries other threads plan against the caller's session.
-    val loopSession = spark.newSession()
-    loopSession.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    locally {
-      val pc = loopSession.createDataFrame(p0.rdd, p0.schema)
-      val edges = Materialize.truncate(pc.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pc.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .distinct())
-      var labels = Materialize.truncate(edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")))
-      var changed = 1L
-      var round = 0
-      while (changed > 0) {
-        // convergence is read via observe() from the SAME action that
-        // materializes the round's checkpoint — one job per round, not a
-        // propagation job plus a separate count() job (the per-round job
-        // overhead dominated when components are tiny and rounds are short)
-        val obs = org.apache.spark.sql.Observation(s"cc-round-$round")
-        round += 1
-        val prop = edges.join(labels, edges("dst") === labels("id"))
-          .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-        val merged = Materialize.truncate(labels.join(prop, labels("id") === prop("src"), "left")
-          .select(col("id"), col("label"),
-            least(col("label"), coalesce(col("nlabel"), col("label"))).as("next"))
-          .observe(obs, sum(when(col("next") < col("label"), 1L).otherwise(0L))
-            .as("changed")))
-        changed = obs.get.get("changed") match {
-          case Some(n: Long) => n
-          case _ => 0L // empty graph: sum over zero rows is null
-        }
-        labels = merged.select(col("id"), col("next").as("label"))
+  def dupClusters(pairs: DataFrame): DataFrame = dupClusters(pairs, ClusterDriverCapBytes)
+
+  private[graft] def dupClusters(pairs: DataFrame, capBytes: Long): DataFrame = {
+    val (a, b) = (col("doc_a"), col("doc_b"))
+    var cur = observedEdges(pairs.filter(a.isNotNull && b.isNotNull)
+      .select(greatest(a, b).as("doc_id"), least(a, b).as("cluster_id")), lit(true))
+    var stars = false
+    try {
+      while (cur.bytes > capBytes && !stars) {
+        val next = starRound(cur.frame)
+        Materialize.release(cur.frame)
+        stars = next.fresh == 0 && next.count == cur.count
+        cur = next
       }
-      labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+      if (stars) cur.frame else driverLabels(cur.frame)
+    } finally if (!stars) Materialize.release(cur.frame)
+  }
+
+  /** A truncated edge set with its count, its bytes and its edges that
+    * were not in the previous set, as its truncation observed them. */
+  private final case class EdgeSet(frame: DataFrame, count: Long, bytes: Long, fresh: Long)
+
+  private def observedEdges(edges: DataFrame, fresh: Column): EdgeSet = {
+    // a collect ships each edge as a 4-byte length and a two-field UnsafeRow:
+    // null bitmap, two 8-byte slots, and a string id's bytes padded to a word
+    val idBytes: Column => Column = edges.schema("doc_id").dataType match {
+      case _: StringType => c => (octet_length(c) + 7).bitwiseAND(-8)
+      case _ => _ => lit(0)
     }
+    val obs = org.apache.spark.sql.Observation()
+    val frame = Materialize.truncate(edges.observe(obs, count(lit(1)).as("n"),
+      coalesce(sum(idBytes(col("doc_id")) + idBytes(col("cluster_id")) + 28L), lit(0L)).as("b"),
+      count_if(fresh).as("f")).select("doc_id", "cluster_id"))
+    val m = obs.get.view.mapValues(_.asInstanceOf[Long])
+    EdgeSet(frame, m("n"), m("b"), m("f"))
+  }
+
+  /** One large-star then small-star round over edges oriented doc_id >=
+    * cluster_id. Self-loops only mark nodes: large-star passes them on and
+    * small-star gives each minimum it finds one, so a star's root keeps
+    * its (root, root) label. */
+  private def starRound(prev: DataFrame): EdgeSet = {
+    import org.apache.spark.sql.expressions.Window
+    val (u, v, x, y, m) = (col("u"), col("v"), col("x"), col("y"), col("m"))
+    // large-star: u's larger neighbours move to u's minimum neighbour
+    val large = prev.select(col("doc_id").as("u"), col("cluster_id").as("v"))
+      .union(prev.select(col("cluster_id").as("u"), col("doc_id").as("v")))
+      .withColumn("m", least(u, min(v).over(Window.partitionBy(u))))
+      .filter(v >= u).select(v.as("x"), when(v === u, u).otherwise(m).as("y"))
+    // small-star: x and its smaller neighbours move to their minimum
+    val small = large.withColumn("m", min(y).over(Window.partitionBy(x)))
+      .select(inline(array(struct(x.as("doc_id"), m.as("cluster_id")),
+        struct(y.as("doc_id"), m.as("cluster_id")))))
+    observedEdges(small.withColumn("_new", lit(true)).withColumn("_old", lit(false))
+      .unionByName(prev.withColumn("_new", lit(false)).withColumn("_old", lit(true)))
+      .groupBy("doc_id", "cluster_id").agg(max("_new").as("_new"), max("_old").as("_old"))
+      .filter(col("_new")), !col("_old"))
+  }
+
+  /** Union-find on the driver over Catalyst values, whose ordering keeps
+    * the smaller root, so each root is its component's minimum. */
+  private def driverLabels(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters._
+    val dt = edges.schema("doc_id").dataType
+    val (toCatalyst, toScala) = (createToCatalystConverter(dt), createToScalaConverter(dt))
+    val lt = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt).lt _
+    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+    def find(id: Any): Any = {
+      var r = parent.getOrElseUpdate(id, id)
+      while (parent(r) != r) r = parent(r)
+      var c = id
+      while (c != r) { val next = parent(c); parent(c) = r; c = next }
+      r
+    }
+    edges.collect().foreach { e =>
+      val (p, q) = (find(toCatalyst(e.get(0))), find(toCatalyst(e.get(1))))
+      if (lt(p, q)) parent(q) = p else parent(p) = q
+    }
+    import scala.jdk.CollectionConverters._
+    edges.sparkSession.createDataFrame(parent.keys.toSeq
+      .map(id => Row(toScala(id), toScala(find(id)))).asJava, edges.schema)
   }
 
   /**

@@ -124,10 +124,8 @@ object Entity {
    * name appears exactly once; names with no fuzzy neighbor are their own
    * canonical. Output (name, canon).
    *
-   * Components reuse [[Dedup.dupClusters]]'s min-label propagation
-   * (edge-sized rounds, O(component diameter) iterations); singleton
-   * names never enter the loop — they are re-attached with a left join,
-   * so the iterative job only ever sees the (small) matched-pair graph.
+   * Components come from [[Dedup.dupClusters]], which sees only the
+   * matched-pair graph; singleton names re-attach with a left join.
    *
    * Shares [[fuzzyNamePairs]]' defaults — including the round-12
    * recall-affecting change documented there.

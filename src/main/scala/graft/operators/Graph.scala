@@ -169,7 +169,7 @@ object Graph {
    * generator over the blob, and partially aggregates them into ONE
    * O(edges) exchange (contributions by destination). Nothing
    * accumulates on the driver and there is no lineage growth
-   * (per-iteration lazy checkpoints, same pattern as Dedup.dupClusters).
+   * (per-iteration lazy checkpoints).
    * Hub skew is NOT bounded: the adjacency packs a source's whole
    * out-neighbour list into one `collect_list` row, so a hub's row grows
    * with its out-degree without limit — it can exceed task memory, or

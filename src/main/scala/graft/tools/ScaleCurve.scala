@@ -166,7 +166,7 @@ object ScaleCurve {
       },
       "dedup_clusters" -> { n =>
         // isolate the clustering: pairs are precomputed and pinned so the
-        // measured time is label propagation, not the LSH front half
+        // measured time is the clustering, not the LSH front half
         val pairs = graft.core.Materialize.truncate(Dedup.minhashLshPairs(
           docs(spark, n), "doc_id", "text", bands = 4, rowsPerBand = 2, threshold = 0.8))
         Dedup.dupClusters(pairs).count()

@@ -697,6 +697,77 @@ class OperatorsSpec extends AnyFunSuite {
     assert(clusters.keySet === (1L to 9L).toSet)
   }
 
+  test("dupClusters: a round that keeps the edge count but moves edges has not converged") {
+    // the chain 1-5 plus three repeated pairs truncates to 7 edges; its
+    // first round also leaves 7, with 4 still pointing at 2 and 5 at 3
+    val pairs = ((1L until 5L).map(i => (i, i + 1)) ++ Seq((1L, 2L), (2L, 3L), (3L, 4L)))
+      .toDF("doc_a", "doc_b")
+    val clusters = Dedup.dupClusters(pairs, 0L).collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(clusters.sorted.toSeq === (1L to 5L).map(_ -> 1L))
+  }
+
+  test("dupClusters: string ids take Spark's minimum, not String.compareTo's") {
+    // U+1F600 is a surrogate pair in UTF-16, so compareTo puts it below
+    // U+E000..U+FFFF; Spark compares UTF-8 bytes and puts it above
+    val (smile, pua, repl) = ("\uD83D\uDE00", "\uE000", "\uFFFD")
+    assert(smile.compareTo(pua) < 0)
+    val components = Seq(Seq(smile, pua, repl), Seq("x" + smile, "x" + pua, "y"))
+    val pairs = components.flatMap(c => c.zip(c.tail)).toDF("doc_a", "doc_b")
+    val sparkMin = components.zipWithIndex.flatMap { case (c, i) => c.map(_ -> i) }
+      .toDF("name", "c").groupBy("c").agg(min("name")).collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap
+    val expected = components.zipWithIndex.flatMap { case (c, i) => c.map(_ -> sparkMin(i)) }.toMap
+    assert(expected(smile) === pua && expected("x" + smile) === "x" + pua)
+    Seq(Dedup.ClusterDriverCapBytes, 0L).foreach { cap =>
+      val got = Dedup.dupClusters(pairs, cap).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(got === expected, s"cap $cap")
+    }
+  }
+
+  test("dupClusters sends the driver at most its cap, in 2 jobs when the input fits") {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.graft.Bridge
+    import graft.core.Materialize
+    val sc = spark.sparkContext
+    // the jobs `body` runs and the bytes their task results sent the driver
+    def measured(body: => Unit): (Int, Long) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val bytes = new java.util.concurrent.atomic.AtomicLong
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+          if (te.taskMetrics != null) { bytes.addAndGet(te.taskMetrics.resultSize); () }
+      }
+      Bridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try { body; Bridge.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+      (jobs.get, bytes.get)
+    }
+    // 150 cliques of 40 nodes: 117,000 edges (3.3 MB) that contract to
+    // 6,000 (168 KB); the tiny cap sits between, well above the few KB of
+    // metrics every task result carries
+    val cliques = spark.range(0, 6000).select(col("id").as("doc_a"))
+      .join(spark.range(0, 6000).select(col("id").as("doc_b")),
+        floor(col("doc_a") / 40) === floor(col("doc_b") / 40) && col("doc_a") < col("doc_b"))
+    val pairs = Materialize.truncate(cliques)
+    try {
+      val (jobs, bytes) = measured(Dedup.dupClusters(pairs))
+      assert(jobs <= 2, s"$jobs jobs for an input under the cap")
+      assert(bytes <= Dedup.ClusterDriverCapBytes)
+      val tiny = 512L << 10
+      var labels = Map.empty[Long, Long]
+      val (roundJobs, roundBytes) = measured {
+        labels = Dedup.dupClusters(pairs, tiny).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
+      assert(roundJobs > 2, "no contraction round ran under the tiny cap")
+      assert(roundBytes <= tiny,
+        s"$roundJobs jobs' task results sent $roundBytes bytes over a $tiny-byte cap")
+      assert(labels === (0L until 6000L).map(i => i -> i / 40 * 40).toMap)
+    } finally Materialize.release(pairs)
+  }
+
   test("topk aggregate matches window-ranking semantics (sim desc, id asc, rank 1..k)") {
     // reference ranking computed independently with a window over the same
     // scored relation — the heap aggregate must reproduce it exactly
@@ -879,6 +950,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("cached operator scopes release all but the returned frame's blocks") {
     import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.graft.Bridge
     import graft.core.Materialize
@@ -889,6 +961,7 @@ class OperatorsSpec extends AnyFunSuite {
     val blocked = corpus.withColumn("src", lit("s"))
     val train = Seq(("A", "alpha beta gamma"), ("B", "one two three")).toDF("lang", "text")
     val index = Dedup.lshBandIndex(corpus, "doc_id", "text")
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 4L)).toDF("doc_a", "doc_b")
     // each family's result frame; None where it returns driver values
     val families: Seq[(String, () => Option[DataFrame])] = Seq(
       "bm25TopK" -> (() => Some(Search.bm25TopK(corpus, "doc_id", "text", Seq("alpha"), 2))),
@@ -904,6 +977,10 @@ class OperatorsSpec extends AnyFunSuite {
       "incrementalNearDupPairs" -> (() => Some(Dedup.incrementalNearDupPairs(
         docs(10L -> base), corpus, "doc_id", "text", index))),
       "packBlocks" -> (() => Some(Curate.packBlocks(corpus, "doc_id", "text", 5L))),
+      "dupClusters" -> (() => Some(Dedup.dupClusters(pairs))),
+      "dupClusters contracted to stars" -> (() => Some(Dedup.dupClusters(pairs, 0L))),
+      "curateCorpus" -> (() => Some(Curate.curateCorpus(corpus, "doc_id", "text",
+        minQuality = 0.0, langs = Set.empty)._1)),
       "exactQuantiles" -> (() => {
         Profile.exactQuantiles(corpus, "doc_id", Seq(0.5)); None }))
     families.foreach { case (name, run) =>
@@ -911,8 +988,10 @@ class OperatorsSpec extends AnyFunSuite {
       val out = run()
       assert(out.forall(_.count() > 0), s"$name: empty result proves nothing")
       assert(Bridge.cacheIsEmpty(spark), s"$name left a Dataset cache entry")
-      val behind = out.map(_.queryExecution.logical match {
-        case r: LogicalRDD => r.rdd.id
+      // a frame built on the driver holds no blocks
+      val behind = out.flatMap(_.queryExecution.logical match {
+        case r: LogicalRDD => Some(r.rdd.id)
+        case _: LocalRelation => None
         case p => fail(s"$name returned an untruncated frame: $p")
       })
       assert(sc.getPersistentRDDs.keySet.toSet -- before === behind.toSet,

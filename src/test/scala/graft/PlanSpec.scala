@@ -657,6 +657,8 @@ class PlanSpec extends AnyFunSuite {
           col("doc_b") === col("doc_a") + 1 || col("doc_b") === col("doc_a") * 2)
         .distinct()
       graft.operators.Dedup.dupClusters(pairs)
+      // a zero driver cap runs the contraction rounds
+      graft.operators.Dedup.dupClusters(pairs, 0L)
       org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(l)
     // (observe node, sits under a shuffle exchange or shuffle stage)
@@ -677,10 +679,9 @@ class PlanSpec extends AnyFunSuite {
       here ++ kids.flatMap(observed(_, below))
     }
     val found = plans.synchronized(plans.toSeq).flatMap(observed(_, inMap = false))
-    // curation's funnel and kept counts and each dupClusters call's pair
-    // count (its per-round counts run in a child session, whose listener
-    // manager this one does not see)
-    assert(found.size >= 4, s"expected at least 4 observations, found ${found.size}")
+    // curation's funnel and kept counts, each dupClusters call's input
+    // edge count, and at least one contraction round of the zero-cap call
+    assert(found.size >= 6, s"expected at least 6 observations, found ${found.size}")
     val inMap = found.filter(_._2).map(_._1)
     assert(inMap.isEmpty, s"observed inside a shuffle-map stage:\n${inMap.mkString("\n")}")
   }
