@@ -20,8 +20,9 @@ import graft.sources.AvroSource
  *                  [--stream-endpoints host=addr:port,host=addr:port,...]
  *
  * Offline, the sink writes sorted SSTable-style runs under --sink-dir
- * (directory mode); a live SSTableLoader-equivalent would hang off the same
- * manifests. `--format parquet` is the Spark-native extension (the
+ * (directory mode), which must be empty or absent; a live
+ * SSTableLoader-equivalent would hang off the same manifests.
+ * `--format parquet` is the Spark-native extension (the
  * reference is Avro-only). With `--stream-endpoints` the loader actually
  * executes the emitted plan against those wire addresses (the offline peer
  * is `InProcessCluster`), honoring the target URI's
@@ -147,7 +148,9 @@ object Hdfs2CassSpark {
       // still READS every row), so the frame materializes once and both
       // the salt plan and the write consume the checkpoint — not two
       // full scans + CQL serializations of a multi-TB load. The blocks go
-      // as soon as the writes return: streaming reads the run files.
+      // as soon as the writes return: streaming reads the run files. A
+      // sink dir that holds a load is refused before either runs.
+      BulkSink.requireEmptySink(args.sinkDir)
       val toWrite =
         if (params.saltAuto) Materialize.truncate(projected) else projected
       val manifests = try {

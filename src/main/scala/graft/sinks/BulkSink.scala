@@ -135,11 +135,21 @@ object BulkSink {
       chunks: Int = -1)
 
   /**
-   * Write `df` as sorted per-token-range runs under `outDir`.
-   * `keyCols` form the partition key (composite if 2+). Every column is
-   * encoded by [[CqlValueCodec.rowEncoder]], the encoder the graft-bulk
-   * sink shares, so both sinks write the same bytes. Returns
-   * per-partition manifests (also persisted as _MANIFEST.json).
+   * Write `df` as sorted per-token-range runs under `outDir`, the
+   * engine's one writer of the run format. `keyCols` form the partition
+   * key (composite if 2+). Every column is encoded by
+   * [[CqlValueCodec.rowEncoder]]. Returns per-partition manifests (also
+   * persisted as _MANIFEST.json).
+   *
+   * Records are ordered by decorated key (token, then key bytes) and by
+   * nothing else: records that share a partition key keep the order in
+   * which the shuffle delivers them, i.e. their arrival order. With
+   * unique keys the runs are a function of the rows alone; with shared
+   * keys their bytes (and a compressed run's size) follow the input's
+   * order.
+   *
+   * `outDir` must be empty or absent: a directory that already holds a
+   * load is refused before any job runs ([[requireEmptySink]]).
    */
   def writeSorted(df: DataFrame, keyCols: Seq[String], numBuckets: Int,
       outDir: String, indexInterval: Int = 128,
@@ -153,6 +163,7 @@ object BulkSink {
     // option fails before the shuffle runs, not in task 0 of the write stage
     val codec = compression.map(SortedRunWriter.normalizeCodec)
     require(chunkSize >= 1024, s"chunkSize must be >= 1 KiB, got $chunkSize")
+    requireEmptySink(outDir)
     val isRandom = partitionerClass match {
       case graft.core.CassandraParams.Murmur3Partitioner => false
       case graft.core.CassandraParams.RandomPartitioner  => true
@@ -263,7 +274,8 @@ object BulkSink {
    * I/O, constant memory, no re-sort; the hot range's bytes are read
    * once more than the unsalted path would, the price of removing the
    * straggler reducer. Like the rest of this sink, `outDir` must be a
-   * filesystem every executor and the driver can reach.
+   * filesystem every executor and the driver can reach, and empty or
+   * absent.
    */
   def writeSortedSalted(df: DataFrame, keyCols: Seq[String],
       numBuckets: Int, outDir: String, saltBuckets: Map[Int, Int],
@@ -273,6 +285,7 @@ object BulkSink {
     require(keyCols.nonEmpty)
     val codec = compression.map(SortedRunWriter.normalizeCodec)
     require(chunkSize >= 1024, s"chunkSize must be >= 1 KiB, got $chunkSize")
+    requireEmptySink(outDir)
     Files.createDirectories(Paths.get(outDir))
     val tmpPath = new java.io.File(outDir, "_salt-tmp").getAbsolutePath
     Files.createDirectories(Paths.get(tmpPath))
@@ -360,6 +373,22 @@ object BulkSink {
     } finally rmTree(new java.io.File(tmpPath))
   }
 
+  /**
+   * Refuses a sink directory that already holds a load: run files
+   * (`graft-*-Data.db`), a manifest, a stream plan or a salted write's
+   * staging dir. A second load into it would leave runs its manifest
+   * does not list (the reader full-scans those next to the new ones),
+   * keep a stale stream plan, or fail midway with some new runs already
+   * in place. Driver-side and file-system only, so it runs before any job.
+   */
+  def requireEmptySink(outDir: String): Unit = {
+    val held = Option(new java.io.File(outDir).list()).getOrElse(Array.empty[String])
+      .filter(n => (n.startsWith("graft-") && n.endsWith("-Data.db")) ||
+        n == "_MANIFEST.json" || n == "_STREAM_PLAN.json" || n == "_salt-tmp")
+    require(held.isEmpty, s"sink directory $outDir already holds a load " +
+      s"(${held.length} entries such as ${held.min}); load into an empty or absent directory")
+  }
+
   /** K-way merge of one hot range's sorted sub-runs into its final
     * decorated-key-sorted run: a k-element min-heap streams the runs —
     * sequential reads, O(k) memory — and the writer's own sorted-input
@@ -431,9 +460,9 @@ object BulkSink {
     }.toMap
   }
 
-  /** One manifest entry as JSON (shared by the RDD and DSv2 sinks). The
-    * hex token-range fields appear only for RandomPartitioner runs. */
-  def manifestJson(m: PartitionManifest): String = {
+  /** One manifest entry as JSON. The hex token-range fields appear only
+    * for RandomPartitioner runs. */
+  private[graft] def manifestJson(m: PartitionManifest): String = {
     val hexFields =
       if (m.minTokenHex.isEmpty) ""
       else s""""minTokenHex":"${m.minTokenHex}","maxTokenHex":"${m.maxTokenHex}","""
@@ -451,9 +480,8 @@ object BulkSink {
       """"minToken":(-?\d+),"maxToken":(-?\d+),"sorted":(true|false),""" +
       """"dataFile":"([^"]+)","indexFile":"([^"]*)","codec":"([^"]+)"\}""").r
 
-  /** Parse a _MANIFEST.json written by either sink (the physicalBytes and
-    * hex token-range fields are absent in older manifests). Empty if the
-    * file is missing. */
+  /** Parse a _MANIFEST.json (the physicalBytes and hex token-range fields
+    * are absent in older manifests). Empty if the file is missing. */
   def readManifests(dir: java.io.File): Seq[PartitionManifest] = {
     val mf = new java.io.File(dir, "_MANIFEST.json")
     if (!mf.exists()) Nil

@@ -9,7 +9,7 @@ import graft.core.CassandraTokens
  * only writer, the companion its only reader — [[SortedRunWriter.RecordCursor]]
  * parses the record frame, [[SortedRunWriter.ChunkedInputStream]] chains
  * compressed chunks, [[SortedRunWriter.openLogical]] opens a run at a
- * logical offset. Both bulk sinks (BulkSink, graft-bulk) append records
+ * logical offset. [[BulkSink]], the one bulk writer, appends records
  * whose values [[graft.core.CqlValueCodec.rowEncoder]] encoded:
  * `graft-<pid>-Data.db` (2-byte key len + key + 4-byte value len + value)
  * plus a sparse `Index.db` (token, logical offset every `indexInterval`
@@ -86,10 +86,6 @@ final class SortedRunWriter(outDir: String, pid: Int, indexInterval: Int = 128,
   private var minTokenB: Array[Byte] = _
   private var maxTokenB: Array[Byte] = _
   private var prevTokenB: Array[Byte] = _
-
-  /** Running counters for live progress metrics (DSv2 CustomTaskMetric). */
-  def rowsSoFar: Long = rows
-  def bytesSoFar: Long = offset
 
   def add(token: Long, key: Array[Byte], value: Array[Byte]): Unit = {
     require(!randomTokens, "random-token writer: use addRandom(tokenBytes, ...)")

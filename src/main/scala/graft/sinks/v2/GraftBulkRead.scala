@@ -38,8 +38,8 @@ import graft.sinks.{BulkSink, SortedRunWriter}
  * The scan DECLARES what the format guarantees, so Catalyst plans around
  * re-reads instead of re-shuffling perfectly-placed data:
  *  - SupportsReportOrdering: every split is one decorated-key-sorted run,
- *    so per-partition output ordering is (token ASC, pk ASC) — a write
- *    that requires that ordering plans no Sort over it;
+ *    so per-partition output ordering is (token ASC, pk ASC) — a sort
+ *    within partitions on that ordering plans no Sort over it;
  *  - SupportsReportPartitioning: every row of a split shares the split's
  *    `bucket` (the originating ring slot), reported as key-grouped
  *    partitioning on the `bucket` column (each split carries its key via

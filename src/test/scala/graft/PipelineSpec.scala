@@ -17,6 +17,23 @@ object SparkSuite {
     * several layers, so asserts grep the whole chain, not just the top. */
   def causeMessages(t: Throwable): Seq[String] =
     if (t == null) Nil else Option(t.getMessage).toSeq ++ causeMessages(t.getCause)
+
+  /** The read specs' fixture: the 1500 sf0.001 orders, keyed by
+    * o_orderkey, written by [[BulkSink.writeSorted]] into a fresh temp
+    * directory. `cols` picks the written columns (all when empty).
+    * Returns the directory and the load's manifests. */
+  def bulkOrders(name: String, buckets: Int, cols: Seq[String] = Nil,
+      indexInterval: Int = 128,
+      partitionerClass: String = graft.core.CassandraParams.Murmur3Partitioner,
+      compression: Option[String] = None,
+      chunkSize: Int = graft.sinks.SortedRunWriter.DefaultChunkSize)
+      : (String, Seq[BulkSink.PartitionManifest]) = {
+    val out = java.nio.file.Files.createTempDirectory(s"graft-bulk-$name").toString
+    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    val df = if (cols.isEmpty) orders else orders.select(cols.map(col): _*)
+    (out, BulkSink.writeSorted(df, Seq("o_orderkey"), buckets, out, indexInterval,
+      partitionerClass, compression, chunkSize = chunkSize))
+  }
 }
 
 class PipelineSpec extends AnyFunSuite {

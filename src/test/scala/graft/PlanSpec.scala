@@ -249,45 +249,6 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("WholeStageCodegen") || p.contains("*("), p.take(2000))
   }
 
-  // --- graft-bulk read-side declarations -> re-plan without re-shuffle ---
-
-  private def bulkDir(buckets: Int): String = {
-    import org.apache.spark.sql.functions.col
-    import graft.functions.{cassandra_token, partition_key, token_bucket}
-    val out = java.nio.file.Files.createTempDirectory("graft-planspec-bulk").toString
-    spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .withColumn("_pk", partition_key(col("o_orderkey")))
-      .withColumn("_token", cassandra_token(col("_pk")))
-      .withColumn("_bucket", token_bucket(col("_token"), buckets))
-      .write.format("graft-bulk")
-      .option("path", out).option("buckets", buckets.toString).mode("append").save()
-    out
-  }
-
-  /** Capture the executed plan of the NEXT v2 write via a listener. */
-  private def captureWritePlan(body: => Unit): String = {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    @volatile var captured: String = null
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.executedPlan.toString.contains("graft-bulk") ||
-            qe.optimizedPlan.toString.contains("GraftBulk")) captured = qe.executedPlan.toString
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    // a prior write's late event (bulkDir's, just before) must not be
-    // captured as this one's: drain the bus first, as plansDuring does
-    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      body
-      val deadline = System.nanoTime() + 30_000_000_000L
-      while (captured == null && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(captured != null, "no v2 write plan captured")
-      captured
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   test("heavy-ngrams sketch aggregates partially before the exchange; line dedup is scan-only") {
     // Misra-Gries partials must combine map-side (ObjectHashAggregate
     // partial_topk_freq before the single exchange) — without it every
@@ -347,46 +308,11 @@ class PlanSpec extends AnyFunSuite {
       p.contains("BroadcastHashJoin"), s"no equi-join in plan:\n${p.take(2000)}")
   }
 
-  test("graft-bulk read -> aligned graft-bulk write: no Exchange, no Sort") {
-    import org.apache.spark.sql.functions.col
-    val src = bulkDir(4)
-    val dst = java.nio.file.Files.createTempDirectory("graft-planspec-rt").toString
-    val back = spark.read.format("graft-bulk").option("path", src).load()
-    val p = captureWritePlan {
-      back.select(col("token").as("_token"), col("pk").as("_pk"),
-          col("value"), col("bucket").as("_bucket"))
-        .write.format("graft-bulk")
-        .option("path", dst).option("aligned", "true").mode("append").save()
-    }
-    // the data is already placed and sorted per split (the scan declares
-    // it); re-exchanging or re-sorting it would be pure waste at 100 TB
-    assert(!p.contains("Exchange"), s"round-trip re-shuffles:\n${p.take(2000)}")
-    assert(!p.contains("Sort"), s"round-trip re-sorts:\n${p.take(2000)}")
-    // and the rewrite is byte-correct: same rows, sorted runs re-verified
-    // by the writer (it throws on disorder), manifests intact
-    val ms = graft.sinks.BulkSink.readManifests(new java.io.File(dst))
-    assert(ms.map(_.rows).sum === 1500)
-    assert(ms.forall(_.sorted))
-    assert(spark.read.format("graft-bulk").option("path", dst).load().count() === 1500)
-  }
-
-  test("default (unaligned) graft-bulk write still plans its exchange and sort") {
-    import org.apache.spark.sql.functions.col
-    val src = bulkDir(4)
-    val dst = java.nio.file.Files.createTempDirectory("graft-planspec-rtx").toString
-    val back = spark.read.format("graft-bulk").option("path", src).load()
-    val p = captureWritePlan {
-      back.select(col("token").as("_token"), col("pk").as("_pk"),
-          col("value"), col("bucket").as("_bucket"))
-        .write.format("graft-bulk")
-        .option("path", dst).option("buckets", "4").mode("append").save()
-    }
-    assert(p.contains("Exchange"), s"unaligned write lost its exchange:\n${p.take(2000)}")
-  }
+  // --- graft-bulk read-side declarations -> re-plan without re-shuffle ---
 
   test("redundant sortWithinPartitions over a graft-bulk read is removed (reported ordering)") {
     import org.apache.spark.sql.functions.col
-    val src = bulkDir(4)
+    val (src, _) = SparkSuite.bulkOrders("planspec", 4)
     val back = spark.read.format("graft-bulk").option("path", src).load()
     val resorted = back.sortWithinPartitions(col("token"), col("pk"))
     resorted.collect()
@@ -396,7 +322,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("per-run aggregation over a graft-bulk read plans no Exchange (key-grouped)") {
-    val src = bulkDir(4)
+    val (src, _) = SparkSuite.bulkOrders("planspec", 4)
     val old = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     try {

@@ -12,10 +12,12 @@ import org.scalatest.funsuite.AnyFunSuite
  * only session factory, and only the entry points (Sessions itself,
  * Bench, Verify, the CLI and the tools) read system properties or the
  * environment, so no operator or query carries a hidden switch. The
- * engine is batch only, operators materialize intermediates only through
- * `graft.core.Materialize`, no engine `var` holds a function (a test
- * hook), and every public entry that no other source file calls is
- * listed, with its reason, in `docs/kept_entries.txt`.
+ * engine is batch only, `graft.sinks.BulkSink` is its one writer of
+ * sorted runs (no DataSource V2 write surface), operators materialize
+ * intermediates only through `graft.core.Materialize`, no engine `var`
+ * holds a function (a test hook), and every public entry that no other
+ * source file calls is listed, with its reason, in
+ * `docs/kept_entries.txt`.
  */
 class SourceHygieneSpec extends AnyFunSuite {
   private def scalaFiles(root: String): Seq[Path] = {
@@ -60,6 +62,18 @@ class SourceHygieneSpec extends AnyFunSuite {
     val bad = offenders(files, "read" + "Stream", "write" + "Stream",
       "foreach" + "Batch")
     assert(bad.isEmpty, s"no stream sources, sinks or micro-batch writers: $bad")
+  }
+
+  test("no DataSource V2 write surface under src/main: one bulk writer") {
+    val files = scalaFiles("src/main/scala")
+    assert(files.exists(_.endsWith("BulkSink.scala")), "source tree not found")
+    val needles = Seq("Supports" + "Write", "DataWriter" + "Factory", "Batch" + "Write",
+      ".write.format(\"graft" + "-bulk\")")
+    val bad = files.filter { f =>
+      val code = SourceInventory.strip(read(f), keepStrings = true)
+      needles.exists(code.contains)
+    }.map(_.toString).sorted
+    assert(bad.isEmpty, s"write sorted runs with graft.sinks.BulkSink: $bad")
   }
 
   test("operators, the CLI and the queries materialize only through Materialize") {
@@ -108,8 +122,8 @@ class SourceHygieneSpec extends AnyFunSuite {
       .map { l =>
         val parts = l.split("\\s+", 3)
         assert(parts.length == 3 &&
-          Seq("survey:", "seam:", "dsv2:").exists(parts(2).startsWith),
-          s"keep-list lines read `<path> <name> survey:|seam:|dsv2: <why>`: $l")
+          Seq("survey:", "seam:").exists(parts(2).startsWith),
+          s"keep-list lines read `<path> <name> survey:|seam: <why>`: $l")
         parts(0) -> parts(1)
       }
     assert(kept.distinct.size === kept.size, "duplicate keep-list lines")

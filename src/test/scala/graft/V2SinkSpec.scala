@@ -5,159 +5,38 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.CassandraTokens
-import graft.functions.{cassandra_token, partition_key, token_bucket}
+import graft.core.{CassandraTokens, CqlValueCodec}
+import graft.functions.cassandra_token
+import graft.sinks.BulkSink
 
-/** DSv2 "graft-bulk" sink: writer-declared distribution+ordering. */
+/** The graft-bulk run format: runs written by [[BulkSink]], the one bulk
+  * writer, read back through the read-only "graft-bulk" DataSource. */
 class V2SinkSpec extends AnyFunSuite {
   lazy val spark = SparkSuite.spark
   import spark.implicits._
 
-  private def prepared(n: Int) = {
-    spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .withColumn("_pk", partition_key(col("o_orderkey")))
-      .withColumn("_token", cassandra_token(col("_pk")))
-      .withColumn("_bucket", token_bucket(col("_token"), n))
-  }
-
-  test("v2 sink writes sorted runs with Spark-planned exchange and sort") {
-    val out = Files.createTempDirectory("graft-v2").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", out).option("buckets", "4").mode("append").save()
-
-    val manifest = new java.io.File(out, "_MANIFEST.json")
-    assert(manifest.exists())
-    val json = new String(Files.readAllBytes(manifest.toPath))
-    assert(json.contains("\"sorted\":true"))
-    val totalRows = """"rows":(\d+)""".r.findAllMatchIn(json).map(_.group(1).toLong).sum
-    assert(totalRows === 1500L)
-
-    // read a run back: keys must be in decorated order and re-hash to tokens
-    val dataFiles = new java.io.File(out).listFiles().filter(_.getName.endsWith("Data.db"))
-    assert(dataFiles.nonEmpty)
-    dataFiles.foreach { f =>
-      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-        new java.io.FileInputStream(f)))
-      var prev = Long.MinValue
-      try {
-        while (in.available() > 0) {
-          val klen = in.readUnsignedShort()
-          val key = new Array[Byte](klen); in.readFully(key)
-          val vlen = in.readInt(); in.skipBytes(vlen)
-          val tok = CassandraTokens.token(key)
-          assert(tok >= prev, s"unsorted run in ${f.getName}")
-          prev = tok
-        }
-      } finally in.close()
-    }
-  }
-
-  test("AQE chaos: forced coalesce + skew-join upstream never trip the sorted-run re-check") {
-    // SURVEY §7.4 risk 3: AQE rewrites shuffle partitioning at runtime
-    // (coalescing small partitions, splitting skewed ones). The sink's
-    // RequiresDistributionAndOrdering must survive BOTH modes — the
-    // writer's per-partition monotonicity re-check throwing would mean
-    // AQE handed a writer a partition violating the declared clustering
-    // or ordering. Run the full pipeline (skewed join -> token derivation
-    // -> graft-bulk write) with the skew/coalesce machinery FORCED on at
-    // aggressive thresholds, then with AQE off, and pin identical totals
-    // and on-disk sorted runs either way.
-    val sf01 = "/root/testdata/sf0.01"
-    val totals = for (aqe <- Seq("true", "false")) yield {
-      val s = spark.newSession() // conf chaos must not leak to other tests
-      s.conf.set("spark.sql.adaptive.enabled", aqe)
-      if (aqe == "true") {
-        s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-        s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-        s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-        s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16k")
-        s.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-      }
-      val orders = s.read.parquet(s"$sf01/orders.parquet")
-      val cust = s.read.parquet(s"$sf01/customer.parquet")
-        .select(col("c_custkey"), col("c_mktsegment")).hint("merge")
-      val prepared = orders
-        .join(cust, orders("o_custkey") === cust("c_custkey"))
-        .withColumn("_pk", partition_key(col("o_orderkey")))
-        .withColumn("_token", cassandra_token(col("_pk")))
-        .withColumn("_bucket", token_bucket(col("_token"), 4))
-      val out = Files.createTempDirectory(s"graft-v2-aqe-$aqe").toString
-      // a spurious re-check firing surfaces here as the write throwing
-      prepared.write.format("graft-bulk")
-        .option("path", out).option("buckets", "4").mode("append").save()
-      val json = new String(Files.readAllBytes(
-        java.nio.file.Paths.get(out, "_MANIFEST.json")))
-      assert(json.contains("\"sorted\":true"))
-      // independent on-disk verification, not just the writer's word
-      new java.io.File(out).listFiles()
-        .filter(_.getName.endsWith("Data.db")).foreach { f =>
-          val in = new java.io.DataInputStream(new java.io.BufferedInputStream(
-            new java.io.FileInputStream(f)))
-          var prev = Long.MinValue
-          try {
-            while (in.available() > 0) {
-              val klen = in.readUnsignedShort()
-              val key = new Array[Byte](klen); in.readFully(key)
-              val vlen = in.readInt(); in.skipBytes(vlen)
-              val tok = CassandraTokens.token(key)
-              assert(tok >= prev, s"unsorted run under AQE=$aqe in ${f.getName}")
-              prev = tok
-            }
-          } finally in.close()
-        }
-      """"rows":(\d+)""".r.findAllMatchIn(json).map(_.group(1).toLong).sum
-    }
-    assert(totals.head === totals.last,
-      s"AQE on/off wrote different row totals: $totals")
-    assert(totals.head > 0L)
-  }
-
-  test("v2 sink plan contains writer-required exchange and sort") {
-    val df = prepared(4)
-    // no manual repartition/sortWithinPartitions on the caller side — the
-    // Write's RequiresDistributionAndOrdering must inject them
-    val out = Files.createTempDirectory("graft-v2-plan").toString
-    df.write.format("graft-bulk").option("path", out).option("buckets", "4")
-      .mode("append").save()
-    // post-hoc: partitions in the manifest have disjoint token ranges when
-    // clustered by bucket (hash of 4 buckets over 4 partitions may collide,
-    // but every bucket lands entirely in one run)
-    val json = new String(Files.readAllBytes(
-      java.nio.file.Paths.get(out, "_MANIFEST.json")))
-    assert("""\"rows\":(\d+)""".r.findAllMatchIn(json).map(_.group(1).toLong).sum === 1500L)
-  }
-
   test("v2 round trip: written runs read back via spark.read") {
-    val out = Files.createTempDirectory("graft-v2-rt").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", out).option("buckets", "4").mode("append").save()
+    val (out, ms) = SparkSuite.bulkOrders("rt", 4)
     val back = spark.read.format("graft-bulk").option("path", out).load()
     assert(back.columns.toSeq === Seq("token", "pk", "value", "bucket"))
     assert(back.count() === 1500)
     // tokens recompute from keys and every pk round-trips
     val bad = back.filter(cassandra_token(col("pk")) =!= col("token")).count()
     assert(bad === 0)
-    // distributed read parallelism = one split per non-empty run file
-    // (hash clustering may fold several ring buckets into one task)
-    val nFiles = new java.io.File(out).listFiles().count(_.getName.endsWith("Data.db"))
-    assert(nFiles >= 1 && back.rdd.getNumPartitions === nFiles)
+    // distributed read parallelism = one split per non-empty run
+    val nonEmpty = ms.count(_.rows > 0)
+    assert(nonEmpty >= 1 && back.rdd.getNumPartitions === nonEmpty)
   }
 
-  test("compressionclass round-trips through both sinks for every codec") {
-    import graft.sinks.{BulkSink, SortedRunWriter}
+  test("compressionclass round-trips through the sink for every codec") {
+    import graft.sinks.SortedRunWriter
     for (cls <- Seq("DeflateCompressor", "LZ4Compressor", "ZstdCompressor",
         "org.apache.cassandra.io.compress.SnappyCompressor")) {
       val codec = SortedRunWriter.normalizeCodec(cls)
-      // DSv2 path: option -> writer -> manifest -> spark.read decompresses
-      val out = Files.createTempDirectory(s"graft-v2-$codec").toString
-      prepared(4).write.format("graft-bulk")
-        .option("path", out).option("buckets", "4")
-        .option("compressionclass", cls).mode("append").save()
-      val json = new String(Files.readAllBytes(
-        java.nio.file.Paths.get(out, "_MANIFEST.json")))
-      assert(json.contains(s""""codec":"$codec""""), s"manifest missing codec for $cls")
+      // option -> writer -> manifest -> spark.read decompresses
+      val (out, ms) = SparkSuite.bulkOrders(codec, 4, compression = Some(cls))
+      assert(ms.forall(_.codec === codec), s"manifest missing codec for $cls")
+      assert(BulkSink.readManifests(new java.io.File(out)).forall(_.codec === codec))
       val back = spark.read.format("graft-bulk").option("path", out).load()
       assert(back.count() === 1500)
       assert(back.filter(cassandra_token(col("pk")) =!= col("token")).count() === 0)
@@ -165,32 +44,19 @@ class V2SinkSpec extends AnyFunSuite {
       // (i.e. the bytes on disk really are codec bytes, not plaintext):
       // logical bytes in the manifest exceed the physical deflate file
       if (codec == "deflate") {
-        val logical = """"bytes":(\d+)""".r.findAllMatchIn(json).map(_.group(1).toLong).sum
+        val logical = ms.map(_.bytes).sum
         val physical = new java.io.File(out).listFiles()
           .filter(_.getName.endsWith("Data.db")).map(_.length).sum
         assert(physical < logical, s"deflate wrote $physical >= logical $logical")
       }
-
-      // RDD path: writeSorted(compression=) produces the same manifest codec
-      val out2 = Files.createTempDirectory(s"graft-rdd-$codec").toString
-      val ms = BulkSink.writeSorted(
-        spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-          .select(col("o_orderkey"), col("o_orderpriority")),
-        Seq("o_orderkey"), 4, out2, compression = Some(cls))
-      assert(ms.forall(_.codec === codec))
-      val back2 = spark.read.format("graft-bulk").option("path", out2).load()
-      assert(back2.count() === 1500)
     }
   }
 
   test("compressed runs carry physical bytes, a chunk map, and a usable Index.db") {
-    import graft.sinks.{BulkSink, SortedRunWriter}
-    val out = Files.createTempDirectory("graft-v2-cmeta").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", out).option("buckets", "4")
-      .option("compressionclass", "DeflateCompressor").mode("append").save()
+    import graft.sinks.SortedRunWriter
+    val (out, all) = SparkSuite.bulkOrders("cmeta", 4, compression = Some("DeflateCompressor"))
     val dir = new java.io.File(out)
-    val ms = BulkSink.readManifests(dir).filter(_.rows > 0)
+    val ms = all.filter(_.rows > 0)
     assert(ms.nonEmpty)
     ms.foreach { m =>
       // chunked compression (CompressionInfo.db analog) makes logical
@@ -212,10 +78,8 @@ class V2SinkSpec extends AnyFunSuite {
         s"${m.dataFile}: physical ${m.physicalBytes} not below logical ${m.bytes}")
     }
     // uncompressed runs: physical == logical, index present, no chunk map
-    val out2 = Files.createTempDirectory("graft-v2-umeta").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", out2).option("buckets", "4").mode("append").save()
-    val ms2 = BulkSink.readManifests(new java.io.File(out2)).filter(_.rows > 0)
+    val (out2, all2) = SparkSuite.bulkOrders("umeta", 4)
+    val ms2 = all2.filter(_.rows > 0)
     assert(ms2.nonEmpty)
     ms2.foreach { m =>
       assert(m.physicalBytes === m.bytes)
@@ -226,16 +90,13 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("token-banded read of a zstd run seeks via index + chunk map") {
-    import graft.sinks.{BulkSink, SortedRunWriter}
+    import graft.sinks.SortedRunWriter
     import graft.sinks.v2.GraftBulkRead
     // ONE compressed run with dense index and small chunks so a mid-run
     // band demonstrably starts past byte zero
-    val out = Files.createTempDirectory("graft-v2-zseek").toString
-    val df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate"))
-    val ms = BulkSink.writeSorted(df, Seq("o_orderkey"), 1, out,
-      indexInterval = 16, compression = Some("ZstdCompressor"),
-      chunkSize = 4 * 1024)
+    val (out, ms) = SparkSuite.bulkOrders("zseek", 1,
+      Seq("o_orderkey", "o_orderpriority", "o_orderdate"), indexInterval = 16,
+      compression = Some("ZstdCompressor"), chunkSize = 4 * 1024)
     val m = ms.find(_.rows > 0).get
     val dir = new java.io.File(out)
     val full = spark.read.format("graft-bulk").option("path", out).load()
@@ -267,13 +128,9 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("token predicates prune runs and index-seek past leading bytes") {
-    import graft.sinks.BulkSink
     import graft.sinks.v2.GraftBulkRead
-    val out = Files.createTempDirectory("graft-v2-prune").toString
-    val ms = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderstatus")),
-      Seq("o_orderkey"), 4, out, indexInterval = 16)
+    val (out, ms) = SparkSuite.bulkOrders("prune", 4, Seq("o_orderkey", "o_orderstatus"),
+      indexInterval = 16)
     val dir = new java.io.File(out)
     val nonEmpty = ms.count(_.rows > 0)
     val full = spark.read.format("graft-bulk").option("path", out).load()
@@ -310,9 +167,7 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("column pruning reaches the scan; value payloads skip, results exact") {
-    val out = Files.createTempDirectory("graft-v2-colprune").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", out).option("buckets", "4").mode("append").save()
+    val (out, _) = SparkSuite.bulkOrders("colprune", 4)
     def scan() = spark.read.format("graft-bulk").option("path", out).load()
 
     // the leaf scan's output shrinks to the projected columns (Catalyst
@@ -337,15 +192,10 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("scan statistics come from manifests and shrink under token pruning") {
-    import graft.sinks.BulkSink
     import graft.sinks.v2.GraftBulkScanBuilder
     import org.apache.spark.sql.connector.read.SupportsReportStatistics
     import org.apache.spark.sql.sources.GreaterThanOrEqual
-    val out = Files.createTempDirectory("graft-v2-stats").toString
-    val ms = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderstatus")),
-      Seq("o_orderkey"), 4, out)
+    val (out, ms) = SparkSuite.bulkOrders("stats", 4, Seq("o_orderkey", "o_orderstatus"))
 
     def stats(f: GraftBulkScanBuilder => Unit) = {
       val b = new GraftBulkScanBuilder(out)
@@ -363,17 +213,11 @@ class V2SinkSpec extends AnyFunSuite {
     assert(pruned.numRows.getAsLong > 0)
   }
 
-  test("v2 sink writes RandomPartitioner runs when _token is binary (md5)") {
-    import graft.functions.{cassandra_random_token, random_token_bucket}
-    import graft.sinks.BulkSink
-    val out = Files.createTempDirectory("graft-v2-random").toString
-    spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .withColumn("_pk", partition_key(col("o_orderkey")))
-      .withColumn("_token", cassandra_random_token(col("_pk")))
-      .withColumn("_bucket", random_token_bucket(col("_token"), 4))
-      .write.format("graft-bulk")
-      .option("path", out).option("buckets", "4").mode("append").save()
-    val ms = BulkSink.readManifests(new java.io.File(out)).filter(_.rows > 0)
+  test("RandomPartitioner runs read back whole: md5-sorted on disk, no murmur3 early-stop") {
+    import graft.core.CassandraParams
+    val (out, all) = SparkSuite.bulkOrders("random", 4,
+      partitionerClass = CassandraParams.RandomPartitioner)
+    val ms = all.filter(_.rows > 0)
     assert(ms.nonEmpty && ms.map(_.rows).sum === 1500)
     ms.foreach { m =>
       assert(m.minTokenHex.matches("[0-9a-f]{32}"))
@@ -406,18 +250,14 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("statistics pro-rate an in-run token band via the sparse index") {
-    import graft.sinks.BulkSink
     import graft.sinks.v2.GraftBulkScanBuilder
     import org.apache.spark.sql.connector.read.SupportsReportStatistics
     import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
     // ONE run (buckets=1) so any shrink must come from inside the run,
     // not from pruning whole files; a dense index (every 16 rows) keeps
     // the estimate's granularity tight
-    val out = Files.createTempDirectory("graft-v2-prorate").toString
-    val ms = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderstatus")),
-      Seq("o_orderkey"), 1, out, indexInterval = 16)
+    val (out, ms) = SparkSuite.bulkOrders("prorate", 1, Seq("o_orderkey", "o_orderstatus"),
+      indexInterval = 16)
     val m = ms.find(_.rows > 0).get
     val toks = spark.read.format("graft-bulk").option("path", out).load()
       .select("token").as[Long].collect().sorted
@@ -449,15 +289,10 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("runtime filters narrow the scan to the runs containing the join tokens") {
-    import graft.sinks.BulkSink
     import graft.sinks.v2.GraftBulkScanBuilder
     import org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     import org.apache.spark.sql.sources.In
-    val out = Files.createTempDirectory("graft-v2-rtf").toString
-    val ms = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderstatus")),
-      Seq("o_orderkey"), 8, out)
+    val (out, ms) = SparkSuite.bulkOrders("rtf", 8, Seq("o_orderkey", "o_orderstatus"))
     val nonEmpty = ms.count(_.rows > 0)
     assert(nonEmpty >= 4)
 
@@ -500,12 +335,8 @@ class V2SinkSpec extends AnyFunSuite {
 
   test("RandomPartitioner + compression compose: chunked md5-sorted runs stream and verify") {
     import graft.core.CassandraParams
-    import graft.sinks.{BulkSink, InProcessCluster, SortedRunWriter, StreamLoader}
-    val out = Files.createTempDirectory("graft-v2-randz").toString
-    val ms = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderpriority")),
-      Seq("o_orderkey"), 4, out,
+    import graft.sinks.{InProcessCluster, SortedRunWriter, StreamLoader}
+    val (out, ms) = SparkSuite.bulkOrders("randz", 4, Seq("o_orderkey", "o_orderpriority"),
       partitionerClass = CassandraParams.RandomPartitioner,
       compression = Some("ZstdCompressor"), chunkSize = 4 * 1024)
     val dir = new java.io.File(out)
@@ -541,16 +372,11 @@ class V2SinkSpec extends AnyFunSuite {
 
   test("manifest-less directories: no early-stop truncation, no false ordering claim") {
     import graft.core.CassandraParams
-    import graft.sinks.BulkSink
     import graft.sinks.v2.GraftBulkRead
     // md5-sorted random runs whose manifest goes missing (partial copy):
     // a murmur3 upper bound must NOT early-stop mid-file (murmur3 tokens
     // are unordered there) and the scan must not claim token ordering
-    val out = Files.createTempDirectory("graft-v2-nomanifest").toString
-    BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderstatus")),
-      Seq("o_orderkey"), 2, out,
+    val (out, _) = SparkSuite.bulkOrders("nomanifest", 2, Seq("o_orderkey", "o_orderstatus"),
       partitionerClass = CassandraParams.RandomPartitioner)
     val full = spark.read.format("graft-bulk").option("path", out).load().collect()
     assert(full.length === 1500)
@@ -566,153 +392,19 @@ class V2SinkSpec extends AnyFunSuite {
       "manifest-less md5 run was truncated by a murmur3 early-stop")
   }
 
-  test("aligned raw-payload rewrite recompresses without re-framing records") {
-    import graft.sinks.BulkSink
-    // write uncompressed -> rewrite to zstd via the aligned raw-payload
-    // path -> records must be BYTE-identical (a re-framing writer would
-    // wrap every value in another length prefix each generation)
-    val src = Files.createTempDirectory("graft-v2-rw-src").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", src).option("buckets", "4").mode("append").save()
-    val dst = Files.createTempDirectory("graft-v2-rw-dst").toString
-    spark.read.format("graft-bulk").option("path", src).load()
-      .select(col("token").as("_token"), col("pk").as("_pk"),
-        col("value"), col("bucket").as("_bucket"))
-      .write.format("graft-bulk")
-      .option("path", dst).option("aligned", "true").option("payload", "raw")
-      .option("compressionclass", "ZstdCompressor")
-      .option("chunksize", "4096").mode("append").save()
-
-    val srcRows = spark.read.format("graft-bulk").option("path", src).load()
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq,
-        r.getAs[Array[Byte]](2).toSeq)).toSet
-    val dstRows = spark.read.format("graft-bulk").option("path", dst).load()
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq,
-        r.getAs[Array[Byte]](2).toSeq)).toSet
-    assert(dstRows === srcRows, "rewrite changed record bytes")
-    val ms = BulkSink.readManifests(new java.io.File(dst)).filter(_.rows > 0)
-    assert(ms.nonEmpty && ms.forall(_.codec === "zstd"))
-    assert(ms.map(_.physicalBytes).sum < ms.map(_.bytes).sum)
-    // and a second rewrite back to uncompressed is still identical
-    // (idempotence across generations)
-    val dst2 = Files.createTempDirectory("graft-v2-rw-dst2").toString
-    spark.read.format("graft-bulk").option("path", dst).load()
-      .select(col("token").as("_token"), col("pk").as("_pk"),
-        col("value"), col("bucket").as("_bucket"))
-      .write.format("graft-bulk")
-      .option("path", dst2).option("aligned", "true").option("payload", "raw")
-      .mode("append").save()
-    val dst2Rows = spark.read.format("graft-bulk").option("path", dst2).load()
-      .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq,
-        r.getAs[Array[Byte]](2).toSeq)).toSet
-    assert(dst2Rows === srcRows)
-    // payload=raw refuses ambiguous shapes at plan time
-    val e = intercept[Exception] {
-      spark.read.format("graft-bulk").option("path", src).load()
-        .select(col("token").as("_token"), col("pk").as("_pk"),
-          col("value"), col("token").as("extra"), col("bucket").as("_bucket"))
-        .write.format("graft-bulk")
-        .option("path", Files.createTempDirectory("graft-v2-rw-bad").toString)
-        .option("aligned", "true").option("payload", "raw").mode("append").save()
-    }
-    assert(SparkSuite.causeMessages(e).exists(_.contains("payload=raw")))
-  }
-
-  test("aligned raw-payload rewrite serves RandomPartitioner directories too") {
-    import graft.core.CassandraParams
-    import graft.functions.cassandra_random_token
-    import graft.sinks.BulkSink
-    // md5-sorted source: the rewrite keys by the md5 token recomputed
-    // from the pk (the reader's murmur3 `token` is unordered here and
-    // would fail the writer's decorated-order check)
-    val src = Files.createTempDirectory("graft-v2-rw-rand").toString
-    BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderstatus")),
-      Seq("o_orderkey"), 4, src,
-      partitionerClass = CassandraParams.RandomPartitioner)
-    val dst = Files.createTempDirectory("graft-v2-rw-rand-dst").toString
-    spark.read.format("graft-bulk").option("path", src).load()
-      .select(cassandra_random_token(col("pk")).as("_token"), col("pk").as("_pk"),
-        col("value"), col("bucket").as("_bucket"))
-      .write.format("graft-bulk")
-      .option("path", dst).option("aligned", "true").option("payload", "raw")
-      .option("compressionclass", "LZ4Compressor").mode("append").save()
-    val ms = BulkSink.readManifests(new java.io.File(dst)).filter(_.rows > 0)
-    assert(ms.map(_.rows).sum === 1500)
-    assert(ms.forall(m => m.codec === "lz4" && m.minTokenHex.matches("[0-9a-f]{32}")))
-    // records byte-identical to the source
-    val srcRows = spark.read.format("graft-bulk").option("path", src).load()
-      .collect().map(r => (r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq)).toSet
-    val dstRows = spark.read.format("graft-bulk").option("path", dst).load()
-      .collect().map(r => (r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq)).toSet
-    assert(dstRows === srcRows)
-  }
-
-  test("mode(overwrite) truncates the previous load's runs, append keeps them") {
-    // regression: truncate() was a no-op, so overwrite left the old
-    // Data.db files beside the new manifest and the reader's
-    // pre-manifest fallback resurrected them as duplicate rows
-    val out = Files.createTempDirectory("graft-v2-ow").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", out).option("buckets", "4").mode("append").save()
-    assert(spark.read.format("graft-bulk").option("path", out).load().count() === 1500)
-    // overwrite with a SUBSET (500 rows, different bucket count)
-    spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .filter(col("o_orderkey") <= 2000)
-      .withColumn("_pk", partition_key(col("o_orderkey")))
-      .withColumn("_token", cassandra_token(col("_pk")))
-      .withColumn("_bucket", token_bucket(col("_token"), 2))
-      .write.format("graft-bulk")
-      .option("path", out).option("buckets", "2").mode("overwrite").save()
-    val back = spark.read.format("graft-bulk").option("path", out).load()
-    val expected = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-      .filter(col("o_orderkey") <= 2000).count()
-    assert(back.count() === expected,
-      "stale runs from the previous load leaked into the overwrite read")
-    // no stale artifacts on disk either
-    val names = new java.io.File(out).listFiles().map(_.getName)
-    assert(names.count(_.endsWith("-Data.db")) ===
-      graft.sinks.BulkSink.readManifests(new java.io.File(out)).length)
-  }
-
   test("unknown compressionclass fails at plan time, loudly") {
     val out = Files.createTempDirectory("graft-v2-badcodec").toString
     val e = intercept[Exception] {
-      prepared(4).write.format("graft-bulk")
-        .option("path", out).option("buckets", "4")
-        .option("compressionclass", "BrotliCompressor").mode("append").save()
+      BulkSink.writeSorted(spark.read.parquet("/root/testdata/sf0.001/orders.parquet"),
+        Seq("o_orderkey"), 4, out, compression = Some("BrotliCompressor"))
     }
     assert(SparkSuite.causeMessages(e).exists(_.contains("unsupported compressionclass")))
     // nothing was written
-    assert(!new java.io.File(out, "_MANIFEST.json").exists())
-  }
-
-  test("bucket-less write with a size advisory still emits valid sorted runs") {
-    import graft.sinks.BulkSink
-    // no fixed bucket count: Spark/AQE picks the partitioning (sized by
-    // the advisory); several ring buckets may share a task, which is a
-    // legal run shape — each task still writes one decorated-sorted run
-    val out = Files.createTempDirectory("graft-v2-advisory").toString
-    prepared(8).write.format("graft-bulk")
-      .option("path", out)
-      .option("advisorypartitionbytes", (64 * 1024).toString)
-      .mode("append").save()
-    val ms = BulkSink.readManifests(new java.io.File(out)).filter(_.rows > 0)
-    assert(ms.nonEmpty && ms.map(_.rows).sum === 1500)
-    assert(ms.forall(_.sorted))
-    val back = spark.read.format("graft-bulk").option("path", out).load()
-    assert(back.count() === 1500)
-    assert(back.filter(cassandra_token(col("pk")) =!= col("token")).count() === 0)
+    assert(new java.io.File(out).list().isEmpty)
   }
 
   test("limit and token top-n plan only the runs they need") {
-    import graft.sinks.BulkSink
-    val out = Files.createTempDirectory("graft-v2-limit").toString
-    val ms = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderstatus")),
-      Seq("o_orderkey"), 8, out)
+    val (out, ms) = SparkSuite.bulkOrders("limit", 8, Seq("o_orderkey", "o_orderstatus"))
     val nonEmpty = ms.count(_.rows > 0)
     assert(nonEmpty >= 4)
     def scan() = spark.read.format("graft-bulk").option("path", out).load()
@@ -739,16 +431,11 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("chunked run missing its Chunks.db sidecar fails loudly, not truncated") {
-    import graft.sinks.BulkSink
     // several chunks per run (1 KiB chunks), so a sequential decompressor
     // would stop at the first chunk boundary and silently return ~2% of
     // the rows — exactly the failure mode the reader must refuse
-    val out = Files.createTempDirectory("graft-v2-sidecar").toString
-    val ms = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderpriority")),
-      Seq("o_orderkey"), 2, out, compression = Some("ZstdCompressor"),
-      chunkSize = 1024)
+    val (out, ms) = SparkSuite.bulkOrders("sidecar", 2, Seq("o_orderkey", "o_orderpriority"),
+      compression = Some("ZstdCompressor"), chunkSize = 1024)
     assert(ms.filter(_.rows > 0).forall(_.chunks > 1),
       "test needs multi-chunk runs to be meaningful")
     assert(spark.read.format("graft-bulk").option("path", out).load().count() === 1500)
@@ -763,13 +450,8 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("corrupt Chunks.db sidecar fails as loudly as a missing one") {
-    import graft.sinks.BulkSink
-    val out = Files.createTempDirectory("graft-v2-badsidecar").toString
-    val ms = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderpriority")),
-      Seq("o_orderkey"), 1, out, compression = Some("ZstdCompressor"),
-      chunkSize = 1024)
+    val (out, ms) = SparkSuite.bulkOrders("badsidecar", 1, Seq("o_orderkey", "o_orderpriority"),
+      compression = Some("ZstdCompressor"), chunkSize = 1024)
     assert(ms.filter(_.rows > 0).forall(_.chunks > 1))
     assert(spark.read.format("graft-bulk").option("path", out).load().count() === 1500)
     // flip one chunk's physical offset so extents stop ascending — the
@@ -807,16 +489,11 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("legacy sequential compressed runs (pre-chunking manifest) still read") {
-    import graft.sinks.BulkSink
     // one chunk per run -> the file IS a single valid zstd stream, the
     // shape a pre-chunking writer produced; strip the manifest's chunks
     // field (it didn't exist then) and drop the sidecars
-    val out = Files.createTempDirectory("graft-v2-legacy").toString
-    BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderpriority")),
-      Seq("o_orderkey"), 2, out, compression = Some("ZstdCompressor"),
-      chunkSize = 32 * 1024 * 1024)
+    val (out, _) = SparkSuite.bulkOrders("legacy", 2, Seq("o_orderkey", "o_orderpriority"),
+      compression = Some("ZstdCompressor"), chunkSize = 32 * 1024 * 1024)
     val mf = java.nio.file.Paths.get(out, "_MANIFEST.json")
     val json = new String(Files.readAllBytes(mf))
     Files.write(mf, json.replaceAll("\"chunks\":-?\\d+,", "").getBytes)
@@ -831,8 +508,7 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("token top-n DESC is not fooled by a run pinned at the minimum token") {
-    import graft.sinks.{BulkSink, SortedRunWriter}
-    import graft.core.CqlValueCodec
+    import graft.sinks.SortedRunWriter
     // run 0: one empty partition key — its token pins to Long.MinValue,
     // where -maxToken overflows back to Long.MinValue and (before the fix)
     // sorted this run AHEAD of the true top runs in DESC planning
@@ -858,37 +534,8 @@ class V2SinkSpec extends AnyFunSuite {
       "DESC top-1 planned the Long.MinValue run instead of the true top run")
   }
 
-  test("a failed overwrite leaves the previous load intact and readable") {
-    val out = Files.createTempDirectory("graft-v2-ow-fail").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", out).option("buckets", "4").mode("append").save()
-    val before = spark.read.format("graft-bulk").option("path", out).load().collect()
-    assert(before.length === 1500)
-    // aligned=true skips the Catalyst sort and asserts sorted input; feed
-    // UNSORTED input so the run writer's order check fails the job mid-write
-    intercept[Exception] {
-      prepared(4).write.format("graft-bulk")
-        .option("path", out).option("buckets", "4").option("aligned", "true")
-        .mode("overwrite").save()
-    }
-    // the previous load survives the failed overwrite untouched: same
-    // rows, same manifest, and no staging leftovers
-    val after = spark.read.format("graft-bulk").option("path", out).load().collect()
-    assert(after.length === 1500)
-    assert(after.map(_.getLong(0)).sorted.toSeq ===
-      before.map(_.getLong(0)).sorted.toSeq)
-    val leftovers = new java.io.File(out).listFiles()
-      .filter(_.getName.startsWith("_overwrite-"))
-    assert(leftovers.isEmpty, s"staging leftovers: ${leftovers.mkString(", ")}")
-  }
-
   test("a truncated Data.db fails loudly instead of a silently partial scan") {
-    import graft.sinks.BulkSink
-    val out = Files.createTempDirectory("graft-v2-trunc").toString
-    BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderpriority")),
-      Seq("o_orderkey"), 2, out)
+    val (out, _) = SparkSuite.bulkOrders("trunc", 2, Seq("o_orderkey", "o_orderpriority"))
     assert(spark.read.format("graft-bulk").option("path", out).load().count() === 1500)
     // chop the tail off one run (a partial copy): the manifest's logical
     // byte count no longer matches what the stream yields
@@ -905,11 +552,7 @@ class V2SinkSpec extends AnyFunSuite {
 
     // the mirror corruption: EXTRA trailing records a stale manifest never
     // promised must also refuse, not silently emit more rows
-    val out2 = Files.createTempDirectory("graft-v2-overlong").toString
-    BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderpriority")),
-      Seq("o_orderkey"), 2, out2)
+    val (out2, _) = SparkSuite.bulkOrders("overlong", 2, Seq("o_orderkey", "o_orderpriority"))
     val victim2 = new java.io.File(out2).listFiles()
       .filter(_.getName.endsWith("-Data.db")).maxBy(_.length)
     val extra = new java.io.DataOutputStream(
@@ -925,51 +568,8 @@ class V2SinkSpec extends AnyFunSuite {
       s"expected the overlong guard, got: ${SparkSuite.causeMessages(e2).mkString(" | ")}")
   }
 
-  test("both sinks write identical value bytes for every column type") {
-    import graft.sinks.BulkSink
-    // pre-epoch timestamps with sub-millisecond digits: millis must floor
-    // on both sinks; decimal and the complex types go through the same
-    // encoder; every 7th row nulls each value column
-    val frame = spark.range(0, 64).select(col("id"),
-      concat(lit("k"), col("id").cast("string")).as("k"),
-      timestamp_micros(lit(-1500L) - col("id") * 1000003L).as("ts"),
-      timestamp_micros(lit(-2500L) - col("id") * 999L).cast("timestamp_ntz").as("ts_ntz"),
-      (col("id") * 1.234).cast("decimal(12,3)").as("dec"),
-      array(col("id").cast("float"), lit(null).cast("float"), lit(-0.5f)).as("arr"),
-      map(lit("a"), col("id").cast("int"), lit("b"), lit(null).cast("int")).as("m"),
-      struct(col("id").cast("int").as("x"), lit("y").as("y")).as("st"))
-    val valueCols = frame.columns.filterNot(Set("id", "k"))
-    val df = frame.select(col("k") +: valueCols.map(c =>
-      when(col("id") % 7 === 0, lit(null)).otherwise(col(c)).as(c)): _*)
-    def valuesByKey(dir: String): Map[String, String] =
-      spark.read.format("graft-bulk").option("path", dir).load().collect()
-        .map(r => graft.core.CqlValueCodec.toHex(r.getAs[Array[Byte]]("pk")) ->
-          graft.core.CqlValueCodec.toHex(r.getAs[Array[Byte]]("value"))).toMap
-
-    val rddOut = Files.createTempDirectory("graft-xsink-rdd").toString
-    BulkSink.writeSorted(df, Seq("k"), 2, rddOut)
-    val v2Out = Files.createTempDirectory("graft-xsink-v2").toString
-    df.withColumn("_pk", partition_key(col("k")))
-      .withColumn("_token", cassandra_token(col("_pk")))
-      .withColumn("_bucket", token_bucket(col("_token"), 2))
-      .write.format("graft-bulk").option("path", v2Out).option("buckets", "2")
-      .mode("append").save()
-    val (a, b) = (valuesByKey(rddOut), valuesByKey(v2Out))
-    assert(a.size === 64 && a.keySet === b.keySet)
-    a.foreach { case (k, v) => assert(b(k) === v, s"value bytes differ for key $k") }
-    // row 1's ts is -1001503 us: its millis floor to -1002, not -1001
-    val row1 = a(graft.core.CqlValueCodec.toHex("k1".getBytes("UTF-8")))
-    assert(row1.contains(graft.core.CqlValueCodec.toHex(
-      graft.core.CqlValueCodec.serializeLong(-1002L))), row1)
-  }
-
   test("a manifest-less run torn inside a key-length prefix fails the scan") {
-    import graft.sinks.BulkSink
-    val out = Files.createTempDirectory("graft-v2-torn").toString
-    val Seq(m) = BulkSink.writeSorted(
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .select(col("o_orderkey"), col("o_orderpriority")),
-      Seq("o_orderkey"), 1, out)
+    val (out, Seq(m)) = SparkSuite.bulkOrders("torn", 1, Seq("o_orderkey", "o_orderpriority"))
     // the second sparse-index entry's offset is a record boundary; keep
     // one byte past it, so the run ends inside that record's prefix
     val idx = new java.io.DataInputStream(new java.io.FileInputStream(
@@ -986,37 +586,93 @@ class V2SinkSpec extends AnyFunSuite {
       s"expected a torn-record failure, got: ${SparkSuite.causeMessages(e).mkString(" | ")}")
   }
 
-  test("graft-bulk write metrics in the SQL status store equal the manifest sums") {
-    import graft.sinks.BulkSink
-    import graft.sinks.v2.{BytesWrittenMetric, RowsWrittenMetric}
-    val out = Files.createTempDirectory("graft-v2-metrics").toString
-    prepared(4).write.format("graft-bulk")
-      .option("path", out).option("buckets", "4").mode("append").save()
-    val ms = BulkSink.readManifests(new java.io.File(out))
-    val store = spark.sharedState.statusStore
-    // the store is fed by the listener bus: poll until the write's
-    // execution has its final metric values
-    def metric(cls: Class[_]): Option[Long] = store.executionsList()
-      .filter(_.metrics.exists(_.metricType.endsWith(cls.getName)))
-      .sortBy(_.executionId).lastOption.flatMap { ex =>
-        val values = store.executionMetrics(ex.executionId)
-        ex.metrics.find(_.metricType.endsWith(cls.getName))
-          .flatMap(pm => values.get(pm.accumulatorId)).map(_.trim.toLong)
+  test("a load into a directory that holds one is refused before any job, plain and salted") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.Bridge
+    val sc = spark.sparkContext
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
       }
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    def rowsAndBytes = (metric(classOf[RowsWrittenMetric]), metric(classOf[BytesWrittenMetric]))
-    val expected = (Some(ms.map(_.rows).sum), Some(ms.map(_.bytes).sum))
-    while (rowsAndBytes != expected && System.nanoTime() < deadline) Thread.sleep(100)
-    assert(expected._1 === Some(1500L))
-    assert(rowsAndBytes === expected)
+      Bridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try { body; Bridge.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
+      jobs.get
+    }
+    def snapshot(dir: String) = (new java.io.File(dir).list().sorted.toSeq,
+      spark.read.format("graft-bulk").option("path", dir).load().collect()
+        .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq))
+        .sortBy(r => (r._1, r._2.toString)).toSeq)
+    val (out, _) = SparkSuite.bulkOrders("reload", 4)
+    val before = snapshot(out)
+    // a subset with fewer buckets: before the refusal this left two of the
+    // old runs unmanifested (read back beside the new ones), and the
+    // salted reload died at its first rename with new runs in place
+    val subset = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+      .filter(col("o_orderkey") % 3 === 0)
+    val reloads = Seq[(String, () => Any)](
+      "plain" -> (() => BulkSink.writeSorted(subset, Seq("o_orderkey"), 2, out)),
+      "salted" -> (() => BulkSink.writeSortedSalted(subset, Seq("o_orderkey"), 2, out,
+        Map(0 -> 2))))
+    reloads.foreach { case (kind, reload) =>
+      var e: IllegalArgumentException = null
+      val jobs = jobsDuring { e = intercept[IllegalArgumentException](reload()) }
+      assert(e.getMessage.contains(out), s"$kind refusal does not name the directory")
+      assert(jobs === 0, s"$kind reload ran $jobs jobs before refusing")
+      assert(snapshot(out) === before, s"$kind reload changed the first load")
+    }
+    // any one load artifact is enough to refuse; an empty dir loads
+    for (artifact <- Seq("_MANIFEST.json", "_STREAM_PLAN.json", "_salt-tmp",
+        "graft-00007-Data.db")) {
+      val dir = Files.createTempDirectory("graft-bulk-held")
+      if (artifact == "_salt-tmp") Files.createDirectory(dir.resolve(artifact))
+      else Files.write(dir.resolve(artifact), Array.emptyByteArray)
+      intercept[IllegalArgumentException](
+        BulkSink.writeSorted(subset, Seq("o_orderkey"), 2, dir.toString))
+    }
+    val empty = Files.createTempDirectory("graft-bulk-empty").toString
+    assert(BulkSink.writeSorted(subset, Seq("o_orderkey"), 2, empty).map(_.rows).sum ===
+      subset.count())
   }
 
-  test("v2 sink rejects input without routing columns") {
-    val out = Files.createTempDirectory("graft-v2-bad").toString
-    val e = intercept[Exception] {
-      spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-        .write.format("graft-bulk").option("path", out).mode("append").save()
+  test("with unique keys, input order changes no byte of the written runs") {
+    // records are ordered by decorated key only, so distinct keys leave
+    // nothing to arrival order. Every column type goes through the one
+    // encoder: pre-epoch timestamps with sub-millisecond digits (millis
+    // floor), decimal and the complex types; every 7th row nulls each
+    // value column
+    val frame = spark.range(0, 64).select(col("id"),
+      concat(lit("k"), col("id").cast("string")).as("k"),
+      timestamp_micros(lit(-1500L) - col("id") * 1000003L).as("ts"),
+      timestamp_micros(lit(-2500L) - col("id") * 999L).cast("timestamp_ntz").as("ts_ntz"),
+      (col("id") * 1.234).cast("decimal(12,3)").as("dec"),
+      array(col("id").cast("float"), lit(null).cast("float"), lit(-0.5f)).as("arr"),
+      map(lit("a"), col("id").cast("int"), lit("b"), lit(null).cast("int")).as("m"),
+      struct(col("id").cast("int").as("x"), lit("y").as("y")).as("st"))
+    val valueCols = frame.columns.filterNot(Set("id", "k"))
+    val df = frame.select(col("k") +: valueCols.map(c =>
+      when(col("id") % 7 === 0, lit(null)).otherwise(col(c)).as(c)): _*)
+    def written(input: org.apache.spark.sql.DataFrame, codec: Option[String]) = {
+      val out = Files.createTempDirectory("graft-bulk-order").toFile
+      BulkSink.writeSorted(input, Seq("k"), 3, out.toString, compression = codec,
+        chunkSize = 1024)
+      out -> out.listFiles().map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq)
+        .sortBy(_._1).toSeq
     }
-    assert(e.getMessage.contains("_pk") || e.getCause != null)
+    for (codec <- Seq(None, Some("LZ4Compressor"))) {
+      val (dir, ascending) = written(df.coalesce(1), codec)
+      val (_, descending) = written(df.orderBy(col("k").desc).coalesce(1), codec)
+      val (_, scattered) = written(df.repartition(5, col("ts")), codec)
+      assert(ascending === descending, s"input order changed the runs ($codec)")
+      assert(ascending === scattered, s"input partitioning changed the runs ($codec)")
+      // row 1's ts is -1001503 us: its millis floor to -1002, not -1001
+      val values = spark.read.format("graft-bulk").option("path", dir.toString).load()
+        .collect().map(r => CqlValueCodec.toHex(r.getAs[Array[Byte]]("pk")) ->
+          CqlValueCodec.toHex(r.getAs[Array[Byte]]("value"))).toMap
+      val row1 = values(CqlValueCodec.toHex("k1".getBytes("UTF-8")))
+      assert(values.size === 64 &&
+        row1.contains(CqlValueCodec.toHex(CqlValueCodec.serializeLong(-1002L))), row1)
+    }
   }
 }
