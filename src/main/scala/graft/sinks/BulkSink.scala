@@ -43,7 +43,7 @@ object BulkSink {
    * unseeded-Random-per-job; here it is seeded so any task, retry, or
    * re-run computes the identical bijection with no config channel.
    */
-  def slotPermutation(n: Int, seed: Long = DefaultSlotSeed): Array[Int] = {
+  private[graft] def slotPermutation(n: Int, seed: Long = DefaultSlotSeed): Array[Int] = {
     val perm = Array.tabulate(n)(identity)
     val rnd = new java.util.Random(seed)
     var i = n - 1
@@ -53,6 +53,15 @@ object BulkSink {
       i -= 1
     }
     perm
+  }
+
+  /** The inverse of [[slotPermutation]]: the ring bucket each reducer
+    * slot owns. A task derives its bucket from its partition id with it
+    * (same seed -> same bijection, no config channel). */
+  private[sinks] def slotOwners(n: Int): Array[Int] = {
+    val owner = new Array[Int](n)
+    slotPermutation(n).zipWithIndex.foreach { case (slot, b) => owner(slot) = b }
+    owner
   }
 
   /** Ring-bucket partitioner: bucket b -> partition perm(b) (bijective). */
@@ -139,7 +148,11 @@ object BulkSink {
    * engine's one writer of the run format. `keyCols` form the partition
    * key (composite if 2+). Every column is encoded by
    * [[CqlValueCodec.rowEncoder]]. Returns per-partition manifests (also
-   * persisted as _MANIFEST.json).
+   * persisted as _MANIFEST.json). A ring-aligned run (Murmur3 or
+   * RandomPartitioner) is named, and its manifest `partition` set, by
+   * its ring bucket, whichever reducer slot wrote it, as
+   * [[writeSortedSalted]] names it; a `distributerandomly` run owns no
+   * bucket and keeps its reducer slot.
    *
    * Records are ordered by decorated key (token, then key bytes) and by
    * nothing else: records that share a partition key keep the order in
@@ -171,6 +184,8 @@ object BulkSink {
         s"unknown partitioner class: $other")
     }
     Files.createDirectories(Paths.get(outDir))
+    val runId: Array[Int] =
+      if (distributeRandomly) Array.tabulate(numBuckets)(identity) else slotOwners(numBuckets)
 
     // distributerandomly changes ONLY the routing; the shuffle still sorts
     // every partition in decorated-key order, so both paths emit valid
@@ -189,7 +204,7 @@ object BulkSink {
       implicit val ord: Ordering[(Array[Byte], Array[Byte])] = randomDecoratedOrdering
       val aligned = keyed.repartitionAndSortWithinPartitions(partitioner)
       aligned.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single(writeRandomPartition(outDir, pid, it, codec, chunkSize))
+        Iterator.single(writeRandomPartition(outDir, runId(pid), it, codec, chunkSize))
       }.collect().toSeq
     } else {
       val keyed = keyedRows(df, keyCols, CassandraTokens.token)
@@ -198,7 +213,7 @@ object BulkSink {
         else new RingPartitioner(numBuckets)
       val aligned = keyed.repartitionAndSortWithinPartitions(partitioner)
       aligned.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single(writePartition(outDir, pid, it, indexInterval, codec, chunkSize))
+        Iterator.single(writePartition(outDir, runId(pid), it, indexInterval, codec, chunkSize))
       }.collect().toSeq
     }
 
@@ -265,7 +280,8 @@ object BulkSink {
    * and the sink then K-WAY MERGES each hot range's `k` sorted sub-runs
    * back into ONE globally decorated-key-sorted run, so the output
    * layout is indistinguishable from an unsalted write: one sorted run
-   * per ring bucket, manifest `partition` = bucket id. Unsalted buckets
+   * per ring bucket, named by the bucket, manifest `partition` = bucket
+   * id, as [[writeSorted]] names it. Unsalted buckets
    * write final-form runs in one pass (their files just move into
    * place).
    *
@@ -294,10 +310,8 @@ object BulkSink {
     val kOf = partitioner.kOf
     val offsets = partitioner.offsets
     // a task derives which (bucket, sub) it owns by inverting the slot
-    // permutation (same seed -> same bijection, no config channel)
-    val perm = slotPermutation(partitioner.total)
-    val inv = new Array[Int](perm.length)
-    perm.zipWithIndex.foreach { case (p, s) => inv(p) = s }
+    // permutation over the sub-buckets
+    val inv = slotOwners(partitioner.total)
 
     val aligned = keyedRows(df, keyCols, CassandraTokens.token)
       .repartitionAndSortWithinPartitions(partitioner)

@@ -20,16 +20,30 @@ import graft.sinks.{BulkSink, SortedRunWriter}
  * bucket) rows. Lets a distributed verification or repair job re-scan a
  * bulk load without any driver-side file handling.
  *
- * Token predicates PUSH DOWN, the per-range read the reference's loader
- * does with per-range file sections (ExternalSSTableLoaderClient.java:
- * 57-137 supplies ranges; streamSSTables sends only matching sections):
+ * Token predicates PUSH DOWN and apply EXACTLY, the per-range read the
+ * reference's loader does with per-range file sections
+ * (ExternalSSTableLoaderClient.java:57-137 supplies ranges;
+ * streamSSTables sends only matching sections):
  *  - the manifest's [minToken, maxToken] prunes whole runs;
  *  - the sparse Index.db seeks past the leading bytes of a run (offset
  *    of the last entry strictly below the bound; compressed runs resolve
  *    it through their chunk map, ADR 0001);
- *  - runs are token-sorted, so every reader early-stops past the upper
- *    bound.
- * Filters stay residual: Spark re-evaluates them, pruning is best-effort.
+ *  - every reader drops the tokens outside the band [lo, hi]; a
+ *    Murmur3-sorted run stops at its first token above hi, while an
+ *    md5-sorted RandomPartitioner run or a file with no manifest (whose
+ *    murmur3 tokens are unordered) reads to its end.
+ * So a pushed token comparison leaves no Filter behind: Spark plans the
+ * same code for every range (the literals never reach generated code)
+ * and reuses it from its codegen cache. Only what the band cannot express
+ * stays residual: other columns, non-Long literals, and `token >
+ * Long.MaxValue` / `token < Long.MinValue`, which match nothing but
+ * saturate to a band holding the extreme token.
+ *
+ * A range scan that aggregates still costs two jobs (the AQE map stage
+ * and the result stage): Spark 4.1's DataSourceV2ScanExecBase reports
+ * UnknownPartitioning(0) unless the scan is key-grouped, so a global
+ * aggregate's AllTuples plans an exchange even over one split. Only a
+ * query that reads `bucket` (below) can be key-grouped.
  *
  * Columns PRUNE too: value payloads (the bulk of every record) are skipped
  * in the stream, never allocated, when the query does not read `value` —
@@ -41,13 +55,13 @@ import graft.sinks.{BulkSink, SortedRunWriter}
  *    so per-partition output ordering is (token ASC, pk ASC) — a sort
  *    within partitions on that ordering plans no Sort over it;
  *  - SupportsReportPartitioning: every row of a split shares the split's
- *    `bucket` (the originating ring slot), reported as key-grouped
- *    partitioning on the `bucket` column (each split carries its key via
- *    HasPartitionKey) — with spark.sql.sources.v2.bucketing.enabled a
- *    per-run aggregation plans no Exchange. The ring-bucket FUNCTION
- *    itself (unsigned token ranges + slot permutation) is not a Catalyst
- *    partitioning, so token-derived clusterings still exchange; the
- *    bucket column is the declared, checkable surface;
+ *    `bucket` (the run's ring bucket, for plain and salted loads alike),
+ *    reported as key-grouped partitioning on the `bucket` column (each
+ *    split carries its key via HasPartitionKey) — with
+ *    spark.sql.sources.v2.bucketing.enabled a per-run aggregation plans
+ *    no Exchange. The ring-bucket FUNCTION itself (unsigned token ranges)
+ *    is not a Catalyst partitioning, so token-derived clusterings still
+ *    exchange; the bucket column is the declared, checkable surface;
  *  - SupportsRuntimeFiltering: a broadcast join's actual token values
  *    narrow the split plan at execution time (per-run IN-set pruning);
  *  - LIMIT and ORDER-BY-token-LIMIT plan only the runs needed to cover
@@ -61,24 +75,48 @@ object GraftBulkRead {
     StructField("bucket", IntegerType, nullable = false)))
 
   /** One planned file read: start at `startOffset` (0 unless an index
-    * seek applies), stop after the first token above `hiBound`.
+    * seek applies) and return the rows whose token lies in [`loBound`,
+    * `hiBound`]; `sorted` (a Murmur3-sorted run) lets the read stop at
+    * the first token above `hiBound`, otherwise it reads to the end.
     * `estRows`/`estBytes` pro-rate the manifest totals to the pushed
     * token band via the sparse index (whole-run totals when no index
-    * can narrow them); `bucket` is the originating ring slot (-1 when
-    * unknown: pre-manifest dirs with unparseable names); `minToken`/
-    * `maxToken` echo the manifest range for set-pruning consumers. */
+    * can narrow them); `bucket` is the run's ring bucket (its reducer
+    * slot for a `distributerandomly` load, -1 when unknown: pre-manifest
+    * dirs with unparseable names); `minToken`/`maxToken` echo the
+    * manifest range for set-pruning consumers. */
   final case class PlannedSplit(file: String, codec: String,
-      startOffset: Long, hiBound: Long, bucket: Int = -1,
-      estRows: Long = 0L, estBytes: Long = 0L,
+      startOffset: Long, loBound: Long, hiBound: Long, sorted: Boolean,
+      bucket: Int = -1, estRows: Long = 0L, estBytes: Long = 0L,
       minToken: Long = Long.MinValue, maxToken: Long = Long.MaxValue,
       chunked: Boolean = false, totalBytes: Long = -1L)
+
+  /** The inclusive band (lo, hi) a comparison of `token` with a Long
+    * bounds, None for any other filter. The exclusive comparisons
+    * saturate at the extremes instead of overflowing, so `token >
+    * Long.MaxValue` and `token < Long.MinValue` yield a band one token
+    * too wide: see [[appliesExactly]]. */
+  private[v2] def tokenBand(f: Filter): Option[(Option[Long], Option[Long])] = f match {
+    case GreaterThan("token", v: Long)        => Some((Some(if (v == Long.MaxValue) v else v + 1), None))
+    case GreaterThanOrEqual("token", v: Long) => Some((Some(v), None))
+    case LessThan("token", v: Long)           => Some((None, Some(if (v == Long.MinValue) v else v - 1)))
+    case LessThanOrEqual("token", v: Long)    => Some((None, Some(v)))
+    case EqualTo("token", v: Long)            => Some((Some(v), Some(v)))
+    case _                                    => None
+  }
+
+  /** True when reading [[tokenBand]]'s band returns exactly the rows `f`
+    * keeps, so Spark need not re-apply it. */
+  private[v2] def appliesExactly(f: Filter): Boolean = f match {
+    case GreaterThan("token", Long.MaxValue) | LessThan("token", Long.MinValue) => false
+    case _ => tokenBand(f).isDefined
+  }
 
   private val RunNameRe = """graft-(\d+)-Data\.db""".r
 
   /**
    * Plan the splits a scan needs given an optional token range [lo, hi],
    * both inclusive. Files without a manifest entry (pre-manifest dirs)
-   * full-scan uncompressed — and are never early-stopped: with no
+   * read uncompressed from byte 0 and are never early-stopped: with no
    * manifest there is no evidence of murmur3 sort order, and stopping an
    * md5-sorted (or unsorted) file at the first out-of-band murmur3 token
    * would silently drop rows. ONE manifest read and at most one index
@@ -89,7 +127,7 @@ object GraftBulkRead {
       preRead: Option[Seq[BulkSink.PartitionManifest]] = None): Seq[PlannedSplit] = {
     val manifests = preRead.getOrElse(BulkSink.readManifests(dir))
       .map(m => m.dataFile -> m).toMap
-    val hiBound = hi.getOrElse(Long.MaxValue)
+    val (loBound, hiBound) = (lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
     val files = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith("-Data.db")).sortBy(_.getName)
     def bucketOf(name: String): Int = name match {
@@ -120,17 +158,16 @@ object GraftBulkRead {
                   math.max(1L, math.ceil(m.bytes * frac).toLong))
               } else (0L, m.rows, m.bytes)
             // RandomPartitioner runs (hex token range in the manifest) are
-            // md5-sorted, NOT murmur3-sorted: the reader's early-stop on
-            // recomputed murmur3 tokens would truncate them mid-file, so
-            // they always read to EOF (their Long range is pinned full-ring,
-            // so the bounds above never prune them either)
-            val effectiveHi = if (m.minTokenHex.nonEmpty) Long.MaxValue else hiBound
-            Some(PlannedSplit(f.getAbsolutePath, m.codec, start, effectiveHi,
-              m.partition, estRows, estBytes, m.minToken, m.maxToken,
-              chunked = m.chunks > 0, totalBytes = m.bytes))
+            // md5-sorted, NOT murmur3-sorted: stopping at the first
+            // recomputed murmur3 token above hi would truncate them
+            // mid-file, so they filter row by row to EOF (their Long range
+            // is pinned full-ring, so the bounds above never prune them)
+            Some(PlannedSplit(f.getAbsolutePath, m.codec, start, loBound, hiBound,
+              sorted = m.minTokenHex.isEmpty, m.partition, estRows, estBytes,
+              m.minToken, m.maxToken, chunked = m.chunks > 0, totalBytes = m.bytes))
           }
         case None =>
-          Some(PlannedSplit(f.getAbsolutePath, "none", 0L, Long.MaxValue,
+          Some(PlannedSplit(f.getAbsolutePath, "none", 0L, loBound, hiBound, sorted = false,
             bucketOf(f.getName), estRows = 0L, estBytes = f.length()))
       }
     }.toSeq
@@ -237,27 +274,15 @@ final class GraftBulkScanBuilder(path: String) extends ScanBuilder
   private def raiseLo(v: Long): Unit = lo = Some(lo.fold(v)(math.max(_, v)))
   private def lowerHi(v: Long): Unit = hi = Some(hi.fold(v)(math.min(_, v)))
 
+  /** Folds every token comparison into the band [lo, hi] the reader
+    * applies, and hands back only the filters that band does not apply
+    * exactly ([[GraftBulkRead.appliesExactly]]): with none left, Spark
+    * plans no Filter over the scan. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val usable = filters.filter {
-      case GreaterThan("token", _: Long) | GreaterThanOrEqual("token", _: Long) |
-           LessThan("token", _: Long) | LessThanOrEqual("token", _: Long) |
-           EqualTo("token", _: Long) => true
-      case _ => false
-    }
-    usable.foreach {
-      // saturate at the extremes instead of overflowing; the (weaker)
-      // bound is still safe because filters stay residual
-      case GreaterThan("token", v: Long) =>
-        raiseLo(if (v == Long.MaxValue) v else v + 1)
-      case GreaterThanOrEqual("token", v: Long) => raiseLo(v)
-      case LessThan("token", v: Long) =>
-        lowerHi(if (v == Long.MinValue) v else v - 1)
-      case LessThanOrEqual("token", v: Long) => lowerHi(v)
-      case EqualTo("token", v: Long)         => raiseLo(v); lowerHi(v)
-      case _                                 => ()
-    }
-    pushed = usable
-    filters // all residual — Spark re-applies every filter after the scan
+    val banded = filters.flatMap(f => GraftBulkRead.tokenBand(f).map(f -> _))
+    banded.foreach { case (_, (l, h)) => l.foreach(raiseLo); h.foreach(lowerHi) }
+    pushed = banded.map(_._1)
+    filters.filterNot(GraftBulkRead.appliesExactly)
   }
 
   override def pushedFilters(): Array[Filter] = pushed
@@ -360,10 +385,11 @@ final class GraftBulkScan(path: String, required: StructType,
     Array(Expressions.column("token"))
 
   /** Runtime narrowing: fold the join-side token values/bounds into the
-    * planned band and re-plan splits. Only [min, max] of an IN set is
-    * used — runs are token-RANGE pruned, exactness stays with Spark's
-    * post-scan join. Unknown filter shapes are ignored (pruning is
-    * best-effort; correctness never depends on it). */
+    * band the reader applies and re-plan splits. An IN set narrows the
+    * band to its [min, max] and prunes runs holding none of its values;
+    * the band stays a superset of the set, which is safe because the
+    * join that produced it still applies after the scan. Unknown filter
+    * shapes are ignored. */
   override def filter(filters: Array[Filter]): Unit = {
     var newLo = lo
     var newHi = hi
@@ -376,12 +402,9 @@ final class GraftBulkScan(path: String, required: StructType,
         raise(longs.min); lower(longs.max)
         // intersect with any previous set (both filters must hold)
         newSet = Some(newSet.fold(longs)(prev => prev.intersect(longs)))
-      case EqualTo("token", v: Long)            => raise(v); lower(v)
-      case GreaterThan("token", v: Long)        => raise(if (v == Long.MaxValue) v else v + 1)
-      case GreaterThanOrEqual("token", v: Long) => raise(v)
-      case LessThan("token", v: Long)           => lower(if (v == Long.MinValue) v else v - 1)
-      case LessThanOrEqual("token", v: Long)    => lower(v)
-      case _                                    => ()
+      case f => GraftBulkRead.tokenBand(f).foreach { case (l, h) =>
+        l.foreach(raise); h.foreach(lower)
+      }
     }
     if (newLo != lo || newHi != hi || newSet.map(_.toSet) != inSet.map(_.toSet)) {
       lo = newLo; hi = newHi; inSet = newSet
@@ -393,8 +416,7 @@ final class GraftBulkScan(path: String, required: StructType,
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] =
-    splits.map(s => GraftBulkInputPartition(s.file, s.codec, s.startOffset,
-      s.hiBound, s.bucket, s.chunked, s.totalBytes): InputPartition).toArray
+    splits.map(s => GraftBulkInputPartition(s): InputPartition).toArray
 
   // manifest-derived estimates AFTER token pruning (pro-rated into a run
   // by its sparse index), so Catalyst can broadcast a narrowly-filtered
@@ -426,9 +448,9 @@ final class GraftBulkScan(path: String, required: StructType,
     }
   }
 
-  // every row of a split shares the split's ring slot: key-grouped on the
-  // `bucket` column when it survives pruning and every split knows its
-  // slot (HasPartitionKey carries the per-split key)
+  // every row of a split shares the split's ring bucket: key-grouped on
+  // the `bucket` column when it survives pruning and every split knows
+  // its bucket (HasPartitionKey carries the per-split key)
   override def outputPartitioning(): Partitioning = {
     val names = required.fieldNames
     if (names.contains("bucket") && splits.nonEmpty && splits.forall(_.bucket >= 0))
@@ -440,51 +462,49 @@ final class GraftBulkScan(path: String, required: StructType,
     new GraftBulkReaderFactory(required.fieldNames)
 }
 
-final case class GraftBulkInputPartition(file: String, codec: String,
-    startOffset: Long = 0L, hiBound: Long = Long.MaxValue, bucket: Int = -1,
-    chunked: Boolean = false, totalBytes: Long = -1L)
+final case class GraftBulkInputPartition(split: GraftBulkRead.PlannedSplit)
     extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](bucket))
+  override def partitionKey(): InternalRow = new GenericInternalRow(Array[Any](split.bucket))
 }
 
 final class GraftBulkReaderFactory(columns: Array[String] = GraftBulkRead.schema.fieldNames)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftBulkInputPartition]
-    new GraftBulkPartitionReader(p.file, p.codec, p.startOffset, p.hiBound,
-      columns, p.bucket, p.chunked, p.totalBytes)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new GraftBulkPartitionReader(partition.asInstanceOf[GraftBulkInputPartition].split, columns)
 }
 
-final class GraftBulkPartitionReader(file: String, codec: String = "none",
-    startOffset: Long = 0L, hiBound: Long = Long.MaxValue,
-    columns: Array[String] = GraftBulkRead.schema.fieldNames,
-    bucket: Int = -1, chunked: Boolean = false, totalBytes: Long = -1L)
+final class GraftBulkPartitionReader(split: GraftBulkRead.PlannedSplit,
+    columns: Array[String] = GraftBulkRead.schema.fieldNames)
     extends PartitionReader[InternalRow] {
   // the value payload is the bulk of a record's bytes; when pruned away it
   // is SKIPPED in the stream, never allocated (the key must always be read
-  // to advance the frame, and it feeds the early-stop token anyway). A
-  // natural end must land EXACTLY on the manifest's logical byte count,
-  // regardless of any early-stop bound: a bounded split that stops early
-  // never reaches the end of the stream.
+  // to advance the frame, and it yields the token anyway). A natural end
+  // must land EXACTLY on the manifest's logical byte count, regardless of
+  // the band: a sorted split that stops early never reaches the end of
+  // the stream.
   private val records = new SortedRunWriter.RecordCursor(
-    SortedRunWriter.openLogical(new File(file), codec, chunked, startOffset), file,
-    readValues = columns.contains("value"), declaredBytes = totalBytes,
-    startOffset = startOffset)
+    SortedRunWriter.openLogical(new File(split.file), split.codec, split.chunked,
+      split.startOffset), split.file,
+    readValues = columns.contains("value"), declaredBytes = split.totalBytes,
+    startOffset = split.startOffset)
   private var current: InternalRow = _
 
-  override def next(): Boolean = records.next() && {
-    val token = CassandraTokens.token(records.key)
-    // runs are token-sorted: past the upper bound nothing else matches
-    token <= hiBound && {
-      current = new GenericInternalRow(columns.map[Any] {
-        case "token"  => token
-        case "pk"     => records.key
-        case "value"  => records.value
-        case "bucket" => bucket
-      })
-      true
+  override def next(): Boolean = {
+    while (records.next()) {
+      val token = CassandraTokens.token(records.key)
+      // a sorted run holds nothing in band past its first token above hi
+      if (token > split.hiBound) { if (split.sorted) return false }
+      else if (token >= split.loBound) {
+        current = new GenericInternalRow(columns.map[Any] {
+          case "token"  => token
+          case "pk"     => records.key
+          case "value"  => records.value
+          case "bucket" => split.bucket
+        })
+        return true
+      }
     }
+    false
   }
 
   override def get(): InternalRow = current

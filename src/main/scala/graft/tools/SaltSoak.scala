@@ -78,12 +78,10 @@ object SaltSoak {
       else subRows.max.toDouble / (subRows.sum.toDouble / subRows.size)
 
     // the salt+merge round trip moves no row across ring buckets: the
-    // per-bucket (rows, bytes) of the two layouts must be identical.
-    // plain pids are the slot permutation of the bucket; salted pids ARE
-    // the bucket
-    val perm = BulkSink.slotPermutation(buckets)
+    // per-bucket (rows, bytes) of the two layouts must be identical;
+    // both name a run by its ring bucket
     val mismatches = (0 until buckets).count { b =>
-      val p = plain.find(_.partition == perm(b))
+      val p = plain.find(_.partition == b)
       val s = salted.find(_.partition == b)
       p.map(m => (m.rows, m.bytes)) != s.map(m => (m.rows, m.bytes))
     }

@@ -143,13 +143,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(manifests.length === 4)
     assert(manifests.map(_.rows).sum === orders.count())
     assert(manifests.forall(_.sorted))
-    // ring alignment: each partition holds exactly one ring bucket, mapped
-    // through the seeded slot permutation (bucket b -> partition perm(b))
-    val perm = BulkSink.slotPermutation(4)
+    // ring alignment: each run holds exactly one ring bucket and is named
+    // by it, whichever reducer slot the permutation gave it
     manifests.filter(_.rows > 0).foreach { m =>
       val bucket = CassandraTokens.bucketOfToken(m.minToken, 4)
       assert(CassandraTokens.bucketOfToken(m.maxToken, 4) === bucket)
-      assert(perm(bucket) === m.partition)
+      assert(bucket === m.partition)
+      assert(m.dataFile === f"graft-$bucket%05d-Data.db")
     }
     assert(new java.io.File(dir, "_MANIFEST.json").exists())
     // data files parse back: short keylen + key + int vallen + val
@@ -241,8 +241,7 @@ class PipelineSpec extends AnyFunSuite {
     // the sorted-run contract survived the salt+merge round trip
     val dir2 = java.nio.file.Files.createTempDirectory("graft-salt0").toString
     val plain = BulkSink.writeSorted(df, Seq("rowkey"), numBuckets, dir2)
-    val perm = BulkSink.slotPermutation(numBuckets)
-    val plainHot = plain.find(_.partition == perm(hotBucket)).get
+    val plainHot = plain.find(_.partition == hotBucket).get
     assert(plainHot.rows === hot.rows && plainHot.bytes === hot.bytes)
     val a = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, hot.dataFile))
@@ -250,6 +249,31 @@ class PipelineSpec extends AnyFunSuite {
       java.nio.file.Paths.get(dir2, plainHot.dataFile))
     assert(java.util.Arrays.equals(a, b),
       "salted+merged run bytes differ from the unsalted run")
+  }
+
+  test("plain and salted loads of one input name every ring bucket's run alike") {
+    val numBuckets = 4
+    val hotBucket = 2
+    val df = (0 until 3000).map(i => s"np-$i").toDF("rowkey")
+      .withColumn("v", length(col("rowkey")).cast("long"))
+    val plainDir = java.nio.file.Files.createTempDirectory("graft-name-plain").toString
+    val saltDir = java.nio.file.Files.createTempDirectory("graft-name-salt").toString
+    val plain = BulkSink.writeSorted(df, Seq("rowkey"), numBuckets, plainDir)
+    val salted = BulkSink.writeSortedSalted(df, Seq("rowkey"), numBuckets, saltDir,
+      Map(hotBucket -> 3))
+    assert(BulkSink.slotPermutation(numBuckets).toSeq !== (0 until numBuckets),
+      "an identity permutation cannot tell a slot from a bucket")
+    def layout(ms: Seq[BulkSink.PartitionManifest]) = ms.filter(_.partition != hotBucket)
+      .map(m => (m.partition, m.dataFile, m.minToken, m.maxToken)).sortBy(_._1)
+    assert(layout(plain).size === numBuckets - 1)
+    assert(layout(plain) === layout(salted))
+    // the reader's bucket column is the ring bucket of every row, both ways
+    Seq(plainDir, saltDir).foreach { dir =>
+      val back = spark.read.format("graft-bulk").option("path", dir).load()
+      assert(back.count() === 3000)
+      assert(back.filter(token_bucket(col("token"), numBuckets) =!= col("bucket")).count() === 0,
+        s"$dir: bucket column is not the ring bucket")
+    }
   }
 
   test("writeSortedSalted with compression: merged runs are chunked and read back") {
@@ -429,9 +453,8 @@ class PipelineSpec extends AnyFunSuite {
     ).toDF("rowkey", "value")
     val manifests = BulkSink.writeSorted(df, Seq("rowkey"), 4, dir)
     assert(manifests.map(_.rows).sum === 4)
-    // empty/null keys land in bucket 0 (token = Long.MinValue), which the
-    // slot permutation routes to partition perm(0)
-    val p0 = manifests.find(_.partition == BulkSink.slotPermutation(4)(0)).get
+    // empty/null keys land in bucket 0 (token = Long.MinValue)
+    val p0 = manifests.find(_.partition == 0).get
     assert(p0.rows >= 2 && p0.minToken === Long.MinValue)
   }
 

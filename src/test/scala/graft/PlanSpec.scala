@@ -336,6 +336,47 @@ class PlanSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.sources.v2.bucketing.enabled", _))
   }
 
+  test("token-range scans of a graft-bulk read plan no Filter and compile once") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.functions._
+    val (src, _) = SparkSuite.bulkOrders("planspec-band", 4)
+    def read() = spark.read.format("graft-bulk").option("path", src).load()
+    val toks = read().select("token").collect().map(_.getLong(0)).sorted
+    // the benchmark's scan: a band, then a global aggregate
+    def scan(where: Column) = read().where(where)
+      .agg(count(lit(1)), coalesce(sum(length(col("value"))), lit(0L)))
+    // (Filter nodes, graft-bulk scans) of the executed plan
+    def nodes(df: org.apache.spark.sql.DataFrame) = {
+      val p = df.queryExecution.executedPlan
+      (Aqe.collect(p) { case f: FilterExec => f },
+        Aqe.collect(p) { case b: BatchScanExec
+          if b.scan.isInstanceOf[graft.sinks.v2.GraftBulkScan] => b })
+    }
+    val compiled = (1 to 6).map { k =>
+      val (lo, hi) = (toks(k * 200), toks(k * 200 + 40 + k))
+      val df = scan(col("token").between(lo, hi))
+      assert(df.collect().head.getLong(0) === toks.count(t => t >= lo && t <= hi))
+      val (filters, scans) = nodes(df)
+      assert(scans.size === 1 && filters.isEmpty,
+        s"band [$lo, $hi] kept a Filter over the scan:\n${df.queryExecution.executedPlan}")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    }
+    assert(compiled.tail.forall(_ == compiled.head),
+      s"codegen compilations after each scan: ${compiled.mkString(", ")}")
+    // what the band cannot express stays a Filter over the same scan
+    Seq(col("bucket") === 1, col("token") > Long.MaxValue).foreach { c =>
+      val df = scan(c)
+      df.collect()
+      val (filters, scans) = nodes(df)
+      assert(scans.size === 1 && filters.size === 1,
+        s"$c lost its residual Filter:\n${df.queryExecution.executedPlan}")
+    }
+    assert(scan(col("token") > Long.MaxValue).collect().head.getLong(0) === 0L)
+  }
+
   test("text_gopher_rules is scan-stage only: no exchange, kernel counts in-row") {
     val p = plan("text_gopher_rules")
     assert(!p.contains("Exchange"), s"gopher gates shuffle:\n${p.take(2000)}")
