@@ -137,36 +137,24 @@ object Hdfs2CassSpark {
       // reference keeps the within-reducer decorated-key sort either way
       // (CassandraPartitioner.java:58-60 + CassandraParams.java:291-293),
       // so both modes emit the same sorted-run format — random runs just
-      // span the full token range and stream to all replicas
-      val wantSalt = params.saltAuto || params.saltBuckets.nonEmpty
-      require(!wantSalt || (!params.distributeRandomly &&
-        info.partitionerClass == graft.core.CassandraParams.Murmur3Partitioner),
-        "saltbuckets= needs the Murmur3 partitioner and no " +
-          "distributerandomly — salting IS the ring-preserving alternative " +
-          "to distributerandomly")
-      // auto mode adds a sample pass over the projected input (sampling
-      // still READS every row), so the frame materializes once and both
-      // the salt plan and the write consume the checkpoint — not two
-      // full scans + CQL serializations of a multi-TB load. The blocks go
-      // as soon as the writes return: streaming reads the run files. A
+      // span the full token range and stream to all replicas.
+      // saltbuckets=auto adds a sample pass over the projected input
+      // (sampling still READS every row), so the frame materializes once
+      // and both the salt plan and the write consume the checkpoint — not
+      // two full scans + CQL serializations of a multi-TB load. The blocks
+      // go as soon as the write returns: streaming reads the run files. A
       // sink dir that holds a load is refused before either runs.
       BulkSink.requireEmptySink(args.sinkDir)
       val toWrite =
         if (params.saltAuto) Materialize.truncate(projected) else projected
       val manifests = try {
-        val salts =
-          if (params.saltAuto)
-            BulkSink.planSalts(toWrite, Seq("rowkey"), params.reducers)
-          else params.saltBuckets
-        if (wantSalt && salts.nonEmpty)
-          BulkSink.writeSortedSalted(toWrite, Seq("rowkey"),
-            params.reducers, args.sinkDir, salts,
-            compression = params.compressionClass)
-        else
-          BulkSink.writeSorted(toWrite, Seq("rowkey"), params.reducers, args.sinkDir,
-            partitionerClass = info.partitionerClass,
-            compression = params.compressionClass,
-            distributeRandomly = params.distributeRandomly)
+        BulkSink.writeSorted(toWrite, Seq("rowkey"), params.reducers, args.sinkDir,
+          partitionerClass = info.partitionerClass,
+          compression = params.compressionClass,
+          distributeRandomly = params.distributeRandomly,
+          salts =
+            if (params.saltAuto) BulkSink.planSalts(toWrite, Seq("rowkey"), params.reducers)
+            else Map.empty)
       } finally if (params.saltAuto) Materialize.release(toWrite)
       // with ring metadata present, also emit the stream plan the loader
       // would execute (file -> replica endpoints). Compressed runs plan

@@ -148,13 +148,12 @@ final case class CassandraParams(
     rpcPort: Option[Int],
     replication: Option[Int],
     clusterInfo: ClusterInfo,
-    /** Hot-range salting (`saltbuckets=` URI param, beyond the
-      * reference's grammar): explicit `bucket:subBuckets[,...]` pairs.
-      * The reference's only skew escape, `distributerandomly`, forfeits
-      * ring alignment for every range; salting splits just the hot ones
-      * and the sink k-way-merges them back to one sorted run per range. */
-    saltBuckets: Map[Int, Int] = Map.empty,
-    /** `saltbuckets=auto`: detect hot ranges from a sample at write time. */
+    /** Hot-range salting (`saltbuckets=auto` URI param, beyond the
+      * reference's grammar): hot ranges are found from a sample at write
+      * time. The reference's only skew escape, `distributerandomly`,
+      * forfeits ring alignment for every range; salting splits just the
+      * hot ones and the sink k-way-merges them back to one sorted run per
+      * range. */
     saltAuto: Boolean = false
 ) {
   def buildInsertStatement(cols: Seq[String]): String = {
@@ -201,6 +200,19 @@ object CassandraParams {
     if ("thrift".equalsIgnoreCase(u.getScheme))
       Console.err.println(
         "[graft] Thrift support is deprecated, please use CQL instead")
+    val distributeRandomly = q.get("distributerandomly").exists(_.toBoolean)
+    // a typo or a hand-written salt map must not silently write an
+    // unsalted layout, and a contradiction fails before the sample job
+    val saltAuto = q.get("saltbuckets").exists { v =>
+      require(v == "auto", s"saltbuckets= takes only 'auto' (hot ranges " +
+        s"are found from a sample), got '$v'")
+      require(!distributeRandomly &&
+        clusterInfo.partitionerClass == Murmur3Partitioner,
+        "saltbuckets=auto needs the Murmur3 partitioner and no " +
+          "distributerandomly — salting IS the ring-preserving alternative " +
+          "to distributerandomly")
+      true
+    }
     CassandraParams(
       scheme = u.getScheme,
       seedNodeHost = u.getHost,
@@ -209,7 +221,7 @@ object CassandraParams {
       columnFamily = path(2),
       columnNames = q.get("columnnames").map(_.split(",").toSeq),
       reducers = q.get("reducers").map(_.toInt).getOrElse(clusterInfo.numClusterNodes),
-      distributeRandomly = q.get("distributerandomly").exists(_.toBoolean),
+      distributeRandomly = distributeRandomly,
       streamThrottleMBits = q.get("streamthrottlembits").map(_.toInt),
       compressionClass = q.get("compressionclass"),
       rpcPort = q.get("rpcport").map(_.toInt),
@@ -223,34 +235,8 @@ object CassandraParams {
         n
       },
       clusterInfo = clusterInfo,
-      saltBuckets = q.get("saltbuckets").filter(_ != "auto")
-        .map(parseSaltBuckets).getOrElse(Map.empty),
-      saltAuto = q.get("saltbuckets").contains("auto")
+      saltAuto = saltAuto
     )
-  }
-
-  /** `saltbuckets=3:4,7:2` -> Map(3 -> 4, 7 -> 2); anything else fails
-    * loudly (a typo must not silently write an unsalted layout) —
-    * including a DUPLICATED bucket id, which `.toMap` would otherwise
-    * silently last-wins into the wrong salt factor. */
-  private def parseSaltBuckets(spec: String): Map[Int, Int] = {
-    val pairs = spec.split(",").toSeq.filter(_.nonEmpty).map { pair =>
-      pair.split(":") match {
-        case Array(b, k) if b.forall(_.isDigit) && k.forall(_.isDigit) &&
-            b.nonEmpty && k.nonEmpty =>
-          val kk = k.toInt
-          require(kk >= 2, s"saltbuckets: subBuckets must be >= 2 in '$pair'")
-          b.toInt -> kk
-        case _ => throw new IllegalArgumentException(
-          s"saltbuckets: expected 'bucket:subBuckets' pairs, got '$pair' " +
-            "(e.g. saltbuckets=3:4,7:2 or saltbuckets=auto)")
-      }
-    }
-    val dups = pairs.groupBy(_._1).filter(_._2.size > 1).keys
-    require(dups.isEmpty,
-      s"saltbuckets: bucket(s) ${dups.mkString(", ")} given more than " +
-        "once — ambiguous salt factors")
-    pairs.toMap
   }
 }
 

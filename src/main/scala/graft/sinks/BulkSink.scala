@@ -30,9 +30,10 @@ import graft.core.{CassandraTokens, CqlValueCodec}
  */
 object BulkSink {
 
-  /** Default seed for the bucket->partition permutation (any fixed value
-    * works; what matters is that driver and every task agree). */
-  val DefaultSlotSeed = 0x5eed5107L
+  /** Seed of the bucket->partition permutation and of the salt sample
+    * (any fixed value works; what matters is that driver and every task
+    * agree). */
+  private val SlotSeed = 0x5eed5107L
 
   /**
    * Seeded Fisher-Yates permutation of 0..n-1. The reference shuffles the
@@ -43,9 +44,9 @@ object BulkSink {
    * unseeded-Random-per-job; here it is seeded so any task, retry, or
    * re-run computes the identical bijection with no config channel.
    */
-  private[graft] def slotPermutation(n: Int, seed: Long = DefaultSlotSeed): Array[Int] = {
+  private[graft] def slotPermutation(n: Int): Array[Int] = {
     val perm = Array.tabulate(n)(identity)
-    val rnd = new java.util.Random(seed)
+    val rnd = new java.util.Random(SlotSeed)
     var i = n - 1
     while (i > 0) {
       val j = rnd.nextInt(i + 1)
@@ -55,33 +56,67 @@ object BulkSink {
     perm
   }
 
-  /** The inverse of [[slotPermutation]]: the ring bucket each reducer
-    * slot owns. A task derives its bucket from its partition id with it
-    * (same seed -> same bijection, no config channel). */
+  /** The inverse of [[slotPermutation]]: the ring bucket (or salted
+    * sub-bucket) each reducer slot owns. A task derives what it owns from
+    * its partition id with it (same seed -> same bijection, no config
+    * channel). */
   private[sinks] def slotOwners(n: Int): Array[Int] = {
     val owner = new Array[Int](n)
     slotPermutation(n).zipWithIndex.foreach { case (slot, b) => owner(slot) = b }
     owner
   }
 
-  /** Ring-bucket partitioner: bucket b -> partition perm(b) (bijective). */
-  final class RingPartitioner(n: Int, seed: Long = DefaultSlotSeed) extends Partitioner {
+  /**
+   * Murmur3 ring-bucket partitioner, with per-bucket SALTING for hot
+   * token ranges: bucket `b` expands to `salts(b)` sub-buckets (1 when
+   * absent), and rows route to a sub-bucket by a seeded hash of the
+   * PARTITION-KEY bytes (a pure function of the key — Spark may recompute
+   * map tasks on fetch failure, so per-record randomness would corrupt
+   * the shuffle; and same-pk rows stay in ONE sub-bucket, so the k-way
+   * merge never has to interleave equal keys from two runs and same-key
+   * rows remain contiguous, the newRow-on-key-change contract). The
+   * sub-bucket hash is Scala's Murmur3 x86 under its own seed —
+   * uncorrelated with the Cassandra x64_128 ring token that keys the
+   * SORT. The slot permutation applies over the TOTAL sub-bucket count,
+   * so a hot range's sub-buckets spread across reducers like adjacent
+   * ranges do. With no salts, `total = n` and bucket b goes to slot
+   * `slotPermutation(n)(b)`.
+   *
+   * This is the answer SURVEY §7.4 risk 5 asks for: the reference's
+   * only hot-range escape (`distributerandomly`,
+   * CassandraPartitioner.java:58-60) forfeits ring alignment for EVERY
+   * range; salting splits only the hot ones and [[writeSorted]]'s
+   * sink-side merge restores the one-sorted-run-per-range contract.
+   */
+  final class RingPartitioner(n: Int, salts: Map[Int, Int] = Map.empty) extends Partitioner {
     require(n > 0)
-    private val perm = slotPermutation(n, seed)
-    override def numPartitions: Int = n
+    require(salts.forall { case (b, k) => b >= 0 && b < n && k >= 1 },
+      s"salts must map bucket in [0, $n) -> subBuckets >= 1: $salts")
+    private[sinks] val kOf = Array.tabulate(n)(b => salts.getOrElse(b, 1))
+    private[sinks] val offsets = kOf.scanLeft(0)(_ + _) // length n+1
+    /** Total shuffle partitions: n plus the extra sub-buckets. */
+    val total: Int = offsets(n)
+    private val perm = slotPermutation(total)
+    override def numPartitions: Int = total
     override def getPartition(key: Any): Int = key match {
-      case (token: Long, _) => perm(CassandraTokens.bucketOfToken(token, n))
-      case token: Long      => perm(CassandraTokens.bucketOfToken(token, n))
-      case other            => throw new IllegalArgumentException(s"bad key: $other")
+      case (token: Long, pk: Array[Byte]) =>
+        val b = CassandraTokens.bucketOfToken(token, n)
+        val k = kOf(b)
+        val sub =
+          if (k == 1) 0
+          else scala.math.floorMod(
+            scala.util.hashing.MurmurHash3.bytesHash(pk, 0x5a17ed), k)
+        perm(offsets(b) + sub)
+      case other => throw new IllegalArgumentException(s"bad key: $other")
     }
   }
 
   /** RandomPartitioner ring-bucket partitioner: keys carry canonical
     * 16-byte md5 tokens; buckets are the reference's ceil(2^127/n) ranges
     * (CassandraParams.java:297-316), permuted like the Murmur3 path. */
-  final class RandomRingPartitioner(n: Int, seed: Long = DefaultSlotSeed) extends Partitioner {
+  final class RandomRingPartitioner(n: Int) extends Partitioner {
     require(n > 0)
-    private val perm = slotPermutation(n, seed)
+    private val perm = slotPermutation(n)
     override def numPartitions: Int = n
     override def getPartition(key: Any): Int = key match {
       case (token: Array[Byte], _) => perm(CassandraTokens.randomBucketOfTokenBytes(token, n))
@@ -150,9 +185,16 @@ object BulkSink {
    * [[CqlValueCodec.rowEncoder]]. Returns per-partition manifests (also
    * persisted as _MANIFEST.json). A ring-aligned run (Murmur3 or
    * RandomPartitioner) is named, and its manifest `partition` set, by
-   * its ring bucket, whichever reducer slot wrote it, as
-   * [[writeSortedSalted]] names it; a `distributerandomly` run owns no
-   * bucket and keeps its reducer slot.
+   * its ring bucket, whichever reducer slot wrote it; a
+   * `distributerandomly` run owns no bucket and keeps its reducer slot.
+   *
+   * `salts` maps a hot Murmur3 ring bucket to the number of sub-buckets
+   * its rows shuffle over (see [[RingPartitioner]] and [[writeRing]]);
+   * the merged layout is that of a plain write. A plain load is the case
+   * in which every bucket has one salt. Salting is the ring-preserving
+   * alternative to `distributeRandomly`, so salts with it, or with the
+   * RandomPartitioner, are refused before any job runs; [[planSalts]]
+   * finds the hot buckets from a sample.
    *
    * Records are ordered by decorated key (token, then key bytes) and by
    * nothing else: records that share a partition key keep the order in
@@ -169,7 +211,8 @@ object BulkSink {
       partitionerClass: String = graft.core.CassandraParams.Murmur3Partitioner,
       compression: Option[String] = None,
       distributeRandomly: Boolean = false,
-      chunkSize: Int = SortedRunWriter.DefaultChunkSize)
+      chunkSize: Int = SortedRunWriter.DefaultChunkSize,
+      salts: Map[Int, Int] = Map.empty)
       : Seq[PartitionManifest] = {
     require(keyCols.nonEmpty)
     // resolve the codec and validate the chunk size DRIVER-side so a bad
@@ -183,9 +226,10 @@ object BulkSink {
       case other => throw new IllegalArgumentException(
         s"unknown partitioner class: $other")
     }
+    require(salts.isEmpty || (!isRandom && !distributeRandomly),
+      "salts need the Murmur3 partitioner and no distributeRandomly — " +
+        s"salting IS the ring-preserving alternative to distributeRandomly: $salts")
     Files.createDirectories(Paths.get(outDir))
-    val runId: Array[Int] =
-      if (distributeRandomly) Array.tabulate(numBuckets)(identity) else slotOwners(numBuckets)
 
     // distributerandomly changes ONLY the routing; the shuffle still sorts
     // every partition in decorated-key order, so both paths emit valid
@@ -200,21 +244,22 @@ object BulkSink {
       val partitioner: Partitioner =
         if (distributeRandomly) new RandomSpreadPartitioner(numBuckets)
         else new RandomRingPartitioner(numBuckets)
+      val owner = slotOwners(numBuckets)
       // the ordered-RDD conversion needs the key Ordering implicitly
       implicit val ord: Ordering[(Array[Byte], Array[Byte])] = randomDecoratedOrdering
       val aligned = keyed.repartitionAndSortWithinPartitions(partitioner)
       aligned.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single(writeRandomPartition(outDir, runId(pid), it, codec, chunkSize))
+        val run = if (distributeRandomly) pid else owner(pid)
+        Iterator.single(writeRandomPartition(outDir, run, it, codec, chunkSize))
       }.collect().toSeq
     } else {
       val keyed = keyedRows(df, keyCols, CassandraTokens.token)
-      val partitioner: Partitioner =
-        if (distributeRandomly) new RandomSpreadPartitioner(numBuckets)
-        else new RingPartitioner(numBuckets)
-      val aligned = keyed.repartitionAndSortWithinPartitions(partitioner)
-      aligned.mapPartitionsWithIndex { (pid, it) =>
-        Iterator.single(writePartition(outDir, runId(pid), it, indexInterval, codec, chunkSize))
-      }.collect().toSeq
+      if (distributeRandomly)
+        keyed.repartitionAndSortWithinPartitions(new RandomSpreadPartitioner(numBuckets))
+          .mapPartitionsWithIndex { (pid, it) =>
+            Iterator.single(writePartition(outDir, pid, it, indexInterval, codec, chunkSize))
+          }.collect().toSeq
+      else writeRing(keyed, numBuckets, outDir, salts, indexInterval, codec, chunkSize)
     }
 
     val json = manifests.map(manifestJson).mkString("[", ",", "]")
@@ -223,168 +268,70 @@ object BulkSink {
   }
 
   /**
-   * Ring-bucket partitioner with per-bucket SALTING for hot token
-   * ranges: bucket `b` expands to `salts(b)` sub-buckets, rows route to
-   * a sub-bucket by a seeded hash of the PARTITION-KEY bytes (a pure
-   * function of the key — Spark may recompute map tasks on fetch
-   * failure, so per-record randomness would corrupt the shuffle; and
-   * same-pk rows stay in ONE sub-bucket, so the k-way merge never has
-   * to interleave equal keys from two runs and same-key rows remain
-   * contiguous, the newRow-on-key-change contract). The sub-bucket hash
-   * is Scala's Murmur3 x86 under its own seed — uncorrelated with the
-   * Cassandra x64_128 ring token that keys the SORT. The slot
-   * permutation applies over the TOTAL sub-bucket count, so a hot
-   * range's sub-buckets spread across reducers like adjacent ranges do.
+   * The Murmur3 ring write: one shuffle sends every ring bucket, or each
+   * sub-bucket of a salted one, to its own reducer slot, and each slot
+   * writes one sorted run. A bucket with one salt writes its final run
+   * straight into `outDir`, named by the bucket. The `k` slots of a
+   * salted bucket write plain sub-runs into `_salt-tmp`, and one merge
+   * task per hot range then K-WAY MERGES them back into ONE
+   * decorated-key-sorted run named by the bucket ([[mergeSubRuns]]), so
+   * the layout is indistinguishable from an unsalted write.
    *
-   * This is the answer SURVEY §7.4 risk 5 asks for: the reference's
-   * only hot-range escape (`distributerandomly`,
-   * CassandraPartitioner.java:58-60) forfeits ring alignment for EVERY
-   * range; salting splits only the hot ones and [[writeSortedSalted]]'s
-   * sink-side merge restores the one-sorted-run-per-range contract.
+   * Scale shape: `k` reducers share a hot range's rows and sort-spill in
+   * parallel instead of one straggler (CassandraPartitioner.java:57-72's
+   * one-range-one-reducer shape); the merge streams `k` sorted runs
+   * through a k-element heap — sequential I/O, constant memory, no
+   * re-sort — so a hot range's bytes are read once more, the price of
+   * removing the straggler. `_salt-tmp` exists only while a salted write
+   * runs. Manifests come back in slot order, a merged run in the place
+   * of its bucket's first sub-run.
    */
-  final class SaltedRingPartitioner(n: Int, salts: Map[Int, Int],
-      seed: Long = DefaultSlotSeed) extends Partitioner {
-    require(n > 0)
-    require(salts.forall { case (b, k) => b >= 0 && b < n && k >= 1 },
-      s"saltBuckets must map bucket in [0, $n) -> subBuckets >= 1: $salts")
-    private[sinks] val kOf = Array.tabulate(n)(b => salts.getOrElse(b, 1))
-    private[sinks] val offsets = kOf.scanLeft(0)(_ + _) // length n+1
-    /** Total shuffle partitions: n plus the extra sub-buckets. */
-    val total: Int = offsets(n)
-    private val perm = slotPermutation(total, seed)
-    override def numPartitions: Int = total
-    override def getPartition(key: Any): Int = key match {
-      case (token: Long, pk: Array[Byte]) =>
-        val b = CassandraTokens.bucketOfToken(token, n)
-        val k = kOf(b)
-        val sub =
-          if (k == 1) 0
-          else scala.math.floorMod(
-            scala.util.hashing.MurmurHash3.bytesHash(pk, 0x5a17ed), k)
-        perm(offsets(b) + sub)
-      case other => throw new IllegalArgumentException(s"bad key: $other")
-    }
-  }
-
-  /** Test observability: per SALTED bucket, the phase-1 sub-run row
-    * counts of the last [[writeSortedSalted]] call — lets a spec pin
-    * that a planted hot range actually spread across its sub-buckets. */
-  @volatile private[graft] var lastSaltSubRows: Map[Int, Seq[Long]] = Map.empty
-
-  /**
-   * [[writeSorted]] with hot-range salting (Murmur3 partitioner only):
-   * each bucket in `saltBuckets` shuffles as `k` salted sub-buckets —
-   * `k` reducers share the hot range's rows and sort-spill in parallel,
-   * instead of one reducer owning the whole range
-   * (CassandraPartitioner.java:57-72's one-range-one-reducer shape) —
-   * and the sink then K-WAY MERGES each hot range's `k` sorted sub-runs
-   * back into ONE globally decorated-key-sorted run, so the output
-   * layout is indistinguishable from an unsalted write: one sorted run
-   * per ring bucket, named by the bucket, manifest `partition` = bucket
-   * id, as [[writeSorted]] names it. Unsalted buckets
-   * write final-form runs in one pass (their files just move into
-   * place).
-   *
-   * Scale shape: the merge is one task per HOT range (a handful), each
-   * streaming `k` sorted runs through a k-element heap — sequential
-   * I/O, constant memory, no re-sort; the hot range's bytes are read
-   * once more than the unsalted path would, the price of removing the
-   * straggler reducer. Like the rest of this sink, `outDir` must be a
-   * filesystem every executor and the driver can reach, and empty or
-   * absent.
-   */
-  def writeSortedSalted(df: DataFrame, keyCols: Seq[String],
-      numBuckets: Int, outDir: String, saltBuckets: Map[Int, Int],
-      indexInterval: Int = 128, compression: Option[String] = None,
-      chunkSize: Int = SortedRunWriter.DefaultChunkSize)
-      : Seq[PartitionManifest] = {
-    require(keyCols.nonEmpty)
-    val codec = compression.map(SortedRunWriter.normalizeCodec)
-    require(chunkSize >= 1024, s"chunkSize must be >= 1 KiB, got $chunkSize")
-    requireEmptySink(outDir)
-    Files.createDirectories(Paths.get(outDir))
-    val tmpPath = new java.io.File(outDir, "_salt-tmp").getAbsolutePath
-    Files.createDirectories(Paths.get(tmpPath))
-
-    val partitioner = new SaltedRingPartitioner(numBuckets, saltBuckets)
+  private def writeRing(keyed: RDD[((Long, Array[Byte]), Array[Byte])],
+      numBuckets: Int, outDir: String, salts: Map[Int, Int], indexInterval: Int,
+      codec: Option[String], chunkSize: Int): Seq[PartitionManifest] = {
+    val partitioner = new RingPartitioner(numBuckets, salts)
     val kOf = partitioner.kOf
     val offsets = partitioner.offsets
-    // a task derives which (bucket, sub) it owns by inverting the slot
-    // permutation over the sub-buckets
-    val inv = slotOwners(partitioner.total)
-
-    val aligned = keyedRows(df, keyCols, CassandraTokens.token)
-      .repartitionAndSortWithinPartitions(partitioner)
-    // staging is reclaimed on EVERY exit: a failed phase-1 task or merge
-    // must not strand a hot range's worth of sub-run bytes under the
-    // output dir across retries
+    val owner = slotOwners(partitioner.total)
+    val tmp = new java.io.File(outDir, "_salt-tmp")
+    val tmpPath = tmp.getAbsolutePath
+    // staging is reclaimed on EVERY exit: a failed task or merge must not
+    // strand a hot range's worth of sub-run bytes under the output dir
     def rmTree(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rmTree))
       f.delete(); ()
     }
+    if (salts.nonEmpty) Files.createDirectories(tmp.toPath)
     try {
-      // phase 1: every shuffle partition writes a sorted run into the
-      // staging dir — unsalted buckets final-form (index + codec, they
-      // only need a rename), salted sub-runs plain (the merge re-reads
-      // them anyway and re-encodes once, in the final writer)
-      val phase1: Seq[(Int, Int, PartitionManifest)] =
-        aligned.mapPartitionsWithIndex { (pid, it) =>
-          val sub = inv(pid)
+      // per slot: (bucket, sub-bucket, manifest)
+      val written = keyed.repartitionAndSortWithinPartitions(partitioner)
+        .mapPartitionsWithIndex { (pid, it) =>
+          val sub = owner(pid)
           var b = java.util.Arrays.binarySearch(offsets, sub)
           if (b < 0) b = -b - 2
+          // a sub-run is written plain: the merge re-reads it and encodes
+          // once, in the final writer
           val m =
-            if (kOf(b) == 1)
-              writePartition(tmpPath, pid, it, indexInterval, codec, chunkSize)
-            else
-              writePartition(tmpPath, pid, it, indexInterval, None, chunkSize)
+            if (kOf(b) == 1) writePartition(outDir, b, it, indexInterval, codec, chunkSize)
+            else writePartition(tmpPath, pid, it, indexInterval, None, chunkSize)
           Iterator.single((b, sub - offsets(b), m))
         }.collect().toSeq
-
-      val byBucket = phase1.groupBy(_._1)
-      val out = scala.collection.mutable.ArrayBuffer.empty[PartitionManifest]
-      // unsalted buckets: rename the final-form files into place under the
-      // bucket's pid (driver-side, #buckets renames, no data read)
-      byBucket.toSeq.filter { case (b, _) => kOf(b) == 1 }.foreach {
+      val hot = written.filter(w => kOf(w._1) > 1).groupBy(_._1).toSeq.map {
         case (b, group) =>
-          val m = group.head._3
-          def mv(name: String, newName: String): String = {
-            Files.move(Paths.get(tmpPath, name), Paths.get(outDir, newName))
-            newName
-          }
-          val data = mv(m.dataFile, f"graft-$b%05d-Data.db")
-          val idx =
-            if (m.indexFile.isEmpty) ""
-            else mv(m.indexFile, f"graft-$b%05d-Index.db")
-          if (m.chunks > 0)
-            mv(m.dataFile.replace("-Data.db", "-Chunks.db"),
-              f"graft-$b%05d-Chunks.db")
-          out += m.copy(partition = b, dataFile = data, indexFile = idx)
+          val subs = group.sortBy(_._2).map(_._3)
+          (b, subs.map(_.dataFile), subs.map(_.rows).sum)
       }
-      // salted buckets: one merge task per hot range, distributed; each
-      // merge must reproduce its phase-1 row total exactly
-      val saltedGroups = byBucket.toSeq.collect {
-        case (b, group) if kOf(b) > 1 =>
-          (b, group.sortBy(_._2).map(_._3.dataFile),
-            group.map(_._3.rows).sum)
-      }
-      lastSaltSubRows = byBucket.collect {
-        case (b, group) if kOf(b) > 1 =>
-          b -> group.sortBy(_._2).map(_._3.rows)
-      }.toMap
-      if (saltedGroups.nonEmpty) {
-        val sc = df.sparkSession.sparkContext
-        out ++= sc.parallelize(saltedGroups, saltedGroups.size).map {
-          case (b, dataFiles, expRows) =>
-            mergeSubRuns(tmpPath, outDir, b, dataFiles, expRows,
+      // one merge task per hot range; each must reproduce its sub-runs'
+      // row total exactly
+      val merged =
+        if (hot.isEmpty) Map.empty[Int, PartitionManifest]
+        else keyed.sparkContext.parallelize(hot, hot.size).map {
+          case (b, dataFiles, rows) =>
+            b -> mergeSubRuns(tmpPath, outDir, b, dataFiles, rows,
               indexInterval, codec, chunkSize)
-        }.collect()
-      }
-      val manifests = out.sortBy(_.partition).toSeq
-      val json = manifests.map(manifestJson).mkString("[", ",", "]")
-      Files.write(Paths.get(outDir, "_MANIFEST.json"),
-        json.getBytes(StandardCharsets.UTF_8))
-      manifests
-    } finally rmTree(new java.io.File(tmpPath))
+        }.collect().toMap
+      written.collect { case (b, 0, m) => merged.getOrElse(b, m) }
+    } finally if (salts.nonEmpty) rmTree(tmp)
   }
 
   /**
@@ -409,19 +356,22 @@ object BulkSink {
     * check re-verifies global order at write time (any heap or routing
     * bug fails loudly, never ships an unsorted run). `expectedRows`
     * (the phase-1 manifests' sum) is REQUIRED to match the merged
-    * count — belt over the cursor's truncation check. */
+    * count — belt over the cursor's truncation check. A sub-run that
+    * cannot be opened fails the merge like any other fault: the run in
+    * progress is removed and every cursor that did open is closed. */
   private[graft] def mergeSubRuns(tmpDir: String, outDir: String,
       bucket: Int, dataFiles: Seq[String], expectedRows: Long,
       indexInterval: Int, codec: Option[String],
       chunkSize: Int): PartitionManifest = {
     val writer = new SortedRunWriter(outDir, bucket, indexInterval, codec,
       chunkSize = chunkSize)
-    val cursors = dataFiles.map { f =>
-      val file = new java.io.File(tmpDir, f)
-      new SortedRunWriter.RecordCursor(new java.io.BufferedInputStream(
-        new java.io.FileInputStream(file), 1 << 16), s"sub-run $file")
-    }
+    val cursors = scala.collection.mutable.ArrayBuffer.empty[SortedRunWriter.RecordCursor]
     try {
+      dataFiles.foreach { f =>
+        val file = new java.io.File(tmpDir, f)
+        cursors += new SortedRunWriter.RecordCursor(new java.io.BufferedInputStream(
+          new java.io.FileInputStream(file), 1 << 16), s"sub-run $file")
+      }
       // heap entries carry each cursor's head token: the run format
       // stores none, so it is recomputed once per record
       type Head = (Long, SortedRunWriter.RecordCursor)
@@ -447,20 +397,24 @@ object BulkSink {
     finally cursors.foreach(_.close())
   }
 
+  /** [[planSalts]]: the share of rows sampled, how many times the mean
+    * a bucket's share must exceed to count as hot, and the most
+    * sub-buckets one hot bucket gets. */
+  private val SaltSampleFraction = 0.01
+  private val HotFactor = 2.0
+  private val MaxSalt = 16
+
   /**
-   * Hot-range detection for [[writeSortedSalted]]: estimates each ring
+   * Hot-range detection for [[writeSorted]]'s `salts`: estimates each ring
    * bucket's row share from one seeded sample pass and proposes
-   * `ceil(share / mean)` sub-buckets (capped at `maxSalt`) for every
-   * bucket whose share exceeds `hotFactor`× the mean. Driver state is
-   * #buckets counters; empty result means the ring is balanced and the
-   * plain [[writeSorted]] is the right call.
+   * `ceil(share / mean)` sub-buckets (at most `MaxSalt`) for every bucket
+   * whose share exceeds `HotFactor`× the mean. Driver state is #buckets
+   * counters; an empty result means the ring is balanced and the write
+   * is a plain one.
    */
-  def planSalts(df: DataFrame, keyCols: Seq[String], numBuckets: Int,
-      sampleFraction: Double = 0.01, hotFactor: Double = 2.0,
-      maxSalt: Int = 16): Map[Int, Int] = {
+  def planSalts(df: DataFrame, keyCols: Seq[String], numBuckets: Int): Map[Int, Int] = {
     require(keyCols.nonEmpty)
-    val sample = df.sample(withReplacement = false, sampleFraction,
-      seed = DefaultSlotSeed)
+    val sample = df.sample(withReplacement = false, SaltSampleFraction, seed = SlotSeed)
     val keyOf = partitionKeyOf(sample.schema, keyCols)
     val counts = sample.queryExecution.toRdd.map { row =>
       CassandraTokens.bucketOfToken(CassandraTokens.token(keyOf(row)), numBuckets)
@@ -469,8 +423,8 @@ object BulkSink {
     if (totalN == 0) return Map.empty
     val mean = totalN / numBuckets
     counts.collect {
-      case (b, c) if c > hotFactor * mean =>
-        b -> math.min(maxSalt, math.ceil(c / mean).toInt)
+      case (b, c) if c > HotFactor * mean =>
+        b -> math.min(MaxSalt, math.ceil(c / mean).toInt)
     }.toMap
   }
 

@@ -17,11 +17,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * yields (token, pk, value, bucket) rows through [[GraftBulkRead]]. The
  * format has one writer, [[graft.sinks.BulkSink]]: its slot-permuted
  * ring partitioner gives every token range its own reducer and sorted run
- * (the reference's one-range-one-reducer shape, G1-G3), and
- * [[graft.sinks.BulkSink.writeSortedSalted]] splits hot ranges across
- * salted sub-buckets and merges them back to one run per range. This
- * source declares no write capability, so Spark plans no DSv2 write
- * against it.
+ * (the reference's one-range-one-reducer shape, G1-G3), and its `salts`
+ * split hot ranges across sub-buckets and merge them back to one run
+ * per range. This source declares no write capability, so Spark plans
+ * no DSv2 write against it.
  */
 class GraftBulkProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-bulk"

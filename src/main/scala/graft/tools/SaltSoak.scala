@@ -14,12 +14,13 @@ import graft.sinks.BulkSink
  * where the reference's one-range-one-reducer assignment
  * (CassandraPartitioner.java:57-72) turns one reducer into the job's
  * straggler — and runs the same load twice: plain [[BulkSink.writeSorted]]
- * (the straggler baseline) and [[BulkSink.writeSortedSalted]] with
- * [[BulkSink.planSalts]]-detected factors. Reports, as one JSON line:
+ * (the straggler baseline) and the same call with the
+ * [[BulkSink.planSalts]]-detected `salts`. Reports, as one JSON line:
  *
  *  - the unsalted max-bucket skew (how bad the straggler is),
- *  - the salted phase-1 sub-run balance for the hot bucket
- *    (max/mean of the sub-runs that sorted the hot range in parallel),
+ *  - the hot bucket's salt factor (how many reducers sorted the hot
+ *    range in parallel; the sub-bucket balance is pinned on
+ *    `BulkSink.RingPartitioner` in KernelSpec),
  *  - per-ring-bucket row counts proven EQUAL between the two layouts
  *    (the salt+merge round trip moves no row across ranges), and
  *  - both wall times.
@@ -69,13 +70,9 @@ object SaltSoak {
 
     val salts = BulkSink.planSalts(projected, Seq("rowkey"), buckets)
     val t1 = System.nanoTime()
-    val salted = BulkSink.writeSortedSalted(projected, Seq("rowkey"),
-      buckets, s"$out/salted", salts)
+    val salted = BulkSink.writeSorted(projected, Seq("rowkey"), buckets,
+      s"$out/salted", salts = salts)
     val saltedSec = (System.nanoTime() - t1) / 1e9
-    val subRows = BulkSink.lastSaltSubRows.getOrElse(hotBucket, Seq.empty)
-    val subBalance =
-      if (subRows.isEmpty) Double.NaN
-      else subRows.max.toDouble / (subRows.sum.toDouble / subRows.size)
 
     // the salt+merge round trip moves no row across ring buckets: the
     // per-bucket (rows, bytes) of the two layouts must be identical;
@@ -93,8 +90,8 @@ object SaltSoak {
     println(f"""{"rows":$total,"buckets":$buckets,"hot_bucket":$hotBucket,""" +
       f""""salts":"${salts.toSeq.sorted.map(p => s"${p._1}:${p._2}").mkString(",")}",""" +
       f""""plain_sec":$plainSec%.1f,"plain_max_bucket_skew":$plainSkew%.2f,""" +
-      f""""salted_sec":$saltedSec%.1f,"hot_subrun_balance":$subBalance%.3f,""" +
-      f""""hot_subruns":${subRows.size},"per_bucket_equal":true}""")
+      f""""salted_sec":$saltedSec%.1f,"hot_salt":${salts.getOrElse(hotBucket, 1)},""" +
+      f""""per_bucket_equal":true}""")
     spark.stop()
   }
 }

@@ -120,43 +120,69 @@ class IntegrationSpec extends AnyFunSuite {
   }
 
   test("CLI saltbuckets= splits hot ranges and still emits one run per ring bucket") {
-    val out = Files.createTempDirectory("graft-cli-salt").toString
-    val manifests = Hdfs2CassSpark.run(spark, Hdfs2CassSpark.parseArgs(Seq(
-      "--input", "/root/testdata/sf0.001/orders.parquet",
-      "--output", "cql://localhost/ks/orders?reducers=4&saltbuckets=0:2,2:3",
-      "--rowkey", "o_orderkey",
-      "--sink-dir", out)), StaticClusterInfo())
-    assert(manifests.length === 4)
-    assert(manifests.map(_.rows).sum === 1500)
+    import graft.core.{CassandraTokens, CqlValueCodec}
+    // a planted hot range: 6000 distinct keys in ring bucket 1 of 4 over a
+    // balanced background, and a balanced input of the same size
+    def bucketOf(k: String): Int = CassandraTokens.bucketOfToken(
+      CassandraTokens.token(CqlValueCodec.serializeString(k)), 4)
+    val hotKeys = Iterator.from(0).map(i => s"hot-$i").filter(bucketOf(_) == 1)
+      .take(6000).toSeq
+    val root = Files.createTempDirectory("graft-cli-salt")
+    def input(name: String, keys: Seq[String]): String = {
+      val path = root.resolve(name).toString
+      keys.toDF("k").withColumn("v", length(col("k")).cast("long"))
+        .coalesce(1).write.parquet(path)
+      path
+    }
+    val hot = input("hot", hotKeys ++ (0 until 1500).map(i => s"bg-$i"))
+    val balanced = input("balanced", (0 until 7500).map(i => s"bal-$i"))
+    def args(in: String, query: String) = Hdfs2CassSpark.parseArgs(Seq(
+      "--input", in,
+      "--output", s"cql://localhost/ks/rows?reducers=4$query",
+      "--rowkey", "k",
+      "--sink-dir", Files.createTempDirectory(root, "out").toString))
+    def load(in: String, query: String) = {
+      val a = args(in, query)
+      var manifests = Seq.empty[graft.sinks.BulkSink.PartitionManifest]
+      val jobs = SparkSuite.jobsDuring {
+        manifests = Hdfs2CassSpark.run(spark, a, StaticClusterInfo())
+      }
+      (manifests, a.sinkDir, jobs)
+    }
+    val (plain, _, _) = load(hot, "")
+    val (salted, out, saltedJobs) = load(hot, "&saltbuckets=auto")
+    assert(salted.length === 4)
+    assert(salted.map(_.rows).sum === 7500)
     // pid = ring bucket; each merged run stays inside its bucket's range
-    manifests.filter(_.rows > 0).foreach { m =>
-      assert(graft.core.CassandraTokens.bucketOfToken(m.minToken, 4)
-        === m.partition)
-      assert(graft.core.CassandraTokens.bucketOfToken(m.maxToken, 4)
-        === m.partition)
+    salted.filter(_.rows > 0).foreach { m =>
+      assert(CassandraTokens.bucketOfToken(m.minToken, 4) === m.partition)
+      assert(CassandraTokens.bucketOfToken(m.maxToken, 4) === m.partition)
       assert(m.sorted)
     }
+    // the salt+merge round trip moves no row across ring buckets
+    assert(salted.map(m => m.partition -> m.rows).toMap ===
+      plain.map(m => m.partition -> m.rows).toMap)
     // the salted layout reads back through the manifest-aware read path
     val back = spark.read.format("graft-bulk").option("path", out).load()
-    assert(back.count() === 1500)
-    // auto mode on a balanced ring degrades to the plain write, same totals
-    val out2 = Files.createTempDirectory("graft-cli-salta").toString
-    val m2 = Hdfs2CassSpark.run(spark, Hdfs2CassSpark.parseArgs(Seq(
-      "--input", "/root/testdata/sf0.001/orders.parquet",
-      "--output", "cql://localhost/ks/orders?reducers=4&saltbuckets=auto",
-      "--rowkey", "o_orderkey",
-      "--sink-dir", out2)), StaticClusterInfo())
-    assert(m2.map(_.rows).sum === 1500)
+    assert(back.count() === 7500)
+    // auto mode on a balanced ring is a plain write: the same jobs as the
+    // hot load but for its one merge job
+    val (bal, _, balancedJobs) = load(balanced, "&saltbuckets=auto")
+    assert(bal.map(_.rows).sum === 7500)
+    assert(saltedJobs === balancedJobs + 1,
+      s"hot load ran $saltedJobs jobs, balanced load $balancedJobs: no merge ran")
     // salting IS the ring-preserving alternative to distributerandomly —
-    // combining them is a contradiction, refused loudly
-    val e = intercept[IllegalArgumentException](
-      Hdfs2CassSpark.run(spark, Hdfs2CassSpark.parseArgs(Seq(
-        "--input", "/root/testdata/sf0.001/orders.parquet",
-        "--output", "cql://localhost/ks/orders?reducers=4&saltbuckets=0:2&distributerandomly=true",
-        "--rowkey", "o_orderkey",
-        "--sink-dir", Files.createTempDirectory("graft-cli-saltx").toString)),
-        StaticClusterInfo()))
-    assert(e.getMessage.contains("saltbuckets"), e.getMessage)
+    // combining them is a contradiction, and a salt map is not grammar:
+    // both refused loudly before any job
+    for (query <- Seq("&saltbuckets=auto&distributerandomly=true", "&saltbuckets=0:2,2:3")) {
+      val a = args(hot, query)
+      var e: IllegalArgumentException = null
+      val jobs = SparkSuite.jobsDuring {
+        e = intercept[IllegalArgumentException](Hdfs2CassSpark.run(spark, a, StaticClusterInfo()))
+      }
+      assert(e.getMessage.contains("saltbuckets"), e.getMessage)
+      assert(jobs === 0, s"$query ran $jobs jobs before refusing")
+    }
   }
 
   test("CLI saltbuckets=auto releases its materialized load once the writes return") {

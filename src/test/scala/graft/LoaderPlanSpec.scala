@@ -60,10 +60,9 @@ class LoaderPlanSpec extends AnyFunSuite {
   }
 
   test("planStreams over a salted layout equals the unsalted plan (same ranges, same replicas)") {
-    // writeSortedSalted's k-way merge restores one run per ring bucket
+    // a salted write's k-way merge restores one run per ring bucket
     // with the SAME token span the unsalted write produces, so stream
-    // planning must be indistinguishable — only the partition ids (and
-    // file names) differ
+    // planning must be indistinguishable
     val spark = SparkSuite.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, length}
@@ -72,8 +71,8 @@ class LoaderPlanSpec extends AnyFunSuite {
     val plainDir = java.nio.file.Files.createTempDirectory("graft-lp-plain").toString
     val saltDir = java.nio.file.Files.createTempDirectory("graft-lp-salt").toString
     val plain = graft.sinks.BulkSink.writeSorted(df, Seq("rowkey"), 4, plainDir)
-    val salted = graft.sinks.BulkSink.writeSortedSalted(df, Seq("rowkey"), 4,
-      saltDir, Map(0 -> 3, 2 -> 2))
+    val salted = graft.sinks.BulkSink.writeSorted(df, Seq("rowkey"), 4,
+      saltDir, salts = Map(0 -> 3, 2 -> 2))
     val planPlain = LoaderPlan.planStreams(plain, nodes, rf = 2)
     val planSalt = LoaderPlan.planStreams(salted, nodes, rf = 2)
     // same number of planned runs, and the replica set of each salted

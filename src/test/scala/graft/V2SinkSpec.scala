@@ -587,19 +587,6 @@ class V2SinkSpec extends AnyFunSuite {
   }
 
   test("a load into a directory that holds one is refused before any job, plain and salted") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.graft.Bridge
-    val sc = spark.sparkContext
-    def jobsDuring(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new SparkListener {
-        override def onJobStart(js: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      }
-      Bridge.drainListenerBus(sc)
-      sc.addSparkListener(listener)
-      try { body; Bridge.drainListenerBus(sc) } finally sc.removeSparkListener(listener)
-      jobs.get
-    }
     def snapshot(dir: String) = (new java.io.File(dir).list().sorted.toSeq,
       spark.read.format("graft-bulk").option("path", dir).load().collect()
         .map(r => (r.getLong(0), r.getAs[Array[Byte]](1).toSeq, r.getAs[Array[Byte]](2).toSeq))
@@ -613,11 +600,11 @@ class V2SinkSpec extends AnyFunSuite {
       .filter(col("o_orderkey") % 3 === 0)
     val reloads = Seq[(String, () => Any)](
       "plain" -> (() => BulkSink.writeSorted(subset, Seq("o_orderkey"), 2, out)),
-      "salted" -> (() => BulkSink.writeSortedSalted(subset, Seq("o_orderkey"), 2, out,
-        Map(0 -> 2))))
+      "salted" -> (() => BulkSink.writeSorted(subset, Seq("o_orderkey"), 2, out,
+        salts = Map(0 -> 2))))
     reloads.foreach { case (kind, reload) =>
       var e: IllegalArgumentException = null
-      val jobs = jobsDuring { e = intercept[IllegalArgumentException](reload()) }
+      val jobs = SparkSuite.jobsDuring { e = intercept[IllegalArgumentException](reload()) }
       assert(e.getMessage.contains(out), s"$kind refusal does not name the directory")
       assert(jobs === 0, s"$kind reload ran $jobs jobs before refusing")
       assert(snapshot(out) === before, s"$kind reload changed the first load")
@@ -634,6 +621,23 @@ class V2SinkSpec extends AnyFunSuite {
     val empty = Files.createTempDirectory("graft-bulk-empty").toString
     assert(BulkSink.writeSorted(subset, Seq("o_orderkey"), 2, empty).map(_.rows).sum ===
       subset.count())
+  }
+
+  test("the writer refuses salts with RandomPartitioner or distributeRandomly before any job") {
+    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
+    val contradictions = Seq[(String, String => Any)](
+      "RandomPartitioner" -> (dir => BulkSink.writeSorted(orders, Seq("o_orderkey"), 4, dir,
+        partitionerClass = graft.core.CassandraParams.RandomPartitioner, salts = Map(1 -> 2))),
+      "distributeRandomly" -> (dir => BulkSink.writeSorted(orders, Seq("o_orderkey"), 4, dir,
+        distributeRandomly = true, salts = Map(1 -> 2))))
+    contradictions.foreach { case (kind, write) =>
+      val dir = Files.createTempDirectory("graft-bulk-saltx").toString
+      var e: IllegalArgumentException = null
+      val jobs = SparkSuite.jobsDuring { e = intercept[IllegalArgumentException](write(dir)) }
+      assert(e.getMessage.contains("salts"), s"$kind: ${e.getMessage}")
+      assert(jobs === 0, s"$kind: ran $jobs jobs before refusing")
+      assert(new java.io.File(dir).list().isEmpty, s"$kind: the sink dir is not empty")
+    }
   }
 
   test("with unique keys, input order changes no byte of the written runs") {

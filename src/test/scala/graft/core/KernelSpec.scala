@@ -306,29 +306,34 @@ class KernelSpec extends AnyFunSuite {
     assert(q === Map("a" -> "1", "flag" -> "true", "b" -> "x=y"))
   }
 
-  test("saltbuckets= URI grammar: explicit pairs, auto, typos fail loudly") {
+  test("saltbuckets= URI grammar: only auto parses; maps, typos and contradictions fail loudly") {
     val info = StaticClusterInfo(numClusterNodes = 5)
-    val p = CassandraParams.parse(
-      "cql://h/ks/t?reducers=8&saltbuckets=3:4,7:2", info)
-    assert(p.saltBuckets === Map(3 -> 4, 7 -> 2) && !p.saltAuto)
     val auto = CassandraParams.parse("cql://h/ks/t?saltbuckets=auto", info)
-    assert(auto.saltAuto && auto.saltBuckets.isEmpty)
+    assert(auto.saltAuto)
     val none = CassandraParams.parse("cql://h/ks/t", info)
-    assert(!none.saltAuto && none.saltBuckets.isEmpty)
-    intercept[IllegalArgumentException](
-      CassandraParams.parse("cql://h/ks/t?saltbuckets=3-4", info))
-    intercept[IllegalArgumentException]( // k=1 salt is a typo, not a no-op
-      CassandraParams.parse("cql://h/ks/t?saltbuckets=3:1", info))
-    val eDup = intercept[IllegalArgumentException]( // last-wins would be silent
-      CassandraParams.parse("cql://h/ks/t?saltbuckets=3:8,3:2", info))
-    assert(eDup.getMessage.contains("more than once"), eDup.getMessage)
+    assert(!none.saltAuto)
+    // a hand-written bucket:subBuckets map is refused, never silently
+    // read as an unsalted load
+    for (v <- Seq("3:4,7:2", "3-4", "3:1")) {
+      val e = intercept[IllegalArgumentException](
+        CassandraParams.parse(s"cql://h/ks/t?reducers=8&saltbuckets=$v", info))
+      assert(e.getMessage.contains("only 'auto'"), e.getMessage)
+    }
+    // salting is the ring-preserving alternative to distributerandomly,
+    // and it salts the Murmur3 ring only: both refused at parse time
+    val eRandom = intercept[IllegalArgumentException](CassandraParams.parse(
+      "cql://h/ks/t?saltbuckets=auto&distributerandomly=true", info))
+    assert(eRandom.getMessage.contains("distributerandomly"), eRandom.getMessage)
+    intercept[IllegalArgumentException](CassandraParams.parse(
+      "cql://h/ks/t?saltbuckets=auto",
+      StaticClusterInfo(partitionerClass = CassandraParams.RandomPartitioner)))
   }
 
-  test("SaltedRingPartitioner: same pk same partition, sub-slots stay inside the bucket") {
+  test("RingPartitioner: same pk same partition, sub-slots stay inside the bucket") {
     import graft.sinks.BulkSink
     val n = 8
     val salts = Map(2 -> 4, 5 -> 3)
-    val p = new BulkSink.SaltedRingPartitioner(n, salts)
+    val p = new BulkSink.RingPartitioner(n, salts)
     assert(p.total === n + 3 + 2)
     // invert the permutation to recover each partition's (bucket, sub)
     val kOf = Array.tabulate(n)(b => salts.getOrElse(b, 1))
@@ -348,14 +353,36 @@ class KernelSpec extends AnyFunSuite {
       assert(sub >= offsets(b) && sub < offsets(b + 1),
         s"key $i routed outside its ring bucket")
     }
-    // every sub-slot of a salted bucket receives SOME keys (balance is
-    // pinned end-to-end in PipelineSpec; here just non-degeneracy)
+    // every sub-slot of a salted bucket receives SOME keys
     val hits = (0 until 20000).map { i =>
       val pk = s"k$i".getBytes("UTF-8")
       inv(p.getPartition((CassandraTokens.token(pk), pk)))
     }.toSet
     assert((offsets(2) until offsets(3)).forall(hits.contains),
       "a salted sub-bucket never received a key")
+    // balance: 8000 distinct keys planted in one ring bucket spread over
+    // its 4 sub-slots (binomial over distinct pks — every sub-slot
+    // gets some, the largest at most 2x the mean)
+    val hot = new BulkSink.RingPartitioner(4, Map(1 -> 4))
+    val hotKeys = Iterator.from(0).map(i => CqlValueCodec.serializeString(s"hot-$i"))
+      .filter(k => CassandraTokens.bucketOfToken(CassandraTokens.token(k), 4) == 1)
+      .take(8000).toSeq
+    val perSlot = hotKeys.groupBy(k => hot.getPartition((CassandraTokens.token(k), k)))
+      .map { case (slot, ks) => slot -> ks.size }
+    assert(perSlot.size === 4, s"sub-slots: $perSlot")
+    assert(perSlot.values.min > 0 && perSlot.values.max <= 2 * (8000 / 4),
+      s"hot range did not balance across sub-buckets: $perSlot")
+    // no salts: bucket b goes to slot slotPermutation(n)(b), the plain
+    // ring routing
+    val plain = new BulkSink.RingPartitioner(n)
+    assert(plain.total === n)
+    val plainPerm = BulkSink.slotPermutation(n)
+    (0 until 5000).foreach { i =>
+      val pk = s"key-$i".getBytes("UTF-8")
+      val tok = CassandraTokens.token(pk)
+      assert(plain.getPartition((tok, pk)) ===
+        plainPerm(CassandraTokens.bucketOfToken(tok, n)), s"key $i")
+    }
   }
 
   test("insert statement synthesis") {
